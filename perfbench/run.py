@@ -23,6 +23,7 @@ query fails or any output differs from the oracle.
 from __future__ import annotations
 
 import argparse
+import hashlib
 import json
 import math
 import os
@@ -369,9 +370,10 @@ def main(argv=None) -> int:
             info["generated"] = table.generated or warm.generated
             queries = wl.queries(args.seed)
             t = time.perf_counter()
-            oracles = {q.label: table.oracle(f"{args.workload}-{q.label}",
-                                             lambda q=q: q.oracle(table))
-                       for q in queries}
+            # the cache key covers the view, so an edited query is recomputed
+            oracles = {q.label: table.oracle(
+                f"{q.label}-{hashlib.sha256(repr(q.view).encode()).hexdigest()[:16]}",
+                lambda q=q: q.oracle(table)) for q in queries}
             info["oracle_s"] = time.perf_counter() - t
             useful = {q.label: q.useful(table.pdf) for q in queries}
             inputs.prune(tables_dir, keep={table.dir, warm.dir})
