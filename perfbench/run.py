@@ -7,9 +7,11 @@ Run from the repository root:
 Workloads (see workloads.py): build_mean, build_jpeg, join_tiles, small_cubes.
 A run generates (or re-verifies) its seeded input table and per-seed oracle,
 starts a local Spark session on every available core several times to time
-set-up, then sends one query after another, in whole rounds of the
-workload's query list, for at least ``--seconds`` seconds and 12 queries,
-and checks every output against ``tests/oracle_np.py``.
+set-up (each cycle ends with the workload's first result), warms up, then
+sends one query after another, in whole rounds of the workload's query
+list, for at least ``--seconds`` seconds and the workload's query count,
+and checks every output against ``tests/oracle_np.py``. Times are reported
+net of hypervisor steal (see ``Timer``).
 
 ``--trace 0`` prints the end-to-end metrics; ``--trace 1`` spends half the
 window untraced and half with the Spark event log and the UDF profiler on,
@@ -41,10 +43,10 @@ from concurrent.futures import ThreadPoolExecutor
 HERE = os.path.dirname(os.path.abspath(__file__))
 ROOT = os.path.dirname(HERE)
 SETUP_CYCLES = 3
-SHAPES = 3  # warm-up queries per session: every query shape runs once
-# a run times at least --seconds and at least this many queries (two
-# small_cubes rounds), so the tail statistic always has the same rank
-MIN_QUERIES = 12
+# checked but untimed queries before timing, in whole rounds of the query
+# list. With the set-up cycles' queries the JIT has then seen the real query
+# about seven times; the time per query falls over the first ten or so.
+WARM_QUERIES = 4
 DRIVER_MEMORY = "2g"
 
 
@@ -135,10 +137,64 @@ class RssSampler:
         return sum(self.peak_kb.values()) / 1024.0
 
 
+def cpu_seconds() -> float:
+    """CPU time (user + system) of this process and every descendant, the
+    reaped ones included through their parents' child totals."""
+    total = 0
+    for pid in [os.getpid()] + descendants():
+        try:
+            with open(f"/proc/{pid}/stat") as f:
+                total += sum(int(v) for v in f.read().rsplit(")", 1)[1].split()[11:15])
+        except (OSError, IndexError, ValueError):
+            pass
+    return total / os.sysconf("SC_CLK_TCK")
+
+
+def steal_seconds() -> float:
+    """CPU time the hypervisor gave to other guests, summed over all CPUs."""
+    with open("/proc/stat") as f:
+        return int(f.readline().split()[8]) / os.sysconf("SC_CLK_TCK")
+
+
+class Timer:
+    """Wall time of a region, and that wall net of hypervisor steal.
+
+    On a shared host the hypervisor preempts this VM's CPUs for other guests
+    (``steal`` in /proc/stat), and the share it takes moves from minute to
+    minute. The processes here were runnable for cpu + steal CPU-seconds and
+    ran for cpu of them, so at an even steal rate the region would have
+    taken ``wall * cpu / (cpu + steal)`` on a host of its own: that is
+    ``net``, the time every end-to-end metric reports. Without steal it
+    equals the wall."""
+
+    def __enter__(self):
+        self.cpu, self.steal = cpu_seconds(), steal_seconds()
+        self.t0 = time.perf_counter()
+        return self
+
+    def __exit__(self, *exc):
+        self.wall = time.perf_counter() - self.t0
+        self.cpu = cpu_seconds() - self.cpu
+        self.steal = steal_seconds() - self.steal
+        busy = self.cpu + self.steal
+        self.net = self.wall * self.cpu / busy if busy > 0 else self.wall
+
+
+def _alive(pid: int) -> bool:
+    """The process exists and has not exited (a zombie has)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            return f.read().rsplit(")", 1)[1].split()[0] != "Z"
+    except (OSError, IndexError):
+        return False
+
+
 def reap_leftovers() -> None:
     """Stop any process this run started that is still alive, and wait."""
     pids = descendants()
-    for sig, grace in ((signal.SIGTERM, 2), (signal.SIGKILL, 10)):
+    # by now the JVM has exited; what is left (such as multiprocessing's
+    # resource tracker, which ignores SIGTERM) gets a short grace
+    for sig, grace in ((signal.SIGTERM, 0.5), (signal.SIGKILL, 10)):
         for p in pids:
             try:
                 os.kill(p, sig)
@@ -146,12 +202,12 @@ def reap_leftovers() -> None:
                 pass
         deadline = time.time() + grace
         while time.time() < deadline:
-            pids = [p for p in pids if os.path.exists(f"/proc/{p}")]
             for p in pids:
                 try:
                     os.waitpid(p, os.WNOHANG)
                 except ChildProcessError:
                     pass
+            pids = [p for p in pids if _alive(p)]
             if not pids:
                 return
             time.sleep(0.1)
@@ -260,17 +316,18 @@ class Loop:
         self._n += 1
         self.attempted += 1
         spark.sparkContext.setJobDescription(desc)
-        t0e, t0 = time.time(), time.perf_counter()
+        t0e = time.time()
         try:
-            df = q.dataframe(images)
-            out = df.toPandas()
+            with Timer() as clock:
+                df = q.dataframe(images)
+                out = df.toPandas()
         except Exception:
             traceback.print_exc()
             self.failed += 1
             return None
         finally:
             spark.sparkContext.setJobDescription(None)
-        wall, t1e = time.perf_counter() - t0, time.time()
+        t1e = time.time()
         want = self.oracles[q.label]
         ok = q.check(out, want)
         if not ok:
@@ -282,8 +339,9 @@ class Loop:
             self.check_verified = True
         if q.label not in self.plans:
             self.plans[q.label] = final_plan(spark, df)
-        rec = {"desc": desc, "label": q.label, "wall": wall, "t0": t0e, "t1": t1e,
-               "ok": ok, "useful": self.useful[q.label],
+        rec = {"desc": desc, "label": q.label, "wall": clock.wall, "net": clock.net,
+               "cpu": clock.cpu, "steal": clock.steal, "t0": t0e, "t1": t1e, "ok": ok,
+               "useful": self.useful[q.label],
                "plan": self._plan_counts(self.plans[q.label])}
         self.records.append(rec)
         return rec
@@ -303,12 +361,10 @@ class Loop:
         return recs
 
 
-def warm_up(spark, queries: list, path: str, count: int) -> None:
-    """Run the first ``count`` queries of the workload's list (cycling) on
-    the small warm-up table; outputs are not checked."""
-    images = spark.read.parquet(path)
-    for k in range(count):
-        queries[k % len(queries)].dataframe(images).toPandas()
+def first_result(spark, path: str, query) -> None:
+    """The workload's first query on a fresh session, which ends a set-up
+    cycle; its output is not checked."""
+    query.dataframe(spark.read.parquet(path)).toPandas()
 
 
 def tail(walls: list) -> tuple[float, int]:
@@ -359,49 +415,48 @@ def main(argv=None) -> int:
         # prepared meanwhile (outside every timed region of the queries).
         # That cycle is always the slowest, so the reported median does not
         # depend on the overlap.
-        t_cold = time.perf_counter()
-        with ThreadPoolExecutor(max_workers=1) as ex:
-            cold = ex.submit(sessions.start)
-            t = time.perf_counter()
-            tables_dir = os.path.join(work, "inputs")
-            table = W.table(tables_dir, wl.table, args.seed).ensure(cores)
-            warm = W.table(tables_dir, wl.warm, args.seed).ensure(cores)
-            info["gen_s"] = time.perf_counter() - t
-            info["generated"] = table.generated or warm.generated
-            queries = wl.queries(args.seed)
-            t = time.perf_counter()
-            # the cache key covers the view, so an edited query is recomputed
-            oracles = {q.label: table.oracle(
-                f"{q.label}-{hashlib.sha256(repr(q.view).encode()).hexdigest()[:16]}",
-                lambda q=q: q.oracle(table)) for q in queries}
-            info["oracle_s"] = time.perf_counter() - t
-            useful = {q.label: q.useful(table.pdf) for q in queries}
-            inputs.prune(tables_dir, keep={table.dir, warm.dir})
-            images = len(table.pdf)
-            log(f"inputs ready: {images} images, gen {info['gen_s']:.1f}s, "
-                f"oracle {info['oracle_s']:.1f}s")
-            spark = cold.result()
-        setup_query = [W.setup_query()]  # the same warm-up for every workload
-        warm_up(spark, setup_query, warm.path, 1)
-        setups = [time.perf_counter() - t_cold]
+        with Timer() as cold_clock:
+            with ThreadPoolExecutor(max_workers=1) as ex:
+                cold = ex.submit(sessions.start)
+                t = time.perf_counter()
+                tables_dir = os.path.join(work, "inputs")
+                table = W.table(tables_dir, wl.table, args.seed).ensure(cores)
+                info["gen_s"] = time.perf_counter() - t
+                info["generated"] = table.generated
+                queries = wl.queries(args.seed)
+                t = time.perf_counter()
+                # the cache key covers the view, so an edited query is recomputed
+                oracles = {q.label: table.oracle(
+                    f"{q.label}-{hashlib.sha256(repr(q.view).encode()).hexdigest()[:16]}",
+                    lambda q=q: q.oracle(table)) for q in queries}
+                info["oracle_s"] = time.perf_counter() - t
+                useful = {q.label: q.useful(table.pdf) for q in queries}
+                inputs.prune(tables_dir, keep={table.dir})
+                images = len(table.pdf)
+                log(f"inputs ready: {images} images, gen {info['gen_s']:.1f}s, "
+                    f"oracle {info['oracle_s']:.1f}s")
+                spark = cold.result()
+                log(f"session up after {time.perf_counter() - cold_clock.t0:.1f}s")
+            first_result(spark, table.path, queries[0])
+        setups = [cold_clock]
         # later cycles restart the session on the warm JVM
         for _ in range(SETUP_CYCLES - 1):
             sessions.stop()
-            t = time.perf_counter()
-            spark = sessions.start()
-            warm_up(spark, setup_query, warm.path, 1)
-            setups.append(time.perf_counter() - t)
-        info["setup_cycles_s"] = setups
-        log("set-up cycles " + ", ".join(f"{s:.2f}s" for s in setups))
-        warm_up(spark, queries, warm.path, SHAPES)  # every shape runs once before timing
+            with Timer() as clock:
+                spark = sessions.start()
+                first_result(spark, table.path, queries[0])
+            setups.append(clock)
+        info["setup_cycles_s"] = [c.wall for c in setups]
+        info["setup_cycles_net_s"] = [c.net for c in setups]
+        log("set-up cycles " + ", ".join(f"{c.wall:.2f}s (net {c.net:.2f}s)" for c in setups))
 
         loop = Loop(args.workload, queries, oracles, useful)
         with RssSampler() as rss:
-            first = loop.one(spark, spark.read.parquet(table.path), queries[0])
-            log(f"first query {first['wall'] if first else float('nan'):.2f}s")
+            warmed = loop.run_for(spark, spark.read.parquet(table.path), 0, WARM_QUERIES)
+            log(f"{len(warmed)} warm-up queries")
             # a traced run splits the window and the query count in halves
             window = args.seconds / (1 + args.trace)
-            count = MIN_QUERIES // (1 + args.trace)
+            count = wl.timed // (1 + args.trace)
             recs = loop.run_for(spark, spark.read.parquet(table.path), window, count)
             log(f"{len(recs)} timed queries")
             if args.trace:
@@ -412,24 +467,27 @@ def main(argv=None) -> int:
                     os.makedirs(d)
                 sessions.stop()
                 spark = sessions.start(trace_conf(events))
-                warm_up(spark, queries, warm.path, SHAPES)
+                # the JIT is warm already; one round starts the Python workers
+                loop.run_for(spark, spark.read.parquet(table.path), 0, 1)
                 spark.profile.clear()
                 log("traced session warm")
                 traced = loop.run_for(spark, spark.read.parquet(table.path), window, count)
                 log(f"{len(traced)} traced queries")
                 spark.profile.dump(prof_dir)
                 sessions.stop()  # flushes and closes the event log
-        walls = [r["wall"] for r in recs]
-        p50 = statistics.median(walls)
-        tail_s, tail_pct = tail(walls)
-        info.update(queries_timed=len(walls), walls=walls, tail_percentile=tail_pct,
-                    first_query_s=first["wall"] if first else None,
+        nets = [r["net"] for r in recs]
+        p50 = statistics.median(nets)
+        tail_s, tail_pct = tail(nets)
+        info.update(queries_timed=len(nets), tail_percentile=tail_pct,
+                    walls=[r["wall"] for r in recs], nets=nets,
+                    cpu=[r["cpu"] for r in recs], steal=[r["steal"] for r in recs],
+                    wall_p50=statistics.median(r["wall"] for r in recs),
                     failed_frac=loop.failed / max(loop.attempted, 1))
         metrics = {
             "images_per_s": {"value": images / p50, "unit": "img/s"},
             "query_s_p50": {"value": p50, "unit": "s"},
             "query_s_tail": {"value": tail_s, "unit": "s"},
-            "setup_s": {"value": statistics.median(setups), "unit": "s"},
+            "setup_s": {"value": statistics.median(c.net for c in setups), "unit": "s"},
             "peak_rss_mb": {"value": rss.peak_mb, "unit": "MB"},
         }
         if args.trace:
@@ -467,8 +525,8 @@ def trace_metrics(args, untraced, traced, images, cores, events, prof_dir,
     per_layer, stages = layers.layer_metrics(ev, layers.Profile(prof_dir), prefix,
                                              traced, cores)
     per_layer.update(micro.kernels(args.seed))
-    ips_off = images / statistics.median(r["wall"] for r in untraced)
-    ips_on = images / statistics.median(r["wall"] for r in traced)
+    ips_off = images / statistics.median(r["net"] for r in untraced)
+    ips_on = images / statistics.median(r["net"] for r in traced)
     per_layer["trace.overhead_frac"] = 1.0 - ips_on / ips_off
     metrics = {name: {"value": value, "unit": layers.unit(name)}
                for name, value in sorted(per_layer.items())}

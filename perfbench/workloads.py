@@ -21,15 +21,12 @@ from inputs import Table
 N_BUILD = 4000   # synth table shared by build_mean and join_tiles
 N_JPEG = 240     # real baseline-JPEG payloads decode ~100x slower than PNG
 N_SMALL = 2000   # small_cubes' own table, written as one file
-N_WARM = 96      # per-workload warm-up table used during set-up
 
 # name -> (index offset inside the seed's range, rows, codec, parquet files)
 TABLES = {
     "synth": (0, N_BUILD, "synth", 8),
     "jpeg": (200_000, N_JPEG, "jpeg", 8),
     "small": (400_000, N_SMALL, "synth", 1),
-    "warm": (600_000, N_WARM, "synth", 4),
-    "warm_jpeg": (700_000, N_WARM, "jpeg", 4),
 }
 
 FLAGSHIP_VIEW = dict(
@@ -197,14 +194,18 @@ def corrupt(out: pd.DataFrame) -> pd.DataFrame:
 # One round of small_cubes: (kind, window centre, side in degrees, first
 # month, months). Every seed runs the same mix; the seed jitters each window
 # by up to half a degree and a month, so seeds differ in the images a window
-# holds but not in the kind of work. Three windows sit on the hotspots.
+# holds but not in the kind of work. Three windows sit on the hotspots. The
+# round has an odd number of queries, so over whole rounds the median (and
+# the tail rank of four rounds) falls inside one query's cluster of times
+# rather than on the gap between two.
 SMALL_ROUND = [
     ("assignment", (-10.0, 20.0), 2.0, 2, 1),
     ("mean", (25.0, -5.0), 3.0, 5, 2),
-    ("count_values", (5.0, 35.0), 3.0, 8, 2),
+    ("count_values", (5.0, 35.0), 2.0, 8, 1),
     ("assignment", (-30.0, -20.0), 4.0, 8, 3),
     ("mean", (35.0, 15.0), 2.0, 2, 1),
     ("count_values", (-35.0, 5.0), 2.0, 5, 1),
+    ("mean", (-5.0, -30.0), 2.0, 10, 2),
 ]
 
 
@@ -231,27 +232,27 @@ def small_queries(seed: int) -> list:
     return out
 
 
-def setup_query() -> ReduceQuery:
-    """The warm-up query of every set-up cycle, whatever the workload."""
-    return ReduceQuery("setup", FLAGSHIP_VIEW, "mean")
-
-
 class Workload:
-    def __init__(self, table: str, warm: str, queries):
-        self.table, self.warm = table, warm  # input and warm-up table names
+    def __init__(self, table: str, queries, timed: int = 12):
+        self.table = table  # input table name
         self.queries = queries  # callable(seed) -> list of queries
+        # a run times at least this many queries (and at least --seconds);
+        # on a 4-core host the count, not the time, ends the window, so the
+        # tail statistic keeps its rank from run to run
+        self.timed = timed
 
 
 WORKLOADS = {
     "build_mean": Workload(
-        "synth", "warm", lambda seed: [ReduceQuery("flagship_mean", FLAGSHIP_VIEW, "mean")]),
+        "synth", lambda seed: [ReduceQuery("flagship_mean", FLAGSHIP_VIEW, "mean")], timed=14),
     "build_jpeg": Workload(
-        "jpeg", "warm_jpeg", lambda seed: [ReduceQuery("flagship_jpeg", FLAGSHIP_VIEW, "mean")]),
+        "jpeg", lambda seed: [ReduceQuery("flagship_jpeg", FLAGSHIP_VIEW, "mean")]),
     "join_tiles": Workload(
-        "synth", "warm",
+        "synth",
         lambda seed: [ReduceQuery("tiles_count_values", JOIN_VIEW, "count_values")]),
-    "small_cubes": Workload("small", "warm", small_queries),
+    "small_cubes": Workload("small", small_queries, timed=4 * len(SMALL_ROUND)),
 }
+
 
 def table(root: str, name: str, seed: int) -> Table:
     offset, rows, codec, files = TABLES[name]
