@@ -10,6 +10,8 @@ Public API (a user of the reference maps 1:1 onto these):
     )
 """
 
+from . import _worker  # noqa: F401  (pins a PySpark worker's zip importers)
+
 __all__ = [
     "Band", "Cube", "CubeView", "Duration", "get_spark",
     "build_cube", "st_join", "images_df", "default_view",

@@ -1142,6 +1142,46 @@ def _scan_batch_flat(
     return pd.DataFrame(out)
 
 
+def _view_window(view: CubeView):
+    """JVM-side pre-filter for the cell_long scan: a SUPERSET of the image
+    rows that can emit a cell, so the Python workers receive only those.
+
+    Space: the footprint meets the view extent in lon/lat (cell centers sit
+    half a cell inside the extent, so the non-strict bounds keep every image
+    the scan's strict center test accepts). Time: [start of slot 0, end of
+    slot nt-1) — for M/Y steps slot 0 starts at the first instant of t0's
+    month/year, not at t0 (_vec_time_slots counts calendar months/years).
+    Literals are cast in the session time zone, the zone the Arrow hand-off
+    renders ``ts`` in. None where no exact cheap bound exists: labeled time
+    axes, and view SRS other than EPSG:4326/3857 (whose corners map exactly).
+    """
+    from datetime import datetime
+
+    from .. import srs as _srs
+    from ..view import add_duration
+
+    srs_n = _srs.normalize(view.srs)
+    if view.labeled or srs_n not in ("EPSG:4326", "EPSG:3857"):
+        return None
+    x0, x1, y0, y1 = view.left, view.right, view.bottom, view.top
+    if srs_n == "EPSG:3857":
+        x0, x1 = (float(v) for v in _srs.x_to_lon([x0, x1]))
+        y0, y1 = (float(v) for v in _srs.y_to_lat([y0, y1]))
+    cond = (
+        (F.col("left") <= x1) & (F.col("right") >= x0)
+        & (F.col("bottom") <= y1) & (F.col("top") >= y0)
+    )
+    t0, unit = view.t0, view.dt.unit
+    lo = (datetime(t0.year, 1, 1) if unit == "Y"
+          else datetime(t0.year, t0.month, 1) if unit == "M" else t0)
+    cond &= F.col("ts") >= F.lit(lo.isoformat(sep=" ")).cast("timestamp")
+    try:
+        hi = add_duration(lo, view.dt, view.nt)
+    except (OverflowError, ValueError):  # past year 9999: no upper bound
+        return cond
+    return cond & (F.col("ts") < F.lit(hi.isoformat(sep=" ")).cast("timestamp"))
+
+
 def build_cells_long(
     images: DataFrame,
     view: CubeView,
@@ -1420,6 +1460,9 @@ def build_cells_long(
         + ", ".join(f"`v_{b}` double" for b in bands)
     )
     src = images.select(*cols)
+    window = _view_window(view)
+    if window is not None:
+        src = src.where(window)
     # parallelism floor: a small metadata-derived input (one tiny parquet
     # file -> 1-3 scan tasks) would serialize the whole decode/warp stage.
     # Repartition ONLY then — large inputs keep scan locality and the

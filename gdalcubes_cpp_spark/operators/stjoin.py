@@ -12,7 +12,9 @@ src/image_collection_cube.cpp:315-340):
            (src/image_collection_cube.cpp:327). We keep image_id as the sort
            key inside downstream grouped kernels.
 
-Two physical strategies (method='auto' picks by chunk count):
+Four physical methods. method='auto' picks only ``broadcast`` or ``cells``,
+by chunk count: ``broadcast`` up to ``broadcast_threshold`` (5M) chunks,
+``cells`` above it. ``s2`` and ``hex`` are chosen explicitly.
 
 * ``broadcast``: the chunk grid is generated from the view (pure arithmetic
   on ``spark.range``) and broadcast; images stream past it with the residual
@@ -26,6 +28,10 @@ Two physical strategies (method='auto' picks by chunk count):
   bottom-left-corner ownership trick: a pair is emitted only by the cell
   containing the intersection's bottom-left corner. Hot cells (skewed image
   density) are handled by AQE skew-join splitting + optional image-side salt.
+
+* ``s2`` and ``hex``: the ``cells`` shape with a different cover function —
+  S2 Hilbert-curve cells (functions/s2.py) or aperture-7 hexes on the
+  equal-area plane (functions/hexgrid.py).
 """
 
 from __future__ import annotations

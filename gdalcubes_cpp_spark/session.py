@@ -3,6 +3,19 @@
 Local mode for tests/bench; on a real cluster the same config ships via
 ``spark-submit --py-files`` (north_rule). AQE is on: runtime coalescing +
 skew-join splitting handle residual hot-cell skew after explicit salting.
+
+Python workers: every task of every Python stage (the cell_long scan, the
+chunk kernel, the s2/hex covers, the streaming UDFs) starts with PySpark's
+``worker_util.setup_spark_files``, which calls ``importlib.invalidate_caches()``.
+Workers import PySpark from ``$SPARK_HOME/python/lib/pyspark.zip``, and on
+Python 3.11 each of a worker's 14-16 ``zipimport.zipimporter`` entries answers
+that call by re-reading the whole archive directory (1,328 entries): 0.13-0.18 s
+per task, 0.21-0.36 s with 4 tasks at once on a 4-core box, so a trivial
+4-task ``mapInPandas`` took ~0.5 s against ~0.1 s for a JVM-only query. The
+package import pins those importers once per worker (``_worker.py``); the
+per-task call then costs ~0.1 ms and the same ``mapInPandas`` ~0.17 s. No
+setting here is involved: the pin runs wherever a UDF of this package is
+unpickled, and nowhere else.
 """
 
 from __future__ import annotations

@@ -151,3 +151,65 @@ def test_fast_equals_loop_nonseparable(spark):
     fast = _collect_sorted(
         build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn))
     assert fast == slow and len(fast) > 0
+
+
+# ------------------------------------------- view-window pre-filter (JVM side)
+
+@pytest.mark.parametrize("srs,dt_str,t0,nt", [
+    ("EPSG:4326", "P1M", "2020-03-15", 3),   # mid-month t0: slot 0 starts 03-01
+    ("EPSG:4326", "P1Y", "2020-06-15", 1),   # mid-year t0: slot 0 starts 01-01
+    ("EPSG:3857", "P2M", "2020-05-20", 2),
+    ("EPSG:4326", "P1D", "2020-04-10", 20),
+])
+def test_view_window_prefilter_keeps_outputs(spark, monkeypatch, srs, dt_str, t0, nt):
+    from gdalcubes_cpp_spark import srs as _srs
+    from gdalcubes_cpp_spark.operators import build
+
+    def vfn(image_id):
+        k = int(image_id)
+        return (float(k % 97), float(k % 89))
+
+    lon0, lon1, lat0, lat1 = -20.0, 20.0, -15.0, 15.0
+    ext = dict(left=lon0, right=lon1, bottom=lat0, top=lat1)
+    if srs == "EPSG:3857":
+        ext = dict(left=float(_srs.lon_to_x(lon0)), right=float(_srs.lon_to_x(lon1)),
+                   bottom=float(_srs.lat_to_y(lat0)), top=float(_srs.lat_to_y(lat1)))
+    v = CubeView.create(srs=srs, **ext, nx=40, ny=30, t0=t0, nt=nt, dt=dt_str,
+                        aggregation="mean", resampling="near", chunk_size=(4, 30, 40))
+    rng = np.random.RandomState(11)
+    rows = []
+    for i in range(600):
+        lo = -60.0 + rng.rand() * 120.0
+        bo = -50.0 + rng.rand() * 100.0
+        rows.append((lo, lo + 0.5 + rng.rand() * 4.0, bo, bo + 0.5 + rng.rand() * 4.0,
+                     dt.datetime(2019, 6, 1) + dt.timedelta(hours=int(rng.randint(0, 24 * 730)))))
+    # images over the view dated inside slot 0 but BEFORE t0 (and just
+    # before slot 0) — a filter on ts >= t0 would drop the former
+    start = v.t0.replace(day=1) if dt_str.endswith("M") else (
+        v.t0.replace(month=1, day=1) if dt_str.endswith("Y") else v.t0)
+    for d in (0, 1, 3, -1):
+        t = start + dt.timedelta(days=d) if d >= 0 else start - dt.timedelta(seconds=1)
+        rows.append((-5.0 + d, 5.0 + d, -4.0, 6.0, t))
+    imgs = spark.createDataFrame(
+        [(f"{i:06d}",) + r for i, r in enumerate(rows)],
+        "image_id string, left double, right double, bottom double, top double, ts timestamp")
+
+    window = build._view_window(v)
+    kept = imgs.where(window).count()
+    assert 0 < kept < len(rows)
+    filtered = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn))
+    monkeypatch.setattr(build, "_view_window", lambda view: None)
+    unfiltered = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn))
+    assert filtered == unfiltered and len(filtered) > 0
+    assert any(r[0] == 0 for r in filtered)
+
+
+def test_view_window_skips_labeled_and_other_srs():
+    from gdalcubes_cpp_spark.operators.build import _view_window
+
+    labeled = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
+                              time_labels=["2020-01-03", "2020-02-07"])
+    utm = CubeView.create(srs="EPSG:32632", left=166021.0, right=766021.0,
+                          bottom=4000000.0, top=4600000.0, nx=40, ny=40,
+                          t0="2020-01-01", nt=2, dt="P1M")
+    assert _view_window(labeled) is None and _view_window(utm) is None
