@@ -977,13 +977,17 @@ _LONG_AGGS = {"mean", "min", "max", "first", "last", "median"}
 
 
 def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
-    """Vectorized twin of CubeView.slot_index_of for REGULAR time axes —
-    the identical arithmetic per unit class (view.time_index), applied to a
-    whole datetime64 column at once. Labeled axes take the scalar path.
-    Equality with the scalar function is pinned by
+    """Vectorized twin of CubeView.slot_index_of — the identical arithmetic
+    per unit class (view.time_index) for regular axes, and the exact-label
+    match (else -1) for labeled axes, applied to a whole datetime64 column
+    at once. Equality with the scalar function is pinned by
     tests/test_cells_long_fast.py over every unit class."""
-    dt, t0 = view.dt, view.t0
     ts = np.asarray(ts).astype("datetime64[us]")
+    if view.labeled:
+        labels = np.asarray(view.time_labels, dtype="datetime64[us]")
+        i = np.searchsorted(labels, ts, side="right") - 1
+        return np.where((i >= 0) & (labels[np.maximum(i, 0)] == ts), i, -1)
+    dt, t0 = view.dt, view.t0
     if dt.unit == "Y":
         yr = ts.astype("datetime64[Y]").astype(np.int64) + 1970
         # scalar branch splits on t >= t0 but both branches equal
@@ -999,26 +1003,103 @@ def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
     return np.floor(secs / dt.seconds).astype(np.int64)
 
 
+# a non-separable view's lon/lat grid is transformed once per scan task up
+# to this many cells (a few MB); larger views transform the scanned cell
+# centres point-wise per batch
+_LONLAT_GRID_MAX = 16_000_000
+
+
+def _decode_planes(decode, a_bytes, a_fmt, rows, chans):
+    """Decode images ``rows`` and concatenate channels ``chans`` into one
+    flat float64 buffer per channel; returns (bufs, Hs, Ws, offs), each
+    image's plane being buf[off:off + H*W].reshape(H, W)."""
+    bufs: list = [[] for _ in chans]
+    Hs = np.empty(len(rows), np.int64)
+    Ws = np.empty(len(rows), np.int64)
+    offs = np.empty(len(rows), np.int64)
+    off = 0
+    for j, k in enumerate(rows):
+        raw = decode(a_bytes[k], a_fmt[k])
+        Hs[j], Ws[j], offs[j] = raw.shape[0], raw.shape[1], off
+        off += raw.shape[0] * raw.shape[1]
+        for c, ch in enumerate(chans):
+            bufs[c].append(np.asarray(raw[:, :, ch], dtype=np.float64).ravel())
+    return [np.concatenate(bl) if bl else np.empty(0) for bl in bufs], Hs, Ws, offs
+
+
+def _near_index(bl, br, bb, bt, Hs, Ws, offs, img, lon, lat, al, at_):
+    """warp_plane 'near' for flat cells: each cell's index into a
+    concatenated plane buffer, and whether its continuous coord falls inside
+    [0, w)x[0, h) (1-ulp edges: warp's own inside test; outside -> NaN)."""
+    pdxs = (br - bl) / Ws
+    pdys = (bt - bb) / Hs
+    fx = (lon - al) / pdxs[img]
+    fy = (at_ - lat) / pdys[img]
+    w_i, h_i = Ws[img], Hs[img]
+    m_in = (fx >= 0) & (fx < w_i) & (fy >= 0) & (fy < h_i)
+    cxp = np.clip(np.floor(fx).astype(np.int64), 0, w_i - 1)
+    cyp = np.clip(np.floor(fy).astype(np.int64), 0, h_i - 1)
+    return offs[img] + cyp * w_i + cxp, m_in
+
+
+def _gather(buf, lin, m_in):
+    v = buf[lin]
+    return v if m_in.all() else np.where(m_in, v, np.nan)
+
+
+def _warp_cells(view, bufs, Hs, Ws, offs, bounds, win, img, iy, ix, lon, lat):
+    """Non-'near' resampling of flat cells, one warp_plane call per image
+    and band. Point kernels are element-wise, so the image's cells go in
+    as one (1, n) row. Aggregating kernels (separable views only) pool
+    every cell independently: warp the image's untrimmed window with its
+    view-cell edges, then gather the covered cells."""
+    from .. import srs as _srs
+
+    resampling = view.resampling
+    nb = len(bufs)
+    V = [np.empty(len(img)) for _ in range(nb)]
+    seg = np.searchsorted(img, np.arange(len(Hs) + 1))
+    for j in np.nonzero(seg[1:] > seg[:-1])[0]:
+        s, e = seg[j], seg[j + 1]
+        if resampling in AGG_RESAMPLERS:
+            x0, x1, y0, y1 = (int(a[j]) for a in win)
+            gx, gy = np.arange(x0, x1 + 1), np.arange(y0, y1 + 1)
+            xs, ys = _srs.axis_to_wgs84(view.left + (gx[:-1] + 0.5) * view.dx,
+                                        view.top - (gy[:-1] + 0.5) * view.dy, view.srs)
+            xe, ye = _srs.axis_to_wgs84(view.left + gx * view.dx,
+                                        view.top - gy * view.dy, view.srs)
+            kw = {"x_edges": xe, "y_edges": ye}
+            cell = (iy[s:e] - y0, ix[s:e] - x0)
+        else:
+            xs, ys, kw, cell = lon[None, s:e], lat[None, s:e], {}, 0
+        n = Hs[j] * Ws[j]
+        for b in range(nb):
+            plane = bufs[b][offs[j]:offs[j] + n].reshape(Hs[j], Ws[j])
+            V[b][s:e] = warp_plane(plane, tuple(a[j] for a in bounds),
+                                   xs, ys, resampling, **kw)[cell]
+    return V
+
+
 def _scan_batch_flat(
-    view: CubeView, nb: int, srs_n: str, separable: bool,
-    LON_full, LAT_full, decode_fn, value_fn, mask, file_mask: bool,
+    view: CubeView, nb: int, separable: bool,
+    LON_full, LAT_full, decode_fn, value_fn, mask,
     need_id: bool, band_names,
     a_id, itg, v_l, v_r, v_b, v_t, a_l, a_r, a_b, a_t,
-    a_bytes, a_fmt, a_mv,
+    a_bytes, a_fmt, a_mb, a_mf, a_mv,
 ):
-    """Flat (vectorized-across-images) twin of the per-image scan loop in
-    build_cells_long, for the dominant configuration: regular time axis,
-    'near' resampling (or metadata value_fn, which never warps), masks that
-    are value predicates (None / ValueMask / RangeMask / metadata FileMask).
+    """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows.
 
-    The per-image loop spends ~30 small numpy calls per image — at 200k
+    A per-image loop spends ~30 small numpy calls per image — at 200k
     images that Python overhead dwarfs the actual arithmetic (guide §4.2:
-    hand whole batches to vectorized kernels). Here every step runs once
-    per BATCH over flattened (image, cell) arrays; only decode_fn (a real
-    codec) and value_fn (a user callable) remain per-image. Each expression
-    mirrors the loop's operation order exactly so emitted rows are
-    bit-identical, in the same order (pinned by tests/test_cells_long_fast).
+    hand whole batches to vectorized kernels). Here time slots, cell
+    windows, coordinates, the 'near' gather and every mask run once per
+    BATCH over flattened (image, cell) arrays; only decode_fn (a real
+    codec), value_fn (a user callable) and non-'near' warps stay per image.
+    Rows come out image by image in input order, row-major within each
+    image — the order Spark's partial avg sums in.
     """
+    from .. import srs as _srs
+
     empty = pd.DataFrame(
         {"it": pd.Series([], dtype="int32"),
          "iy": pd.Series([], dtype="int32"),
@@ -1026,14 +1107,16 @@ def _scan_batch_flat(
          **({"image_id": pd.Series([], dtype="object")} if need_id else {}),
          **{f"v_{b}": pd.Series([], dtype="float64") for b in band_names}}
     )
+    file_mask = isinstance(mask, FileMask)
+    band_mask = isinstance(mask, BandMask) and not file_mask
     valid = (itg >= 0) & (itg < view.nt)
     if file_mask and a_mv is not None:
         mv = pd.to_numeric(pd.Series(a_mv), errors="coerce").to_numpy(np.float64)
         with np.errstate(invalid="ignore"):
             mk = mask.test(mv)
         valid &= ~(mk & ~np.isnan(mv))  # None/NaN never masks (test_scalar)
-    # covered global cell windows — the loop's formulas, arrays instead of
-    # scalars (separable: center-inside; non-separable: conservative bbox)
+    # covered global cell windows (separable: center-inside; non-separable:
+    # conservative bbox)
     if separable:
         ix0 = np.maximum(0, np.ceil((v_l - view.left) / view.dx - 0.5).astype(np.int64))
         ix1 = np.minimum(view.nx, np.floor((v_r - view.left) / view.dx - 0.5).astype(np.int64) + 1)
@@ -1050,24 +1133,25 @@ def _scan_batch_flat(
     if not valid.any():
         return empty
     sel = np.nonzero(valid)[0]
-    # per-image payloads: the ONLY remaining python loop (codec / user fn)
+    # per-image payloads: the codec / user fn calls
     if value_fn is not None:
         vals = np.asarray([value_fn(i)[:nb] for i in a_id[sel]], dtype=np.float64)
     else:
-        bufs: list = [[] for _ in range(nb)]
-        Hs = np.empty(len(sel), np.int64)
-        Ws = np.empty(len(sel), np.int64)
-        offs = np.empty(len(sel), np.int64)
-        off = 0
-        for j, k in enumerate(sel):
-            raw = decode_fn(a_bytes[k], a_fmt[k])
-            Hs[j], Ws[j], offs[j] = raw.shape[0], raw.shape[1], off
-            off += raw.shape[0] * raw.shape[1]
-            for b in range(nb):
-                bufs[b].append(np.asarray(raw[:, :, b], dtype=np.float64).ravel())
-        bufs = [np.concatenate(bl) if bl else np.empty(0) for bl in bufs]
+        chans = list(range(nb)) + ([mask.channel] if band_mask else [])
+        bufs, Hs, Ws, offs = _decode_planes(decode_fn, a_bytes, a_fmt, sel, chans)
+        has_m = None
+        if file_mask and a_mb is not None:
+            # the mask file: its own bytes, its own (H, W); images without a
+            # mask row pass unmasked
+            has_m = np.asarray([a_mb[k] is not None for k in sel], dtype=bool)
+            mbufs, mH, mW, moff = _decode_planes(
+                mask.decode_fn or default_decode, a_mb, a_mf, sel[has_m],
+                [mask.channel])
+            mHs, mWs = np.ones(len(sel), np.int64), np.ones(len(sel), np.int64)
+            moffs = np.zeros(len(sel), np.int64)
+            mHs[has_m], mWs[has_m], moffs[has_m] = mH, mW, moff
     # flatten (image, cell) windows: row-major within each image, images in
-    # input order — the exact row order the loop emits
+    # input order
     wxs, wys = wx[sel], wy[sel]
     counts = wxs * wys
     total = int(counts.sum())
@@ -1080,18 +1164,18 @@ def _scan_batch_flat(
     jx = j - jy * wxs[img]
     iy = iy0[sel][img] + jy
     ix = ix0[sel][img] + jx
-    if separable:
-        from .. import srs as _srs
-
-        xs = view.left + (ix + 0.5) * view.dx
-        ys = view.top - (iy + 0.5) * view.dy
-        lon, lat = _srs.axis_to_wgs84(xs, ys, view.srs)
-    else:
+    if LON_full is not None:
         flat_idx = iy * view.nx + ix
         lon = np.ascontiguousarray(LON_full).ravel()[flat_idx]
         lat = np.ascontiguousarray(LAT_full).ravel()[flat_idx]
-    # strict footprint membership — the loop's mx/my (separable trim) and
-    # m2 (non-separable) are these same four inequalities
+    else:
+        # cell centres -> lon/lat, element-wise for every SRS (axis
+        # transforms for separable views, the point inverse otherwise)
+        xs = view.left + (ix + 0.5) * view.dx
+        ys = view.top - (iy + 0.5) * view.dy
+        to_wgs84 = _srs.axis_to_wgs84 if separable else _srs.points_to_wgs84
+        lon, lat = to_wgs84(xs, ys, view.srs)
+    # strict footprint membership (centers in [left,right)x(bottom,top])
     al, ar = a_l[sel][img], a_r[sel][img]
     ab, at_ = a_b[sel][img], a_t[sel][img]
     m = (lon >= al) & (lon < ar) & (lat > ab) & (lat <= at_)
@@ -1102,26 +1186,27 @@ def _scan_batch_flat(
     if value_fn is not None:
         V = [vals[img, b] for b in range(nb)]
     else:
-        # warp_plane 'near': integer gather at the cell center, from the
-        # per-image plane — here one fancy-index into the concatenated
-        # buffer per band. Cells whose continuous coord rounds outside
-        # [0, w)x[0, h) (1-ulp edges: warp's own inside test) become NaN,
-        # exactly as warp_plane's out-initialization leaves them.
-        pdxs = (a_r[sel] - a_l[sel]) / Ws
-        pdys = (a_t[sel] - a_b[sel]) / Hs
-        fx = (lon - al) / pdxs[img]
-        fy = (at_ - lat) / pdys[img]
-        w_i, h_i = Ws[img], Hs[img]
-        m_in = (fx >= 0) & (fx < w_i) & (fy >= 0) & (fy < h_i)
-        cxp = np.clip(np.floor(fx).astype(np.int64), 0, w_i - 1)
-        cyp = np.clip(np.floor(fy).astype(np.int64), 0, h_i - 1)
-        lin = offs[img] + cyp * w_i + cxp
-        V = []
-        for b in range(nb):
-            vb = bufs[b][lin]
-            if not m_in.all():
-                vb = np.where(m_in, vb, np.nan)
-            V.append(vb)
+        bounds = (a_l[sel], a_r[sel], a_b[sel], a_t[sel])
+        if view.resampling == "near" or band_mask:
+            lin, m_in = _near_index(*bounds, Hs, Ws, offs, img, lon, lat, al, at_)
+        if view.resampling == "near":
+            V = [_gather(bufs[b], lin, m_in) for b in range(nb)]
+        else:
+            win = (ix0[sel], ix1[sel], iy0[sel], iy1[sel])
+            V = _warp_cells(view, bufs[:nb], Hs, Ws, offs, bounds, win,
+                            img, iy, ix, lon, lat)
+        # separate mask band: warped 'near' always, whatever the data
+        # resampling; a match makes the cell nodata in every band
+        mp = None
+        if band_mask:
+            mp = _gather(bufs[nb], lin, m_in)
+        elif has_m is not None and has_m.any():
+            mlin, mm_in = _near_index(*bounds, mHs, mWs, moffs, img, lon, lat, al, at_)
+            mp = _gather(mbufs[0], mlin, mm_in & has_m[img])
+        if mp is not None:
+            mk = mask.test(mp)
+            if mk.any():
+                V = [np.where(mk, np.nan, vb) for vb in V]
     if mask is not None and not isinstance(mask, BandMask):
         mk = mask.apply(np.stack(V))
         if mk.any():
@@ -1230,19 +1315,11 @@ def build_cells_long(
         cols += ["bytes", "fmt"]
     if file_mask:
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
-    # flat (vectorized-across-images) scan eligibility — see _scan_batch_flat
-    # (GDALCUBES_VEC_SCAN=0 pins the per-image loop: escape hatch + the
-    # equality tests' way of running both paths)
-    vec_ok = (
-        os.environ.get("GDALCUBES_VEC_SCAN", "1") != "0"
-        and not view.labeled
-        and (value_fn is not None or resampling == "near")
-        and (
-            mask is None
-            or type(mask) in (ValueMask, RangeMask)
-            or (file_mask and "m_bytes" not in images.columns)
-        )
-    )
+    # GDALCUBES_VEC_SCAN=0 pins the per-image loop (the equality tests' way
+    # of running both paths)
+    vec_ok = os.environ.get("GDALCUBES_VEC_SCAN", "1") != "0"
+    # decided on the driver: the closure carries the flag to the workers
+    grid_ok = view.nx * view.ny <= _LONLAT_GRID_MAX
 
     def scan(batches):
         from .. import srs as _srs
@@ -1254,12 +1331,10 @@ def build_cells_long(
                 f"aggregating resampler {resampling!r} needs a separable view SRS"
             )
         LON_full = LAT_full = None
-        if not separable and view.nx * view.ny <= 16_000_000:
-            # ONE inverse transform of the whole view grid per task (a few
-            # MB up to ~4k x 4k), then slice per image — vs re-running the
-            # TM series on every image's window (150k images x 200 cells
-            # was 30s of pure per-image numpy overhead). Larger views fall
-            # back to per-window transforms.
+        if not separable and grid_ok:
+            # ONE inverse transform of the whole view grid per task, then
+            # gather per cell — vs re-running the TM series per batch
+            # (150k images x 200 cells was 30s of per-image numpy overhead)
             xs_f = view.left + (np.arange(view.nx) + 0.5) * view.dx
             ys_f = view.top - (np.arange(view.ny) + 0.5) * view.dy
             LON_full, LAT_full = _srs.grid_to_wgs84(xs_f, ys_f, view.srs)
@@ -1314,13 +1389,13 @@ def build_cells_long(
             a_mb = pdf["m_bytes"].to_numpy() if "m_bytes" in pdf.columns else None
             a_mf = pdf["m_fmt"].to_numpy() if "m_fmt" in pdf.columns else None
             a_mv = pdf["m_val"].to_numpy() if "m_val" in pdf.columns else None
-            if vec_ok and (separable or LON_full is not None):
+            if vec_ok:
                 yield _scan_batch_flat(
-                    view, nb, srs_n, separable, LON_full, LAT_full,
-                    decode_fn, value_fn, mask, file_mask, need_id, bands,
+                    view, nb, separable, LON_full, LAT_full,
+                    decode_fn, value_fn, mask, need_id, bands,
                     a_id, _vec_time_slots(a_ts, view),
                     v_l, v_r, v_b, v_t, a_l, a_r, a_b, a_t,
-                    a_bytes, a_fmt, a_mv,
+                    a_bytes, a_fmt, a_mb, a_mf, a_mv,
                 )
                 continue
             for k in range(len(pdf)):

@@ -16,7 +16,7 @@ import numpy as np
 import pytest
 
 from gdalcubes_cpp_spark.operators.build import (
-    RangeMask, ValueMask, build_cells_long, _vec_time_slots,
+    BandMask, FileMask, RangeMask, ValueMask, build_cells_long, _vec_time_slots,
 )
 from gdalcubes_cpp_spark.view import CubeView, Duration
 
@@ -47,20 +47,40 @@ def test_vec_time_slots_matches_scalar(dt_str, t0):
     np.testing.assert_array_equal(got, want)
 
 
+def test_vec_time_slots_labeled_matches_scalar():
+    import pandas as pd
+
+    labels = ["2019-12-31T23:59:59", "2020-01-03", "2020-01-03T00:00:01",
+              "2020-02-07T12:30", "2021-06-01"]
+    v = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
+                        time_labels=labels)
+    hits = np.array([np.datetime64(t, "us") for t in v.time_labels])
+    rng = np.random.RandomState(3)
+    near = hits[rng.randint(0, len(hits), 300)] + rng.randint(
+        -2, 3, 300).astype("timedelta64[s]")
+    ts = np.concatenate([hits, near, hits - np.timedelta64(1, "us")])
+    got = _vec_time_slots(ts, v)
+    want = np.array([v.slot_index_of(pd.Timestamp(t).to_pydatetime())
+                     for t in ts])
+    np.testing.assert_array_equal(got, want)
+    assert (got >= 0).any() and (got == -1).any()
+
+
 # ------------------------------------------------------- fast == slow (rows)
 
-def _images(spark, n=400, seed=7, srs_note="4326"):
+def _images(spark, n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
+            lon_span=90.0, lat_span=72.0):
     import pandas as pd
 
     rng = np.random.RandomState(seed)
-    left = -50.0 + rng.rand(n) * 90.0
-    bottom = -40.0 + rng.rand(n) * 72.0
+    left = lon0 + rng.rand(n) * lon_span
+    bottom = lat0 + rng.rand(n) * lat_span
     rows = []
     from gdalcubes_cpp_spark.codecs import encode_png
 
     for i in range(n):
         w, h = int(rng.randint(4, 20)), int(rng.randint(4, 20))
-        px = (rng.rand(h, w, 2) * 255).astype(np.uint8)
+        px = (rng.rand(h, w, nch) * 255).astype(np.uint8)
         rows.append((
             f"{i:06d}", encode_png(px), w, h, "png",
             float(left[i]), float(left[i] + 0.3 + rng.rand() * 2.0),
@@ -213,3 +233,115 @@ def test_view_window_skips_labeled_and_other_srs():
                           bottom=4000000.0, top=4600000.0, nx=40, ny=40,
                           t0="2020-01-01", nt=2, dt="P1M")
     assert _view_window(labeled) is None and _view_window(utm) is None
+
+
+# ------------------------------------- fast == loop: the loop-only cases
+
+def _fast_and_loop(monkeypatch, build):
+    monkeypatch.setenv("GDALCUBES_VEC_SCAN", "0")
+    slow = _collect_sorted(build())
+    monkeypatch.setenv("GDALCUBES_VEC_SCAN", "1")
+    fast = _collect_sorted(build())
+    return fast, slow
+
+
+@pytest.mark.parametrize("srs,resampling", [
+    ("EPSG:4326", "bilinear"), ("EPSG:4326", "cubic"),
+    ("EPSG:4326", "average"), ("EPSG:4326", "mode"),
+    ("EPSG:3857", "average"),
+])
+def test_fast_equals_loop_resampling(spark, monkeypatch, srs, resampling):
+    from gdalcubes_cpp_spark import srs as _srs
+
+    ext = dict(left=-50.0, right=50.0, bottom=-40.0, top=40.0)
+    if srs == "EPSG:3857":
+        ext = dict(left=float(_srs.lon_to_x(-50.0)), right=float(_srs.lon_to_x(50.0)),
+                   bottom=float(_srs.lat_to_y(-40.0)), top=float(_srs.lat_to_y(40.0)))
+    # coarse enough that images span several cells and several pixels pool
+    # into one cell (the aggregating resamplers' regime)
+    v = CubeView.create(srs=srs, **ext, nx=60, ny=50,
+                        t0="2020-01-01", t1="2020-12-31", dt="P3M",
+                        aggregation="mean", resampling=resampling,
+                        chunk_size=(4, 25, 30))
+    imgs = _images(spark, 200)
+    fast, slow = _fast_and_loop(
+        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2")))
+    assert fast == slow and len(fast) > 0
+
+
+@pytest.mark.parametrize("value_fn", [False, True])
+def test_fast_equals_loop_labeled_axis(spark, monkeypatch, value_fn):
+    import pandas as pd
+
+    imgs = _images(spark, 300)
+    ts = sorted(r[0] for r in imgs.select("ts").collect())
+    # labels hit some image timestamps exactly, plus two that hit none
+    labels = [pd.Timestamp(t).to_pydatetime() for t in ts[::7]] + [
+        dt.datetime(2019, 6, 1), dt.datetime(2020, 6, 15, 0, 0, 1)]
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
+                        time_labels=labels, aggregation="mean",
+                        resampling="near", chunk_size=(4, 50, 60))
+    if value_fn:
+        imgs = imgs.drop("bytes")
+    kw = {"value_fn": lambda i: (float(int(i) % 97), float(int(i) % 89))} if value_fn else {}
+    fast, slow = _fast_and_loop(
+        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2"), **kw))
+    assert fast == slow and len(fast) > 0
+    assert len({r[0] for r in fast}) > 1
+
+
+def test_fast_equals_loop_band_mask(spark, monkeypatch):
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation="mean", resampling="bilinear",
+                        chunk_size=(4, 50, 60))
+    imgs = _images(spark, 300, nch=3)
+    bm = BandMask(channel=2, vmin=0.0, vmax=90.0)
+    fast, slow = _fast_and_loop(
+        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2"), mask=bm))
+    plain = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
+    assert fast == slow and 0 < len(fast) < len(plain)
+
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+def test_fast_equals_loop_file_mask_bytes(spark, monkeypatch, resampling):
+    from gdalcubes_cpp_spark.codecs import encode_png
+    from gdalcubes_cpp_spark.operators.build import join_mask_table
+
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation="mean", resampling=resampling,
+                        chunk_size=(4, 50, 60))
+    imgs = _images(spark, 300)
+    rng = np.random.RandomState(5)
+    # every third image has no mask file; the others a mask at their own size
+    mrows = [(f"{i:06d}", encode_png(rng.randint(0, 10, (int(rng.randint(2, 9)),
+                                                          int(rng.randint(2, 9)), 1)
+                                                 ).astype(np.uint8)), "png")
+             for i in range(300) if i % 3]
+    mtab = spark.createDataFrame(mrows, "image_id string, bytes binary, fmt string")
+    joined = join_mask_table(imgs, mtab)
+    fm = FileMask(values=[2, 5, 7])
+    fast, slow = _fast_and_loop(
+        monkeypatch, lambda: build_cells_long(joined, v, ("B1", "B2"), mask=fm))
+    plain = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
+    assert fast == slow and 0 < len(fast) < len(plain)
+
+
+@pytest.mark.parametrize("grid_max", [None, 0])
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+def test_fast_equals_loop_utm_bytes(spark, monkeypatch, grid_max, resampling):
+    from gdalcubes_cpp_spark.operators import build
+
+    if grid_max is not None:
+        # above the lon/lat grid cache: point-wise inverse per batch
+        monkeypatch.setattr(build, "_LONLAT_GRID_MAX", grid_max)
+    v = CubeView.create(srs="EPSG:32632", left=166021.0, right=766021.0,
+                        bottom=4000000.0, top=4600000.0, nx=40, ny=40,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation="mean", resampling=resampling,
+                        chunk_size=(4, 20, 20))
+    imgs = _images(spark, 300, lon0=6.0, lat0=36.0, lon_span=6.0, lat_span=5.0)
+    fast, slow = _fast_and_loop(
+        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2")))
+    assert fast == slow and len(fast) > 0
