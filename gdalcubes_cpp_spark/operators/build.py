@@ -12,16 +12,20 @@ Per chunk (the reference's unit of parallelism, src/cube.cpp:1703-1737):
 2. decode ``bytes`` (numpy PNG / lossy-stub codec — GDAL's role), selecting
    only requested bands (the band-subset VRT analog,
    src/image_collection_cube.cpp:431-455 — here: channel slicing);
-3. "warp": affine chunk-grid → image-grid index transform with nearest or
-   bilinear sampling (gdalwarp_client::warp, src/warp.cpp:57-300; only the
-   EPSG:4326→4326 identity SRS path is exercised — see warp_points below
-   for the web-mercator formula hook); cells outside the footprint → NaN;
+3. "warp" (gdalwarp_client::warp, src/warp.cpp:57-300): view cell centres
+   → EPSG:4326 (srs.py; per axis for separable view SRS, per cell for the
+   rest) → image pixel coordinates, sampled by any of the 12 RESAMPLERS
+   (5 point kernels, 7 aggregating ones); cells outside the footprint → NaN;
 4. optional value/range mask (src/image_collection_cube.h:34-146);
 5. temporal aggregation across overlapping images per cell — streaming
    aggregation_state semantics (src/image_collection_cube.cpp:58-306):
    mean/min/max/first/last/median/count_values/count_images/none;
 6. all-NaN cells emit NO row (sparse cube; the all-NaN chunk → empty chunk
    collapse of src/image_collection_cube.cpp:591-594 falls out for free).
+
+build_cells_long is the second physical strategy: the same decode → warp
+→ mask steps run vectorized over whole scan batches (_scan_batch), and the
+temporal aggregation becomes a native groupBy over long cell rows.
 
 Scale notes: the shuffle is one exchange keyed by chunk_id; hot chunks
 (many overlapping images — skewed cities) can optionally be pre-combined via
@@ -33,7 +37,6 @@ last need total order and run unsalted (documented skew limit).
 from __future__ import annotations
 
 import math
-import os
 from typing import Callable
 
 import numpy as np
@@ -662,6 +665,16 @@ def _make_agg(method: str, shape) -> _Agg:
     raise ValueError(f"unknown aggregation {method!r}")
 
 
+def _check_mask(mask, value_fn, columns) -> None:
+    """A mask band is warped from decoded pixels, which the metadata
+    value_fn path never has: refuse a BandMask, and a FileMask whose mask
+    table carries bytes (its mask_value form needs no decode)."""
+    if value_fn is not None and isinstance(mask, BandMask) and (
+            not isinstance(mask, FileMask) or "m_bytes" in columns):
+        raise ValueError(
+            f"{type(mask).__name__} needs decoded channels (no value_fn path)")
+
+
 # ---------------------------------------------------------------------------
 # the grouped-map kernel
 # ---------------------------------------------------------------------------
@@ -692,11 +705,7 @@ def build_cells(
     grid = ChunkGrid(view)
     nb = len(bands)
     resampling = view.resampling
-    if (
-        isinstance(mask, BandMask) and not isinstance(mask, FileMask)
-        and value_fn is not None
-    ):
-        raise ValueError("BandMask needs decoded channels (no value_fn path)")
+    _check_mask(mask, value_fn, joined.columns)
     file_mask = isinstance(mask, FileMask)
     agg_method = agg_override or view.aggregation
     out_bands = (
@@ -938,14 +947,13 @@ def build_cells_salted(
     scaling efficiency decays no matter how many executors join (measured:
     salt=8 gave 0.53-0.66 efficiency 4->16 cores on the hotspot synth
     collection; the merge is a native partial-agg groupBy and absorbs any
-    salt count). On a real cluster set it >= 2x total executor slots."""
+    salt count). On a real cluster pass ``salt`` >= 2x total executor
+    slots."""
     agg = view.aggregation
     if agg not in _SALTABLE:
         raise ValueError(f"aggregation {agg!r} is not saltable (use build_cells)")
     if salt is None:
-        env = os.environ.get("GDALCUBES_SALT")
-        salt = int(env) if env else max(
-            32, 2 * joined.sparkSession.sparkContext.defaultParallelism)
+        salt = max(32, 2 * joined.sparkSession.sparkContext.defaultParallelism)
     salted = joined.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
     kernel_agg = "_sum_count" if agg == "mean" else agg
     partial = build_cells(
@@ -1080,26 +1088,66 @@ def _warp_cells(view, bufs, Hs, Ws, offs, bounds, win, img, iy, ix, lon, lat):
     return V
 
 
-def _scan_batch_flat(
-    view: CubeView, nb: int, separable: bool,
-    LON_full, LAT_full, decode_fn, value_fn, mask,
-    need_id: bool, band_names,
-    a_id, itg, v_l, v_r, v_b, v_t, a_l, a_r, a_b, a_t,
-    a_bytes, a_fmt, a_mb, a_mf, a_mv,
+def _view_bbox(view: CubeView, srs_n: str, separable: bool, a_l, a_r, a_b, a_t):
+    """Footprint bboxes (EPSG:4326) -> view-coord (left, right, bottom, top)
+    arrays for the cell-window math: exact for separable SRS, conservative
+    otherwise."""
+    from .. import srs as _srs
+
+    if srs_n == "EPSG:4326":
+        return a_l, a_r, a_b, a_t
+    if srs_n == "EPSG:3857":
+        # monotonic per axis: corners map exactly
+        return (_srs.lon_to_x(a_l), _srs.lon_to_x(a_r),
+                _srs.lat_to_y(a_b), _srs.lat_to_y(a_t))
+    if separable:
+        # remaining separable family (CEA / EASE-Grid 2.0): x depends only
+        # on lon and y only on lat, so footprint corners map EXACTLY
+        v_l, v_b = _srs.from_wgs84(a_l, a_b, srs_n)
+        v_r, v_t = _srs.from_wgs84(a_r, a_t, srs_n)
+        return v_l, v_r, v_b, v_t
+    # non-separable (UTM): CONSERVATIVE bbox from the 4 corners + 4 edge
+    # midpoints of every footprint (one vectorized transform per batch),
+    # padded by one view cell + the TM chord-sagitta bound; the per-cell
+    # membership test refines exactly, so over-coverage only costs a few
+    # extra masked cells
+    mx_ = (a_l + a_r) / 2.0
+    my_ = (a_b + a_t) / 2.0
+    pls = np.stack([a_l, a_l, a_r, a_r, mx_, mx_, a_l, a_r])
+    pbs = np.stack([a_b, a_t, a_b, a_t, a_b, a_t, my_, my_])
+    px, py = _srs.from_wgs84(pls, pbs, srs_n)
+    pad_x = view.dx + 0.01 * (px.max(axis=0) - px.min(axis=0))
+    pad_y = view.dy + 0.01 * (py.max(axis=0) - py.min(axis=0))
+    return (px.min(axis=0) - pad_x, px.max(axis=0) + pad_x,
+            py.min(axis=0) - pad_y, py.max(axis=0) + pad_y)
+
+
+def _scan_batch(
+    view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
+    LON_full, LAT_full, decode_fn, value_fn, mask, need_id: bool, band_names,
 ):
     """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows.
 
     A per-image loop spends ~30 small numpy calls per image — at 200k
-    images that Python overhead dwarfs the actual arithmetic (guide §4.2:
-    hand whole batches to vectorized kernels). Here time slots, cell
-    windows, coordinates, the 'near' gather and every mask run once per
-    BATCH over flattened (image, cell) arrays; only decode_fn (a real
-    codec), value_fn (a user callable) and non-'near' warps stay per image.
+    images that Python overhead dwarfs the actual arithmetic. Here time
+    slots, cell windows, coordinates, the 'near' gather and every mask run
+    once per BATCH over flattened (image, cell) arrays; only decode_fn (a
+    real codec), value_fn (a user callable) and non-'near' warps stay per
+    image.
     Rows come out image by image in input order, row-major within each
     image — the order Spark's partial avg sums in.
     """
     from .. import srs as _srs
 
+    def col(c):
+        return pdf[c].to_numpy() if c in pdf.columns else None
+
+    nb = len(band_names)
+    a_l, a_r = col("left"), col("right")
+    a_b, a_t = col("bottom"), col("top")
+    a_id, a_mb, a_mv = col("image_id"), col("m_bytes"), col("m_val")
+    itg = _vec_time_slots(col("ts"), view)
+    v_l, v_r, v_b, v_t = _view_bbox(view, srs_n, separable, a_l, a_r, a_b, a_t)
     empty = pd.DataFrame(
         {"it": pd.Series([], dtype="int32"),
          "iy": pd.Series([], dtype="int32"),
@@ -1138,14 +1186,15 @@ def _scan_batch_flat(
         vals = np.asarray([value_fn(i)[:nb] for i in a_id[sel]], dtype=np.float64)
     else:
         chans = list(range(nb)) + ([mask.channel] if band_mask else [])
-        bufs, Hs, Ws, offs = _decode_planes(decode_fn, a_bytes, a_fmt, sel, chans)
+        bufs, Hs, Ws, offs = _decode_planes(
+            decode_fn, col("bytes"), col("fmt"), sel, chans)
         has_m = None
         if file_mask and a_mb is not None:
             # the mask file: its own bytes, its own (H, W); images without a
             # mask row pass unmasked
             has_m = np.asarray([a_mb[k] is not None for k in sel], dtype=bool)
             mbufs, mH, mW, moff = _decode_planes(
-                mask.decode_fn or default_decode, a_mb, a_mf, sel[has_m],
+                mask.decode_fn or default_decode, a_mb, col("m_fmt"), sel[has_m],
                 [mask.channel])
             mHs, mWs = np.ones(len(sel), np.int64), np.ones(len(sel), np.int64)
             moffs = np.zeros(len(sel), np.int64)
@@ -1182,7 +1231,7 @@ def _scan_batch_flat(
     if not m.any():
         return empty
     img, iy, ix, lon, lat = img[m], iy[m], ix[m], lon[m], lat[m]
-    al, ar, ab, at_ = al[m], ar[m], ab[m], at_[m]
+    al, at_ = al[m], at_[m]
     if value_fn is not None:
         V = [vals[img, b] for b in range(nb)]
     else:
@@ -1284,20 +1333,23 @@ def build_cells_long(
     cells are derived directly from its footprint (the join stays available
     as its own operator for assignment queries).
 
+    One scan path (_scan_batch) serves every configuration: regular and
+    labeled time axes, all 12 resamplers (aggregating ones need a separable
+    view SRS), value-predicate, band and separate-file masks, any view SRS.
+    Per batch, time slots, cell windows, coordinates, 'near' gathers and
+    masks run vectorized over flattened (image, cell) arrays; only decode,
+    value_fn and non-'near' warps run per image.
+
     Preferred when footprints cover FEW cells (coarse cubes over many
     images: contribution rows ≈ images x cells/image). The chunk-kernel path
     (build_cells) wins when one image covers MANY cells (fine cubes), where
-    dense plane arithmetic beats row explosion — build_cube(strategy=...)
-    picks by the footprint-to-cell-area ratio.
+    dense plane arithmetic beats row explosion; build_cube(strategy="auto")
+    takes this path for every aggregation in _LONG_AGGS.
     """
     agg = view.aggregation
     if agg not in _LONG_AGGS:
         raise ValueError(f"cell-long strategy supports {sorted(_LONG_AGGS)}")
-    if (
-        isinstance(mask, BandMask) and not isinstance(mask, FileMask)
-        and value_fn is not None
-    ):
-        raise ValueError("BandMask needs decoded channels (no value_fn path)")
+    _check_mask(mask, value_fn, images.columns)
     file_mask = isinstance(mask, FileMask)
     nb = len(bands)
     resampling = view.resampling
@@ -1315,9 +1367,6 @@ def build_cells_long(
         cols += ["bytes", "fmt"]
     if file_mask:
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
-    # GDALCUBES_VEC_SCAN=0 pins the per-image loop (the equality tests' way
-    # of running both paths)
-    vec_ok = os.environ.get("GDALCUBES_VEC_SCAN", "1") != "0"
     # decided on the driver: the closure carries the flag to the workers
     grid_ok = view.nx * view.ny <= _LONLAT_GRID_MAX
 
@@ -1339,195 +1388,8 @@ def build_cells_long(
             ys_f = view.top - (np.arange(view.ny) + 0.5) * view.dy
             LON_full, LAT_full = _srs.grid_to_wgs84(xs_f, ys_f, view.srs)
         for pdf in batches:
-            out_it, out_iy, out_ix, out_id = [], [], [], []
-            out_v = [[] for _ in range(nb)]
-            a_ts = pdf["ts"].to_numpy()
-            a_l = pdf["left"].to_numpy()
-            a_r = pdf["right"].to_numpy()
-            a_b = pdf["bottom"].to_numpy()
-            a_t = pdf["top"].to_numpy()
-            a_id = (pdf["image_id"].to_numpy()
-                    if "image_id" in pdf.columns else None)
-            if srs_n == "EPSG:3857":
-                # footprint bbox -> view coords for the cell-window math
-                # (separable + monotonic: corners map exactly)
-                v_l = _srs.lon_to_x(a_l)
-                v_r = _srs.lon_to_x(a_r)
-                v_b = _srs.lat_to_y(a_b)
-                v_t = _srs.lat_to_y(a_t)
-            elif separable and srs_n != "EPSG:4326":
-                # remaining separable family (CEA / EASE-Grid 2.0):
-                # x depends only on lon and y only on lat, so footprint
-                # corners map EXACTLY to view coords
-                v_l, v_b = _srs.from_wgs84(a_l, a_b, srs_n)
-                v_r, v_t = _srs.from_wgs84(a_r, a_t, srs_n)
-            elif separable:
-                v_l, v_r, v_b, v_t = a_l, a_r, a_b, a_t
-            else:
-                # non-separable (UTM): CONSERVATIVE view-coord bbox from the
-                # 4 corners + 4 edge midpoints of every footprint (one
-                # vectorized transform per batch), padded by one view cell +
-                # the TM chord-sagitta bound; the per-cell 2-D membership
-                # mask below refines exactly, so over-coverage only costs a
-                # few extra masked cells
-                mx_ = (a_l + a_r) / 2.0
-                my_ = (a_b + a_t) / 2.0
-                pls = np.stack([a_l, a_l, a_r, a_r, mx_, mx_, a_l, a_r])
-                pbs = np.stack([a_b, a_t, a_b, a_t, a_b, a_t, my_, my_])
-                px, py = _srs.from_wgs84(pls, pbs, srs_n)
-                pad_x = view.dx + 0.01 * (px.max(axis=0) - px.min(axis=0))
-                pad_y = view.dy + 0.01 * (py.max(axis=0) - py.min(axis=0))
-                v_l = px.min(axis=0) - pad_x
-                v_r = px.max(axis=0) + pad_x
-                v_b = py.min(axis=0) - pad_y
-                v_t = py.max(axis=0) + pad_y
-            if value_fn is None:
-                a_bytes = pdf["bytes"].to_numpy()
-                a_fmt = pdf["fmt"].to_numpy()
-            else:
-                a_bytes = a_fmt = None
-            a_mb = pdf["m_bytes"].to_numpy() if "m_bytes" in pdf.columns else None
-            a_mf = pdf["m_fmt"].to_numpy() if "m_fmt" in pdf.columns else None
-            a_mv = pdf["m_val"].to_numpy() if "m_val" in pdf.columns else None
-            if vec_ok:
-                yield _scan_batch_flat(
-                    view, nb, separable, LON_full, LAT_full,
-                    decode_fn, value_fn, mask, need_id, bands,
-                    a_id, _vec_time_slots(a_ts, view),
-                    v_l, v_r, v_b, v_t, a_l, a_r, a_b, a_t,
-                    a_bytes, a_fmt, a_mb, a_mf, a_mv,
-                )
-                continue
-            for k in range(len(pdf)):
-                itg = view.slot_index_of(pd.Timestamp(a_ts[k]).to_pydatetime())
-                if itg < 0 or itg >= view.nt:
-                    continue
-                if file_mask and a_mv is not None and mask.test_scalar(a_mv[k]):
-                    continue  # constant mask plane masks the whole footprint
-                # covered global cell window (centers inside the footprint;
-                # for non-separable SRS this window is conservative)
-                if separable:
-                    ix0 = max(0, int(np.ceil((v_l[k] - view.left) / view.dx - 0.5)))
-                    ix1 = min(view.nx, int(np.floor((v_r[k] - view.left) / view.dx - 0.5)) + 1)
-                    iy0 = max(0, int(np.ceil((view.top - v_t[k]) / view.dy - 0.5)))
-                    iy1 = min(view.ny, int(np.floor((view.top - v_b[k]) / view.dy - 0.5)) + 1)
-                else:
-                    ix0 = max(0, int(np.floor((v_l[k] - view.left) / view.dx)))
-                    ix1 = min(view.nx, int(np.ceil((v_r[k] - view.left) / view.dx)))
-                    iy0 = max(0, int(np.floor((view.top - v_t[k]) / view.dy)))
-                    iy1 = min(view.ny, int(np.ceil((view.top - v_b[k]) / view.dy)))
-                if ix1 <= ix0 or iy1 <= iy0:
-                    continue
-                xs = view.left + (np.arange(ix0, ix1) + 0.5) * view.dx
-                ys = view.top - (np.arange(iy0, iy1) + 0.5) * view.dy
-                m2 = None
-                if separable:
-                    xs, ys = _srs.axis_to_wgs84(xs, ys, view.srs)
-                    # guard float edges: centers must be strictly covered (in
-                    # 4326, matching the warp's own inside test exactly)
-                    mx = (xs >= a_l[k]) & (xs < a_r[k])
-                    my = (ys > a_b[k]) & (ys <= a_t[k])
-                    if not (mx.any() and my.any()):
-                        continue
-                    if not mx.all():
-                        xs = xs[mx]
-                        sel = np.nonzero(mx)[0]
-                        ix0 = ix0 + sel[0]
-                        ix1 = ix0 + len(sel)
-                    if not my.all():
-                        ys = ys[my]
-                        sel = np.nonzero(my)[0]
-                        iy0 = iy0 + sel[0]
-                        iy1 = iy0 + len(sel)
-                else:
-                    if LON_full is not None:
-                        LON = LON_full[iy0:iy1, ix0:ix1]
-                        LAT = LAT_full[iy0:iy1, ix0:ix1]
-                    else:
-                        LON, LAT = _srs.grid_to_wgs84(xs, ys, view.srs)
-                    m2 = (LON >= a_l[k]) & (LON < a_r[k]) & (LAT > a_b[k]) & (LAT <= a_t[k])
-                    if not m2.any():
-                        continue
-                    xs, ys = LON, LAT  # 2-D coords for the warp gather
-                if value_fn is not None:
-                    vals = value_fn(a_id[k])
-                    shape = m2.shape if m2 is not None else (len(ys), len(xs))
-                    planes = np.stack(
-                        [np.full(shape, vals[b]) for b in range(nb)]
-                    )
-                else:
-                    raw = decode_fn(a_bytes[k], a_fmt[k])
-                    kw = {}
-                    if resampling in AGG_RESAMPLERS:
-                        kw = {
-                            "x_edges": _srs.axis_to_wgs84(
-                                view.left + np.arange(ix0, ix1 + 1) * view.dx,
-                                np.empty(0), view.srs)[0],
-                            "y_edges": _srs.axis_to_wgs84(
-                                np.empty(0),
-                                view.top - np.arange(iy0, iy1 + 1) * view.dy,
-                                view.srs)[1],
-                        }
-                    planes = np.stack(
-                        [
-                            warp_plane(
-                                raw[:, :, b], (a_l[k], a_r[k], a_b[k], a_t[k]),
-                                xs, ys, resampling, **kw,
-                            )
-                            for b in range(nb)
-                        ]
-                    )
-                    if file_mask:
-                        if a_mb is not None and a_mb[k] is not None:
-                            mraw = (mask.decode_fn or default_decode)(a_mb[k], a_mf[k])
-                            mp = warp_plane(
-                                mraw[:, :, mask.channel], (a_l[k], a_r[k], a_b[k], a_t[k]),
-                                xs, ys, "near",
-                            )
-                            planes[:, mask.test(mp)] = np.nan
-                    elif isinstance(mask, BandMask):
-                        mp = warp_plane(
-                            raw[:, :, mask.channel], (a_l[k], a_r[k], a_b[k], a_t[k]),
-                            xs, ys, "near",
-                        )
-                        planes[:, mask.test(mp)] = np.nan
-                if m2 is not None:
-                    planes[:, ~m2] = np.nan
-                if mask is not None and not isinstance(mask, BandMask):
-                    planes[:, mask.apply(planes)] = np.nan
-                keep = ~np.isnan(planes).all(axis=0)
-                if not keep.any():
-                    continue
-                yy, xx = np.nonzero(keep)
-                out_it.append(np.full(len(yy), itg, dtype=np.int32))
-                out_iy.append((yy + iy0).astype(np.int32))
-                out_ix.append((xx + ix0).astype(np.int32))
-                if need_id:
-                    out_id.append(np.full(len(yy), a_id[k], dtype=object))
-                for b in range(nb):
-                    out_v[b].append(planes[b, yy, xx])
-            if not out_it:
-                yield pd.DataFrame(
-                    {"it": pd.Series([], dtype="int32"),
-                     "iy": pd.Series([], dtype="int32"),
-                     "ix": pd.Series([], dtype="int32"),
-                     **({"image_id": pd.Series([], dtype="object")}
-                        if need_id else {}),
-                     **{f"v_{b}": pd.Series([], dtype="float64") for b in bands}}
-                )
-                continue
-            yield pd.DataFrame(
-                {
-                    "it": np.concatenate(out_it),
-                    "iy": np.concatenate(out_iy),
-                    "ix": np.concatenate(out_ix),
-                    **({"image_id": np.concatenate(out_id)} if need_id else {}),
-                    **{
-                        f"v_{bands[b]}": np.concatenate(out_v[b])
-                        for b in range(nb)
-                    },
-                }
-            )
+            yield _scan_batch(view, pdf, srs_n, separable, LON_full, LAT_full,
+                              decode_fn, value_fn, mask, need_id, bands)
 
     schema = (
         "it int, iy int, ix int, "

@@ -40,6 +40,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..functions import cells as C
 from ..grid import ChunkGrid
+from ..partition import spread
 
 CHUNK_COLS = [
     "chunk_id", "ch_left", "ch_right", "ch_bottom", "ch_top",
@@ -172,8 +173,6 @@ def st_join(
         # a 1-3-partition metadata scan serializes images x chunks predicate
         # work on as many cores. Widen narrow scans first (footprint tuples
         # only — the no-bytes-shuffle property is unchanged for wide inputs).
-        from ..partition import spread
-
         return spread(images).join(
             F.broadcast(chunks), _residual_predicate(images, chunks))
 
@@ -235,9 +234,7 @@ def st_join(
         # narrow metadata rows: make sure the Arrow cover stage sees every
         # core (a small parquet scan may yield fewer splits than cores; the
         # repartition is a cheap exchange of footprint tuples, never bytes)
-        par = spark.sparkContext.defaultParallelism
-        if images.rdd.getNumPartitions() < par:
-            images = images.repartition(par)
+        images = spread(images)
     img_c = images.withColumn(
         "cell", F.explode(cov(F.col("left"), F.col("right"), F.col("bottom"), F.col("top")))
     )

@@ -1,24 +1,30 @@
-"""Equality pin for the vectorized cell_long scan (_scan_batch_flat).
+"""Correctness pins for the vectorized cell_long scan (build._scan_batch).
 
-build_cells_long has two physical scan implementations: the per-image loop
-(reference shape, always available) and the flat vectorized twin used when
-the configuration allows (regular time axis, 'near' or metadata values,
-value-predicate masks). They must emit IDENTICAL rows; GDALCUBES_VEC_SCAN=0
-pins the loop so both run on the same inputs.
+The scan handles every cell_long configuration in one batch-at-a-time
+path: regular and labeled time axes, all 12 resamplers, value-predicate,
+band and separate-file masks, separable and non-separable view SRS (with
+and without the per-task lon/lat grid). Each case is checked cell for
+cell against a reference: tests/oracle_np.dense_cube for EPSG:4326 byte
+payloads, build_cube(strategy="chunk_kernel") for metadata values, masks
+and other view SRS. (The ``test_fast_equals_loop_*`` names predate the
+single scan path; they compare against the same references.)
 """
 
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 import numpy as np
+import pandas as pd
 import pytest
 
 from gdalcubes_cpp_spark.operators.build import (
-    BandMask, FileMask, RangeMask, ValueMask, build_cells_long, _vec_time_slots,
+    BandMask, FileMask, RangeMask, ValueMask, build_cells_long, build_cube,
+    _vec_time_slots,
 )
-from gdalcubes_cpp_spark.view import CubeView, Duration
+from gdalcubes_cpp_spark.view import CubeView
+
+from .oracle_np import assert_dense_equal, dense_cube
 
 
 # ---------------------------------------------------------------- time slots
@@ -40,16 +46,12 @@ def test_vec_time_slots_matches_scalar(dt_str, t0):
             ).astype(np.int64) - 3 * 366 * 86400
     ts = base + offs.astype("timedelta64[s]")
     got = _vec_time_slots(ts, v)
-    import pandas as pd
-
     want = np.array([v.slot_index_of(pd.Timestamp(t).to_pydatetime())
                      for t in ts])
     np.testing.assert_array_equal(got, want)
 
 
 def test_vec_time_slots_labeled_matches_scalar():
-    import pandas as pd
-
     labels = ["2019-12-31T23:59:59", "2020-01-03", "2020-01-03T00:00:01",
               "2020-02-07T12:30", "2021-06-01"]
     v = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
@@ -66,34 +68,60 @@ def test_vec_time_slots_labeled_matches_scalar():
     assert (got >= 0).any() and (got == -1).any()
 
 
-# ------------------------------------------------------- fast == slow (rows)
+# ------------------------------------------- cell_long == reference (cells)
 
-def _images(spark, n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
-            lon_span=90.0, lat_span=72.0):
-    import pandas as pd
+def _images_pdf(n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
+                lon_span=90.0, lat_span=72.0):
+    from gdalcubes_cpp_spark.codecs import encode_png
 
     rng = np.random.RandomState(seed)
     left = lon0 + rng.rand(n) * lon_span
     bottom = lat0 + rng.rand(n) * lat_span
     rows = []
-    from gdalcubes_cpp_spark.codecs import encode_png
-
     for i in range(n):
         w, h = int(rng.randint(4, 20)), int(rng.randint(4, 20))
         px = (rng.rand(h, w, nch) * 255).astype(np.uint8)
-        rows.append((
-            f"{i:06d}", encode_png(px), w, h, "png",
-            float(left[i]), float(left[i] + 0.3 + rng.rand() * 2.0),
-            float(bottom[i]), float(bottom[i] + 0.3 + rng.rand() * 2.0),
-            dt.datetime(2020, 1, 1) + dt.timedelta(hours=int(rng.randint(0, 24 * 360))),
+        rows.append(dict(
+            image_id=f"{i:06d}", bytes=encode_png(px), w=w, h=h, fmt="png",
+            left=float(left[i]), right=float(left[i] + 0.3 + rng.rand() * 2.0),
+            bottom=float(bottom[i]), top=float(bottom[i] + 0.3 + rng.rand() * 2.0),
+            ts=dt.datetime(2020, 1, 1) + dt.timedelta(hours=int(rng.randint(0, 24 * 360))),
         ))
-    return spark.createDataFrame(
-        rows, "image_id string, bytes binary, w int, h int, fmt string, "
-              "left double, right double, bottom double, top double, ts timestamp")
+    return pd.DataFrame(rows)
+
+
+def _images(spark, n=400, **kw):
+    return spark.createDataFrame(_images_pdf(n, **kw))
+
+
+def _metadata(spark, n=400, **kw):
+    return _images(spark, n, **kw).drop("bytes", "fmt")
+
+
+def _vfn(image_id):
+    k = int(image_id)
+    return (float(k % 97), float(k % 89))
 
 
 def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
+
+
+def _cube(imgs, v, strategy, **kw):
+    return build_cube(imgs, v, bands=("B1", "B2"), strategy=strategy, **kw).collect_dense()
+
+
+def _assert_cells_equal(got, want):
+    """Same NaN pattern and values to 1e-9 (the long strategy's Spark avg
+    and the dense references sum in different orders)."""
+    assert_dense_equal(got, want)
+    assert np.isfinite(got).any()
+
+
+def _assert_cell_long_matches_chunk_kernel(imgs, v, **kw):
+    got = _cube(imgs, v, "cell_long", **kw)
+    _assert_cells_equal(got, _cube(imgs, v, "chunk_kernel", **kw))
+    return got
 
 
 @pytest.mark.parametrize("agg", ["mean", "median", "first", "last"])
@@ -101,14 +129,9 @@ def test_fast_equals_loop_bytes_near(spark, agg):
     v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation=agg, resampling="near", chunk_size=(4, 50, 60))
-    imgs = _images(spark, 400)
-    os.environ["GDALCUBES_VEC_SCAN"] = "0"
-    try:
-        slow = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
-    finally:
-        os.environ["GDALCUBES_VEC_SCAN"] = "1"
-    fast = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
-    assert fast == slow and len(fast) > 0
+    pdf = _images_pdf(400)
+    got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+    _assert_cells_equal(got, dense_cube(pdf, v, aggregation=agg))
 
 
 @pytest.mark.parametrize("mask", [
@@ -117,60 +140,117 @@ def test_fast_equals_loop_bytes_near(spark, agg):
     RangeMask(1, 10.0, 60.0),
 ])
 def test_fast_equals_loop_value_fn(spark, mask):
-    def vfn(image_id):
-        k = int(image_id)
-        return (float(k % 97), float(k % 89))
-
     v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=96, ny=96,
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation="mean", resampling="near",
                         chunk_size=(4, 48, 48))
-    imgs = _images(spark, 400).drop("bytes")
-    os.environ["GDALCUBES_VEC_SCAN"] = "0"
-    try:
-        slow = _collect_sorted(
-            build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn, mask=mask))
-    finally:
-        os.environ["GDALCUBES_VEC_SCAN"] = "1"
-    fast = _collect_sorted(
-        build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn, mask=mask))
-    assert fast == slow and len(fast) > 0
+    _assert_cell_long_matches_chunk_kernel(
+        _metadata(spark, 400), v, value_fn=_vfn, mask=mask)
+
+
+_UTM = dict(srs="EPSG:32632", left=166021.0, right=766021.0,
+            bottom=4000000.0, top=4600000.0, nx=40, ny=40,
+            t0="2020-01-01", t1="2020-12-31", dt="P1M",
+            aggregation="mean", chunk_size=(4, 20, 20))
+# footprints around the UTM 32N lon band so some cells land inside
+_UTM_IMAGES = dict(lon0=6.0, lat0=36.0, lon_span=6.0, lat_span=5.0)
 
 
 def test_fast_equals_loop_nonseparable(spark):
-    def vfn(image_id):
-        k = int(image_id)
-        return (float(k % 97), float(k % 89))
+    v = CubeView.create(**_UTM, resampling="near")
+    _assert_cell_long_matches_chunk_kernel(
+        _metadata(spark, 300, seed=3, **_UTM_IMAGES), v, value_fn=_vfn)
 
-    v = CubeView.create(srs="EPSG:32632", left=166021.0, right=766021.0,
-                        bottom=4000000.0, top=4600000.0, nx=40, ny=40,
+
+@pytest.mark.parametrize("srs,resampling", [
+    ("EPSG:4326", "bilinear"), ("EPSG:4326", "cubic"),
+    ("EPSG:4326", "average"), ("EPSG:4326", "mode"),
+    ("EPSG:3857", "average"),
+])
+def test_cell_long_resampling(spark, srs, resampling):
+    from gdalcubes_cpp_spark import srs as _srs
+
+    ext = dict(left=-50.0, right=50.0, bottom=-40.0, top=40.0)
+    if srs == "EPSG:3857":
+        ext = dict(left=float(_srs.lon_to_x(-50.0)), right=float(_srs.lon_to_x(50.0)),
+                   bottom=float(_srs.lat_to_y(-40.0)), top=float(_srs.lat_to_y(40.0)))
+    # coarse enough that images span several cells and several pixels pool
+    # into one cell (the aggregating resamplers' regime)
+    v = CubeView.create(srs=srs, **ext, nx=60, ny=50,
+                        t0="2020-01-01", t1="2020-12-31", dt="P3M",
+                        aggregation="mean", resampling=resampling,
+                        chunk_size=(4, 25, 30))
+    pdf = _images_pdf(200)
+    if srs == "EPSG:3857":  # the numpy oracle samples EPSG:4326 views only
+        _assert_cell_long_matches_chunk_kernel(spark.createDataFrame(pdf), v)
+        return
+    got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+    _assert_cells_equal(got, dense_cube(pdf, v, resampling=resampling))
+
+
+@pytest.mark.parametrize("value_fn", [False, True])
+def test_cell_long_labeled_axis(spark, value_fn):
+    pdf = _images_pdf(300)
+    ts = sorted(pdf["ts"])
+    # labels hit some image timestamps exactly, plus two that hit none
+    labels = [t.to_pydatetime() for t in ts[::7]] + [
+        dt.datetime(2019, 6, 1), dt.datetime(2020, 6, 15, 0, 0, 1)]
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
+                        time_labels=labels, aggregation="mean",
+                        resampling="near", chunk_size=(4, 50, 60))
+    if value_fn:
+        got = _assert_cell_long_matches_chunk_kernel(
+            _metadata(spark, 300), v, value_fn=_vfn)
+    else:
+        got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+        # only exact label hits contribute (the oracle buckets by time_index_of)
+        hits = pdf[pdf["ts"].isin(pd.to_datetime(labels))]
+        _assert_cells_equal(got, dense_cube(hits, v))
+    assert (np.isfinite(got).any(axis=(0, 2, 3))).sum() > 1
+
+
+def test_cell_long_band_mask(spark):
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
-                        aggregation="mean", resampling="near",
-                        chunk_size=(4, 20, 20))
-    # footprints around the UTM 32N lon band so some cells land inside
-    import pandas as pd
+                        aggregation="mean", resampling="bilinear",
+                        chunk_size=(4, 50, 60))
+    imgs = _images(spark, 300, nch=3)
+    got = _assert_cell_long_matches_chunk_kernel(
+        imgs, v, mask=BandMask(channel=2, vmin=0.0, vmax=90.0))
+    assert np.isnan(got).sum() > np.isnan(_cube(imgs, v, "cell_long")).sum()
 
-    rng = np.random.RandomState(3)
-    n = 300
-    rows = []
-    for i in range(n):
-        lo = 6.0 + rng.rand() * 6.0
-        bo = 36.0 + rng.rand() * 5.0
-        rows.append((f"{i:06d}", float(lo), float(lo + 0.2 + rng.rand()),
-                     float(bo), float(bo + 0.2 + rng.rand()),
-                     dt.datetime(2020, 1, 1) + dt.timedelta(days=int(rng.randint(0, 360)))))
-    imgs = spark.createDataFrame(
-        rows, "image_id string, left double, right double, bottom double, "
-              "top double, ts timestamp")
-    os.environ["GDALCUBES_VEC_SCAN"] = "0"
-    try:
-        slow = _collect_sorted(
-            build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn))
-    finally:
-        os.environ["GDALCUBES_VEC_SCAN"] = "1"
-    fast = _collect_sorted(
-        build_cells_long(imgs, v, ("B1", "B2"), value_fn=vfn))
-    assert fast == slow and len(fast) > 0
+
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+def test_cell_long_file_mask_bytes(spark, resampling):
+    from gdalcubes_cpp_spark.codecs import encode_png
+
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation="mean", resampling=resampling,
+                        chunk_size=(4, 50, 60))
+    imgs = _images(spark, 300)
+    rng = np.random.RandomState(5)
+    # every third image has no mask file; the others a mask at their own size
+    mrows = [(f"{i:06d}", encode_png(rng.randint(0, 10, (int(rng.randint(2, 9)),
+                                                          int(rng.randint(2, 9)), 1)
+                                                 ).astype(np.uint8)), "png")
+             for i in range(300) if i % 3]
+    mtab = spark.createDataFrame(mrows, "image_id string, bytes binary, fmt string")
+    got = _assert_cell_long_matches_chunk_kernel(
+        imgs, v, mask=FileMask(values=[2, 5, 7]), mask_table=mtab)
+    assert np.isnan(got).sum() > np.isnan(_cube(imgs, v, "cell_long")).sum()
+
+
+@pytest.mark.parametrize("grid_max", [None, 0])
+@pytest.mark.parametrize("resampling", ["near", "bilinear"])
+def test_cell_long_utm_bytes(spark, monkeypatch, grid_max, resampling):
+    from gdalcubes_cpp_spark.operators import build
+
+    if grid_max is not None:
+        # above the lon/lat grid cache: point-wise inverse per batch
+        monkeypatch.setattr(build, "_LONLAT_GRID_MAX", grid_max)
+    v = CubeView.create(**_UTM, resampling=resampling)
+    _assert_cell_long_matches_chunk_kernel(_images(spark, 300, **_UTM_IMAGES), v)
 
 
 # ------------------------------------------- view-window pre-filter (JVM side)
@@ -233,115 +313,3 @@ def test_view_window_skips_labeled_and_other_srs():
                           bottom=4000000.0, top=4600000.0, nx=40, ny=40,
                           t0="2020-01-01", nt=2, dt="P1M")
     assert _view_window(labeled) is None and _view_window(utm) is None
-
-
-# ------------------------------------- fast == loop: the loop-only cases
-
-def _fast_and_loop(monkeypatch, build):
-    monkeypatch.setenv("GDALCUBES_VEC_SCAN", "0")
-    slow = _collect_sorted(build())
-    monkeypatch.setenv("GDALCUBES_VEC_SCAN", "1")
-    fast = _collect_sorted(build())
-    return fast, slow
-
-
-@pytest.mark.parametrize("srs,resampling", [
-    ("EPSG:4326", "bilinear"), ("EPSG:4326", "cubic"),
-    ("EPSG:4326", "average"), ("EPSG:4326", "mode"),
-    ("EPSG:3857", "average"),
-])
-def test_fast_equals_loop_resampling(spark, monkeypatch, srs, resampling):
-    from gdalcubes_cpp_spark import srs as _srs
-
-    ext = dict(left=-50.0, right=50.0, bottom=-40.0, top=40.0)
-    if srs == "EPSG:3857":
-        ext = dict(left=float(_srs.lon_to_x(-50.0)), right=float(_srs.lon_to_x(50.0)),
-                   bottom=float(_srs.lat_to_y(-40.0)), top=float(_srs.lat_to_y(40.0)))
-    # coarse enough that images span several cells and several pixels pool
-    # into one cell (the aggregating resamplers' regime)
-    v = CubeView.create(srs=srs, **ext, nx=60, ny=50,
-                        t0="2020-01-01", t1="2020-12-31", dt="P3M",
-                        aggregation="mean", resampling=resampling,
-                        chunk_size=(4, 25, 30))
-    imgs = _images(spark, 200)
-    fast, slow = _fast_and_loop(
-        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2")))
-    assert fast == slow and len(fast) > 0
-
-
-@pytest.mark.parametrize("value_fn", [False, True])
-def test_fast_equals_loop_labeled_axis(spark, monkeypatch, value_fn):
-    import pandas as pd
-
-    imgs = _images(spark, 300)
-    ts = sorted(r[0] for r in imgs.select("ts").collect())
-    # labels hit some image timestamps exactly, plus two that hit none
-    labels = [pd.Timestamp(t).to_pydatetime() for t in ts[::7]] + [
-        dt.datetime(2019, 6, 1), dt.datetime(2020, 6, 15, 0, 0, 1)]
-    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
-                        time_labels=labels, aggregation="mean",
-                        resampling="near", chunk_size=(4, 50, 60))
-    if value_fn:
-        imgs = imgs.drop("bytes")
-    kw = {"value_fn": lambda i: (float(int(i) % 97), float(int(i) % 89))} if value_fn else {}
-    fast, slow = _fast_and_loop(
-        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2"), **kw))
-    assert fast == slow and len(fast) > 0
-    assert len({r[0] for r in fast}) > 1
-
-
-def test_fast_equals_loop_band_mask(spark, monkeypatch):
-    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
-                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
-                        aggregation="mean", resampling="bilinear",
-                        chunk_size=(4, 50, 60))
-    imgs = _images(spark, 300, nch=3)
-    bm = BandMask(channel=2, vmin=0.0, vmax=90.0)
-    fast, slow = _fast_and_loop(
-        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2"), mask=bm))
-    plain = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
-    assert fast == slow and 0 < len(fast) < len(plain)
-
-
-@pytest.mark.parametrize("resampling", ["near", "bilinear"])
-def test_fast_equals_loop_file_mask_bytes(spark, monkeypatch, resampling):
-    from gdalcubes_cpp_spark.codecs import encode_png
-    from gdalcubes_cpp_spark.operators.build import join_mask_table
-
-    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
-                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
-                        aggregation="mean", resampling=resampling,
-                        chunk_size=(4, 50, 60))
-    imgs = _images(spark, 300)
-    rng = np.random.RandomState(5)
-    # every third image has no mask file; the others a mask at their own size
-    mrows = [(f"{i:06d}", encode_png(rng.randint(0, 10, (int(rng.randint(2, 9)),
-                                                          int(rng.randint(2, 9)), 1)
-                                                 ).astype(np.uint8)), "png")
-             for i in range(300) if i % 3]
-    mtab = spark.createDataFrame(mrows, "image_id string, bytes binary, fmt string")
-    joined = join_mask_table(imgs, mtab)
-    fm = FileMask(values=[2, 5, 7])
-    fast, slow = _fast_and_loop(
-        monkeypatch, lambda: build_cells_long(joined, v, ("B1", "B2"), mask=fm))
-    plain = _collect_sorted(build_cells_long(imgs, v, ("B1", "B2")))
-    assert fast == slow and 0 < len(fast) < len(plain)
-
-
-@pytest.mark.parametrize("grid_max", [None, 0])
-@pytest.mark.parametrize("resampling", ["near", "bilinear"])
-def test_fast_equals_loop_utm_bytes(spark, monkeypatch, grid_max, resampling):
-    from gdalcubes_cpp_spark.operators import build
-
-    if grid_max is not None:
-        # above the lon/lat grid cache: point-wise inverse per batch
-        monkeypatch.setattr(build, "_LONLAT_GRID_MAX", grid_max)
-    v = CubeView.create(srs="EPSG:32632", left=166021.0, right=766021.0,
-                        bottom=4000000.0, top=4600000.0, nx=40, ny=40,
-                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
-                        aggregation="mean", resampling=resampling,
-                        chunk_size=(4, 20, 20))
-    imgs = _images(spark, 300, lon0=6.0, lat0=36.0, lon_span=6.0, lat_span=5.0)
-    fast, slow = _fast_and_loop(
-        monkeypatch, lambda: build_cells_long(imgs, v, ("B1", "B2")))
-    assert fast == slow and len(fast) > 0

@@ -300,6 +300,28 @@ def test_file_mask_separate_file(spark):
         build_cube(imgs, v, bands=("B1",), mask=fm)
 
 
+@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
+def test_file_mask_bytes_rejects_value_fn(spark, strategy):
+    """A FileMask whose mask table carries bytes needs decoded mask planes;
+    the metadata value_fn path must refuse it instead of dropping the mask."""
+    import datetime as dt
+
+    from gdalcubes_cpp_spark import codecs
+    from gdalcubes_cpp_spark.operators.build import FileMask
+
+    imgs = spark.createDataFrame(
+        [("f0000", 0.0, 2.0, 0.0, 2.0, dt.datetime(2020, 1, 10))],
+        "image_id string, left double, right double, bottom double, top double, ts timestamp")
+    mtab = spark.createDataFrame(
+        [("f0000", codecs.encode_png(np.full((4, 4, 1), 3, np.uint8)), "png")],
+        "image_id string, bytes binary, fmt string")
+    v = CubeView.create(left=0.0, right=6.0, bottom=0.0, top=6.0, nx=24, ny=24,
+                        t0="2020-01-01", nt=1, dt="P1M", aggregation="mean")
+    with pytest.raises(ValueError, match="FileMask"):
+        build_cube(imgs, v, bands=("B1",), mask=FileMask(values=[3]),
+                   mask_table=mtab, value_fn=lambda i: (1.0,), strategy=strategy)
+
+
 def test_file_mask_metadata_value(spark):
     """FileMask metadata path (the cube_mask_file driver query's shape):
     a mask_value column models a constant mask plane — matching images
