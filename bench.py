@@ -228,7 +228,10 @@ def main() -> None:
     # 2000 chars of stdout, and the ~80-member dict overflowed that window
     # every round (BENCH_r05 'parsed' was null). The printed ONE JSON line
     # keeps the headline members + a pointer to the full table.
-    full = dict(common, queries=timings)
+    full = dict(common, statistic=(
+        "one bench.py suite run; images_pipeline and images_pipeline_codec "
+        "are the min of 2 in-run repeats, every other query is a single run"),
+        queries=timings)
     full_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
                              "BENCH", "bench_full.json")
     os.makedirs(os.path.dirname(full_path), exist_ok=True)

@@ -1133,9 +1133,8 @@ def _scan_batch(
     slots, cell windows, coordinates, the 'near' gather and every mask run
     once per BATCH over flattened (image, cell) arrays; only decode_fn (a
     real codec), value_fn (a user callable) and non-'near' warps stay per
-    image.
-    Rows come out image by image in input order, row-major within each
-    image — the order Spark's partial avg sums in.
+    image. Rows come out image by image in input order, row-major within
+    each image — the order Spark's partial avg sums in.
     """
     from .. import srs as _srs
 
