@@ -1012,8 +1012,8 @@ def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
 
 
 # a non-separable view's lon/lat grid is transformed once per scan task up
-# to this many cells (a few MB); larger views transform the scanned cell
-# centres point-wise per batch
+# to this many cells (two float64 grids: 256 MB at the limit); larger views
+# transform the scanned cell centres point-wise per batch
 _LONLAT_GRID_MAX = 16_000_000
 
 
@@ -1350,7 +1350,6 @@ def build_cells_long(
         raise ValueError(f"cell-long strategy supports {sorted(_LONG_AGGS)}")
     _check_mask(mask, value_fn, images.columns)
     file_mask = isinstance(mask, FileMask)
-    nb = len(bands)
     resampling = view.resampling
 
     # only first/last order by image_id; for every other aggregation the id
