@@ -1365,7 +1365,7 @@ def build_cells_long(
         cols += ["bytes", "fmt"]
     if file_mask:
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
-    # decided on the driver: the closure carries the flag to the workers
+    # decided at plan time: the scan closure carries the flag to the workers
     grid_ok = view.nx * view.ny <= _LONLAT_GRID_MAX
 
     def scan(batches):
