@@ -1011,12 +1011,6 @@ def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
     return np.floor(secs / dt.seconds).astype(np.int64)
 
 
-# a non-separable view's lon/lat grid is transformed once per scan task up
-# to this many cells (two float64 grids: 256 MB at the limit); larger views
-# transform the scanned cell centres point-wise per batch
-_LONLAT_GRID_MAX = 16_000_000
-
-
 def _decode_planes(decode, a_bytes, a_fmt, rows, chans):
     """Decode images ``rows`` and concatenate channels ``chans`` into one
     flat float64 buffer per channel; returns (bufs, Hs, Ws, offs), each
@@ -1124,7 +1118,7 @@ def _view_bbox(view: CubeView, srs_n: str, separable: bool, a_l, a_r, a_b, a_t):
 
 def _scan_batch(
     view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
-    LON_full, LAT_full, decode_fn, value_fn, mask, need_id: bool, band_names,
+    decode_fn, value_fn, mask, need_id: bool, band_names,
 ):
     """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows.
 
@@ -1212,17 +1206,18 @@ def _scan_batch(
     jx = j - jy * wxs[img]
     iy = iy0[sel][img] + jy
     ix = ix0[sel][img] + jx
-    if LON_full is not None:
-        flat_idx = iy * view.nx + ix
-        lon = np.ascontiguousarray(LON_full).ravel()[flat_idx]
-        lat = np.ascontiguousarray(LAT_full).ravel()[flat_idx]
+    # cell centres -> lon/lat, element-wise: axis transforms for separable
+    # views; otherwise the point inverse, once per distinct cell of the
+    # batch (overlapping footprints share cells)
+    if separable:
+        lon, lat = _srs.axis_to_wgs84(view.left + (ix + 0.5) * view.dx,
+                                      view.top - (iy + 0.5) * view.dy, view.srs)
     else:
-        # cell centres -> lon/lat, element-wise for every SRS (axis
-        # transforms for separable views, the point inverse otherwise)
-        xs = view.left + (ix + 0.5) * view.dx
-        ys = view.top - (iy + 0.5) * view.dy
-        to_wgs84 = _srs.axis_to_wgs84 if separable else _srs.points_to_wgs84
-        lon, lat = to_wgs84(xs, ys, view.srs)
+        inv, cells = pd.factorize(iy * view.nx + ix)
+        cy, cx = np.divmod(cells, view.nx)
+        lon, lat = _srs.points_to_wgs84(view.left + (cx + 0.5) * view.dx,
+                                        view.top - (cy + 0.5) * view.dy, view.srs)
+        lon, lat = lon[inv], lat[inv]
     # strict footprint membership (centers in [left,right)x(bottom,top])
     al, ar = a_l[sel][img], a_r[sel][img]
     ab, at_ = a_b[sel][img], a_t[sel][img]
@@ -1365,8 +1360,6 @@ def build_cells_long(
         cols += ["bytes", "fmt"]
     if file_mask:
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
-    # decided at plan time: the scan closure carries the flag to the workers
-    grid_ok = view.nx * view.ny <= _LONLAT_GRID_MAX
 
     def scan(batches):
         from .. import srs as _srs
@@ -1377,17 +1370,9 @@ def build_cells_long(
             raise ValueError(
                 f"aggregating resampler {resampling!r} needs a separable view SRS"
             )
-        LON_full = LAT_full = None
-        if not separable and grid_ok:
-            # ONE inverse transform of the whole view grid per task, then
-            # gather per cell — vs re-running the TM series per batch
-            # (150k images x 200 cells was 30s of per-image numpy overhead)
-            xs_f = view.left + (np.arange(view.nx) + 0.5) * view.dx
-            ys_f = view.top - (np.arange(view.ny) + 0.5) * view.dy
-            LON_full, LAT_full = _srs.grid_to_wgs84(xs_f, ys_f, view.srs)
         for pdf in batches:
-            yield _scan_batch(view, pdf, srs_n, separable, LON_full, LAT_full,
-                              decode_fn, value_fn, mask, need_id, bands)
+            yield _scan_batch(view, pdf, srs_n, separable, decode_fn, value_fn,
+                              mask, need_id, bands)
 
     schema = (
         "it int, iy int, ix int, "

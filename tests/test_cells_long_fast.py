@@ -2,12 +2,11 @@
 
 The scan handles every cell_long configuration in one batch-at-a-time
 path: regular and labeled time axes, all 12 resamplers, value-predicate,
-band and separate-file masks, separable and non-separable view SRS (with
-and without the per-task lon/lat grid). Each case is checked cell for
-cell against a reference: tests/oracle_np.dense_cube for EPSG:4326 byte
-payloads, build_cube(strategy="chunk_kernel") for metadata values, masks
-and other view SRS. (The ``test_fast_equals_loop_*`` names predate the
-single scan path; they compare against the same references.)
+band and separate-file masks, separable and non-separable view SRS. Each
+case is checked cell for cell against a reference:
+tests/oracle_np.dense_cube for EPSG:4326 byte payloads,
+build_cube(strategy="chunk_kernel") for metadata values, masks and other
+view SRS.
 """
 
 from __future__ import annotations
@@ -241,14 +240,8 @@ def test_cell_long_file_mask_bytes(spark, resampling):
     assert np.isnan(got).sum() > np.isnan(_cube(imgs, v, "cell_long")).sum()
 
 
-@pytest.mark.parametrize("grid_max", [None, 0])
 @pytest.mark.parametrize("resampling", ["near", "bilinear"])
-def test_cell_long_utm_bytes(spark, monkeypatch, grid_max, resampling):
-    from gdalcubes_cpp_spark.operators import build
-
-    if grid_max is not None:
-        # above the lon/lat grid cache: point-wise inverse per batch
-        monkeypatch.setattr(build, "_LONLAT_GRID_MAX", grid_max)
+def test_cell_long_utm_bytes(spark, resampling):
     v = CubeView.create(**_UTM, resampling=resampling)
     _assert_cell_long_matches_chunk_kernel(_images(spark, 300, **_UTM_IMAGES), v)
 
