@@ -1,42 +1,43 @@
-"""Cube construction: the fused decode → warp → temporal-aggregate kernel.
+"""Cube construction: the decode → warp → mask → temporal-aggregate path.
 
 Reimplements image_collection_cube::read_chunk (src/image_collection_cube.cpp:
-315-598) as ONE grouped-map pandas UDF over the st_join output:
+315-598). One per-batch cell step, _cell_step, turns image rows into the
+view cells they contribute:
+1. time slot per image (exact label match on labeled axes), and the
+   FileMask mask_value test;
+2. the cells whose centres lie in the footprint, [left,right)x(bottom,top]
+   (per axis for separable view SRS, per cell for the rest);
+3. decode ``bytes`` (numpy PNG / lossy-stub codec — GDAL's role), keeping
+   only the requested channels (the band-subset VRT analog,
+   src/image_collection_cube.cpp:431-455);
+4. "warp" (gdalwarp_client::warp, src/warp.cpp:57-300): cell centres →
+   EPSG:4326 → image pixel coordinates, sampled by any of the 12
+   RESAMPLERS (5 point kernels, 7 aggregating ones); outside → NaN;
+5. value/range, band and separate-file masks
+   (src/image_collection_cube.h:34-146, .cpp:519-579).
+It runs over flat (image, cell) arrays, so only decode, value_fn and
+non-'near' warps cost a Python call per image.
 
-    st_join(images, grid)  →  groupBy(chunk_id).applyInPandas(build_chunk)
+Two physical strategies aggregate those cells:
+- build_cells (chunk_kernel, salted, streaming ingest): st_join, then one
+  grouped-map pandas UDF per chunk (the reference's unit of parallelism,
+  src/cube.cpp:1703-1737) feeds the chunk's images in (image_id,
+  descriptor) order through the step and streams them into the
+  aggregation_state analogs (_Agg*, src/image_collection_cube.cpp:58-306):
+  mean/min/max/first/last/median/count_values/count_images/none; all-NaN
+  cells emit no row (sparse cube);
+- build_cells_long (cell_long): the step runs at the scan (_scan_batch)
+  and the temporal aggregation becomes a native groupBy over long rows.
 
-Per chunk (the reference's unit of parallelism, src/cube.cpp:1703-1737):
-1. rows arrive for every image intersecting the chunk; we sort by image_id —
-   the reference's (image_id, descriptor) order that makes AGG_FIRST/AGG_LAST
-   deterministic (src/image_collection_cube.cpp:327);
-2. decode ``bytes`` (numpy PNG / lossy-stub codec — GDAL's role), selecting
-   only requested bands (the band-subset VRT analog,
-   src/image_collection_cube.cpp:431-455 — here: channel slicing);
-3. "warp" (gdalwarp_client::warp, src/warp.cpp:57-300): view cell centres
-   → EPSG:4326 (srs.py; per axis for separable view SRS, per cell for the
-   rest) → image pixel coordinates, sampled by any of the 12 RESAMPLERS
-   (5 point kernels, 7 aggregating ones); cells outside the footprint → NaN;
-4. optional value/range mask (src/image_collection_cube.h:34-146);
-5. temporal aggregation across overlapping images per cell — streaming
-   aggregation_state semantics (src/image_collection_cube.cpp:58-306):
-   mean/min/max/first/last/median/count_values/count_images/none;
-6. all-NaN cells emit NO row (sparse cube; the all-NaN chunk → empty chunk
-   collapse of src/image_collection_cube.cpp:591-594 falls out for free).
-
-build_cells_long is the second physical strategy: the same decode → warp
-→ mask steps run vectorized over whole scan batches (_scan_batch), and the
-temporal aggregation becomes a native groupBy over long cell rows.
-
-Scale notes: the shuffle is one exchange keyed by chunk_id; hot chunks
-(many overlapping images — skewed cities) can optionally be pre-combined via
-``salt`` two-phase aggregation for the associative methods
+Scale notes: the chunk kernel's shuffle is one exchange keyed by chunk_id;
+hot chunks (many overlapping images — skewed cities) can be pre-combined
+via ``salt`` two-phase aggregation for the associative methods
 (mean/min/max/count_*), which bounds any single task's input. Median/first/
 last need total order and run unsalted (documented skew limit).
 """
 
 from __future__ import annotations
 
-import math
 from typing import Callable
 
 import numpy as np
@@ -462,15 +463,16 @@ def warp_plane_agg(
 
 class _Agg:
     """init/touch/update/finalize over (nb, nt, ny, nx), one image at a
-    time. ``update(img, it, ys, xs)`` receives only the image's covered
-    WINDOW (img: (nb, wy, wx); ys/xs: the window's slices in the chunk
-    plane): per-image cost is O(footprint area), not O(chunk area) — with
-    the hotspot-skewed collection, full-plane updates made the hot chunk's
-    kernel task scan ~the whole chunk per tiny image and that single task
-    floored wall clock at every parallelism level. ``touch(it)`` fires for
-    EVERY image assigned to the slot, covered cells or not — the semantics
-    that are plane-wide per image (count_images' +1, count_values' and
-    AGG_NONE's plane flip) live there, so empty-window images still count."""
+    time. ``update(vals, it, iy, ix)`` receives only the cells the image
+    covers, as flat chunk-local indices (vals: (nb, n); iy/ix: (n,)): the
+    per-image cost is O(cells covered), not O(chunk area) — with the
+    hotspot-skewed collection, full-plane updates made the hot chunk's
+    kernel task scan ~the whole chunk per tiny image. No cell repeats within
+    one image, so fancy-indexed ``+=`` and writes are exact. ``touch(it)``
+    fires for EVERY image assigned to the slot, covered cells or not — the
+    semantics that are plane-wide per image (count_images' +1,
+    count_values' and AGG_NONE's plane flip) live there, so images that
+    cover no cell still count."""
 
     def __init__(self, shape):
         self.shape = shape
@@ -478,7 +480,7 @@ class _Agg:
     def touch(self, it: int):
         pass
 
-    def update(self, img: np.ndarray, it: int, ys: slice, xs: slice):
+    def update(self, vals: np.ndarray, it: int, iy: np.ndarray, ix: np.ndarray):
         raise NotImplementedError
 
     def finalize(self) -> np.ndarray:
@@ -491,10 +493,10 @@ class _AggMean(_Agg):
         self.sum = np.zeros(shape)
         self.cnt = np.zeros(shape, dtype=np.int64)
 
-    def update(self, img, it, ys, xs):
-        m = ~np.isnan(img)
-        self.sum[:, it, ys, xs][m] += img[m]
-        self.cnt[:, it, ys, xs][m] += 1
+    def update(self, vals, it, iy, ix):
+        b, c = np.nonzero(~np.isnan(vals))
+        self.sum[b, it, iy[c], ix[c]] += vals[b, c]
+        self.cnt[b, it, iy[c], ix[c]] += 1
 
     def finalize(self):
         with np.errstate(invalid="ignore"):
@@ -508,8 +510,8 @@ class _AggMinMax(_Agg):
         self.acc = np.full(shape, np.nan)
         self.fn = fn
 
-    def update(self, img, it, ys, xs):
-        self.acc[:, it, ys, xs] = self.fn(self.acc[:, it, ys, xs], img)
+    def update(self, vals, it, iy, ix):
+        self.acc[:, it, iy, ix] = self.fn(self.acc[:, it, iy, ix], vals)
 
     def finalize(self):
         return self.acc
@@ -521,13 +523,12 @@ class _AggFirstLast(_Agg):
         self.acc = np.full(shape, np.nan)
         self.first = first
 
-    def update(self, img, it, ys, xs):
-        win = self.acc[:, it, ys, xs]
+    def update(self, vals, it, iy, ix):
+        win = self.acc[:, it, iy, ix]
+        take = ~np.isnan(vals)
         if self.first:
-            take = np.isnan(win) & ~np.isnan(img)
-        else:
-            take = ~np.isnan(img)
-        win[take] = img[take]
+            take &= np.isnan(win)
+        self.acc[:, it, iy, ix] = np.where(take, vals, win)
 
     def finalize(self):
         return self.acc
@@ -544,8 +545,8 @@ class _AggNone(_AggFirstLast):
     def touch(self, it):
         self.acc[:, it] = np.nan
 
-    def update(self, img, it, ys, xs):
-        self.acc[:, it, ys, xs] = img  # overwrite incl. NaN in the window
+    def update(self, vals, it, iy, ix):
+        self.acc[:, it, iy, ix] = vals  # overwrite incl. NaN bands
 
 
 class _AggCountValues(_Agg):
@@ -561,8 +562,8 @@ class _AggCountValues(_Agg):
     def touch(self, it):
         self.hit[it] = True
 
-    def update(self, img, it, ys, xs):
-        self.cnt[:, it, ys, xs] += ~np.isnan(img)
+    def update(self, vals, it, iy, ix):
+        self.cnt[:, it, iy, ix] += ~np.isnan(vals)
 
     def finalize(self):
         out = self.cnt.copy()
@@ -582,7 +583,7 @@ class _AggCountImages(_Agg):
     def touch(self, it):
         self.n[it] += 1
 
-    def update(self, img, it, ys, xs):
+    def update(self, vals, it, iy, ix):
         pass
 
     def finalize(self):
@@ -594,43 +595,32 @@ class _AggCountImages(_Agg):
 
 class _AggMedian(_Agg):
     """per-cell value buckets, exact median, avg-of-two-middles for even n
-    (src/image_collection_cube.cpp:112-152). Windows are buffered sparse
-    and re-expanded per slot at finalize."""
+    (src/image_collection_cube.cpp:112-152). Each image's flat cells are
+    buffered and expanded into per-image planes only at finalize, one slot
+    at a time."""
 
     def __init__(self, shape):
         super().__init__(shape)
         self.buf: list = [[] for _ in range(shape[1])]  # per time slot
 
-    def update(self, img, it, ys, xs):
-        self.buf[it].append((img.copy(), ys, xs))
+    def update(self, vals, it, iy, ix):
+        self.buf[it].append((vals, iy, ix))
 
     def finalize(self):
         nb, _nt, ny, nx = self.shape
         out = np.full(self.shape, np.nan)
         for it, stack in enumerate(self.buf):
             if stack:
-                planes = []
-                for img, ys, xs in stack:
-                    p = np.full((nb, ny, nx), np.nan)
-                    p[:, ys, xs] = img
-                    planes.append(p)
+                planes = np.full((len(stack), nb, ny, nx), np.nan)
+                for p, (vals, iy, ix) in zip(planes, stack):
+                    p[:, iy, ix] = vals
                 with np.errstate(all="ignore"):
-                    out[:, it] = np.nanmedian(np.stack(planes), axis=0)
+                    out[:, it] = np.nanmedian(planes, axis=0)
         return out
 
 
-class _AggSumCount(_Agg):
+class _AggSumCount(_AggMean):
     """Partial state for salted/distributed MEAN: (sum, count) planes."""
-
-    def __init__(self, shape):
-        super().__init__(shape)
-        self.sum = np.zeros(shape)
-        self.cnt = np.zeros(shape)
-
-    def update(self, img, it, ys, xs):
-        m = ~np.isnan(img)
-        self.sum[:, it, ys, xs][m] += img[m]
-        self.cnt[:, it, ys, xs][m] += 1
 
     def finalize(self):
         # (2*nb, nt, ny, nx): [b1_sum..bn_sum, b1_cnt..bn_cnt]
@@ -697,6 +687,11 @@ def build_cells(
 ) -> DataFrame:
     """st_join output -> sparse wide cube cells (chunk_id, it, iy, ix, B*).
 
+    One grouped-map pandas UDF per chunk: the chunk's images, sorted into
+    the reference's (image_id, descriptor) order, go through _cell_step
+    (decode → warp → mask, restricted to the chunk) at most _STEP_IMAGES
+    at a time, then stream image by image into the aggregation state.
+
     ``value_fn(image_id_array) -> (nb,) scalars`` replaces decode+warp with a
     constant per image — the metadata-only path used by the SQL oracle
     (DuckDB can reproduce a formula, not a PNG decode; pixel-level decode
@@ -704,7 +699,6 @@ def build_cells(
     """
     grid = ChunkGrid(view)
     nb = len(bands)
-    resampling = view.resampling
     _check_mask(mask, value_fn, joined.columns)
     file_mask = isinstance(mask, FileMask)
     agg_method = agg_override or view.aggregation
@@ -718,31 +712,8 @@ def build_cells(
 
         cid = int(pdf["chunk_id"].iloc[0])
         (it0, it1), (iy0, iy1), (ix0, ix1) = grid.chunk_limits(cid)
-        nt_c, ny_c, nx_c = it1 - it0, iy1 - iy0, ix1 - ix0
-        xs = view.left + (np.arange(ix0, ix1) + 0.5) * view.dx
-        ys = view.top - (np.arange(iy0, iy1) + 0.5) * view.dy
-        # footprints/pixels live in EPSG:4326; sample at the cell centers
-        # expressed in 4326 (warp.cpp's SRS transform step). Separable SRS
-        # (4326/3857): 1-D axis vectors transform independently. Non-
-        # separable (UTM): 2-D lon/lat grids, per-cell membership masks.
-        separable = _srs.is_separable(view.srs)
-        if separable:
-            xs, ys = _srs.axis_to_wgs84(xs, ys, view.srs)
-            x_edges, y_edges = _srs.axis_to_wgs84(
-                view.left + np.arange(ix0, ix1 + 1) * view.dx,
-                view.top - np.arange(iy0, iy1 + 1) * view.dy,
-                view.srs,
-            )
-            LON = LAT = None
-        else:
-            if resampling in AGG_RESAMPLERS:
-                raise ValueError(
-                    f"aggregating resampler {resampling!r} needs a separable "
-                    f"view SRS (cells are not rectangles in 4326)"
-                )
-            LON, LAT = _srs.grid_to_wgs84(xs, ys, view.srs)
-            x_edges = y_edges = None
-
+        srs_n = _srs.normalize(view.srs)
+        separable = _srs.is_separable(srs_n)
         # reference (image_id, descriptor) order, numerically: sort by
         # (len, id) — equals numeric order for fixed-prefix decimal ids of
         # ANY length, not just zero-padded ones (first/last determinism,
@@ -750,118 +721,19 @@ def build_cells(
         pdf = pdf.assign(_idlen=pdf["image_id"].str.len()).sort_values(
             ["_idlen", "image_id"], kind="mergesort"
         ).drop(columns=["_idlen"])
-        agg = _make_agg(agg_method, (nb, nt_c, ny_c, nx_c))
-        # pull columns once — pandas row access inside the loop is ~100x slower
-        a_ts = pdf["ts"].to_numpy()
-        a_l = pdf["left"].to_numpy()
-        a_r = pdf["right"].to_numpy()
-        a_b = pdf["bottom"].to_numpy()
-        a_t = pdf["top"].to_numpy()
-        a_id = pdf["image_id"].to_numpy()
-        if value_fn is None:
-            a_bytes = pdf["bytes"].to_numpy()
-            a_fmt = pdf["fmt"].to_numpy()
-        a_mb = pdf["m_bytes"].to_numpy() if "m_bytes" in pdf.columns else None
-        a_mf = pdf["m_fmt"].to_numpy() if "m_fmt" in pdf.columns else None
-        a_mv = pdf["m_val"].to_numpy() if "m_val" in pdf.columns else None
-        for k in range(len(pdf)):
-            itg = view.slot_index_of(pd.Timestamp(a_ts[k]).to_pydatetime())
-            itl = itg - it0
-            if itl < 0 or itl >= nt_c:
-                continue  # src/image_collection_cube.cpp:412-414
-            if file_mask and a_mv is not None and mask.test_scalar(a_mv[k]):
-                continue  # constant mask plane masks the whole footprint
-            img_bounds = (a_l[k], a_r[k], a_b[k], a_t[k])
-            # plane-wide-per-image semantics (count_images' +1, the plane
-            # flips of count_values/AGG_NONE) fire for EVERY slot image
-            agg.touch(itl)
-            sub = None
-            if separable:
-                # restrict ALL work to the footprint's cell sub-window:
-                # cells with centers outside [left,right)x(bottom,top] can
-                # never receive a value, so touching the full chunk plane
-                # per image is O(chunk_area) waste (the reference crops the
-                # VRT the same way, src/image_collection_cube.cpp:456-470)
-                jx = np.nonzero((xs >= a_l[k]) & (xs < a_r[k]))[0]
-                jy = np.nonzero((ys > a_b[k]) & (ys <= a_t[k]))[0]
-                if len(jx) and len(jy):
-                    y0, y1 = jy[0], jy[-1] + 1
-                    x0, x1 = jx[0], jx[-1] + 1
-                    sub = np.full((nb, y1 - y0, x1 - x0), np.nan)
-                    if value_fn is not None:
-                        # 'near'-coverage of a constant plane reduces to the
-                        # covered cell rectangle — no raster math
-                        vals = value_fn(a_id[k])
-                        for b in range(nb):
-                            sub[b] = vals[b]
-                    else:
-                        raw = decode_fn(a_bytes[k], a_fmt[k])
-                        for b in range(nb):
-                            sub[b] = warp_plane(
-                                raw[:, :, b], img_bounds,
-                                xs[x0:x1], ys[y0:y1], resampling,
-                                **(
-                                    {"x_edges": x_edges[x0:x1 + 1],
-                                     "y_edges": y_edges[y0:y1 + 1]}
-                                    if resampling in AGG_RESAMPLERS else {}
-                                ),
-                            )
-                        if file_mask:
-                            if a_mb is not None and a_mb[k] is not None:
-                                mraw = (mask.decode_fn or default_decode)(a_mb[k], a_mf[k])
-                                mp = warp_plane(
-                                    mraw[:, :, mask.channel], img_bounds,
-                                    xs[x0:x1], ys[y0:y1], "near",
-                                )
-                                sub[:, mask.test(mp)] = np.nan
-                        elif isinstance(mask, BandMask):
-                            mp = warp_plane(
-                                raw[:, :, mask.channel], img_bounds,
-                                xs[x0:x1], ys[y0:y1], "near",
-                            )
-                            sub[:, mask.test(mp)] = np.nan
-            else:
-                # non-separable view SRS: 2-D membership mask, then a 2-D
-                # gather restricted to the mask's bounding window
-                m2 = (LON >= a_l[k]) & (LON < a_r[k]) & (LAT > a_b[k]) & (LAT <= a_t[k])
-                if m2.any():
-                    myy, mxx = np.nonzero(m2)
-                    y0, y1 = myy.min(), myy.max() + 1
-                    x0, x1 = mxx.min(), mxx.max() + 1
-                    wm = m2[y0:y1, x0:x1]
-                    sub = np.full((nb, y1 - y0, x1 - x0), np.nan)
-                    if value_fn is not None:
-                        vals = value_fn(a_id[k])
-                        for b in range(nb):
-                            sub[b][wm] = vals[b]
-                    else:
-                        raw = decode_fn(a_bytes[k], a_fmt[k])
-                        for b in range(nb):
-                            warped = warp_plane(
-                                raw[:, :, b], img_bounds,
-                                LON[y0:y1, x0:x1], LAT[y0:y1, x0:x1], resampling,
-                            )
-                            sub[b][wm] = warped[wm]
-                        if file_mask:
-                            if a_mb is not None and a_mb[k] is not None:
-                                mraw = (mask.decode_fn or default_decode)(a_mb[k], a_mf[k])
-                                mp = warp_plane(
-                                    mraw[:, :, mask.channel], img_bounds,
-                                    LON[y0:y1, x0:x1], LAT[y0:y1, x0:x1], "near",
-                                )
-                                sub[:, mask.test(mp)] = np.nan
-                        elif isinstance(mask, BandMask):
-                            mp = warp_plane(
-                                raw[:, :, mask.channel], img_bounds,
-                                LON[y0:y1, x0:x1], LAT[y0:y1, x0:x1], "near",
-                            )
-                            sub[:, mask.test(mp)] = np.nan
-            if sub is not None:
-                if mask is not None and not isinstance(mask, BandMask):
-                    m = mask.apply(sub)
-                    sub[:, m] = np.nan
-                agg.update(sub, itl, slice(y0, y1), slice(x0, x1))
-
+        agg = _make_agg(agg_method, (nb, it1 - it0, iy1 - iy0, ix1 - ix0))
+        for s in range(0, len(pdf), _STEP_IMAGES):
+            slot, row, iy, ix, V = _cell_step(
+                view, pdf.iloc[s:s + _STEP_IMAGES], srs_n, separable, decode_fn,
+                value_fn, mask, nb, (it0, it1, iy0, iy1, ix0, ix1))
+            seg = np.searchsorted(row, np.arange(len(slot) + 1))
+            for k in np.nonzero(slot >= 0)[0]:
+                # plane-wide-per-image semantics (count_images' +1, the plane
+                # flips of count_values/AGG_NONE) fire for EVERY slot image
+                agg.touch(slot[k] - it0)
+                a, e = seg[k], seg[k + 1]
+                if e > a:
+                    agg.update(V[:, a:e], slot[k] - it0, iy[a:e] - iy0, ix[a:e] - ix0)
         cube = agg.finalize()  # (len(out_bands), nt_c, ny_c, nx_c)
         keep = ~np.isnan(cube).all(axis=0)
         if not keep.any():
@@ -975,13 +847,12 @@ def build_cells_salted(
 
 
 # ---------------------------------------------------------------------------
-# alternative physical strategy: decode-at-scan + JVM-side aggregation
+# the decode → warp → mask cell step both strategies share
 # ---------------------------------------------------------------------------
 
-# aggregations whose per-cell form is a plain groupBy aggregate over
-# (image, cell, value) rows; 'none'/'count_images' keep the chunk kernel
-# ('none' is overwrite-including-NaN, 'count_images' is plane-broadcast)
-_LONG_AGGS = {"mean", "min", "max", "first", "last", "median"}
+# images per _cell_step call in the chunk kernel: the scan's Arrow batch
+# size (session.py), so a hot chunk's transient flat arrays stay bounded
+_STEP_IMAGES = 256
 
 
 def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
@@ -1082,29 +953,15 @@ def _warp_cells(view, bufs, Hs, Ws, offs, bounds, win, img, iy, ix, lon, lat):
     return V
 
 
-def _view_bbox(view: CubeView, srs_n: str, separable: bool, a_l, a_r, a_b, a_t):
-    """Footprint bboxes (EPSG:4326) -> view-coord (left, right, bottom, top)
-    arrays for the cell-window math: exact for separable SRS, conservative
-    otherwise."""
+def _view_bbox(view: CubeView, srs_n: str, a_l, a_r, a_b, a_t):
+    """Footprint bboxes (EPSG:4326) -> CONSERVATIVE view-coord (left, right,
+    bottom, top) arrays in a non-separable view SRS (UTM): the 4 corners +
+    4 edge midpoints of every footprint (one vectorized transform per
+    batch), padded by one view cell + the TM chord-sagitta bound; the
+    per-cell membership test refines exactly, so over-coverage only costs
+    a few extra masked cells."""
     from .. import srs as _srs
 
-    if srs_n == "EPSG:4326":
-        return a_l, a_r, a_b, a_t
-    if srs_n == "EPSG:3857":
-        # monotonic per axis: corners map exactly
-        return (_srs.lon_to_x(a_l), _srs.lon_to_x(a_r),
-                _srs.lat_to_y(a_b), _srs.lat_to_y(a_t))
-    if separable:
-        # remaining separable family (CEA / EASE-Grid 2.0): x depends only
-        # on lon and y only on lat, so footprint corners map EXACTLY
-        v_l, v_b = _srs.from_wgs84(a_l, a_b, srs_n)
-        v_r, v_t = _srs.from_wgs84(a_r, a_t, srs_n)
-        return v_l, v_r, v_b, v_t
-    # non-separable (UTM): CONSERVATIVE bbox from the 4 corners + 4 edge
-    # midpoints of every footprint (one vectorized transform per batch),
-    # padded by one view cell + the TM chord-sagitta bound; the per-cell
-    # membership test refines exactly, so over-coverage only costs a few
-    # extra masked cells
     mx_ = (a_l + a_r) / 2.0
     my_ = (a_b + a_t) / 2.0
     pls = np.stack([a_l, a_l, a_r, a_r, mx_, mx_, a_l, a_r])
@@ -1116,89 +973,84 @@ def _view_bbox(view: CubeView, srs_n: str, separable: bool, a_l, a_r, a_b, a_t):
             py.min(axis=0) - pad_y, py.max(axis=0) + pad_y)
 
 
-def _scan_batch(
-    view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
-    decode_fn, value_fn, mask, need_id: bool, band_names,
-):
-    """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows.
+def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
+               decode_fn, value_fn, mask, nb: int, window: tuple):
+    """One batch of image rows -> the cells they contribute inside
+    ``window`` = (it0, it1, iy0, iy1, ix0, ix1), global and end-exclusive.
+
+    Returns (slot, row, iy, ix, V). ``slot`` has one entry per pdf row: the
+    row's global time slot, or -1 where the slot lies outside the window
+    or a FileMask mask_value masks the image; it is decided before any
+    cell test, so an image that covers no cell keeps its slot. The rest is
+    flat per cell, image by image in pdf order and row-major within an
+    image: the pdf row, global iy/ix and V (nb, n) float64. Cells NaN in
+    every band are dropped.
 
     A per-image loop spends ~30 small numpy calls per image — at 200k
     images that Python overhead dwarfs the actual arithmetic. Here time
     slots, cell windows, coordinates, the 'near' gather and every mask run
     once per BATCH over flattened (image, cell) arrays; only decode_fn (a
     real codec), value_fn (a user callable) and non-'near' warps stay per
-    image. Rows come out image by image in input order, row-major within
-    each image — the order Spark's partial avg sums in.
+    image.
     """
     from .. import srs as _srs
 
     def col(c):
         return pdf[c].to_numpy() if c in pdf.columns else None
 
-    nb = len(band_names)
+    if not separable and view.resampling in AGG_RESAMPLERS:
+        raise ValueError(
+            f"aggregating resampler {view.resampling!r} needs a separable view "
+            f"SRS (cells are not rectangles in 4326)")
+    it0, it1, wy0, wy1, wx0, wx1 = window
     a_l, a_r = col("left"), col("right")
     a_b, a_t = col("bottom"), col("top")
     a_id, a_mb, a_mv = col("image_id"), col("m_bytes"), col("m_val")
-    itg = _vec_time_slots(col("ts"), view)
-    v_l, v_r, v_b, v_t = _view_bbox(view, srs_n, separable, a_l, a_r, a_b, a_t)
-    empty = pd.DataFrame(
-        {"it": pd.Series([], dtype="int32"),
-         "iy": pd.Series([], dtype="int32"),
-         "ix": pd.Series([], dtype="int32"),
-         **({"image_id": pd.Series([], dtype="object")} if need_id else {}),
-         **{f"v_{b}": pd.Series([], dtype="float64") for b in band_names}}
-    )
     file_mask = isinstance(mask, FileMask)
     band_mask = isinstance(mask, BandMask) and not file_mask
-    valid = (itg >= 0) & (itg < view.nt)
+    slot = _vec_time_slots(col("ts"), view)
+    valid = (slot >= it0) & (slot < it1)  # src/image_collection_cube.cpp:412-414
     if file_mask and a_mv is not None:
+        # a constant mask plane masks the whole footprint
         mv = pd.to_numeric(pd.Series(a_mv), errors="coerce").to_numpy(np.float64)
         with np.errstate(invalid="ignore"):
             mk = mask.test(mv)
         valid &= ~(mk & ~np.isnan(mv))  # None/NaN never masks (test_scalar)
-    # covered global cell windows (separable: center-inside; non-separable:
-    # conservative bbox)
+    slot = np.where(valid, slot, -1)
+    none = np.empty(0, np.int64)
+    no_cells = (slot, none, none, none, np.empty((nb, 0)))
+    if not valid.any():
+        return no_cells
+    # covered cell windows. Separable: exact — the window's lon/lat axes
+    # are monotone, so the centres in [left,right)x(bottom,top] are one
+    # searchsorted per edge (the reference crops the VRT the same way,
+    # src/image_collection_cube.cpp:456-470). Otherwise a conservative
+    # bbox that the per-cell membership test below refines.
     if separable:
-        ix0 = np.maximum(0, np.ceil((v_l - view.left) / view.dx - 0.5).astype(np.int64))
-        ix1 = np.minimum(view.nx, np.floor((v_r - view.left) / view.dx - 0.5).astype(np.int64) + 1)
-        iy0 = np.maximum(0, np.ceil((view.top - v_t) / view.dy - 0.5).astype(np.int64))
-        iy1 = np.minimum(view.ny, np.floor((view.top - v_b) / view.dy - 0.5).astype(np.int64) + 1)
+        lon_ax, lat_ax = _srs.axis_to_wgs84(
+            view.left + (np.arange(wx0, wx1) + 0.5) * view.dx,
+            view.top - (np.arange(wy0, wy1) + 0.5) * view.dy, view.srs)
+        ix0 = wx0 + np.searchsorted(lon_ax, a_l, "left")
+        ix1 = wx0 + np.searchsorted(lon_ax, a_r, "left")
+        lat_up = lat_ax[::-1]  # latitude descends with iy
+        iy0 = wy1 - np.searchsorted(lat_up, a_t, "right")
+        iy1 = wy1 - np.searchsorted(lat_up, a_b, "right")
     else:
-        ix0 = np.maximum(0, np.floor((v_l - view.left) / view.dx).astype(np.int64))
-        ix1 = np.minimum(view.nx, np.ceil((v_r - view.left) / view.dx).astype(np.int64))
-        iy0 = np.maximum(0, np.floor((view.top - v_t) / view.dy).astype(np.int64))
-        iy1 = np.minimum(view.ny, np.ceil((view.top - v_b) / view.dy).astype(np.int64))
+        v_l, v_r, v_b, v_t = _view_bbox(view, srs_n, a_l, a_r, a_b, a_t)
+        ix0 = np.maximum(wx0, np.floor((v_l - view.left) / view.dx).astype(np.int64))
+        ix1 = np.minimum(wx1, np.ceil((v_r - view.left) / view.dx).astype(np.int64))
+        iy0 = np.maximum(wy0, np.floor((view.top - v_t) / view.dy).astype(np.int64))
+        iy1 = np.minimum(wy1, np.ceil((view.top - v_b) / view.dy).astype(np.int64))
     wx = ix1 - ix0
     wy = iy1 - iy0
-    valid &= (wx > 0) & (wy > 0)
-    if not valid.any():
-        return empty
-    sel = np.nonzero(valid)[0]
-    # per-image payloads: the codec / user fn calls
-    if value_fn is not None:
-        vals = np.asarray([value_fn(i)[:nb] for i in a_id[sel]], dtype=np.float64)
-    else:
-        chans = list(range(nb)) + ([mask.channel] if band_mask else [])
-        bufs, Hs, Ws, offs = _decode_planes(
-            decode_fn, col("bytes"), col("fmt"), sel, chans)
-        has_m = None
-        if file_mask and a_mb is not None:
-            # the mask file: its own bytes, its own (H, W); images without a
-            # mask row pass unmasked
-            has_m = np.asarray([a_mb[k] is not None for k in sel], dtype=bool)
-            mbufs, mH, mW, moff = _decode_planes(
-                mask.decode_fn or default_decode, a_mb, col("m_fmt"), sel[has_m],
-                [mask.channel])
-            mHs, mWs = np.ones(len(sel), np.int64), np.ones(len(sel), np.int64)
-            moffs = np.zeros(len(sel), np.int64)
-            mHs[has_m], mWs[has_m], moffs[has_m] = mH, mW, moff
+    sel = np.nonzero(valid & (wx > 0) & (wy > 0))[0]
+    if not len(sel):
+        return no_cells
     # flatten (image, cell) windows: row-major within each image, images in
     # input order
     wxs, wys = wx[sel], wy[sel]
     counts = wxs * wys
     total = int(counts.sum())
-    if total == 0:
-        return empty
     img = np.repeat(np.arange(len(sel)), counts)
     start = np.concatenate(([0], np.cumsum(counts)[:-1]))
     j = np.arange(total) - start[img]
@@ -1206,29 +1058,34 @@ def _scan_batch(
     jx = j - jy * wxs[img]
     iy = iy0[sel][img] + jy
     ix = ix0[sel][img] + jx
-    # cell centres -> lon/lat, element-wise: axis transforms for separable
-    # views; otherwise the point inverse, once per distinct cell of the
-    # batch (overlapping footprints share cells)
     if separable:
-        lon, lat = _srs.axis_to_wgs84(view.left + (ix + 0.5) * view.dx,
-                                      view.top - (iy + 0.5) * view.dy, view.srs)
+        lon, lat = lon_ax[ix - wx0], lat_ax[iy - wy0]
     else:
+        # point inverse once per distinct cell centre of the batch
+        # (overlapping footprints share cells), then strict membership
         inv, cells = pd.factorize(iy * view.nx + ix)
         cy, cx = np.divmod(cells, view.nx)
         lon, lat = _srs.points_to_wgs84(view.left + (cx + 0.5) * view.dx,
                                         view.top - (cy + 0.5) * view.dy, view.srs)
         lon, lat = lon[inv], lat[inv]
-    # strict footprint membership (centers in [left,right)x(bottom,top])
-    al, ar = a_l[sel][img], a_r[sel][img]
-    ab, at_ = a_b[sel][img], a_t[sel][img]
-    m = (lon >= al) & (lon < ar) & (lat > ab) & (lat <= at_)
-    if not m.any():
-        return empty
-    img, iy, ix, lon, lat = img[m], iy[m], ix[m], lon[m], lat[m]
-    al, at_ = al[m], at_[m]
+        m = ((lon >= a_l[sel][img]) & (lon < a_r[sel][img])
+             & (lat > a_b[sel][img]) & (lat <= a_t[sel][img]))
+        if not m.any():
+            return no_cells
+        img, iy, ix, lon, lat = img[m], iy[m], ix[m], lon[m], lat[m]
+        # only images that kept a cell get decoded
+        used = np.zeros(len(sel), dtype=bool)
+        used[img] = True
+        sel, img = sel[used], (np.cumsum(used) - 1)[img]
+    al, at_ = a_l[sel][img], a_t[sel][img]
+    # per-image payloads: the codec / user fn calls
     if value_fn is not None:
+        vals = np.asarray([value_fn(i)[:nb] for i in a_id[sel]], dtype=np.float64)
         V = [vals[img, b] for b in range(nb)]
     else:
+        chans = list(range(nb)) + ([mask.channel] if band_mask else [])
+        bufs, Hs, Ws, offs = _decode_planes(
+            decode_fn, col("bytes"), col("fmt"), sel, chans)
         bounds = (a_l[sel], a_r[sel], a_b[sel], a_t[sel])
         if view.resampling == "near" or band_mask:
             lin, m_in = _near_index(*bounds, Hs, Ws, offs, img, lon, lat, al, at_)
@@ -1243,9 +1100,19 @@ def _scan_batch(
         mp = None
         if band_mask:
             mp = _gather(bufs[nb], lin, m_in)
-        elif has_m is not None and has_m.any():
-            mlin, mm_in = _near_index(*bounds, mHs, mWs, moffs, img, lon, lat, al, at_)
-            mp = _gather(mbufs[0], mlin, mm_in & has_m[img])
+        elif file_mask and a_mb is not None:
+            # the mask file: its own bytes, its own (H, W); images without a
+            # mask row pass unmasked
+            has_m = np.asarray([a_mb[k] is not None for k in sel], dtype=bool)
+            if has_m.any():
+                mbufs, mH, mW, moff = _decode_planes(
+                    mask.decode_fn or default_decode, a_mb, col("m_fmt"),
+                    sel[has_m], [mask.channel])
+                mHs, mWs = np.ones(len(sel), np.int64), np.ones(len(sel), np.int64)
+                moffs = np.zeros(len(sel), np.int64)
+                mHs[has_m], mWs[has_m], moffs[has_m] = mH, mW, moff
+                mlin, mm_in = _near_index(*bounds, mHs, mWs, moffs, img, lon, lat, al, at_)
+                mp = _gather(mbufs[0], mlin, mm_in & has_m[img])
         if mp is not None:
             mk = mask.test(mp)
             if mk.any():
@@ -1256,17 +1123,39 @@ def _scan_batch(
             V = [np.where(mk, np.nan, vb) for vb in V]
     A = np.stack(V)
     keep = ~np.isnan(A).all(axis=0)
-    if not keep.any():
-        return empty
+    return slot, sel[img[keep]], iy[keep], ix[keep], A[:, keep]
+
+
+# ---------------------------------------------------------------------------
+# alternative physical strategy: decode-at-scan + JVM-side aggregation
+# ---------------------------------------------------------------------------
+
+# aggregations whose per-cell form is a plain groupBy aggregate over
+# (image, cell, value) rows; 'none'/'count_images' keep the chunk kernel
+# ('none' is overwrite-including-NaN, 'count_images' is plane-broadcast)
+_LONG_AGGS = {"mean", "min", "max", "first", "last", "median"}
+
+
+def _scan_batch(
+    view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
+    decode_fn, value_fn, mask, need_id: bool, band_names,
+):
+    """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows:
+    _cell_step over the whole view. Rows come out image by image in input
+    order, row-major within each image — the order Spark's partial avg
+    sums in."""
+    slot, row, iy, ix, V = _cell_step(
+        view, pdf, srs_n, separable, decode_fn, value_fn, mask,
+        len(band_names), (0, view.nt, 0, view.ny, 0, view.nx))
     out = {
-        "it": itg[sel][img][keep].astype(np.int32),
-        "iy": iy[keep].astype(np.int32),
-        "ix": ix[keep].astype(np.int32),
+        "it": slot[row].astype(np.int32),
+        "iy": iy.astype(np.int32),
+        "ix": ix.astype(np.int32),
     }
     if need_id:
-        out["image_id"] = a_id[sel][img][keep]
-    for b in range(nb):
-        out[f"v_{band_names[b]}"] = A[b][keep]
+        out["image_id"] = pdf["image_id"].to_numpy()[row]
+    for b, name in enumerate(band_names):
+        out[f"v_{name}"] = V[b]
     return pd.DataFrame(out)
 
 
@@ -1327,12 +1216,11 @@ def build_cells_long(
     cells are derived directly from its footprint (the join stays available
     as its own operator for assignment queries).
 
-    One scan path (_scan_batch) serves every configuration: regular and
-    labeled time axes, all 12 resamplers (aggregating ones need a separable
-    view SRS), value-predicate, band and separate-file masks, any view SRS.
-    Per batch, time slots, cell windows, coordinates, 'near' gathers and
-    masks run vectorized over flattened (image, cell) arrays; only decode,
-    value_fn and non-'near' warps run per image.
+    Each scan batch runs _cell_step over the whole view — the same decode
+    → warp → mask step the chunk kernel runs per chunk — so every
+    configuration works here too: regular and labeled time axes, all 12
+    resamplers (aggregating ones need a separable view SRS),
+    value-predicate, band and separate-file masks, any view SRS.
 
     Preferred when footprints cover FEW cells (coarse cubes over many
     images: contribution rows ≈ images x cells/image). The chunk-kernel path
@@ -1345,7 +1233,6 @@ def build_cells_long(
         raise ValueError(f"cell-long strategy supports {sorted(_LONG_AGGS)}")
     _check_mask(mask, value_fn, images.columns)
     file_mask = isinstance(mask, FileMask)
-    resampling = view.resampling
 
     # only first/last order by image_id; for every other aggregation the id
     # never leaves the scan — omitting it drops the widest column from the
@@ -1366,10 +1253,6 @@ def build_cells_long(
 
         srs_n = _srs.normalize(view.srs)
         separable = _srs.is_separable(srs_n)
-        if not separable and resampling in AGG_RESAMPLERS:
-            raise ValueError(
-                f"aggregating resampler {resampling!r} needs a separable view SRS"
-            )
         for pdf in batches:
             yield _scan_batch(view, pdf, srs_n, separable, decode_fn, value_fn,
                               mask, need_id, bands)

@@ -1,12 +1,12 @@
-"""Correctness pins for the vectorized cell_long scan (build._scan_batch).
+"""Correctness pins for the cell_long scan (build._scan_batch).
 
-The scan handles every cell_long configuration in one batch-at-a-time
-path: regular and labeled time axes, all 12 resamplers, value-predicate,
-band and separate-file masks, separable and non-separable view SRS. Each
-case is checked cell for cell against a reference:
-tests/oracle_np.dense_cube for EPSG:4326 byte payloads,
-build_cube(strategy="chunk_kernel") for metadata values, masks and other
-view SRS.
+The scan runs the shared decode → warp → mask step (build._cell_step) on
+every cell_long configuration: regular and labeled time axes, all 12
+resamplers, value-predicate, band and separate-file masks, separable and
+non-separable view SRS. Each case is checked cell for cell against the
+numpy oracle tests/oracle_np.dense_cube; the mask, value_fn, labeled and
+other-SRS cases check the chunk kernel against it too, since both
+strategies now share the step.
 """
 
 from __future__ import annotations
@@ -67,7 +67,7 @@ def test_vec_time_slots_labeled_matches_scalar():
     assert (got >= 0).any() and (got == -1).any()
 
 
-# ------------------------------------------- cell_long == reference (cells)
+# ---------------------------------------------- cell_long == oracle (cells)
 
 def _images_pdf(n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
                 lon_span=90.0, lat_span=72.0):
@@ -87,14 +87,6 @@ def _images_pdf(n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
             ts=dt.datetime(2020, 1, 1) + dt.timedelta(hours=int(rng.randint(0, 24 * 360))),
         ))
     return pd.DataFrame(rows)
-
-
-def _images(spark, n=400, **kw):
-    return spark.createDataFrame(_images_pdf(n, **kw))
-
-
-def _metadata(spark, n=400, **kw):
-    return _images(spark, n, **kw).drop("bytes", "fmt")
 
 
 def _vfn(image_id):
@@ -117,9 +109,20 @@ def _assert_cells_equal(got, want):
     assert np.isfinite(got).any()
 
 
-def _assert_cell_long_matches_chunk_kernel(imgs, v, **kw):
+def _assert_matches_oracle(spark, pdf, v, value_fn=None, mask=None, mask_table=None):
+    """cell_long and chunk_kernel, each against the numpy oracle. ``pdf``
+    and ``mask_table`` are pandas; value_fn cases drop the payload."""
+    if value_fn is not None:
+        pdf = pdf.drop(columns=["bytes", "fmt"])
+    want = dense_cube(pdf, v, resampling=v.resampling, aggregation=v.aggregation,
+                      value_fn=value_fn, mask=mask, mask_table=mask_table)
+    kw = dict(value_fn=value_fn, mask=mask)
+    if mask_table is not None:
+        kw["mask_table"] = spark.createDataFrame(mask_table)
+    imgs = spark.createDataFrame(pdf)
     got = _cube(imgs, v, "cell_long", **kw)
-    _assert_cells_equal(got, _cube(imgs, v, "chunk_kernel", **kw))
+    _assert_cells_equal(got, want)
+    _assert_cells_equal(_cube(imgs, v, "chunk_kernel", **kw), want)
     return got
 
 
@@ -143,8 +146,7 @@ def test_fast_equals_loop_value_fn(spark, mask):
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation="mean", resampling="near",
                         chunk_size=(4, 48, 48))
-    _assert_cell_long_matches_chunk_kernel(
-        _metadata(spark, 400), v, value_fn=_vfn, mask=mask)
+    _assert_matches_oracle(spark, _images_pdf(400), v, value_fn=_vfn, mask=mask)
 
 
 _UTM = dict(srs="EPSG:32632", left=166021.0, right=766021.0,
@@ -157,8 +159,8 @@ _UTM_IMAGES = dict(lon0=6.0, lat0=36.0, lon_span=6.0, lat_span=5.0)
 
 def test_fast_equals_loop_nonseparable(spark):
     v = CubeView.create(**_UTM, resampling="near")
-    _assert_cell_long_matches_chunk_kernel(
-        _metadata(spark, 300, seed=3, **_UTM_IMAGES), v, value_fn=_vfn)
+    _assert_matches_oracle(spark, _images_pdf(300, seed=3, **_UTM_IMAGES), v,
+                           value_fn=_vfn)
 
 
 @pytest.mark.parametrize("srs,resampling", [
@@ -180,9 +182,6 @@ def test_cell_long_resampling(spark, srs, resampling):
                         aggregation="mean", resampling=resampling,
                         chunk_size=(4, 25, 30))
     pdf = _images_pdf(200)
-    if srs == "EPSG:3857":  # the numpy oracle samples EPSG:4326 views only
-        _assert_cell_long_matches_chunk_kernel(spark.createDataFrame(pdf), v)
-        return
     got = _cube(spark.createDataFrame(pdf), v, "cell_long")
     _assert_cells_equal(got, dense_cube(pdf, v, resampling=resampling))
 
@@ -191,20 +190,18 @@ def test_cell_long_resampling(spark, srs, resampling):
 def test_cell_long_labeled_axis(spark, value_fn):
     pdf = _images_pdf(300)
     ts = sorted(pdf["ts"])
-    # labels hit some image timestamps exactly, plus two that hit none
+    # labels hit some image timestamps exactly, plus two that hit none;
+    # only exact label hits contribute
     labels = [t.to_pydatetime() for t in ts[::7]] + [
         dt.datetime(2019, 6, 1), dt.datetime(2020, 6, 15, 0, 0, 1)]
     v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=120, ny=100,
                         time_labels=labels, aggregation="mean",
                         resampling="near", chunk_size=(4, 50, 60))
     if value_fn:
-        got = _assert_cell_long_matches_chunk_kernel(
-            _metadata(spark, 300), v, value_fn=_vfn)
+        got = _assert_matches_oracle(spark, pdf, v, value_fn=_vfn)
     else:
         got = _cube(spark.createDataFrame(pdf), v, "cell_long")
-        # only exact label hits contribute (the oracle buckets by time_index_of)
-        hits = pdf[pdf["ts"].isin(pd.to_datetime(labels))]
-        _assert_cells_equal(got, dense_cube(hits, v))
+        _assert_cells_equal(got, dense_cube(pdf, v))
     assert (np.isfinite(got).any(axis=(0, 2, 3))).sum() > 1
 
 
@@ -213,10 +210,11 @@ def test_cell_long_band_mask(spark):
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation="mean", resampling="bilinear",
                         chunk_size=(4, 50, 60))
-    imgs = _images(spark, 300, nch=3)
-    got = _assert_cell_long_matches_chunk_kernel(
-        imgs, v, mask=BandMask(channel=2, vmin=0.0, vmax=90.0))
-    assert np.isnan(got).sum() > np.isnan(_cube(imgs, v, "cell_long")).sum()
+    pdf = _images_pdf(300, nch=3)
+    got = _assert_matches_oracle(spark, pdf, v,
+                                 mask=BandMask(channel=2, vmin=0.0, vmax=90.0))
+    assert np.isnan(got).sum() > np.isnan(
+        _cube(spark.createDataFrame(pdf), v, "cell_long")).sum()
 
 
 @pytest.mark.parametrize("resampling", ["near", "bilinear"])
@@ -227,23 +225,59 @@ def test_cell_long_file_mask_bytes(spark, resampling):
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation="mean", resampling=resampling,
                         chunk_size=(4, 50, 60))
-    imgs = _images(spark, 300)
+    pdf = _images_pdf(300)
     rng = np.random.RandomState(5)
     # every third image has no mask file; the others a mask at their own size
-    mrows = [(f"{i:06d}", encode_png(rng.randint(0, 10, (int(rng.randint(2, 9)),
-                                                          int(rng.randint(2, 9)), 1)
-                                                 ).astype(np.uint8)), "png")
-             for i in range(300) if i % 3]
-    mtab = spark.createDataFrame(mrows, "image_id string, bytes binary, fmt string")
-    got = _assert_cell_long_matches_chunk_kernel(
-        imgs, v, mask=FileMask(values=[2, 5, 7]), mask_table=mtab)
-    assert np.isnan(got).sum() > np.isnan(_cube(imgs, v, "cell_long")).sum()
+    mtab = pd.DataFrame(
+        [(f"{i:06d}", encode_png(rng.randint(0, 10, (int(rng.randint(2, 9)),
+                                                     int(rng.randint(2, 9)), 1)
+                                            ).astype(np.uint8)), "png")
+         for i in range(300) if i % 3], columns=["image_id", "bytes", "fmt"])
+    got = _assert_matches_oracle(spark, pdf, v, mask=FileMask(values=[2, 5, 7]),
+                                 mask_table=mtab)
+    assert np.isnan(got).sum() > np.isnan(
+        _cube(spark.createDataFrame(pdf), v, "cell_long")).sum()
 
 
 @pytest.mark.parametrize("resampling", ["near", "bilinear"])
 def test_cell_long_utm_bytes(spark, resampling):
     v = CubeView.create(**_UTM, resampling=resampling)
-    _assert_cell_long_matches_chunk_kernel(_images(spark, 300, **_UTM_IMAGES), v)
+    _assert_matches_oracle(spark, _images_pdf(300, **_UTM_IMAGES), v)
+
+
+@pytest.mark.parametrize("srs", ["EPSG:4326", "EPSG:3857"])
+def test_footprint_edges_on_cell_centres(spark, srs):
+    """Footprints whose edges lie exactly on cell centres (and on chunk
+    edges): a centre on the left/top edge is covered, one on the
+    right/bottom edge is not — for both strategies."""
+    from gdalcubes_cpp_spark import srs as _srs
+
+    ext = dict(left=-10.0, right=10.0, bottom=-8.0, top=8.0)
+    if srs == "EPSG:3857":
+        ext = dict(left=float(_srs.lon_to_x(-10.0)), right=float(_srs.lon_to_x(10.0)),
+                   bottom=float(_srs.lat_to_y(-8.0)), top=float(_srs.lat_to_y(8.0)))
+    v = CubeView.create(srs=srs, **ext, nx=48, ny=40, t0="2020-01-01", nt=2,
+                        dt="P1M", aggregation="mean", resampling="near",
+                        chunk_size=(2, 16, 20))
+    lon, lat = _srs.axis_to_wgs84(v.left + (np.arange(v.nx) + 0.5) * v.dx,
+                                  v.top - (np.arange(v.ny) + 0.5) * v.dy, srs)
+    lon_e, lat_e = _srs.axis_to_wgs84(v.left + np.arange(v.nx + 1) * v.dx,
+                                      v.top - np.arange(v.ny + 1) * v.dy, srs)
+    rng = np.random.RandomState(2)
+    rows = []
+    for k in range(60):
+        i0, j0 = rng.randint(0, v.nx - 8), rng.randint(0, v.ny - 8)
+        i1, j1 = i0 + rng.randint(1, 8), j0 + rng.randint(1, 8)
+        if k % 2:  # edges on cell centres
+            l, r, b, t = lon[i0], lon[i1], lat[j1], lat[j0]
+        else:  # left/top on chunk edges
+            l, t = lon_e[i0 // 20 * 20], lat_e[j0 // 16 * 16]
+            r, b = lon[i1], lat[j1]
+        rows.append(dict(image_id=f"{k:06d}", left=float(l), right=float(r),
+                         bottom=float(b), top=float(t),
+                         ts=dt.datetime(2020, 1 + k % 2, 10)))
+    pdf = pd.DataFrame(rows).assign(bytes=b"", fmt="png", w=16, h=16)
+    _assert_matches_oracle(spark, pdf, v, value_fn=_vfn)
 
 
 # ------------------------------------------- view-window pre-filter (JVM side)

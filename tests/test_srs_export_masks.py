@@ -149,7 +149,7 @@ def test_band_mask_scl_pattern(spark):
     import pandas as pd
 
     from gdalcubes_cpp_spark import codecs
-    from gdalcubes_cpp_spark.operators.build import BandMask, build_cube, warp_plane
+    from gdalcubes_cpp_spark.operators.build import BandMask, build_cube
     from gdalcubes_cpp_spark.view import CubeView
 
     rng = np.random.RandomState(11)
@@ -175,34 +175,13 @@ def test_band_mask_scl_pattern(spark):
         resampling="bilinear", chunk_size=(1, 12, 12),
     )
     bm = BandMask(channel=2, values=[3, 8])
-    outs = {}
-    for strategy in ("chunk_kernel", "cell_long"):
-        outs[strategy] = build_cube(imgs, v, bands=("B1", "B2"), mask=bm,
-                                    strategy=strategy).collect_dense()
-    a, b_ = outs["chunk_kernel"], outs["cell_long"]
-    assert (np.isnan(a) == np.isnan(b_)).all()
-    m = np.isfinite(a)
-    assert m.any() and np.allclose(a[m], b_[m], atol=1e-12)
-
     # numpy oracle: bilinear data warp + NEAREST mask warp per image
-    xs = v.left + (np.arange(v.nx) + 0.5) * v.dx
-    ys = v.top - (np.arange(v.ny) + 0.5) * v.dy
-    sums = np.zeros((2, 1, v.ny, v.nx)); cnts = np.zeros_like(sums)
-    for _, r in pdf.sort_values("image_id").iterrows():
-        raw = codecs.decode(r["bytes"], r["fmt"])
-        bounds = (r["left"], r["right"], r["bottom"], r["top"])
-        mp = warp_plane(raw[:, :, 2], bounds, xs, ys, "near")
-        bad = np.isin(mp, [3, 8])
-        for bd in range(2):
-            p = warp_plane(raw[:, :, bd], bounds, xs, ys, "bilinear")
-            p[bad] = np.nan
-            mm = ~np.isnan(p)
-            sums[bd, 0][mm] += p[mm]; cnts[bd, 0][mm] += 1
-    with np.errstate(invalid="ignore"):
-        want = sums / cnts
-    assert (np.isnan(a) == np.isnan(want)).all()
-    mo = np.isfinite(want)
-    assert np.allclose(a[mo], want[mo], atol=1e-9)
+    want = oracle_np.dense_cube(pdf, v, resampling="bilinear", mask=bm)
+    assert np.isfinite(want).any()
+    for strategy in ("chunk_kernel", "cell_long"):
+        got = build_cube(imgs, v, bands=("B1", "B2"), mask=bm,
+                         strategy=strategy).collect_dense()
+        oracle_np.assert_dense_equal(got, want)
 
     # value_fn path must refuse loudly
     import pytest as _pt
@@ -222,7 +201,7 @@ def test_file_mask_separate_file(spark):
     import pandas as pd
 
     from gdalcubes_cpp_spark import codecs
-    from gdalcubes_cpp_spark.operators.build import FileMask, build_cube, warp_plane
+    from gdalcubes_cpp_spark.operators.build import FileMask, build_cube
     from gdalcubes_cpp_spark.view import CubeView
 
     rng = np.random.RandomState(23)
@@ -251,42 +230,16 @@ def test_file_mask_separate_file(spark):
         resampling="bilinear", chunk_size=(1, 12, 12),
     )
     fm = FileMask(values=[3, 8])
-    outs = {}
+    # numpy oracle: bilinear data warp + NEAREST mask warp FROM ITS OWN
+    # (coarser) pixel grid; unmatched images unmasked
+    want = oracle_np.dense_cube(pdf, v, resampling="bilinear", mask=fm, mask_table=mpdf)
+    assert np.isfinite(want).any()
     for strategy in ("chunk_kernel", "cell_long"):
-        outs[strategy] = build_cube(
+        a = build_cube(
             imgs, v, bands=("B1", "B2"), mask=fm, mask_table=mtab,
             strategy=strategy,
         ).collect_dense()
-    a, b_ = outs["chunk_kernel"], outs["cell_long"]
-    assert (np.isnan(a) == np.isnan(b_)).all()
-    m = np.isfinite(a)
-    assert m.any() and np.allclose(a[m], b_[m], atol=1e-12)
-
-    # numpy oracle: bilinear data warp + NEAREST mask warp FROM ITS OWN
-    # (coarser) pixel grid; unmatched images unmasked
-    xs = v.left + (np.arange(v.nx) + 0.5) * v.dx
-    ys = v.top - (np.arange(v.ny) + 0.5) * v.dy
-    mask_by_id = {r["image_id"]: r["bytes"] for _, r in mpdf.iterrows()}
-    sums = np.zeros((2, 1, v.ny, v.nx)); cnts = np.zeros_like(sums)
-    for _, r in pdf.iterrows():
-        raw = codecs.decode(r["bytes"], r["fmt"])
-        bounds = (r["left"], r["right"], r["bottom"], r["top"])
-        bad = None
-        if r["image_id"] in mask_by_id:
-            mraw = codecs.decode(mask_by_id[r["image_id"]], "png")
-            mp = warp_plane(mraw[:, :, 0], bounds, xs, ys, "near")
-            bad = np.isin(mp, [3, 8])
-        for bd in range(2):
-            p = warp_plane(raw[:, :, bd], bounds, xs, ys, "bilinear")
-            if bad is not None:
-                p[bad] = np.nan
-            mm = ~np.isnan(p)
-            sums[bd, 0][mm] += p[mm]; cnts[bd, 0][mm] += 1
-    with np.errstate(invalid="ignore"):
-        want = sums / cnts
-    assert (np.isnan(a) == np.isnan(want)).all()
-    mo = np.isfinite(want)
-    assert mo.any() and np.allclose(a[mo], want[mo], atol=1e-9)
+        oracle_np.assert_dense_equal(a, want)
     # masking actually bit: some cells differ from the unmasked build
     plain = build_cube(imgs, v, bands=("B1", "B2"), strategy="chunk_kernel").collect_dense()
     assert np.isnan(a).sum() != np.isnan(plain).sum() or not np.allclose(

@@ -173,39 +173,23 @@ UTM_VIEW = dict(
 
 def test_utm_build_strategies_and_oracle(spark):
     """EPSG:32633 cube build: chunk_kernel (st_join + conservative 4326 chunk
-    bboxes) and cell_long (conservative view-coord windows) agree exactly
-    with each other AND with an independent per-cell inverse-TM numpy
-    oracle."""
+    bboxes) and cell_long (conservative view-coord windows) each agree
+    exactly with the per-cell inverse-TM numpy oracle."""
     from gdalcubes_cpp_spark.operators.build import build_cube
+
+    from .oracle_np import dense_cube
 
     v = CubeView.create(**UTM_VIEW)
     imgs, pdf = _utm_meta_images(spark)
     vf = lambda i: (float(int(i) % 7), float(int(i) % 5))
-    a = build_cube(imgs, v, bands=("B1", "B2"), value_fn=vf, strategy="chunk_kernel").collect_dense()
-    b = build_cube(imgs, v, bands=("B1", "B2"), value_fn=vf, strategy="cell_long").collect_dense()
-    assert (np.isnan(a) == np.isnan(b)).all()
-    m = np.isfinite(a)
-    assert m.any() and (a[m] == b[m]).all()
-
-    xs = v.left + (np.arange(v.nx) + 0.5) * v.dx
-    ys = v.top - (np.arange(v.ny) + 0.5) * v.dy
-    LON, LAT = srs.grid_to_wgs84(xs, ys, v.srs)
-    sums = np.zeros((2, v.nt, v.ny, v.nx))
-    cnts = np.zeros_like(sums)
-    for _, r in pdf.iterrows():
-        it = (r["ts"].year - 2020) * 12 + r["ts"].month - 1
-        if not (0 <= it < v.nt):
-            continue
-        m2 = (LON >= r["left"]) & (LON < r["right"]) & (LAT > r["bottom"]) & (LAT <= r["top"])
-        vals = vf(r["image_id"])
-        for bd in range(2):
-            sums[bd, it][m2] += vals[bd]
-            cnts[bd, it][m2] += 1
-    with np.errstate(invalid="ignore"):
-        want = sums / cnts
-    assert (np.isnan(a) == np.isnan(want)).all()
+    want = dense_cube(pdf, v, value_fn=vf)
     mo = np.isfinite(want)
-    assert (a[mo] == want[mo]).all()
+    assert mo.any()
+    for strategy in ("chunk_kernel", "cell_long"):
+        got = build_cube(imgs, v, bands=("B1", "B2"), value_fn=vf,
+                         strategy=strategy).collect_dense()
+        assert (np.isnan(got) == np.isnan(want)).all(), strategy
+        assert (got[mo] == want[mo]).all(), strategy
 
 
 def test_utm_build_real_decode(spark):

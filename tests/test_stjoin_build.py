@@ -140,14 +140,16 @@ def test_labeled_axis_build_strategies_agree(spark):
     ]
     imgs = _meta_imgs(spark, rows)
     vf = lambda i: (float(int(i)) * 10.0,)
-    a = build_cube(imgs, v, bands=("B1",), value_fn=vf, strategy="chunk_kernel").collect_dense()
-    b = build_cube(imgs, v, bands=("B1",), value_fn=vf, strategy="cell_long").collect_dense()
-    assert np.array_equal(np.isnan(a), np.isnan(b))
-    m = np.isfinite(a)
-    assert (a[m] == b[m]).all()
+    want = oracle_np.dense_cube(
+        pd.DataFrame(rows, columns=["image_id", "ts", "left", "right", "bottom", "top"]),
+        v, nb=1, value_fn=vf)
     # slot 0 = image 1 only (off-label image 2 dropped), slot 1 = image 3
-    assert (a[0, 0][np.isfinite(a[0, 0])] == 10.0).all()
-    assert (a[0, 1][np.isfinite(a[0, 1])] == 30.0).all()
+    assert (want[0, 0][np.isfinite(want[0, 0])] == 10.0).all()
+    assert (want[0, 1][np.isfinite(want[0, 1])] == 30.0).all()
+    for strategy in ("chunk_kernel", "cell_long"):
+        got = build_cube(imgs, v, bands=("B1",), value_fn=vf, strategy=strategy).collect_dense()
+        assert np.array_equal(np.isnan(got), np.isnan(want)), strategy
+        assert (got[np.isfinite(want)] == want[np.isfinite(want)]).all(), strategy
 
 
 @pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
