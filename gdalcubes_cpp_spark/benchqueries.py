@@ -1564,20 +1564,40 @@ def images_meta_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _utm_cells_sql(v: CubeView) -> str:
-    """(it, iy, ix, cx=lon, cy=lat) of every cell center: UTM coords by
-    exact arithmetic, then the inverse-TM series emitted by
-    srs.tm_inverse_sql — the SAME operation order as the numpy kernel."""
+def _cell_lonlat_sql(v: CubeView):
+    """(lon_sql, lat_sql) of the cell centers of ``v``: view coords by
+    exact arithmetic, then the view family's srs inverse_sql — the SAME
+    operation order as the numpy kernel (in the projection's datum)."""
     from . import srs as _srs
 
-    lon0, fn = _srs.utm_params(v.srs)
+    fam, p = _srs.resolve(v.srs)
     x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
     y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.tm_inverse_sql(x_sql, y_sql, lon0, fn)
-    return f"""
+    return fam.inverse_sql(x_sql, y_sql, p)
+
+
+def _cells_sql(v: CubeView) -> str:
+    """(it, iy, ix, cx=lon, cy=lat) of every cell center. A non-WGS84-datum
+    view (params with a helm) adds a second stage replaying the closed
+    Helmert chain (geodetic -> XYZ -> 7-param -> Bowring, srs._datum_sql)
+    with the numpy kernel's exact operation order."""
+    from . import srs as _srs
+
+    lon_sql, lat_sql = _cell_lonlat_sql(v)
+    p = _srs.resolve(v.srs)[1]
+    if getattr(p, "helm", None) is None:
+        return f"""
   SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
          {lon_sql} AS cx, {lat_sql} AS cy
   FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
+"""
+    dlon, dlat = _srs._datum_sql("lon0d", "lat0d", p.a, p.e2, p.helm)
+    return f"""
+  SELECT it, iy, ix, {dlon} AS cx, {dlat} AS cy FROM (
+    SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
+           {lon_sql} AS lon0d, {lat_sql} AS lat0d
+    FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
+  ) src
 """
 
 
@@ -1585,7 +1605,7 @@ def _utm_cells_sql(v: CubeView) -> str:
     "cube_utm_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_utm_cells_sql(V_UTM)}),
+cells AS ({_cells_sql(V_UTM)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1699,28 +1719,11 @@ def images_meta_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _polar_cells_sql(v: CubeView) -> str:
-    """(it, iy, ix, cx=lon, cy=lat) of every cell center: EPSG:3031 coords
-    by exact arithmetic, then the inverse polar-stereographic series of
-    srs.ps_inverse_sql — the SAME operation order as the numpy kernel."""
-    from . import srs as _srs
-
-    p = _srs._POLAR[_srs.normalize(v.srs)]
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.ps_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_polar_mean",
     f"""
 WITH img AS ({POLAR_IMG_SQL}),
-cells AS ({_polar_cells_sql(V_POLAR)}),
+cells AS ({_cells_sql(V_POLAR)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1757,28 +1760,11 @@ V_SINU = CubeView.create(
 )
 
 
-def _sinu_cells_sql(v: CubeView) -> str:
-    """(it, iy, ix, cx=lon, cy=lat) of every cell center: sinusoidal coords
-    by exact arithmetic, then srs.sinu_inverse_sql — the SAME operation
-    order as the numpy kernel."""
-    from . import srs as _srs
-
-    p = _srs._sinu_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.sinu_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_sinu_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_sinu_cells_sql(V_SINU)}),
+cells AS ({_cells_sql(V_SINU)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1816,27 +1802,11 @@ V_LCC = CubeView.create(
 )
 
 
-def _lcc_cells_sql(v: CubeView) -> str:
-    """(it, iy, ix, cx=lon, cy=lat) of every cell center via
-    srs.lcc_inverse_sql — the SAME operation order as the numpy kernel."""
-    from . import srs as _srs
-
-    p = _srs._lcc_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.lcc_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_lcc_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_lcc_cells_sql(V_LCC)}),
+cells AS ({_cells_sql(V_LCC)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1879,39 +1849,11 @@ V_SWISS = CubeView.create(
 )
 
 
-def _datum_cells_sql(v: CubeView) -> str:
-    """(it, iy, ix, cx, cy) for a non-WGS84-datum view: stage 1 computes
-    the SOURCE-datum geodetic via the projection's inverse series, stage 2
-    replays the closed Helmert chain (geodetic -> XYZ -> 7-param -> Bowring)
-    — both with the numpy kernel's exact operation order (srs._datum_sql)."""
-    from . import srs as _srs
-
-    key = _srs.normalize(v.srs)
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    pe = _srs._etm_of(key)
-    if pe is not None:
-        lon_sql, lat_sql = _srs.etm_inverse_sql(x_sql, y_sql, pe)
-        a, e2, helm = pe.a, pe.e2, pe.helm
-    else:
-        pw = _srs._swiss_of(key)
-        lon_sql, lat_sql = _srs.swiss_inverse_datum_sql(x_sql, y_sql, pw)
-        a, e2, helm = pw.a, pw.e2, pw.helm
-    dlon, dlat = _srs._datum_sql("lon0d", "lat0d", a, e2, helm)
-    return f"""
-  SELECT it, iy, ix, {dlon} AS cx, {dlat} AS cy FROM (
-    SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-           {lon_sql} AS lon0d, {lat_sql} AS lat0d
-    FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-  ) src
-"""
-
-
 @q(
     "cube_osgb_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_datum_cells_sql(V_OSGB)}),
+cells AS ({_cells_sql(V_OSGB)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1942,7 +1884,7 @@ def cube_osgb_mean(spark, sf_dir):
     "cube_swiss_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_datum_cells_sql(V_SWISS)}),
+cells AS ({_cells_sql(V_SWISS)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -1981,25 +1923,11 @@ V_HOM = CubeView.create(
 )
 
 
-def _hom_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._hom_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.hom_inverse_datum_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_hom_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_hom_cells_sql(V_HOM)}),
+cells AS ({_cells_sql(V_HOM)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -2038,25 +1966,11 @@ V_CEA = CubeView.create(
 )
 
 
-def _cea_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._cea_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.cea_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_cea_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cea_cells_sql(V_CEA)}),
+cells AS ({_cells_sql(V_CEA)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -2094,25 +2008,11 @@ V_AEQD = CubeView.create(
 )
 
 
-def _aeqd_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._aeqd_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.aeqd_inverse_datum_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_aeqd_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_aeqd_cells_sql(V_AEQD)}),
+cells AS ({_cells_sql(V_AEQD)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -2151,25 +2051,11 @@ V_EQC = CubeView.create(
 )
 
 
-def _eqc_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._eqc_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.eqc_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_eqc_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_eqc_cells_sql(V_EQC)}),
+cells AS ({_cells_sql(V_EQC)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -2216,39 +2102,11 @@ V_AEA = CubeView.create(
 )
 
 
-def _laea_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._laea_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.laea_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
-def _aea_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._aea_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.aea_inverse_sql(x_sql, y_sql, p)
-    return f"""
-  SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-         {lon_sql} AS cx, {lat_sql} AS cy
-  FROM range({v.nt}) t(it), range({v.ny}) y(iy), range({v.nx}) x(ix)
-"""
-
-
 @q(
     "cube_laea_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_laea_cells_sql(V_LAEA)}),
+cells AS ({_cells_sql(V_LAEA)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -2274,7 +2132,7 @@ def cube_laea_mean(spark, sf_dir):
     "cube_aea_mean",
     f"""
 WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_aea_cells_sql(V_AEA)}),
+cells AS ({_cells_sql(V_AEA)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
@@ -3072,12 +2930,7 @@ def _modis_granule_planes():
 
 
 def _modis_cells_sql(v: CubeView) -> str:
-    from . import srs as _srs
-
-    p = _srs._sinu_of(_srs.normalize(v.srs))
-    x_sql = f"({_srs._flit(v.left)} + (x.ix + 0.5) * {_srs._flit(v.dx)})"
-    y_sql = f"({_srs._flit(v.top)} - (y.iy + 0.5) * {_srs._flit(v.dy)})"
-    lon_sql, lat_sql = _srs.sinu_inverse_sql(x_sql, y_sql, p)
+    lon_sql, lat_sql = _cell_lonlat_sql(v)
     return f"""
   SELECT CAST(0 AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
          {lon_sql} AS cx, {lat_sql} AS cy

@@ -59,7 +59,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from ..srs import _CEA, _cea_consts, _flit
+from ..srs import _cea_consts, _flit, resolve
 
 _RAD = math.pi / 180.0
 SQRT3 = math.sqrt(3.0)
@@ -71,7 +71,7 @@ _F_RES = 1 << 58  # res field multiplier
 _F_Q = 1 << 29  # q field multiplier
 MAX_RES = 15  # axial range at res 15 (~0.5 m cells) still fits the fields
 
-_P6933 = _CEA["EPSG:6933"]
+_P6933 = resolve("EPSG:6933")[1]
 
 
 def res_params(res: int):

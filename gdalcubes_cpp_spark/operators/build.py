@@ -1170,20 +1170,18 @@ def _view_window(view: CubeView):
     month/year, not at t0 (_vec_time_slots counts calendar months/years).
     Literals are cast in the session time zone, the zone the Arrow hand-off
     renders ``ts`` in. None where no exact cheap bound exists: labeled time
-    axes, and view SRS other than EPSG:4326/3857 (whose corners map exactly).
+    axes, and non-separable view SRS (a separable SRS maps corners to
+    corners, so srs.bbox_to_wgs84 is exact there).
     """
     from datetime import datetime
 
     from .. import srs as _srs
     from ..view import add_duration
 
-    srs_n = _srs.normalize(view.srs)
-    if view.labeled or srs_n not in ("EPSG:4326", "EPSG:3857"):
+    if view.labeled or not _srs.is_separable(view.srs):
         return None
-    x0, x1, y0, y1 = view.left, view.right, view.bottom, view.top
-    if srs_n == "EPSG:3857":
-        x0, x1 = (float(v) for v in _srs.x_to_lon([x0, x1]))
-        y0, y1 = (float(v) for v in _srs.y_to_lat([y0, y1]))
+    x0, x1, y0, y1 = _srs.bbox_to_wgs84(
+        view.left, view.right, view.bottom, view.top, view.srs)
     cond = (
         (F.col("left") <= x1) & (F.col("right") >= x0)
         & (F.col("bottom") <= y1) & (F.col("top") >= y0)

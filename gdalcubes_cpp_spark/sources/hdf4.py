@@ -842,6 +842,8 @@ def hdfeos_grid_info(data: bytes) -> list[dict]:
     sphere); GCTP_GEO grids are EPSG:4326 with the corner points
     already in degrees (HDF-EOS stores GEO corners in DMS — converted).
     Other GCTP codes raise (name the gap, don't guess)."""
+    from .. import srs as _srs
+
     g_attrs, _per = read_hdf4_attrs(data)
     sm = "".join(v for k, v in sorted(g_attrs.items())
                  if k.startswith("StructMetadata") and isinstance(v, str))
@@ -854,7 +856,7 @@ def hdfeos_grid_info(data: bytes) -> list[dict]:
                                   "bottom", "top")}
         if proj == "GCTP_SNSOID":
             r = (g.get("proj_params") or [6371007.181])[0]
-            info["srs"] = f"SINU:{float(r)}:0.0:0.0:0.0"
+            info["srs"] = _srs.normalize(f"+proj=sinu +R={float(r)}")
         elif proj == "GCTP_GEO":
             def dms(v):  # HDF-EOS packed DMS: DDDMMMSSS.ss
                 sign = -1.0 if v < 0 else 1.0

@@ -1,38 +1,54 @@
 """Spatial reference support, pure formulas (pyproj/GDAL unavailable).
 
-The reference supports arbitrary SRS through GDAL with a cached transform
+The reference resolves any SRS through GDAL with a cached transform
 (src/warp.cpp:33-55; src/view.h:703-711 accepts EPSG/WKT/proj4); footprints
 are always stored in EPSG:4326 (src/image_collection.cpp:309-326) and query
 rectangles are transformed to 4326 for the find_range_st predicate
-(src/image_collection.cpp:1326). We implement the same protocol for the SRS
-families that cover real workloads:
+(src/image_collection.cpp:1326). Here one FAMILY TABLE plays GDAL's part:
+every SRS string resolves, through ``resolve``, to a ``Family`` row plus
+that family's parameters, and normalize, is_separable and every transform
+entry point (from_wgs84, points_to_wgs84, axis_to_wgs84, grid_to_wgs84,
+bbox_to_wgs84) dispatch on the row. The rows:
 
-- EPSG:4326            identity (separable)
-- EPSG:3857            spherical web mercator (separable: x<->lon, y<->lat
-                       independent) — 1-D axis vectors transform alone
-- EPSG:326xx / 327xx   UTM zones on the WGS84 ellipsoid (NON-separable:
-                       lon depends on both x and y) via the transverse-
-                       Mercator series of Snyder 1987 (USGS PP 1395,
-                       eq. 8-9..8-25), vectorized numpy, ~mm accuracy
-                       in-zone — the reference's flagship products are
-                       UTM-zone rasters (formats/Sentinel2_L2A.json)
+- EPSG:4326 identity; EPSG:3857 spherical web Mercator
+- EPSG:326xx/327xx UTM (Snyder 1987 transverse-Mercator series)
+- PS polar stereographic (EPSG:3031/3413), LAEA (EPSG:3035), SINU spherical
+  sinusoidal (the MODIS grid), LCC (EPSG:2154), AEA (EPSG:5070)
+- ETM transverse Mercator on any ellipsoid (EPSG:27700), SOMERC Swiss
+  oblique Mercator (EPSG:2056/21781), HOM Hotine oblique Mercator
+  (EPSG:29873), AEQD modified azimuthal equidistant (EPSG:3295) — each with
+  an optional datum stage (+towgs84 Helmert or an NTv2 grid)
+- CEA cylindrical equal area (EPSG:6933), EQC equidistant cylindrical
+  (EPSG:4087)
 
-Non-separable SRS force the warp kernels onto 2-D coordinate grids
-(grid_to_wgs84) and conservative bbox transforms (densified edge sampling,
-bbox_to_wgs84) — the per-cell inside test stays exact, the join predicate
-only needs to be a superset.
+Known EPSG codes map to their registry parameters (``_KNOWN``); proj4 and
+WKT strings canonicalize to those codes when the parameters match, and any
+other parameter set becomes a SELF-DESCRIBING dynamic key ("PS:...",
+"LAEA:...", ...) that any process parses back (``_PARSED`` caches it).
+Keys are persisted (netCDF/HDF5 attributes, view JSON), so each row's key
+field spec fixes its text format. Adding a family is one row plus its
+kernels: forward, inverse and the inverse's SQL mirror.
 
-tm_inverse_sql() emits the SAME inverse series as ANSI SQL with the SAME
-operation order, so a SQL engine (DuckDB oracle / Spark SQL) reproduces the
-numpy cell-center coordinates to within libm ulps; driver queries built on
-it keep footprint edges on a coarse decimal grid so ulp-level disagreement
-can never flip a coverage decision (margin asserted in tests).
+4326, 3857, CEA and EQC are separable (x depends only on lon, y only on
+lat): 1-D axis vectors transform alone and corners map to corners. The
+others force the warp kernels onto 2-D coordinate grids (grid_to_wgs84)
+and conservative bbox transforms (densified edge sampling, bbox_to_wgs84)
+— the per-cell inside test stays exact, the join predicate only needs to
+be a superset.
+
+Every ``*_inverse_sql`` emits the SAME inverse series as ANSI SQL with the
+SAME operation order, so a SQL engine (DuckDB oracle / Spark SQL)
+reproduces the numpy cell-center coordinates to within libm ulps; driver
+queries built on them keep footprint edges on a coarse decimal grid so
+ulp-level disagreement can never flip a coverage decision (margins
+asserted in tests).
 """
 
 from __future__ import annotations
 
 import math
 import re
+from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
@@ -55,8 +71,6 @@ _C2 = 3.0 * E2 / 8.0 + 3.0 * E2 ** 2 / 32.0 + 45.0 * E2 ** 3 / 1024.0
 _C4 = 15.0 * E2 ** 2 / 256.0 + 45.0 * E2 ** 3 / 1024.0
 _C6 = 35.0 * E2 ** 3 / 3072.0
 _E1 = (1.0 - math.sqrt(1.0 - E2)) / (1.0 + math.sqrt(1.0 - E2))
-
-_UTM_RE = re.compile(r"^EPSG:32([67])(\d\d)$")
 
 
 @dataclass(frozen=True)
@@ -88,21 +102,6 @@ class LaeaParams:
 # 12th significant digit of the flattening
 _F_GRS80 = 1.0 / 298.257222101
 _E2_GRS80 = _F_GRS80 * (2.0 - _F_GRS80)
-
-_POLAR = {
-    # WGS84 Antarctic Polar Stereographic (the EPSG registry parameters)
-    "EPSG:3031": PolarPS(lat_ts=-71.0, lon0=0.0, fe=0.0, fn=0.0, south=True),
-    # NSIDC Sea Ice Polar Stereographic North
-    "EPSG:3413": PolarPS(lat_ts=70.0, lon0=-45.0, fe=0.0, fn=0.0, south=False),
-}
-
-_LAEA = {
-    # ETRS89-extended / LAEA Europe (the ESA CCI / EEA reference grid)
-    "EPSG:3035": LaeaParams(
-        lat0=52.0, lon0=10.0, fe=4321000.0, fn=3210000.0,
-        a=6378137.0, e2=_E2_GRS80,
-    ),
-}
 
 
 def _proj4_kv(s: str) -> dict:
@@ -158,289 +157,6 @@ def _proj4_towgs84(kv: dict, s: str):
     if all(v == 0.0 for v in vals):
         return None
     return tuple(vals)
-
-
-def _from_proj4(s: str) -> str:
-    """Resolve a proj4 string to a supported SRS (the reference feeds any
-    user SRS string to GDAL, src/view.h:703-711; we resolve the families
-    our kernels implement). Known EPSG parameter sets canonicalize to the
-    EPSG code; other polar-stereographic / LAEA parameter sets register a
-    dynamic entry so they warp too."""
-    kv = _proj4_kv(s)
-    proj = kv.get("proj")
-    if proj == "longlat":
-        return "EPSG:4326"
-    if proj == "merc" and kv.get("a") == "6378137" and kv.get("b") == "6378137":
-        return "EPSG:3857"
-    if proj == "utm" and "zone" in kv:
-        zone = int(kv["zone"])
-        if not 1 <= zone <= 60:
-            raise ValueError(f"UTM zone {zone} out of range in {s!r}")
-        return f"EPSG:32{7 if kv.get('south') else 6}{zone:02d}"
-    if proj == "stere" and float(kv.get("lat_0", 0)) in (90.0, -90.0):
-        south = float(kv["lat_0"]) < 0
-        p = PolarPS(
-            lat_ts=float(kv.get("lat_ts", kv["lat_0"])),
-            lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            south=south,
-        )
-        for code, known in _POLAR.items():
-            if known == p:
-                return code
-        key = f"PS:{p.lat_ts}:{p.lon0}:{p.fe}:{p.fn}:{'S' if south else 'N'}"
-        _POLAR[key] = p
-        return key
-    if proj == "laea":
-        p = LaeaParams(
-            lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=6378137.0,
-            e2=_E2_GRS80 if kv.get("ellps") == "grs80" else E2,
-        )
-        for code, known in _LAEA.items():
-            if known == p:
-                return code
-        key = f"LAEA:{p.lat0}:{p.lon0}:{p.fe}:{p.fn}:{p.e2:.17e}"
-        _LAEA[key] = p
-        return key
-    if proj == "aea":
-        p = AeaParams(
-            lat1=float(kv.get("lat_1", 0.0)),
-            lat2=float(kv.get("lat_2", kv.get("lat_1", 0.0))),
-            lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=6378137.0,
-            e2=_E2_GRS80 if kv.get("ellps") == "grs80" else E2,
-        )
-        for code, known in _AEA.items():
-            if known == p:
-                return code
-        key = (
-            f"AEA:{p.lat1}:{p.lat2}:{p.lat0}:{p.lon0}:{p.fe}:{p.fn}:{p.e2:.17e}"
-        )
-        _AEA[key] = p
-        return key
-    if proj == "lcc":
-        p = LccParams(
-            lat1=float(kv.get("lat_1", 0.0)),
-            lat2=float(kv.get("lat_2", kv.get("lat_1", 0.0))),
-            lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=6378137.0,
-            e2=_E2_GRS80 if kv.get("ellps") == "grs80" else E2,
-        )
-        for code, known in _LCC.items():
-            if known == p:
-                return code
-        key = (
-            f"LCC:{p.lat1}:{p.lat2}:{p.lat0}:{p.lon0}:{p.fe}:{p.fn}:{p.e2:.17e}"
-        )
-        _LCC[key] = p
-        return key
-    if proj in ("tmerc", "somerc"):
-        a, e2 = _proj4_ellps(kv, s)
-        helm = _proj4_towgs84(kv, s)
-        if proj == "tmerc":
-            p = EtmParams(
-                a=a, e2=e2, k0=float(kv.get("k", kv.get("k_0", 1.0))),
-                lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-                fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-                helm=helm,
-            )
-            for code, known in _ETM.items():
-                if known == p:
-                    return code
-            key = "ETM:" + ":".join(
-                repr(v) for v in (p.a, p.e2, p.k0, p.lat0, p.lon0, p.fe, p.fn)
-            )
-            if helm is not None:
-                key += ":" + _helm_key(helm)
-            _ETM[key] = p
-            return key
-        pw = SwissParams(
-            a=a, e2=e2,
-            lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            helm=helm,
-        )
-        if float(kv.get("k", kv.get("k_0", 1.0))) != 1.0:
-            raise ValueError(f"+proj=somerc supports k_0=1 only (Swiss): {s!r}")
-        for code, known in _SWISS.items():
-            if known == pw:
-                return code
-        key = "SOMERC:" + ":".join(
-            repr(v) for v in (pw.a, pw.e2, pw.lat0, pw.lon0, pw.fe, pw.fn)
-        )
-        if helm is not None:
-            key += ":" + _helm_key(helm)
-        _SWISS[key] = pw
-        return key
-    if proj == "omerc":
-        if kv.get("no_uoff"):
-            raise ValueError("omerc variant A (+no_uoff) is unsupported; "
-                             "variant B (EPSG 9815) only")
-        a, e2 = _proj4_ellps(kv, s)
-        helm = _proj4_towgs84(kv, s)
-        alpha = float(kv.get("alpha", 0.0))
-        ph = HomParams(
-            a=a, e2=e2,
-            latc=float(kv.get("lat_0", 0.0)), lonc=float(kv.get("lonc", 0.0)),
-            alphac=alpha, gammac=float(kv.get("gamma", alpha)),
-            k0=float(kv.get("k", kv.get("k_0", 1.0))),
-            ec=float(kv.get("x_0", 0.0)), nc=float(kv.get("y_0", 0.0)),
-            helm=helm,
-        )
-        for code, known in _HOM.items():
-            if known == ph:
-                return code
-        key = "HOM:" + ":".join(repr(v) for v in (
-            ph.a, ph.e2, ph.latc, ph.lonc, ph.alphac, ph.gammac, ph.k0,
-            ph.ec, ph.nc))
-        if helm is not None:
-            key += ":" + _helm_key(helm)
-        _HOM[key] = ph
-        return key
-    if proj == "aeqd":
-        a, e2 = _proj4_ellps(kv, s)
-        helm = _proj4_towgs84(kv, s)
-        pq = AeqdParams(
-            lat0=float(kv.get("lat_0", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=a, e2=e2, helm=helm,
-        )
-        for code, known in _AEQD.items():
-            if known == pq:
-                return code
-        key = "AEQD:" + ":".join(repr(v) for v in (
-            pq.lat0, pq.lon0, pq.fe, pq.fn, pq.a, pq.e2))
-        if helm is not None:
-            key += ":" + _helm_key(helm)
-        _AEQD[key] = pq
-        return key
-    if proj == "eqc":
-        a, e2 = _proj4_ellps(kv, s)
-        pe = EqcParams(
-            lat_ts=float(kv.get("lat_ts", 0.0)), lat0=float(kv.get("lat_0", 0.0)),
-            lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=a, e2=e2,
-        )
-        for code, known in _EQC.items():
-            if known == pe:
-                return code
-        key = "EQC:" + ":".join(repr(v) for v in (
-            pe.lat_ts, pe.lat0, pe.lon0, pe.fe, pe.fn, pe.a, pe.e2))
-        _EQC[key] = pe
-        return key
-    if proj == "cea":
-        a, e2 = _proj4_ellps(kv, s)
-        pc = CeaParams(
-            lat_ts=float(kv.get("lat_ts", 0.0)), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-            a=a, e2=e2,
-        )
-        for code, known in _CEA.items():
-            if known == pc:
-                return code
-        key = "CEA:" + ":".join(repr(v) for v in (
-            pc.lat_ts, pc.lon0, pc.fe, pc.fn, pc.a, pc.e2))
-        _CEA[key] = pc
-        return key
-    if proj == "sinu":
-        # spherical form (the MODIS grid): radius from +R= (or a sphere
-        # given as +a=); the ellipsoidal series is not implemented
-        r = kv.get("r") or kv.get("a")
-        if r is None:
-            raise ValueError(f"+proj=sinu needs an explicit +R= sphere in {s!r}")
-        if kv.get("b") not in (None, True) and float(kv["b"]) != float(r):
-            raise ValueError(f"ellipsoidal sinusoidal is unsupported: {s!r}")
-        p = SinuParams(
-            r=float(r), lon0=float(kv.get("lon_0", 0.0)),
-            fe=float(kv.get("x_0", 0.0)), fn=float(kv.get("y_0", 0.0)),
-        )
-        key = f"SINU:{p.r}:{p.lon0}:{p.fe}:{p.fn}"
-        _SINU[key] = p
-        return key
-    raise ValueError(f"unsupported proj4 SRS {s!r}")
-
-
-_WKT_EPSG_RE = re.compile(
-    r"""(?:AUTHORITY\s*\[\s*"EPSG"\s*,\s*"?(\d+)"?\s*\]|ID\s*\[\s*"EPSG"\s*,\s*(\d+)\s*\])""",
-    re.IGNORECASE,
-)
-
-
-def normalize(srs: str) -> str:
-    raw = str(srs).strip()
-    if raw.startswith("+"):
-        return _from_proj4(raw)
-    if "[" in raw:
-        # WKT1/WKT2: the LAST EPSG authority entry is the CRS's own code
-        hits = _WKT_EPSG_RE.findall(raw)
-        if hits:
-            code = hits[-1][0] or hits[-1][1]
-            return normalize(f"EPSG:{code}")
-        raise ValueError(f"WKT without an EPSG authority is unsupported: {raw[:60]}...")
-    if raw.startswith(("PS:", "LAEA:", "SINU:", "LCC:", "AEA:", "ETM:", "SOMERC:", "HOM:", "CEA:", "AEQD:", "EQC:")):
-        # dynamic keys are SELF-DESCRIBING (parse-on-demand): executor
-        # python workers import srs.py fresh, so a driver-side registry
-        # alone would not resolve them inside kernels
-        if (
-            _polar_of(raw) is None and _laea_of(raw) is None
-            and _sinu_of(raw) is None and _lcc_of(raw) is None
-            and _aea_of(raw) is None and _etm_of(raw) is None
-            and _swiss_of(raw) is None and _hom_of(raw) is None
-            and _cea_of(raw) is None and _aeqd_of(raw) is None
-            and _eqc_of(raw) is None
-        ):
-            raise ValueError(f"malformed dynamic SRS key {raw!r}")
-        return raw
-    s = raw.upper().replace(" ", "")
-    if s in ("EPSG:4326", "WGS84", "CRS84"):
-        return "EPSG:4326"
-    if s in ("EPSG:3857", "EPSG:900913", "WEBMERCATOR"):
-        return "EPSG:3857"
-    if (s in _POLAR or s in _LAEA or s in _LCC or s in _AEA or s in _ETM
-            or s in _SWISS or s in _HOM or s in _CEA or s in _AEQD
-            or s in _EQC):
-        return s
-    m = _UTM_RE.match(s)
-    if m:
-        zone = int(m.group(2))
-        if 1 <= zone <= 60:
-            return s
-    raise ValueError(
-        f"unsupported SRS {srs!r} (supported: EPSG:4326, EPSG:3857, "
-        f"EPSG:326xx/327xx UTM zones, EPSG:3031/3413 polar stereographic, "
-        f"EPSG:3035 LAEA Europe, spherical sinusoidal (the MODIS grid), "
-        f"EPSG:2154 Lambert-93 conformal conic, EPSG:5070 Conus Albers, "
-        f"EPSG:27700 British National Grid (OSGB36 datum), EPSG:2056/21781 "
-        f"Swiss oblique Mercator (CH1903 datum), equivalent proj4/WKT "
-        f"strings, and any polar-stereographic/LAEA/sinusoidal/LCC/Albers/"
-        f"tmerc/somerc/cea/eqc proj4 parameter set incl. +towgs84 datum shifts)"
-    )
-
-
-def is_separable(srs: str) -> bool:
-    """True iff x depends only on lon and y only on lat (1-D axis transforms
-    suffice); UTM/polar/LAEA are non-separable. Cylindrical equal area
-    (EPSG:6933 EASE-Grid 2.0) and equidistant cylindrical (EPSG:4087
-    Plate Carrée) ARE separable."""
-    s = normalize(srs)
-    return (s in ("EPSG:4326", "EPSG:3857") or _cea_of(s) is not None
-            or _eqc_of(s) is not None)
-
-
-def utm_params(srs: str):
-    """(lon0_degrees, false_northing) of a UTM code, or None."""
-    m = _UTM_RE.match(normalize(srs))
-    if not m:
-        return None
-    zone = int(m.group(2))
-    lon0 = -183.0 + 6.0 * zone
-    fn = FN_SOUTH if m.group(1) == "7" else 0.0
-    return lon0, fn
 
 
 # -- web mercator (numpy, kernel-side) ----------------------------------------
@@ -799,10 +515,6 @@ class SinuParams:
 
 MODIS_SINU_R = 6371007.181  # authalic sphere radius of the MODIS grid (m)
 
-_SINU: dict = {}
-
-_LCC: dict = {}  # filled below LccParams (EPSG:2154) + dynamic keys
-
 
 def sinu_forward(lon, lat, p: SinuParams):
     """(lon, lat) degrees -> sinusoidal (x, y) meters (vectorized)."""
@@ -942,13 +654,6 @@ def lcc_inverse_sql(x_expr: str, y_expr: str, p: LccParams):
     return lon, lat
 
 
-# RGF93 / Lambert-93 — the EPSG registry parameters (GRS80 ellipsoid)
-_LCC["EPSG:2154"] = LccParams(
-    lat1=49.0, lat2=44.0, lat0=46.5, lon0=3.0,
-    fe=700000.0, fn=6600000.0, a=6378137.0, e2=_E2_GRS80,
-)
-
-
 # -- Albers equal-area conic, 2SP (numpy; Snyder 1987 §14, EPSG 9822) ---------
 
 @dataclass(frozen=True)
@@ -965,15 +670,6 @@ class AeaParams:
     fn: float
     a: float
     e2: float
-
-
-# NAD83 / Conus Albers (GRS80) — the EPSG registry parameters
-_AEA: dict = {
-    "EPSG:5070": AeaParams(
-        lat1=29.5, lat2=45.5, lat0=23.0, lon0=-96.0,
-        fe=0.0, fn=0.0, a=6378137.0, e2=_E2_GRS80,
-    ),
-}
 
 
 def _aea_consts(p: AeaParams):
@@ -1264,13 +960,6 @@ def _etm_m0(p: EtmParams) -> float:
 # OSGB36 -> WGS84 (the published national 7-param set)
 _OSGB_HELM = (446.448, -125.157, 542.060, 0.1502, 0.2470, 0.8421, -20.4894)
 
-_ETM: dict = {
-    "EPSG:27700": EtmParams(
-        a=_ELLPS["airy"][0], e2=_e2_of(*_ELLPS["airy"]), k0=0.9996012717,
-        lat0=49.0, lon0=-2.0, fe=400000.0, fn=-100000.0, helm=_OSGB_HELM,
-    ),
-}
-
 
 def etm_forward(lon, lat, p: EtmParams):
     """(lon, lat) degrees IN THE PROJECTION'S DATUM -> grid (x, y)."""
@@ -1428,19 +1117,6 @@ _SWISS_LON0 = 7.0 + 26.0 / 60.0 + 22.5 / 3600.0    # Bern: 7°26'22.50"E
 # CH1903(+) -> WGS84: the published 3-param geocentric translation
 _SWISS_HELM = (674.374, 15.056, 405.346, 0.0, 0.0, 0.0, 0.0)
 
-_SWISS: dict = {
-    "EPSG:2056": SwissParams(
-        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
-        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
-        fe=2600000.0, fn=1200000.0, helm=_SWISS_HELM,
-    ),
-    "EPSG:21781": SwissParams(
-        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
-        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
-        fe=600000.0, fn=200000.0, helm=_SWISS_HELM,
-    ),
-}
-
 
 def _chi_series(e2: float):
     """Inverse conformal-latitude series coefficients (Snyder eq. 3-5) for
@@ -1567,12 +1243,6 @@ class CeaParams:
     e2: float
 
 
-_CEA: dict = {
-    "EPSG:6933": CeaParams(lat_ts=30.0, lon0=0.0, fe=0.0, fn=0.0,
-                           a=A_WGS84, e2=E2),
-}
-
-
 def _cea_consts(p: CeaParams):
     e = math.sqrt(p.e2)
     ts = p.lat_ts * _RAD
@@ -1620,22 +1290,6 @@ def cea_inverse_sql(x_expr: str, y_expr: str, p: CeaParams):
     return lon, lat
 
 
-def _cea_of(s: str):
-    p = _CEA.get(s)
-    if p is not None:
-        return p
-    if s.startswith("CEA:"):
-        try:
-            _, lat_ts, lon0, fe, fn, a, e2 = s.split(":")
-            p = CeaParams(float(lat_ts), float(lon0), float(fe), float(fn),
-                          float(a), float(e2))
-        except ValueError:
-            return None
-        _CEA[s] = p
-        return p
-    return None
-
-
 # -- Equidistant cylindrical (EPSG method 1028; Plate Carrée) -----------------
 #
 # EPSG:4087 WGS 84 / World Equidistant Cylindrical — the "unprojected
@@ -1654,12 +1308,6 @@ class EqcParams:
     fn: float
     a: float
     e2: float
-
-
-_EQC: dict = {
-    "EPSG:4087": EqcParams(lat_ts=0.0, lat0=0.0, lon0=0.0, fe=0.0, fn=0.0,
-                           a=A_WGS84, e2=E2),
-}
 
 
 def _eqc_consts(p: EqcParams):
@@ -1713,22 +1361,6 @@ def eqc_inverse_sql(x_expr: str, y_expr: str, p: EqcParams):
     return lon, lat
 
 
-def _eqc_of(s: str):
-    p = _EQC.get(s)
-    if p is not None:
-        return p
-    if s.startswith("EQC:"):
-        try:
-            _, lat_ts, lat0, lon0, fe, fn, a, e2 = s.split(":")
-            p = EqcParams(float(lat_ts), float(lat0), float(lon0),
-                          float(fe), float(fn), float(a), float(e2))
-        except ValueError:
-            return None
-        _EQC[s] = p
-        return p
-    return None
-
-
 # -- Modified azimuthal equidistant (EPSG method 9832) ------------------------
 #
 # The Micronesia island grids (Guam-successor zones; EPSG:3295 Yap).
@@ -1745,18 +1377,6 @@ class AeqdParams:
     a: float
     e2: float
     helm: tuple | None
-
-
-_AEQD: dict = {
-    # Guam 1963 / Yap Islands (Clarke 1866; EPSG:3295's defining params)
-    "EPSG:3295": AeqdParams(
-        lat0=9.0 + 32.0 / 60.0 + 48.15 / 3600.0,
-        lon0=138.0 + 10.0 / 60.0 + 7.48 / 3600.0,
-        fe=40000.0, fn=60000.0,
-        a=_ELLPS["clrk66"][0], e2=_e2_of(*_ELLPS["clrk66"]),
-        helm=None,
-    ),
-}
 
 
 def aeqd_forward(lon, lat, p: AeqdParams):
@@ -1851,23 +1471,6 @@ def aeqd_inverse_datum_sql(x_expr: str, y_expr: str, p: AeqdParams):
     return lon, lat
 
 
-def _aeqd_of(s: str) -> AeqdParams | None:
-    p = _AEQD.get(s)
-    if p is not None:
-        return p
-    if s.startswith("AEQD:"):
-        try:
-            parts = s.split(":")
-            lat0, lon0, fe, fn, a, e2 = (float(v) for v in parts[1:7])
-            helm = _helm_from_parts(parts, 7)
-        except ValueError:
-            return None
-        p = AeqdParams(lat0, lon0, fe, fn, a, e2, helm)
-        _AEQD[s] = p
-        return p
-    return None
-
-
 # -- Hotine oblique Mercator variant B (EPSG method 9815; Snyder §9) ----------
 #
 # The skew-axis national grids: Timbalai/RSO Borneo (EPSG:29873), Alaska
@@ -1888,20 +1491,6 @@ class HomParams:
     ec: float     # false easting at the center
     nc: float     # false northing at the center
     helm: tuple | None
-
-
-# Timbalai 1948 / RSO Borneo (m) — the EPSG worked-example instance.
-# Everest 1830 (1967 definition) ellipsoid; Timbalai->WGS84 3-param shift.
-_HOM: dict = {
-    "EPSG:29873": HomParams(
-        a=6377298.556, e2=_e2_of(6377298.556, 300.8017),
-        latc=4.0, lonc=115.0,
-        alphac=53.0 + 18.0 / 60.0 + 56.9537 / 3600.0,
-        gammac=53.0 + 7.0 / 60.0 + 48.3685 / 3600.0,
-        k0=0.99984, ec=590476.87, nc=442857.65,
-        helm=(-679.0, 669.0, -48.0, 0.0, 0.0, 0.0, 0.0),
-    ),
-}
 
 
 def _hom_consts(p: HomParams):
@@ -2016,355 +1605,428 @@ def hom_inverse_datum_sql(x_expr: str, y_expr: str, p: HomParams):
     return lon, lat
 
 
-def _hom_of(s: str) -> HomParams | None:
-    p = _HOM.get(s)
-    if p is not None:
-        return p
-    if s.startswith("HOM:"):
+# -- the family table -----------------------------------------------------------
+#
+# Every SRS resolves to (family, params) here and nowhere else. A family row
+# carries its dynamic-key codec and its WGS84-in/out kernels, so normalize,
+# is_separable and every transform entry point below dispatch on the row,
+# never on a family name.
+
+@dataclass(frozen=True, eq=False)
+class Family:
+    """One projection family.
+
+    prefix       dynamic-key prefix ("PS" -> "PS:..."); None for the
+                 families reached only through EPSG codes (4326, 3857, UTM)
+    params       the parameter dataclass a dynamic key parses into
+    forward      (lon, lat, p) -> (x, y): WGS84 in, datum stage included
+    inverse      (x, y, p) -> (lon, lat): WGS84 out, datum stage included
+    inverse_sql  (x_sql, y_sql, p) -> (lon_sql, lat_sql): the SQL mirror of
+                 the projection inverse the DuckDB oracle replays, in the
+                 projection's datum (chain _datum_sql when p.helm is set)
+    separable    x depends only on lon and y only on lat
+    key          dynamic-key field spec: ((params field, (encode, decode)),
+                 ...) in key order; ``const`` fills params fields the key
+                 omits, and a params ``helm`` rides as an optional suffix
+    pole         p -> (x, y, lat) of the pole the projection maps to a
+                 point, for bbox_to_wgs84's full-longitude case
+    """
+
+    prefix: str | None
+    params: type | None
+    forward: Callable
+    inverse: Callable
+    inverse_sql: Callable | None = None
+    separable: bool = False
+    key: tuple = ()
+    const: tuple = ()
+    pole: Callable | None = None
+
+
+_F = (repr, float)  # repr round-trips every float64
+_E17 = ("{:.17e}".format, float)  # so does 17-digit E-notation
+_HEMI = (lambda south: "S" if south else "N", lambda v: v == "S")
+_A_FIXED = (("a", 6378137.0),)  # LAEA/AEA/LCC keys omit a
+
+
+def _spec(names: str, **codecs) -> tuple:
+    return tuple((n, codecs.get(n, _F)) for n in names.split())
+
+
+def _lonlat(a, b, p):
+    return np.asarray(a, dtype=np.float64), np.asarray(b, dtype=np.float64)
+
+
+WGS84 = Family(None, None, _lonlat, _lonlat, separable=True)
+WEBMERC = Family(
+    None, None,
+    lambda lon, lat, p: (lon_to_x(lon), lat_to_y(lat)),
+    lambda x, y, p: (x_to_lon(x), y_to_lat(y)),
+    separable=True,
+)
+UTM = Family(  # params: (lon0, false northing), see utm_params
+    None, None,
+    lambda lon, lat, p: tm_forward(lon, lat, *p),
+    lambda x, y, p: tm_inverse(x, y, *p),
+    lambda x, y, p: tm_inverse_sql(x, y, *p),
+)
+PS = Family("PS", PolarPS, ps_forward, ps_inverse, ps_inverse_sql,
+            key=_spec("lat_ts lon0 fe fn south", south=_HEMI),
+            pole=lambda p: (p.fe, p.fn, -90.0 if p.south else 90.0))
+LAEA = Family("LAEA", LaeaParams, laea_forward, laea_inverse, laea_inverse_sql,
+              key=_spec("lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+SINU = Family("SINU", SinuParams, sinu_forward, sinu_inverse, sinu_inverse_sql,
+              key=_spec("r lon0 fe fn"))
+LCC = Family("LCC", LccParams, lcc_forward, lcc_inverse, lcc_inverse_sql,
+             key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+AEA = Family("AEA", AeaParams, aea_forward, aea_inverse, aea_inverse_sql,
+             key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+ETM = Family("ETM", EtmParams, etm_forward_wgs84, etm_inverse_wgs84, etm_inverse_sql,
+             key=_spec("a e2 k0 lat0 lon0 fe fn"))
+SOMERC = Family("SOMERC", SwissParams, swiss_forward, swiss_inverse,
+                swiss_inverse_datum_sql, key=_spec("a e2 lat0 lon0 fe fn"))
+HOM = Family("HOM", HomParams, hom_forward, hom_inverse, hom_inverse_datum_sql,
+             key=_spec("a e2 latc lonc alphac gammac k0 ec nc"))
+CEA = Family("CEA", CeaParams, cea_forward, cea_inverse, cea_inverse_sql,
+             separable=True, key=_spec("lat_ts lon0 fe fn a e2"))
+AEQD = Family("AEQD", AeqdParams, aeqd_forward, aeqd_inverse, aeqd_inverse_datum_sql,
+              key=_spec("lat0 lon0 fe fn a e2"))
+EQC = Family("EQC", EqcParams, eqc_forward, eqc_inverse, eqc_inverse_sql,
+             separable=True, key=_spec("lat_ts lat0 lon0 fe fn a e2"))
+
+_BY_PREFIX = {f.prefix: f for f in (PS, LAEA, SINU, LCC, AEA, ETM, SOMERC, HOM,
+                                    CEA, AEQD, EQC)}
+
+# the known EPSG entries: code -> (family, params), the EPSG registry values
+_KNOWN: dict = {
+    "EPSG:4326": (WGS84, None),
+    "EPSG:3857": (WEBMERC, None),
+    **{f"EPSG:32{6 + s}{z:02d}": (UTM, (-183.0 + 6.0 * z, FN_SOUTH if s else 0.0))
+       for s in (0, 1) for z in range(1, 61)},
+    # WGS84 Antarctic Polar Stereographic
+    "EPSG:3031": (PS, PolarPS(lat_ts=-71.0, lon0=0.0, fe=0.0, fn=0.0, south=True)),
+    # NSIDC Sea Ice Polar Stereographic North
+    "EPSG:3413": (PS, PolarPS(lat_ts=70.0, lon0=-45.0, fe=0.0, fn=0.0, south=False)),
+    # ETRS89-extended / LAEA Europe (the ESA CCI / EEA reference grid)
+    "EPSG:3035": (LAEA, LaeaParams(
+        lat0=52.0, lon0=10.0, fe=4321000.0, fn=3210000.0,
+        a=6378137.0, e2=_E2_GRS80,
+    )),
+    # RGF93 / Lambert-93 (GRS80 ellipsoid)
+    "EPSG:2154": (LCC, LccParams(
+        lat1=49.0, lat2=44.0, lat0=46.5, lon0=3.0,
+        fe=700000.0, fn=6600000.0, a=6378137.0, e2=_E2_GRS80,
+    )),
+    # NAD83 / Conus Albers (GRS80)
+    "EPSG:5070": (AEA, AeaParams(
+        lat1=29.5, lat2=45.5, lat0=23.0, lon0=-96.0,
+        fe=0.0, fn=0.0, a=6378137.0, e2=_E2_GRS80,
+    )),
+    # OSGB36 / British National Grid
+    "EPSG:27700": (ETM, EtmParams(
+        a=_ELLPS["airy"][0], e2=_e2_of(*_ELLPS["airy"]), k0=0.9996012717,
+        lat0=49.0, lon0=-2.0, fe=400000.0, fn=-100000.0, helm=_OSGB_HELM,
+    )),
+    # CH1903+ / LV95 and CH1903 / LV03
+    "EPSG:2056": (SOMERC, SwissParams(
+        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
+        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
+        fe=2600000.0, fn=1200000.0, helm=_SWISS_HELM,
+    )),
+    "EPSG:21781": (SOMERC, SwissParams(
+        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
+        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
+        fe=600000.0, fn=200000.0, helm=_SWISS_HELM,
+    )),
+    # NSIDC EASE-Grid 2.0 Global
+    "EPSG:6933": (CEA, CeaParams(lat_ts=30.0, lon0=0.0, fe=0.0, fn=0.0,
+                                 a=A_WGS84, e2=E2)),
+    # WGS 84 / World Equidistant Cylindrical
+    "EPSG:4087": (EQC, EqcParams(lat_ts=0.0, lat0=0.0, lon0=0.0, fe=0.0, fn=0.0,
+                                 a=A_WGS84, e2=E2)),
+    # Guam 1963 / Yap Islands (Clarke 1866)
+    "EPSG:3295": (AEQD, AeqdParams(
+        lat0=9.0 + 32.0 / 60.0 + 48.15 / 3600.0,
+        lon0=138.0 + 10.0 / 60.0 + 7.48 / 3600.0,
+        fe=40000.0, fn=60000.0,
+        a=_ELLPS["clrk66"][0], e2=_e2_of(*_ELLPS["clrk66"]),
+        helm=None,
+    )),
+    # Timbalai 1948 / RSO Borneo (m), the EPSG worked-example instance:
+    # Everest 1830 (1967 definition), Timbalai->WGS84 3-param shift
+    "EPSG:29873": (HOM, HomParams(
+        a=6377298.556, e2=_e2_of(6377298.556, 300.8017),
+        latc=4.0, lonc=115.0,
+        alphac=53.0 + 18.0 / 60.0 + 56.9537 / 3600.0,
+        gammac=53.0 + 7.0 / 60.0 + 48.3685 / 3600.0,
+        k0=0.99984, ec=590476.87, nc=442857.65,
+        helm=(-679.0, 669.0, -48.0, 0.0, 0.0, 0.0, 0.0),
+    )),
+}
+_CODE_OF: dict = {}  # (family, params) -> EPSG code: proj4 canonicalization
+for _code, _hit in _KNOWN.items():
+    _CODE_OF.setdefault(_hit, _code)
+_ALIASES = {"WGS84": "EPSG:4326", "CRS84": "EPSG:4326",
+            "EPSG:900913": "EPSG:3857", "WEBMERCATOR": "EPSG:3857"}
+
+# dynamic key -> (family, params). Keys are SELF-DESCRIBING: executor
+# python workers import srs.py fresh, so a key missing here is parsed again
+_PARSED: dict = {}
+
+
+def _dynamic_key(fam: Family, p) -> str:
+    parts = [fam.prefix] + [enc(getattr(p, name)) for name, (enc, _) in fam.key]
+    helm = getattr(p, "helm", None)
+    if helm is not None:
+        parts.append(_helm_key(helm))
+    return ":".join(parts)
+
+
+def _parse_key(fam: Family, key: str):
+    """Params of a dynamic key; ValueError when it is malformed."""
+    parts = key.split(":")
+    n = 1 + len(fam.key)
+    has_helm = "helm" in fam.params.__dataclass_fields__
+    if len(parts) < n or (len(parts) > n and not has_helm):
+        raise ValueError(f"malformed dynamic SRS key {key!r}")
+    kw = dict(fam.const)
+    kw.update((name, dec(v)) for (name, (_, dec)), v in zip(fam.key, parts[1:n]))
+    if has_helm:
+        kw["helm"] = _helm_from_parts(parts, n)
+    return fam.params(**kw)
+
+
+def _proj4_params(s: str):
+    """(family, params) of a proj4 string: each proj's kv -> params."""
+    kv = _proj4_kv(s)
+    proj = kv.get("proj")
+
+    def num(name, default=0.0):
+        return float(kv.get(name, default))
+
+    if proj == "longlat":
+        return WGS84, None
+    if proj == "merc" and kv.get("a") == "6378137" and kv.get("b") == "6378137":
+        return WEBMERC, None
+    if proj == "utm" and "zone" in kv:
+        zone = int(kv["zone"])
+        if not 1 <= zone <= 60:
+            raise ValueError(f"UTM zone {zone} out of range in {s!r}")
+        return _KNOWN[f"EPSG:32{7 if kv.get('south') else 6}{zone:02d}"]
+    if proj == "stere" and num("lat_0") in (90.0, -90.0):
+        return PS, PolarPS(lat_ts=num("lat_ts", kv["lat_0"]), lon0=num("lon_0"),
+                           fe=num("x_0"), fn=num("y_0"), south=num("lat_0") < 0)
+    if proj in ("laea", "aea", "lcc"):
+        e2 = _E2_GRS80 if kv.get("ellps") == "grs80" else E2
+        if proj == "laea":
+            return LAEA, LaeaParams(lat0=num("lat_0"), lon0=num("lon_0"),
+                                    fe=num("x_0"), fn=num("y_0"),
+                                    a=6378137.0, e2=e2)
+        fam, cls = (AEA, AeaParams) if proj == "aea" else (LCC, LccParams)
+        return fam, cls(lat1=num("lat_1"), lat2=num("lat_2", kv.get("lat_1", 0.0)),
+                        lat0=num("lat_0"), lon0=num("lon_0"),
+                        fe=num("x_0"), fn=num("y_0"), a=6378137.0, e2=e2)
+    if proj == "sinu":
+        # spherical form (the MODIS grid): radius from +R= (or a sphere
+        # given as +a=); the ellipsoidal series is not implemented
+        r = kv.get("r") or kv.get("a")
+        if r is None:
+            raise ValueError(f"+proj=sinu needs an explicit +R= sphere in {s!r}")
+        if kv.get("b") not in (None, True) and float(kv["b"]) != float(r):
+            raise ValueError(f"ellipsoidal sinusoidal is unsupported: {s!r}")
+        return SINU, SinuParams(r=float(r), lon0=num("lon_0"),
+                                fe=num("x_0"), fn=num("y_0"))
+    if proj not in ("tmerc", "somerc", "omerc", "aeqd", "eqc", "cea"):
+        raise ValueError(f"unsupported proj4 SRS {s!r}")
+    if proj == "omerc" and kv.get("no_uoff"):
+        raise ValueError("omerc variant A (+no_uoff) is unsupported; "
+                         "variant B (EPSG 9815) only")
+    a, e2 = _proj4_ellps(kv, s)
+    if proj == "eqc":
+        return EQC, EqcParams(lat_ts=num("lat_ts"), lat0=num("lat_0"),
+                              lon0=num("lon_0"), fe=num("x_0"), fn=num("y_0"),
+                              a=a, e2=e2)
+    if proj == "cea":
+        return CEA, CeaParams(lat_ts=num("lat_ts"), lon0=num("lon_0"),
+                              fe=num("x_0"), fn=num("y_0"), a=a, e2=e2)
+    helm = _proj4_towgs84(kv, s)
+    if proj == "aeqd":
+        return AEQD, AeqdParams(lat0=num("lat_0"), lon0=num("lon_0"),
+                                fe=num("x_0"), fn=num("y_0"), a=a, e2=e2, helm=helm)
+    k0 = num("k", kv.get("k_0", 1.0))
+    if proj == "tmerc":
+        return ETM, EtmParams(a=a, e2=e2, k0=k0, lat0=num("lat_0"), lon0=num("lon_0"),
+                              fe=num("x_0"), fn=num("y_0"), helm=helm)
+    if proj == "somerc":
+        if k0 != 1.0:
+            raise ValueError(f"+proj=somerc supports k_0=1 only (Swiss): {s!r}")
+        return SOMERC, SwissParams(a=a, e2=e2, lat0=num("lat_0"), lon0=num("lon_0"),
+                                   fe=num("x_0"), fn=num("y_0"), helm=helm)
+    alpha = num("alpha")
+    return HOM, HomParams(a=a, e2=e2, latc=num("lat_0"), lonc=num("lonc"),
+                          alphac=alpha, gammac=num("gamma", alpha), k0=k0,
+                          ec=num("x_0"), nc=num("y_0"), helm=helm)
+
+
+def _from_proj4(s: str) -> str:
+    """Resolve a proj4 string to a supported SRS (the reference feeds any
+    user SRS string to GDAL, src/view.h:703-711; we resolve the families
+    our kernels implement). A known EPSG parameter set canonicalizes to
+    its code; any other parameter set becomes a dynamic key."""
+    hit = _proj4_params(s)
+    code = _CODE_OF.get(hit)
+    if code is None:
+        code = _dynamic_key(*hit)
+        _PARSED[code] = hit
+    return code
+
+
+_WKT_EPSG_RE = re.compile(
+    r"""(?:AUTHORITY\s*\[\s*"EPSG"\s*,\s*"?(\d+)"?\s*\]|ID\s*\[\s*"EPSG"\s*,\s*(\d+)\s*\])""",
+    re.IGNORECASE,
+)
+
+
+def normalize(srs: str) -> str:
+    raw = str(srs).strip()
+    if raw in _KNOWN or raw in _PARSED:
+        return raw
+    if raw.startswith("+"):
+        return _from_proj4(raw)
+    if "[" in raw:
+        # WKT1/WKT2: the LAST EPSG authority entry is the CRS's own code
+        hits = _WKT_EPSG_RE.findall(raw)
+        if hits:
+            code = hits[-1][0] or hits[-1][1]
+            return normalize(f"EPSG:{code}")
+        raise ValueError(f"WKT without an EPSG authority is unsupported: {raw[:60]}...")
+    head, colon, _ = raw.partition(":")
+    fam = _BY_PREFIX.get(head) if colon else None
+    if fam is not None:
         try:
-            parts = s.split(":")
-            a, e2, latc, lonc, alphac, gammac, k0, ec, nc = (
-                float(v) for v in parts[1:10])
-            helm = _helm_from_parts(parts, 10)
+            _PARSED[raw] = (fam, _parse_key(fam, raw))
         except ValueError:
-            return None
-        p = HomParams(a, e2, latc, lonc, alphac, gammac, k0, ec, nc, helm)
-        _HOM[s] = p
-        return p
-    return None
+            raise ValueError(f"malformed dynamic SRS key {raw!r}") from None
+        return raw
+    s = raw.upper().replace(" ", "")
+    s = _ALIASES.get(s, s)
+    if s in _KNOWN:
+        return s
+    raise ValueError(
+        f"unsupported SRS {srs!r} (supported: EPSG:4326, EPSG:3857, "
+        f"EPSG:326xx/327xx UTM zones, EPSG:3031/3413 polar stereographic, "
+        f"EPSG:3035 LAEA Europe, spherical sinusoidal (the MODIS grid), "
+        f"EPSG:2154 Lambert-93 conformal conic, EPSG:5070 Conus Albers, "
+        f"EPSG:27700 British National Grid (OSGB36 datum), EPSG:2056/21781 "
+        f"Swiss oblique Mercator (CH1903 datum), equivalent proj4/WKT "
+        f"strings, and any polar-stereographic/LAEA/sinusoidal/LCC/Albers/"
+        f"tmerc/somerc/cea/eqc proj4 parameter set incl. +towgs84 datum shifts)"
+    )
 
 
-def _etm_of(s: str) -> EtmParams | None:
-    p = _ETM.get(s)
-    if p is not None:
-        return p
-    if s.startswith("ETM:"):
-        try:
-            parts = s.split(":")
-            a, e2, k0, lat0, lon0, fe, fn = (float(v) for v in parts[1:8])
-            helm = _helm_from_parts(parts, 8)
-        except ValueError:
-            return None
-        p = EtmParams(a, e2, k0, lat0, lon0, fe, fn, helm)
-        _ETM[s] = p
-        return p
-    return None
+def resolve(srs: str):
+    """(family, params) of any supported SRS string — the one lookup
+    is_separable, utm_params and every transform entry point go through."""
+    key = normalize(srs)
+    return _KNOWN.get(key) or _PARSED[key]
 
 
-def _swiss_of(s: str) -> SwissParams | None:
-    p = _SWISS.get(s)
-    if p is not None:
-        return p
-    if s.startswith("SOMERC:"):
-        try:
-            parts = s.split(":")
-            a, e2, lat0, lon0, fe, fn = (float(v) for v in parts[1:7])
-            helm = _helm_from_parts(parts, 7)
-        except ValueError:
-            return None
-        p = SwissParams(a, e2, lat0, lon0, fe, fn, helm)
-        _SWISS[s] = p
-        return p
-    return None
+def is_separable(srs: str) -> bool:
+    """True iff x depends only on lon and y only on lat (1-D axis transforms
+    suffice): 4326, 3857, cylindrical equal area (EPSG:6933 EASE-Grid 2.0)
+    and equidistant cylindrical (EPSG:4087 Plate Carrée)."""
+    return resolve(srs)[0].separable
 
 
-def _aea_of(s: str) -> AeaParams | None:
-    p = _AEA.get(s)
-    if p is not None:
-        return p
-    if s.startswith("AEA:"):
-        try:
-            _, lat1, lat2, lat0, lon0, fe, fn, e2 = s.split(":")
-            p = AeaParams(
-                float(lat1), float(lat2), float(lat0), float(lon0),
-                float(fe), float(fn), 6378137.0, float(e2),
-            )
-        except ValueError:
-            return None
-        _AEA[s] = p
-        return p
-    return None
-
-
-def _polar_of(s: str) -> PolarPS | None:
-    """PolarPS for an SRS key — EPSG entry or a self-describing 'PS:...'
-    dynamic key (parsed on demand so executor workers resolve it too)."""
-    p = _POLAR.get(s)
-    if p is not None:
-        return p
-    if s.startswith("PS:"):
-        try:
-            _, lat_ts, lon0, fe, fn, hemi = s.split(":")
-            p = PolarPS(float(lat_ts), float(lon0), float(fe), float(fn), hemi == "S")
-        except ValueError:
-            return None
-        _POLAR[s] = p
-        return p
-    return None
-
-
-def _laea_of(s: str) -> LaeaParams | None:
-    p = _LAEA.get(s)
-    if p is not None:
-        return p
-    if s.startswith("LAEA:"):
-        try:
-            _, lat0, lon0, fe, fn, e2 = s.split(":")
-            p = LaeaParams(float(lat0), float(lon0), float(fe), float(fn),
-                           6378137.0, float(e2))
-        except ValueError:
-            return None
-        _LAEA[s] = p
-        return p
-    return None
-
-
-def _sinu_of(s: str) -> SinuParams | None:
-    p = _SINU.get(s)
-    if p is not None:
-        return p
-    if s.startswith("SINU:"):
-        try:
-            _, r, lon0, fe, fn = s.split(":")
-            p = SinuParams(float(r), float(lon0), float(fe), float(fn))
-        except ValueError:
-            return None
-        _SINU[s] = p
-        return p
-    return None
-
-
-def _lcc_of(s: str) -> LccParams | None:
-    p = _LCC.get(s)
-    if p is not None:
-        return p
-    if s.startswith("LCC:"):
-        try:
-            _, lat1, lat2, lat0, lon0, fe, fn, e2 = s.split(":")
-            p = LccParams(
-                float(lat1), float(lat2), float(lat0), float(lon0),
-                float(fe), float(fn), 6378137.0, float(e2),
-            )
-        except ValueError:
-            return None
-        _LCC[s] = p
-        return p
-    return None
-
-
-def _nonsep_inverse(x, y, s: str):
-    """Dispatch (x, y in srs) -> (lon, lat) for non-separable SRS."""
-    pe = _etm_of(s)
-    if pe is not None:
-        return etm_inverse_wgs84(x, y, pe)
-    ph = _hom_of(s)
-    if ph is not None:
-        return hom_inverse(x, y, ph)
-    pq = _aeqd_of(s)
-    if pq is not None:
-        return aeqd_inverse(x, y, pq)
-    pw = _swiss_of(s)
-    if pw is not None:
-        return swiss_inverse(x, y, pw)
-    p = _polar_of(s)
-    if p is not None:
-        return ps_inverse(x, y, p)
-    pl = _laea_of(s)
-    if pl is not None:
-        return laea_inverse(x, y, pl)
-    ps = _sinu_of(s)
-    if ps is not None:
-        return sinu_inverse(x, y, ps)
-    pc = _lcc_of(s)
-    if pc is not None:
-        return lcc_inverse(x, y, pc)
-    pa = _aea_of(s)
-    if pa is not None:
-        return aea_inverse(x, y, pa)
-    lon0, fn = utm_params(s)
-    return tm_inverse(x, y, lon0, fn)
-
-
-def _nonsep_forward(lon, lat, s: str):
-    pe = _etm_of(s)
-    if pe is not None:
-        return etm_forward_wgs84(lon, lat, pe)
-    ph = _hom_of(s)
-    if ph is not None:
-        return hom_forward(lon, lat, ph)
-    pq = _aeqd_of(s)
-    if pq is not None:
-        return aeqd_forward(lon, lat, pq)
-    pw = _swiss_of(s)
-    if pw is not None:
-        return swiss_forward(lon, lat, pw)
-    p = _polar_of(s)
-    if p is not None:
-        return ps_forward(lon, lat, p)
-    pl = _laea_of(s)
-    if pl is not None:
-        return laea_forward(lon, lat, pl)
-    ps = _sinu_of(s)
-    if ps is not None:
-        return sinu_forward(lon, lat, ps)
-    pc = _lcc_of(s)
-    if pc is not None:
-        return lcc_forward(lon, lat, pc)
-    pa = _aea_of(s)
-    if pa is not None:
-        return aea_forward(lon, lat, pa)
-    lon0, fn = utm_params(s)
-    return tm_forward(lon, lat, lon0, fn)
+def utm_params(srs: str):
+    """(lon0_degrees, false_northing) of a UTM code, or None."""
+    fam, p = resolve(srs)
+    return p if fam is UTM else None
 
 
 # -- generic transform surface -------------------------------------------------
 
+_BBOX_SAMPLES = 9  # points per rectangle edge in bbox_to_wgs84
+
+
+def _axis_lonlat(fam: Family, p, xs, ys):
+    # separable: lon depends on x alone and lat on y alone, so the other
+    # coordinate can be a scalar zero
+    return fam.inverse(xs, 0.0, p)[0], fam.inverse(0.0, ys, p)[1]
+
+
 def axis_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
     """1-D axis vectors in a SEPARABLE ``srs`` -> (lon, lat) vectors."""
-    s = normalize(srs)
-    if s == "EPSG:4326":
-        return xs, ys
-    if s == "EPSG:3857":
-        return x_to_lon(xs), y_to_lat(ys)
-    pc = _cea_of(s)
-    if pc is not None:  # x and y transform independently
-        lon, _ = cea_inverse(xs, np.zeros_like(np.asarray(xs, dtype=np.float64)), pc)
-        _, lat = cea_inverse(np.zeros_like(np.asarray(ys, dtype=np.float64)), ys, pc)
-        return lon, lat
-    pe = _eqc_of(s)
-    if pe is not None:
-        lon, _ = eqc_inverse(xs, np.zeros_like(np.asarray(xs, dtype=np.float64)), pe)
-        _, lat = eqc_inverse(np.zeros_like(np.asarray(ys, dtype=np.float64)), ys, pe)
-        return lon, lat
-    raise ValueError(f"{srs} is not separable; use grid_to_wgs84")
+    fam, p = resolve(srs)
+    if not fam.separable:
+        raise ValueError(f"{srs} is not separable; use grid_to_wgs84")
+    return _axis_lonlat(fam, p, xs, ys)
 
 
 def grid_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
     """1-D axis vectors -> 2-D (LON, LAT) grids of shape (len(ys), len(xs)),
     valid for any supported SRS (the non-separable warp path)."""
-    s = normalize(srs)
-    if is_separable(s):
-        lon, lat = axis_to_wgs84(xs, ys, s)
+    fam, p = resolve(srs)
+    if fam.separable:
+        lon, lat = _axis_lonlat(fam, p, xs, ys)
         return np.broadcast_to(lon[None, :], (len(ys), len(xs))), np.broadcast_to(
             lat[:, None], (len(ys), len(xs))
         )
     X = np.broadcast_to(np.asarray(xs, dtype=np.float64)[None, :], (len(ys), len(xs)))
     Y = np.broadcast_to(np.asarray(ys, dtype=np.float64)[:, None], (len(ys), len(xs)))
-    return _nonsep_inverse(X, Y, s)
+    return fam.inverse(X, Y, p)
 
 
 def from_wgs84(lon, lat, srs: str):
     """(lon, lat) -> coords in ``srs`` (vectorized)."""
-    s = normalize(srs)
-    if s == "EPSG:4326":
-        return np.asarray(lon, dtype=np.float64), np.asarray(lat, dtype=np.float64)
-    if s == "EPSG:3857":
-        return lon_to_x(lon), lat_to_y(lat)
-    pc = _cea_of(s)
-    if pc is not None:
-        return cea_forward(lon, lat, pc)
-    pe = _eqc_of(s)
-    if pe is not None:
-        return eqc_forward(lon, lat, pe)
-    return _nonsep_forward(lon, lat, s)
+    fam, p = resolve(srs)
+    return fam.forward(lon, lat, p)
 
 
 def points_to_wgs84(x, y, srs: str):
     """Point-wise (x, y in srs) -> (lon, lat) (vectorized; the inverse of
     from_wgs84 for arbitrary point sets, not axis grids)."""
-    s = normalize(srs)
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    if s == "EPSG:4326":
-        return x, y
-    if s == "EPSG:3857":
-        return x_to_lon(x), y_to_lat(y)
-    pc = _cea_of(s)
-    if pc is not None:
-        return cea_inverse(x, y, pc)
-    pe = _eqc_of(s)
-    if pe is not None:
-        return eqc_inverse(x, y, pe)
-    return _nonsep_inverse(x, y, s)
+    fam, p = resolve(srs)
+    return fam.inverse(np.asarray(x, dtype=np.float64),
+                       np.asarray(y, dtype=np.float64), p)
 
 
-def bbox_to_wgs84(left, right, bottom, top, srs: str, n_samples: int = 9):
+def bbox_to_wgs84(left, right, bottom, top, srs: str):
     """Conservative 4326 bbox of a rectangle in ``srs``.
 
     Separable SRS: corners map to corners (exact). Non-separable: sample
-    ``n_samples`` points per edge, take extremes, pad by the max adjacent
+    _BBOX_SAMPLES points per edge, take extremes, pad by the max adjacent
     sample gap — a superset bbox (the per-cell inside test downstream stays
     exact; the reference transforms the query rect the same way,
     src/image_collection.cpp:1326)."""
-    s = normalize(srs)
-    if s == "EPSG:4326":
-        return left, right, bottom, top
-    if s == "EPSG:3857":
-        return float(x_to_lon(left)), float(x_to_lon(right)), float(y_to_lat(bottom)), float(y_to_lat(top))
-    _pc = _cea_of(s)
-    if _pc is not None:  # separable: corners map to corners, exact
-        lon0, lat0 = cea_inverse(left, bottom, _pc)
-        lon1, lat1 = cea_inverse(right, top, _pc)
+    fam, p = resolve(srs)
+    if fam.separable:
+        lon0, lat0 = fam.inverse(left, bottom, p)
+        lon1, lat1 = fam.inverse(right, top, p)
         return float(lon0), float(lon1), float(lat0), float(lat1)
-    _pe = _eqc_of(s)
-    if _pe is not None:
-        lon0, lat0 = eqc_inverse(left, bottom, _pe)
-        lon1, lat1 = eqc_inverse(right, top, _pe)
-        return float(lon0), float(lon1), float(lat0), float(lat1)
-    _pp = _polar_of(s)
-    if _pp is not None and (left <= _pp.fe <= right) and (bottom <= _pp.fn <= top):
-        # rectangle contains the pole: every longitude occurs; latitudes
-        # reach the pole itself (edge sampling would miss both)
-        p = _pp
-        t = np.linspace(0.0, 1.0, n_samples)
-        xs = left + (right - left) * t
-        ys = bottom + (top - bottom) * t
-        ex = np.concatenate([xs, xs, np.full_like(ys, left), np.full_like(ys, right)])
-        ey = np.concatenate([np.full_like(xs, bottom), np.full_like(xs, top), ys, ys])
-        _, lat = ps_inverse(ex, ey, p)
-        if p.south:
-            return -180.0, 180.0, -90.0, float(lat.max())
-        return -180.0, 180.0, float(lat.min()), 90.0
-    t = np.linspace(0.0, 1.0, n_samples)
+    t = np.linspace(0.0, 1.0, _BBOX_SAMPLES)
     xs = left + (right - left) * t
     ys = bottom + (top - bottom) * t
     ex = np.concatenate([xs, xs, np.full_like(ys, left), np.full_like(ys, right)])
     ey = np.concatenate([np.full_like(xs, bottom), np.full_like(xs, top), ys, ys])
-    lon, lat = _nonsep_inverse(ex, ey, s)
+    lon, lat = fam.inverse(ex, ey, p)
+    pole = fam.pole(p) if fam.pole is not None else None
+    if pole is not None and left <= pole[0] <= right and bottom <= pole[1] <= top:
+        # rectangle contains the pole: every longitude occurs; latitudes
+        # reach the pole itself (edge sampling would miss both)
+        if pole[2] < 0:
+            return -180.0, 180.0, -90.0, float(lat.max())
+        return -180.0, 180.0, float(lat.min()), 90.0
     # pad by the curvature bound: between two edge samples the extremum can
     # exceed the sampled max by at most ~the sample spread; one full gap is
     # a safe over-estimate at these scales
-    pad_lon = (lon.max() - lon.min()) / max(n_samples - 1, 1)
-    pad_lat = (lat.max() - lat.min()) / max(n_samples - 1, 1)
+    pad_lon = (lon.max() - lon.min()) / (_BBOX_SAMPLES - 1)
+    pad_lat = (lat.max() - lat.min()) / (_BBOX_SAMPLES - 1)
     return (
         float(lon.min() - pad_lon),
         float(lon.max() + pad_lon),
         float(lat.min() - pad_lat),
         float(lat.max() + pad_lat),
-    )
-
-
-def bbox_from_wgs84(left, right, bottom, top, srs: str, n_samples: int = 9):
-    """Conservative ``srs`` bbox of a 4326 rectangle (densified edges +
-    one-gap pad; exact for separable SRS)."""
-    s = normalize(srs)
-    if is_separable(s):
-        x0, y0 = from_wgs84(left, bottom, s)
-        x1, y1 = from_wgs84(right, top, s)
-        return float(x0), float(x1), float(y0), float(y1)
-    t = np.linspace(0.0, 1.0, n_samples)
-    lons = left + (right - left) * t
-    lats = bottom + (top - bottom) * t
-    el = np.concatenate([lons, lons, np.full_like(lats, left), np.full_like(lats, right)])
-    eb = np.concatenate([np.full_like(lons, bottom), np.full_like(lons, top), lats, lats])
-    x, y = from_wgs84(el, eb, s)
-    pad_x = (x.max() - x.min()) / max(n_samples - 1, 1)
-    pad_y = (y.max() - y.min()) / max(n_samples - 1, 1)
-    return (
-        float(x.min() - pad_x),
-        float(x.max() + pad_x),
-        float(y.min() - pad_y),
-        float(y.max() + pad_y),
     )
 
 

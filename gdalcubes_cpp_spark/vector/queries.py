@@ -216,7 +216,7 @@ def _transform_wkt_one(wkt: str, feature_srs: str, view_srs: str, densify_n: int
     """One WKT feature -> the same feature with vertices in the VIEW SRS.
     Edges are subdivided ``densify_n`` times BEFORE transforming so curved
     images of straight edges stay tight (the same densified-edge treatment
-    as srs.bbox_from_wgs84). Module-level so pandas UDF closures stay
+    as srs.bbox_to_wgs84). Module-level so pandas UDF closures stay
     small."""
     from .. import srs as _srs
 

@@ -287,6 +287,7 @@ def test_footprint_edges_on_cell_centres(spark, srs):
     ("EPSG:4326", "P1Y", "2020-06-15", 1),   # mid-year t0: slot 0 starts 01-01
     ("EPSG:3857", "P2M", "2020-05-20", 2),
     ("EPSG:4326", "P1D", "2020-04-10", 20),
+    ("EPSG:6933", "P1M", "2020-02-01", 2),   # separable CEA: exact corners
 ])
 def test_view_window_prefilter_keeps_outputs(spark, monkeypatch, srs, dt_str, t0, nt):
     from gdalcubes_cpp_spark import srs as _srs
@@ -301,6 +302,9 @@ def test_view_window_prefilter_keeps_outputs(spark, monkeypatch, srs, dt_str, t0
     if srs == "EPSG:3857":
         ext = dict(left=float(_srs.lon_to_x(lon0)), right=float(_srs.lon_to_x(lon1)),
                    bottom=float(_srs.lat_to_y(lat0)), top=float(_srs.lat_to_y(lat1)))
+    elif srs != "EPSG:4326":
+        (x0, x1), (y0, y1) = _srs.from_wgs84([lon0, lon1], [lat0, lat1], srs)
+        ext = dict(left=float(x0), right=float(x1), bottom=float(y0), top=float(y1))
     v = CubeView.create(srs=srs, **ext, nx=40, ny=30, t0=t0, nt=nt, dt=dt_str,
                         aggregation="mean", resampling="near", chunk_size=(4, 30, 40))
     rng = np.random.RandomState(11)

@@ -9,7 +9,7 @@ import numpy as np
 
 from gdalcubes_cpp_spark import srs
 
-P = srs._AEA["EPSG:5070"]
+P = srs.resolve("EPSG:5070")[1]
 
 
 def test_aea_origin_anchor():

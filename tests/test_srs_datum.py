@@ -18,9 +18,9 @@ import numpy as np
 
 from gdalcubes_cpp_spark import srs
 
-OSGB = srs._ETM["EPSG:27700"]
-LV95 = srs._SWISS["EPSG:2056"]
-LV03 = srs._SWISS["EPSG:21781"]
+OSGB = srs.resolve("EPSG:27700")[1]
+LV95 = srs.resolve("EPSG:2056")[1]
+LV03 = srs.resolve("EPSG:21781")[1]
 
 
 def test_osgb_os_worked_example():
@@ -135,14 +135,15 @@ def test_sql_mirror_duckdb():
     con = duckdb.connect()
 
     def parity(key, xs, ys):
-        p_etm = srs._etm_of(key)
+        fam, p = srs.resolve(key)
+        p_etm = p if fam is srs.ETM else None
         X, Y = np.meshgrid(xs, ys)
         lon_np, lat_np = srs.points_to_wgs84(X.ravel(), Y.ravel(), key)
         if p_etm is not None:
             lon_s, lat_s = srs.etm_inverse_sql("x", "y", p_etm)
             a, e2, helm = p_etm.a, p_etm.e2, p_etm.helm
         else:
-            pw = srs._swiss_of(key)
+            pw = p
             lon_s, lat_s = srs.swiss_inverse_datum_sql("x", "y", pw)
             a, e2, helm = pw.a, pw.e2, pw.helm
         dlon, dlat = srs._datum_sql("lon0d", "lat0d", a, e2, helm)
@@ -193,7 +194,7 @@ def test_normalize_and_proj4():
     assert k == "EPSG:27700"
     k2 = srs.normalize("+proj=tmerc +lat_0=0 +lon_0=9 +k=0.9996 +x_0=500000 +ellps=grs80")
     assert k2.startswith("ETM:")
-    srs._ETM.pop(k2)  # simulate a fresh executor import
+    srs._PARSED.pop(k2)  # simulate a fresh executor import
     assert srs.normalize(k2) == k2
     x, y = srs.from_wgs84(np.array([9.5]), np.array([48.0]), k2)
     lo, la = srs.points_to_wgs84(x, y, k2)
@@ -203,7 +204,7 @@ def test_normalize_and_proj4():
         "+x_0=600000 +y_0=200000 +ellps=bessel +towgs84=674.374,15.056,405.346"
     )
     assert k3.startswith("SOMERC:")
-    srs._SWISS.pop(k3)
+    srs._PARSED.pop(k3)
     assert srs.normalize(k3) == k3
     assert not srs.is_separable("EPSG:27700")
     assert not srs.is_separable("EPSG:2056")
@@ -235,7 +236,7 @@ def test_cea_ease_grid():
     roundtrip, SQL parity."""
     import duckdb
 
-    p = srs._CEA["EPSG:6933"]
+    p = srs.resolve("EPSG:6933")[1]
     x, _ = srs.cea_forward(180.0, 0.0, p)
     assert abs(float(x) - 17367530.45) < 0.01  # Brodzik et al. 2012 constant
     assert srs.is_separable("EPSG:6933")
@@ -271,7 +272,7 @@ def test_cea_ease_grid():
     assert srs.normalize("+proj=cea +lat_ts=30 +ellps=wgs84") == "EPSG:6933"
     k = srs.normalize("+proj=cea +lat_ts=10 +ellps=grs80")
     assert k.startswith("CEA:")
-    srs._CEA.pop(k)
+    srs._PARSED.pop(k)
     assert srs.normalize(k) == k
 
 
@@ -282,7 +283,7 @@ def test_aeqd_yap():
     integration, SQL parity, proj4 dynamic keys."""
     import duckdb
 
-    p = srs._AEQD["EPSG:3295"]
+    p = srs.resolve("EPSG:3295")[1]
     lat = 9 + 35 / 60 + 47.493 / 3600
     lon = 138 + 11 / 60 + 34.908 / 3600
     E, N = srs.aeqd_forward(lon, lat, p)
@@ -316,7 +317,7 @@ def test_aeqd_yap():
     # proj4 dynamic key, fresh-executor semantics
     k = srs.normalize("+proj=aeqd +lat_0=47.5 +lon_0=14.2 +ellps=grs80")
     assert k.startswith("AEQD:")
-    srs._AEQD.pop(k)
+    srs._PARSED.pop(k)
     assert srs.normalize(k) == k
 
 
@@ -324,7 +325,7 @@ def test_eqc_worked_example_and_roundtrip():
     """Equidistant cylindrical (EPSG method 1028, EPSG:4087): the EPSG
     GN7-2 worked example — 55N 10E -> E 1,113,194.91 / N 6,097,230.31 m
     — to the cm; dense roundtrip to sub-mm."""
-    p = srs._EQC["EPSG:4087"]
+    p = srs.resolve("EPSG:4087")[1]
     x, y = srs.eqc_forward(10.0, 55.0, p)
     assert abs(float(x) - 1113194.91) < 0.01
     assert abs(float(y) - 6097230.31) < 0.01
@@ -342,7 +343,7 @@ def test_eqc_sql_mirror_parity():
     """eqc_inverse_sql replayed in DuckDB == numpy to ~1e-9 deg."""
     import duckdb
 
-    p = srs._EQC["EPSG:4087"]
+    p = srs.resolve("EPSG:4087")[1]
     xs = np.linspace(-1.9e7, 1.9e7, 15)
     ys = np.linspace(-9.0e6, 9.0e6, 12)
     lon_sql, lat_sql = srs.eqc_inverse_sql("g.x", "g.y", p)
@@ -370,7 +371,7 @@ def test_eqc_separable_axis_transform():
     assert srs.normalize("+proj=eqc +ellps=WGS84") == "EPSG:4087"
     k = srs.normalize("+proj=eqc +lat_ts=30 +lon_0=10 +x_0=100 +ellps=grs80")
     assert k.startswith("EQC:")
-    srs._EQC.pop(k)       # fresh-executor semantics
+    srs._PARSED.pop(k)  # fresh-executor semantics
     assert srs.normalize(k) == k
     x, y = srs.from_wgs84(np.array([12.0]), np.array([48.0]), k)
     lo, la = srs.points_to_wgs84(x, y, k)

@@ -10,7 +10,7 @@ import numpy as np
 
 from gdalcubes_cpp_spark import srs
 
-RSO = srs._HOM["EPSG:29873"]
+RSO = srs.resolve("EPSG:29873")[1]
 RSO_NODATUM = replace(RSO, helm=None)
 
 
@@ -99,7 +99,7 @@ def test_proj4_and_dynamic_key():
     assert k == "EPSG:29873"
     k2 = srs.normalize("+proj=omerc +lat_0=47.5 +lonc=14 +alpha=45 +k=1 +ellps=grs80")
     assert k2.startswith("HOM:")
-    srs._HOM.pop(k2)  # fresh-executor semantics
+    srs._PARSED.pop(k2)  # fresh-executor semantics
     assert srs.normalize(k2) == k2
     x, y = srs.from_wgs84(np.array([14.5]), np.array([47.8]), k2)
     lo, la = srs.points_to_wgs84(x, y, k2)

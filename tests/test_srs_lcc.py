@@ -9,7 +9,7 @@ import numpy as np
 
 from gdalcubes_cpp_spark import srs
 
-P93 = srs._LCC["EPSG:2154"]
+P93 = srs.resolve("EPSG:2154")[1]
 
 
 def test_lcc_origin_anchor():

@@ -47,7 +47,7 @@ LONS = np.array([-170.0, -60.0, 0.0, 45.0, 120.0, 179.0])
     ("EPSG:3413", np.array([88.0, 80.0, 75.0, 70.0, 65.0, 60.0])),
 ])
 def test_ps_roundtrip_and_iteration(code, lats):
-    p = srs._POLAR[code]
+    p = srs.resolve(code)[1]
     x, y = srs.ps_forward(LONS, lats, p)
     lo, la = srs.ps_inverse(x, y, p)
     dlon = np.abs(((lo - LONS + 180) % 360) - 180)
@@ -64,7 +64,7 @@ def test_ps_standard_parallel_true_scale():
     standard parallel (numeric derivative along the parallel vs the
     ellipsoidal parallel radius)."""
     for code in ("EPSG:3031", "EPSG:3413"):
-        p = srs._POLAR[code]
+        p = srs.resolve(code)[1]
         d = 1e-3
         xa, ya = srs.ps_forward(10.0, p.lat_ts, p)
         xb, yb = srs.ps_forward(10.0 + d, p.lat_ts, p)
@@ -80,7 +80,7 @@ def test_ps_standard_parallel_true_scale():
 def test_ps_pole_and_axes_anchors():
     """The pole maps to the false origin; the lon0 meridian maps to the
     grid-north axis; k0 matches the published EPSG:3031 value."""
-    p = srs._POLAR["EPSG:3031"]
+    p = srs.resolve("EPSG:3031")[1]
     x, y = srs.ps_forward(0.0, -90.0, p)
     assert abs(float(x)) < 1e-6 and abs(float(y)) < 1e-6
     x, y = srs.ps_forward(0.0, -71.0, p)  # on the central meridian
@@ -94,7 +94,7 @@ def test_ps_sql_mirror_duckdb():
     """ps_inverse_sql replays the numpy kernel in DuckDB to libm ulps."""
     import duckdb
 
-    p = srs._POLAR["EPSG:3031"]
+    p = srs.resolve("EPSG:3031")[1]
     lon_sql, lat_sql = srs.ps_inverse_sql("x", "y", p)
     xs = np.linspace(-1.2e6, 1.5e6, 25)
     ys = np.linspace(1.0e6, 2.2e6, 25)
@@ -133,7 +133,7 @@ def test_polar_bbox_superset():
     xs = np.linspace(-401234.0, 198766.0, 60)
     ys = np.linspace(1302345.0, 1902345.0, 60)
     X, Y = np.meshgrid(xs, ys)
-    lon, lat = srs.ps_inverse(X, Y, srs._POLAR["EPSG:3031"])
+    lon, lat = srs.ps_inverse(X, Y, srs.resolve("EPSG:3031")[1])
     assert l <= lon.min() and lon.max() <= r
     assert b <= lat.min() and lat.max() <= t
     # pole inside
@@ -145,7 +145,7 @@ def test_polar_bbox_superset():
 
 
 def test_laea_origin_and_roundtrip():
-    p = srs._LAEA["EPSG:3035"]
+    p = srs.resolve("EPSG:3035")[1]
     x, y = srs.laea_forward(10.0, 52.0, p)
     assert float(x) == p.fe and float(y) == p.fn
     lons = np.array([-10.0, 0.0, 10.0, 25.0, 40.0, 31.0])
@@ -163,7 +163,7 @@ def test_laea_equal_area_jacobian():
     """The projection's DEFINING property: the numeric Jacobian determinant
     equals the ellipsoidal area element everywhere (ratio 1 to ~1e-7) —
     an independent check no wrong formula passes."""
-    p = srs._LAEA["EPSG:3035"]
+    p = srs.resolve("EPSG:3035")[1]
     h = 1e-5
     for lon, lat in [(0.0, 45.0), (25.0, 60.0), (-8.0, 38.0), (35.0, 68.0)]:
         x1, y1 = srs.laea_forward(lon, lat, p)
@@ -283,13 +283,13 @@ def test_proj4_dynamic_polar_self_describing():
     )
     assert key.startswith("PS:")
     assert not srs.is_separable(key)
-    srs._POLAR.pop(key, None)  # simulate a fresh worker process
+    srs._PARSED.pop(key, None)  # simulate a fresh worker process
     x, y = srs.from_wgs84(np.array([10.0]), np.array([-75.0]), key)
-    lo, la = srs._nonsep_inverse(x, y, key)
+    lo, la = srs.points_to_wgs84(x, y, key)
     assert abs(float(lo[0]) - 10.0) < 1e-9
     assert abs(float(la[0]) + 75.0) < 1e-9
     # true scale at ITS standard parallel (-70), not 3031's -71
-    p = srs._polar_of(key)
+    p = srs.resolve(key)[1]
     import math
     d = 1e-3
     xa, ya = srs.ps_forward(0.0, -70.0, p)
@@ -344,7 +344,7 @@ def test_laea_sql_mirror_duckdb():
     """laea_inverse_sql replays the numpy kernel in DuckDB to libm ulps."""
     import duckdb
 
-    p = srs._LAEA["EPSG:3035"]
+    p = srs.resolve("EPSG:3035")[1]
     lon_sql, lat_sql = srs.laea_inverse_sql("x", "y", p)
     xs = np.linspace(2.5e6, 6.5e6, 25)
     ys = np.linspace(1.5e6, 5.0e6, 25)

@@ -80,7 +80,7 @@ def test_sinu_proj4_and_dispatch():
     assert srs.normalize(key) == key  # self-describing, idempotent
     assert not srs.is_separable(key)
     # fresh-process parse: dispatch works from the string alone
-    p = srs._sinu_of(key)
+    p = srs.resolve(key)[1]
     assert p == MODIS
     xs = np.array([-1111950.0, 0.0, 2223901.0])
     ys = np.array([4447802.0, 0.0, -3335851.0])
