@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
 from ..grid import ChunkGrid
+from ..partition import by_group, spread
 from ..view import CubeView
 from .stjoin import st_join
 
@@ -764,24 +765,11 @@ def build_cells(
         cols += ["bytes", "fmt"]
     if file_mask:
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in joined.columns]
-    src = joined.select(*cols)
-    # pin the kernel's exchange: the grouped rows are byte-light metadata
-    # (or modest encoded payloads) while the per-CHUNK kernel builds dense
-    # planes — AQE's size-based coalescing sees a few MB and would merge the
-    # post-shuffle partitions down to 1-3 tasks, serializing every chunk's
-    # kernel. An explicit repartition on the group key keeps AQE off this
-    # exchange and spreads small chunk counts collision-free (empty
-    # partitions cost ~nothing; the cap bounds stage size at real scale).
-    sp = joined.sparkSession
-    shuffle_n = int(sp.conf.get("spark.sql.shuffle.partitions", "200"))
-    n_groups = grid.count
-    if group_cols != ("chunk_id",):
-        n_groups = None  # salted: group count = chunks x salt, plenty wide
-    if n_groups is not None and n_groups < shuffle_n * 4:
-        src = src.repartition(max(shuffle_n, min(20 * int(n_groups), 4096)),
-                              *group_cols)
-    else:
-        src = src.repartition(shuffle_n, *group_cols)
+    # pin the kernel's exchange on the group key (partition.by_group);
+    # salted groups (chunks x salt) are plenty wide at the shuffle width
+    salted = group_cols != ("chunk_id",)
+    src = by_group(joined.select(*cols), None if salted else grid.count,
+                   *group_cols)
     return src.groupBy(*group_cols).applyInPandas(
         kernel, schema=cells_schema(out_bands)
     )
@@ -801,7 +789,6 @@ def build_cells_salted(
     decode_fn: Callable = default_decode,
     mask=None,
     value_fn: Callable | None = None,
-    salt: int | None = None,
 ) -> DataFrame:
     """Two-phase chunk build for skewed collections: images of a chunk are
     split into ``salt`` sub-groups by image-id hash; each sub-group runs the
@@ -813,19 +800,17 @@ def build_cells_salted(
     src/cube.cpp:1703-1737). Only associative methods are saltable;
     median/first/last need total order and go unsalted.
 
-    ``salt`` defaults to max(32, 2x the session's default parallelism): a
-    FIXED salt caps the hottest chunk's decode at salt-way parallelism, so
-    the hot chunk becomes a serial term that grows with collection size and
-    scaling efficiency decays no matter how many executors join (measured:
-    salt=8 gave 0.53-0.66 efficiency 4->16 cores on the hotspot synth
-    collection; the merge is a native partial-agg groupBy and absorbs any
-    salt count). On a real cluster pass ``salt`` >= 2x total executor
-    slots."""
+    ``salt`` is max(32, 2x the session's default parallelism), which on a
+    cluster is 2x total executor slots: a FIXED salt caps the hottest
+    chunk's decode at salt-way parallelism, so the hot chunk becomes a
+    serial term that grows with collection size and scaling efficiency
+    decays no matter how many executors join (measured: salt=8 gave
+    0.53-0.66 efficiency 4->16 cores on the hotspot synth collection; the
+    merge is a native partial-agg groupBy and absorbs any salt count)."""
     agg = view.aggregation
     if agg not in _SALTABLE:
         raise ValueError(f"aggregation {agg!r} is not saltable (use build_cells)")
-    if salt is None:
-        salt = max(32, 2 * joined.sparkSession.sparkContext.defaultParallelism)
+    salt = max(32, 2 * joined.sparkSession.sparkContext.defaultParallelism)
     salted = joined.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
     kernel_agg = "_sum_count" if agg == "mean" else agg
     partial = build_cells(
@@ -1218,7 +1203,9 @@ def build_cells_long(
     → warp → mask step the chunk kernel runs per chunk — so every
     configuration works here too: regular and labeled time axes, all 12
     resamplers (aggregating ones need a separable view SRS),
-    value-predicate, band and separate-file masks, any view SRS.
+    value-predicate, band and separate-file masks, any view SRS. The scan
+    is Python work, so an input planned with fewer partitions than the
+    session has task slots is first widened by partition.spread.
 
     Preferred when footprints cover FEW cells (coarse cubes over many
     images: contribution rows ≈ images x cells/image). The chunk-kernel path
@@ -1264,15 +1251,11 @@ def build_cells_long(
     window = _view_window(view)
     if window is not None:
         src = src.where(window)
-    # parallelism floor: a small metadata-derived input (one tiny parquet
-    # file -> 1-3 scan tasks) would serialize the whole decode/warp stage.
-    # Repartition ONLY then — large inputs keep scan locality and the
-    # no-bytes-shuffle property (they arrive with many partitions).
-    nparts = src.rdd.getNumPartitions()
-    target = src.sparkSession.sparkContext.defaultParallelism
-    if nparts * 4 < target:
-        src = src.repartition(target)
-    contrib = src.mapInPandas(scan, schema=schema)
+    # a small metadata-derived input (one tiny parquet file -> 1-3 scan
+    # tasks) would serialize the whole decode/warp stage: partition.spread
+    # widens it; large inputs keep scan locality and the no-bytes-shuffle
+    # property (they arrive with many partitions)
+    contrib = spread(src).mapInPandas(scan, schema=schema)
 
     aggs = []
     for b in bands:

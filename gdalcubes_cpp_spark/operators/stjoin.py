@@ -13,16 +13,19 @@ src/image_collection_cube.cpp:315-340):
            key inside downstream grouped kernels.
 
 Four physical methods. method='auto' picks only ``broadcast`` or ``cells``,
-by chunk count: ``broadcast`` up to ``broadcast_threshold`` (5M) chunks,
+by chunk count: ``broadcast`` up to BROADCAST_MAX_CHUNKS (5M) chunks,
 ``cells`` above it. ``s2`` and ``hex`` are chosen explicitly.
 
 * ``broadcast``: the chunk grid is generated from the view (pure arithmetic
   on ``spark.range``) and broadcast; images stream past it with the residual
-  predicate applied directly. No shuffle of the image table at all — the
-  right choice whenever the chunk grid fits in memory (≲ ~5M chunks).
+  predicate applied directly. No shuffle of the image table at all, however
+  few partitions its scan plans: the probe is a JVM predicate over the
+  broadcast grid, cheap per image — the right choice whenever the chunk
+  grid fits in memory (≲ ~5M chunks).
 
-* ``cells``: both sides explode to covering spatial cells at ``cell_deg``
-  resolution (functions/cells.py) and equi-join on cell id — the scale path
+* ``cells``: both sides explode to covering spatial cells one chunk wide
+  (the larger of the chunk's two extents; functions/cells.py) and
+  equi-join on cell id — the scale path
   for planet-sized chunk grids. Duplicate (image, chunk) pairs from multi-
   cell overlaps are eliminated WITHOUT a distinct-shuffle by the standard
   bottom-left-corner ownership trick: a pair is emitted only by the cell
@@ -46,6 +49,8 @@ CHUNK_COLS = [
     "chunk_id", "ch_left", "ch_right", "ch_bottom", "ch_top",
     "ch_t_start", "ch_t_end", "ch_it0",
 ]
+# method='auto' broadcasts chunk grids up to this many chunks
+BROADCAST_MAX_CHUNKS = 5_000_000
 
 
 def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
@@ -158,23 +163,19 @@ def st_join(
     images: DataFrame,
     grid: ChunkGrid,
     method: str = "auto",
-    cell_deg: float | None = None,
-    broadcast_threshold: int = 5_000_000,
 ) -> DataFrame:
     """images ⋈ chunks; returns image columns + CHUNK_COLS."""
     spark = images.sparkSession
     chunks = chunks_df(spark, grid)
     if method == "auto":
-        method = "broadcast" if grid.count <= broadcast_threshold else "cells"
+        method = "broadcast" if grid.count <= BROADCAST_MAX_CHUNKS else "cells"
 
     if method == "broadcast":
-        # a broadcast st_join is a nested-loop probe: every image partition
-        # evaluates the residual predicate against the whole chunk grid, so
-        # a 1-3-partition metadata scan serializes images x chunks predicate
-        # work on as many cores. Widen narrow scans first (footprint tuples
-        # only — the no-bytes-shuffle property is unchanged for wide inputs).
-        return spread(images).join(
-            F.broadcast(chunks), _residual_predicate(images, chunks))
+        # a nested-loop probe of each image against the broadcast grid is a
+        # codegen'd JVM predicate: on a narrow scan it costs less than the
+        # round-robin exchange a spread would put in front of it (16-chunk
+        # grid, 3-partition scan, 4 cores: 0.69 -> 0.48 s without it)
+        return images.join(F.broadcast(chunks), _residual_predicate(images, chunks))
 
     # The three cell-keyed strategies share ONE shape — conservative cover
     # explode on both sides, cell equi-join, exact bbox+time residual,
@@ -187,9 +188,7 @@ def st_join(
     #   'hex'   aperture-7 hexes on the equal-area plane
     #           (functions/hexgrid.py; uniform-area join-key populations)
     #   'cells' the flat lon/lat grid (functions/cells.py, native exprs)
-    deg = cell_deg or max(
-        grid.view.dx * grid.view.chunk_nx, grid.view.dy * grid.view.chunk_ny
-    )
+    deg = max(grid.view.dx * grid.view.chunk_nx, grid.view.dy * grid.view.chunk_ny)
     if method == "s2":
         from ..functions import s2 as s2m
 

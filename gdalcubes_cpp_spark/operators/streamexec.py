@@ -37,7 +37,6 @@ the reference's file_streaming hint, src/stream.h:50).
 
 from __future__ import annotations
 
-import math
 import os
 import struct
 import subprocess
@@ -236,13 +235,14 @@ def stream_exec(cube, cmd):
     import pandas as pd
     from pyspark.sql import functions as F
 
+    from ..partition import by_group
+
     view, bands = cube.view, cube.bands
     nb_o, keep_t, keep_y, keep_x = probe_shape(view, bands, cmd)
     out_bands = tuple(f"band{i + 1}" for i in range(nb_o))
 
-    nct = math.ceil(view.nt / view.chunk_nt)
-    ncy = math.ceil(view.ny / view.chunk_ny)
-    ncx = math.ceil(view.nx / view.chunk_nx)
+    grid = cube.grid
+    nct, ncy, ncx = grid.nct, grid.ncy, grid.ncx
     # scalars only in the closure (grouped-map closures must not capture
     # the Cube/DataFrame)
     vw = view
@@ -288,21 +288,14 @@ def stream_exec(cube, cmd):
         f"`{b}` double" for b in out_bands)
     # One child process per chunk makes each GROUP cost ~a child startup, so
     # two chunks hash-colliding into one partition serialize two children on
-    # one core while others idle. Pre-partition on the chunk key into enough
-    # partitions that collisions are unlikely (empty partitions cost ~nothing;
-    # the groupBy reuses this exchange — ClusteredDistribution is satisfied —
-    # so no extra shuffle is added). Capped so huge chunk counts, where the
-    # law of large numbers balances load anyway, keep normal-sized stages.
-    n_chunks = nct * ncy * ncx
-    sp = cube.df.sparkSession
-    shuffle_n = int(sp.conf.get("spark.sql.shuffle.partitions", "200"))
-    npart = max(shuffle_n, min(20 * n_chunks, 4096))
-    src = (
+    # one core while others idle: partition.by_group sizes the chunk-key
+    # exchange so collisions are unlikely.
+    src = by_group(
         cube.df
         .withColumn("_ct", F.floor(F.col("it") / F.lit(c_nt)).cast("int"))
         .withColumn("_cy", F.floor(F.col("iy") / F.lit(c_ny)).cast("int"))
-        .withColumn("_cx", F.floor(F.col("ix") / F.lit(c_nx)).cast("int"))
-        .repartition(npart, "_ct", "_cy", "_cx")
+        .withColumn("_cx", F.floor(F.col("ix") / F.lit(c_nx)).cast("int")),
+        grid.count, "_ct", "_cy", "_cx",
     )
     df = src.groupBy("_ct", "_cy", "_cx").applyInPandas(runner, schema=schema)
 

@@ -25,11 +25,11 @@ from . import geom
 _ZONAL_STATS = ("min", "max", "mean", "median", "sum", "prod", "count", "var", "sd")
 
 
-def query_points(cube: Cube, points: DataFrame, broadcast: bool = True) -> DataFrame:
+def query_points(cube: Cube, points: DataFrame) -> DataFrame:
     """vector_queries::query_points (src/vector_queries.cpp:36-202): value
     lookup at irregular (x, y, t) points. The reference groups points by
     containing chunk and reads each chunk once (:101-143); the equi-join on
-    cell keys IS that grouping, done by the shuffle. Points outside the cube
+    cell keys IS that grouping, against the broadcast points. Points outside the cube
     extent produce no row (:127-131)."""
     g = cube.grid
     pts = points.withColumns(
@@ -39,13 +39,12 @@ def query_points(cube: Cube, points: DataFrame, broadcast: bool = True) -> DataF
             "it": g.it_expr(F.col("t")),
         }
     ).filter(g.in_bounds_expr(F.col("it"), F.col("iy"), F.col("ix")))
-    left = F.broadcast(pts) if broadcast else pts
-    return left.join(cube.df, KEY, "inner").select(
+    return F.broadcast(pts).join(cube.df, KEY, "inner").select(
         "point_id", *KEY, *[F.col(f"`{b}`") for b in cube.bands]
     )
 
 
-def query_timeseries(cube: Cube, points: DataFrame, broadcast: bool = True) -> DataFrame:
+def query_timeseries(cube: Cube, points: DataFrame) -> DataFrame:
     """vector_queries::query_timeseries (src/vector_queries.cpp:204-370):
     full per-point time series — the same join without the time predicate."""
     g = cube.grid
@@ -55,8 +54,7 @@ def query_timeseries(cube: Cube, points: DataFrame, broadcast: bool = True) -> D
         (F.col("ix") >= 0) & (F.col("ix") < cube.view.nx)
         & (F.col("iy") >= 0) & (F.col("iy") < cube.view.ny)
     )
-    left = F.broadcast(pts) if broadcast else pts
-    return left.join(cube.df, ["iy", "ix"], "inner").select(
+    return F.broadcast(pts).join(cube.df, ["iy", "ix"], "inner").select(
         "point_id", *KEY, *[F.col(f"`{b}`") for b in cube.bands]
     )
 
@@ -144,7 +142,7 @@ def geom_cells(cube: Cube, geoms: DataFrame, shard_cells: int = 256) -> DataFram
 
 
 def extract_geom(
-    cube: Cube, geoms: DataFrame, time_column: bool = False, broadcast: bool = True
+    cube: Cube, geoms: DataFrame, time_column: bool = False
 ) -> DataFrame:
     """extract_geom (src/extract_geom.h:48-51, src/extract_geom.cpp:220-520):
     for each feature, emit one row per covered cube cell (FID, time, bands).
@@ -153,8 +151,7 @@ def extract_geom(
     With ``time_column``, features carry a ``t`` timestamp and only the
     matching time slice is extracted (:294-307)."""
     cells = geom_cells(cube, geoms)
-    left = F.broadcast(cells) if broadcast else cells
-    out = left.join(cube.df, ["iy", "ix"], "inner")
+    out = F.broadcast(cells).join(cube.df, ["iy", "ix"], "inner")
     if time_column:
         g = cube.grid
         ft = geoms.select("fid", g.it_expr(F.col("t")).alias("f_it"))
@@ -163,7 +160,7 @@ def extract_geom(
 
 
 def zonal_statistics(
-    cube: Cube, geoms: DataFrame, stats=("mean", "count"), broadcast: bool = True
+    cube: Cube, geoms: DataFrame, stats=("mean", "count")
 ) -> DataFrame:
     """vector_queries::zonal_statistics (src/vector_queries.cpp:603-1160):
     per-(polygon, time) summary stats per band. Spatial join then a textbook
@@ -178,7 +175,7 @@ def zonal_statistics(
     for s in stats:
         if s not in _ZONAL_STATS:
             raise ValueError(f"unknown zonal stat {s!r}")
-    joined = extract_geom(cube, geoms, broadcast=broadcast)
+    joined = extract_geom(cube, geoms)
     aggs = []
     for b in cube.bands:
         for s in stats:
