@@ -83,11 +83,12 @@ def materialize_images(spark, n_images: int) -> str:
 
 
 def images_pipeline(spark, n_images: int, path: str | None = None,
-                    strategy: str = "auto", method: str = "auto") -> int:
-    """The BASELINE.json headline: spatial-indexed join + cube-chunk tiling
-    with real decode over the input_hint image table. ``method`` picks the
-    st_join strategy (auto/broadcast/grid/s2/hex) so the scaling probe can
-    evidence each one (r4 VERDICT #9)."""
+                    method: str = "auto") -> int:
+    """The BASELINE.json headline: cube-chunk tiling with real decode over
+    the input_hint image table. An explicit ``method`` (broadcast/cells/s2/
+    hex) runs the (image, chunk) assignment join of that st_join method on
+    the same view instead, so the scaling probe can evidence each one: the
+    cube build itself never runs a join for a mean cube."""
     from gdalcubes_cpp_spark.operators.build import build_cube
     from gdalcubes_cpp_spark.view import CubeView
 
@@ -98,15 +99,12 @@ def images_pipeline(spark, n_images: int, path: str | None = None,
         imgs = images_df(spark, n_images)
     else:
         imgs = spark.read.parquet(path)
-    # An explicit st_join method with strategy='auto' would silently take
-    # the cell_long path (mean is a long-agg) and never run st_join at all
-    # — the r5 per-strategy scaling table measured the identical plan twice
-    # because of exactly that. Route to the join-based strategy so method=
-    # is actually exercised.
-    if method != "auto" and strategy == "auto":
-        strategy = "chunk_kernel"
-    cube = build_cube(imgs, v, bands=("B1", "B2"), strategy=strategy,
-                      method=method)
+    if method != "auto":
+        from gdalcubes_cpp_spark.grid import ChunkGrid
+        from gdalcubes_cpp_spark.operators.stjoin import assignment
+
+        return assignment(imgs, ChunkGrid(v), method=method).count()
+    cube = build_cube(imgs, v, bands=("B1", "B2"))
     out = cube.reduce_time([("mean", "B1"), ("count", "B1")])
     return out.df.count()
 

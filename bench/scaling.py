@@ -37,22 +37,15 @@ cores = int(sys.argv[1])
 n = int(sys.argv[2])
 path = sys.argv[3]
 method = sys.argv[5] if len(sys.argv) > 5 else "auto"
-strategy = sys.argv[6] if len(sys.argv) > 6 else "auto"
-# shuffle partitions sized 16x task slots at EVERY level: the salted chunk
-# kernel's reduce tasks mix hot and cold (chunk, salt) groups, and with few
-# partitions the hot-group packing variance makes one task the wall clock —
-# measured at 16 cores / 1.6M images / salt 32: sp=1x cores 82.9s,
-# 4x 66.0s, 8x 55.8s, 16x 40.1s (diminishing after; salt 128/256 at any sp
-# was worse: more groups = more per-group Arrow overhead + merge rows).
-# The ratio scales with the cluster like a real deploy, so lo and hi stay
-# comparable; AQE coalesces the excess when partitions run small.
+# shuffle partitions sized 16x task slots at EVERY level: the ratio scales
+# with the cluster like a real deploy, so lo and hi stay comparable; AQE
+# coalesces the excess when partitions run small.
 spark = get_spark(app=f"scaling-{{cores}}", cores=cores, shuffle_partitions=16 * cores)
 bench.warmup(spark)
 best = None
 for _ in range(int(sys.argv[4])):
     t0 = time.time()
-    rows = bench.images_pipeline(spark, n, path=path, method=method,
-                                 strategy=strategy)
+    rows = bench.images_pipeline(spark, n, path=path, method=method)
     w = time.time() - t0
     best = w if best is None else min(best, w)
 print(json.dumps({{"cores": cores, "wall_s": best, "rows": rows}}))
@@ -61,11 +54,11 @@ spark.stop()
 
 
 def run_level(cores: int, path: str, reps: int, n: int | None = None,
-              method: str = "auto", strategy: str = "auto") -> dict:
+              method: str = "auto") -> dict:
     code = CHILD.format(repo=REPO)
     out = subprocess.run(
         [sys.executable, "-c", code, str(cores), str(n or N), path,
-         str(reps), method, strategy],
+         str(reps), method],
         capture_output=True, text=True, cwd=REPO, timeout=3600,
     )
     line = [l for l in out.stdout.strip().splitlines() if l.startswith("{")][-1]
@@ -82,13 +75,10 @@ def _cooldown(limit: float = 3.0, max_wait: int = 360) -> float:
     return os.getloadavg()[0]
 
 
-# st_join strategies to evidence separately (r4 VERDICT #9): the cell
-# strategies recommended at 100 TB, where neither side broadcasts. One
-# cooled-down (lo, hi) pair each at a reduced N (the st_join+chunk_kernel
-# pipeline costs more per image than the flagship's cell_long plan; the
-# auto flagship above carries the median-of-5 story). method= routes to
-# strategy='chunk_kernel' inside bench.images_pipeline so st_join really
-# runs (r5 ADVICE: under strategy='auto' the method knob was a no-op).
+# st_join methods to evidence separately: the cell methods recommended at
+# 100 TB, where neither side broadcasts. One cooled-down (lo, hi) pair each
+# at a reduced N; an explicit method= makes bench.images_pipeline run the
+# assignment join of that method, so the join itself is what is measured.
 STRATEGIES = ("s2", "hex")
 N_STRAT = int(os.environ.get("SPARK_GRAFT_SCALING_STRAT_IMAGES", "1600000"))
 
@@ -100,13 +90,8 @@ def run_strategies(path: str) -> dict:
         # (the default gate) right after s2's 16-thread JVM exited and
         # measured 0.55 — wait for a genuinely quiet box instead
         la0 = _cooldown(limit=1.0, max_wait=600)
-        # strategy='salted': the join method runs inside the full
-        # st_join + chunk-kernel pipeline with the SALTED two-phase kernel
-        # — the skew-handling plan the north_rule names for 10^12-image
-        # hotspot collections (build_cells_salted); the unsalted kernel's
-        # hottest-chunk task would otherwise bound both levels.
-        lo = run_level(LO, path, 2, n=N_STRAT, method=m, strategy="salted")
-        hi = run_level(HI, path, 3, n=N_STRAT, method=m, strategy="salted")
+        lo = run_level(LO, path, 2, n=N_STRAT, method=m)
+        hi = run_level(HI, path, 3, n=N_STRAT, method=m)
         ips_lo = N_STRAT / lo["wall_s"]
         ips_hi = N_STRAT / hi["wall_s"]
         eff = (ips_hi / ips_lo) / (HI / LO)
@@ -220,9 +205,8 @@ View: 1000x800 cells x 12 monthly slices over 100°x80°.
 
 Same job, same materialized input ({N:,} images), fresh JVM per level,
 shuffle partitions scaling with the level (this table's trials ran the
-r5 1x-cores rule — the cell_long flagship plan shuffles only compact
-cell aggregates, so partition count barely moves it; the salted strategy
-table below uses the measured 16x-cores optimum),
+r5 1x-cores rule — the flagship plan shuffles only compact cell
+aggregates, so partition count barely moves it),
 median of {TRIALS} full (lo, hi) trials (best-of-{REPS_LO}/{REPS_HI} within each JVM);
 the table shows the best trial:
 
@@ -244,19 +228,12 @@ Output row count identical at both levels: {result['rows_equal']}
 ### Per-join-strategy scaling (the 100 TB cell strategies)
 
 One cooled-down (lo, hi) pair per st_join method at {N_STRAT:,} images.
-Unlike the flagship's 'auto' plan (cell_long: decode-at-scan, no explicit
-join), these rows run the st_join + SALTED chunk-kernel pipeline
-(build_cells_salted, the north_rule's explicit skew handling), so the
-requested cover/join method is actually on the measured path — walls are
-therefore NOT comparable to the flagship table, only lo-vs-hi within a
-row. (The r5 table accidentally measured the cell_long plan twice because
-method= was ignored under strategy='auto'; bench.images_pipeline now
-routes an explicit method to the join strategy. Shuffle partitions
-follow the 16x-cores rule at both levels — the measured optimum for the
-salted byte-shuffle's hot-group packing (sweep at 16 cores, salt 32:
-1x=82.9s, 4x=66.0s, 8x=55.8s, 16x=40.1s; salt 128/256 at any sp was
-worse). Re-measure on a loadavg<1 box: a pair started in another JVM's
-exit wake reads ~0.15 lower.)
+Unlike the flagship plan (decode-at-scan, no join), these rows run the
+(image, chunk) assignment join of the named method over the flagship
+view, so the requested cover/join method is what is measured — walls are
+NOT comparable to the flagship table, only lo-vs-hi within a row.
+Re-measure on a loadavg<1 box: a pair started in another JVM's exit wake
+reads ~0.15 lower.
 
 | method | local[{LO}] wall s | local[{HI}] wall s | efficiency | rows equal |
 |---|---|---|---|---|

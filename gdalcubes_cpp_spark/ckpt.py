@@ -63,10 +63,11 @@ def run_partitioned(
     """Materialize ``cells`` (must carry ``chunk_col``) into ``sink`` in
     resumable parts. Returns run metrics {parts_run, parts_skipped, rows}.
 
-    Each part filters on a chunk-id range — with the cells DataFrame built
-    from st_join output this prunes the image side through the join (chunk
-    bounds are derived from chunk_id, so the range filter reaches the
-    broadcast-join probe)."""
+    Each part filters on a chunk-id range. For a cube, pass
+    ``build_cube(...).with_chunk_id()``: chunk_id derives from the grouping
+    keys (it, iy, ix), so Catalyst pushes the range filter below the
+    aggregate, but not into the scan — every part re-reads and decodes the
+    image rows its view window keeps."""
     spark = cells.sparkSession
     spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     done = completed_parts(spark, sink)

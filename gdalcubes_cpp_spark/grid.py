@@ -100,10 +100,12 @@ class ChunkGrid:
         return F.floor((F.lit(v.top) - y) / F.lit(v.dy)).cast("int")
 
     def it_expr(self, ts: Column) -> Column:
-        """Time coordinate of a timestamp column (regular axis only)."""
+        """Time coordinate of a timestamp column. On a labeled axis the
+        exact label match, else -1 (CubeView.slot_index_of)."""
         v = self.view
         if v.labeled:
-            raise ValueError("it_expr needs a regular time axis")
+            labels = ", ".join(f"TIMESTAMP '{t.isoformat(sep=' ')}'" for t in v.time_labels)
+            return (F.array_position(F.expr(f"array({labels})"), ts) - 1).cast("int")
         dt = v.dt
         if dt.unit == "Y":
             return F.floor((F.year(ts) - F.lit(v.t0.year)) / F.lit(dt.n)).cast("int")

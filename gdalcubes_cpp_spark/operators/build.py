@@ -18,22 +18,14 @@ view cells they contribute:
 It runs over flat (image, cell) arrays, so only decode, value_fn and
 non-'near' warps cost a Python call per image.
 
-Two physical strategies aggregate those cells:
-- build_cells (chunk_kernel, salted, streaming ingest): st_join, then one
-  grouped-map pandas UDF per chunk (the reference's unit of parallelism,
-  src/cube.cpp:1703-1737) feeds the chunk's images in (image_id,
-  descriptor) order through the step and streams them into the
-  aggregation_state analogs (_Agg*, src/image_collection_cube.cpp:58-306):
-  mean/min/max/first/last/median/count_values/count_images/none; all-NaN
-  cells emit no row (sparse cube);
-- build_cells_long (cell_long): the step runs at the scan (_scan_batch)
-  and the temporal aggregation becomes a native groupBy over long rows.
-
-Scale notes: the chunk kernel's shuffle is one exchange keyed by chunk_id;
-hot chunks (many overlapping images — skewed cities) can be pre-combined
-via ``salt`` two-phase aggregation for the associative methods
-(mean/min/max/count_*), which bounds any single task's input. Median/first/
-last need total order and run unsalted (documented skew limit).
+The step runs at the scan (scan_cells, one mapInPandas over the image
+rows), so image bytes never cross an exchange. build_cells_long then
+aggregates the long (cell, value) rows with native groupBys, one plan per
+aggregation: per-cell aggregates for mean/min/max/first/last/median, and
+for the slice aggregations (count_values, count_images, none) the
+(chunk, slot) slices each image lands in, from st_join (_touched). No
+Python task is keyed by chunk: map-side partial aggregation and AQE absorb
+hot cells.
 """
 
 from __future__ import annotations
@@ -46,8 +38,8 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
 from ..grid import ChunkGrid
-from ..partition import by_group, spread
-from ..view import CubeView
+from ..partition import spread
+from ..view import CubeView, add_duration
 from .stjoin import st_join
 
 DEFAULT_BANDS = ("B1", "B2")
@@ -66,9 +58,9 @@ def srcdata_decode(nodata=None, scale: float = 1.0, offset: float = 0.0,
     (src/warp.cpp srcnodata -> NaN), and applies packed scale/offset on
     read (auto_unpack, src/ncdf_cube.h:45). ``nodata`` is a scalar for
     all channels or a per-channel sequence (None entries skip); then
-    v = raw*scale + offset. Returns a decode_fn for build_cube — it
-    composes with every strategy because masking happens at the decode
-    boundary, and the NaN-aware warp taps renormalize around the holes.
+    v = raw*scale + offset. Returns a decode_fn for build_cube — masking
+    happens at the decode boundary, and the NaN-aware warp taps
+    renormalize around the holes.
     Collection-format presets carry these values per band
     (sources/formats.py ingest_listing emits nodata/scale columns)."""
 
@@ -458,202 +450,8 @@ def warp_plane_agg(
 
 
 # ---------------------------------------------------------------------------
-# streaming aggregation states (src/image_collection_cube.cpp:58-306)
+# the decode → warp → mask cell step the scan runs per batch
 # ---------------------------------------------------------------------------
-
-
-class _Agg:
-    """init/touch/update/finalize over (nb, nt, ny, nx), one image at a
-    time. ``update(vals, it, iy, ix)`` receives only the cells the image
-    covers, as flat chunk-local indices (vals: (nb, n); iy/ix: (n,)): the
-    per-image cost is O(cells covered), not O(chunk area) — with the
-    hotspot-skewed collection, full-plane updates made the hot chunk's
-    kernel task scan ~the whole chunk per tiny image. No cell repeats within
-    one image, so fancy-indexed ``+=`` and writes are exact. ``touch(it)``
-    fires for EVERY image assigned to the slot, covered cells or not — the
-    semantics that are plane-wide per image (count_images' +1,
-    count_values' and AGG_NONE's plane flip) live there, so images that
-    cover no cell still count."""
-
-    def __init__(self, shape):
-        self.shape = shape
-
-    def touch(self, it: int):
-        pass
-
-    def update(self, vals: np.ndarray, it: int, iy: np.ndarray, ix: np.ndarray):
-        raise NotImplementedError
-
-    def finalize(self) -> np.ndarray:
-        raise NotImplementedError
-
-
-class _AggMean(_Agg):
-    def __init__(self, shape):
-        super().__init__(shape)
-        self.sum = np.zeros(shape)
-        self.cnt = np.zeros(shape, dtype=np.int64)
-
-    def update(self, vals, it, iy, ix):
-        b, c = np.nonzero(~np.isnan(vals))
-        self.sum[b, it, iy[c], ix[c]] += vals[b, c]
-        self.cnt[b, it, iy[c], ix[c]] += 1
-
-    def finalize(self):
-        with np.errstate(invalid="ignore"):
-            out = self.sum / self.cnt  # 0/0 -> NaN (src/image_collection_cube.cpp:96-108)
-        return out
-
-
-class _AggMinMax(_Agg):
-    def __init__(self, shape, fn):
-        super().__init__(shape)
-        self.acc = np.full(shape, np.nan)
-        self.fn = fn
-
-    def update(self, vals, it, iy, ix):
-        self.acc[:, it, iy, ix] = self.fn(self.acc[:, it, iy, ix], vals)
-
-    def finalize(self):
-        return self.acc
-
-
-class _AggFirstLast(_Agg):
-    def __init__(self, shape, first: bool):
-        super().__init__(shape)
-        self.acc = np.full(shape, np.nan)
-        self.first = first
-
-    def update(self, vals, it, iy, ix):
-        win = self.acc[:, it, iy, ix]
-        take = ~np.isnan(vals)
-        if self.first:
-            take &= np.isnan(win)
-        self.acc[:, it, iy, ix] = np.where(take, vals, win)
-
-    def finalize(self):
-        return self.acc
-
-
-class _AggNone(_AggFirstLast):
-    """AGG_NONE: plain overwrite copy (src/image_collection_cube.cpp:294-306)
-    — overwrite is PLANE-wide incl. NaN outside the footprint, so the flip
-    to all-NaN happens in touch() for every slot image."""
-
-    def __init__(self, shape):
-        super().__init__(shape, first=False)
-
-    def touch(self, it):
-        self.acc[:, it] = np.nan
-
-    def update(self, vals, it, iy, ix):
-        self.acc[:, it, iy, ix] = vals  # overwrite incl. NaN bands
-
-
-class _AggCountValues(_Agg):
-    """NaN until the first image lands in a time slot; then the whole
-    (band, t) plane flips to 0 and counts non-NaN pixels
-    (src/image_collection_cube.cpp:179-201)."""
-
-    def __init__(self, shape):
-        super().__init__(shape)
-        self.cnt = np.zeros(shape)
-        self.hit = np.zeros(shape[1], dtype=bool)
-
-    def touch(self, it):
-        self.hit[it] = True
-
-    def update(self, vals, it, iy, ix):
-        self.cnt[:, it, iy, ix] += ~np.isnan(vals)
-
-    def finalize(self):
-        out = self.cnt.copy()
-        out[:, ~self.hit] = np.nan
-        return out
-
-
-class _AggCountImages(_Agg):
-    """counts ALL images hitting the time slot, NaN pixels included; same
-    plane-flip-to-0 rule (src/image_collection_cube.cpp:203-224) — a
-    plane-wide CONSTANT per slot, so the whole update is one scalar."""
-
-    def __init__(self, shape):
-        super().__init__(shape)
-        self.n = np.zeros(shape[1], dtype=np.int64)
-
-    def touch(self, it):
-        self.n[it] += 1
-
-    def update(self, vals, it, iy, ix):
-        pass
-
-    def finalize(self):
-        out = np.empty(self.shape)
-        for it, n in enumerate(self.n):
-            out[:, it] = float(n) if n else np.nan
-        return out
-
-
-class _AggMedian(_Agg):
-    """per-cell value buckets, exact median, avg-of-two-middles for even n
-    (src/image_collection_cube.cpp:112-152). Each image's flat cells are
-    buffered and expanded into per-image planes only at finalize, one slot
-    at a time."""
-
-    def __init__(self, shape):
-        super().__init__(shape)
-        self.buf: list = [[] for _ in range(shape[1])]  # per time slot
-
-    def update(self, vals, it, iy, ix):
-        self.buf[it].append((vals, iy, ix))
-
-    def finalize(self):
-        nb, _nt, ny, nx = self.shape
-        out = np.full(self.shape, np.nan)
-        for it, stack in enumerate(self.buf):
-            if stack:
-                planes = np.full((len(stack), nb, ny, nx), np.nan)
-                for p, (vals, iy, ix) in zip(planes, stack):
-                    p[:, iy, ix] = vals
-                with np.errstate(all="ignore"):
-                    out[:, it] = np.nanmedian(planes, axis=0)
-        return out
-
-
-class _AggSumCount(_AggMean):
-    """Partial state for salted/distributed MEAN: (sum, count) planes."""
-
-    def finalize(self):
-        # (2*nb, nt, ny, nx): [b1_sum..bn_sum, b1_cnt..bn_cnt]
-        return np.concatenate(
-            [np.where(self.cnt > 0, self.sum, np.nan),
-             np.where(self.cnt > 0, self.cnt, np.nan)],
-            axis=0,
-        )
-
-
-def _make_agg(method: str, shape) -> _Agg:
-    if method == "_sum_count":
-        return _AggSumCount(shape)
-    if method == "mean":
-        return _AggMean(shape)
-    if method == "min":
-        return _AggMinMax(shape, np.fmin)
-    if method == "max":
-        return _AggMinMax(shape, np.fmax)
-    if method == "first":
-        return _AggFirstLast(shape, True)
-    if method == "last":
-        return _AggFirstLast(shape, False)
-    if method == "none":
-        return _AggNone(shape)
-    if method == "median":
-        return _AggMedian(shape)
-    if method == "count_values":
-        return _AggCountValues(shape)
-    if method == "count_images":
-        return _AggCountImages(shape)
-    raise ValueError(f"unknown aggregation {method!r}")
 
 
 def _check_mask(mask, value_fn, columns) -> None:
@@ -664,180 +462,6 @@ def _check_mask(mask, value_fn, columns) -> None:
             not isinstance(mask, FileMask) or "m_bytes" in columns):
         raise ValueError(
             f"{type(mask).__name__} needs decoded channels (no value_fn path)")
-
-
-# ---------------------------------------------------------------------------
-# the grouped-map kernel
-# ---------------------------------------------------------------------------
-
-
-def cells_schema(bands) -> str:
-    band_cols = ", ".join(f"`{b}` double" for b in bands)
-    return f"chunk_id long, it int, iy int, ix int, {band_cols}"
-
-
-def build_cells(
-    joined: DataFrame,
-    view: CubeView,
-    bands: tuple = DEFAULT_BANDS,
-    decode_fn: Callable = default_decode,
-    mask=None,
-    value_fn: Callable | None = None,
-    group_cols: tuple = ("chunk_id",),
-    agg_override: str | None = None,
-) -> DataFrame:
-    """st_join output -> sparse wide cube cells (chunk_id, it, iy, ix, B*).
-
-    One grouped-map pandas UDF per chunk: the chunk's images, sorted into
-    the reference's (image_id, descriptor) order, go through _cell_step
-    (decode → warp → mask, restricted to the chunk) at most _STEP_IMAGES
-    at a time, then stream image by image into the aggregation state.
-
-    ``value_fn(image_id_array) -> (nb,) scalars`` replaces decode+warp with a
-    constant per image — the metadata-only path used by the SQL oracle
-    (DuckDB can reproduce a formula, not a PNG decode; pixel-level decode
-    correctness is covered by pytest PSNR/exactness gates instead).
-    """
-    grid = ChunkGrid(view)
-    nb = len(bands)
-    _check_mask(mask, value_fn, joined.columns)
-    file_mask = isinstance(mask, FileMask)
-    agg_method = agg_override or view.aggregation
-    out_bands = (
-        [f"{b}_psum" for b in bands] + [f"{b}_pcnt" for b in bands]
-        if agg_method == "_sum_count" else list(bands)
-    )
-
-    def kernel(pdf: pd.DataFrame):
-        from .. import srs as _srs
-
-        cid = int(pdf["chunk_id"].iloc[0])
-        (it0, it1), (iy0, iy1), (ix0, ix1) = grid.chunk_limits(cid)
-        srs_n = _srs.normalize(view.srs)
-        separable = _srs.is_separable(srs_n)
-        # reference (image_id, descriptor) order, numerically: sort by
-        # (len, id) — equals numeric order for fixed-prefix decimal ids of
-        # ANY length, not just zero-padded ones (first/last determinism,
-        # src/image_collection_cube.cpp:327)
-        pdf = pdf.assign(_idlen=pdf["image_id"].str.len()).sort_values(
-            ["_idlen", "image_id"], kind="mergesort"
-        ).drop(columns=["_idlen"])
-        agg = _make_agg(agg_method, (nb, it1 - it0, iy1 - iy0, ix1 - ix0))
-        for s in range(0, len(pdf), _STEP_IMAGES):
-            slot, row, iy, ix, V = _cell_step(
-                view, pdf.iloc[s:s + _STEP_IMAGES], srs_n, separable, decode_fn,
-                value_fn, mask, nb, (it0, it1, iy0, iy1, ix0, ix1))
-            seg = np.searchsorted(row, np.arange(len(slot) + 1))
-            for k in np.nonzero(slot >= 0)[0]:
-                # plane-wide-per-image semantics (count_images' +1, the plane
-                # flips of count_values/AGG_NONE) fire for EVERY slot image
-                agg.touch(slot[k] - it0)
-                a, e = seg[k], seg[k + 1]
-                if e > a:
-                    agg.update(V[:, a:e], slot[k] - it0, iy[a:e] - iy0, ix[a:e] - ix0)
-        cube = agg.finalize()  # (len(out_bands), nt_c, ny_c, nx_c)
-        keep = ~np.isnan(cube).all(axis=0)
-        if not keep.any():
-            return pd.DataFrame(
-                {"chunk_id": pd.Series([], dtype="int64"),
-                 "it": pd.Series([], dtype="int32"),
-                 "iy": pd.Series([], dtype="int32"),
-                 "ix": pd.Series([], dtype="int32"),
-                 **{b: pd.Series([], dtype="float64") for b in out_bands}}
-            )
-        tt, yy, xx = np.nonzero(keep)
-        out = {
-            "chunk_id": np.full(len(tt), cid, dtype=np.int64),
-            "it": (tt + it0).astype(np.int32),
-            "iy": (yy + iy0).astype(np.int32),
-            "ix": (xx + ix0).astype(np.int32),
-        }
-        for b in range(len(out_bands)):
-            out[out_bands[b]] = cube[b, tt, yy, xx]
-        return pd.DataFrame(out)
-
-    cols = list(group_cols) + [
-        "image_id", "ts", "left", "right", "bottom", "top", "w", "h"
-    ]
-    if "chunk_id" not in cols:
-        cols = ["chunk_id"] + cols
-    if value_fn is None:
-        cols += ["bytes", "fmt"]
-    if file_mask:
-        cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in joined.columns]
-    # pin the kernel's exchange on the group key (partition.by_group);
-    # salted groups (chunks x salt) are plenty wide at the shuffle width
-    salted = group_cols != ("chunk_id",)
-    src = by_group(joined.select(*cols), None if salted else grid.count,
-                   *group_cols)
-    return src.groupBy(*group_cols).applyInPandas(
-        kernel, schema=cells_schema(out_bands)
-    )
-
-
-# ---------------------------------------------------------------------------
-# salted two-phase aggregation for hot chunks (north_rule skew handling)
-# ---------------------------------------------------------------------------
-
-_SALTABLE = {"mean", "min", "max", "count_values", "count_images"}
-
-
-def build_cells_salted(
-    joined: DataFrame,
-    view: CubeView,
-    bands: tuple = DEFAULT_BANDS,
-    decode_fn: Callable = default_decode,
-    mask=None,
-    value_fn: Callable | None = None,
-) -> DataFrame:
-    """Two-phase chunk build for skewed collections: images of a chunk are
-    split into ``salt`` sub-groups by image-id hash; each sub-group runs the
-    chunk kernel producing PARTIAL states (sum/count for mean; partial
-    extremes/counts otherwise); a native groupBy merges. Bounds any single
-    Python task's input to ~1/salt of the hottest chunk — the explicit
-    salted-key handling BASELINE.json's north_rule requires (the reference
-    has no equivalent; its chunk is a hard parallelism unit,
-    src/cube.cpp:1703-1737). Only associative methods are saltable;
-    median/first/last need total order and go unsalted.
-
-    ``salt`` is max(32, 2x the session's default parallelism), which on a
-    cluster is 2x total executor slots: a FIXED salt caps the hottest
-    chunk's decode at salt-way parallelism, so the hot chunk becomes a
-    serial term that grows with collection size and scaling efficiency
-    decays no matter how many executors join (measured: salt=8 gave
-    0.53-0.66 efficiency 4->16 cores on the hotspot synth collection; the
-    merge is a native partial-agg groupBy and absorbs any salt count)."""
-    agg = view.aggregation
-    if agg not in _SALTABLE:
-        raise ValueError(f"aggregation {agg!r} is not saltable (use build_cells)")
-    salt = max(32, 2 * joined.sparkSession.sparkContext.defaultParallelism)
-    salted = joined.withColumn("salt", F.pmod(F.xxhash64("image_id"), F.lit(salt)))
-    kernel_agg = "_sum_count" if agg == "mean" else agg
-    partial = build_cells(
-        salted, view, bands, decode_fn, mask, value_fn,
-        group_cols=("chunk_id", "salt"), agg_override=kernel_agg,
-    )
-    keys = ["chunk_id", "it", "iy", "ix"]
-    if agg == "mean":
-        aggs = [
-            (F.sum(f"`{b}_psum`") / F.sum(f"`{b}_pcnt`")).alias(b) for b in bands
-        ]
-    elif agg == "min":
-        aggs = [F.min(f"`{b}`").alias(b) for b in bands]
-    elif agg == "max":
-        aggs = [F.max(f"`{b}`").alias(b) for b in bands]
-    else:  # count_values / count_images: partial counts add up
-        aggs = [F.sum(f"`{b}`").alias(b) for b in bands]
-    return partial.groupBy(*keys).agg(*aggs)
-
-
-# ---------------------------------------------------------------------------
-# the decode → warp → mask cell step both strategies share
-# ---------------------------------------------------------------------------
-
-# images per _cell_step call in the chunk kernel: the scan's Arrow batch
-# size (session.py), so a hot chunk's transient flat arrays stay bounded
-_STEP_IMAGES = 256
 
 
 def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
@@ -958,18 +582,37 @@ def _view_bbox(view: CubeView, srs_n: str, a_l, a_r, a_b, a_t):
             py.min(axis=0) - pad_y, py.max(axis=0) + pad_y)
 
 
+def _slot_bounds(view: CubeView) -> tuple:
+    """(lo, hi) datetime64[us] arrays over the view's slots: the
+    [t_start, t_end] of the chunk that holds each slot (grid.chunk_bounds,
+    both ends inclusive as in find_range_st)."""
+    grid = ChunkGrid(view)
+    lo = np.empty(view.nt, "datetime64[us]")
+    hi = np.empty(view.nt, "datetime64[us]")
+    for ct in range(grid.nct):
+        it0 = ct * view.chunk_nt
+        it1 = min(it0 + view.chunk_nt, view.nt)
+        lo[it0:it1] = view.datetime_at(it0)
+        try:
+            hi[it0:it1] = (view.time_labels[it1 - 1] if view.labeled
+                           else add_duration(view.t0, view.dt, it1))
+        except (OverflowError, ValueError):  # past year 9999: open end
+            hi[it0:it1] = np.datetime64("9999-12-31T23:59:59.999999")
+    return lo, hi
+
+
 def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
-               decode_fn, value_fn, mask, nb: int, window: tuple):
-    """One batch of image rows -> the cells they contribute inside
-    ``window`` = (it0, it1, iy0, iy1, ix0, ix1), global and end-exclusive.
+               decode_fn, value_fn, mask, nb: int, slot_bounds: tuple):
+    """One batch of image rows -> the view cells they contribute.
 
     Returns (slot, row, iy, ix, V). ``slot`` has one entry per pdf row: the
-    row's global time slot, or -1 where the slot lies outside the window
-    or a FileMask mask_value masks the image; it is decided before any
-    cell test, so an image that covers no cell keeps its slot. The rest is
-    flat per cell, image by image in pdf order and row-major within an
-    image: the pdf row, global iy/ix and V (nb, n) float64. Cells NaN in
-    every band are dropped.
+    row's time slot, or -1 where the image lands in no slot or a FileMask
+    mask_value masks it. An image lands in slot ``it`` when its time maps
+    to ``it`` and also lies in the [t_start, t_end] of its chunk
+    (``slot_bounds``, from _slot_bounds): the reference only reads the
+    images find_range_st returns for the chunk. The rest is flat per cell,
+    image by image in pdf order and row-major within an image: the pdf
+    row, iy/ix and V (nb, n) float64. Cells NaN in every band are dropped.
 
     A per-image loop spends ~30 small numpy calls per image — at 200k
     images that Python overhead dwarfs the actual arithmetic. Here time
@@ -987,14 +630,17 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
         raise ValueError(
             f"aggregating resampler {view.resampling!r} needs a separable view "
             f"SRS (cells are not rectangles in 4326)")
-    it0, it1, wy0, wy1, wx0, wx1 = window
     a_l, a_r = col("left"), col("right")
     a_b, a_t = col("bottom"), col("top")
     a_id, a_mb, a_mv = col("image_id"), col("m_bytes"), col("m_val")
     file_mask = isinstance(mask, FileMask)
     band_mask = isinstance(mask, BandMask) and not file_mask
-    slot = _vec_time_slots(col("ts"), view)
-    valid = (slot >= it0) & (slot < it1)  # src/image_collection_cube.cpp:412-414
+    ts = np.asarray(col("ts")).astype("datetime64[us]")
+    slot = _vec_time_slots(ts, view)
+    valid = (slot >= 0) & (slot < view.nt)  # src/image_collection_cube.cpp:412-414
+    lo, hi = slot_bounds
+    k = np.clip(slot, 0, view.nt - 1)
+    valid &= (ts >= lo[k]) & (ts <= hi[k])
     if file_mask and a_mv is not None:
         # a constant mask plane masks the whole footprint
         mv = pd.to_numeric(pd.Series(a_mv), errors="coerce").to_numpy(np.float64)
@@ -1006,26 +652,26 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     no_cells = (slot, none, none, none, np.empty((nb, 0)))
     if not valid.any():
         return no_cells
-    # covered cell windows. Separable: exact — the window's lon/lat axes
+    # covered cell windows. Separable: exact — the view's lon/lat axes
     # are monotone, so the centres in [left,right)x(bottom,top] are one
     # searchsorted per edge (the reference crops the VRT the same way,
     # src/image_collection_cube.cpp:456-470). Otherwise a conservative
     # bbox that the per-cell membership test below refines.
     if separable:
         lon_ax, lat_ax = _srs.axis_to_wgs84(
-            view.left + (np.arange(wx0, wx1) + 0.5) * view.dx,
-            view.top - (np.arange(wy0, wy1) + 0.5) * view.dy, view.srs)
-        ix0 = wx0 + np.searchsorted(lon_ax, a_l, "left")
-        ix1 = wx0 + np.searchsorted(lon_ax, a_r, "left")
+            view.left + (np.arange(view.nx) + 0.5) * view.dx,
+            view.top - (np.arange(view.ny) + 0.5) * view.dy, view.srs)
+        ix0 = np.searchsorted(lon_ax, a_l, "left")
+        ix1 = np.searchsorted(lon_ax, a_r, "left")
         lat_up = lat_ax[::-1]  # latitude descends with iy
-        iy0 = wy1 - np.searchsorted(lat_up, a_t, "right")
-        iy1 = wy1 - np.searchsorted(lat_up, a_b, "right")
+        iy0 = view.ny - np.searchsorted(lat_up, a_t, "right")
+        iy1 = view.ny - np.searchsorted(lat_up, a_b, "right")
     else:
         v_l, v_r, v_b, v_t = _view_bbox(view, srs_n, a_l, a_r, a_b, a_t)
-        ix0 = np.maximum(wx0, np.floor((v_l - view.left) / view.dx).astype(np.int64))
-        ix1 = np.minimum(wx1, np.ceil((v_r - view.left) / view.dx).astype(np.int64))
-        iy0 = np.maximum(wy0, np.floor((view.top - v_t) / view.dy).astype(np.int64))
-        iy1 = np.minimum(wy1, np.ceil((view.top - v_b) / view.dy).astype(np.int64))
+        ix0 = np.maximum(0, np.floor((v_l - view.left) / view.dx).astype(np.int64))
+        ix1 = np.minimum(view.nx, np.ceil((v_r - view.left) / view.dx).astype(np.int64))
+        iy0 = np.maximum(0, np.floor((view.top - v_t) / view.dy).astype(np.int64))
+        iy1 = np.minimum(view.ny, np.ceil((view.top - v_b) / view.dy).astype(np.int64))
     wx = ix1 - ix0
     wy = iy1 - iy0
     sel = np.nonzero(valid & (wx > 0) & (wy > 0))[0]
@@ -1044,7 +690,7 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     iy = iy0[sel][img] + jy
     ix = ix0[sel][img] + jx
     if separable:
-        lon, lat = lon_ax[ix - wx0], lat_ax[iy - wy0]
+        lon, lat = lon_ax[ix], lat_ax[iy]
     else:
         # point inverse once per distinct cell centre of the batch
         # (overlapping footprints share cells), then strict membership
@@ -1112,18 +758,12 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
 
 
 # ---------------------------------------------------------------------------
-# alternative physical strategy: decode-at-scan + JVM-side aggregation
+# the build: scan rows, the touched slices, native aggregates
 # ---------------------------------------------------------------------------
-
-# aggregations whose per-cell form is a plain groupBy aggregate over
-# (image, cell, value) rows; 'none'/'count_images' keep the chunk kernel
-# ('none' is overwrite-including-NaN, 'count_images' is plane-broadcast)
-_LONG_AGGS = {"mean", "min", "max", "first", "last", "median"}
-
 
 def _scan_batch(
     view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
-    decode_fn, value_fn, mask, need_id: bool, band_names,
+    decode_fn, value_fn, mask, need_id: bool, band_names, slot_bounds,
 ):
     """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows:
     _cell_step over the whole view. Rows come out image by image in input
@@ -1131,7 +771,7 @@ def _scan_batch(
     sums in."""
     slot, row, iy, ix, V = _cell_step(
         view, pdf, srs_n, separable, decode_fn, value_fn, mask,
-        len(band_names), (0, view.nt, 0, view.ny, 0, view.nx))
+        len(band_names), slot_bounds)
     out = {
         "it": slot[row].astype(np.int32),
         "iy": iy.astype(np.int32),
@@ -1144,85 +784,52 @@ def _scan_batch(
     return pd.DataFrame(out)
 
 
-def _view_window(view: CubeView):
-    """JVM-side pre-filter for the cell_long scan: a SUPERSET of the image
-    rows that can emit a cell, so the Python workers receive only those.
+def _view_window(view: CubeView) -> str | None:
+    """JVM-side pre-filter for the scan: a SUPERSET of the image rows that
+    can emit a cell or land in a slice, so the Python workers receive only
+    those. One SQL predicate: the driver builds it in one py4j call rather
+    than one per Column operator.
 
     Space: the footprint meets the view extent in lon/lat (cell centers sit
     half a cell inside the extent, so the non-strict bounds keep every image
-    the scan's strict center test accepts). Time: [start of slot 0, end of
-    slot nt-1) — for M/Y steps slot 0 starts at the first instant of t0's
-    month/year, not at t0 (_vec_time_slots counts calendar months/years).
-    Literals are cast in the session time zone, the zone the Arrow hand-off
-    renders ``ts`` in. None where no exact cheap bound exists: labeled time
-    axes, and non-separable view SRS (a separable SRS maps corners to
-    corners, so srs.bbox_to_wgs84 is exact there).
+    the scan's strict center test accepts). Time: [t0, t0 + nt steps) —
+    an image lands in a slot only at or after its chunk's t_start, and
+    slot nt-1 ends at the latest at t0 + nt steps. Literals are cast in the
+    session time zone, the zone the Arrow hand-off renders ``ts`` in. None
+    where no exact cheap bound exists: labeled time axes, and
+    non-separable view SRS (a separable SRS maps corners to corners, so
+    srs.bbox_to_wgs84 is exact there).
     """
-    from datetime import datetime
-
     from .. import srs as _srs
-    from ..view import add_duration
 
     if view.labeled or not _srs.is_separable(view.srs):
         return None
-    x0, x1, y0, y1 = _srs.bbox_to_wgs84(
-        view.left, view.right, view.bottom, view.top, view.srs)
-    cond = (
-        (F.col("left") <= x1) & (F.col("right") >= x0)
-        & (F.col("bottom") <= y1) & (F.col("top") >= y0)
-    )
-    t0, unit = view.t0, view.dt.unit
-    lo = (datetime(t0.year, 1, 1) if unit == "Y"
-          else datetime(t0.year, t0.month, 1) if unit == "M" else t0)
-    cond &= F.col("ts") >= F.lit(lo.isoformat(sep=" ")).cast("timestamp")
+    x0, x1, y0, y1 = (repr(float(c)) for c in _srs.bbox_to_wgs84(
+        view.left, view.right, view.bottom, view.top, view.srs))
+    cond = (f"`left` <= {x1}D AND `right` >= {x0}D AND `bottom` <= {y1}D AND `top` >= {y0}D"
+            f" AND ts >= CAST('{view.t0.isoformat(sep=' ')}' AS TIMESTAMP)")
     try:
-        hi = add_duration(lo, view.dt, view.nt)
+        hi = add_duration(view.t0, view.dt, view.nt)
     except (OverflowError, ValueError):  # past year 9999: no upper bound
         return cond
-    return cond & (F.col("ts") < F.lit(hi.isoformat(sep=" ")).cast("timestamp"))
+    return cond + f" AND ts < CAST('{hi.isoformat(sep=' ')}' AS TIMESTAMP)"
 
 
-def build_cells_long(
+def scan_cells(
     images: DataFrame,
     view: CubeView,
     bands: tuple = DEFAULT_BANDS,
     decode_fn: Callable = default_decode,
     mask=None,
     value_fn: Callable | None = None,
+    need_id: bool = False,
 ) -> DataFrame:
-    """Cube construction WITHOUT shuffling image bytes: a mapInPandas scan
-    decodes+warps each image where it is read and emits long
-    (it, iy, ix, image_id, v_<band>...) contribution rows; the temporal
-    aggregation is then a native groupBy — Catalyst's partial aggregation
-    (map-side combine) replaces the reference's streaming aggregation_state
-    and AQE absorbs hot-cell skew. No st_join needed: each image's covered
-    cells are derived directly from its footprint (the join stays available
-    as its own operator for assignment queries).
-
-    Each scan batch runs _cell_step over the whole view — the same decode
-    → warp → mask step the chunk kernel runs per chunk — so every
-    configuration works here too: regular and labeled time axes, all 12
-    resamplers (aggregating ones need a separable view SRS),
-    value-predicate, band and separate-file masks, any view SRS. The scan
-    is Python work, so an input planned with fewer partitions than the
-    session has task slots is first widened by partition.spread.
-
-    Preferred when footprints cover FEW cells (coarse cubes over many
-    images: contribution rows ≈ images x cells/image). The chunk-kernel path
-    (build_cells) wins when one image covers MANY cells (fine cubes), where
-    dense plane arithmetic beats row explosion; build_cube(strategy="auto")
-    takes this path for every aggregation in _LONG_AGGS.
-    """
-    agg = view.aggregation
-    if agg not in _LONG_AGGS:
-        raise ValueError(f"cell-long strategy supports {sorted(_LONG_AGGS)}")
-    _check_mask(mask, value_fn, images.columns)
-    file_mask = isinstance(mask, FileMask)
-
-    # only first/last order by image_id; for every other aggregation the id
-    # never leaves the scan — omitting it drops the widest column from the
-    # python->JVM Arrow transfer and the partial-agg input (guide §2.3)
-    need_id = agg in ("first", "last")
+    """The scan: a mapInPandas over the image rows runs _cell_step (decode
+    → warp → mask) where each image is read and emits long
+    (it, iy, ix[, image_id], v_<band>...) rows, one per covered cell. Image
+    bytes never cross an exchange. The scan is Python work, so an input
+    planned with fewer partitions than the session has task slots is first
+    widened by partition.spread."""
     # w/h are NOT selected: the decoded array's own shape drives the warp,
     # so the columns would only widen the scan and the Arrow transfer
     cols = ["ts", "left", "right", "bottom", "top"]
@@ -1230,8 +837,9 @@ def build_cells_long(
         cols.insert(0, "image_id")  # value_fn derives values from the id
     if value_fn is None:
         cols += ["bytes", "fmt"]
-    if file_mask:
+    if isinstance(mask, FileMask):
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
+    slot_bounds = _slot_bounds(view)
 
     def scan(batches):
         from .. import srs as _srs
@@ -1240,7 +848,7 @@ def build_cells_long(
         separable = _srs.is_separable(srs_n)
         for pdf in batches:
             yield _scan_batch(view, pdf, srs_n, separable, decode_fn, value_fn,
-                              mask, need_id, bands)
+                              mask, need_id, bands, slot_bounds)
 
     schema = (
         "it int, iy int, ix int, "
@@ -1255,8 +863,118 @@ def build_cells_long(
     # tasks) would serialize the whole decode/warp stage: partition.spread
     # widens it; large inputs keep scan locality and the no-bytes-shuffle
     # property (they arrive with many partitions)
-    contrib = spread(src).mapInPandas(scan, schema=schema)
+    return spread(src).mapInPandas(scan, schema=schema)
 
+
+def _mask_hits(mask: BandMask, v) -> F.Column:
+    """BandMask.test of one value per row as a Column; NULL/NaN never masks."""
+    if mask.values is not None:
+        m = v.isin([float(x) for x in mask.values])
+    else:
+        m = (v >= mask.vmin) & (v <= mask.vmax)
+    if mask.invert:
+        m = ~m
+    return F.coalesce(m & ~F.isnan(v), F.lit(False))
+
+
+def _touched(images: DataFrame, view: CubeView, mask, need_id: bool) -> DataFrame:
+    """(chunk_id, it[, image_id]) rows: every image in every (chunk, slot)
+    slice it lands in, covered cells or not — the set the slice
+    aggregations act on (count_images adds 1 per image, count_values and
+    AGG_NONE reset the slice, src/image_collection_cube.cpp:179-224,
+    294-306). st_join gives the (image, chunk) pairs
+    (find_range_st); grid.it_expr gives the image's slot, which must be one
+    of the chunk's slots. An image a FileMask mask_value masks lands in no
+    slice, as in _cell_step. Footprints and times only: no decode."""
+    grid = ChunkGrid(view)
+    window = _view_window(view)
+    pairs = st_join(images if window is None else images.where(window), grid)
+    it = grid.it_expr(F.col("ts"))
+    keep = (it >= F.col("ch_it0")) & (
+        it < F.least(F.col("ch_it0") + view.chunk_nt, F.lit(view.nt)))
+    if isinstance(mask, FileMask) and "m_val" in images.columns:
+        keep &= ~_mask_hits(mask, F.col("m_val"))
+    return pairs.where(keep).select(
+        "chunk_id", it.alias("it"), *(["image_id"] if need_id else []))
+
+
+def _slice_cells(slices: DataFrame, view: CubeView, *exprs: str) -> DataFrame:
+    """(it, iy, ix, *exprs) rows, one per cell of each (chunk_id, it) slice
+    row: iy, ix run over the chunk's cell ranges, clamped at the cube
+    boundary; ``exprs`` are SQL over the slice row's columns."""
+    grid = ChunkGrid(view)
+    iy0 = f"CAST(chunk_id % {grid.ncy * grid.ncx} DIV {grid.ncx} AS INT) * {view.chunk_ny}"
+    ix0 = f"CAST(chunk_id % {grid.ncx} AS INT) * {view.chunk_nx}"
+    return (
+        slices
+        .selectExpr("*", f"explode(sequence({iy0}, least({iy0} + {view.chunk_ny}, {view.ny}) - 1)) AS iy")
+        .selectExpr("it", "iy", f"explode(sequence({ix0}, least({ix0} + {view.chunk_nx}, {view.nx}) - 1)) AS ix",
+                    *exprs)
+    )
+
+
+def _id_order():
+    """The reference's (image_id, descriptor) order
+    (src/image_collection_cube.cpp:327) as a sortable struct: (len, id) is
+    numeric order for decimal ids of any length."""
+    return F.struct(F.length("image_id").alias("l"), F.col("image_id").alias("s"))
+
+
+def build_cells_long(
+    images: DataFrame,
+    view: CubeView,
+    bands: tuple = DEFAULT_BANDS,
+    decode_fn: Callable = default_decode,
+    mask=None,
+    value_fn: Callable | None = None,
+) -> DataFrame:
+    """Sparse cube cells (it, iy, ix, <band>...) for every aggregation.
+
+    The reference aggregates image by image into per-chunk state
+    (src/image_collection_cube.cpp:58-306). Here scan_cells decodes and
+    warps each image where it is read and emits one long row per covered
+    cell, and the temporal aggregation is a native groupBy: Catalyst's
+    partial aggregation (map-side combine) stands in for the streaming
+    aggregation_state, and AQE absorbs hot-cell skew. No Python task is
+    keyed by chunk, so a hot chunk is no serial term.
+
+    - mean/min/max/median: the per-cell aggregate of the scan rows;
+    - first/last: min_by/max_by in (image_id, descriptor) order;
+    - count_images: the count of _touched images per slice, written into
+      every cell of the slice (no scan, no decode);
+    - count_values: per-cell non-NaN counts in every cell of every touched
+      slice, 0 where no image covers the cell;
+    - none: the last touched image in (image_id, descriptor) order owns
+      the slice; its scan rows are the slice.
+
+    Every configuration works: regular and labeled time axes, all 12
+    resamplers (aggregating ones need a separable view SRS),
+    value-predicate, band and separate-file masks, any view SRS. All-NaN
+    cells emit no row.
+    """
+    agg = view.aggregation
+    _check_mask(mask, value_fn, images.columns)
+    if agg == "count_images":
+        counts = _touched(images, view, mask, False).groupBy("chunk_id", "it").count()
+        return _slice_cells(counts, view, *[f"CAST(count AS DOUBLE) AS `{b}`" for b in bands])
+    contrib = scan_cells(images, view, bands, decode_fn, mask, value_fn,
+                         need_id=agg in ("first", "last", "none"))
+    if agg == "count_values":
+        # the count slices are exactly the touched ones; the scan rows
+        # aggregate in their own stage, beside the join
+        counts = contrib.groupBy("it", "iy", "ix").agg(
+            *[F.expr(f"count(`v_{b}`) AS `n_{b}`") for b in bands])
+        cells = _slice_cells(_touched(images, view, mask, False).distinct(), view)
+        return cells.join(counts, ["it", "iy", "ix"], "left").selectExpr(
+            "it", "iy", "ix", *[f"CAST(coalesce(`n_{b}`, 0) AS DOUBLE) AS `{b}`" for b in bands])
+    if agg == "none":
+        grid = ChunkGrid(view)
+        owners = _touched(images, view, mask, True).groupBy("chunk_id", "it").agg(
+            F.max(_id_order()).getField("s").alias("image_id"))
+        rows = contrib.withColumn(
+            "chunk_id", grid.chunk_id_expr(F.col("it"), F.col("iy"), F.col("ix")))
+        return rows.join(owners, ["chunk_id", "it", "image_id"]).select(
+            "it", "iy", "ix", *[F.col(f"`v_{b}`").alias(b) for b in bands])
     aggs = []
     for b in bands:
         v = F.col(f"`v_{b}`")
@@ -1267,13 +985,10 @@ def build_cells_long(
         elif agg == "max":
             aggs.append(F.max(v).alias(b))
         elif agg == "first":
-            # first non-NaN in (image_id, descriptor) order; (len, id) struct
-            # ordering == numeric order for decimal ids of any length
-            okey = F.struct(F.length("image_id").alias("l"), F.col("image_id").alias("s"))
-            aggs.append(F.min_by(v, F.when(v.isNotNull(), okey)).alias(b))
+            # first non-NaN in (image_id, descriptor) order
+            aggs.append(F.min_by(v, F.when(v.isNotNull(), _id_order())).alias(b))
         elif agg == "last":
-            okey = F.struct(F.length("image_id").alias("l"), F.col("image_id").alias("s"))
-            aggs.append(F.max_by(v, F.when(v.isNotNull(), okey)).alias(b))
+            aggs.append(F.max_by(v, F.when(v.isNotNull(), _id_order())).alias(b))
         elif agg == "median":
             aggs.append(F.expr(f"percentile(`v_{b}`, 0.5)").alias(b))
     return contrib.groupBy("it", "iy", "ix").agg(*aggs)
@@ -1283,52 +998,34 @@ def build_cube(
     images: DataFrame,
     view: CubeView,
     bands: tuple = DEFAULT_BANDS,
-    method: str = "auto",
     decode_fn: Callable = default_decode,
     mask=None,
     value_fn: Callable | None = None,
     strategy: str = "auto",
     mask_table: DataFrame | None = None,
 ):
-    """images table + view -> Cube (the image_collection_cube analog).
-
-    strategy: 'chunk_kernel' = st_join + grouped-map kernel (reference
-    shape; dense planes, best when images cover many cells each);
-    'cell_long' = decode-at-scan + JVM groupBy (no bytes shuffle, best for
-    coarse cubes / many images); 'auto' = cell_long for supported
-    aggregations, else chunk_kernel.
+    """images table + view -> Cube (the image_collection_cube analog),
+    built by build_cells_long. ``strategy`` names the one build path and
+    accepts only "auto".
 
     ``mask_table``: separate-file mask rows for a FileMask (the SCL
     pattern) — left-joined onto the image table on image_id before the
-    scan/join, see join_mask_table.
+    scan, see join_mask_table.
     """
     from ..cube import Cube
 
+    if strategy != "auto":
+        raise ValueError(f"unknown build strategy {strategy!r} (only 'auto')")
     if isinstance(mask, FileMask):
         if mask_table is None:
             raise ValueError("FileMask needs mask_table=(image_id, bytes/fmt | mask_value)")
         images = join_mask_table(images, mask_table)
     elif mask_table is not None:
         raise ValueError("mask_table is only meaningful with a FileMask")
-    if strategy == "auto":
-        strategy = "cell_long" if view.aggregation in _LONG_AGGS else "chunk_kernel"
-    if strategy == "cell_long":
-        cells = build_cells_long(images, view, bands, decode_fn, mask, value_fn)
-    elif strategy == "salted":
-        grid = ChunkGrid(view)
-        joined = st_join(images, grid, method=method)
-        cells = build_cells_salted(joined, view, bands, decode_fn, mask, value_fn).drop("chunk_id")
-    else:
-        grid = ChunkGrid(view)
-        joined = st_join(images, grid, method=method)
-        cells = build_cells(joined, view, bands, decode_fn, mask, value_fn).drop("chunk_id")
-    # Arrow carries missing cells as NaN; the Cube convention is NULL-as-
-    # nodata (NaN semantics of the reference map onto SQL NULL aggregation)
-    cells = cells.select(
-        "it", "iy", "ix",
-        *[
-            F.when(F.isnan(F.col(f"`{b}`")), None).otherwise(F.col(f"`{b}`")).alias(b)
-            for b in bands
-        ],
-    )
+    cells = build_cells_long(images, view, bands, decode_fn, mask, value_fn)
+    # the Cube convention is NULL-as-nodata (NaN semantics of the reference
+    # map onto SQL NULL aggregation); the scan's Arrow hand-off already
+    # turns NaN into NULL, and no cell leaves here as NaN
+    cells = cells.selectExpr("it", "iy", "ix", *[
+        f"CASE WHEN isnan(`{b}`) THEN NULL ELSE `{b}` END AS `{b}`" for b in bands])
     return Cube(cells, view, tuple(bands))

@@ -91,9 +91,9 @@ def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
     # predicate, as the reference transforms the query rect
     # (src/image_collection.cpp:1326). Mercator is monotonic/axis-aligned,
     # so corners map to corners — native column math, no UDF. Non-separable
-    # SRS (UTM) get a CONSERVATIVE 4326 bbox below (the chunk kernel's
-    # per-cell inside test keeps the result exact; extra joined images
-    # contribute no cells).
+    # SRS (UTM) get a CONSERVATIVE 4326 bbox below (a superset of the
+    # images whose footprint meets the chunk, as in the reference's
+    # transformed query rect).
     from .. import srs as _srs
 
     srs_n = _srs.normalize(v.srs)

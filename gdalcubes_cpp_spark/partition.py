@@ -12,7 +12,7 @@ counts planned partitions, not the ones holding rows, so it widens such a
 file only when it plans fewer partitions than the session has task slots.
 
 ``by_group`` sizes the hash exchange in front of a grouped-map kernel whose
-every group (a chunk) is a unit of Python work.
+every group (a chunk) is a unit of Python work (operators/streamexec.py).
 """
 
 from __future__ import annotations
@@ -45,9 +45,9 @@ def spread(df: DataFrame) -> DataFrame:
     return df.repartition(target)
 
 
-def by_group(df: DataFrame, n_groups: int | None, *keys) -> DataFrame:
+def by_group(df: DataFrame, n_groups: int, *keys) -> DataFrame:
     """Hash-repartition ``df`` on ``keys`` for a grouped-map kernel over
-    ``n_groups`` groups (``None``: unknown, e.g. salted chunk groups).
+    ``n_groups`` groups.
 
     Fewer groups than 4x spark.sql.shuffle.partitions get 20 partitions per
     group, between the shuffle width and 4096, so two groups rarely share a
@@ -58,6 +58,6 @@ def by_group(df: DataFrame, n_groups: int | None, *keys) -> DataFrame:
     follows reuses it (no second shuffle).
     """
     n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
-    if n_groups is not None and n_groups < 4 * n:
+    if n_groups < 4 * n:
         n = max(n, min(20 * n_groups, 4096))
     return df.repartition(n, *keys)

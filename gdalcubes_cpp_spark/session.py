@@ -2,10 +2,10 @@
 
 Local mode for tests/bench; on a real cluster the same config ships via
 ``spark-submit --py-files`` (north_rule). AQE is on: runtime coalescing +
-skew-join splitting handle residual hot-cell skew after explicit salting.
+skew-join splitting handle hot-cell skew after map-side partial aggregation.
 
-Python workers: every task of every Python stage (the cell_long scan, the
-chunk kernel, the s2/hex covers, the streaming UDFs) starts with PySpark's
+Python workers: every task of every Python stage (the cube scan, the s2/hex
+covers, the streaming UDFs) starts with PySpark's
 ``worker_util.setup_spark_files``, which calls ``importlib.invalidate_caches()``.
 Workers import PySpark from ``$SPARK_HOME/python/lib/pyspark.zip``, and on
 Python 3.11 each of a worker's 14-16 ``zipimport.zipimporter`` entries answers

@@ -50,7 +50,7 @@ Out of scope (raises cleanly): external-file elements.
 Spark-side use: granule bytes live in a binary column; codecs.decode
 dispatches on the HDF4 magic and stacks the file's SDS planes as
 channels, so MODIS-preset collections flow through the same Arrow-batched
-chunk kernel as PNG/GeoTIFF payloads (operators/build.py).
+cube scan as PNG/GeoTIFF payloads (operators/build.py).
 """
 
 from __future__ import annotations

@@ -4,13 +4,14 @@ rows into a materialized cube table.
 The reference is strictly batch (its "streaming" is chunk→subprocess piping,
 src/stream.cpp — replaced wholesale by Arrow UDFs). This module adds the
 Spark-native capability the reference lacks: a file-source stream of image
-rows → st_join → incremental aggregation state per (cell, band) →
-foreachBatch merge into the sink.
+rows → the cube build's scan → incremental aggregation state per
+(cell, band) → foreachBatch merge into the sink.
 
 Incremental temporal aggregation uses the decomposable form of each method
-(mean → (sum, count) emitted DIRECTLY by the build kernel's ``_sum_count``
-partial-state aggregation — never recovered as mean*count, which is not
-bit-exact in IEEE754; min/max → running extreme; count_* → running count).
+(mean → (sum, count), summed DIRECTLY from the scan's long rows — never
+recovered as mean*count, which is not bit-exact in IEEE754; min/max →
+running extreme; count_* → running count, zero-filled slices included).
+Every method but mean folds the batch's own build_cube cells.
 
 Exactly-once: foreachBatch is at-least-once (a microbatch can replay after a
 failure that committed the sink write but not the checkpoint), so the sink's
@@ -34,9 +35,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from ..grid import ChunkGrid
-from ..operators.build import build_cells
-from ..operators.stjoin import st_join
+from ..operators.build import build_cube, scan_cells
 from ..view import CubeView
 
 STATE_AGGS = ("mean", "min", "max", "count_values", "count_images")
@@ -115,7 +114,6 @@ def incremental_build(
             f"streaming ingestion supports decomposable aggregations {STATE_AGGS}; "
             f"median/first/last need total order (batch build)"
         )
-    grid = ChunkGrid(view)
     stream = stream_images(spark, input_dir, SCHEMA_DDL)
     keys = ["it", "iy", "ix"]
 
@@ -138,28 +136,17 @@ def incremental_build(
             batch_df = batch_df.filter(
                 F.input_file_name().isin([str(f) for f in new_files])
             )
-        joined = st_join(batch_df, grid)
-
-        def nn(col, name):  # kernel emits NaN for band-absent cells; merge
-            c = F.col(f"`{col}`")  # arithmetic needs NULL (NaN + x = NaN)
-            return F.when(F.isnan(c), None).otherwise(c).alias(name)
-
         if agg == "mean":
-            # direct (sum, count) partial states from the build kernel —
-            # bit-exact decomposition, single kernel pass
-            sc = build_cells(
-                joined, view, bands, value_fn=value_fn, agg_override="_sum_count"
-            )
-            delta = sc.select(
-                *keys,
-                *[nn(f"{b}_psum", f"{b}_sum") for b in bands],
-                *[nn(f"{b}_pcnt", f"{b}_cnt") for b in bands],
+            # (sum, count) states summed from the scan rows — bit-exact
+            # decomposition; a band absent from a cell sums to NULL, count 0
+            rows = scan_cells(batch_df, view, bands, value_fn=value_fn)
+            delta = rows.groupBy(*keys).agg(
+                *[F.sum(f"`v_{b}`").alias(f"{b}_sum") for b in bands],
+                *[F.count(f"`v_{b}`").alias(f"{b}_cnt") for b in bands],
             )
         else:
-            cells = build_cells(joined, view, bands, value_fn=value_fn)
-            delta = cells.drop("chunk_id").select(
-                *keys, *[nn(b, f"{b}_state") for b in bands]
-            )
+            cells = build_cube(batch_df, view, bands, value_fn=value_fn).df
+            delta = cells.select(*keys, *[F.col(b).alias(f"{b}_state") for b in bands])
         next_version = 0 if man is None else man["version"] + 1
         if man is None:
             merged = delta

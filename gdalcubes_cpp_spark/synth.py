@@ -13,8 +13,9 @@ where footprints are stored as WGS84 bboxes (src/image_collection.cpp:309-326):
 Everything derives from splitmix64 mixes of the image index — no RNG state,
 no external data; the numpy oracle in tests regenerates identical content.
 Footprint centers are drawn from a skewed distribution (60% of images pile
-onto 3 hotspots) so a few spatial cells are hot — exercising the salted-key
-skew handling required by BASELINE.json ``north_rule``.
+onto 3 hotspots) so a few spatial cells are hot — exercising the skew
+handling required by BASELINE.json ``north_rule`` (map-side partial
+aggregation and AQE in the cube build).
 
 Pixel content: per-band gradient + checkerboard parameterized by the image
 hash; band B1 and B2 are the two channels of one encoded image

@@ -346,9 +346,8 @@ class CubeView:
         """Aggregation-slot index used by the BUILD kernels. Regular axis:
         same as time_index_of. Labeled axis: EXACT label match only, else -1
         (dropped) — the reference errors on non-exact labels
-        (src/view.h:825-881 index_at_datetime); we drop instead of raising
-        so both build strategies (chunk_kernel, cell_long) agree on which
-        images contribute."""
+        (src/view.h:825-881 index_at_datetime); we drop instead of raising,
+        as the build's scan (build._vec_time_slots) and grid.it_expr do."""
         if self.labeled:
             i = self.time_index_of(t)
             if 0 <= i < self.nt and self.time_labels[i] == t:

@@ -7,10 +7,38 @@ codecs, warp_plane, the srs transforms, and the mask classes' test/apply.
 
 from __future__ import annotations
 
+from dataclasses import replace
+
 import numpy as np
 
 from gdalcubes_cpp_spark import codecs, srs
 from gdalcubes_cpp_spark.operators.build import AGG_RESAMPLERS, BandMask, FileMask, warp_plane
+
+
+# Chunk layouts an oracle-exact build test runs one view under, by test id.
+# count_images, count_values, none and the chunk-bounded time slots of
+# mid-period M/Y axes depend on where chunk edges fall:
+#   cell_long     the view's own chunk_size
+#   chunk_kernel  one-slot chunks a few cells wide, ragged at the view's
+#                 edges, so every image spans many chunks
+#   salted        one chunk holding the whole view, so every image lands in
+#                 the same (hot) chunk
+# The ids are the names of the build strategies these cases selected before
+# the cell_long scan became the only build path; they keep the test ids.
+CHUNK_LAYOUTS = ("cell_long", "chunk_kernel", "salted")
+
+
+def relayout(view, layout: str):
+    """``view`` with the chunk layout named ``layout`` (CHUNK_LAYOUTS)."""
+    if layout == "cell_long":
+        return view
+    if layout == "chunk_kernel":
+        nt, ny, nx = 1, max(1, view.ny * 5 // 16), max(1, view.nx * 3 // 8)
+    elif layout == "salted":
+        nt, ny, nx = view.nt, view.ny, view.nx
+    else:
+        raise ValueError(f"unknown chunk layout {layout!r}")
+    return replace(view, chunk_nt=nt, chunk_ny=ny, chunk_nx=nx)
 
 
 def _is_masked(mask, v) -> bool:

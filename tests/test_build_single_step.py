@@ -1,10 +1,11 @@
 """Guard against a second decode → warp path in the cube build.
 
-Both build strategies run one per-batch cell step (build._cell_step): the
-chunk kernel per chunk, the cell_long scan per scan batch. A second
-per-image decode/warp loop would fork the strategies' outputs, and every
-test would have to pin both copies. This parses operators/build.py and
-checks which functions call the warp and decode primitives."""
+The build runs one per-batch cell step (build._cell_step) at the scan. A
+second per-image decode/warp loop, or a second physical strategy (a
+grouped-map kernel per chunk), would fork the outputs, and every test
+would have to pin both copies. This parses operators/build.py and checks
+which functions call the warp and decode primitives, and that no
+grouped-map kernel is left."""
 
 from __future__ import annotations
 
@@ -62,3 +63,10 @@ def test_decode_called_only_by_decode_planes():
     callers = _callers({"decode_fn", "default_decode"})
     bad = sorted(set(callers) - {"_decode_planes"})
     assert not bad, f"decode_fn/default_decode called outside _decode_planes: {bad}"
+
+
+def test_build_has_no_grouped_map_kernel():
+    tree = ast.parse(BUILD.read_text(encoding="utf-8"))
+    names = {n.attr for n in ast.walk(tree) if isinstance(n, ast.Attribute)}
+    names |= {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+    assert "applyInPandas" not in names

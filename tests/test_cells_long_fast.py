@@ -1,12 +1,10 @@
-"""Correctness pins for the cell_long scan (build._scan_batch).
+"""Correctness pins for the cube build's scan (build._scan_batch).
 
-The scan runs the shared decode → warp → mask step (build._cell_step) on
-every cell_long configuration: regular and labeled time axes, all 12
-resamplers, value-predicate, band and separate-file masks, separable and
+The scan runs the decode → warp → mask step (build._cell_step) on every
+configuration: regular and labeled time axes, all 12 resamplers,
+value-predicate, band and separate-file masks, separable and
 non-separable view SRS. Each case is checked cell for cell against the
-numpy oracle tests/oracle_np.dense_cube; the mask, value_fn, labeled and
-other-SRS cases check the chunk kernel against it too, since both
-strategies now share the step.
+numpy oracle tests/oracle_np.dense_cube.
 """
 
 from __future__ import annotations
@@ -67,7 +65,43 @@ def test_vec_time_slots_labeled_matches_scalar():
     assert (got >= 0).any() and (got == -1).any()
 
 
-# ---------------------------------------------- cell_long == oracle (cells)
+@pytest.mark.parametrize("dt_str,t0,labeled", [
+    ("P1M", "2020-01-01", False), ("P2Y", "2001-01-01", False),
+    ("P1D", "2020-06-01", False), ("PT90S", "2020-06-01", False),
+    ("P1D", "2020-06-01", True),
+])
+def test_it_expr_matches_vec_time_slots(spark, dt_str, t0, labeled):
+    """grid.it_expr (the JVM slot of the touched-slice set) equals the
+    scan's _vec_time_slots on sub-second-jittered timestamps; on a labeled
+    axis both match labels exactly, else -1."""
+    from pyspark.sql import functions as F
+
+    from gdalcubes_cpp_spark.grid import ChunkGrid
+
+    v = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
+                        t0=t0, nt=7, dt=dt_str)
+    rng = np.random.RandomState(5)
+    base = np.datetime64(v.t0, "us")
+    step = (v.dt.seconds if v.dt.unit not in "YM" else 40 * 86400) * 10**6
+    ts = base + rng.randint(-step, 9 * step, 400).astype("timedelta64[us]")
+    # exact slot starts, and one microsecond either side of them
+    starts = np.array([np.datetime64(v.datetime_at(k), "us") for k in range(v.nt)])
+    ts = np.concatenate([ts, starts, starts - np.timedelta64(1, "us"),
+                         starts + np.timedelta64(1, "us")])
+    if labeled:  # sub-second labels, each hit exactly and 1 us either side
+        labels = starts[::2] + np.timedelta64(123456, "us")
+        ts = np.concatenate([ts, labels, labels - np.timedelta64(1, "us"),
+                             labels + np.timedelta64(1, "us")])
+        v = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
+                            time_labels=[t.item() for t in labels])
+    df = spark.createDataFrame(pd.DataFrame({"k": np.arange(len(ts)), "ts": ts}))
+    got = [r[1] for r in df.select("k", ChunkGrid(v).it_expr(F.col("ts"))).orderBy("k").collect()]
+    want = _vec_time_slots(ts, v)
+    np.testing.assert_array_equal(got, want)
+    assert len(set(want[want >= 0].tolist())) >= 4
+
+
+# ---------------------------------------------- the build == oracle (cells)
 
 def _images_pdf(n=400, seed=7, nch=2, lon0=-50.0, lat0=-40.0,
                 lon_span=90.0, lat_span=72.0):
@@ -98,20 +132,20 @@ def _collect_sorted(df):
     return sorted(tuple(r) for r in df.collect())
 
 
-def _cube(imgs, v, strategy, **kw):
-    return build_cube(imgs, v, bands=("B1", "B2"), strategy=strategy, **kw).collect_dense()
+def _cube(imgs, v, **kw):
+    return build_cube(imgs, v, bands=("B1", "B2"), **kw).collect_dense()
 
 
 def _assert_cells_equal(got, want):
-    """Same NaN pattern and values to 1e-9 (the long strategy's Spark avg
-    and the dense references sum in different orders)."""
+    """Same NaN pattern and values to 1e-9 (Spark's avg and the dense
+    reference sum in different orders)."""
     assert_dense_equal(got, want)
     assert np.isfinite(got).any()
 
 
 def _assert_matches_oracle(spark, pdf, v, value_fn=None, mask=None, mask_table=None):
-    """cell_long and chunk_kernel, each against the numpy oracle. ``pdf``
-    and ``mask_table`` are pandas; value_fn cases drop the payload."""
+    """The build against the numpy oracle. ``pdf`` and ``mask_table`` are
+    pandas; value_fn cases drop the payload."""
     if value_fn is not None:
         pdf = pdf.drop(columns=["bytes", "fmt"])
     want = dense_cube(pdf, v, resampling=v.resampling, aggregation=v.aggregation,
@@ -120,9 +154,8 @@ def _assert_matches_oracle(spark, pdf, v, value_fn=None, mask=None, mask_table=N
     if mask_table is not None:
         kw["mask_table"] = spark.createDataFrame(mask_table)
     imgs = spark.createDataFrame(pdf)
-    got = _cube(imgs, v, "cell_long", **kw)
+    got = _cube(imgs, v, **kw)
     _assert_cells_equal(got, want)
-    _assert_cells_equal(_cube(imgs, v, "chunk_kernel", **kw), want)
     return got
 
 
@@ -132,7 +165,7 @@ def test_fast_equals_loop_bytes_near(spark, agg):
                         t0="2020-01-01", t1="2020-12-31", dt="P1M",
                         aggregation=agg, resampling="near", chunk_size=(4, 50, 60))
     pdf = _images_pdf(400)
-    got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+    got = _cube(spark.createDataFrame(pdf), v)
     _assert_cells_equal(got, dense_cube(pdf, v, aggregation=agg))
 
 
@@ -182,7 +215,7 @@ def test_cell_long_resampling(spark, srs, resampling):
                         aggregation="mean", resampling=resampling,
                         chunk_size=(4, 25, 30))
     pdf = _images_pdf(200)
-    got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+    got = _cube(spark.createDataFrame(pdf), v)
     _assert_cells_equal(got, dense_cube(pdf, v, resampling=resampling))
 
 
@@ -200,7 +233,7 @@ def test_cell_long_labeled_axis(spark, value_fn):
     if value_fn:
         got = _assert_matches_oracle(spark, pdf, v, value_fn=_vfn)
     else:
-        got = _cube(spark.createDataFrame(pdf), v, "cell_long")
+        got = _cube(spark.createDataFrame(pdf), v)
         _assert_cells_equal(got, dense_cube(pdf, v))
     assert (np.isfinite(got).any(axis=(0, 2, 3))).sum() > 1
 
@@ -214,7 +247,7 @@ def test_cell_long_band_mask(spark):
     got = _assert_matches_oracle(spark, pdf, v,
                                  mask=BandMask(channel=2, vmin=0.0, vmax=90.0))
     assert np.isnan(got).sum() > np.isnan(
-        _cube(spark.createDataFrame(pdf), v, "cell_long")).sum()
+        _cube(spark.createDataFrame(pdf), v)).sum()
 
 
 @pytest.mark.parametrize("resampling", ["near", "bilinear"])
@@ -236,7 +269,7 @@ def test_cell_long_file_mask_bytes(spark, resampling):
     got = _assert_matches_oracle(spark, pdf, v, mask=FileMask(values=[2, 5, 7]),
                                  mask_table=mtab)
     assert np.isnan(got).sum() > np.isnan(
-        _cube(spark.createDataFrame(pdf), v, "cell_long")).sum()
+        _cube(spark.createDataFrame(pdf), v)).sum()
 
 
 @pytest.mark.parametrize("resampling", ["near", "bilinear"])
@@ -249,7 +282,7 @@ def test_cell_long_utm_bytes(spark, resampling):
 def test_footprint_edges_on_cell_centres(spark, srs):
     """Footprints whose edges lie exactly on cell centres (and on chunk
     edges): a centre on the left/top edge is covered, one on the
-    right/bottom edge is not — for both strategies."""
+    right/bottom edge is not."""
     from gdalcubes_cpp_spark import srs as _srs
 
     ext = dict(left=-10.0, right=10.0, bottom=-8.0, top=8.0)
@@ -280,11 +313,56 @@ def test_footprint_edges_on_cell_centres(spark, srs):
     _assert_matches_oracle(spark, pdf, v, value_fn=_vfn)
 
 
+# ------------------------- slice aggregations (count_values, count_images, none)
+
+_SLICE_AGGS = ["count_values", "count_images", "none"]
+
+
+@pytest.mark.parametrize("agg", _SLICE_AGGS)
+def test_slice_aggs_utm(spark, agg):
+    """A UTM view: st_join's conservative 4326 chunk boxes touch slices
+    whose cells no image covers; the counts still write 0 there."""
+    v = CubeView.create(**dict(_UTM, aggregation=agg), resampling="near")
+    got = _assert_matches_oracle(spark, _images_pdf(300, seed=3, **_UTM_IMAGES), v,
+                                 value_fn=_vfn)
+    if agg == "count_values":
+        assert (got == 0).any()
+
+
+@pytest.mark.parametrize("agg", _SLICE_AGGS)
+def test_slice_aggs_labeled_axis(spark, agg):
+    pdf = _images_pdf(300)
+    ts = sorted(pdf["ts"])
+    labels = [t.to_pydatetime() for t in ts[::5]] + [dt.datetime(2020, 6, 15, 0, 0, 1)]
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=60, ny=50,
+                        time_labels=labels, aggregation=agg,
+                        resampling="near", chunk_size=(4, 25, 30))
+    _assert_matches_oracle(spark, pdf, v, value_fn=_vfn)
+
+
+@pytest.mark.parametrize("agg", _SLICE_AGGS)
+def test_slice_aggs_file_mask_value(spark, agg):
+    """A FileMask mask_value drops the whole image: it lands in no slice."""
+    v = CubeView.create(left=-50, right=50, bottom=-40, top=40, nx=60, ny=50,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation=agg, resampling="near", chunk_size=(2, 25, 30))
+    pdf = _images_pdf(300)
+    mtab = pd.DataFrame({"image_id": pdf["image_id"][::2],
+                         "mask_value": np.arange(150) % 4 * 1.0})
+    mtab.loc[mtab.index[::7], "mask_value"] = np.nan  # NaN never masks
+    fm = FileMask(values=[1.0, 2.0])
+    got = _assert_matches_oracle(spark, pdf, v, value_fn=_vfn, mask=fm,
+                                 mask_table=mtab)
+    plain = dense_cube(pdf.drop(columns=["bytes", "fmt"]), v, aggregation=agg,
+                       value_fn=_vfn)
+    assert not np.array_equal(got, plain, equal_nan=True)
+
+
 # ------------------------------------------- view-window pre-filter (JVM side)
 
 @pytest.mark.parametrize("srs,dt_str,t0,nt", [
-    ("EPSG:4326", "P1M", "2020-03-15", 3),   # mid-month t0: slot 0 starts 03-01
-    ("EPSG:4326", "P1Y", "2020-06-15", 1),   # mid-year t0: slot 0 starts 01-01
+    ("EPSG:4326", "P1M", "2020-03-15", 3),   # mid-month t0: chunk 0 starts at t0
+    ("EPSG:4326", "P1Y", "2020-06-15", 1),   # mid-year t0
     ("EPSG:3857", "P2M", "2020-05-20", 2),
     ("EPSG:4326", "P1D", "2020-04-10", 20),
     ("EPSG:6933", "P1M", "2020-02-01", 2),   # separable CEA: exact corners
@@ -314,8 +392,8 @@ def test_view_window_prefilter_keeps_outputs(spark, monkeypatch, srs, dt_str, t0
         bo = -50.0 + rng.rand() * 100.0
         rows.append((lo, lo + 0.5 + rng.rand() * 4.0, bo, bo + 0.5 + rng.rand() * 4.0,
                      dt.datetime(2019, 6, 1) + dt.timedelta(hours=int(rng.randint(0, 24 * 730)))))
-    # images over the view dated inside slot 0 but BEFORE t0 (and just
-    # before slot 0) — a filter on ts >= t0 would drop the former
+    # images over the view dated in slot 0's month/year but BEFORE t0 (and
+    # just before it): they land in no slot, so the window may drop them
     start = v.t0.replace(day=1) if dt_str.endswith("M") else (
         v.t0.replace(month=1, day=1) if dt_str.endswith("Y") else v.t0)
     for d in (0, 1, 3, -1):

@@ -8,8 +8,7 @@ from pyspark.sql import functions as F
 
 from gdalcubes_cpp_spark import ckpt, synth
 from gdalcubes_cpp_spark.grid import ChunkGrid
-from gdalcubes_cpp_spark.operators.build import build_cube, build_cells
-from gdalcubes_cpp_spark.operators.stjoin import st_join
+from gdalcubes_cpp_spark.operators.build import build_cube
 from gdalcubes_cpp_spark.plans.jsonplan import plan_from_json
 from gdalcubes_cpp_spark.view import CubeView
 
@@ -26,7 +25,7 @@ def test_checkpointed_run_and_resume(spark, tmp_path):
     v = view_small()
     g = ChunkGrid(v)
     imgs = synth.images_df(spark, 150)
-    cells = build_cells(st_join(imgs, g), v)
+    cells = build_cube(imgs, v).with_chunk_id()
     sink = str(tmp_path / "sink")
 
     m1 = ckpt.run_partitioned(cells, sink, g.count, n_parts=4)
@@ -79,28 +78,36 @@ def test_json_plan_roundtrip(spark):
     assert np.allclose(got[0, 0], b1.mean(axis=0))
 
 
+def _stream_twice(spark, tmp_path, v, pdf):
+    """Fold pdf's two halves as two microbatches; returns the finalized
+    cube and the (sink, checkpoint, input) paths."""
+    from gdalcubes_cpp_spark.streaming.ingest import finalize_state, incremental_build
+
+    in_dir = str(tmp_path / "in")
+    spark.createDataFrame(pdf.iloc[:60]).write.mode("overwrite").parquet(in_dir)
+    sink = str(tmp_path / "state")
+    cp = str(tmp_path / "cp")
+    incremental_build(spark, in_dir, v, sink, cp).awaitTermination(120)
+    spark.createDataFrame(pdf.iloc[60:]).write.mode("append").parquet(in_dir)
+    incremental_build(spark, in_dir, v, sink, cp).awaitTermination(120)
+    return finalize_state(spark, sink, v).collect_dense(), (sink, cp, in_dir)
+
+
 def test_streaming_incremental_build(spark, tmp_path):
     """Two microbatches of images folded incrementally == one batch build."""
     from gdalcubes_cpp_spark.streaming.ingest import finalize_state, incremental_build
 
+    pdf = synth.images_pdf(120)
+    # count_values: each batch zero-fills the slices its images land in;
+    # the additive merge must keep the union of those zeros
+    cv = view_small(aggregation="count_values")
+    got, _ = _stream_twice(spark, tmp_path / "cv", cv, pdf)
+    want = build_cube(spark.createDataFrame(pdf), cv).collect_dense()
+    assert (got == 0).any()
+    np.testing.assert_array_equal(got, want)
+
     v = view_small(aggregation="mean")
-    n = 120
-    pdf = synth.images_pdf(n)
-    in_dir = str(tmp_path / "in")
-    half1 = spark.createDataFrame(pdf.iloc[:60])
-    half2 = spark.createDataFrame(pdf.iloc[60:])
-    half1.write.mode("overwrite").parquet(in_dir)
-
-    sink = str(tmp_path / "state")
-    cp = str(tmp_path / "cp")
-    q = incremental_build(spark, in_dir, v, sink, cp)
-    q.awaitTermination(120)
-
-    half2.write.mode("append").parquet(in_dir)
-    q2 = incremental_build(spark, in_dir, v, sink, cp)
-    q2.awaitTermination(120)
-
-    got = finalize_state(spark, sink, v).collect_dense()
+    got, (sink, cp, in_dir) = _stream_twice(spark, tmp_path, v, pdf)
     want = build_cube(spark.createDataFrame(pdf), v).collect_dense()
     assert (np.isnan(got) == np.isnan(want)).all()
     m = np.isfinite(want)
@@ -166,10 +173,11 @@ def test_read_chunks_partition_pruning(spark, tmp_path):
 
 
 def test_flagship_plan_single_narrow_exchange(spark):
-    """Plan-shape regression guard for the flagship cell_long build: the
+    """Plan-shape regression guard for the flagship mean build: the
     ONLY exchange carries narrow partial-aggregate rows — image bytes are
-    decoded at the scan and never shuffle. (PLANS.md 'cube build,
-    cell_long strategy' — this pins it against future refactors.)"""
+    decoded at the scan and never shuffle. (PLANS.md 'cube build
+    (mean/min/max/first/last/median)' — this pins it against future
+    refactors.)"""
     import io
     import re
     from contextlib import redirect_stdout
@@ -183,7 +191,7 @@ def test_flagship_plan_single_narrow_exchange(spark):
         t0="2020-01-01", t1="2020-12-31", dt="P1M",
         aggregation="mean", resampling="near", chunk_size=(8, 20, 20),
     )
-    cube = build_cube(images_df(spark, 200), v, bands=("B1", "B2"), strategy="cell_long")
+    cube = build_cube(images_df(spark, 200), v, bands=("B1", "B2"))
     buf = io.StringIO()
     with redirect_stdout(buf):
         cube.df.explain("formatted")

@@ -95,5 +95,4 @@ def test_image_touching_view_edge_joins_but_contributes_nothing(spark):
     row["ts"] = pd.Timestamp("2020-01-15")
     imgs = spark.createDataFrame(row)
     assert assignment(imgs, ChunkGrid(v)).count() == 1  # touching -> joins
-    for strategy in ("chunk_kernel", "cell_long"):
-        assert build_cube(imgs, v, strategy=strategy).df.count() == 0
+    assert build_cube(imgs, v).df.count() == 0

@@ -72,11 +72,11 @@ def _plan(df) -> str:
 
 
 # (n_groups, spark.sql.shuffle.partitions) -> partitions of the per-chunk
-# exchange; the chunk kernel's and stream_exec's plans carry these counts
+# exchange; stream_exec's plans carry these counts
 @pytest.mark.parametrize("n_groups,shuffle,want", [
     (1, 4, 20), (3, 4, 60), (12, 16, 240), (15, 4, 300), (16, 4, 4),
     (63, 16, 1260), (64, 16, 16), (3, 200, 200), (300, 200, 4096),
-    (799, 200, 4096), (800, 200, 200), (10**6, 16, 16), (None, 16, 16),
+    (799, 200, 4096), (800, 200, 200), (10**6, 16, 16),
 ])
 def test_by_group_partition_counts(spark, n_groups, shuffle, want):
     old = spark.conf.get("spark.sql.shuffle.partitions")
@@ -124,7 +124,7 @@ def test_cell_long_widens_narrow_input_by_spread(spark):
                         chunk_size=(4, 32, 32))
     pdf = synth.images_pdf(200)
     images = spark.createDataFrame(pdf).repartition(dp - 1)
-    cube = build_cube(images, v, bands=("B1", "B2"), strategy="cell_long")
+    cube = build_cube(images, v, bands=("B1", "B2"))
     assert f"RoundRobinPartitioning({dp})" in _plan(cube.df)
     got = cube.collect_dense()
     assert_dense_equal(got, dense_cube(pdf, v))

@@ -128,10 +128,11 @@ def test_agg_nearest_fallback(plane):
     assert np.array_equal(got, near)  # 1 source center per 4x4 target block
 
 
-@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
-def test_build_average_resampling_exact(spark, strategy):
+@pytest.mark.parametrize("layout", ["chunk_kernel", "cell_long"])
+def test_build_average_resampling_exact(spark, layout):
     """Full cube build with resampling='average' (the downsampling workhorse,
-    src/warp.cpp:167) == the chunk-iterating numpy oracle."""
+    src/warp.cpp:167) == the chunk-iterating numpy oracle, on two chunk
+    layouts (oracle_np.CHUNK_LAYOUTS)."""
     pdf = synth.images_pdf(120)
     imgs = spark.createDataFrame(pdf)
     v = CubeView.create(
@@ -139,7 +140,8 @@ def test_build_average_resampling_exact(spark, strategy):
         t0="2020-01-01", t1="2020-12-31", dt="P2M",
         aggregation="mean", resampling="average", chunk_size=(3, 8, 8),
     )
-    got = build_cube(imgs, v, strategy=strategy).collect_dense()
+    v = oracle_np.relayout(v, layout)
+    got = build_cube(imgs, v).collect_dense()
     want = oracle_np.dense_cube(pdf, v, resampling="average", aggregation="mean")
     oracle_np.assert_dense_equal(got, want)
 

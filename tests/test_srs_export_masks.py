@@ -20,10 +20,11 @@ def test_mercator_constants():
     assert srs.lat_to_y(85.0511287798066) == pytest.approx(20037508.34, abs=1.0)
 
 
-@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
-def test_build_3857_view(spark, strategy):
+@pytest.mark.parametrize("layout", ["chunk_kernel", "cell_long"])
+def test_build_3857_view(spark, layout):
     """A web-mercator view over the hotspot: engine result must equal the
-    numpy oracle evaluated at the mercator cell centers transformed to 4326."""
+    numpy oracle evaluated at the mercator cell centers transformed to 4326,
+    on two chunk layouts (oracle_np.CHUNK_LAYOUTS)."""
     n = 150
     images = spark.createDataFrame(synth.images_pdf(n))
     l, r = float(srs.lon_to_x(-12)), float(srs.lon_to_x(-8))
@@ -33,7 +34,8 @@ def test_build_3857_view(spark, strategy):
         t0="2020-01-01", t1="2020-12-31", dt="P1M",
         aggregation="mean", resampling="near", chunk_size=(4, 24, 24),
     )
-    got = build_cube(images, v, strategy=strategy).collect_dense()
+    v = oracle_np.relayout(v, layout)
+    got = build_cube(images, v).collect_dense()
     # oracle: sample at transformed centers
     pdf = synth.images_pdf(n).sort_values("image_id")
     xs = srs.x_to_lon(v.left + (np.arange(v.nx) + 0.5) * v.dx)
@@ -93,16 +95,16 @@ def test_masks(spark):
         t0="2020-01-01", t1="2020-12-31", dt="P1M",
         aggregation="first", resampling="near", chunk_size=(4, 16, 16),
     )
-    plain = build_cube(images, v, strategy="chunk_kernel").collect_dense()
+    plain = build_cube(images, v).collect_dense()
     rmask = RangeMask(band_idx=0, vmin=0.0, vmax=100.0)
-    masked = build_cube(images, v, mask=rmask, strategy="chunk_kernel").collect_dense()
+    masked = build_cube(images, v, mask=rmask).collect_dense()
     # wherever B1 (first image's) value was in [0,100], the cell must be gone
     # in the masked cube OR replaced by a later image's value
     m_was = np.isfinite(plain[0]) & (plain[0] >= 0) & (plain[0] <= 100)
     changed = np.isnan(masked[0]) | (masked[0] != plain[0])
     assert changed[m_was].mean() > 0.9  # first-agg: later image may fill in
     vmask = ValueMask(band_idx=0, values=[1.0, 2.0, 3.0], invert=True)
-    inv = build_cube(images, v, mask=vmask, strategy="chunk_kernel").collect_dense()
+    inv = build_cube(images, v, mask=vmask).collect_dense()
     keep = np.isfinite(inv[0])
     assert set(np.unique(inv[0][keep])) <= {1.0, 2.0, 3.0}
 
@@ -178,10 +180,8 @@ def test_band_mask_scl_pattern(spark):
     # numpy oracle: bilinear data warp + NEAREST mask warp per image
     want = oracle_np.dense_cube(pdf, v, resampling="bilinear", mask=bm)
     assert np.isfinite(want).any()
-    for strategy in ("chunk_kernel", "cell_long"):
-        got = build_cube(imgs, v, bands=("B1", "B2"), mask=bm,
-                         strategy=strategy).collect_dense()
-        oracle_np.assert_dense_equal(got, want)
+    got = build_cube(imgs, v, bands=("B1", "B2"), mask=bm).collect_dense()
+    oracle_np.assert_dense_equal(got, want)
 
     # value_fn path must refuse loudly
     import pytest as _pt
@@ -196,7 +196,7 @@ def test_file_mask_separate_file(spark):
     — the real Sentinel-2 layout: SCL at 20 m vs data at 10 m). The mask
     table left-joins on image_id; the mask plane decodes from its own
     bytes (its own w/h) and warps NEAREST; images without a mask row pass
-    through unmasked. Both build strategies vs a numpy oracle."""
+    through unmasked. The build vs a numpy oracle."""
     import numpy as np
     import pandas as pd
 
@@ -234,14 +234,10 @@ def test_file_mask_separate_file(spark):
     # (coarser) pixel grid; unmatched images unmasked
     want = oracle_np.dense_cube(pdf, v, resampling="bilinear", mask=fm, mask_table=mpdf)
     assert np.isfinite(want).any()
-    for strategy in ("chunk_kernel", "cell_long"):
-        a = build_cube(
-            imgs, v, bands=("B1", "B2"), mask=fm, mask_table=mtab,
-            strategy=strategy,
-        ).collect_dense()
-        oracle_np.assert_dense_equal(a, want)
+    a = build_cube(imgs, v, bands=("B1", "B2"), mask=fm, mask_table=mtab).collect_dense()
+    oracle_np.assert_dense_equal(a, want)
     # masking actually bit: some cells differ from the unmasked build
-    plain = build_cube(imgs, v, bands=("B1", "B2"), strategy="chunk_kernel").collect_dense()
+    plain = build_cube(imgs, v, bands=("B1", "B2")).collect_dense()
     assert np.isnan(a).sum() != np.isnan(plain).sum() or not np.allclose(
         a[np.isfinite(a) & np.isfinite(plain)], plain[np.isfinite(a) & np.isfinite(plain)]
     )
@@ -253,10 +249,11 @@ def test_file_mask_separate_file(spark):
         build_cube(imgs, v, bands=("B1",), mask=fm)
 
 
-@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
-def test_file_mask_bytes_rejects_value_fn(spark, strategy):
+@pytest.mark.parametrize("layout", ["chunk_kernel", "cell_long"])
+def test_file_mask_bytes_rejects_value_fn(spark, layout):
     """A FileMask whose mask table carries bytes needs decoded mask planes;
-    the metadata value_fn path must refuse it instead of dropping the mask."""
+    the metadata value_fn path must refuse it instead of dropping the mask,
+    whatever the chunk layout (oracle_np.CHUNK_LAYOUTS)."""
     import datetime as dt
 
     from gdalcubes_cpp_spark import codecs
@@ -270,9 +267,10 @@ def test_file_mask_bytes_rejects_value_fn(spark, strategy):
         "image_id string, bytes binary, fmt string")
     v = CubeView.create(left=0.0, right=6.0, bottom=0.0, top=6.0, nx=24, ny=24,
                         t0="2020-01-01", nt=1, dt="P1M", aggregation="mean")
+    v = oracle_np.relayout(v, layout)
     with pytest.raises(ValueError, match="FileMask"):
         build_cube(imgs, v, bands=("B1",), mask=FileMask(values=[3]),
-                   mask_table=mtab, value_fn=lambda i: (1.0,), strategy=strategy)
+                   mask_table=mtab, value_fn=lambda i: (1.0,))
 
 
 def test_file_mask_metadata_value(spark):
@@ -295,34 +293,33 @@ def test_file_mask_metadata_value(spark):
         (k % 101).cast("double").alias("mask_value"),
     )
     fm = FileMask(vmin=20.0, vmax=60.0)
-    for strategy in ("chunk_kernel", "cell_long", "salted"):
-        got = build_cube(
-            imgs, V_ENG, bands=("B1", "B2"), value_fn=_value_fn,
-            mask=fm, mask_table=mtab, strategy=strategy,
-        ).df.toPandas().sort_values(["it", "iy", "ix"]).reset_index(drop=True)
-        want = build_cube(
-            imgs.filter(~((k.isNull()) | False)).join(
-                o.select(F.lpad(k.cast("string"), 10, "0").alias("image_id"),
-                         (k % 101).alias("mv")), "image_id"
-            ).filter(~F.col("mv").between(20, 60)).drop("mv"),
-            V_ENG, bands=("B1", "B2"), value_fn=_value_fn, strategy=strategy,
-        ).df.toPandas().sort_values(["it", "iy", "ix"]).reset_index(drop=True)
-        assert len(got) == len(want)
-        assert (got[["it", "iy", "ix"]].values == want[["it", "iy", "ix"]].values).all()
-        import numpy as np
+    got = build_cube(
+        imgs, V_ENG, bands=("B1", "B2"), value_fn=_value_fn,
+        mask=fm, mask_table=mtab,
+    ).df.toPandas().sort_values(["it", "iy", "ix"]).reset_index(drop=True)
+    want = build_cube(
+        imgs.filter(~((k.isNull()) | False)).join(
+            o.select(F.lpad(k.cast("string"), 10, "0").alias("image_id"),
+                     (k % 101).alias("mv")), "image_id"
+        ).filter(~F.col("mv").between(20, 60)).drop("mv"),
+        V_ENG, bands=("B1", "B2"), value_fn=_value_fn,
+    ).df.toPandas().sort_values(["it", "iy", "ix"]).reset_index(drop=True)
+    assert len(got) == len(want)
+    assert (got[["it", "iy", "ix"]].values == want[["it", "iy", "ix"]].values).all()
+    import numpy as np
 
-        for c in ("B1", "B2"):
-            ga, wa = got[c].to_numpy(), want[c].to_numpy()
-            assert ((np.isnan(ga) == np.isnan(wa)) | ~np.isnan(ga)).all()
-            mm = ~np.isnan(ga)
-            assert np.allclose(ga[mm], wa[mm], atol=1e-12)
+    for c in ("B1", "B2"):
+        ga, wa = got[c].to_numpy(), want[c].to_numpy()
+        assert ((np.isnan(ga) == np.isnan(wa)) | ~np.isnan(ga)).all()
+        mm = ~np.isnan(ga)
+        assert np.allclose(ga[mm], wa[mm], atol=1e-12)
 
 
 def test_srcdata_decode_nodata_scale(spark):
     """srcdata_decode (GDAL srcnodata + auto_unpack analog): declared
     nodata values leave the aggregation entirely and scale/offset unpack
     on read — cell-exact vs the numpy oracle with the SAME wrapped
-    decoder, on both build strategies."""
+    decoder."""
     import numpy as np
 
     from gdalcubes_cpp_spark.operators.build import build_cube, srcdata_decode
@@ -341,16 +338,14 @@ def test_srcdata_decode_nodata_scale(spark):
     dec = srcdata_decode(nodata=[77, None], scale=0.5, offset=10.0)
     imgs = images_df(spark, 150)
     pdf = images_pdf(150)
-    for strategy in ("chunk_kernel", "cell_long"):
-        got = build_cube(imgs, v, bands=("B1", "B2"), decode_fn=dec,
-                         strategy=strategy).df.collect()
-        want = dense_cube(pdf, v, decode=dec)
-        dense_got = np.full_like(want, np.nan)
-        for r in got:
-            for bi, b in enumerate(("B1", "B2")):
-                if r[b] is not None:
-                    dense_got[bi, r["it"], r["iy"], r["ix"]] = r[b]
-        assert np.allclose(dense_got, want, equal_nan=True, atol=1e-9), strategy
+    got = build_cube(imgs, v, bands=("B1", "B2"), decode_fn=dec).df.collect()
+    want = dense_cube(pdf, v, decode=dec)
+    dense_got = np.full_like(want, np.nan)
+    for r in got:
+        for bi, b in enumerate(("B1", "B2")):
+            if r[b] is not None:
+                dense_got[bi, r["it"], r["iy"], r["ix"]] = r[b]
+    assert np.allclose(dense_got, want, equal_nan=True, atol=1e-9)
     # the oracle comparison above already proves masked-77 pixels are gone
     # (a plain-decode oracle run would mismatch wherever 77 occurred)
     plain = dense_cube(pdf, v)

@@ -160,9 +160,8 @@ UTM_VIEW = dict(
 
 
 def test_utm_build_strategies_and_oracle(spark):
-    """EPSG:32633 cube build: chunk_kernel (st_join + conservative 4326 chunk
-    bboxes) and cell_long (conservative view-coord windows) each agree
-    exactly with the per-cell inverse-TM numpy oracle."""
+    """EPSG:32633 cube build (conservative view-coord windows at the scan)
+    agrees exactly with the per-cell inverse-TM numpy oracle."""
     from gdalcubes_cpp_spark.operators.build import build_cube
 
     from .oracle_np import dense_cube
@@ -173,11 +172,9 @@ def test_utm_build_strategies_and_oracle(spark):
     want = dense_cube(pdf, v, value_fn=vf)
     mo = np.isfinite(want)
     assert mo.any()
-    for strategy in ("chunk_kernel", "cell_long"):
-        got = build_cube(imgs, v, bands=("B1", "B2"), value_fn=vf,
-                         strategy=strategy).collect_dense()
-        assert (np.isnan(got) == np.isnan(want)).all(), strategy
-        assert (got[mo] == want[mo]).all(), strategy
+    got = build_cube(imgs, v, bands=("B1", "B2"), value_fn=vf).collect_dense()
+    assert (np.isnan(got) == np.isnan(want)).all()
+    assert (got[mo] == want[mo]).all()
 
 
 def test_utm_build_real_decode(spark):

@@ -1,5 +1,5 @@
-"""ST-join exactness (both physical strategies) + cube build vs numpy oracle
-for every temporal aggregation method and both resamplings."""
+"""ST-join exactness (every join method) + cube build vs numpy oracle for
+every temporal aggregation method and both resamplings."""
 
 import numpy as np
 import pytest
@@ -48,20 +48,21 @@ def test_stjoin_exact_both_methods(spark, images, pdf):
         assert got == want, f"method={method}"
 
 
-@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long", "salted"])
-@pytest.mark.parametrize(
-    "agg", ["mean", "min", "max", "first", "last", "median", "count_values", "count_images"]
-)
-def test_build_aggregations_exact(spark, images, pdf, agg, strategy):
-    if strategy == "cell_long" and agg.startswith("count"):
-        pytest.skip("plane-flip-to-0 semantics need the chunk kernel")
-    if strategy == "salted" and agg not in ("mean", "min", "max", "count_values", "count_images"):
-        pytest.skip("median/first/last need total order (not saltable)")
-    v = make_view(aggregation=agg)
-    cube = build_cube(images, v, strategy=strategy)
-    got = cube.collect_dense()
+AGGS = ["mean", "min", "max", "first", "last", "median", "count_values",
+        "count_images", "none"]
+
+
+@pytest.mark.parametrize("layout", oracle_np.CHUNK_LAYOUTS)
+@pytest.mark.parametrize("agg", AGGS)
+def test_build_aggregations_exact(spark, images, pdf, agg, layout):
+    """Every aggregation == the numpy oracle, on each chunk layout of
+    oracle_np.CHUNK_LAYOUTS (the per-chunk slice aggregations differ by
+    layout)."""
+    v = oracle_np.relayout(make_view(aggregation=agg), layout)
+    got = build_cube(images, v).collect_dense()
     want = oracle_np.dense_cube(pdf, v, resampling="near", aggregation=agg)
     oracle_np.assert_dense_equal(got, want)
+    assert np.isfinite(got).any()
 
 
 def test_build_bilinear_psnr(spark, images, pdf):
@@ -94,10 +95,12 @@ def test_warp_plane_handcomputed():
 
 
 def test_all_nan_chunk_emits_no_rows(spark, images):
-    # a view far away from every image footprint -> zero rows
-    v = make_view(left=150, right=152, bottom=-80, top=-78)
-    cube = build_cube(images, v)
-    assert cube.df.count() == 0
+    # a view far away from every image footprint, and one before every
+    # image's time -> zero rows, for the slice aggregations too
+    for agg in ("mean", "count_values", "count_images", "none"):
+        for v in (make_view(left=150, right=152, bottom=-80, top=-78, aggregation=agg),
+                  make_view(t0="2015-01-01", t1="2015-12-31", aggregation=agg)):
+            assert build_cube(images, v).df.count() == 0, agg
 
 
 def test_caption_equality_roundtrip(spark, images):
@@ -123,9 +126,8 @@ def _meta_imgs(spark, rows):
 
 
 def test_labeled_axis_build_strategies_agree(spark):
-    """Off-label timestamps DROP in both build strategies (exact-label slot
-    assignment, src/view.h:825-881 index_at_datetime; r1 ADVICE: the two
-    paths silently diverged for images between labels)."""
+    """Off-label timestamps DROP (exact-label slot assignment,
+    src/view.h:825-881 index_at_datetime)."""
     import pandas as pd
 
     v = CubeView.create(
@@ -146,17 +148,17 @@ def test_labeled_axis_build_strategies_agree(spark):
     # slot 0 = image 1 only (off-label image 2 dropped), slot 1 = image 3
     assert (want[0, 0][np.isfinite(want[0, 0])] == 10.0).all()
     assert (want[0, 1][np.isfinite(want[0, 1])] == 30.0).all()
-    for strategy in ("chunk_kernel", "cell_long"):
-        got = build_cube(imgs, v, bands=("B1",), value_fn=vf, strategy=strategy).collect_dense()
-        assert np.array_equal(np.isnan(got), np.isnan(want)), strategy
-        assert (got[np.isfinite(want)] == want[np.isfinite(want)]).all(), strategy
+    got = build_cube(imgs, v, bands=("B1",), value_fn=vf).collect_dense()
+    assert np.array_equal(np.isnan(got), np.isnan(want))
+    assert (got[np.isfinite(want)] == want[np.isfinite(want)]).all()
 
 
-@pytest.mark.parametrize("strategy", ["chunk_kernel", "cell_long"])
-def test_first_last_numeric_id_order(spark, strategy):
+@pytest.mark.parametrize("layout", ["chunk_kernel", "cell_long"])
+def test_first_last_numeric_id_order(spark, layout):
     """first/last order by NUMERIC image id ((len, str) ordering), not
     lexicographic: '2' < '10' numerically though '10' < '2' as strings
-    (r1 ADVICE: non-padded ids silently flipped the winner)."""
+    (r1 ADVICE: non-padded ids silently flipped the winner), on two chunk
+    layouts (oracle_np.CHUNK_LAYOUTS)."""
     import pandas as pd
 
     rows = [
@@ -165,11 +167,36 @@ def test_first_last_numeric_id_order(spark, strategy):
     ]
     imgs = _meta_imgs(spark, rows)
     vf = lambda i: (float(int(i)),)
-    for agg, want in (("first", 2.0), ("last", 10.0)):
+    for agg, want in (("first", 2.0), ("last", 10.0), ("none", 10.0)):
         v = CubeView.create(
             left=0, right=4, bottom=0, top=4, nx=4, ny=4,
             t0="2020-01-01", nt=2, dt="P1M", aggregation=agg, chunk_size=(2, 4, 4),
         )
-        got = build_cube(imgs, v, bands=("B1",), value_fn=vf, strategy=strategy).collect_dense()
+        v = oracle_np.relayout(v, layout)
+        got = build_cube(imgs, v, bands=("B1",), value_fn=vf).collect_dense()
         vals = got[0, 0][np.isfinite(got[0, 0])]
-        assert (vals == want).all(), f"{agg}/{strategy}"
+        assert vals.size and (vals == want).all(), agg
+
+
+@pytest.mark.parametrize("chunk_nt,want", [(1, [20.0, np.nan]), (2, [20.0, 30.0])])
+def test_mid_month_t0_keeps_images_in_their_chunk(spark, chunk_nt, want):
+    """On a P1M axis starting mid-month, an image lands in its calendar
+    slot only if it also lies in that slot's chunk, [t_start, t_end]
+    (find_range_st, both ends inclusive): 03-05 precedes chunk 0, and
+    04-10 falls in chunk 1 only when one chunk holds both slots."""
+    import pandas as pd
+
+    rows = [
+        ("1", pd.Timestamp("2020-03-05"), 0.0, 4.0, 0.0, 4.0),
+        ("2", pd.Timestamp("2020-03-20"), 0.0, 4.0, 0.0, 4.0),
+        ("3", pd.Timestamp("2020-04-10"), 0.0, 4.0, 0.0, 4.0),
+    ]
+    v = CubeView.create(left=0, right=4, bottom=0, top=4, nx=4, ny=4,
+                        t0="2020-03-15", nt=2, dt="P1M", aggregation="mean",
+                        chunk_size=(chunk_nt, 4, 4))
+    vf = lambda i: (float(int(i)) * 10.0,)
+    got = build_cube(_meta_imgs(spark, rows), v, bands=("B1",), value_fn=vf).collect_dense()
+    oracle_np.assert_dense_equal(got, oracle_np.dense_cube(
+        pd.DataFrame(rows, columns=["image_id", "ts", "left", "right", "bottom", "top"]),
+        v, nb=1, value_fn=vf))
+    np.testing.assert_array_equal(got[0, :, 0, 0], want)
