@@ -8,9 +8,8 @@ queries()     — one entry per implemented operator (SURVEY.md §2), each
 oracle_sql()  — DuckDB-dialect equivalents over the same parquet views;
                 see gdalcubes_cpp_spark/benchqueries.py for the
                 cross-engine exactness rules. Entries without SQL are the
-                genuinely non-SQL-expressible paths (real PNG decode,
-                approximate IVF search, probabilistic LSH pipelines) —
-                those get the driver's rows-only check and are value-gated
+                genuinely non-SQL-expressible paths (real PNG/JPEG/JP2
+                decode, image statistics) — those get the driver's rows-only check and are value-gated
                 by pytest instead (tests/).
 """
 

@@ -35,8 +35,6 @@ BENCH_QUERIES = [
     "window_time_kernel", "fill_time_locf", "query_timeseries",
     "reduce_time_full", "zonal_topk",
     "reduce_time_udf_range", "reduce_space_udf_spread",
-    "doc_near_dups_pipeline", "doc_simhash_near_dups",
-    "ann_ivf_topk", "ann_rp_lsh_pairs",
     "cube_average_decode", "cube_real_decode", "simple_cube_decode",
     "cube_mask_band_decode",
     "format_ingest", "hdf4_modis_pixels",
@@ -44,20 +42,15 @@ BENCH_QUERIES = [
     "fill_time_linear", "aggregate_time", "aggregate_space",
     "apply_time_udf_cumsum", "apply_pixel_udf_poly",
     "query_points", "zonal_statistics", "extract_geom",
-    "doc_stats", "doc_exact_dups", "doc_minhash", "doc_lsh_jaccard",
-    "doc_simhash", "doc_decontaminate", "doc_dedup_clusters", "doc_training_mix",
-    "ann_topk", "ann_knn_join", "ann_knn_join_ivf", "ann_dup_pairs",
     "s2_cells", "s2_knn",
     "stjoin_hex", "hex_cells_img", "cube_jpegbase_decode", "cube_jp2_decode",
-    "events_tumbling", "events_tumbling_ice", "events_sessionize", "tpch_pricing", "tpch_market_revenue",
-    # round-5 surfaces: nc4 container roundtrip, 3-modality codec union,
+    # round-5 surfaces: nc4 container roundtrip, image-column stats,
     # 3-source vector ingest (extract_geom above now covers it)
-    "netcdf_roundtrip", "images_multimodal", "events_asof",
+    "netcdf_roundtrip", "image_stats_phash",
     # per-member walls for the grown suites (r5 VERDICT #8): the three
-    # extract_geom sources and the three multimodal arms time separately
-    # so window diffs localize member growth vs drift
+    # extract_geom sources time separately so window diffs localize member
+    # growth vs drift
     "extract_geom_wkt", "extract_geom_geojson", "extract_geom_shp",
-    "images_mm_image", "images_mm_audio", "images_mm_video",
 ]
 
 
@@ -239,7 +232,7 @@ def main() -> None:
         "images_pipeline", "images_pipeline_codec", "cube_average_decode",
         "cube_real_decode", "simple_cube_decode", "cube_jpegbase_decode",
         "cube_jp2_decode", "format_ingest", "stjoin_rows", "cube_mean",
-        "doc_dedup_clusters", "s2_knn", "ann_ivf_topk", "events_sessionize",
+        "s2_knn",
     ]
     compact = dict(common,
                    queries={k: timings[k] for k in headline if k in timings},

@@ -21,8 +21,7 @@ import __spark_entry__ as E
 
 SF = __import__("os").environ.get("DRIVER_SIM_SF", "/root/testdata/sf0.01")
 TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
 ]
 
 
@@ -80,42 +79,6 @@ def main() -> None:
                             "failures": len(failures),
                             "failure_msgs": failures}, fh, indent=2)
 
-    # The doc_dedup_clusters SQL oracle is a recursive transitive closure:
-    # Theta(sum(component^2) * diameter) reach rows. At driver scale
-    # (sf0.01/0.1) components are small and it runs in seconds — that SQL
-    # stays THE oracle for driver parity. The 10x replay corpus chains the
-    # (lang, n_chars±10) rule into a ~28k-doc component (~1e9 reach rows,
-    # infeasible in any SQL engine), so the replay swaps in an equivalent
-    # independent oracle: the SAME pair rule evaluated by DuckDB, closed by
-    # an exact union-find here — values remain engine-independent.
-    def _cc_oracle_py():
-        import pandas as _pd
-
-        rows = con.execute("""
-            WITH d AS (SELECT doc_id, lang, n_chars FROM documents)
-            SELECT a.doc_id AS u, b.doc_id AS v FROM d a JOIN d b
-            ON a.lang = b.lang AND abs(a.n_chars - b.n_chars) <= 10
-               AND a.doc_id < b.doc_id
-        """).fetchall()
-        parent: dict = {}
-
-        def find(x):
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for u, v in rows:
-            ru, rv = find(u), find(v)
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
-        ids = [r[0] for r in con.execute(
-            "SELECT doc_id FROM documents ORDER BY doc_id").fetchall()]
-        return _pd.DataFrame(
-            {"doc_id": ids, "cluster": [find(i) for i in ids]})
-
-    use_py_cc = _os.environ.get("DRIVER_SIM_CC_PY") == "1"
-
     for name in names:
         try:
             _t0 = _time.time()
@@ -126,10 +89,7 @@ def main() -> None:
                 n_rows_only += 1
                 _flush()
                 continue
-            if use_py_cc and name == "doc_dedup_clusters":
-                want = _cc_oracle_py()
-            else:
-                want = con.execute(osql[name]).df()
+            want = con.execute(osql[name]).df()
             gc, gv = canon(got)
             wc, wv = canon(want)
             if gc != wc:

@@ -4,13 +4,8 @@
 The round driver's generator is not available in-repo, so the scale step
 replicates sf0.1 ten times with CONSISTENT key shifts (TPC-H scaling
 shape: fixed region/nation dims, scaled fact/dim tables, foreign keys
-remapped per replica so joins keep their selectivity). Content columns
-that feed hashing/similarity operators are perturbed per replica —
-documents get a replica token appended, embeddings get +i/1000 on the
-first coordinate — so dedup/ANN semantics stay realistic instead of
-collapsing into exact 10-way duplicate groups (and top-k never ties
-exactly across replicas). Both engines read the same parquet, so the
-oracle gate stays exact at any scale.
+remapped per replica so joins keep their selectivity). Both engines read
+the same parquet, so the oracle gate stays exact at any scale.
 
 Usage: python bench/make_sf.py [out_dir] [factor]   (default
 /tmp/spark_graft_sf1, 10)
@@ -54,13 +49,9 @@ def make(out_dir: str, factor: int = 10) -> None:
     # per table at factor 10, observed as engine/oracle row drift
     maxes = {}
     for t, k in (("customer", "c_custkey"), ("supplier", "s_suppkey"),
-                 ("part", "p_partkey"), ("orders", "o_orderkey"),
-                 ("events", "event_id"), ("documents", "doc_id"),
-                 ("embeddings", "vec_id")):
+                 ("part", "p_partkey"), ("orders", "o_orderkey")):
         maxes[k] = con.execute(
             f"SELECT max({k}) + 1 FROM {src(t)}").fetchone()[0]
-    maxes["user_id"] = con.execute(
-        f"SELECT max(user_id) + 1 FROM {src('events')}").fetchone()[0]
 
     rep = f"range({factor}) r(i)"
     copy(f"""SELECT t.* REPLACE (t.c_custkey + r.i * {maxes['c_custkey']}
@@ -78,26 +69,6 @@ def make(out_dir: str, factor: int = 10) -> None:
                t.l_partkey + r.i * {maxes['p_partkey']} AS l_partkey,
                t.l_suppkey + r.i * {maxes['s_suppkey']} AS l_suppkey)
              FROM {src('lineitem')} t, {rep}""", "lineitem")
-    copy(f"""SELECT t.* REPLACE (
-               t.event_id + r.i * {maxes['event_id']} AS event_id,
-               t.user_id + r.i * {maxes['user_id']} AS user_id)
-             FROM {src('events')} t, {rep}""", "events")
-    copy(f"""SELECT t.* REPLACE (
-               t.doc_id + r.i * {maxes['doc_id']} AS doc_id,
-               CASE WHEN r.i = 0 THEN t.text
-                    ELSE t.text || ' rep' || r.i END AS text,
-               CASE WHEN r.i = 0 THEN t.n_chars
-                    ELSE t.n_chars + 4 + length(CAST(r.i AS VARCHAR))
-                    END AS n_chars)
-             FROM {src('documents')} t, {rep}""", "documents")
-    copy(f"""SELECT t.* REPLACE (
-               t.vec_id + r.i * {maxes['vec_id']} AS vec_id,
-               CASE WHEN r.i = 0 THEN t.embedding
-                    ELSE list_prepend(
-                      CAST(t.embedding[1] + r.i * 0.001 AS FLOAT),
-                      t.embedding[2:]) END AS embedding)
-             FROM {src('embeddings')} t, {rep}""", "embeddings")
-
 
 if __name__ == "__main__":
     out = sys.argv[1] if len(sys.argv) > 1 else "/tmp/spark_graft_sf1"

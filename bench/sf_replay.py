@@ -42,8 +42,8 @@ def main(p01: str, p1: str) -> None:
 
     md = [MARK, "",
           "Full oracle gate replayed on a deterministic 10x key-shifted",
-          "replica of sf0.1 (bench/make_sf.py; 6M lineitem / 1M events /",
-          "50k documents). Gate results: "
+          "replica of sf0.1 (bench/make_sf.py; 6M lineitem / 1.5M orders).",
+          "Gate results: "
           f"sf0.1 {a['pass']} oracled pass / {a['failures']} failures; "
           f"sf1 {b['pass']} oracled pass / {b['failures']} failures.",
           "Spark-side wall per query (driver_sim, local[16]); ratio is",

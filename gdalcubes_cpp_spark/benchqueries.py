@@ -22,14 +22,11 @@ Cross-engine exactness rules used throughout:
 
 from __future__ import annotations
 
-import json
-
-from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .cube import KEY, Cube
 from .functions import hexgrid as _hexmod
 from .functions import s2 as _s2mod
-from .functions.text import PII_EMAIL, PII_IPV4, PII_PHONE
 from .grid import ChunkGrid
 from .view import CubeView
 
@@ -64,8 +61,6 @@ def prepare_fixtures(spark) -> None:
     _simple_cube_records()
     _jp2_rows()
     _jpegbase_rows()
-    _mm_audio_pdf()
-    _mm_video_pdf()
 
 
 # ---------------------------------------------------------------------------
@@ -717,804 +712,6 @@ def zonal_statistics(spark, sf_dir):
         _formula_cube(spark), _rects_df(spark),
         stats=("mean", "count", "min", "max", "median"),
     )
-
-# ------------------------------------------------------- documents pipeline
-
-_NORM_SQL = (
-    "trim(regexp_replace(regexp_replace(lower(text), '[^a-z0-9\\s]', ' ', 'g'), "
-    "'\\s+', ' ', 'g'))"
-)
-_WORDS_SQL = f"regexp_split_to_array({_NORM_SQL}, ' ')"
-_SHINGLES_SQL = (
-    "CASE WHEN len(w) >= 3 THEN "
-    "list_transform(range(1, len(w) - 1), i -> array_to_string(list_slice(w, i, i + 2), ' ')) "
-    "ELSE [array_to_string(w, ' ')] END"
-)
-_EN_PAT = r"\b(the|and|of|to|is|in)\b"
-_MARKER_SQL = {
-    "en": r"\b(the|and|of|to|is|in)\b",
-    "de": r"\b(der|die|und|ist|nicht|das)\b",
-    "fr": r"\b(le|la|les|et|est|une)\b",
-    "es": r"\b(el|la|los|que|es|una)\b",
-}
-
-
-@q(
-    "doc_stats",
-    f"""
-WITH t AS (
-  SELECT doc_id, text,
-         CASE WHEN length(trim(text)) = 0 THEN 0
-              ELSE len(regexp_split_to_array(trim(text), '\\s+')) END AS ws_tokens,
-         len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\\s]')) AS bpe_tokens,
-         len(regexp_extract_all(text, '[^A-Za-z0-9\\s]')) AS n_punct,
-         len(regexp_extract_all(text, '[A-Za-z]')) AS n_letters,
-         len(regexp_extract_all(lower(text), '{_MARKER_SQL["en"]}')) AS n_stops,
-         len(regexp_extract_all(lower(text), '{_MARKER_SQL["de"]}')) AS s_de_n,
-         len(regexp_extract_all(lower(text), '{_MARKER_SQL["fr"]}')) AS s_fr_n,
-         len(regexp_extract_all(lower(text), '{_MARKER_SQL["es"]}')) AS s_es_n
-  FROM documents
-), m AS (
-  SELECT doc_id,
-         CAST(ws_tokens AS INT) AS ws_tokens, CAST(bpe_tokens AS INT) AS bpe_tokens,
-         CASE WHEN length(text) > 0 THEN CAST(n_punct AS DOUBLE) / length(text) ELSE 0.0 END AS punct_ratio,
-         CASE WHEN ws_tokens > 0 THEN CAST(n_stops AS DOUBLE) / ws_tokens ELSE 0.0 END AS stopword_ratio,
-         CASE WHEN ws_tokens > 0 THEN CAST(n_letters AS DOUBLE) / ws_tokens ELSE 0.0 END AS mean_word_len,
-         length(text) AS n, text,
-         CAST(n_stops AS DOUBLE) / greatest(ws_tokens, 1) AS s_en,
-         CAST(s_de_n AS DOUBLE) / greatest(ws_tokens, 1) AS s_de,
-         CAST(s_fr_n AS DOUBLE) / greatest(ws_tokens, 1) AS s_fr,
-         CAST(s_es_n AS DOUBLE) / greatest(ws_tokens, 1) AS s_es
-  FROM t
-)
-, r AS (
-  SELECT doc_id, length(text) AS n_chars,
-         len(regexp_extract_all(text, '#|\\.\\.\\.')) AS n_sym,
-         list_filter(string_split(text, chr(10)), x -> length(x) > 0) AS lines,
-         CASE WHEN length(trim(text)) = 0 THEN []
-              ELSE regexp_split_to_array(trim(text), '\\s+') END AS words
-  FROM documents
-), r2 AS (
-  SELECT doc_id, n_chars, n_sym, words, len(words) AS nw,
-         len(list_filter(words, w -> regexp_matches(w, '[A-Za-z]'))) AS nalpha,
-         len(lines) AS nl, len(list_distinct(lines)) AS nld,
-         coalesce(list_sum(list_transform(lines, x -> length(x))), 0) AS lc,
-         coalesce(list_sum(list_transform(list_distinct(lines), x -> length(x))), 0) AS lcd
-  FROM r
-), bgc AS (
-  SELECT doc_id, bigram, count(*) AS cnt
-  FROM (SELECT doc_id,
-               unnest(list_transform(range(1, len(words)),
-                                     i -> words[i] || ' ' || words[i+1])) AS bigram
-        FROM r WHERE len(words) >= 2)
-  GROUP BY doc_id, bigram
-), tops AS (
-  SELECT doc_id, cnt AS tc, bigram AS tb
-  FROM (SELECT doc_id, cnt, bigram,
-               row_number() OVER (PARTITION BY doc_id
-                                  ORDER BY cnt DESC, bigram DESC) AS rn
-        FROM bgc) WHERE rn = 1
-), rep AS (
-  SELECT r2.doc_id,
-       CASE WHEN nl > 0 THEN CAST(nl - nld AS DOUBLE) / nl ELSE 0.0 END AS dup_line_frac,
-       CASE WHEN lc > 0 THEN CAST(lc - lcd AS DOUBLE) / lc ELSE 0.0 END AS dup_line_char_frac,
-       CASE WHEN n_chars > 0 AND tc IS NOT NULL
-            THEN CAST(tc * length(tb) AS DOUBLE) / n_chars ELSE 0.0 END AS top2_char_frac,
-       CASE WHEN nw > 0 THEN CAST(nalpha AS DOUBLE) / nw ELSE 0.0 END AS alpha_word_frac,
-       CASE WHEN nw > 0 THEN CAST(n_sym AS DOUBLE) / nw ELSE 0.0 END AS symbol_word_ratio
-  FROM r2 LEFT JOIN tops ON r2.doc_id = tops.doc_id
-), pin AS (
-  SELECT doc_id,
-         text ||
-         CASE WHEN doc_id % 7 = 0 THEN
-           ' mail u' || CAST(doc_id AS VARCHAR) || '@ex'
-           || CAST(doc_id % 13 AS VARCHAR) || '.org ip 10.1.'
-           || CAST(doc_id % 200 AS VARCHAR) || '.77 tel +1 555 0'
-           || CAST(doc_id % 10 AS VARCHAR) || '1 42'
-         ELSE '' END ||
-         CASE WHEN doc_id % 11 = 0 THEN
-           ' ping 192.168.0.' || CAST(doc_id % 250 AS VARCHAR)
-         ELSE '' END AS itext
-  FROM documents
-), pii AS (
-  SELECT doc_id,
-         len(regexp_extract_all(itext, '{PII_EMAIL}')) AS n_emails,
-         len(regexp_extract_all(itext, '{PII_IPV4}')) AS n_ipv4,
-         len(regexp_extract_all(itext, '{PII_PHONE}')) AS n_phones,
-         len(regexp_extract_all(itext, '{PII_EMAIL}'))
-           + len(regexp_extract_all(itext, '{PII_IPV4}'))
-           + len(regexp_extract_all(itext, '{PII_PHONE}')) AS pii_count,
-         md5(regexp_replace(regexp_replace(regexp_replace(itext,
-             '{PII_EMAIL}', '<EMAIL>', 'g'),
-             '{PII_IPV4}', '<IP>', 'g'),
-             '{PII_PHONE}', '<PHONE>', 'g')) AS redacted_hash
-  FROM pin
-)
-SELECT m.doc_id, ws_tokens, bpe_tokens, punct_ratio, stopword_ratio,
-       least(CAST(n AS DOUBLE) / 500.0, 1.0) * 0.3
-         + greatest(0.0, 1.0 - punct_ratio * 4.0) * 0.25
-         + least(stopword_ratio * 5.0, 1.0) * 0.25
-         + CASE WHEN mean_word_len >= 2.5 AND mean_word_len <= 9.0 THEN 1.0 ELSE 0.3 END * 0.2
-         AS quality,
-       CASE WHEN greatest(s_en, s_de, s_fr, s_es) <= 0 THEN 'und'
-            WHEN s_en >= s_de AND s_en >= s_fr AND s_en >= s_es THEN 'en'
-            WHEN s_de >= s_fr AND s_de >= s_es THEN 'de'
-            WHEN s_fr >= s_es THEN 'fr'
-            ELSE 'es' END AS lang_pred,
-       md5({_NORM_SQL}) AS fingerprint,
-       dup_line_frac, dup_line_char_frac, top2_char_frac,
-       alpha_word_frac, symbol_word_ratio,
-       n_emails, n_ipv4, n_phones, pii_count, redacted_hash
-FROM m JOIN rep ON m.doc_id = rep.doc_id
-       JOIN pii ON m.doc_id = pii.doc_id
-""",
-)
-def doc_stats(spark, sf_dir):
-    """Text analysis: tokens/quality/langid/fingerprint (functions/text.py)
-    PLUS the Gopher repetition filters (repetition_stats — dup-line/char
-    fractions, top-2-gram char fraction, alpha-word fraction,
-    symbol-to-word ratio) PLUS PII detection/redaction (pii_stats —
-    email/IPv4/phone counts and the md5 of the redacted text, computed
-    over a deterministically PII-injected variant since the synthetic
-    corpus carries none). The Spark top-bigram mode is max(struct) —
-    partial-aggregatable; the oracle replays it as a row_number window
-    with the identical (cnt DESC, bigram DESC) tie-break; the redaction
-    regexes are restricted to the Java-regex ∩ RE2 common dialect so the
-    hashes agree cross-engine."""
-    from .functions.text import analyze, pii_stats, repetition_stats
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = F.col("doc_id")
-    injected = docs.select(
-        "doc_id",
-        F.concat(
-            F.col("text"),
-            F.when(
-                d % 7 == 0,
-                F.concat(
-                    F.lit(" mail u"), d.cast("string"), F.lit("@ex"),
-                    (d % 13).cast("string"), F.lit(".org ip 10.1."),
-                    (d % 200).cast("string"), F.lit(".77 tel +1 555 0"),
-                    (d % 10).cast("string"), F.lit("1 42"),
-                ),
-            ).otherwise(F.lit("")),
-            F.when(
-                d % 11 == 0,
-                F.concat(F.lit(" ping 192.168.0."), (d % 250).cast("string")),
-            ).otherwise(F.lit("")),
-        ).alias("text"),
-    )
-    return (
-        analyze(docs)
-        .join(repetition_stats(docs), "doc_id")
-        .join(pii_stats(injected), "doc_id")
-        .select(
-            "doc_id", "ws_tokens", "bpe_tokens", "punct_ratio", "stopword_ratio",
-            "quality", "lang_pred", "fingerprint",
-            "dup_line_frac", "dup_line_char_frac", "top2_char_frac",
-            "alpha_word_frac", "symbol_word_ratio",
-            "n_emails", "n_ipv4", "n_phones", "pii_count", "redacted_hash",
-        )
-    )
-
-
-@q(
-    "doc_exact_dups",
-    """
-WITH u AS (
-  SELECT doc_id, text FROM documents
-  UNION ALL
-  SELECT doc_id + 1000000 AS doc_id, text FROM documents WHERE doc_id % 10 = 0
-),
-g AS (
-  SELECT doc_id // 3 AS pdoc_id,
-         string_agg(text, chr(10) ORDER BY doc_id) AS ptext
-  FROM documents GROUP BY doc_id // 3
-),
-pu AS (
-  SELECT pdoc_id, ptext FROM g
-  UNION ALL
-  SELECT pdoc_id + 1000000 AS pdoc_id, ptext FROM g WHERE pdoc_id % 5 = 0
-),
-paras AS (
-  SELECT pdoc_id, trim(p) AS para
-  FROM pu, unnest(string_split(ptext, chr(10))) AS t(p)
-  WHERE length(trim(p)) > 0
-)
-SELECT 'doc' AS part, md5(text) AS content_hash,
-       CAST(count(*) AS BIGINT) AS n_dups, min(doc_id) AS keep_id
-FROM u GROUP BY md5(text) HAVING count(*) >= 2
-UNION ALL
-SELECT 'para' AS part, md5(para) AS content_hash,
-       CAST(count(*) AS BIGINT) AS n_dups, min(pdoc_id) AS keep_id
-FROM paras GROUP BY md5(para) HAVING count(*) >= 2
-""",
-)
-def doc_exact_dups(spark, sf_dir):
-    """Exact dedup at BOTH grains in one tagged union (functions/dedup.py):
-    'doc' = whole-document hash groups (duplicate rows injected
-    deterministically, doc_id % 10, on both sides); 'para' =
-    paragraph-level corpus dedup (paragraph_dups — the RefinedWeb/Dolma
-    boilerplate-line scrub) over a synthesized multi-paragraph corpus
-    (3 docs joined by newlines per pdoc, pdoc_id % 5 re-emitted) so the
-    newline-split/trim/hash/group path is exercised end-to-end."""
-    from .functions.dedup import exact_dups, paragraph_dups
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    dup = docs.filter(F.col("doc_id") % 10 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"), "text"
-    )
-    doc_part = exact_dups(docs.unionAll(dup)).select(
-        F.lit("doc").alias("part"), "content_hash", "n_dups", "keep_id"
-    )
-
-    g = docs.groupBy((F.col("doc_id") / 3).cast("long").alias("pdoc_id")).agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("doc_id", "text"))),
-                lambda s: s.text,
-            ),
-            "\n",
-        ).alias("text")
-    )
-    pu = g.unionAll(
-        g.filter(F.col("pdoc_id") % 5 == 0).select(
-            (F.col("pdoc_id") + 1000000).alias("pdoc_id"), "text"
-        )
-    )
-    para_part = paragraph_dups(pu, id_col="pdoc_id").select(
-        F.lit("para").alias("part"), "content_hash", "n_dups", "keep_id"
-    )
-    return doc_part.unionAll(para_part)
-
-
-@q(
-    "doc_minhash",
-    f"""
-WITH d AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-sh AS (SELECT doc_id, unnest({_SHINGLES_SQL}) AS sh FROM d)
-SELECT doc_id,
-       min(md5('s0|' || sh)) AS mh_0, min(md5('s1|' || sh)) AS mh_1,
-       min(md5('s2|' || sh)) AS mh_2, min(md5('s3|' || sh)) AS mh_3
-FROM sh GROUP BY doc_id
-""",
-)
-def doc_minhash(spark, sf_dir):
-    """MinHash signatures, k=4 (functions/dedup.py — min of md5(seed||shingle))."""
-    from .functions.dedup import minhash_signature
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return minhash_signature(docs, k=4)
-
-
-@q(
-    "doc_lsh_jaccard",
-    f"""
-WITH d AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-sh AS (SELECT doc_id, unnest({_SHINGLES_SQL}) AS sh FROM d),
-sig AS (
-  SELECT doc_id, min(md5('s0|' || sh)) AS mh_0, min(md5('s1|' || sh)) AS mh_1,
-         min(md5('s2|' || sh)) AS mh_2, min(md5('s3|' || sh)) AS mh_3
-  FROM sh GROUP BY doc_id
-),
-banded AS (
-  SELECT doc_id, b.band AS band,
-         CASE b.band WHEN 0 THEN md5(mh_0) WHEN 1 THEN md5(mh_1)
-                     WHEN 2 THEN md5(mh_2) ELSE md5(mh_3) END AS band_key
-  FROM sig, (SELECT unnest([0, 1, 2, 3]) AS band) b
-),
-cand AS (
-  SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, CAST(min(a.band) AS INT) AS band
-  FROM banded a JOIN banded b ON a.band = b.band AND a.band_key = b.band_key
-  WHERE a.doc_id < b.doc_id
-  GROUP BY a.doc_id, b.doc_id
-),
-ss AS (SELECT doc_id, list_distinct({_SHINGLES_SQL}) AS s FROM d)
-SELECT doc_a, doc_b,
-       round(CAST(len(list_intersect(sa.s, sb.s)) AS DOUBLE)
-             / len(list_distinct(sa.s || sb.s)), 6) AS jaccard
-FROM cand JOIN ss sa ON cand.doc_a = sa.doc_id
-          JOIN ss sb ON cand.doc_b = sb.doc_id
-""",
-)
-def doc_lsh_jaccard(spark, sf_dir):
-    """MinHash-LSH candidates (k=4, r=1 banding) + exact n-gram Jaccard
-    verify (functions/dedup.py lsh_candidates + ngram_jaccard). One shared,
-    persisted minhash_profile pass feeds banding AND verify (r2 VERDICT #4:
-    the shingle normalization used to run twice)."""
-    from pyspark import StorageLevel
-
-    from .functions.dedup import lsh_candidates, minhash_profile, ngram_jaccard
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    prof = minhash_profile(docs, k=4).persist(StorageLevel.MEMORY_AND_DISK)
-    cand = lsh_candidates(docs, k=4, bands=4, sig=prof)
-    jac = ngram_jaccard(docs, cand.select("doc_a", "doc_b"), sets=prof)
-    return jac.select("doc_a", "doc_b", F.round("jaccard", 6).alias("jaccard"))
-
-
-@q(
-    "doc_simhash",
-    f"""
-WITH d AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-words AS (SELECT doc_id, unnest(w) AS wd FROM d),
-h AS (SELECT doc_id, ('0x' || substr(md5(wd), 1, 15))::BIGINT AS h
-      FROM words WHERE length(wd) > 0),
-bits AS (
-  SELECT doc_id, b.b AS b,
-         CASE WHEN sum(((h >> CAST(b.b AS INT)) & 1) * 2 - 1) > 0
-              THEN CAST(1 AS BIGINT) << CAST(b.b AS INT) ELSE 0 END AS bit
-  FROM h, range(60) b(b) GROUP BY doc_id, b.b
-)
-SELECT doc_id, CAST(sum(bit) AS BIGINT) AS simhash FROM bits GROUP BY doc_id
-""",
-)
-def doc_simhash(spark, sf_dir):
-    """SimHash signatures (functions/dedup.py — 60-bit majority vote)."""
-    from .functions.dedup import simhash
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return simhash(docs)
-
-
-def _shingles_sql_n(n: int) -> str:
-    """The DuckDB word-n-gram expression for any n (the _SHINGLES_SQL
-    shape generalized; mirrors functions.dedup.shingles)."""
-    return (
-        f"CASE WHEN len(w) >= {n} THEN "
-        f"list_transform(range(1, len(w) - {n - 2}), "
-        f"i -> array_to_string(list_slice(w, i, i + {n - 1}), ' ')) "
-        f"ELSE [array_to_string(w, ' ')] END"
-    )
-
-
-@q(
-    "doc_decontaminate",
-    f"""
-WITH d AS (SELECT doc_id, {_WORDS_SQL} AS w FROM documents),
-dgh AS (
-  SELECT doc_id, md5(g) AS gh
-  FROM (SELECT doc_id, unnest(list_distinct({_shingles_sql_n(3)})) AS g FROM d)
-),
-bg AS (
-  SELECT DISTINCT md5(g) AS gh
-  FROM (SELECT unnest(list_distinct({_shingles_sql_n(3)})) AS g
-        FROM d WHERE doc_id % 97 = 0)
-),
-tot AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_ngrams FROM dgh GROUP BY doc_id),
-hit AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_matched
-  FROM dgh JOIN bg USING (gh) GROUP BY doc_id
-)
-SELECT tot.doc_id AS doc_id, n_ngrams,
-       coalesce(n_matched, 0) AS n_matched,
-       round(CAST(coalesce(n_matched, 0) AS DOUBLE) / n_ngrams, 6) AS containment_r6,
-       coalesce(n_matched, 0) >= 1 AS contaminated
-FROM tot LEFT JOIN hit ON tot.doc_id = hit.doc_id
-""",
-)
-def doc_decontaminate(spark, sf_dir):
-    """Benchmark DECONTAMINATION (functions/dedup.py decontaminate — the
-    GPT-3/PaLM any-shared-n-gram filter with containment reporting): the
-    'benchmark' here is the doc_id % 97 slice of the corpus itself, so
-    exact self-hits, partial-overlap docs and clean docs all occur. n=3
-    at this SF (the operator defaults to the canonical 13); only md5 gram
-    hashes shuffle."""
-    from .functions.dedup import decontaminate
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
-    bench = docs.filter(F.col("doc_id") % 97 == 0)
-    out = decontaminate(docs, bench, n=3, min_hits=1)
-    return out.select(
-        "doc_id", "n_ngrams", "n_matched",
-        F.round("containment", 6).alias("containment_r6"), "contaminated",
-    )
-
-
-@q("doc_near_dups_pipeline", None)  # rows-only: full LSH->verify pipeline
-def doc_near_dups_pipeline(spark, sf_dir):
-    from .functions.dedup import near_dups_minhash
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return near_dups_minhash(docs, k=8, bands=4, threshold=0.5)
-
-
-@q("doc_simhash_near_dups", None)  # rows-only: bucketed hamming join
-def doc_simhash_near_dups(spark, sf_dir):
-    from .functions.dedup import simhash_near_dups
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return simhash_near_dups(docs, max_hamming=8)
-
-
-# -------------------------------------------- dedup clustering / training mix
-
-_CC_SQL = """
-WITH RECURSIVE
-d AS (SELECT doc_id, lang, n_chars FROM documents),
-p AS (SELECT a.doc_id AS u, b.doc_id AS v FROM d a JOIN d b
-      ON a.lang = b.lang AND abs(a.n_chars - b.n_chars) <= 10
-     AND a.doc_id < b.doc_id),
-e AS (SELECT u, v FROM p UNION SELECT v, u FROM p),
-n AS (SELECT DISTINCT u AS nd FROM e),
-reach(nd, r) AS (
-  SELECT nd, nd FROM n
-  UNION
-  SELECT reach.nd, e.v FROM reach JOIN e ON reach.r = e.u),
-comp AS (SELECT nd, min(r) AS c FROM reach GROUP BY nd)
-SELECT d.doc_id AS doc_id, CAST(coalesce(comp.c, d.doc_id) AS BIGINT) AS cluster
-FROM d LEFT JOIN comp ON d.doc_id = comp.nd
-"""
-
-
-@q("doc_dedup_clusters", _CC_SQL)
-def doc_dedup_clusters(spark, sf_dir):
-    """Transitive dedup clustering: pairs → connected components → every doc
-    labeled with its cluster root (functions/dedup.py connected_components —
-    Kiveris et al. alternating star contraction, O(log² n) groupBy+join
-    rounds, no driver-side graph). The driver's edge relation is
-    deterministic and SQL-expressible (same lang, |Δn_chars| ≤ 10 — LSH
-    pair sets are implementation-defined so they can't be the oracle),
-    built as a banded equi-join on (lang, length bucket): each probe row
-    carries 3 bucket keys, so the pair space is bucket-bounded, never a
-    cross join. The oracle recomputes components independently with a
-    recursive CTE (min reachable id). The production composite
-    (near_dup_clusters) feeds REAL MinHash-LSH pairs through the same
-    operator — pytest-gated."""
-    from .functions.dedup import connected_components
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    d = docs.select("doc_id", "lang", "n_chars").withColumn(
-        "bkt", F.floor(F.col("n_chars") / 10).cast("long")
-    )
-    probe = d.withColumn(
-        "k", F.explode(F.array(F.col("bkt") - 1, F.col("bkt"), F.col("bkt") + 1))
-    )
-    build = d.select(
-        F.col("doc_id").alias("doc_b"), "lang",
-        F.col("n_chars").alias("nc_b"), F.col("bkt").alias("k"),
-    )
-    # exactly one of the 3 probe keys equals the build row's bucket, so each
-    # qualifying pair is emitted once — no distinct needed
-    pairs = (
-        probe.join(build, ["k", "lang"])
-        .filter(
-            (F.abs(F.col("n_chars") - F.col("nc_b")) <= 10)
-            & (F.col("doc_id") < F.col("doc_b"))
-        )
-        .select(F.col("doc_id").alias("doc_a"), "doc_b")
-    )
-    comp = connected_components(pairs, "doc_a", "doc_b")
-    ids = docs.select("doc_id")
-    return ids.join(comp, ids["doc_id"] == comp["node"], "left").select(
-        "doc_id", F.coalesce("component", F.col("doc_id")).alias("cluster")
-    )
-
-
-from .functions.mix import _threshold_hex as _mix_thr  # noqa: E402 — single
-# source of truth: the oracle's CASE thresholds are the very strings the
-# Spark filter compares against.
-
-_MIX_FRACS = {"en": 0.5, "de": 1.0, "fr": 0.25, "es": 0.75, "zh": 0.1}
-_MIX_CASE = (
-    "CASE lang "
-    + " ".join(f"WHEN '{s}' THEN '{_mix_thr(f)}'" for s, f in sorted(_MIX_FRACS.items()))
-    + f" ELSE '{_mix_thr(0.0)}' END"
-)
-
-_MIX_SQL = f"""
-WITH kept AS (
-  SELECT doc_id, lang, n_chars,
-         substr(md5('mix0/pack' || CAST(doc_id AS VARCHAR)), 1, 15) AS hk
-  FROM documents
-  WHERE substr(md5('mix0' || CAST(doc_id AS VARCHAR)), 1, 15) < {_MIX_CASE}
-),
-g AS (SELECT doc_id, lang, n_chars, hk,
-             CAST(('0x' || substr(hk, 1, 4))::BIGINT % 64 AS INT) AS grp
-      FROM kept),
-c AS (SELECT doc_id, lang, n_chars, grp,
-             coalesce(SUM(n_chars) OVER (PARTITION BY grp ORDER BY hk, doc_id
-               ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS cum
-      FROM g)
-SELECT doc_id, lang, grp,
-       CAST(floor(cum / CAST(4000 AS DOUBLE)) AS INT) AS shard,
-       CAST(grp AS BIGINT) * 4294967296
-         + CAST(floor(cum / CAST(4000 AS DOUBLE)) AS BIGINT) AS shard_id,
-       n_chars
-FROM c
-"""
-
-
-@q("doc_training_mix", _MIX_SQL)
-def doc_training_mix(spark, sf_dir):
-    """Training-mix assembly (functions/mix.py): stratified deterministic
-    sampling (per-lang mix weights as md5-threshold filters — no RNG, no
-    shuffle, scan-side) followed by budget-bounded shard packing (grouped
-    exclusive-cumsum windows — parallel over 64 hash groups, never a global
-    sort). Every decision is a string/int comparison the DuckDB oracle
-    replays exactly."""
-    from .functions.mix import training_mix
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    out = training_mix(
-        docs, "lang", _MIX_FRACS, "n_chars",
-        budget=4000, n_groups=64, seed="mix0",
-    )
-    return out.select("doc_id", "lang", "grp", "shard", "shard_id", "n_chars")
-
-
-# ------------------------------------------------------------- embeddings
-
-_COS_SQL = (
-    "list_dot_product(e.embedding::DOUBLE[], q.qv) / "
-    "(sqrt(list_dot_product(e.embedding::DOUBLE[], e.embedding::DOUBLE[])) * "
-    "sqrt(list_dot_product(q.qv, q.qv)))"
-)
-
-
-@q(
-    "ann_topk",
-    f"""
-WITH q AS (SELECT embedding::DOUBLE[] AS qv FROM embeddings WHERE vec_id = 0)
-SELECT e.vec_id AS vec_id, round({_COS_SQL}, 6) AS cos_r
-FROM embeddings e, q
-ORDER BY {_COS_SQL} DESC, e.vec_id ASC
-LIMIT 10
-""",
-)
-def ann_topk(spark, sf_dir):
-    """Brute-force cosine top-k (functions/ann.py cosine_topk)."""
-    from .functions.ann import cosine_topk
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    out = cosine_topk(emb, qv, k=10)
-    return out.select("vec_id", F.round("cos", 6).alias("cos_r"))
-
-
-@q(
-    "ann_knn_join",
-    f"""
-WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-qs AS (SELECT vec_id AS q_id, v AS qv FROM b WHERE vec_id < 3),
-scored AS (
-  SELECT q_id, b.vec_id AS b_id,
-         list_dot_product(b.v, qs.qv)
-           / (sqrt(list_dot_product(b.v, b.v)) * sqrt(list_dot_product(qs.qv, qs.qv))) AS cos
-  FROM qs JOIN b ON b.vec_id <> qs.q_id
-)
-SELECT q_id, b_id, CAST(rank AS INT) AS rank FROM (
-  SELECT q_id, b_id, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, b_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
-)
-def ann_knn_join(spark, sf_dir):
-    """Exact kNN join, broadcast queries (functions/ann.py)."""
-    from .functions.ann import knn_join_bruteforce
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = knn_join_bruteforce(emb.filter(F.col("vec_id") < 3), emb, k=3)
-    return out.select("q_id", "b_id", "rank")
-
-
-@q(
-    "ann_dup_pairs",
-    f"""
-WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings)
-SELECT a.vec_id AS vec_a, c.vec_id AS vec_b,
-       round(list_dot_product(a.v, c.v)
-             / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))), 6) AS cos_r
-FROM b a JOIN b c ON a.vec_id < c.vec_id
-WHERE list_dot_product(a.v, c.v)
-      / (sqrt(list_dot_product(a.v, a.v)) * sqrt(list_dot_product(c.v, c.v))) >= 0.4
-""",
-)
-def ann_dup_pairs(spark, sf_dir):
-    """Embedding near-duplicate pairs, exact threshold join (the LSH/IVF
-    bucketed variant is ann_ivf_topk / cosine_near_dup_pairs — rows-only)."""
-    from .functions.ann import cosine_pairs_bruteforce
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    out = cosine_pairs_bruteforce(emb, threshold=0.4)
-    return out.select("vec_a", "vec_b", F.round("cos", 6).alias("cos_r"))
-
-
-@q("ann_ivf_topk", None)  # rows-only: approximate by construction
-def ann_ivf_topk(spark, sf_dir):
-    from .functions.ann import ivf_topk, kmeans_centroids
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = [float(x) for x in emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    # cap the k-means training depth: the quantizer is an artifact a
-    # production deployment trains ONCE and persists (see ann_knn_join_ivf);
-    # recall with the default-depth quantizer is pytest-gated
-    cents = kmeans_centroids(emb, nlist=8, seed=7, max_iter=4)
-    return ivf_topk(emb, qv, cents, k=10, nprobe=3)
-
-
-# ------------------------------------------------------------- relational / events
-
-@q(
-    "events_tumbling",
-    """
-SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
-       CAST(count(*) AS BIGINT) AS n, min(value) AS vmin, max(value) AS vmax,
-       round(sum(value), 3) AS vsum
-FROM events GROUP BY 1, 2
-""",
-)
-def events_tumbling(spark, sf_dir):
-    """Tumbling-window aggregation over the event stream table — the batch
-    equivalent of the Structured-Streaming windowed agg (streaming/ingest.py
-    holds the incremental path)."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return (
-        ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"), F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"), F.round(F.sum("value"), 3).alias("vsum"),
-        )
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "vmin", "vmax", "vsum")
-    )
-
-
-@q(
-    "events_asof",
-    """
-WITH cp AS (
-  SELECT * FROM (
-    SELECT event_type, time_bucket(INTERVAL '1 hour', ts) AS ts,
-           CAST(min(event_id) AS DOUBLE) AS cv
-    FROM events GROUP BY 1, 2
-  ) WHERE EXTRACT(hour FROM ts) % 2 = 0
-),
-j AS (
-  SELECT e.ts AS ts, e.event_type AS event_type, c.ts AS ts_r, c.cv AS cv
-  FROM events e ASOF LEFT JOIN cp c
-    ON e.event_type = c.event_type AND e.ts >= c.ts
-)
-SELECT time_bucket(INTERVAL '1 hour', ts) AS ws, event_type,
-       CAST(count(ts_r) AS BIGINT) AS n,
-       CAST(min(floor(epoch(ts)) - floor(epoch(ts_r))) AS DOUBLE) AS vmin,
-       CAST(max(floor(epoch(ts)) - floor(epoch(ts_r))) AS DOUBLE) AS vmax,
-       round(sum(cv), 3) AS vsum
-FROM j GROUP BY 1, 2
-""",
-)
-def events_asof(spark, sf_dir):
-    """AS-OF JOIN (operators/asof.py — the nearest-time operator the
-    reference lacks, SURVEY §2.4; union+sort+last(ignorenulls) plan, one
-    exchange, no range-join blow-up): events match BACKWARD to the
-    latest even-hour checkpoint of their event_type, then aggregate to
-    the events-suite schema (match counts, min/max match gap in seconds,
-    checkpoint-id sums). The oracle is DuckDB's NATIVE ASOF LEFT JOIN —
-    the real SQL operator, not a mirrored reimplementation."""
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    from .operators.asof import asof_join
-
-    cp = (ev.groupBy(F.date_trunc("hour", "ts").alias("ts"), "event_type")
-          .agg(F.min("event_id").cast("double").alias("cv"))
-          .filter(F.hour("ts") % 2 == 0))
-    j = asof_join(ev.select("event_id", "ts", "event_type"), cp,
-                  on="ts", by=["event_type"])
-    gap = (F.unix_timestamp("ts") - F.unix_timestamp("ts_r")).cast("double")
-    return (
-        j.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(F.count("ts_r").alias("n"),
-             F.min(gap).alias("vmin"), F.max(gap).alias("vmax"),
-             F.round(F.sum("cv_r"), 3).alias("vsum"))
-        .select(F.col("w.start").alias("ws"), "event_type", "n",
-                "vmin", "vmax", "vsum")
-    )
-
-
-@q("events_tumbling_ice", _DEFS["events_tumbling"][1])
-def events_tumbling_ice(spark, sf_dir):
-    """The same tumbling aggregation read THROUGH the snapshot/manifest
-    table layer (sources/icetable.py): events land in an IceTable
-    (ts-clustered write -> disjoint file stats), the scan path re-reads the
-    committed snapshot, and the identical relation must come back — the
-    driver row hard-verifies commit + manifest + scan end to end. The
-    oracle SQL is the storage-independent events_tumbling query."""
-    import tempfile
-
-    from .sources.icetable import IceTable
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    t = IceTable.create(spark, tempfile.mktemp(prefix="gcs_ice_"), ev,
-                        order_by="ts", n_files=8)
-    back = t.read(spark)
-    return (
-        back.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n"), F.min("value").alias("vmin"),
-            F.max("value").alias("vmax"), F.round(F.sum("value"), 3).alias("vsum"),
-        )
-        .select(F.col("w.start").alias("ws"), "event_type", "n", "vmin", "vmax", "vsum")
-    )
-
-
-@q(
-    "events_sessionize",
-    """
-WITH o AS (
-  SELECT user_id, event_id, ts, epoch_us(ts) AS sec,
-         lag(epoch_us(ts)) OVER (PARTITION BY user_id
-                                 ORDER BY ts, event_id) AS prev
-  FROM events),
-s AS (
-  SELECT user_id, ts,
-         SUM(CASE WHEN prev IS NULL OR sec - prev > 1800000000 THEN 1 ELSE 0 END)
-           OVER (PARTITION BY user_id ORDER BY ts, event_id) AS session
-  FROM o)
-SELECT user_id, CAST(session AS BIGINT) AS session,
-       min(ts) AS session_start, max(ts) AS session_end,
-       CAST(count(*) AS BIGINT) AS n_events
-FROM s GROUP BY user_id, session
-""",
-)
-def events_sessionize(spark, sf_dir):
-    """Per-user sessionization over the event table — the BATCH TWIN of the
-    applyInPandasWithState streaming sessionizer (streaming/events.py;
-    pytest asserts the two produce identical closed sessions). Gap rule:
-    a > 30-minute silence starts a new session. Exact integer-second
-    window arithmetic; the oracle replays the same lag/running-sum
-    decisions."""
-    from .streaming.events import sessionize_batch
-
-    ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return sessionize_batch(ev, key_col="user_id", gap_minutes=30)
-
-
-@q(
-    "tpch_pricing",
-    """
-SELECT l_returnflag, l_linestatus,
-       CAST(sum(CAST(round(l_quantity) AS BIGINT)) AS BIGINT) AS sum_qty,
-       CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT)) AS BIGINT) AS sum_base_cents,
-       CAST(count(*) AS BIGINT) AS count_order
-FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-02'
-GROUP BY l_returnflag, l_linestatus
-""",
-)
-def tpch_pricing(spark, sf_dir):
-    """Relational layer sanity: TPC-H Q1 shape with exact-cents arithmetic."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
-    return (
-        li.filter(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.sum(F.round("l_quantity").cast("long")).alias("sum_qty"),
-            F.sum(F.round(F.col("l_extendedprice") * 100).cast("long")).alias("sum_base_cents"),
-            F.count("*").alias("count_order"),
-        )
-    )
-
-
-@q(
-    "tpch_market_revenue",
-    """
-SELECT c_mktsegment,
-       CAST(sum(CAST(round(o_totalprice * 100) AS BIGINT)) AS BIGINT) AS revenue_cents,
-       CAST(count(*) AS BIGINT) AS n_orders
-FROM orders JOIN customer ON o_custkey = c_custkey
-GROUP BY c_mktsegment
-""",
-)
-def tpch_market_revenue(spark, sf_dir):
-    """Broadcast dim join + groupBy (the relational join path)."""
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    c = spark.read.parquet(f"{sf_dir}/customer.parquet")
-    return (
-        o.join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .groupBy("c_mktsegment")
-        .agg(
-            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).alias("revenue_cents"),
-            F.count("*").alias("n_orders"),
-        )
-    )
-
 
 # ------------------------------------------------- arbitrary-SRS (UTM) cube
 
@@ -3122,220 +2319,21 @@ def geotiff_roundtrip(spark, sf_dir):
     return a.unionAll(b)
 
 
-@q(
-    "ann_knn_join_ivf",
-    f"""
-WITH b AS (SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings),
-qs AS (SELECT vec_id AS q_id, v AS qv FROM b WHERE vec_id % 100 = 0),
-scored AS (
-  SELECT q_id, b.vec_id AS b_id,
-         list_dot_product(b.v, qs.qv)
-           / (sqrt(list_dot_product(b.v, b.v)) * sqrt(list_dot_product(qs.qv, qs.qv))) AS cos
-  FROM qs JOIN b ON b.vec_id <> qs.q_id
-)
-SELECT q_id, b_id, CAST(rank AS INT) AS rank FROM (
-  SELECT q_id, b_id, row_number() OVER (PARTITION BY q_id ORDER BY cos DESC, b_id ASC) AS rank
-  FROM scored
-) WHERE rank <= 3
-""",
-)
-def ann_knn_join_ivf(spark, sf_dir):
-    """BIG-BIG kNN join via trained-IVF bucket equi-join (functions/ann.py
-    knn_join_ivf) — no broadcast of either side. Run with nprobe = nlist,
-    where the decomposition is EXACT, so the plain exact-kNN SQL is a true
-    oracle; the approximate nprobe<nlist recall path is pytest-gated
-    (test_knn_join_ivf_big_big)."""
-    from .functions.ann import deterministic_centroids, knn_join_ivf
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    queries = emb.filter(F.col("vec_id") % 100 == 0)
-    # at nprobe = nlist the join is exact for ANY centroids, so k-means
-    # training is pure overhead for this oracle query (r3 VERDICT wrong #1)
-    # — a production run trains ONCE per dataset and persists the quantizer
-    # (kmeans_centroids is a plain list; ivf_topk takes a materialized
-    # assignment). Here the deterministic no-training init stands in for
-    # that persisted artifact; recall at nprobe<nlist, where centroid
-    # quality matters, is pytest-gated with trained centroids
-    # (test_knn_join_ivf_big_big).
-    cents = deterministic_centroids(emb, nlist=8)
-    out = knn_join_ivf(queries, emb, k=3, centroids=cents, nprobe=8)
-    return out.select("q_id", "b_id", "rank")
-
-
-@q("ann_rp_lsh_pairs", None)  # rows-only: probabilistic candidate generation
-def ann_rp_lsh_pairs(spark, sf_dir):
-    """Random-hyperplane LSH cosine near-dup pairs (functions/ann.py
-    rp_lsh_pairs): banded sign-signature equi-join with mega-bucket caps,
-    exact cosine verify. Output precision is exact (the filter), recall is
-    probabilistic — pytest-gated subset/recall checks (test_rp_lsh_pairs)."""
-    from .functions.ann import rp_lsh_pairs
-
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    # r = n_bits/bands = 8 sub-key bits per band: 256 buckets/band. The
-    # old (16, 8) parameterization had r=2 -> FOUR buckets per band, so
-    # every band was one mega-bucket and the capped representative join
-    # did O(n*cap) work for recall the cap then threw away — 48s at sf0.1
-    # vs ~4s here (found by the r4 per-member bench timings)
-    return rp_lsh_pairs(emb, threshold=0.4, n_bits=32, bands=4).select(
-        "vec_a", "vec_b", F.round("cos", 6).alias("cos_r")
-    )
-
-
-@q("ann_approx_suite", None)  # rows-only: both approximate-ANN surfaces
-def ann_approx_suite(spark, sf_dir):
-    """Folded rows-only suite: IVF top-k + RP-LSH near-dup pairs
-    normalized to (kind, a, b, score_r) in one union — both approximate
-    by construction, but SELF-VERIFYING (r4 VERDICT #4): the IVF arm
-    recomputes the EXACT top-k in the same query and assert_true's a
-    recall floor (observed deterministic recall is 0.5/0.4 at
-    sf0.01/0.1; floor 3/10 trips on a bucket-join regression, e.g.
-    recall 0), and every RP-LSH pair asserts its exact-cosine score
-    clears the threshold (the verify filter's precision contract).
-    Tighter recall/subset properties stay pytest-gated
-    (test_ivf_recall, test_rp_lsh_pairs)."""
-    from .functions.ann import cosine_topk
-
-    ivf = _DEFS["ann_ivf_topk"][0](spark, sf_dir)
-    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    qv = [float(x) for x in
-          emb.filter(F.col("vec_id") == 0).collect()[0]["embedding"]]
-    exact = cosine_topk(emb, qv, k=10).select("vec_id")
-    hits = ivf.join(F.broadcast(exact), "vec_id", "left_semi").agg(
-        F.count("*").alias("hits"))
-    a = (ivf.crossJoin(F.broadcast(hits))
-         .withColumn("_chk", F.assert_true(
-             F.col("hits") >= F.lit(3),
-             F.lit("IVF recall collapsed below 3/10 vs the exact top-k")))
-         .select(
-             F.lit("ivf_topk").alias("kind"),
-             (F.lit(0) + F.coalesce(F.col("_chk").cast("long"),
-                                    F.lit(0))).alias("a"),
-             F.col("vec_id").cast("long").alias("b"),
-             F.round("cos", 6).alias("score_r")))
-    b = (_DEFS["ann_rp_lsh_pairs"][0](spark, sf_dir)
-         .withColumn("_chk", F.assert_true(
-             F.col("cos_r") >= F.lit(0.4) - F.lit(1e-6),
-             F.lit("RP-LSH emitted a pair below its cosine threshold")))
-         .select(
-             F.lit("rp_lsh").alias("kind"),
-             (F.col("vec_a").cast("long")
-              + F.coalesce(F.col("_chk").cast("long"), F.lit(0))).alias("a"),
-             F.col("vec_b").cast("long").alias("b"),
-             F.col("cos_r").alias("score_r")))
-    return a.unionAll(b)
-
-
-@q("images_multimodal", None)  # rows-only: binary-column multimodal surface
-def images_multimodal(spark, sf_dir):
-    """The multimodal family's driver entry, ALL THREE modalities with
-    real codecs in one tagged union: image decode + per-channel stats +
-    phash; WAV/PCM audio (sample counts + RMS); Motion-JPEG AVI video
-    (frame dims + luminance) — functions/image.py over sources/riff.py
-    and the T.81 codec. No SQL engine can replay a codec, hence
-    rows-only, but the query SELF-VERIFIES (r4 VERDICT #4): audio RMS
-    must equal the source signal's RMS exactly (PCM is lossless) and
-    video luminance must sit within the JPEG tolerance of the source
-    frames, both enforced in-query via assert_true — a semantic
-    regression fails the driver run instead of still returning rows.
-    Pixel exactness is additionally pytest-gated
-    (test_image_stats_and_thumbnails, test_audio_video_real_codecs)."""
-    return (_images_mm_image(spark, sf_dir)
-            .unionAll(_images_mm_audio(spark, sf_dir))
-            .unionAll(_images_mm_video(spark, sf_dir)))
-
-
-def _mm_audio_pdf():
-    import numpy as np
-    import pandas as pd
-
-    from .functions.image import fake_audio
-
-    def _sig(seed, n=1024):
-        t = np.arange(n)
-        return (np.sin(t * (1 + seed % 17) * 0.01) * 10000).astype(np.int16)
-
-    def build():
-        seeds = list(range(40))
-        return pd.DataFrame({
-            "id": seeds,
-            "payload": [fake_audio(s) for s in seeds],
-            "want_rms": [float(np.sqrt(np.mean(
-                _sig(s).astype(np.float64) ** 2))) for s in seeds],
-        })
-
-    return _fixture("mm_audio_pdf", build)
-
-
-def _mm_video_pdf():
-    import numpy as np
-    import pandas as pd
-
-    from .functions.image import _synth_frame, fake_video
-
-    def build():
-        seeds = list(range(20))
-        return pd.DataFrame({
-            "id": seeds,
-            "payload": [fake_video(s, n_frames=6, h=16, w=16) for s in seeds],
-            "want_lum": [float(np.stack([_synth_frame(s, f, 16, 16)
-                                         for f in range(6)]).astype(float)
-                               .mean()) for s in seeds],
-        })
-
-    return _fixture("mm_video_pdf", build)
-
-
-@q("images_mm_image", None)  # bench-only arm of images_multimodal
-def _images_mm_image(spark, sf_dir):
+@q("image_stats_phash", None)  # rows-only: binary image-column surface
+def image_stats_phash(spark, sf_dir):
+    """Per-image decode + per-channel stats + perceptual hash over a
+    400-image synth table (functions/image.py image_stats). No SQL engine
+    can replay a codec, hence rows-only; pixel exactness is pytest-gated
+    (test_image_stats_and_thumbnails)."""
     from .functions.image import image_stats
     from .synth import images_table
 
-    imgs = images_table(spark, 400)
-    return image_stats(imgs).select(
-        F.lit("image").alias("kind"), F.col("image_id").alias("id"),
-        F.col("w").cast("long").alias("d1"), F.col("h").cast("long").alias("d2"),
-        F.col("channels").cast("long").alias("d3"),
-        F.round("mean_b1", 6).alias("v_r"),
-        F.col("phash").cast("string").alias("sig"),
+    return image_stats(images_table(spark, 400)).select(
+        "image_id", F.col("w").cast("long").alias("w"),
+        F.col("h").cast("long").alias("h"),
+        F.col("channels").cast("long").alias("channels"),
+        F.round("mean_b1", 6).alias("mean_b1"), "phash",
     )
-
-
-@q("images_mm_audio", None)  # bench-only arm
-def _images_mm_audio(spark, sf_dir):
-    from .functions.image import audio_stats
-
-    audio = spark.createDataFrame(_mm_audio_pdf())
-    return (audio_stats(audio.select("id", "payload"))
-         .join(audio.select("id", "want_rms"), "id")
-         .withColumn("_chk", F.assert_true(
-             F.abs(F.col("rms") - F.col("want_rms")) < F.lit(1e-9),
-             F.lit("audio RMS diverged from the lossless-PCM source")))
-         .select(F.lit("audio").alias("kind"), F.col("id").cast("string"),
-                 F.col("n_samples").cast("long").alias("d1"),
-                 F.col("rate").cast("long").alias("d2"),
-                 # assert_true returns NULL on success (raises otherwise);
-                 # folding it into an output column keeps it un-prunable
-                 (F.lit(1) + F.coalesce(F.col("_chk").cast("long"),
-                                        F.lit(0))).alias("d3"),
-                 F.round("rms", 6).alias("v_r"), F.lit("").alias("sig")))
-
-
-@q("images_mm_video", None)  # bench-only arm
-def _images_mm_video(spark, sf_dir):
-    from .functions.image import video_stats
-
-    vid = spark.createDataFrame(_mm_video_pdf())
-    return (video_stats(vid.select("id", "payload"))
-         .join(vid.select("id", "want_lum"), "id")
-         .withColumn("_chk", F.assert_true(
-             F.abs(F.col("mean_lum") - F.col("want_lum")) < F.lit(2.0),
-             F.lit("video luminance outside the MJPEG tolerance")))
-         .select(F.lit("video").alias("kind"), F.col("id").cast("string"),
-                 F.col("n_frames").cast("long").alias("d1"),
-                 F.col("h").cast("long").alias("d2"),
-                 (F.col("w").cast("long")
-                  + F.coalesce(F.col("_chk").cast("long"), F.lit(0))).alias("d3"),
-                 F.round("mean_lum", 6).alias("v_r"), F.lit("").alias("sig")))
 
 
 # ---------------------------------------------------------------------------
@@ -3374,9 +2372,6 @@ def _fold(name: str, tag_col: str, parts) -> None:
 
 _fold("stjoin_suite", "strategy",
       [("grid", "stjoin_rows"), ("s2", "stjoin_s2"), ("hex", "stjoin_hex")])
-_fold("events_tumbling_suite", "src",
-      [("direct", "events_tumbling"), ("ice", "events_tumbling_ice"),
-       ("asof", "events_asof")])
 _fold("cube_mean_median", "agg", [("mean", "cube_mean"), ("median", "cube_median")])
 _fold("cube_first_last", "agg", [("first", "cube_first"), ("last", "cube_last")])
 _fold("cube_counts", "agg",
@@ -3389,59 +2384,6 @@ _fold("fill_time_suite", "method",
       [("linear", "fill_time_linear"), ("locf", "fill_time_locf")])
 _fold("query_points_timeseries", "kind",
       [("points", "query_points"), ("timeseries", "query_timeseries")])
-@q(
-    "doc_signature_suite",
-    f"""
-SELECT 'minhash' AS part, doc_id, mh_0 || mh_1 || mh_2 || mh_3 AS sig
-FROM ({_DEFS["doc_minhash"][1]}) m
-UNION ALL
-SELECT 'simhash' AS part, doc_id, CAST(simhash AS VARCHAR) AS sig
-FROM ({_DEFS["doc_simhash"][1]}) s
-""",
-)
-def doc_signature_suite(spark, sf_dir):
-    """Folded driver suite: MinHash (k=4) + SimHash (60-bit) per-doc
-    signatures in one tagged union (frees a registry-window slot for
-    doc_decontaminate)."""
-    a = _DEFS["doc_minhash"][0](spark, sf_dir).select(
-        F.lit("minhash").alias("part"), "doc_id",
-        F.concat("mh_0", "mh_1", "mh_2", "mh_3").alias("sig"),
-    )
-    b = _DEFS["doc_simhash"][0](spark, sf_dir).select(
-        F.lit("simhash").alias("part"), "doc_id",
-        F.col("simhash").cast("string").alias("sig"),
-    )
-    return a.unionAll(b)
-
-
-@q(
-    "ann_cosine_suite",
-    f"""
-SELECT 'topk' AS part, CAST(0 AS BIGINT) AS id_a, CAST(vec_id AS BIGINT) AS id_b, cos_r
-FROM ({_DEFS["ann_topk"][1]}
-) t
-UNION ALL
-SELECT 'pairs' AS part, CAST(vec_a AS BIGINT) AS id_a, CAST(vec_b AS BIGINT) AS id_b, cos_r
-FROM ({_DEFS["ann_dup_pairs"][1]}
-) p
-""",
-)
-def ann_cosine_suite(spark, sf_dir):
-    """Folded driver suite: brute-force cosine top-k + exact near-dup
-    threshold pairs in one tagged union (frees a registry-window slot for
-    s2_cells). Schemas are coerced to (part, id_a, id_b, cos_r); the top-k
-    member's query vector is vec 0, carried as id_a = 0."""
-    t = _DEFS["ann_topk"][0](spark, sf_dir).select(
-        F.lit("topk").alias("part"), F.lit(0).cast("long").alias("id_a"),
-        F.col("vec_id").cast("long").alias("id_b"), "cos_r",
-    )
-    p = _DEFS["ann_dup_pairs"][0](spark, sf_dir).select(
-        F.lit("pairs").alias("part"), F.col("vec_a").cast("long").alias("id_a"),
-        F.col("vec_b").cast("long").alias("id_b"), "cos_r",
-    )
-    return t.unionAll(p)
-
-
 # ------------------------------------------------------------- s2 index
 
 _S2_LEVEL = 11
@@ -3739,82 +2681,6 @@ def window_time_suite(spark, sf_dir):
 
 
 @q(
-    "tpch_suite",
-    f"""
-SELECT 'pricing' AS part, l_returnflag AS k1, l_linestatus AS k2,
-       sum_qty AS m1, sum_base_cents AS m2, count_order AS m3
-FROM ({_DEFS["tpch_pricing"][1]}) sub
-UNION ALL
-SELECT 'market' AS part, c_mktsegment AS k1, '' AS k2,
-       revenue_cents AS m1, n_orders AS m2, CAST(0 AS BIGINT) AS m3
-FROM ({_DEFS["tpch_market_revenue"][1]}) sub
-""",
-)
-def tpch_suite(spark, sf_dir):
-    """Folded driver suite: relational-layer sanity (Q1-shape agg + broadcast
-    dim join) in one tagged union."""
-    a = _DEFS["tpch_pricing"][0](spark, sf_dir).select(
-        F.lit("pricing").alias("part"),
-        F.col("l_returnflag").alias("k1"), F.col("l_linestatus").alias("k2"),
-        F.col("sum_qty").alias("m1"), F.col("sum_base_cents").alias("m2"),
-        F.col("count_order").alias("m3"),
-    )
-    b = _DEFS["tpch_market_revenue"][0](spark, sf_dir).select(
-        F.lit("market").alias("part"),
-        F.col("c_mktsegment").alias("k1"), F.lit("").alias("k2"),
-        F.col("revenue_cents").alias("m1"), F.col("n_orders").alias("m2"),
-        F.lit(0).cast("long").alias("m3"),
-    )
-    return a.unionAll(b)
-
-
-@q("doc_near_dups_suite", None)  # rows-only: both members are probabilistic
-def doc_near_dups_suite(spark, sf_dir):
-    """Folded rows-only suite: full MinHash-LSH near-dup pipeline + bucketed
-    SimHash hamming join (functions/dedup.py near_dups_minhash,
-    simhash_near_dups) — SELF-VERIFYING (r4 VERDICT #4): every minhash
-    pair asserts exact-Jaccard >= its threshold and every simhash pair
-    asserts hamming <= its bound (the verify filters' precision
-    contracts), and an 'xcheck' arm cross-checks the two LSH schemes'
-    GUARANTEED overlap — a pair with Jaccard = 1 has identical shingle
-    sets, hence identical minhashes under ANY salt, so the r=2 pipeline
-    and the oracled r=1 doc_lsh_jaccard query must agree exactly on the
-    Jaccard-1 pair set; any symmetric-difference row trips assert_true
-    (the arm is empty when healthy, so suite row counts are unchanged)."""
-    a0 = _DEFS["doc_near_dups_pipeline"][0](spark, sf_dir)
-    a = (a0.withColumn("_chk", F.assert_true(
-            F.col("jaccard") >= F.lit(0.5) - F.lit(1e-9),
-            F.lit("minhash near-dup pair below its Jaccard threshold")))
-         .select(F.lit("minhash").alias("method"), "doc_a", "doc_b",
-                 (F.col("jaccard").cast("double")
-                  + F.coalesce(F.col("_chk").cast("double"),
-                               F.lit(0.0))).alias("score")))
-    b = (_DEFS["doc_simhash_near_dups"][0](spark, sf_dir)
-         .withColumn("_chk", F.assert_true(
-             F.col("hamming") <= F.lit(8),
-             F.lit("simhash pair above its hamming bound")))
-         .select(F.lit("simhash").alias("method"), "doc_a", "doc_b",
-                 (F.col("hamming").cast("double")
-                  + F.coalesce(F.col("_chk").cast("double"),
-                               F.lit(0.0))).alias("score")))
-    pipe1 = a0.filter(F.col("jaccard") >= 0.999999).select("doc_a", "doc_b")
-    lsh1 = (_DEFS["doc_lsh_jaccard"][0](spark, sf_dir)
-            .filter(F.col("jaccard") >= 0.999999).select("doc_a", "doc_b"))
-    diff = (pipe1.join(lsh1, ["doc_a", "doc_b"], "left_anti")
-            .unionAll(lsh1.join(pipe1, ["doc_a", "doc_b"], "left_anti")))
-    xcheck = diff.select(
-        F.lit("xcheck").alias("method"), "doc_a", "doc_b",
-        F.coalesce(
-            # row-dependent always-false condition: assert_true(lit(False))
-            # would constant-fold and raise at PLAN time even with 0 rows
-            F.assert_true(F.col("doc_a") != F.col("doc_a"),
-                          F.lit("Jaccard-1 pair sets diverged between the "
-                                "r=1 and r=2 LSH schemes")).cast("double"),
-            F.lit(-1.0)).alias("score"))
-    return a.unionAll(b).unionAll(xcheck)
-
-
-@q(
     "reduce_time_full",
     f"""
 WITH cells AS ({_CELLS_F_SQL}),
@@ -3909,28 +2775,13 @@ _WINDOW_ORACLED = [
     "geotiff_roundtrip",
     "packed_roundtrip",
     "cube_write_reread",
-    # documents / embeddings / events / relational
-    "doc_stats",
-    "doc_exact_dups",
-    "doc_signature_suite",  # folds doc_minhash + doc_simhash
-    "doc_lsh_jaccard",
-    "doc_decontaminate",
-    "doc_dedup_clusters",
-    "doc_training_mix",
-    "ann_cosine_suite",  # folds ann_topk + ann_dup_pairs
-    "ann_knn_join",
-    "ann_knn_join_ivf",
+    # cell indexes
     "s2_suite",  # r4: real S2 index + exact bucketed kNN (functions/s2.py)
-    "events_tumbling_suite",  # folds direct + IceTable-scan paths
-    "events_sessionize",
-    "tpch_suite",
 ]
 
 _WINDOW_ROWS_ONLY = [
-    "ann_approx_suite",  # folds ann_ivf_topk + ann_rp_lsh_pairs
-    "doc_near_dups_suite",
     "cube_decode_suite",  # folds simple_cube_decode + cube_mask_band_decode too
-    "images_multimodal",
+    "image_stats_phash",
 ]
 
 REGISTRY: dict = {}

@@ -1,32 +1,13 @@
-"""Training-data operator family — lazy exports so `from
-gdalcubes_cpp_spark.functions import near_dup_clusters` works without
-eagerly importing every submodule (some pull in pyspark.ml)."""
+"""Image-collection and cell-index operators — lazy exports, so `from
+gdalcubes_cpp_spark.functions import s2_knn_join` imports only the submodule
+that defines the name."""
 
 _EXPORTS = {
-    # dedup
-    "exact_dups": ".dedup", "minhash_signature": ".dedup",
-    "lsh_candidates": ".dedup", "ngram_jaccard": ".dedup",
-    "near_dups_minhash": ".dedup", "simhash": ".dedup",
-    "simhash_near_dups": ".dedup", "connected_components": ".dedup",
-    "near_dup_clusters": ".dedup", "decontaminate": ".dedup",
-    # training-mix assembly
-    "deterministic_sample": ".mix", "stratified_sample": ".mix",
-    "pack_shards": ".mix", "training_mix": ".mix", "corpus_pipeline": ".mix",
-    # text analysis
-    "analyze": ".text", "lang_id": ".text", "quality_score": ".text",
-    "unigram_lm_scores": ".text", "unigram_lm_vocab": ".text",
-    # embeddings / ANN
-    "cosine_topk": ".ann", "ivf_topk": ".ann", "knn_join_bruteforce": ".ann",
-    "knn_join_ivf": ".ann", "kmeans_centroids": ".ann",
-    "cosine_near_dup_pairs": ".ann", "rp_lsh_pairs": ".ann",
-    "quantize_int8": ".ann", "dequantize_int8": ".ann",
-    # multimodal
+    # image collections
     "image_stats": ".image", "thumbnails": ".image",
     "create_overviews": ".image", "push_down_overviews": ".image",
     "translate_collection": ".image", "write_png_collection": ".image",
     "exif_metadata": ".image", "normalize_orientation": ".image",
-    "audio_stats": ".image", "video_stats": ".image",
-    "decode_audio": ".image", "sample_frames": ".image",
     # spatial cell indexes
     "s2_cell_id": ".s2", "s2_parent": ".s2", "s2_knn_join": ".s2",
     "range_partition_by_cell": ".s2",

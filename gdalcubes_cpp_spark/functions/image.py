@@ -1,12 +1,9 @@
-"""Multimodal (image/audio/video) column operators: binary payloads with
-typed metadata, processed by Arrow-batched pandas UDFs over mapInPandas.
+"""Image-collection column operators: binary image payloads with typed
+metadata, processed by Arrow-batched pandas UDFs over mapInPandas.
 
-Image decode/resize/stats are REAL (from-spec numpy PNG/JPEG/JP2 codecs in
-..codecs / ..sources.jpegbase). Audio and video are REAL too since r5:
-decode_audio parses RIFF/WAVE PCM (8/16/24/32-bit + float) and
-sample_frames/video_stats walk MJPEG-AVI containers via the same JPEG
-decoder (..sources.riff). Production swap policy: on a real cluster these
-pure-python codecs are replaced by libjpeg-turbo/libsndfile/ffmpeg bindings
+Decode/resize/stats are REAL (from-spec numpy PNG/JPEG/JP2 codecs in
+..codecs / ..sources.jpegbase). Production swap policy: on a real cluster
+these pure-python codecs are replaced by libjpeg-turbo/libpng bindings
 behind the same UDF signatures — the Spark-side plumbing (schema, Arrow
 batch iteration, partitioning) is the part this repo pins with tests.
 Unknown containers refuse with ValueError, never garbage pixels.
@@ -14,7 +11,6 @@ Unknown containers refuse with ValueError, never garbage pixels.
 
 from __future__ import annotations
 
-import struct
 from typing import Iterator
 
 import numpy as np
@@ -494,114 +490,3 @@ def push_down_overviews(
     )
     kept = images.join(best.select("image_id"), "image_id", "left_anti")
     return kept.select(*other, "bytes", "w", "h", "fmt").unionByName(replaced)
-
-
-# ---------------------------------------------------------------------------
-# audio / video columns — REAL codecs (sources/riff.py: WAV/PCM from the
-# 1991 Multimedia Programming Interface spec; Motion-JPEG AVI reusing the
-# from-spec T.81 codec). The deterministic fixture generators below emit
-# genuine containers, so tests and driver queries exercise the actual
-# decode path end-to-end.
-# ---------------------------------------------------------------------------
-
-_FAKE_AUDIO_MAGIC = b"FAUD"   # pre-round-5 fixture container, still decoded
-_FAKE_VIDEO_MAGIC = b"FVID"
-
-
-def fake_audio(seed: int, n_samples: int = 1024, rate: int = 16000) -> bytes:
-    """Deterministic audio fixture: a REAL mono 16-bit PCM WAV of a
-    seed-keyed sine (name kept for back-compat with earlier rounds)."""
-    from ..sources.riff import encode_wav
-
-    t = np.arange(n_samples)
-    sig = (np.sin(t * (1 + seed % 17) * 0.01) * 10000).astype(np.int16)
-    return encode_wav(sig, rate=rate)
-
-
-def decode_audio(data: bytes) -> tuple:
-    """Audio bytes -> (samples, rate). WAV/PCM (8/16/24/32-bit int and
-    IEEE float) via the from-spec RIFF codec; the legacy FAUD fixture
-    container still decodes. Unknown magics raise ValueError."""
-    data = bytes(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"WAVE":
-        from ..sources.riff import decode_wav
-
-        return decode_wav(data)
-    if data[:4] == _FAKE_AUDIO_MAGIC:
-        n, rate = struct.unpack("<ii", data[4:12])
-        return np.frombuffer(data[12:12 + 2 * n], dtype=np.int16), rate
-    raise ValueError("unrecognized audio container (WAV supported)")
-
-
-def fake_video(seed: int, n_frames: int = 8, w: int = 16, h: int = 16,
-               fps: int = 10) -> bytes:
-    """Deterministic video fixture: a REAL Motion-JPEG AVI of seed-keyed
-    smooth gradient frames (smooth => JPEG round-trip stays within a
-    couple of gray levels; PSNR gates live in tests)."""
-    from ..sources.riff import encode_avi_mjpeg
-
-    frames = [_synth_frame(seed, f, h, w) for f in range(n_frames)]
-    return encode_avi_mjpeg(frames, fps=fps)
-
-
-def _synth_frame(seed: int, f: int, h: int, w: int) -> np.ndarray:
-    yy, xx = np.mgrid[0:h, 0:w]
-    return (((yy * 2 + xx + seed * 7 + 13 * f) // 2) % 200 + 20).astype(np.uint8)
-
-
-def sample_frames(data: bytes, every: int = 2) -> np.ndarray:
-    """Video bytes -> every-nth decoded frame, (k, h, w[, c]) uint8.
-    Motion-JPEG AVI via the from-spec RIFF+T.81 codecs; the legacy FVID
-    fixture container still decodes. Unknown magics raise ValueError."""
-    data = bytes(data)
-    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-        from ..sources.riff import decode_avi_mjpeg
-
-        frames, _fps = decode_avi_mjpeg(data)
-        return frames[::every]
-    if data[:4] == _FAKE_VIDEO_MAGIC:
-        n, h, w = struct.unpack("<iii", data[4:16])
-        frames = np.frombuffer(data[16:16 + n * h * w], dtype=np.uint8).reshape(n, h, w)
-        return frames[::every]
-    raise ValueError("unrecognized video container (MJPEG-AVI supported)")
-
-
-def audio_stats(df: DataFrame, bytes_col: str = "payload") -> DataFrame:
-    """(id, n_samples, rate, rms) over audio payloads via mapInPandas —
-    bytes stay executor-local, no shuffle; multi-channel RMS pools all
-    channels (frame count reported, not sample count)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            ids, ns, rates, rms = [], [], [], []
-            for _, r in b.iterrows():
-                sig, rate = decode_audio(r[bytes_col])
-                ids.append(r["id"])
-                ns.append(sig.shape[0])
-                rates.append(rate)
-                rms.append(float(np.sqrt(np.mean(sig.astype(np.float64) ** 2))))
-            yield pd.DataFrame({"id": ids, "n_samples": ns, "rate": rates, "rms": rms})
-
-    return df.mapInPandas(run, "id long, n_samples int, rate int, rms double")
-
-
-def video_stats(df: DataFrame, bytes_col: str = "payload",
-                every: int = 1) -> DataFrame:
-    """(id, n_frames, h, w, mean_lum) over video payloads via mapInPandas
-    (``every`` sub-samples frames before the stats — the frame-sampling
-    ETL a training pipeline runs)."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            out = {"id": [], "n_frames": [], "h": [], "w": [], "mean_lum": []}
-            for _, r in b.iterrows():
-                frames = sample_frames(r[bytes_col], every=every)
-                out["id"].append(r["id"])
-                out["n_frames"].append(frames.shape[0])
-                out["h"].append(frames.shape[1])
-                out["w"].append(frames.shape[2])
-                out["mean_lum"].append(float(frames.astype(np.float64).mean()))
-            yield pd.DataFrame(out)
-
-    return df.mapInPandas(
-        run, "id long, n_frames int, h int, w int, mean_lum double")

@@ -135,15 +135,13 @@ def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
 
 
 def _time_at(it, v):
-    """Timestamp column for slice index ``it`` on a regular axis."""
+    """Timestamp column for slice index ``it`` on a regular axis. Years are
+    12-month steps: timestamp_add clamps the day-of-month as
+    view.add_duration does (2020-02-29 + P1Y -> 2021-02-28)."""
     t0 = F.lit(v.t0)
-    if v.dt.unit == "Y":
-        return F.make_timestamp(
-            F.lit(v.t0.year) + it * v.dt.n, F.lit(v.t0.month), F.lit(v.t0.day),
-            F.lit(v.t0.hour), F.lit(v.t0.minute), F.lit(v.t0.second),
-        )
-    if v.dt.unit == "M":
-        return F.timestamp_add("MONTH", (it * v.dt.n).cast("int"), t0)
+    if v.dt.unit in ("Y", "M"):
+        months = v.dt.n * (12 if v.dt.unit == "Y" else 1)
+        return F.timestamp_add("MONTH", (it * months).cast("int"), t0)
     return F.timestamp_add("SECOND", (it * v.dt.seconds).cast("long"), t0)
 
 

@@ -3,8 +3,8 @@ gets, with one rule per decision.
 
 ``spread`` widens a narrow input in front of a CPU-heavy Python kernel.
 Compressed columnar inputs can be small on disk while carrying orders of
-magnitude more kernel work than bytes (a 6 MB single-row-group parquet of
-text expands to tens of millions of md5 calls in a MinHash pass). Parquet
+magnitude more kernel work than bytes (a 7 MB single-row-group parquet of
+encoded images expands to thousands of decode-and-warp calls). Parquet
 scans cannot split inside a row group: session.py's 16m/1m split settings
 plan a one-row-group file as several byte-range partitions, but one of them
 reads every row — the small-file / row-group-granularity trap. ``spread``
@@ -30,10 +30,9 @@ def spread(df: DataFrame) -> DataFrame:
     The partition probe converts the plan to an RDD (no job is run). The
     repartition is a round-robin shuffle of the input rows; callers use it
     in front of kernels whose per-row cost dwarfs a row's transfer cost
-    (decode/warp, shingling/hashing, signature computation, embedding
-    arithmetic), where the shuffle amortizes to noise. Result semantics are
-    unaffected: every caller aggregates or joins afterwards, none depends
-    on input order.
+    (decode/warp, cell covers), where the shuffle amortizes to noise.
+    Result semantics are unaffected: every caller aggregates or joins
+    afterwards, none depends on input order.
     """
     if df.isStreaming:
         # no .rdd on a streaming frame; micro-batch sources size their own

@@ -5,7 +5,7 @@ Local mode for tests/bench; on a real cluster the same config ships via
 skew-join splitting handle hot-cell skew after map-side partial aggregation.
 
 Python workers: every task of every Python stage (the cube scan, the s2/hex
-covers, the streaming UDFs) starts with PySpark's
+covers, the stream_* UDFs) starts with PySpark's
 ``worker_util.setup_spark_files``, which calls ``importlib.invalidate_caches()``.
 Workers import PySpark from ``$SPARK_HOME/python/lib/pyspark.zip``, and on
 Python 3.11 each of a worker's 14-16 ``zipimport.zipimporter`` entries answers
@@ -25,38 +25,12 @@ import os
 from pyspark.sql import SparkSession
 
 
-def _ensure_protoshim() -> None:
-    """transformWithStateInPandas's python workers import the generated
-    StateMessage_pb2, which needs google.protobuf. When the real package is
-    absent, put the vendored minimal runtime (vendor/protoshim) on BOTH
-    this process's sys.path and PYTHONPATH — the latter BEFORE the JVM
-    starts, so forked python workers inherit it."""
-    import sys
-
-    try:
-        import google.protobuf as _gp
-        if "protoshim" not in (getattr(_gp, "__file__", "") or ""):
-            return                     # the real package is installed
-        # the shim is already imported in THIS process (e.g. a test put it
-        # on sys.path) — still fall through so PYTHONPATH reaches workers
-    except ImportError:
-        pass
-    shim = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "vendor", "protoshim")
-    if shim not in sys.path:
-        sys.path.insert(0, shim)
-    pp = os.environ.get("PYTHONPATH", "")
-    if shim not in pp.split(os.pathsep):
-        os.environ["PYTHONPATH"] = shim + (os.pathsep + pp if pp else "")
-
-
 def get_spark(
     app: str = "gdalcubes_cpp_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    _ensure_protoshim()
     cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # one BLAS thread per python worker: N workers x M-thread OpenBLAS

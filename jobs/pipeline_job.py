@@ -7,7 +7,7 @@ identically on a bare cluster node and in local mode::
     ZIP=$(python jobs/make_pyfiles.py)
     # any registry query against a parquet table dir:
     spark-submit --master local[8] --py-files "$ZIP" jobs/pipeline_job.py \
-        --query doc_stats --sf-dir /root/testdata/sf0.01 --out /tmp/o.parquet
+        --query cube_mean_median --sf-dir /root/testdata/sf0.01 --out /tmp/o.parquet
     # the flagship image pipeline (synth input_hint table -> S2/grid join ->
     # chunk tiling -> decode -> temporal reduce):
     spark-submit --master local[8] --py-files "$ZIP" jobs/pipeline_job.py \

@@ -1,104 +1,9 @@
-"""As-of join (operators/asof.py) — verified three ways: against
-pandas.merge_asof (the de-facto semantics reference), against DuckDB's
-native ASOF JOIN (cross-engine, backward direction), and on hand-built
-edge cases (equal timestamps, tolerance, unmatched rows, duplicate left
-rows). Plus the approx-quantile reducers (reduce_time.cpp:355's
-future-work note)."""
+"""Approx-quantile time reducers (the reference's reduce_time.cpp:355
+future-work note) against the exact type-7 kernels.
 
-import duckdb
-import numpy as np
-import pandas as pd
-import pytest
-
-from gdalcubes_cpp_spark.operators.asof import asof_join
-
-
-def _mkdata(seed=7, n_left=400, n_right=150, keys=("a", "b", "c")):
-    rng = np.random.RandomState(seed)
-    base = pd.Timestamp("2020-01-01")
-    left = pd.DataFrame({
-        "k": rng.choice(keys, n_left),
-        "ts": base + pd.to_timedelta(rng.randint(0, 100_000, n_left), "s"),
-        "lv": np.arange(n_left, dtype=np.int64),
-    })
-    right = pd.DataFrame({
-        "k": rng.choice(keys, n_right),
-        "ts": base + pd.to_timedelta(rng.randint(0, 100_000, n_right), "s"),
-        "rv": np.arange(n_right, dtype=np.int64) * 10,
-    })
-    # merge_asof requires sort; dedupe right (k, ts) so the expected match
-    # is unambiguous across engines
-    right = right.drop_duplicates(["k", "ts"])
-    return left, right
-
-
-def _spark_asof(spark, left, right, **kw):
-    out = asof_join(spark.createDataFrame(left), spark.createDataFrame(right),
-                    on="ts", by=["k"], **kw).toPandas()
-    return out.sort_values("lv").reset_index(drop=True)
-
-
-@pytest.mark.parametrize("direction", ["backward", "forward", "nearest"])
-def test_matches_pandas_merge_asof(spark, direction):
-    left, right = _mkdata()
-    got = _spark_asof(spark, left, right, direction=direction)
-    want = pd.merge_asof(
-        left.sort_values("ts"), right.sort_values("ts"),
-        on="ts", by="k", direction=direction, suffixes=("", "_r"),
-    ).sort_values("lv").reset_index(drop=True)
-    assert got["rv_r"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
-
-
-def test_matches_duckdb_asof_join(spark):
-    """Backward direction against the REAL SQL operator (DuckDB ASOF)."""
-    left, right = _mkdata(seed=11)
-    got = _spark_asof(spark, left, right, direction="backward")
-    con = duckdb.connect()
-    con.register("left_t", left)
-    con.register("right_t", right)
-    want = con.execute(
-        "SELECT l.lv, r.rv FROM left_t l ASOF LEFT JOIN right_t r "
-        "ON l.k = r.k AND l.ts >= r.ts ORDER BY l.lv").df()
-    assert got["rv_r"].fillna(-1).tolist() == want["rv"].fillna(-1).tolist()
-
-
-def test_edges(spark):
-    base = pd.Timestamp("2020-01-01")
-    left = pd.DataFrame({
-        "k": ["a"] * 4 + ["b"],
-        "ts": [base, base + pd.Timedelta("10s"), base + pd.Timedelta("10s"),
-               base + pd.Timedelta("100s"), base],
-        "lv": [0, 1, 2, 3, 4],
-    })
-    right = pd.DataFrame({
-        "k": ["a", "a", "c"],
-        "ts": [base + pd.Timedelta("10s"), base + pd.Timedelta("60s"), base],
-        "rv": [100, 200, 300],
-    })
-    got = _spark_asof(spark, left, right, direction="backward")
-    # equal ts matches (inclusive); earlier rows unmatched; key 'b' never
-    assert got["rv_r"].tolist() == [None, 100, 100, 200, None] or \
-        got["rv_r"].fillna(-1).tolist() == [-1, 100, 100, 200, -1]
-    # duplicate left rows (lv 1 and 2 share k/ts) both matched
-    got_n = _spark_asof(spark, left, right, direction="nearest")
-    assert got_n["rv_r"].fillna(-1).tolist() == [100, 100, 100, 200, -1]
-    # tolerance nulls distant matches (lv 3 gap is 40s)
-    got_t = _spark_asof(spark, left, right, direction="backward",
-                        tolerance_s=30.0)
-    assert got_t["rv_r"].fillna(-1).tolist() == [-1, 100, 100, -1, -1]
-    assert got_t["ts_r"].isna().tolist() == [True, False, False, True, True]
-
-
-def test_row_count_preserved_and_plan(spark):
-    """As-of never multiplies rows (unlike a range join) and the plan is
-    one hash exchange + sort per side — no cartesian/BNLJ anywhere."""
-    left, right = _mkdata(seed=3, n_left=1000, n_right=500)
-    l = spark.createDataFrame(left)
-    r = spark.createDataFrame(right)
-    out = asof_join(l, r, on="ts", by=["k"])
-    assert out.count() == len(left)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
+The module name predates the reducers' current scope: it once also held
+an as-of join, which left the package with the event-stream family. The
+name is kept so that this test's id stays stable."""
 
 
 def test_approx_quantile_reducers(spark):
@@ -126,25 +31,3 @@ def test_approx_quantile_reducers(spark):
     # stride; 3.0 bounds the largest adjacent gap at these params)
     assert (abs(got["B1_approx_median"] - got["B1_median"]) <= 3.0).all()
     assert (abs(got["B1_approx_Q1"] - got["B1_Q1"]) <= 3.0).all()
-
-
-def test_subsecond_nearest_and_tolerance(spark):
-    """Fractional-second gaps (round-5 review finding #3): 'nearest' must
-    pick the truly nearer side and tolerance must apply at sub-second
-    resolution (unix_timestamp truncation would get both wrong)."""
-    base = pd.Timestamp("2020-01-01")
-    left = pd.DataFrame({"k": ["a"], "ts": [base + pd.Timedelta("900ms")],
-                         "lv": [0]})
-    right = pd.DataFrame({
-        "k": ["a", "a"],
-        "ts": [base, base + pd.Timedelta("1s")],
-        "rv": [10, 20],
-    })
-    got = _spark_asof(spark, left, right, direction="nearest")
-    assert got["rv_r"].tolist() == [20]      # forward gap 0.1s < backward 0.9s
-    got_t = _spark_asof(spark, left, right, direction="backward",
-                        tolerance_s=0.5)
-    assert got_t["rv_r"].isna().all()        # 0.9s gap exceeds 0.5s
-    got_t2 = _spark_asof(spark, left, right, direction="nearest",
-                         tolerance_s=0.5)
-    assert got_t2["rv_r"].tolist() == [20]

@@ -202,32 +202,6 @@ def test_flagship_plan_single_narrow_exchange(spark):
     assert ins and "bytes" not in ins[0]
 
 
-def test_decontaminate_plan_no_text_shuffle(spark):
-    """Plan-shape guard for decontaminate (PLANS.md 'Benchmark
-    decontamination'): no cartesian/BNLJ anywhere, and no Exchange carries
-    the `text` column — only (doc_id, gram-hash) rows move."""
-    import io
-    import re
-    from contextlib import redirect_stdout
-
-    from gdalcubes_cpp_spark.functions.dedup import decontaminate
-
-    docs = spark.createDataFrame(
-        [(i, f"word{i} alpha beta gamma delta epsilon zeta") for i in range(50)],
-        "doc_id long, text string",
-    )
-    bench = docs.filter("doc_id % 7 = 0")
-    out = decontaminate(docs, bench, n=3)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        out.explain("formatted")
-    plan = buf.getvalue()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-    for m in re.finditer(r"\(\d+\) Exchange\n(Input.*)", plan):
-        assert "text" not in m.group(1), m.group(1)
-
-
 def test_json_plan_full_registry(spark, tmp_path):
     """r4 VERDICT #5 — registry parity with cube_factory
     (src/cube_factory.cpp:86+): one pipeline spec exercising join_bands

@@ -1,207 +1,95 @@
-"""Connected-components dedup clustering + training-mix operators
-(functions/dedup.py connected_components / near_dup_clusters,
-functions/mix.py deterministic/stratified sampling + shard packing)."""
+"""Guard the package's import surface.
 
-import random
+The ``functions`` package exports its operators lazily, and many modules
+import their siblings inside a function body, so a missing module would
+otherwise surface only when that function first runs. This parses every
+module of the package and checks that each in-package import (relative or
+``gdalcubes_cpp_spark.*``, at module level or function-local) and each
+``functions._EXPORTS`` target names a module that exists and a name that
+module binds.
 
-import pandas as pd
+The module name is historical: it once held the training-mix and
+connected-components tests, which left with those operators. The guard
+keeps it so that ``test_functions_lazy_export_surface`` keeps its id."""
+
+from __future__ import annotations
+
+import ast
+import pathlib
+
 import pytest
-from pyspark.sql import functions as F
 
-from gdalcubes_cpp_spark.functions.dedup import connected_components, near_dup_clusters
-from gdalcubes_cpp_spark.functions.mix import (
-    _threshold_hex,
-    deterministic_sample,
-    pack_shards,
-    stratified_sample,
-    training_mix,
-)
+PKG = pathlib.Path(__file__).resolve().parent.parent / "gdalcubes_cpp_spark"
 
 
-# ---------------------------------------------------------------- union-find
+def _module_path(parts: list) -> pathlib.Path | None:
+    """The file of the in-package module ``parts`` (relative to PKG's
+    parent), or None when it does not exist."""
+    base = PKG.parent.joinpath(*parts)
+    for p in (base.with_suffix(".py"), base / "__init__.py"):
+        if p.is_file():
+            return p
+    return None
 
 
-def _uf_components(edges, nodes=None):
-    """Independent oracle: plain union-find, component = min member."""
-    parent = {}
+def _bound_names(path: pathlib.Path) -> set:
+    """Names a module binds at its top level (defs, classes, assignments,
+    imports) plus the keys of a lazy ``_EXPORTS`` table."""
+    tree = ast.parse(path.read_text(encoding="utf-8"))
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                names |= {n.id for n in ast.walk(t) if isinstance(n, ast.Name)}
+            if (isinstance(node, ast.Assign) and isinstance(node.value, ast.Dict)
+                    and any(getattr(t, "id", None) == "_EXPORTS" for t in targets)):
+                names |= {k.value for k in node.value.keys}
+        elif isinstance(node, (ast.Import, ast.ImportFrom)):
+            names |= {(a.asname or a.name).split(".")[0] for a in node.names}
+    return names
 
-    def find(x):
-        parent.setdefault(x, x)
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
 
-    for a, b in edges:
-        ra, rb = find(a), find(b)
-        if ra != rb:
-            parent[ra] = rb
-    groups = {}
-    for n in set(parent) | set(nodes or ()):
-        groups.setdefault(find(n) if n in parent else n, []).append(n)
-    out = {}
-    for members in groups.values():
-        root = min(members)
-        for m in members:
-            out[m] = root
+def _check_from(parts: list, names, where: str) -> list:
+    """Problems with ``from <parts> import <names>``."""
+    target = _module_path(parts)
+    if target is None:
+        return [f"{where}: no module {'.'.join(parts)}"]
+    out = []
+    bound = None
+    for name in names:
+        if name == "*" or _module_path(parts + [name]) is not None:
+            continue
+        if bound is None:
+            bound = _bound_names(target)
+        if name not in bound:
+            out.append(f"{where}: {'.'.join(parts)} has no {name}")
     return out
 
 
-@pytest.mark.parametrize("seed", [7, 23, 4242])
-def test_connected_components_random_graph(spark, seed):
-    rng = random.Random(seed)
-    nodes = list(range(200))
-    edges = [
-        (rng.choice(nodes), rng.choice(nodes)) for _ in range(150)
-    ]  # sparse → many components, some self-loops/dups
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(df).collect()
-    }
-    want = _uf_components([(a, b) for a, b in edges if a != b])
-    assert got == want
-
-
-def test_connected_components_chain(spark):
-    """A 400-node path is the worst case for naive min propagation (O(n)
-    rounds); star contraction must finish inside the default max_iter."""
-    edges = [(i, i + 1) for i in range(400)]
-    df = spark.createDataFrame(edges, "doc_a long, doc_b long")
-    rows = connected_components(df).collect()
-    assert len(rows) == 401
-    assert {r["component"] for r in rows} == {0}
-
-
-def test_connected_components_empty_and_selfloops(spark):
-    df = spark.createDataFrame([(5, 5), (7, 7)], "doc_a long, doc_b long")
-    assert connected_components(df).count() == 0  # self-loops are not edges
-
-
-def test_near_dup_clusters_transitive(spark):
-    """A≈B and B≈C but A and C farther apart: transitive closure must put
-    all three in ONE cluster; unrelated docs stay singletons with
-    themselves as canonical."""
-    base = "the quick brown fox jumps over the lazy dog " * 6
-    docs = spark.createDataFrame(
-        [
-            (0, base),
-            (1, base + "alpha beta"),
-            (2, base + "alpha beta gamma delta"),
-            (3, "completely different text about spark dataframes " * 6),
-        ],
-        "doc_id long, text string",
-    )
-    out = near_dup_clusters(docs, threshold=0.5).collect()
-    by_id = {r["doc_id"]: r for r in out}
-    assert {by_id[i]["cluster"] for i in (0, 1, 2)} == {0}
-    assert by_id[3]["cluster"] == 3
-    canon = {r["doc_id"] for r in out if r["is_canonical"]}
-    assert canon == {0, 3}
-
-
-# ----------------------------------------------------------------- sampling
-
-
-def _keys_df(spark, n=2000):
-    return spark.range(n).select(F.col("id").alias("doc_id"))
-
-
-def test_deterministic_sample_rate_and_reproducibility(spark):
-    df = _keys_df(spark)
-    a = {r["doc_id"] for r in deterministic_sample(df, 0.3, seed="s").collect()}
-    b = {r["doc_id"] for r in deterministic_sample(df, 0.3, seed="s").collect()}
-    assert a == b  # no RNG state anywhere
-    assert 0.25 < len(a) / 2000 < 0.35
-
-
-def test_deterministic_sample_nested():
-    """Same seed, larger fraction ⇒ superset (thresholds are monotone on the
-    same hash) — the property incremental pipeline re-runs rely on."""
-    assert _threshold_hex(0.2) < _threshold_hex(0.5)
-    assert _threshold_hex(0.0) == "0" * 15
-    assert _threshold_hex(1.0) == "g"  # above every hex string → keep all
-
-
-def test_deterministic_sample_nested_spark(spark):
-    df = _keys_df(spark, 500)
-    small = {r["doc_id"] for r in deterministic_sample(df, 0.2, seed="s").collect()}
-    big = {r["doc_id"] for r in deterministic_sample(df, 0.6, seed="s").collect()}
-    assert small <= big
-
-
-def test_stratified_sample_rates(spark):
-    df = spark.range(3000).select(
-        F.col("id").alias("doc_id"),
-        F.when(F.col("id") % 3 == 0, "en")
-        .when(F.col("id") % 3 == 1, "de")
-        .otherwise("fr")
-        .alias("lang"),
-    )
-    out = (
-        stratified_sample(df, "lang", {"en": 0.9, "de": 0.1}, seed="t")
-        .groupBy("lang")
-        .count()
-        .collect()
-    )
-    counts = {r["lang"]: r["count"] for r in out}
-    assert 0.8 < counts["en"] / 1000 < 1.0
-    assert 0.03 < counts["de"] / 1000 < 0.2
-    assert "fr" not in counts  # default fraction 0.0 drops the stratum
-
-
-# ------------------------------------------------------------------ packing
-
-
-def test_pack_shards_budget_and_totality(spark):
-    rng = random.Random(3)
-    rows = [(i, rng.randint(50, 900)) for i in range(800)]
-    df = spark.createDataFrame(rows, "doc_id long, tokens long")
-    out = pack_shards(df, "tokens", budget=2000, n_groups=16).toPandas()
-    assert len(out) == 800  # every row assigned exactly once
-    assert out["doc_id"].is_unique
-    per_shard = out.groupby("shard_id")["tokens"].agg(["sum", "max"])
-    # exclusive-cumsum rule: a shard overshoots its budget by < its last doc
-    assert (per_shard["sum"] < 2000 + per_shard["max"]).all()
-    # shard ids are (grp, local) packed into one int64
-    assert (out["shard_id"] == out["grp"] * 2**32 + out["shard"]).all()
-
-
-def test_pack_shards_matches_python_greedy(spark):
-    """Recompute the grouped greedy packing in pandas and compare 1:1."""
-    rows = [(i, 100 + (i * 37) % 400) for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, tokens long")
-    out = pack_shards(df, "tokens", budget=1000, n_groups=8, seed="p").toPandas()
-    import hashlib
-
-    def hk(i):
-        return hashlib.md5(f"p{i}".encode()).hexdigest()[:15]
-
-    pdf = pd.DataFrame(rows, columns=["doc_id", "tokens"])
-    pdf["hk"] = pdf["doc_id"].map(hk)
-    pdf["grp"] = pdf["hk"].map(lambda h: int(h[:4], 16) % 8)
-    expect = {}
-    for g, sub in pdf.sort_values(["hk", "doc_id"]).groupby("grp"):
-        cum = 0
-        for _, r in sub.iterrows():
-            expect[r["doc_id"]] = (g, int(cum // 1000))
-            cum += r["tokens"]
-    got = {r.doc_id: (r.grp, r.shard) for r in out.itertuples()}
-    assert got == expect
-
-
-def test_training_mix_end_to_end(spark):
-    docs = spark.createDataFrame(
-        [(i, ["en", "de"][i % 2], 200 + i % 50) for i in range(400)],
-        "doc_id long, lang string, n_chars long",
-    )
-    out = training_mix(
-        docs, "lang", {"en": 1.0, "de": 0.5}, "n_chars", budget=1500, n_groups=4
-    ).toPandas()
-    assert set(out["lang"]) == {"en", "de"}
-    assert (out[out["lang"] == "en"].shape[0]) == 200  # fraction 1.0 keeps all
-    per_shard = out.groupby("shard_id")["n_chars"].agg(["sum", "max"])
-    assert (per_shard["sum"] < 1500 + per_shard["max"]).all()
+def _problems(path: pathlib.Path) -> list:
+    rel = path.relative_to(PKG.parent)
+    pkg_parts = list(rel.parent.parts)
+    out = []
+    for node in ast.walk(ast.parse(path.read_text(encoding="utf-8"))):
+        where = f"{rel}:{getattr(node, 'lineno', 0)}"
+        if isinstance(node, ast.ImportFrom):
+            if node.level:
+                base = pkg_parts[:len(pkg_parts) - (node.level - 1)]
+                parts = base + (node.module.split(".") if node.module else [])
+            elif (node.module or "").split(".")[0] == PKG.name:
+                parts = node.module.split(".")
+            else:
+                continue
+            out += _check_from(parts, [a.name for a in node.names], where)
+        elif isinstance(node, ast.Import):
+            for a in node.names:
+                parts = a.name.split(".")
+                if parts[0] == PKG.name and _module_path(parts) is None:
+                    out.append(f"{where}: no module {a.name}")
+    return out
 
 
 def test_functions_lazy_export_surface():
@@ -214,109 +102,17 @@ def test_functions_lazy_export_surface():
         fns.not_a_real_operator
 
 
-def test_threshold_hex_monotone_property():
-    """Pure property: thresholds are monotone in the fraction (hypothesis),
-    so same-seed samples nest across fractions."""
-    from hypothesis import given, strategies as st
-
-    @given(st.floats(0.0, 1.0), st.floats(0.0, 1.0))
-    def check(f1, f2):
-        lo, hi = sorted((f1, f2))
-        assert _threshold_hex(lo) <= _threshold_hex(hi)
-
-    check()
-
-
-def test_dedup_clusters_edge_join_plan(spark):
-    """The driver query's banded edge join must stay an equi-join on
-    (bucket, lang) — never a cartesian/BNLJ blowup."""
-    from gdalcubes_cpp_spark.benchqueries import DEFS
-
-    out = DEFS["doc_dedup_clusters"][0](spark, "/root/testdata/sf0.001")
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "CartesianProduct" not in plan
-    assert "BroadcastNestedLoopJoin" not in plan
-
-
-def test_corpus_pipeline_end_to_end(spark):
-    """Dedup -> canonical -> quality -> mix -> pack in one call: near-dups
-    collapse to one kept doc, every kept doc gets a shard, budgets hold."""
-    base = "the quick brown fox jumps over the lazy dog " * 8
-    rows = [(i, base + f"unique filler {i} " * (i % 4), "en") for i in range(20)]
-    rows += [(100, "voici un document francais tout a fait distinct " * 8, "fr")]
-    docs = spark.createDataFrame(rows, "doc_id long, text string, lang string")
-    from gdalcubes_cpp_spark.functions.mix import corpus_pipeline
-
-    out = corpus_pipeline(
-        docs, fractions={"en": 1.0, "fr": 1.0}, dedup_threshold=0.5,
-        budget=2000.0, n_groups=4,
-    ).toPandas()
-    assert 1 <= len(out) < 21  # near-dups collapsed, fr doc kept
-    assert 100 in set(out["doc_id"])
-    assert out["doc_id"].is_unique
-    assert {"cluster", "quality", "bpe_tokens", "shard_id"} <= set(out.columns)
-    per_shard = out.groupby("shard_id")["bpe_tokens"].agg(["sum", "max"])
-    assert (per_shard["sum"] < 2000 + per_shard["max"]).all()
-
-
-def test_quantize_int8_roundtrip(spark):
-    """int8 quantization: bounded per-component error, cosine preserved to
-    1e-3, zero vectors survive, all JVM-side (no UDF in the plan)."""
-    import math
-    import random
-
-    rng = random.Random(5)
-    rows = [
-        (i, [rng.uniform(-2, 2) for _ in range(32)]) for i in range(50)
-    ] + [(99, [0.0] * 32)]
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    from gdalcubes_cpp_spark.functions.ann import dequantize_int8, quantize_int8
-
-    out = dequantize_int8(quantize_int8(emb)).collect()
-    for r in out:
-        v, d = r["embedding"], r["embedding_deq"]
-        m = max(abs(x) for x in v)
-        if m == 0:
-            assert all(x == 0.0 for x in d)
-            continue
-        assert max(abs(a - b) for a, b in zip(v, d)) <= m / 254 + 1e-12
-        dot = sum(a * b for a, b in zip(v, d))
-        na = math.sqrt(sum(a * a for a in v))
-        nb = math.sqrt(sum(b * b for b in d))
-        assert dot / (na * nb) > 0.999
-    plan = dequantize_int8(quantize_int8(emb))._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_decontaminate(spark):
-    """Benchmark decontamination semantics on a hand corpus: exact copy ->
-    containment 1.0; partial overlap -> the exact shared-gram fraction;
-    disjoint doc -> clean; short doc falls back to the whole-text gram."""
-    from gdalcubes_cpp_spark.functions.dedup import decontaminate
-
-    bench = spark.createDataFrame(
-        [(100, "the quick brown fox jumps over the lazy dog")],
-        "doc_id long, text string",
-    )
-    docs = spark.createDataFrame(
-        [
-            (1, "the quick brown fox jumps over the lazy dog"),  # exact copy
-            (2, "a sentence then the quick brown fox appears here today"),
-            (3, "completely different words entirely unrelated content"),
-            (4, "tiny doc"),  # < n words -> single whole-text gram
-        ],
-        "doc_id long, text string",
-    )
-    out = {r["doc_id"]: r for r in decontaminate(docs, bench, n=3).collect()}
-    assert out[1]["contaminated"] and out[1]["containment"] == 1.0
-    assert out[1]["n_ngrams"] == 7  # 9 words -> 7 distinct trigrams
-    # doc 2: its trigrams overlapping the benchmark = those inside
-    # "the quick brown fox": 'the quick brown', 'quick brown fox'
-    assert out[2]["contaminated"] and out[2]["n_matched"] == 2
-    assert out[2]["containment"] == 2 / out[2]["n_ngrams"]
-    assert not out[3]["contaminated"] and out[3]["n_matched"] == 0
-    assert out[4]["n_ngrams"] == 1 and not out[4]["contaminated"]
-    # canonical 13-gram rule: nothing shorter than 13 words can collide
-    out13 = {r["doc_id"]: r for r in decontaminate(docs, bench, n=13).collect()}
-    assert out13[1]["contaminated"]  # whole-text gram == whole-text gram
-    assert not out13[2]["contaminated"]
+def test_in_package_imports_resolve():
+    """Every in-package import, eager or function-local, and every
+    functions._EXPORTS target names an existing module and a name it binds."""
+    problems = []
+    for path in sorted(PKG.rglob("*.py")):
+        problems += _problems(path)
+    exports = PKG / "functions" / "__init__.py"
+    for node in ast.parse(exports.read_text(encoding="utf-8")).body:
+        if (isinstance(node, ast.Assign)
+                and getattr(node.targets[0], "id", None) == "_EXPORTS"):
+            for k, v in zip(node.value.keys, node.value.values):
+                parts = ["gdalcubes_cpp_spark", "functions", v.value.lstrip(".")]
+                problems += _check_from(parts, [k.value], f"_EXPORTS[{k.value!r}]")
+    assert not problems, "\n".join(problems)

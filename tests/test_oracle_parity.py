@@ -13,8 +13,7 @@ from gdalcubes_cpp_spark.benchqueries import REGISTRY
 
 SF = "/root/testdata/sf0.001"
 TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
+    "region", "nation", "customer", "supplier", "part", "orders", "lineitem",
 ]
 
 

@@ -39,18 +39,27 @@ def test_spread_noop_when_already_wide(spark):
 
 
 def test_dedup_kernels_escape_single_partition(spark, tmp_path):
-    """The operator entry points widen a single-row-group documents scan."""
-    from gdalcubes_cpp_spark.functions.dedup import minhash_signature
+    """The cube scan widens a one-row-group image parquet: its decode/warp
+    runs at session parallelism, not in the one task that holds the rows.
+    (The name is historical: this once went through the MinHash kernel.)"""
+    from gdalcubes_cpp_spark import synth
+    from gdalcubes_cpp_spark.operators.build import build_cube, scan_cells
+    from gdalcubes_cpp_spark.view import CubeView
 
-    p = str(tmp_path / "docs.parquet")
-    pd.DataFrame(
-        {"doc_id": range(200), "text": [f"alpha beta gamma delta {i}" for i in range(200)]}
-    ).to_parquet(p)
-    docs = spark.read.parquet(p)
-    sig = minhash_signature(docs, k=4)
-    # the kernel's input stage runs at session parallelism, not 1 task
-    assert sig.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
-    assert sig.count() == 200
+    p = str(tmp_path / "images.parquet")
+    pdf = synth.images_pdf(200)
+    pdf.to_parquet(p, row_group_size=len(pdf), coerce_timestamps="us")
+    images = spark.read.parquet(p)
+    assert images.rdd.getNumPartitions() < spark.sparkContext.defaultParallelism
+    v = CubeView.create(left=-12, right=-8, bottom=18, top=22, nx=64, ny=64,
+                        t0="2020-01-01", t1="2020-12-31", dt="P1M",
+                        aggregation="mean", resampling="near",
+                        chunk_size=(4, 32, 32))
+    cells = scan_cells(images, v)
+    assert cells.rdd.getNumPartitions() >= spark.sparkContext.defaultParallelism
+    got = build_cube(images, v).collect_dense()
+    assert_dense_equal(got, dense_cube(pdf, v))
+    assert np.isfinite(got).any()
 
 
 def test_spread_streaming_passthrough(spark, tmp_path):

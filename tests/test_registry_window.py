@@ -9,9 +9,7 @@ REQUIRED_IN_WINDOW = [
     # r2 VERDICT #1 named entries
     "apply_time_udf_cumsum", "reduce_time_udf_range", "apply_pixel_udf_poly",
     "reduce_space_udf_spread", "format_ingest", "netcdf_roundtrip",
-    "ann_knn_join_ivf", "ann_approx_suite", "images_multimodal",
-    # r3 additions: dedup clustering + training-mix assembly
-    "doc_dedup_clusters", "doc_training_mix",
+    "image_stats_phash",
     # folded suites covering the rest of SURVEY §2
     "stjoin_suite", "cube_mean_median", "cube_first_last", "cube_min_max",
     "cube_counts", "cube_mask_value_range", "cube_srs_suite",
@@ -22,12 +20,9 @@ REQUIRED_IN_WINDOW = [
     "filter_geom_rect", "packed_roundtrip", "cube_write_reread",
     # r4: the test_sampledata MODIS HDF4 end-to-end scenario
     "hdf4_modis_pixels",
-    "doc_stats", "doc_exact_dups", "doc_signature_suite", "doc_lsh_jaccard",
-    "doc_decontaminate", "ann_cosine_suite", "ann_knn_join",
     # r4: real S2 cell index + exact bucketed kNN (oracled suite)
     "s2_suite",
-    "events_tumbling_suite", "events_sessionize", "tpch_suite",
-    "doc_near_dups_suite", "cube_decode_suite",
+    "cube_decode_suite",
 ]
 
 
@@ -62,24 +57,17 @@ def test_every_def_reachable():
         "cube_mask_range", "aggregate_time", "aggregate_space",
         "fill_time_linear", "fill_time_locf", "query_points",
         "query_timeseries", "window_time_mean", "window_time_kernel",
-        "tpch_pricing", "tpch_market_revenue", "doc_near_dups_pipeline",
-        "doc_simhash_near_dups", "cube_average_decode", "cube_real_decode",
+        "cube_average_decode", "cube_real_decode",
         "simple_cube_decode", "cube_mask_band_decode",
-        "ann_ivf_topk", "ann_rp_lsh_pairs", "ann_topk", "ann_dup_pairs",
-        "stjoin_rows", "stjoin_s2", "events_tumbling", "events_tumbling_ice",
-        "events_asof",  # r5: folded into events_tumbling_suite
+        "stjoin_rows", "stjoin_s2", "stjoin_hex",
         "cube_utm_mean", "cube_polar_mean", "cube_sinu_mean", "cube_lcc_mean",
-        "cube_laea_mean", "cube_aea_mean", "zonal_statistics", "zonal_topk",
-            "cube_osgb_mean", "cube_swiss_mean", "cube_jp2_decode", "cube_hom_mean",
-            "doc_minhash", "doc_simhash",
-            "cube_cea_mean", "cube_aeqd_mean", "cube_eqc_mean",
-            "s2_cells", "s2_knn", "hex_cells_img", "cube_jpegbase_decode",
-            "stjoin_hex",
+        "cube_laea_mean", "cube_aea_mean", "cube_osgb_mean", "cube_swiss_mean",
+        "cube_hom_mean", "cube_cea_mean", "cube_aeqd_mean", "cube_eqc_mean",
+        "zonal_statistics", "zonal_topk", "cube_jp2_decode",
+        "cube_jpegbase_decode", "s2_cells", "s2_knn", "hex_cells_img",
         "reduce_time_exact", "reduce_time_stats", "reduce_time_which",
-        # r5-r6: extract_geom is a 3-source union (WKT + GeoJSON + SHP),
-        # images_multimodal a 3-modality union (image + audio + video)
+        # r5: extract_geom is a 3-source union (WKT + GeoJSON + SHP)
         "extract_geom_wkt", "extract_geom_geojson", "extract_geom_shp",
-        "images_mm_image", "images_mm_audio", "images_mm_video",
     }
     window = set(REGISTRY)
     orphans = [n for n in DEFS if n not in window and n not in folded_members]

@@ -41,8 +41,8 @@ def _submit(extra_args, timeout=420):
 
 
 def test_submit_registry_query(tmp_path):
-    out = str(tmp_path / "doc_stats.parquet")
-    res = _submit(["--query", "doc_stats", "--sf-dir", "/root/testdata/sf0.001",
+    out = str(tmp_path / "cube_mean_median.parquet")
+    res = _submit(["--query", "cube_mean_median", "--sf-dir", "/root/testdata/sf0.001",
                    "--out", out])
     assert res["rows"] > 0
     import pyarrow.parquet as pq

@@ -48,6 +48,33 @@ def test_stjoin_exact_both_methods(spark, images, pdf):
         assert got == want, f"method={method}"
 
 
+def test_stjoin_leap_day_yearly_axis(spark):
+    """A P1Y axis from Feb 29 steps in 12-month units whose day clamps to
+    Feb 28 in common years (2020-02-29, 2021-02-28, ...), as
+    view.add_duration does; images on and around those edges land in the
+    chunks the numpy oracle names."""
+    import pandas as pd
+
+    pdf = synth.images_pdf(N)
+    edges = ["2020-02-28", "2020-02-29", "2021-02-28", "2021-03-01",
+             "2022-02-28T12:00", "2023-02-28", "2023-03-01", "2021-07-15"]
+    pdf["ts"] = pd.to_datetime([edges[i % len(edges)] for i in range(len(pdf))],
+                               format="ISO8601")
+    images = spark.createDataFrame(pdf)
+    v = make_view(left=-55, right=55, bottom=-45, top=45, nx=440, ny=360,
+                  t0="2020-02-29", t1=None, nt=3, dt="P1Y",
+                  chunk_size=(1, 120, 110))
+    g = ChunkGrid(v)
+    want = oracle_np.st_assignment(pdf, g)
+    assert {cid // (g.ncx * g.ncy) for _iid, cid in want} == {0, 1, 2}
+    for method in ("broadcast", "cells"):
+        got = sorted(
+            (r["image_id"], r["chunk_id"])
+            for r in stjoin.assignment(images, g, method=method).collect()
+        )
+        assert got == want, f"method={method}"
+
+
 AGGS = ["mean", "min", "max", "first", "last", "median", "count_values",
         "count_images", "none"]
 

@@ -1,165 +1,15 @@
-"""Training-data pipeline operators over the testdata documents/embeddings
-tables + synthetic multimodal payloads."""
+"""Image-collection column operators (functions/image.py): decode stats
+and perceptual hashes, overviews and their pushdown into a cube build, and
+format translation.
+
+The module name is historical: it once also held the text, dedup and
+embedding operators, which left the package. The image tests keep it so
+that their ids stay stable."""
 
 import numpy as np
-import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
-from gdalcubes_cpp_spark.functions import ann, dedup, image, text
-
-SF = "/root/testdata/sf0.001"
-
-
-@pytest.fixture(scope="module")
-def docs(spark):
-    return spark.read.parquet(f"{SF}/documents.parquet").cache()
-
-
-@pytest.fixture(scope="module")
-def emb(spark):
-    return spark.read.parquet(f"{SF}/embeddings.parquet").cache()
-
-
-def test_analyze_columns(docs):
-    out = text.analyze(docs).limit(20).toPandas()
-    for _, r in out.iterrows():
-        assert r["ws_tokens"] == len(r["text"].split())
-        assert 0 <= r["punct_ratio"] <= 1
-        assert 0 <= r["quality"] <= 1
-        assert len(r["fingerprint"]) == 32
-
-
-def test_lang_id_mechanics(spark):
-    """The testdata 'lang' column is a label uncorrelated with the (shared
-    synthetic vocabulary) text, so we verify the heuristic on real marker
-    sentences instead."""
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3, 4, 5],
-        "text": [
-            "the cat and the dog sat in the garden of the house",
-            "der hund und die katze ist nicht in das haus",
-            "le chat et la maison est une belle chose les jours",
-            "el perro y la casa es una cosa que los gatos aman",
-            "xyzzy plugh quux",
-        ],
-    })
-    out = text.analyze(spark.createDataFrame(pdf)).orderBy("doc_id").select("lang_pred").collect()
-    assert [r["lang_pred"] for r in out] == ["en", "de", "fr", "es", "und"]
-
-
-def test_exact_dups(spark):
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3, 4], "text": ["aa bb", "cc", "aa bb", "aa bb"]})
-    out = dedup.exact_dups(spark.createDataFrame(pdf)).collect()
-    assert len(out) == 1
-    assert out[0]["n_dups"] == 3 and out[0]["keep_id"] == 1
-
-
-def test_shingles(spark):
-    df = spark.createDataFrame(pd.DataFrame({"t": ["The quick brown fox jumps"]}))
-    out = df.select(dedup.shingles(F.col("t"), 3).alias("s")).collect()[0]["s"]
-    assert out == ["the quick brown", "quick brown fox", "brown fox jumps"]
-
-
-def test_minhash_lsh_finds_near_dups(spark):
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    near = base.replace("kappa", "lambda")
-    far = "one two three four five six seven eight nine ten"
-    pdf = pd.DataFrame({"doc_id": [1, 2, 3], "text": [base, near, far]})
-    df = spark.createDataFrame(pdf)
-    pairs = dedup.near_dups_minhash(df, k=8, bands=8, threshold=0.5).collect()
-    got = {(r["doc_a"], r["doc_b"]) for r in pairs}
-    assert (1, 2) in got
-    assert all(3 not in p for p in got)
-
-
-def test_jaccard_exact(spark):
-    pdf = pd.DataFrame({"doc_id": [1, 2], "text": ["a b c d", "a b c e"]})
-    pairs = spark.createDataFrame(pd.DataFrame({"doc_a": [1], "doc_b": [2]}))
-    out = dedup.ngram_jaccard(spark.createDataFrame(pdf), pairs, shingle_n=2).collect()[0]
-    # 2-gram sets: {a b, b c, c d} vs {a b, b c, c e} -> J = 2/4
-    assert out["jaccard"] == pytest.approx(0.5)
-
-
-def test_simhash_identical_and_near(spark):
-    pdf = pd.DataFrame({
-        "doc_id": [1, 2, 3],
-        "text": ["w1 w2 w3 w4 w5 w6 w7 w8", "w1 w2 w3 w4 w5 w6 w7 w8", "z1 z2 z3 z4"],
-    })
-    df = spark.createDataFrame(pdf)
-    sig = {r["doc_id"]: r["simhash"] for r in dedup.simhash(df).collect()}
-    assert sig[1] == sig[2] != sig[3]
-    pairs = dedup.simhash_near_dups(df, max_hamming=0).collect()
-    assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(1, 2)}
-
-
-def test_cosine_topk_vs_numpy(emb):
-    rows = emb.orderBy("vec_id").limit(200).collect()
-    M = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    ids = np.array([r["vec_id"] for r in rows])
-    q = M[0]
-    sims = M @ q / (np.linalg.norm(M, axis=1) * np.linalg.norm(q))
-    order = np.lexsort((ids, -sims))[:5]
-    want = ids[order].tolist()
-    got = [r["vec_id"] for r in ann.cosine_topk(emb.limit(200), list(q), k=5).collect()]
-    assert got == want
-
-
-def test_ivf_recall(emb):
-    rows = emb.collect()
-    M = np.array([r["embedding"] for r in rows], dtype=np.float64)
-    ids = np.array([r["vec_id"] for r in rows])
-    q = list(M[7])
-    cents = ann.deterministic_centroids(emb, nlist=8)
-    exact = [r["vec_id"] for r in ann.cosine_topk(emb, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ann.ivf_topk(emb, q, cents, k=10, nprobe=4).collect()]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.5, recall
-
-
-def test_ivf_kmeans_trained_recall(spark):
-    """Trained (spherical k-means) centroids on CLUSTERED data: nprobe=1
-    recall ~1.0 because the quantizer finds the true clusters, where
-    first-nlist-ids centroids (all drawn from whichever clusters the lowest
-    ids landed in) are luck (r1 VERDICT #6). Also checks bucket balance."""
-    rng = np.random.RandomState(3)
-    n_clusters, per = 4, 100
-    protos = rng.randn(n_clusters, 16) * 4
-    vecs, cids = [], []
-    for c in range(n_clusters):
-        vecs.append(protos[c] + rng.randn(per, 16) * 0.1)
-        cids += [c] * per
-    M = np.vstack(vecs)
-    pdf = pd.DataFrame({
-        "vec_id": range(len(M)),
-        "embedding": [list(map(float, v)) for v in M],
-    })
-    emb = spark.createDataFrame(pdf).cache()
-    cents = ann.kmeans_centroids(emb, nlist=n_clusters, seed=11)
-    # bucket balance: every trained bucket holds exactly one cluster
-    sizes = sorted(
-        r["count"] for r in ann.ivf_assign(emb, cents).groupBy("centroid").count().collect()
-    )
-    assert sizes == [per] * n_clusters
-    # nprobe=1 recall ~1.0 for an in-cluster query
-    q = list(M[7])
-    exact = [r["vec_id"] for r in ann.cosine_topk(emb, q, k=10).collect()]
-    approx = [r["vec_id"] for r in ann.ivf_topk(emb, q, cents, k=10, nprobe=1).collect()]
-    recall = len(set(exact) & set(approx)) / 10
-    assert recall >= 0.9, recall
-
-
-def test_knn_join(emb):
-    out = ann.knn_join_bruteforce(emb.limit(5), emb.limit(100), k=3).toPandas()
-    assert set(out.groupby("q_id").size()) == {3}
-    assert (out["q_id"] != out["b_id"]).all()
-
-
-def test_cosine_near_dup_pairs(emb):
-    out = ann.cosine_near_dup_pairs(emb.limit(100), threshold=0.9, nlist=4).toPandas()
-    assert (out["cos"] >= 0.9).all()
-    assert (out["vec_a"] < out["vec_b"]).all()
-
+from gdalcubes_cpp_spark.functions import image
 
 def test_image_stats_and_thumbnails(spark):
     from gdalcubes_cpp_spark import codecs, synth
@@ -174,44 +24,6 @@ def test_image_stats_and_thumbnails(spark):
     th = image.thumbnails(imgs, size=8).toPandas()
     arr = codecs.decode_png(bytes(th["thumb"].iloc[0]))
     assert arr.shape == (8, 8, 2)
-
-
-def test_audio_video_real_codecs(spark):
-    """Round-5: the audio/video arms are REAL codecs (WAV/PCM +
-    MJPEG-AVI), value-gated — exact RMS for lossless PCM, per-frame
-    PSNR >= 40 dB for the Motion-JPEG roundtrip."""
-    import numpy as np
-
-    pdf = pd.DataFrame({"id": [1, 2], "payload": [image.fake_audio(1), image.fake_audio(2)]})
-    out = image.audio_stats(spark.createDataFrame(pdf)).toPandas()
-    assert len(out) == 2 and (out["rate"] == 16000).all()
-    # PCM is lossless: decoded RMS equals the source signal's RMS exactly
-    for seed in (1, 2):
-        t = np.arange(1024)
-        sig = (np.sin(t * (1 + seed % 17) * 0.01) * 10000).astype(np.int16)
-        want = float(np.sqrt(np.mean(sig.astype(np.float64) ** 2)))
-        got = float(out.set_index("id").loc[seed, "rms"])
-        assert got == want
-    # video: sampled frames come back within JPEG tolerance of the source
-    frames = image.sample_frames(image.fake_video(5, n_frames=8), every=2)
-    assert frames.shape[:3] == (4, 16, 16)
-    orig = np.stack([image._synth_frame(5, f, 16, 16) for f in range(8)])[::2]
-    dec = frames if frames.ndim == 3 else frames[..., 0]
-    for i in range(4):
-        mse = np.mean((orig[i].astype(float) - dec[i].astype(float)) ** 2)
-        assert 10 * np.log10(255 ** 2 / max(mse, 1e-12)) >= 40.0
-    vs = image.video_stats(
-        spark.createDataFrame(pd.DataFrame(
-            {"id": [7], "payload": [image.fake_video(7, n_frames=6, fps=12)]}))
-    ).toPandas()
-    assert (int(vs["n_frames"][0]), int(vs["h"][0]), int(vs["w"][0])) == (6, 16, 16)
-    want_lum = float(np.stack(
-        [image._synth_frame(7, f, 16, 16) for f in range(6)]).astype(float).mean())
-    assert abs(float(vs["mean_lum"][0]) - want_lum) < 2.0  # JPEG tolerance
-    with pytest.raises(ValueError):
-        image.decode_audio(b"not audio bytes")
-    with pytest.raises(ValueError):
-        image.sample_frames(b"not video bytes")
 
 
 def test_create_overviews(spark):
@@ -236,8 +48,6 @@ def test_overview_pushdown_bit_identical(spark):
     built from level-4 overview bytes is BIT-IDENTICAL to the full-res
     build under near resampling at aligned factors, while decoding ~1/16th
     of the bytes."""
-    import numpy as np
-
     from gdalcubes_cpp_spark import synth
     from gdalcubes_cpp_spark.operators.build import build_cube
     from gdalcubes_cpp_spark.view import CubeView
@@ -287,110 +97,6 @@ def test_overview_pushdown_bit_identical(spark):
     # level selection: every image got SOME overview (all sizes divisible)
     n_replaced = pushed_imgs.filter(F.col("fmt") == "png").count()
     assert n_replaced == len(pdf)
-
-
-def test_lsh_mega_bucket_capped(spark):
-    """Adversarial skew: thousands of near-identical docs share every LSH
-    band bucket. With max_bucket=c the candidate count is O(n*c) (every
-    member pairs with <= c representatives), NOT O(n^2); recall for the
-    identical group survives (every doc still pairs with a representative).
-    (r1 VERDICT 'What's wrong' #3.)"""
-    import pandas as pd
-
-    from gdalcubes_cpp_spark.functions.dedup import lsh_candidates, simhash_near_dups
-
-    n = 2000
-    pdf = pd.DataFrame({
-        "doc_id": range(n),
-        "text": ["the same boilerplate text appears everywhere on the web"] * n,
-    })
-    docs = spark.createDataFrame(pdf)
-    cap = 8
-    cand = lsh_candidates(docs, k=4, bands=2, max_bucket=cap)
-    n_pairs = cand.count()
-    # every doc participates (full recall vs representatives)...
-    touched = cand.select(F.explode(F.array("doc_a", "doc_b")).alias("d")).distinct().count()
-    assert touched == n
-    # ...but the pair count is linear in n, not quadratic
-    assert n_pairs <= n * cap
-    assert n_pairs < n * (n - 1) // 20  # nowhere near all-pairs
-
-    # simhash path: identical docs -> identical signature -> one mega-bucket
-    sh = simhash_near_dups(docs, max_hamming=3, max_bucket=cap)
-    n_sh = sh.count()
-    assert 0 < n_sh <= n * cap
-
-    # uncapped on a SMALL distinct corpus == capped (cap doesn't bite)
-    small = spark.createDataFrame(pd.DataFrame({
-        "doc_id": range(30),
-        "text": [f"unique document number {i} with words {i*7} and {i*13}" for i in range(30)],
-    }))
-    a = sorted(map(tuple, lsh_candidates(small, k=4, bands=4, max_bucket=None).collect()))
-    b = sorted(map(tuple, lsh_candidates(small, k=4, bands=4, max_bucket=4096).collect()))
-    assert a == b
-
-
-def test_knn_join_ivf_big_big(spark):
-    """Big-big approximate kNN join: no broadcast of either side, equi-join
-    on trained IVF buckets, per-query top-k. On clustered data with
-    nprobe=2 of 4, recall vs the exact join stays high; with nprobe=nlist
-    it is EXACT."""
-    rng = np.random.RandomState(5)
-    protos = rng.randn(4, 12) * 4
-    M = np.vstack([protos[c] + rng.randn(120, 12) * 0.15 for c in range(4)])
-    pdf = pd.DataFrame({"vec_id": range(len(M)),
-                        "embedding": [list(map(float, v)) for v in M]})
-    base = spark.createDataFrame(pdf).cache()
-    queries = spark.createDataFrame(pdf.iloc[::10].reset_index(drop=True)).cache()
-
-    exact = ann.knn_join_bruteforce(queries, base, k=5).toPandas()
-    cents = ann.kmeans_centroids(base, nlist=4, seed=3)
-    approx = ann.knn_join_ivf(queries, base, k=5, centroids=cents, nprobe=2).toPandas()
-    # per-query recall
-    recs = []
-    for qid, grp in exact.groupby("q_id"):
-        e = set(grp["b_id"])
-        a = set(approx[approx["q_id"] == qid]["b_id"])
-        recs.append(len(e & a) / len(e))
-    assert np.mean(recs) >= 0.9, np.mean(recs)
-
-    # nprobe = nlist -> exact equality
-    full = ann.knn_join_ivf(queries, base, k=5, centroids=cents, nprobe=4).toPandas()
-    a = exact.sort_values(["q_id", "rank"]).reset_index(drop=True)
-    b = full.sort_values(["q_id", "rank"]).reset_index(drop=True)
-    assert (a[["q_id", "b_id", "rank"]].values == b[["q_id", "b_id", "rank"]].values).all()
-
-    # plan: no broadcast-nested-loop, no cartesian — a hash equi-join
-    plan = ann.knn_join_ivf(queries, base, k=5, centroids=cents).\
-        _jdf.queryExecution().executedPlan().toString()
-    assert "Cartesian" not in plan and "BroadcastNestedLoop" not in plan
-
-
-def test_rp_lsh_pairs(spark):
-    """Random-hyperplane LSH cosine near-dups: planted near-duplicate pairs
-    (cos ~0.99) are recovered; orthogonal-ish vectors are not candidates;
-    the exact cosine filter guarantees precision = 1."""
-    rng = np.random.RandomState(8)
-    base = rng.randn(40, 24)
-    vecs, ids = [], []
-    for i, v in enumerate(base):
-        vecs.append(v)
-        ids.append(2 * i)
-        vecs.append(v + rng.randn(24) * 0.03)  # near-duplicate of 2i
-        ids.append(2 * i + 1)
-    pdf = pd.DataFrame({"vec_id": ids, "embedding": [list(map(float, v)) for v in vecs]})
-    emb = spark.createDataFrame(pdf).cache()
-    out = ann.rp_lsh_pairs(emb, threshold=0.95, n_bits=16, bands=4).toPandas()
-    got = {(int(a), int(b)) for a, b in out[["vec_a", "vec_b"]].values}
-    planted = {(2 * i, 2 * i + 1) for i in range(40)}
-    recall = len(got & planted) / len(planted)
-    assert recall >= 0.9, recall
-    # precision from the exact filter: every returned pair really is >= thr
-    assert (out["cos"] >= 0.95).all()
-    # vs exact bruteforce at the same threshold: LSH output is a subset
-    exact = ann.cosine_pairs_bruteforce(emb, threshold=0.95).toPandas()
-    exact_pairs = {(int(a), int(b)) for a, b in exact[["vec_a", "vec_b"]].values}
-    assert got <= exact_pairs
 
 
 def test_overview_pushdown_missing_row_passthrough(spark):
@@ -447,69 +153,6 @@ def test_overview_pushdown_non_4326_view_untouched(spark):
     assert got == want  # untouched: no over-coarse overview substitution
 
 
-def test_kmeans_sampled_training(spark):
-    """r2 VERDICT #2: kmeans_centroids caps its training input by default —
-    the trained quantizer from a seeded sample still separates clustered
-    data perfectly (bucket balance + nprobe=1 recall as with full training)."""
-    rng = np.random.RandomState(13)
-    protos = rng.randn(4, 12) * 4
-    M = np.vstack([protos[c] + rng.randn(150, 12) * 0.1 for c in range(4)])
-    pdf = pd.DataFrame({"vec_id": range(len(M)),
-                        "embedding": [list(map(float, v)) for v in M]})
-    emb = spark.createDataFrame(pdf).cache()
-    # force the sampling path: cap far below the table size
-    cents = ann.kmeans_centroids(emb, nlist=4, seed=11, max_train_rows=200)
-    sizes = sorted(
-        r["count"] for r in ann.ivf_assign(emb, cents).groupBy("centroid").count().collect()
-    )
-    assert sizes == [150] * 4  # sampled training still finds the 4 clusters
-    # determinism: same seed + cap -> identical centroids
-    cents2 = ann.kmeans_centroids(emb, nlist=4, seed=11, max_train_rows=200)
-    assert np.allclose(np.array(cents), np.array(cents2))
-
-
-def test_ivf_topk_materialized_assignment(emb):
-    """r2 VERDICT #3: one materialized ivf_assign serves many top-k queries
-    with results identical to per-query assignment."""
-    from pyspark import StorageLevel
-
-    e = emb.limit(300).cache()
-    cents = ann.deterministic_centroids(e, nlist=8)
-    assigned = ann.ivf_assign(e, cents).persist(StorageLevel.MEMORY_AND_DISK)
-    assigned.count()  # materialize once
-    rows = e.orderBy("vec_id").limit(3).collect()
-    for r in rows:
-        q = list(map(float, r["embedding"]))
-        a = ann.ivf_topk(e, q, cents, k=5, nprobe=3).collect()
-        b = ann.ivf_topk(e, q, cents, k=5, nprobe=3, assigned=assigned).collect()
-        assert [(x["vec_id"], round(x["cos"], 9)) for x in a] == \
-               [(x["vec_id"], round(x["cos"], 9)) for x in b]
-
-
-def test_rp_lsh_dim_param(emb):
-    """dim passed explicitly == dim probed (no builder-side action)."""
-    e = emb.limit(100).cache()
-    d = len(e.first()["embedding"])
-    a = ann.rp_lsh_signatures(e, n_bits=16, dim=d).orderBy("vec_id").collect()
-    b = ann.rp_lsh_signatures(e, n_bits=16).orderBy("vec_id").collect()
-    assert [tuple(r) for r in a] == [tuple(r) for r in b]
-
-
-def test_minhash_profile_matches_separate_passes(spark):
-    """The fused profile pass == separate minhash_signature + shingle_sets."""
-    from gdalcubes_cpp_spark.functions.dedup import (
-        minhash_profile, minhash_signature, shingle_sets,
-    )
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(120).cache()
-    prof = minhash_profile(docs, k=4).orderBy("doc_id").toPandas()
-    sig = minhash_signature(docs, k=4).orderBy("doc_id").toPandas()
-    sets = shingle_sets(docs).orderBy("doc_id").toPandas()
-    for i in range(4):
-        assert (prof[f"mh_{i}"] == sig[f"mh_{i}"]).all()
-    assert all(list(a) == list(b) for a, b in zip(prof["sh"], sets["sh"]))
-
-
 def test_translate_collection_roundtrip(spark):
     """image_collection_ops translate analog (src/image_collection_ops.h:
     30-34): png -> gtiff -> png re-encoding is pixel-exact, georeferencing
@@ -553,48 +196,6 @@ def test_translate_collection_roundtrip(spark):
         codecs.decode(r0["bytes"], "png"),
         codecs.decode(pdf.iloc[0]["bytes"], pdf.iloc[0]["fmt"]),
     )
-
-
-def test_unigram_lm_scores(spark):
-    """Corpus-trained unigram LM: natural repeated-vocabulary text scores
-    higher (less negative) than junk; hand-computed parity on a tiny
-    corpus; reference-vocab reuse scores a new doc without retraining."""
-    import math
-
-    from gdalcubes_cpp_spark.functions.text import (
-        unigram_lm_scores,
-        unigram_lm_vocab,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat"),
-            (2, "the dog sat on the mat"),
-            (3, "zq xv qj wk vx jq"),  # junk: every token is rare
-        ],
-        "doc_id long, text string",
-    )
-    out = unigram_lm_scores(docs, vocab_size=100)
-    rows = {r["doc_id"]: r for r in out.collect()}
-    assert rows[1]["lm_logprob"] > rows[3]["lm_logprob"]
-    assert rows[2]["lm_logprob"] > rows[3]["lm_logprob"]
-    assert rows[1]["oov_ratio"] == 0.0  # full corpus fits the vocab
-    # hand parity for doc 1: token counts over the 3-doc corpus
-    corpus = ("the cat sat on the mat the dog sat on the mat "
-              "zq xv qj wk vx jq").split()
-    from collections import Counter
-
-    c = Counter(corpus)
-    denom = sum(c.values()) + len(c) + 1
-    lp = {t: math.log((n + 1) / denom) for t, n in c.items()}
-    want = sum(lp[t] for t in "the cat sat on the mat".split()) / 6
-    assert abs(rows[1]["lm_logprob"] - want) < 1e-9
-    # reference-vocab reuse: new doc scored against the trained vocab
-    ref_vocab = unigram_lm_vocab(docs, vocab_size=100)
-    new = spark.createDataFrame([(9, "the cat on the mat")], "doc_id long, text string")
-    scored = unigram_lm_scores(new, vocab=ref_vocab).collect()[0]
-    assert scored["oov_ratio"] == 0.0
-    assert scored["lm_logprob"] > rows[3]["lm_logprob"]
 
 
 def test_translate_collection_jp2(spark):
@@ -661,96 +262,3 @@ def test_translate_collection_jpeg(spark):
         np.testing.assert_array_equal(
             codecs.decode(r["bytes"]), codecs.decode(seq[iid]["bytes"]))
 
-
-def test_repetition_stats_gopher(spark):
-    """Gopher repetition filters vs hand-computed values: duplicate-line
-    fractions, top-2-gram char coverage (incl. the DESC tie-break),
-    alpha-word fraction and symbol-to-word ratio."""
-    docs = spark.createDataFrame(
-        [
-            (1, "a b\na b\nc d\n\na b"),     # 4 non-empty lines, 2 distinct
-            (2, ""),                          # all-zero path
-            (3, "solo"),                      # no bigram
-            (4, "foo bar foo bar foo bar ### ..."),
-            (5, "x y\nz z z"),               # no dup lines
-            (6, "p q p q r s r s"),          # tie: 'p q' x2 vs 'r s' x2
-        ],
-        "doc_id int, text string",
-    )
-    out = {r["doc_id"]: r for r in
-           text.repetition_stats(docs).collect()}
-    assert out[1]["dup_line_frac"] == 0.5            # (4-2)/4
-    assert out[1]["dup_line_char_frac"] == 0.5       # (12-6)/12
-    assert out[1]["top2_char_frac"] == 3 * 3 / 16    # 'a b' x3, len 3, text 16
-    assert out[2]["dup_line_frac"] == 0.0
-    assert out[2]["top2_char_frac"] == 0.0
-    assert out[3]["top2_char_frac"] == 0.0
-    assert out[3]["alpha_word_frac"] == 1.0
-    assert out[4]["alpha_word_frac"] == 0.75         # 6 of 8 words
-    assert out[4]["symbol_word_ratio"] == 0.5        # 3x'#' + 1x'...' / 8
-    assert out[4]["top2_char_frac"] == 3 * 7 / 31    # 'foo bar' x3
-    assert out[5]["dup_line_frac"] == 0.0
-    # tie between 'p q' (x2) and 'r s' (x2): struct-max = larger string
-    assert out[6]["top2_char_frac"] == 2 * 3 / 15
-
-
-def test_paragraph_dups_and_frac(spark):
-    """Paragraph-level corpus dedup vs hand-computed groups: boilerplate
-    line shared by 3 docs, a doc-internal repeat, whitespace trimming,
-    empty-paragraph removal, and the per-doc duplicated fractions."""
-    from gdalcubes_cpp_spark.functions import dedup
-
-    docs = spark.createDataFrame(
-        [
-            (1, "COOKIE BANNER\nreal content one"),
-            (2, "COOKIE BANNER\nreal content two"),
-            (3, "  COOKIE BANNER  \n\nunique para\nunique para"),
-            (4, "all original here"),
-        ],
-        "doc_id int, text string",
-    )
-    groups = {r["content_hash"]: r for r in dedup.paragraph_dups(docs).collect()}
-    import hashlib
-
-    h_banner = hashlib.md5(b"COOKIE BANNER").hexdigest()
-    h_uniq = hashlib.md5(b"unique para").hexdigest()
-    assert set(groups) == {h_banner, h_uniq}
-    assert groups[h_banner]["n_dups"] == 3 and groups[h_banner]["keep_id"] == 1
-    assert groups[h_uniq]["n_dups"] == 2 and groups[h_uniq]["keep_id"] == 3
-
-    frac = {r["doc_id"]: r for r in dedup.dup_paragraph_frac(docs).collect()}
-    assert frac[1]["n_paras"] == 2 and frac[1]["n_dup_paras"] == 1
-    assert frac[1]["dup_para_frac"] == 0.5
-    # doc 1 chars: 'COOKIE BANNER'=13 dup, 'real content one'=16
-    assert frac[1]["dup_para_char_frac"] == 13 / 29
-    assert frac[3]["n_dup_paras"] == 3 and frac[3]["dup_para_frac"] == 1.0
-    assert frac[4]["n_dup_paras"] == 0 and frac[4]["dup_para_frac"] == 0.0
-
-
-def test_pii_stats_redaction(spark):
-    """PII counts and redaction vs hand-written text: emails, IPv4 with
-    word boundaries, intl phone format, and the redacted output string."""
-    from gdalcubes_cpp_spark.functions import text as T
-
-    docs = spark.createDataFrame(
-        [
-            (1, "write a.b+c@mail.example.org or admin@x.io today"),
-            (2, "server 10.0.200.7 and 192.168.0.1, version 1.2.3.4.5 stays"),
-            (3, "call +41 555 0123 99 now"),
-            (4, "clean text no pii"),
-        ],
-        "doc_id int, text string",
-    )
-    out = {r["doc_id"]: r for r in T.pii_stats(docs).collect()}
-    assert out[1]["n_emails"] == 2 and out[1]["pii_count"] == 2
-    # 1.2.3.4.5: the IPv4 regex matches the leftmost 4 octets (1.2.3.4)
-    assert out[2]["n_ipv4"] == 3
-    assert out[3]["n_phones"] == 1
-    assert out[4]["pii_count"] == 0
-
-    red = {r["doc_id"]: r["red"] for r in docs.select(
-        "doc_id", T.redact_pii(F.col("text")).alias("red")).collect()}
-    assert red[1] == "write <EMAIL> or <EMAIL> today"
-    assert red[2] == "server <IP> and <IP>, version <IP>.5 stays"
-    assert red[3] == "call <PHONE> now"
-    assert red[4] == "clean text no pii"
