@@ -2405,7 +2405,7 @@ FROM s2out
 )
 def s2_cells(spark, sf_dir):
     """S2 cell index over image footprint centers (functions/s2.py): the
-    leaf -> level-11 cell id via the native-column Hilbert fold, canonical
+    leaf -> level-11 cell id via the numpy batch Hilbert fold, canonical
     hex token, and the level-5 ancestor by bit mask. The DuckDB oracle
     replays the identical IEEE/int64 op sequence as a recursive CTE, so
     ids match bit-for-bit (the level-11 mask adds a 2^38 safety margin

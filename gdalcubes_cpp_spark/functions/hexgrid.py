@@ -29,9 +29,9 @@ avoids.  So the hex index here delivers the SCHEME, not the ids:
   (the id is linear in (q, r), so a neighbor is id + constant).
 
 Exactness discipline (the part that makes this oracle-able): the encode
-chain is emitted ONCE as portable SQL fragments (`hex_steps`) evaluated
-by BOTH engines — Spark via F.expr per step, DuckDB via chained CTEs —
-and re-implemented in numpy (`hex_encode_np`) with operation-for-
+chain is emitted ONCE as portable SQL fragments (`hex_steps`) that the
+DuckDB oracle evaluates as chained CTEs, and implemented in numpy
+(`hex_encode_np`, the engine's only encoder) with operation-for-
 operation identical order.  The only cross-engine float divergence is
 the 1-2 ulp of sin/ln/asin in the lon/lat->plane stage (same as every
 oracled SRS family); every DECISION (floor cube-rounding, tiebreak
@@ -46,9 +46,11 @@ bbox scan per chunk, src/image_collection.cpp:1324-1394); the north rule
 asks for an "H3/S2 index" — S2 (functions/s2.py) is the id-exact
 published-convention curve index, this module is the hexagonal one.
 
-Scale shape: pure column arithmetic (a few sin/ln calls + integer
-packing), no UDF, no shuffle — rides any scan; k-ring expansion is a
-literal-array explode like the flat grid's.
+Scale shape: one numpy batch kernel (a few sin/ln calls + integer
+packing per Arrow batch) encodes every id on the engine side: hex_cells
+and the st_join owner call it through encode_udf, and the cover
+(cover_cells_udf) runs the same plane math.  No shuffle — it rides any
+scan; k-ring expansion is a literal-array explode like the flat grid's.
 """
 
 from __future__ import annotations
@@ -60,6 +62,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from ..srs import _cea_consts, _flit, resolve
+from .s2 import finite_lanes, nullable_ids
 
 _RAD = math.pi / 180.0
 SQRT3 = math.sqrt(3.0)
@@ -174,164 +177,50 @@ def hex_steps(lon_expr: str, lat_expr: str, res: int, pz: str = "_hx_",
 # ---------------------------------------------------------------------------
 
 
-def _let(col, fn):
-    """Bind ``col`` once (higher-order-function lambda variable) so ``fn``
-    may reference it repeatedly without duplicating its expression subtree.
-    The previous withColumn-per-step chain let CollapseProject inline every
-    intermediate into each of its uses — combinatorial tree growth that
-    pushed whole-stage codegen past janino's 64 KB method limit when the
-    owner filter landed inside the st_join broadcast stage."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
+def encode_udf(res: int, parent: bool = False):
+    """pandas_udf (lon, lat) -> packed hex cell id at ``res`` through
+    hex_encode_np, or struct(cell, parent) when ``parent`` is set; NULL for
+    a NULL or non-finite coordinate."""
+    from pyspark.sql.pandas.functions import pandas_udf
 
+    @pandas_udf("bigint")
+    def cell(lon: pd.Series, lat: pd.Series) -> pd.Series:
+        ok, (x, y) = finite_lanes(lon, lat)
+        return nullable_ids(hex_encode_np(x, y, res), ok)
 
-def _cea_xy(lon, lat):
-    """lon/lat degrees -> EASE-Grid 2.0 meters as a struct(x, y) Column —
-    operation-for-operation identical to forward_steps (the DuckDB mirror),
-    so values stay bit-compatible with the oracled SQL chain."""
-    p = _P6933
-    e, k0, _qp, _ = _cea_consts(p)
-    L = F.lit
+    @pandas_udf("cell bigint, parent bigint")
+    def cell_parent(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
+        ok, (x, y) = finite_lanes(lon, lat)
+        cells = hex_encode_np(x, y, res)
+        parents = hex_parent_np(cells) if len(cells) else cells
+        return pd.DataFrame({"cell": nullable_ids(cells, ok),
+                             "parent": nullable_ids(parents, ok)})
 
-    def f1(v):
-        sphi = F.sin(v.lat * L(_RAD))
-
-        def f2(w):
-            es = L(e) * w.sphi
-
-            def f3(u):
-                qs = L(1.0 - p.e2) * (
-                    u.sphi / (L(1.0) - L(p.e2) * (u.sphi * u.sphi))
-                    - L(1.0 / (2.0 * e))
-                    * F.log((L(1.0) - u.es) / (L(1.0) + u.es)))
-                x = L(p.fe) + L(p.a * k0) * ((u.lon - L(p.lon0)) * L(_RAD))
-                y = L(p.fn) + (L(p.a) * qs) / L(2.0 * k0)
-                return F.struct(x.alias("x"), y.alias("y"))
-
-            return _let(F.struct(w.lon.alias("lon"), w.sphi.alias("sphi"),
-                                 es.alias("es")), f3)
-
-        return _let(F.struct(v.lon.alias("lon"), sphi.alias("sphi")), f2)
-
-    return _let(F.struct(lon.alias("lon"), lat.alias("lat")), f1)
-
-
-def _plane_axial(x, y, res: int):
-    """EASE meters -> cube-rounded integer axial struct(cq, cr) at ``res``
-    (mirrors plane_steps op-for-op; *,+,-,floor,abs only — bit-exact)."""
-    s, c, n = res_params(res)
-    L = F.lit
-
-    def f1(v):
-        xr = v.x * L(c) + v.y * L(n)
-        yr = v.y * L(c) - v.x * L(n)
-
-        def f2(w):
-            qf = (L(SQRT3 / 3.0) * w.xr - L(1.0 / 3.0) * w.yr) / L(s)
-            rf = (L(2.0 / 3.0) * w.yr) / L(s)
-
-            def f3(u):
-                sf = (-u.qf) - u.rf
-
-                def f4(t):
-                    iq = F.floor(t.qf + L(0.5))
-                    ir = F.floor(t.rf + L(0.5))
-                    is_ = F.floor(t.sf + L(0.5))
-
-                    def f5(b):
-                        dq = F.abs(b.iq.cast("double") - b.qf)
-                        dr = F.abs(b.ir.cast("double") - b.rf)
-                        ds = F.abs(b["is"].cast("double") - b.sf)
-
-                        def f6(d):
-                            maj_q = (d.dq > d.dr) & (d.dq > d.ds)
-                            cq = F.when(maj_q, (L(0) - d.ir) - d["is"]) \
-                                .otherwise(d.iq)
-                            cr = F.when((~maj_q) & (d.dr > d.ds),
-                                        (L(0) - d.iq) - d["is"]) \
-                                .otherwise(d.ir)
-                            return F.struct(cq.alias("cq"), cr.alias("cr"))
-
-                        return _let(F.struct(
-                            b.iq.alias("iq"), b.ir.alias("ir"),
-                            b["is"].alias("is"), dq.alias("dq"),
-                            dr.alias("dr"), ds.alias("ds")), f6)
-
-                    return _let(F.struct(
-                        iq.alias("iq"), ir.alias("ir"), is_.alias("is"),
-                        t.qf.alias("qf"), t.rf.alias("rf"),
-                        t.sf.alias("sf")), f5)
-
-                return _let(F.struct(u.qf.alias("qf"), u.rf.alias("rf"),
-                                     sf.alias("sf")), f4)
-
-            return _let(F.struct(qf.alias("qf"), rf.alias("rf")), f3)
-
-        return _let(F.struct(xr.alias("xr"), yr.alias("yr")), f2)
-
-    return _let(F.struct(x.alias("x"), y.alias("y")), f1)
-
-
-def _pack_col(res: int, cq, cr):
-    return (F.lit(res).cast("long") * F.lit(_F_RES)
-            + (cq + F.lit(OFF)) * F.lit(_F_Q) + (cr + F.lit(OFF)))
-
-
-def hex_cell_cols(lon, lat, res: int, parent: bool = False):
-    """struct(cell[, parent]) for lon/lat degree Columns at ``res`` — the
-    let-bound native-expression twin of the hex_steps SQL chain (values
-    bit-identical; tree size linear in the step count)."""
-    L = F.lit
-
-    def body(v):
-        def with_ax(a):
-            cell = _pack_col(res, a.cq, a.cr)
-            if not parent:
-                return F.struct(cell.alias("cell"))
-            s, c, n = res_params(res)
-            qd = a.cq.cast("double")
-            rd = a.cr.cast("double")
-            xc = L(s) * (L(SQRT3) * (qd + rd * L(0.5)))
-            yc = L(s) * (L(1.5) * rd)
-            px = xc * L(c) - yc * L(n)
-            py = xc * L(n) + yc * L(c)
-
-            def with_p(pp):
-                pcell = _let(_plane_axial(pp.px, pp.py, res - 1),
-                             lambda b: _pack_col(res - 1, b.cq, b.cr))
-                return F.struct(cell.alias("cell"), pcell.alias("parent"))
-
-            return _let(F.struct(px.alias("px"), py.alias("py")), with_p)
-
-        return _let(_plane_axial(v.x, v.y, res), with_ax)
-
-    return _let(_cea_xy(lon, lat), body)
+    return cell_parent if parent else cell
 
 
 def hex_cells(df: DataFrame, lon: str = "lon", lat: str = "lat",
               res: int = 4, cell_col: str = "hex_cell",
               parent_col: str | None = "hex_parent") -> DataFrame:
-    """Attach the packed hex cell id (and its aperture-7 parent) as native
-    let-bound column expressions (see _let for why not withColumn steps)."""
+    """Attach the packed hex cell id (and its aperture-7 parent), computed
+    by one encode_udf pass over each Arrow batch."""
     if parent_col is not None and res == 0:
         raise ValueError("res-0 cells have no parent; pass parent_col=None")
-    st = hex_cell_cols(F.col(lon), F.col(lat), res,
-                       parent=parent_col is not None)
-    out = df.withColumn("_hx_struct", st).withColumn(
-        cell_col, F.col("_hx_struct.cell"))
-    if parent_col is not None:
-        out = out.withColumn(parent_col, F.col("_hx_struct.parent"))
-    return out.drop("_hx_struct")
+    enc = encode_udf(res, parent=parent_col is not None)(F.col(lon), F.col(lat))
+    if parent_col is None:
+        return df.withColumn(cell_col, enc)
+    return df.withColumn("_hx", enc).withColumns(
+        {cell_col: F.col("_hx.cell"), parent_col: F.col("_hx.parent")}).drop("_hx")
 
 
 def hex_duckdb_sql(src_sql: str, keep_cols: str, lon_expr: str,
                    lat_expr: str, res: int, cell_as: str = "hex_cell",
                    parent_as: str = "hex_parent") -> str:
-    """Chained-CTE DuckDB mirror of hex_cells: identical step expressions
-    evaluated over the same source relation.  Returns a full SELECT."""
+    """Chained-CTE DuckDB mirror of hex_cells: the hex_steps expressions,
+    op-for-op the numpy encoder, evaluated over the same source relation.
+    Returns a full SELECT."""
     pz = "_hx_"
-    # project the inputs once, then reference them by name — the step
-    # expressions are then identical to the Spark side's (which reference
-    # the DataFrame's own lon/lat column names)
+    # project the inputs once, then reference them by name
     steps = hex_steps("_hx_lon_in", "_hx_lat_in", res, pz, parent=True)
     prev = "hx0"
     ctes = [f"hx0 AS (SELECT {keep_cols}, {lon_expr} AS _hx_lon_in, "
@@ -346,7 +235,7 @@ def hex_duckdb_sql(src_sql: str, keep_cols: str, lon_expr: str,
 
 
 # ---------------------------------------------------------------------------
-# numpy reference (tests) — operation order mirrors the SQL fragments
+# numpy encoder — operation order mirrors the SQL fragments
 # ---------------------------------------------------------------------------
 
 
@@ -404,20 +293,24 @@ def hex_encode_np(lon, lat, res: int):
     return pack(res, q, r)
 
 
+def _center_np(q, r, res: int):
+    """Integer axial (q, r) at ``res`` -> hex center in EASE meters
+    (mirrors center_steps op-for-op)."""
+    s, c, n = res_params(res)
+    qd = np.asarray(q, np.float64)
+    rd = np.asarray(r, np.float64)
+    xc = s * (SQRT3 * (qd + rd * 0.5))
+    yc = s * (1.5 * rd)
+    return xc * c - yc * n, xc * n + yc * c
+
+
 def hex_center_np(cell):
     """Packed cell -> (lon, lat) of the hex center."""
     from ..srs import cea_inverse
 
     res, q, r = unpack(cell)
     res = int(res[0]) if getattr(res, "ndim", 0) else int(res)
-    s, c, n = res_params(int(res))
-    qd = np.asarray(q, np.float64)
-    rd = np.asarray(r, np.float64)
-    xc = s * (SQRT3 * (qd + rd * 0.5))
-    yc = s * (1.5 * rd)
-    px = xc * c - yc * n
-    py = xc * n + yc * c
-    return cea_inverse(px, py, _P6933)
+    return cea_inverse(*_center_np(q, r, res), _P6933)
 
 
 def hex_parent_np(cell):
@@ -425,14 +318,7 @@ def hex_parent_np(cell):
     res = int(res[0]) if getattr(res, "ndim", 0) else int(res)
     if res == 0:
         raise ValueError("res-0 cells have no parent")
-    s, c, n = res_params(res)
-    qd = np.asarray(q, np.float64)
-    rd = np.asarray(r, np.float64)
-    xc = s * (SQRT3 * (qd + rd * 0.5))
-    yc = s * (1.5 * rd)
-    px = xc * c - yc * n
-    py = xc * n + yc * c
-    pq, pr = _plane_np(px, py, res - 1)
+    pq, pr = _plane_np(*_center_np(q, r, res), res - 1)
     return pack(res - 1, pq, pr)
 
 
@@ -492,11 +378,9 @@ def cover_cells_np(left, right, bottom, top, res: int):
     {cell(p) : p in rect}.  The expansion carries a 1e-9 relative slack
     so a last-ulp owner-cell flip on a hex vertex cannot fall outside.
 
-    Returns a list of int lists (packed ids), one per input row."""
-    left = np.asarray(left, dtype=np.float64)
-    right = np.asarray(right, dtype=np.float64)
-    bottom = np.asarray(bottom, dtype=np.float64)
-    top = np.asarray(top, dtype=np.float64)
+    Returns a list of int lists (packed ids), one per input row; a NULL
+    (NaN) or non-finite rect covers nothing."""
+    ok, (left, right, bottom, top) = finite_lanes(left, right, bottom, top)
     if (right < left).any():
         raise ValueError("antimeridian-wrapping rects are not supported; "
                          "split at ±180 first (flat-grid convention)")
@@ -525,17 +409,15 @@ def cover_cells_np(left, right, bottom, top, res: int):
     rhi = np.ceil(np.maximum.reduce(rs_)).astype(np.int64)
     out = []
     for i in range(len(left)):
+        if not ok[i]:
+            out.append([])
+            continue
         q0 = np.arange(qlo[i], qhi[i] + 1, dtype=np.int64)
         r0 = np.arange(rlo[i], rhi[i] + 1, dtype=np.int64)
         qg = np.repeat(q0, len(r0))
         rg = np.tile(r0, len(q0))
         # keep only centers actually inside the expanded plane bbox
-        qd = qg.astype(np.float64)
-        rd = rg.astype(np.float64)
-        xc = s * (SQRT3 * (qd + rd * 0.5))
-        yc = s * (1.5 * rd)
-        px = xc * c - yc * n
-        py = xc * n + yc * c
+        px, py = _center_np(qg, rg, res)
         m = (px >= xa[i]) & (px <= xb[i]) & (py >= ya[i]) & (py <= yb[i])
         out.append(pack(res, qg[m], rg[m]).tolist())
     return out
@@ -567,13 +449,7 @@ def children_np(cell: int):
     res = int(res[0])
     if res >= MAX_RES:
         raise ValueError("children of MAX_RES cells are below MAX_RES")
-    s, c, n = res_params(res)
-    qd, rd = float(q[0]), float(r[0])
-    xc = s * (SQRT3 * (qd + rd * 0.5))
-    yc = s * (1.5 * rd)
-    px = xc * c - yc * n
-    py = xc * n + yc * c
-    sq, sr = _plane_np(np.array([px]), np.array([py]), res + 1)
+    sq, sr = _plane_np(*_center_np(q, r, res), res + 1)
     offs = kring_offsets(2)
     qc = np.array([int(sq[0]) + dq for dq, dr in offs], dtype=np.int64)
     rc = np.array([int(sr[0]) + dr for dq, dr in offs], dtype=np.int64)

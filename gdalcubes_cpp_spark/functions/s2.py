@@ -1,4 +1,4 @@
-"""Real S2 cell index — native Spark column expressions, a pure-Python
+"""Real S2 cell index — a numpy batch encoder for Spark, a pure-Python
 reference implementation, and a DuckDB SQL mirror for the driver oracle.
 
 Replaces the integer lon/lat grid's "H3/S2 stand-in" admission
@@ -37,14 +37,16 @@ conservative per-face cell superset for any lon/lat rect from separable
 product bounds, so the flat grid (functions/cells.py) and S2 are now
 interchangeable join strategies with identical output rows.
 
-Scale shape: the whole id computation is native column expressions —
-trig, a 6-way face CASE, and a 30-step F.aggregate fold over a constant
-sequence (the Hilbert loop; the fold's lambda variables let-bind the
-carried state so the expression tree stays LINEAR in levels, the naive
-nested expression is exponential). No UDF, no shuffle, whole-stage
-codegen; at 100 TB it rides the existing scan like any projection.
+Scale shape: one numpy batch kernel encodes every id on the engine side.
+``np_point_leaf`` runs trig, the face select and the 30-step Hilbert fold
+over a whole Arrow batch; ``point_leaf_udf`` wraps it in a pandas_udf, and
+``s2_cell_id``, the st_join owner and ``s2_knn_join`` all call it. The
+cover side (``cover_cells_udf``) folds its cells through the same
+``np_leaf``. Ancestors (``s2_parent``) and tokens (``s2_token``) are plain
+bit and string ops on the id column. No shuffle: the encode rides the scan
+like any projection.
 
-Validation (tests/test_s2.py): the Spark fold, the pure-Python
+Validation (tests/test_s2.py): the Spark UDF path, the pure-Python
 lookup-table reference (built by the recursive subdivision the C++
 library documents), and the DuckDB recursive-CTE mirror agree leaf-exact
 on seeded random points spanning all faces; hierarchy (parent is a bit
@@ -124,7 +126,7 @@ _LOOKUP_POS = None  # key (i4<<6)|(j4<<2)|orient -> (pos8<<2)|orient_out
 def _build_lookup():
     """4-bit-step lookup table built by recursive curve subdivision — the
     construction the C++ library documents; deliberately a DIFFERENT
-    algorithmic route than the Spark/SQL per-level folds so agreement
+    algorithmic route than the numpy/SQL per-level folds so agreement
     between them is evidence, not tautology."""
     global _LOOKUP_POS
     if _LOOKUP_POS is not None:
@@ -185,114 +187,11 @@ def py_token(cell_id: int) -> str:
 
 # ------------------------------------------------------------------- spark
 
-def _let(col: Column, fn) -> Column:
-    """Bind ``col`` once (higher-order-function variable) so ``fn`` may
-    reference it repeatedly without duplicating its expression subtree."""
-    return F.element_at(F.transform(F.array(col), fn), 1)
-
-
 def s2_cell_id(lon: Column, lat: Column, level: int = MAX_LEVEL) -> Column:
-    """S2 cell id of a lon/lat point as a native column expression."""
-    latr, lonr = F.radians(lat), F.radians(lon)
-    xyz = F.struct(
-        (F.cos(latr) * F.cos(lonr)).alias("x"),
-        (F.cos(latr) * F.sin(lonr)).alias("y"),
-        F.sin(latr).alias("z"),
-    )
-    leaf = _let(xyz, _leaf_of_xyz)
-    return leaf if level >= MAX_LEVEL else s2_parent(leaf, level)
-
-
-def _leaf_of_xyz(p: Column) -> Column:
-    ax, ay, az = F.abs(p.x), F.abs(p.y), F.abs(p.z)
-    major = F.when(ax > ay, F.when(ax > az, F.lit(0)).otherwise(F.lit(2))).otherwise(
-        F.when(ay > az, F.lit(1)).otherwise(F.lit(2))
-    )
-    comp = F.when(major == 0, p.x).when(major == 1, p.y).otherwise(p.z)
-    face = major + F.when(comp < 0, F.lit(3)).otherwise(F.lit(0))
-    fuv = F.struct(
-        face.alias("f"),
-        F.when(face == 0, p.y / p.x)
-        .when(face == 1, -p.x / p.y)
-        .when(face == 2, -p.x / p.z)
-        .when(face == 3, p.z / p.x)
-        .when(face == 4, p.z / p.y)
-        .otherwise(-p.y / p.z)
-        .alias("u"),
-        F.when(face == 0, p.z / p.x)
-        .when(face == 1, p.z / p.y)
-        .when(face == 2, -p.y / p.z)
-        .when(face == 3, p.y / p.x)
-        .when(face == 4, -p.x / p.y)
-        .otherwise(-p.x / p.z)
-        .alias("v"),
-    )
-    return _let(fuv, _leaf_of_face_uv)
-
-
-def _st_col(u: Column) -> Column:
-    return F.when(u >= 0, 0.5 * F.sqrt(1.0 + 3.0 * u)).otherwise(
-        1.0 - 0.5 * F.sqrt(1.0 - 3.0 * u)
-    )
-
-
-def _ij_col(s: Column) -> Column:
-    return F.greatest(
-        F.lit(0).cast("long"),
-        F.least(
-            F.lit(_LIMIT - 1).cast("long"),
-            F.floor(F.lit(float(_LIMIT)) * s).cast("long"),
-        ),
-    )
-
-
-def _leaf_of_face_uv(q: Column) -> Column:
-    fij = F.struct(
-        q.f.cast("long").alias("f"),
-        _ij_col(_st_col(q.u)).alias("i"),
-        _ij_col(_st_col(q.v)).alias("j"),
-    )
-    return _let(fij, _leaf_hilbert)
-
-
-def _ij_to_pos_flat() -> Column:
-    # built per call, not at module scope: F.lit needs an active session
-    return F.array(*[F.lit(v).cast("long") for row in _IJ_TO_POS for v in row])
-
-
-def _pos_to_orient_arr() -> Column:
-    return F.array(*[F.lit(v).cast("long") for v in _POS_TO_ORIENT])
-
-
-def _leaf_hilbert(c: Column) -> Column:
-    """30-step Hilbert fold: acc = (orientation, pos, i<<k residue, j<<k
-    residue); each step consumes the TOP remaining bit of i and j via
-    constant shifts (F.aggregate's lambda variables keep the tree linear)."""
-    ij_to_pos = _ij_to_pos_flat()
-    pos_to_orient = _pos_to_orient_arr()
-
-    def step(acc, _k):
-        bi = F.shiftright(acc.ii, MAX_LEVEL - 1).bitwiseAND(F.lit(1).cast("long"))
-        bj = F.shiftright(acc.jj, MAX_LEVEL - 1).bitwiseAND(F.lit(1).cast("long"))
-        idx = (acc.o * 4 + bi * 2 + bj + 1).cast("int")
-        p = F.element_at(ij_to_pos, idx)
-        return F.struct(
-            acc.o.bitwiseXOR(F.element_at(pos_to_orient, (p + 1).cast("int"))).alias("o"),
-            (acc.pos * 4 + p).alias("pos"),
-            F.shiftleft(acc.ii, 1).bitwiseAND(F.lit(_LIMIT - 1).cast("long")).alias("ii"),
-            F.shiftleft(acc.jj, 1).bitwiseAND(F.lit(_LIMIT - 1).cast("long")).alias("jj"),
-        )
-
-    init = F.struct(
-        c.f.bitwiseAND(F.lit(1).cast("long")).alias("o"),
-        F.lit(0).cast("long").alias("pos"),
-        c.i.alias("ii"),
-        c.j.alias("jj"),
-    )
-    folded = F.aggregate(
-        F.sequence(F.lit(1), F.lit(MAX_LEVEL)), init, step
-    )
-    return F.shiftleft(c.f, 61).bitwiseOR(_let(folded, lambda a: a.pos * 2 + 1))
+    """S2 cell id of a lon/lat point: the numpy batch leaf
+    (:func:`point_leaf_udf`) masked to ``level``. NULL for a NULL or
+    non-finite coordinate."""
+    return s2_parent(point_leaf_udf()(lon, lat), level)
 
 
 def s2_parent(cell_id: Column, level: int) -> Column:
@@ -331,7 +230,7 @@ def duckdb_s2_ctes(src_sql: str, lon: str, lat: str, level: int,
     recursion. Emits CTEs ``_s2ij`` / ``_s2h`` / ``s2out`` where
     ``s2out(key_cols, leaf, cell)`` holds the leaf id and the level-
     ``level`` ancestor. Every arithmetic stage is the same IEEE double /
-    two's-complement int64 op sequence as the Spark expressions, so ids
+    two's-complement int64 op sequence as :func:`np_point_leaf`, so ids
     agree bit-for-bit (face<<61 is emitted as the signed-wrap CASE since
     DuckDB's << checks overflow rather than wrapping)."""
     lsb = lsb_for_level(level)
@@ -552,8 +451,6 @@ _NP_POS2OR = None
 def _np_tables():
     global _NP_IJ2POS, _NP_POS2OR
     if _NP_IJ2POS is None:
-        import numpy as np
-
         _NP_IJ2POS = np.array([v for row in _IJ_TO_POS for v in row], dtype=np.uint64)
         _NP_POS2OR = np.array(_POS_TO_ORIENT, dtype=np.uint64)
     return _NP_IJ2POS, _NP_POS2OR
@@ -561,11 +458,9 @@ def _np_tables():
 
 def np_leaf(face, i, j):
     """Vectorized leaf ids for (face, i, j) uint64 arrays — the Arrow-batch
-    kernel behind cover_cells_udf (north_rule: batched cell encoding via
-    vectorized Arrow UDFs). Same per-level Gray-code fold as the Spark
-    expression; returns int64 bit patterns."""
-    import numpy as np
-
+    fold behind point_leaf_udf and cover_cells_udf (north_rule: batched cell
+    encoding via vectorized Arrow UDFs). Same per-level Gray-code fold as
+    the DuckDB CTE; returns int64 bit patterns."""
     ij2pos, pos2or = _np_tables()
     face = face.astype(np.uint64)
     ii = i.astype(np.uint64)
@@ -586,15 +481,11 @@ def np_leaf(face, i, j):
 
 
 def np_point_leaf(lon, lat):
-    """Vectorized (numpy) leaf ids for lon/lat arrays — the point-encode
-    twin of ``py_cell_id`` (same float pipeline: xyz -> face/uv -> st -> ij,
-    then the shared ``np_leaf`` integer fold). Used where the cell id is an
-    internal JOIN KEY only (s2_knn_join's b-side leaf): the native
-    ``s2_cell_id`` expression binds its subtree with a higher-order
-    function, which blocks whole-stage codegen and evaluates interpreted at
-    ~1 ms/row — three orders of magnitude slower than this batch kernel.
-    Equality with py_cell_id over random + bench point sets is pinned in
-    tests/test_s2_knn.py."""
+    """Vectorized (numpy) leaf ids for finite lon/lat arrays — the point
+    encoder behind every engine-side S2 id (same float pipeline as
+    ``py_cell_id``: xyz -> face/uv -> st -> ij, then the shared ``np_leaf``
+    integer fold). Equality with py_cell_id over random + bench point sets
+    is pinned in tests/test_s2_knn.py."""
     lon = np.radians(np.asarray(lon, np.float64))
     lat = np.radians(np.asarray(lat, np.float64))
     cl = np.cos(lat)
@@ -620,13 +511,29 @@ def np_point_leaf(lon, lat):
     return np_leaf(face.astype(np.uint64), _ij_np(_st_np(u)), _ij_np(_st_np(v)))
 
 
+def finite_lanes(*cols):
+    """(ok, arrays): ``ok`` marks the rows whose inputs are all finite (a
+    NULL arrives from Arrow as NaN); ``arrays`` are the inputs as float64
+    with every other row zeroed, so a kernel never computes on NaN or inf."""
+    arrs = [np.asarray(c, dtype=np.float64) for c in cols]
+    ok = np.logical_and.reduce([np.isfinite(a) for a in arrs])
+    return ok, [np.where(ok, a, 0.0) for a in arrs]
+
+
+def nullable_ids(ids, ok) -> pd.Series:
+    """int64 ids as a bigint Series, NULL wherever ``ok`` is False."""
+    return pd.Series(pd.arrays.IntegerArray(np.asarray(ids, np.int64), ~ok))
+
+
 def point_leaf_udf():
-    """pandas_udf (lon, lat) -> leaf cell id via the numpy batch kernel."""
+    """pandas_udf (lon, lat) -> leaf cell id via the numpy batch kernel;
+    NULL for a NULL or non-finite coordinate."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     @pandas_udf("bigint")
     def leaf(lon: pd.Series, lat: pd.Series) -> pd.Series:
-        return pd.Series(np_point_leaf(lon.to_numpy(), lat.to_numpy()))
+        ok, (x, y) = finite_lanes(lon, lat)
+        return nullable_ids(np_point_leaf(x, y), ok)
 
     return leaf
 
@@ -635,8 +542,7 @@ def cover_cells_udf(level: int):
     """pandas_udf (left, right, bottom, top) -> array<long> of covering
     cell ids at ``level``. Per-row range math is trivial Python; the
     Hilbert encode over the batch's concatenated cells runs once through
-    the vectorized numpy fold."""
-    import numpy as np
+    the vectorized numpy fold. A NULL or non-finite rect covers nothing."""
     from pyspark.sql.pandas.functions import pandas_udf
 
     shift = MAX_LEVEL - level
@@ -646,7 +552,10 @@ def cover_cells_udf(level: int):
     @pandas_udf("array<bigint>")
     def cover(left: pd.Series, right: pd.Series, bottom: pd.Series, top: pd.Series) -> pd.Series:
         faces, iis, jjs, rowid = [], [], [], []
+        ok, _ = finite_lanes(left, right, bottom, top)
         for r, (lo, hi, blo, bhi) in enumerate(zip(left, right, bottom, top)):
+            if not ok[r]:
+                continue
             for face, i_lo, i_hi, j_lo, j_hi in cover_bboxes(lo, hi, blo, bhi, level):
                 for iL in range(i_lo, i_hi + 1):
                     for jL in range(j_lo, j_hi + 1):
@@ -724,7 +633,7 @@ def s2_knn_join(
 
     per round, every unresolved query point covers the bounding box of its
     radius-r disc with S2 cells (cover_cells_udf) and equi-joins candidates
-    whose cell matches (b side: one native-fold cell per point); candidates
+    whose cell matches (b side: one batch-encoded leaf per point); candidates
     rank by (haversine, b_id). A point is RESOLVED once its k-th candidate
     distance is <= r with the disc provably inside the covered box — then
     no non-candidate can outrank it. Unresolved points double r (sparse
@@ -758,10 +667,7 @@ def s2_knn_join(
     bb = spread(b.select(F.col(b_id).alias("_bid"), F.col(lon).alias("_blon"), F.col(lat).alias("_blat")))
     # one leaf encode of the b side, materialized once: every round's
     # bucket key is then a bit MASK of the leaf (s2_parent), not a re-run
-    # of the 30-step Hilbert fold over all of b. The encode itself is the
-    # numpy batch kernel (np_point_leaf): the id is an internal join key,
-    # and the native expression's higher-order binding runs interpreted at
-    # ~1 ms/row (blocked codegen) — 1000x this kernel.
+    # of the 30-step Hilbert fold over all of b
     bb = bb.withColumn(
         "_bleaf", point_leaf_udf()(F.col("_blon"), F.col("_blat"))
     ).localCheckpoint(eager=True)

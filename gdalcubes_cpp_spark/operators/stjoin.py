@@ -39,11 +39,14 @@ by chunk count: ``broadcast`` up to BROADCAST_MAX_CHUNKS (5M) chunks,
 
 from __future__ import annotations
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from .. import srs as _srs
 from ..functions import cells as C
 from ..grid import ChunkGrid
 from ..partition import spread
+from ..srs import _flit
 
 CHUNK_COLS = [
     "chunk_id", "ch_left", "ch_right", "ch_bottom", "ch_top",
@@ -56,8 +59,9 @@ BROADCAST_MAX_CHUNKS = 5_000_000
 def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
     """Generate the chunk grid as a DataFrame (bounds_from_chunk as columns).
 
-    Pure JVM arithmetic from ``spark.range(n_chunks)`` — never materialized
-    on the driver, so a billion-chunk grid is fine.
+    JVM arithmetic from ``spark.range(n_chunks)`` — never materialized on
+    the driver (which computes at most the ncx+1 + ncy+1 axis edges), so a
+    billion-chunk grid is fine.
     """
     v = grid.view
     ncx, ncy = grid.ncx, grid.ncy
@@ -89,19 +93,22 @@ def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
     # footprints are stored in EPSG:4326 (src/image_collection.cpp:309-326);
     # a non-4326 view transforms its chunk rectangles to 4326 for the join
     # predicate, as the reference transforms the query rect
-    # (src/image_collection.cpp:1326). Mercator is monotonic/axis-aligned,
-    # so corners map to corners — native column math, no UDF. Non-separable
-    # SRS (UTM) get a CONSERVATIVE 4326 bbox below (a superset of the
-    # images whose footprint meets the chunk, as in the reference's
-    # transformed query rect).
-    from .. import srs as _srs
-
-    srs_n = _srs.normalize(v.srs)
-    if srs_n == "EPSG:3857":
-        ch_left = _srs.col_x_to_lon(ch_left)
-        ch_right = _srs.col_x_to_lon(ch_right)
-        ch_bottom = _srs.col_y_to_lat(ch_bottom)
-        ch_top = _srs.col_y_to_lat(ch_top)
+    # (src/image_collection.cpp:1326). A separable SRS maps corners to
+    # corners, so the ncx+1 lon and ncy+1 lat chunk edges are transformed
+    # once on the driver and looked up by chunk column and row; when they
+    # equal the view's own edges (4326) the JVM arithmetic above stands.
+    separable = _srs.is_separable(v.srs)
+    if separable:
+        xe = v.left + np.minimum(np.arange(ncx + 1) * v.chunk_nx, v.nx) * v.dx
+        ye = v.top - np.minimum(np.arange(ncy + 1) * v.chunk_ny, v.ny) * v.dy
+        lon_e, lat_e = _srs.axis_to_wgs84(xe, ye, v.srs)
+        if not (np.array_equal(lon_e, xe) and np.array_equal(lat_e, ye)):
+            lon_a = F.expr(f"array({', '.join(map(_flit, lon_e))})")
+            lat_a = F.expr(f"array({', '.join(map(_flit, lat_e))})")
+            ch_left = F.element_at(lon_a, (cx + 1).cast("int"))
+            ch_right = F.element_at(lon_a, (cx + 2).cast("int"))
+            ch_top = F.element_at(lat_a, (cy + 1).cast("int"))
+            ch_bottom = F.element_at(lat_a, (cy + 2).cast("int"))
     out = df.select(
         "chunk_id",
         ch_left.alias("ch_left"),
@@ -112,26 +119,22 @@ def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
         t_end.alias("ch_t_end"),
         it0.cast("int").alias("ch_it0"),
     )
-    # everything that isn't 4326 (exact already) or 3857 (column math
-    # above) goes through bbox_to_wgs84 — exact corner mapping for the
-    # remaining separable family (CEA), conservative densified-edge bbox
-    # for the non-separable ones; chunk-count-sized work either way
-    if srs_n not in ("EPSG:4326", "EPSG:3857"):
-        import pandas as pd
+    if separable:
+        return out
 
-        def to4326(batches):
-            for pdf in batches:
-                l, r, b, t = [], [], [], []
-                for _, row in pdf.iterrows():
-                    lo0, lo1, la0, la1 = _srs.bbox_to_wgs84(
-                        row["ch_left"], row["ch_right"],
-                        row["ch_bottom"], row["ch_top"], srs_n,
-                    )
-                    l.append(lo0); r.append(lo1); b.append(la0); t.append(la1)
-                yield pdf.assign(ch_left=l, ch_right=r, ch_bottom=b, ch_top=t)
+    # a non-separable SRS (UTM, ...) gets a CONSERVATIVE densified-edge
+    # 4326 bbox per chunk (a superset of the images whose footprint meets
+    # the chunk, as in the reference's transformed query rect)
+    srs = v.srs
 
-        out = out.mapInPandas(to4326, schema=out.schema)
-    return out
+    def to4326(batches):
+        for pdf in batches:
+            cols = ("ch_left", "ch_right", "ch_bottom", "ch_top")
+            rects = [_srs.bbox_to_wgs84(*e, srs)
+                     for e in zip(*(pdf[c].to_numpy() for c in cols))]
+            yield pdf.assign(**{c: [r[k] for r in rects] for k, c in enumerate(cols)})
+
+    return out.mapInPandas(to4326, schema=out.schema)
 
 
 def _time_at(it, v):
@@ -180,11 +183,13 @@ def st_join(
     # ownership dedup on the cell of the intersection's bottom-left corner
     # (that cell is in both covers by each index's superset property, so
     # exactly one joined row survives: no distinct() shuffle) — and differ
-    # only in the cover function and the owner-cell expression:
-    #   's2'    Hilbert-curve cells (functions/s2.py, Arrow-batch cover;
-    #           range-partitionable key, s2.range_partition_by_cell)
+    # only in the cover function and the point-cell function of the owner
+    # corner:
+    #   's2'    Hilbert-curve cells (functions/s2.py; both are numpy batch
+    #           UDFs; range-partitionable key, s2.range_partition_by_cell)
     #   'hex'   aperture-7 hexes on the equal-area plane
-    #           (functions/hexgrid.py; uniform-area join-key populations)
+    #           (functions/hexgrid.py; numpy batch UDFs; uniform-area
+    #           join-key populations)
     #   'cells' the flat lon/lat grid (functions/cells.py, native exprs)
     deg = max(grid.view.dx * grid.view.chunk_nx, grid.view.dy * grid.view.chunk_ny)
     if method == "s2":
@@ -193,37 +198,20 @@ def st_join(
         level = s2m.level_for_deg(deg)
         cov = s2m.cover_cells_udf(level)
 
-        def owner(joined):
-            # numpy batch leaf + native parent bit-mask: the owner id is a
-            # join-internal key, and the native s2_cell_id fold evaluates
-            # interpreted (~1 ms/joined row, codegen blocked by its
-            # higher-order binding); np_point_leaf is the py_cell_id-pinned
-            # batch twin the cover side already uses
-            leaf = s2m.point_leaf_udf()(
-                F.greatest(F.col("left"), F.col("ch_left")),
-                F.greatest(F.col("bottom"), F.col("ch_bottom")))
-            return joined, s2m.s2_parent(leaf, level), ()
+        def cell_of(x, y):
+            return s2m.s2_cell_id(x, y, level)
     elif method == "hex":
         from ..functions import hexgrid as hgm
 
         res = hgm.res_for_deg(deg)
         cov = hgm.cover_cells_udf(res)
-
-        def owner(joined):
-            owned = hgm.hex_cells(
-                joined.withColumn("_own_x", F.greatest(F.col("left"), F.col("ch_left")))
-                .withColumn("_own_y", F.greatest(F.col("bottom"), F.col("ch_bottom"))),
-                "_own_x", "_own_y", res, cell_col="_own_cell", parent_col=None,
-            )
-            return owned, F.col("_own_cell"), ("_own_x", "_own_y", "_own_cell")
+        cell_of = hgm.encode_udf(res)
     elif method == "cells":
         def cov(lo, hi, blo, bhi):
             return C.cover_cells(lo, hi, blo, bhi, deg)
 
-        def owner(joined):
-            return joined, C.cell_id(
-                F.greatest(F.col("left"), F.col("ch_left")),
-                F.greatest(F.col("bottom"), F.col("ch_bottom")), deg), ()
+        def cell_of(x, y):
+            return C.cell_id(x, y, deg)
     else:
         raise ValueError(f"unknown method {method!r}")
 
@@ -239,9 +227,10 @@ def st_join(
         "cell",
         F.explode(cov(F.col("ch_left"), F.col("ch_right"), F.col("ch_bottom"), F.col("ch_top"))),
     )
-    joined, owner_col, tmp_cols = owner(img_c.join(ch_c, "cell"))
-    out = joined.filter(_residual_predicate(joined, joined) & (F.col("cell") == owner_col))
-    return out.drop("cell", *tmp_cols)
+    joined = img_c.join(ch_c, "cell")
+    owner = cell_of(F.greatest(F.col("left"), F.col("ch_left")),
+                    F.greatest(F.col("bottom"), F.col("ch_bottom")))
+    return joined.filter(_residual_predicate(joined, joined) & (F.col("cell") == owner)).drop("cell")
 
 
 def assignment(images: DataFrame, grid: ChunkGrid, **kw) -> DataFrame:

@@ -52,7 +52,6 @@ from collections.abc import Callable
 from dataclasses import dataclass
 
 import numpy as np
-from pyspark.sql import Column, functions as F
 
 R = 6378137.0  # WGS84 spherical radius used by EPSG:3857
 
@@ -2028,13 +2027,3 @@ def bbox_to_wgs84(left, right, bottom, top, srs: str):
         float(lat.min() - pad_lat),
         float(lat.max() + pad_lat),
     )
-
-
-# -- Spark column expressions (join-side, JVM) -------------------------------
-
-def col_x_to_lon(x: Column) -> Column:
-    return F.degrees(x / F.lit(R))
-
-
-def col_y_to_lat(y: Column) -> Column:
-    return F.degrees(F.atan(F.sinh(y / F.lit(R))))

@@ -278,3 +278,26 @@ def test_invalid_res_rejected():
         hg.res_params(hg.MAX_RES + 1)
     with pytest.raises(ValueError):
         hg.hex_parent_np(hg.pack(0, np.array([1]), np.array([2])))
+
+
+def test_null_and_nonfinite_coordinates_give_null(spark):
+    """A NULL or non-finite coordinate has no cell: hex_cells gives NULL
+    cell and parent, and a rect with a NULL or NaN edge covers nothing
+    (no numpy warning)."""
+    import warnings
+
+    df = spark.createDataFrame(
+        [(0, None, 20.0), (1, float("nan"), 20.0), (2, 12.0, float("-inf")),
+         (3, 12.0, 13.0)], "k int, lon double, lat double")
+    out = hg.hex_cells(df, "lon", "lat", RES).orderBy("k").collect()
+    cell = int(hg.hex_encode_np(np.array([12.0]), np.array([13.0]), RES)[0])
+    assert [(r.hex_cell, r.hex_parent) for r in out] == [(None, None)] * 3 + [
+        (cell, int(hg.hex_parent_np(np.array([cell]))[0]))]
+    only = hg.hex_cells(df, "lon", "lat", RES, parent_col=None).orderBy("k")
+    assert [r.hex_cell for r in only.collect()] == [None] * 3 + [cell]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        cov = hg.cover_cells_np(np.array([np.nan, 0.0, 0.0]), np.array([1.0, 1.0, 1.0]),
+                                np.array([0.0, np.nan, 0.0]), np.array([1.0, 1.0, 1.0]), RES)
+    one = np.array([0.0]), np.array([1.0]), np.array([0.0]), np.array([1.0])
+    assert cov == [[], [], hg.cover_cells_np(*one, RES)[0]] and cov[2]

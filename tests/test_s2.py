@@ -232,3 +232,28 @@ def test_stjoin_s2_matches_broadcast(spark):
     a = {(r.image_id, r.chunk_id) for r in assignment(img, grid, method="broadcast").collect()}
     b = {(r.image_id, r.chunk_id) for r in assignment(img, grid, method="s2").collect()}
     assert a == b and len(a) > 0
+
+
+def test_null_and_nonfinite_coordinates_give_null(spark):
+    """A NULL or non-finite coordinate has no cell: s2_cell_id is NULL, and
+    a rect with a NULL or NaN edge covers nothing (no numpy warning)."""
+    import warnings
+
+    pts = spark.createDataFrame(
+        [(0, None, 20.0), (1, float("nan"), 20.0), (2, 12.0, float("inf")),
+         (3, 12.0, 13.0)], "k int, lon double, lat double")
+    got = pts.select("k", s2.s2_cell_id(F.col("lon"), F.col("lat"), 11).alias("c"))
+    assert [r.c for r in got.orderBy("k").collect()] == [
+        None, None, None, s2.py_cell_id(12.0, 13.0, 11)]
+    rects = spark.createDataFrame(
+        [(0, None, 1.0, 0.0, 1.0), (1, float("nan"), 1.0, 0.0, 1.0),
+         (2, 0.0, 1.0, 0.0, float("nan")), (3, 0.0, 1.0, 0.0, 1.0)],
+        "k int, l double, r double, b double, t double")
+    cov = s2.cover_cells_udf(5)(F.col("l"), F.col("r"), F.col("b"), F.col("t"))
+    got = rects.select("k", cov.alias("c")).orderBy("k").collect()
+    assert [r.c for r in got] == [[], [], [], s2.py_cover_rect(0.0, 1.0, 0.0, 1.0, 5)]
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        ok, (lon, lat) = s2.finite_lanes([float("nan"), 12.0], [20.0, 13.0])
+        leaf = s2.np_point_leaf(lon, lat)
+    assert ok.tolist() == [False, True] and leaf[1] == s2.py_cell_id(12.0, 13.0)

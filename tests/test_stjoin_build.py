@@ -36,16 +36,54 @@ def pdf():
 
 
 def test_stjoin_exact_both_methods(spark, images, pdf):
+    """Every join method equals the oracle. The input adds footprints with
+    a NULL edge, a NaN left edge or only NaN edges: they join no chunk under
+    any method (the s2/hex covers of such a rect are empty)."""
+    import pyspark.sql.functions as F
+
     v = make_view(left=-55, right=55, bottom=-45, top=45, nx=440, ny=360,
                   chunk_size=(4, 120, 110))
     g = ChunkGrid(v)
     want = oracle_np.st_assignment(pdf, g)
-    for method in ("broadcast", "cells"):
+    nan = F.lit(float("nan"))
+    bad = {
+        "null_left": {"left": F.lit(None).cast("double")},
+        "null_top": {"top": F.lit(None).cast("double")},
+        "nan_left": {"left": nan},
+        "all_nan": {"left": nan, "right": nan, "bottom": nan, "top": nan},
+    }
+    imgs = images
+    for k, cols in bad.items():
+        imgs = imgs.unionByName(images.limit(1).withColumns({"image_id": F.lit(k), **cols}))
+    for method in ("broadcast", "cells", "s2", "hex"):
         got = sorted(
             (r["image_id"], r["chunk_id"])
-            for r in stjoin.assignment(images, g, method=method).collect()
+            for r in stjoin.assignment(imgs, g, method=method).collect()
         )
         assert got == want, f"method={method}"
+
+
+@pytest.mark.parametrize("srs", ["EPSG:6933", "EPSG:4087", "EPSG:3857"])
+def test_chunks_df_separable_rects(spark, srs):
+    """A separable view's 4326 chunk rectangles come from its per-axis
+    edges: bit-equal to the per-chunk bbox_to_wgs84 (and, for 3857, to
+    srs.x_to_lon / srs.y_to_lat of the chunk edges)."""
+    from gdalcubes_cpp_spark import srs as S
+
+    (l, r), (b, t) = S.from_wgs84(np.array([-20.0, 20.0]), np.array([-10.0, 15.0]), srs)
+    v = CubeView.create(srs=srs, left=float(l), right=float(r), bottom=float(b),
+                        top=float(t), nx=50, ny=37, t0="2020-01-01", nt=3,
+                        dt="P1M", chunk_size=(2, 16, 16))
+    g = ChunkGrid(v)
+    got = stjoin.chunks_df(spark, g).orderBy("chunk_id").toPandas()
+    assert len(got) == g.count
+    for row in got.itertuples():
+        bd = g.chunk_bounds(row.chunk_id)
+        want = S.bbox_to_wgs84(bd["left"], bd["right"], bd["bottom"], bd["top"], srs)
+        if srs == "EPSG:3857":
+            want = (S.x_to_lon(bd["left"]), S.x_to_lon(bd["right"]),
+                    S.y_to_lat(bd["bottom"]), S.y_to_lat(bd["top"]))
+        assert (row.ch_left, row.ch_right, row.ch_bottom, row.ch_top) == want
 
 
 def test_stjoin_leap_day_yearly_axis(spark):
