@@ -192,9 +192,8 @@ def encode_udf(res: int, parent: bool = False):
     def cell_parent(lon: pd.Series, lat: pd.Series) -> pd.DataFrame:
         ok, (x, y) = finite_lanes(lon, lat)
         cells = hex_encode_np(x, y, res)
-        parents = hex_parent_np(cells) if len(cells) else cells
         return pd.DataFrame({"cell": nullable_ids(cells, ok),
-                             "parent": nullable_ids(parents, ok)})
+                             "parent": nullable_ids(hex_parent_np(cells), ok)})
 
     return cell_parent if parent else cell
 
@@ -305,17 +304,22 @@ def _center_np(q, r, res: int):
 
 
 def hex_center_np(cell):
-    """Packed cell -> (lon, lat) of the hex center."""
+    """Packed cell -> (lon, lat) of the hex center; empty arrays for none."""
     from ..srs import cea_inverse
 
     res, q, r = unpack(cell)
-    res = int(res[0]) if getattr(res, "ndim", 0) else int(res)
+    if res.size == 0:
+        return np.empty(0), np.empty(0)
+    res = int(res[0]) if res.ndim else int(res)
     return cea_inverse(*_center_np(q, r, res), _P6933)
 
 
 def hex_parent_np(cell):
+    """Packed cell -> its aperture-7 parent; an empty array for none."""
     res, q, r = unpack(cell)
-    res = int(res[0]) if getattr(res, "ndim", 0) else int(res)
+    if res.size == 0:
+        return res
+    res = int(res[0]) if res.ndim else int(res)
     if res == 0:
         raise ValueError("res-0 cells have no parent")
     pq, pr = _plane_np(*_center_np(q, r, res), res - 1)

@@ -1,5 +1,6 @@
-"""Chunk-grid arithmetic: pure-Python mirror of src/cube.h:472-694, plus the
-same math as Spark Column expressions so Catalyst can prune/partition on it.
+"""Chunk-grid arithmetic: the one module that knows the chunk layout and the
+slot <-> time rule — pure Python mirroring src/cube.h:472-694, plus the same
+math as Spark SQL text.
 
 Conventions (src/view.h:632-655, src/cube.h:652-654,676-694):
 - cube coords (it, iy, ix); (0,0,0) = earliest time, upper-left pixel;
@@ -7,16 +8,27 @@ Conventions (src/view.h:632-655, src/cube.h:652-654,676-694):
 - linear chunk id = ct * ncy * ncx + cy * ncx + cx (x-fastest);
 - chunk limits clamp at the cube boundary (src/cube.h:495-579);
 - bounds_from_chunk flips y (src/cube.h:676-694).
+
+The Python forms are the reference for tests, the numpy oracle and driver
+code. The ``*_sql`` forms are SQL text over named columns for
+``selectExpr``/``F.expr``: one py4j call per projection, not one per Column
+operator. Timestamps are ``TIMESTAMP '...'`` literals, read in the session
+time zone (``F.lit`` of a naive datetime is read in the driver's own zone).
 """
 
 from __future__ import annotations
 
 import math
-from dataclasses import dataclass
+from dataclasses import dataclass, replace
 
-from pyspark.sql import Column, functions as F
+import numpy as np
 
-from .view import CubeView, add_duration
+from .srs import _flit
+from .view import CubeView, Duration, add_duration
+
+
+def _ts(t) -> str:
+    return f"TIMESTAMP '{t.isoformat(sep=' ')}'"
 
 
 @dataclass(frozen=True)
@@ -39,6 +51,12 @@ class ChunkGrid:
     @property
     def count(self) -> int:
         return self.ncx * self.ncy * self.nct
+
+    @property
+    def chunk_extent(self) -> float:
+        """The larger of a full chunk's two map extents (sizes cell covers)."""
+        v = self.view
+        return max(v.dx * v.chunk_nx, v.dy * v.chunk_ny)
 
     # -- id <-> coords (src/cube.h:628-654) -------------------------------------
     def chunk_id(self, ct: int, cy: int, cx: int) -> int:
@@ -72,6 +90,12 @@ class ChunkGrid:
         (t0, t1), (y0, y1), (x0, x1) = self.chunk_limits(cid)
         return (t1 - t0, y1 - y0, x1 - x0)
 
+    def _t_end(self, it1: int):
+        """t_end of a chunk whose slots end at ``it1``: the last label on a
+        labeled axis, else the start of the slot after the last."""
+        v = self.view
+        return v.time_labels[it1 - 1] if v.labeled else add_duration(v.t0, v.dt, it1)
+
     def chunk_bounds(self, cid: int) -> dict:
         """Map-space + time bounds of a chunk (src/cube.h:676-694; y flipped)."""
         v = self.view
@@ -82,54 +106,143 @@ class ChunkGrid:
             "top": v.top - y0 * v.dy,       # row 0 is the TOP of the cube
             "bottom": v.top - y1 * v.dy,
             "t_start": v.datetime_at(t0),
-            "t_end": (v.time_labels[t1 - 1] if v.labeled else add_duration(v.t0, v.dt, t1)),
+            "t_end": self._t_end(t1),
             "it0": t0, "it1": t1, "iy0": y0, "iy1": y1, "ix0": x0, "ix1": x1,
         }
 
     def chunk_ids(self):
         return range(self.count)
 
-    # -- Spark column expressions (same math, JVM-side / codegen'd) --------------
-
-    def ix_expr(self, x: Column) -> Column:
+    def axis_edges(self) -> tuple:
+        """(xe, ye): the ncx+1 column and ncy+1 row chunk edges in map
+        coordinates, clamped at the cube boundary (chunk_bounds per axis)."""
         v = self.view
-        return F.floor((x - F.lit(v.left)) / F.lit(v.dx)).cast("int")
+        xe = v.left + np.minimum(np.arange(self.ncx + 1) * v.chunk_nx, v.nx) * v.dx
+        ye = v.top - np.minimum(np.arange(self.ncy + 1) * v.chunk_ny, v.ny) * v.dy
+        return xe, ye
 
-    def iy_expr(self, y: Column) -> Column:
+    def slot_bounds(self) -> tuple:
+        """(lo, hi) datetime64[us] arrays over the view's slots: the
+        [t_start, t_end] of each slot's chunk (chunk_bounds; both ends
+        inclusive as in find_range_st), open past year 9999."""
         v = self.view
-        return F.floor((F.lit(v.top) - y) / F.lit(v.dy)).cast("int")
+        lo = np.empty(v.nt, "datetime64[us]")
+        hi = np.empty(v.nt, "datetime64[us]")
+        for ct in range(self.nct):
+            (it0, it1), _, _ = self.chunk_limits(self.chunk_id(ct, 0, 0))
+            lo[it0:it1] = v.datetime_at(it0)
+            try:
+                hi[it0:it1] = self._t_end(it1)
+            except (OverflowError, ValueError):
+                hi[it0:it1] = np.datetime64("9999-12-31T23:59:59.999999")
+        return lo, hi
 
-    def it_expr(self, ts: Column) -> Column:
-        """Time coordinate of a timestamp column. On a labeled axis the
+    def chunk_axis_view(self, time: bool, y: bool, x: bool) -> CubeView:
+        """The view whose collapsed axes (``time``/``y``/``x`` True) hold one
+        cell per chunk: a chunk's slots per time step (each chunk's first
+        label on a labeled axis), chunk rows or columns in space
+        (src/stream.h:89-130)."""
+        v = nv = self.view
+        if time:
+            dt = v.dt if v.labeled else Duration(v.dt.n * v.chunk_nt, v.dt.unit)
+            nv = nv.with_time(v.t0, self.nct, dt, time_labels=v.time_labels[::v.chunk_nt])
+            nv = replace(nv, chunk_nt=1)
+        if y:
+            nv = replace(nv, ny=self.ncy, chunk_ny=1)
+        if x:
+            nv = replace(nv, nx=self.ncx, chunk_nx=1)
+        return nv
+
+    # -- Spark SQL text (the same math, JVM-side) --------------------------------
+
+    def coords_sql(self, cid: str) -> tuple:
+        """(ct, cy, cx) of the chunk id column ``cid`` (chunk_coords)."""
+        n = self.ncy * self.ncx
+        return (f"({cid} DIV {n})", f"({cid} % {n} DIV {self.ncx})", f"({cid} % {self.ncx})")
+
+    def limits_sql(self, cid: str) -> dict:
+        """it0/it1/iy0/iy1/ix0/ix1 INT of the chunk id column ``cid``
+        (chunk_limits)."""
+        v = self.view
+        out = {}
+        for c, a, size, n in zip(self.coords_sql(cid), "tyx",
+                                 (v.chunk_nt, v.chunk_ny, v.chunk_nx), (v.nt, v.ny, v.nx)):
+            lo = f"CAST({c} * {size} AS INT)"
+            out[f"i{a}0"] = lo
+            out[f"i{a}1"] = f"least({lo} + {size}, {n})"
+        return out
+
+    def bounds_sql(self, cid: str) -> dict:
+        """chunk_bounds of the chunk id column ``cid``: the map bounds
+        (DOUBLE), t_start/t_end (TIMESTAMP) and the cell limits (INT)."""
+        v = self.view
+        lim = self.limits_sql(cid)
+        left, top, dx, dy = _flit(v.left), _flit(v.top), _flit(v.dx), _flit(v.dy)
+        return {
+            "left": f"{left} + {lim['ix0']} * {dx}",
+            "right": f"{left} + {lim['ix1']} * {dx}",
+            "top": f"{top} - {lim['iy0']} * {dy}",
+            "bottom": f"{top} - {lim['iy1']} * {dy}",
+            "t_start": self.time_at_sql(lim["it0"]),
+            "t_end": self.time_at_sql(lim["it1"] + (" - 1" if v.labeled else "")),
+            **lim,
+        }
+
+    def chunk_of_sql(self, it: str, iy: str, ix: str) -> str:
+        """BIGINT chunk id of the cell columns (chunk_of_cell)."""
+        ct, cy, cx = self.chunk_key_sql(it, iy, ix)
+        return (f"CAST({ct} AS BIGINT) * {self.ncy * self.ncx}"
+                f" + CAST({cy} AS BIGINT) * {self.ncx} + {cx}")
+
+    def chunk_key_sql(self, it: str, iy: str, ix: str) -> tuple:
+        """INT (ct, cy, cx): the chunk coordinates of the cell columns."""
+        v = self.view
+        return tuple(f"CAST({c} DIV {n} AS INT)"
+                     for c, n in ((it, v.chunk_nt), (iy, v.chunk_ny), (ix, v.chunk_nx)))
+
+    def time_at_sql(self, it: str) -> str:
+        """TIMESTAMP start of slot ``it`` (CubeView.datetime_at). Years are
+        12-month steps: timestampadd clamps the day-of-month as
+        view.add_duration does (2020-02-29 + P1Y -> 2021-02-28)."""
+        v = self.view
+        if v.labeled:
+            return f"element_at({self._labels_sql()}, CAST({it} + 1 AS INT))"
+        t0 = _ts(v.t0)
+        if v.dt.unit in ("Y", "M"):
+            months = v.dt.n * (12 if v.dt.unit == "Y" else 1)
+            return f"timestampadd(MONTH, CAST(({it}) * {months} AS INT), {t0})"
+        return f"timestampadd(SECOND, CAST(({it}) * {v.dt.seconds} AS BIGINT), {t0})"
+
+    def slot_sql(self, ts: str) -> str:
+        """INT slot of the timestamp column ``ts``: on a labeled axis the
         exact label match, else -1 (CubeView.slot_index_of)."""
         v = self.view
         if v.labeled:
-            labels = ", ".join(f"TIMESTAMP '{t.isoformat(sep=' ')}'" for t in v.time_labels)
-            return (F.array_position(F.expr(f"array({labels})"), ts) - 1).cast("int")
+            return f"CAST(array_position({self._labels_sql()}, {ts}) - 1 AS INT)"
         dt = v.dt
         if dt.unit == "Y":
-            return F.floor((F.year(ts) - F.lit(v.t0.year)) / F.lit(dt.n)).cast("int")
+            return f"CAST(floor((year({ts}) - {v.t0.year}) / {dt.n}) AS INT)"
         if dt.unit == "M":
             m0 = v.t0.year * 12 + v.t0.month - 1
-            m = F.year(ts) * 12 + F.month(ts) - 1
-            return F.floor((m - F.lit(m0)) / F.lit(dt.n)).cast("int")
-        secs = F.unix_timestamp(ts) - F.lit(int(self._t0_unix()))
-        return F.floor(secs / F.lit(dt.seconds)).cast("int")
+            return f"CAST(floor((year({ts}) * 12 + month({ts}) - 1 - {m0}) / {dt.n}) AS INT)"
+        return (f"CAST(floor((unix_timestamp({ts}) - unix_timestamp({_ts(v.t0)}))"
+                f" / {dt.seconds}) AS INT)")
 
-    def _t0_unix(self) -> float:
-        import calendar
+    def _labels_sql(self) -> str:
+        return f"array({', '.join(_ts(t) for t in self.view.time_labels)})"
 
-        return calendar.timegm(self.view.t0.timetuple())
-
-    def chunk_id_expr(self, it: Column, iy: Column, ix: Column) -> Column:
+    def ix_sql(self, x: str) -> str:
+        """INT column of the map x column (CubeView.ix_of)."""
         v = self.view
-        ct = F.floor(it / F.lit(v.chunk_nt))
-        cy = F.floor(iy / F.lit(v.chunk_ny))
-        cx = F.floor(ix / F.lit(v.chunk_nx))
-        return (ct * F.lit(self.ncy * self.ncx) + cy * F.lit(self.ncx) + cx).cast("long")
+        return f"CAST(floor(({x} - {_flit(v.left)}) / {_flit(v.dx)}) AS INT)"
 
-    def in_bounds_expr(self, it: Column, iy: Column, ix: Column) -> Column:
+    def iy_sql(self, y: str) -> str:
+        """INT row of the map y column (CubeView.iy_of; rows count down)."""
         v = self.view
-        return (
-            (it >= 0) & (it < v.nt) & (iy >= 0) & (iy < v.ny) & (ix >= 0) & (ix < v.nx)
-        )
+        return f"CAST(floor(({_flit(v.top)} - {y}) / {_flit(v.dy)}) AS INT)"
+
+    def in_bounds_sql(self, iy: str, ix: str, it: str | None) -> str:
+        """The cell columns lie inside the cube (space only if ``it`` is None)."""
+        v = self.view
+        pairs = [(iy, v.ny), (ix, v.nx)] + ([(it, v.nt)] if it else [])
+        return " AND ".join(f"{c} >= 0 AND {c} < {n}" for c, n in pairs)

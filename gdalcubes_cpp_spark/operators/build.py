@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, functions as F
 from .. import codecs
 from ..grid import ChunkGrid
 from ..partition import spread
+from ..srs import _flit
 from ..view import CubeView, add_duration
 from .stjoin import st_join
 
@@ -582,25 +583,6 @@ def _view_bbox(view: CubeView, srs_n: str, a_l, a_r, a_b, a_t):
             py.min(axis=0) - pad_y, py.max(axis=0) + pad_y)
 
 
-def _slot_bounds(view: CubeView) -> tuple:
-    """(lo, hi) datetime64[us] arrays over the view's slots: the
-    [t_start, t_end] of the chunk that holds each slot (grid.chunk_bounds,
-    both ends inclusive as in find_range_st)."""
-    grid = ChunkGrid(view)
-    lo = np.empty(view.nt, "datetime64[us]")
-    hi = np.empty(view.nt, "datetime64[us]")
-    for ct in range(grid.nct):
-        it0 = ct * view.chunk_nt
-        it1 = min(it0 + view.chunk_nt, view.nt)
-        lo[it0:it1] = view.datetime_at(it0)
-        try:
-            hi[it0:it1] = (view.time_labels[it1 - 1] if view.labeled
-                           else add_duration(view.t0, view.dt, it1))
-        except (OverflowError, ValueError):  # past year 9999: open end
-            hi[it0:it1] = np.datetime64("9999-12-31T23:59:59.999999")
-    return lo, hi
-
-
 def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
                decode_fn, value_fn, mask, nb: int, slot_bounds: tuple):
     """One batch of image rows -> the view cells they contribute.
@@ -609,7 +591,7 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     row's time slot, or -1 where the image lands in no slot or a FileMask
     mask_value masks it. An image lands in slot ``it`` when its time maps
     to ``it`` and also lies in the [t_start, t_end] of its chunk
-    (``slot_bounds``, from _slot_bounds): the reference only reads the
+    (``slot_bounds``, from grid.slot_bounds): the reference only reads the
     images find_range_st returns for the chunk. The rest is flat per cell,
     image by image in pdf order and row-major within an image: the pdf
     row, iy/ix and V (nb, n) float64. Cells NaN in every band are dropped.
@@ -839,7 +821,7 @@ def scan_cells(
         cols += ["bytes", "fmt"]
     if isinstance(mask, FileMask):
         cols += [c for c in ("m_bytes", "m_fmt", "m_val") if c in images.columns]
-    slot_bounds = _slot_bounds(view)
+    slot_bounds = ChunkGrid(view).slot_bounds()
 
     def scan(batches):
         from .. import srs as _srs
@@ -866,15 +848,11 @@ def scan_cells(
     return spread(src).mapInPandas(scan, schema=schema)
 
 
-def _mask_hits(mask: BandMask, v) -> F.Column:
-    """BandMask.test of one value per row as a Column; NULL/NaN never masks."""
-    if mask.values is not None:
-        m = v.isin([float(x) for x in mask.values])
-    else:
-        m = (v >= mask.vmin) & (v <= mask.vmax)
-    if mask.invert:
-        m = ~m
-    return F.coalesce(m & ~F.isnan(v), F.lit(False))
+def _mask_hits(mask: BandMask, v: str) -> str:
+    """BandMask.test of one value per row as SQL; NULL/NaN never masks."""
+    m = (f"{v} IN ({', '.join(map(_flit, mask.values))})" if mask.values is not None
+         else f"{v} BETWEEN {_flit(mask.vmin)} AND {_flit(mask.vmax)}")
+    return f"coalesce({'NOT ' if mask.invert else ''}({m}) AND NOT isnan({v}), false)"
 
 
 def _touched(images: DataFrame, view: CubeView, mask, need_id: bool) -> DataFrame:
@@ -883,32 +861,29 @@ def _touched(images: DataFrame, view: CubeView, mask, need_id: bool) -> DataFram
     aggregations act on (count_images adds 1 per image, count_values and
     AGG_NONE reset the slice, src/image_collection_cube.cpp:179-224,
     294-306). st_join gives the (image, chunk) pairs
-    (find_range_st); grid.it_expr gives the image's slot, which must be one
+    (find_range_st); grid.slot_sql gives the image's slot, which must be one
     of the chunk's slots. An image a FileMask mask_value masks lands in no
     slice, as in _cell_step. Footprints and times only: no decode."""
     grid = ChunkGrid(view)
     window = _view_window(view)
     pairs = st_join(images if window is None else images.where(window), grid)
-    it = grid.it_expr(F.col("ts"))
-    keep = (it >= F.col("ch_it0")) & (
-        it < F.least(F.col("ch_it0") + view.chunk_nt, F.lit(view.nt)))
+    it = grid.slot_sql("ts")
+    keep = f"{it} >= ch_it0 AND {it} < ch_it1"
     if isinstance(mask, FileMask) and "m_val" in images.columns:
-        keep &= ~_mask_hits(mask, F.col("m_val"))
-    return pairs.where(keep).select(
-        "chunk_id", it.alias("it"), *(["image_id"] if need_id else []))
+        keep += f" AND NOT {_mask_hits(mask, 'm_val')}"
+    return pairs.where(keep).selectExpr(
+        "chunk_id", f"{it} AS it", *(["image_id"] if need_id else []))
 
 
 def _slice_cells(slices: DataFrame, view: CubeView, *exprs: str) -> DataFrame:
     """(it, iy, ix, *exprs) rows, one per cell of each (chunk_id, it) slice
-    row: iy, ix run over the chunk's cell ranges, clamped at the cube
-    boundary; ``exprs`` are SQL over the slice row's columns."""
-    grid = ChunkGrid(view)
-    iy0 = f"CAST(chunk_id % {grid.ncy * grid.ncx} DIV {grid.ncx} AS INT) * {view.chunk_ny}"
-    ix0 = f"CAST(chunk_id % {grid.ncx} AS INT) * {view.chunk_nx}"
+    row: iy, ix run over the chunk's cell ranges (grid.limits_sql, clamped
+    at the cube boundary); ``exprs`` are SQL over the slice row's columns."""
+    lim = ChunkGrid(view).limits_sql("chunk_id")
     return (
         slices
-        .selectExpr("*", f"explode(sequence({iy0}, least({iy0} + {view.chunk_ny}, {view.ny}) - 1)) AS iy")
-        .selectExpr("it", "iy", f"explode(sequence({ix0}, least({ix0} + {view.chunk_nx}, {view.nx}) - 1)) AS ix",
+        .selectExpr("*", f"explode(sequence({lim['iy0']}, {lim['iy1']} - 1)) AS iy")
+        .selectExpr("it", "iy", f"explode(sequence({lim['ix0']}, {lim['ix1']} - 1)) AS ix",
                     *exprs)
     )
 
@@ -968,11 +943,10 @@ def build_cells_long(
         return cells.join(counts, ["it", "iy", "ix"], "left").selectExpr(
             "it", "iy", "ix", *[f"CAST(coalesce(`n_{b}`, 0) AS DOUBLE) AS `{b}`" for b in bands])
     if agg == "none":
-        grid = ChunkGrid(view)
         owners = _touched(images, view, mask, True).groupBy("chunk_id", "it").agg(
             F.max(_id_order()).getField("s").alias("image_id"))
-        rows = contrib.withColumn(
-            "chunk_id", grid.chunk_id_expr(F.col("it"), F.col("iy"), F.col("ix")))
+        rows = contrib.selectExpr(
+            "*", f"{ChunkGrid(view).chunk_of_sql('it', 'iy', 'ix')} AS chunk_id")
         return rows.join(owners, ["chunk_id", "it", "image_id"]).select(
             "it", "iy", "ix", *[F.col(f"`v_{b}`").alias(b) for b in bands])
     aggs = []
@@ -1022,10 +996,8 @@ def build_cube(
         images = join_mask_table(images, mask_table)
     elif mask_table is not None:
         raise ValueError("mask_table is only meaningful with a FileMask")
-    cells = build_cells_long(images, view, bands, decode_fn, mask, value_fn)
     # the Cube convention is NULL-as-nodata (NaN semantics of the reference
-    # map onto SQL NULL aggregation); the scan's Arrow hand-off already
-    # turns NaN into NULL, and no cell leaves here as NaN
-    cells = cells.selectExpr("it", "iy", "ix", *[
-        f"CASE WHEN isnan(`{b}`) THEN NULL ELSE `{b}` END AS `{b}`" for b in bands])
+    # map onto SQL NULL aggregation): the scan's Arrow hand-off turns NaN
+    # into NULL, so no cell leaves build_cells_long as NaN
+    cells = build_cells_long(images, view, bands, decode_fn, mask, value_fn)
     return Cube(cells, view, tuple(bands))

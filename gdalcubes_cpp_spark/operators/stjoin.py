@@ -11,26 +11,27 @@ src/image_collection_cube.cpp:315-340):
 - order:   (image_id, descriptor) — load-bearing for first/last aggregation
            (src/image_collection_cube.cpp:327). We keep image_id as the sort
            key inside downstream grouped kernels.
+Only footprints with four finite edges join (FINITE, one filter per image
+row under every method). Chunk bounds, ids and slots are grid.py's SQL.
 
 Four physical methods. method='auto' picks only ``broadcast`` or ``cells``,
 by chunk count: ``broadcast`` up to BROADCAST_MAX_CHUNKS (5M) chunks,
 ``cells`` above it. ``s2`` and ``hex`` are chosen explicitly.
 
-* ``broadcast``: the chunk grid is generated from the view (pure arithmetic
-  on ``spark.range``) and broadcast; images stream past it with the residual
+* ``broadcast``: the chunk grid (chunks_df, one projection over
+  ``spark.range``) is broadcast; images stream past it with the residual
   predicate applied directly. No shuffle of the image table at all, however
   few partitions its scan plans: the probe is a JVM predicate over the
   broadcast grid, cheap per image — the right choice whenever the chunk
   grid fits in memory (≲ ~5M chunks).
 
 * ``cells``: both sides explode to covering spatial cells one chunk wide
-  (the larger of the chunk's two extents; functions/cells.py) and
-  equi-join on cell id — the scale path
-  for planet-sized chunk grids. Duplicate (image, chunk) pairs from multi-
-  cell overlaps are eliminated WITHOUT a distinct-shuffle by the standard
+  (grid.chunk_extent; functions/cells.py) and equi-join on cell id — the
+  scale path for planet-sized chunk grids. Duplicate (image, chunk) pairs
+  from multi-cell overlaps are eliminated WITHOUT a distinct-shuffle by the
   bottom-left-corner ownership trick: a pair is emitted only by the cell
   containing the intersection's bottom-left corner. Hot cells (skewed image
-  density) are handled by AQE skew-join splitting + optional image-side salt.
+  density) are handled by AQE skew-join splitting.
 
 * ``s2`` and ``hex``: the ``cells`` shape with a different cover function —
   S2 Hilbert-curve cells (functions/s2.py) or aperture-7 hexes on the
@@ -50,75 +51,49 @@ from ..srs import _flit
 
 CHUNK_COLS = [
     "chunk_id", "ch_left", "ch_right", "ch_bottom", "ch_top",
-    "ch_t_start", "ch_t_end", "ch_it0",
+    "ch_t_start", "ch_t_end", "ch_it0", "ch_it1",
 ]
 # method='auto' broadcasts chunk grids up to this many chunks
 BROADCAST_MAX_CHUNKS = 5_000_000
 
+# find_range_st over an image row and a chunk row
+RESIDUAL = ("NOT (`right` < ch_left OR `left` > ch_right"
+            " OR `bottom` > ch_top OR `top` < ch_bottom)"
+            " AND ts >= ch_t_start AND ts <= ch_t_end")
+# x - x is 0 for a finite x, NaN for NaN or an infinity and NULL for NULL:
+# only footprints with four finite edges join (Spark orders NaN above every
+# double, so RESIDUAL alone would let a NaN right or top edge through)
+FINITE = " AND ".join(f"`{c}` - `{c}` = 0" for c in ("left", "right", "bottom", "top"))
+
 
 def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
-    """Generate the chunk grid as a DataFrame (bounds_from_chunk as columns).
-
-    JVM arithmetic from ``spark.range(n_chunks)`` — never materialized on
-    the driver (which computes at most the ncx+1 + ncy+1 axis edges), so a
-    billion-chunk grid is fine.
-    """
+    """The chunk grid as CHUNK_COLS rows: one projection of grid.bounds_sql
+    over ``spark.range(n_chunks)``, never materialized on the driver (which
+    computes at most the ncx+1 + ncy+1 axis edges), so a billion-chunk grid
+    is fine."""
     v = grid.view
-    ncx, ncy = grid.ncx, grid.ncy
-    df = spark.range(grid.count).withColumnRenamed("id", "chunk_id")
-    ct = (F.col("chunk_id") / (ncy * ncx)).cast("long")
-    rem = F.col("chunk_id") % (ncy * ncx)
-    cy = (rem / ncx).cast("long")
-    cx = rem % ncx
-    it0 = ct * v.chunk_nt
-    it1 = F.least(it0 + v.chunk_nt, F.lit(v.nt))
-    iy0 = cy * v.chunk_ny
-    iy1 = F.least(iy0 + v.chunk_ny, F.lit(v.ny))
-    ix0 = cx * v.chunk_nx
-    ix1 = F.least(ix0 + v.chunk_nx, F.lit(v.nx))
-
-    if v.labeled:
-        # labeled axis: look up slice datetimes from a literal array
-        labels = F.array(*[F.lit(t) for t in v.time_labels])
-        t_start = F.element_at(labels, (it0 + 1).cast("int"))
-        t_end = F.element_at(labels, it1.cast("int"))  # last label in chunk
-    else:
-        t_start = _time_at(it0, v)
-        t_end = _time_at(it1, v)
-
-    ch_left = F.lit(v.left) + ix0 * v.dx
-    ch_right = F.lit(v.left) + ix1 * v.dx
-    ch_bottom = F.lit(v.top) - iy1 * v.dy
-    ch_top = F.lit(v.top) - iy0 * v.dy
+    b = grid.bounds_sql("id")
     # footprints are stored in EPSG:4326 (src/image_collection.cpp:309-326);
     # a non-4326 view transforms its chunk rectangles to 4326 for the join
     # predicate, as the reference transforms the query rect
     # (src/image_collection.cpp:1326). A separable SRS maps corners to
     # corners, so the ncx+1 lon and ncy+1 lat chunk edges are transformed
     # once on the driver and looked up by chunk column and row; when they
-    # equal the view's own edges (4326) the JVM arithmetic above stands.
+    # equal the view's own edges (4326) the map bounds stand.
     separable = _srs.is_separable(v.srs)
     if separable:
-        xe = v.left + np.minimum(np.arange(ncx + 1) * v.chunk_nx, v.nx) * v.dx
-        ye = v.top - np.minimum(np.arange(ncy + 1) * v.chunk_ny, v.ny) * v.dy
+        xe, ye = grid.axis_edges()
         lon_e, lat_e = _srs.axis_to_wgs84(xe, ye, v.srs)
         if not (np.array_equal(lon_e, xe) and np.array_equal(lat_e, ye)):
-            lon_a = F.expr(f"array({', '.join(map(_flit, lon_e))})")
-            lat_a = F.expr(f"array({', '.join(map(_flit, lat_e))})")
-            ch_left = F.element_at(lon_a, (cx + 1).cast("int"))
-            ch_right = F.element_at(lon_a, (cx + 2).cast("int"))
-            ch_top = F.element_at(lat_a, (cy + 1).cast("int"))
-            ch_bottom = F.element_at(lat_a, (cy + 2).cast("int"))
-    out = df.select(
-        "chunk_id",
-        ch_left.alias("ch_left"),
-        ch_right.alias("ch_right"),
-        ch_bottom.alias("ch_bottom"),
-        ch_top.alias("ch_top"),
-        t_start.alias("ch_t_start"),
-        t_end.alias("ch_t_end"),
-        it0.cast("int").alias("ch_it0"),
-    )
+            _, cy, cx = grid.coords_sql("id")
+            lon_a = f"array({', '.join(map(_flit, lon_e))})"
+            lat_a = f"array({', '.join(map(_flit, lat_e))})"
+            b.update(left=f"element_at({lon_a}, CAST({cx} + 1 AS INT))",
+                     right=f"element_at({lon_a}, CAST({cx} + 2 AS INT))",
+                     top=f"element_at({lat_a}, CAST({cy} + 1 AS INT))",
+                     bottom=f"element_at({lat_a}, CAST({cy} + 2 AS INT))")
+    out = spark.range(grid.count).selectExpr(
+        "id AS chunk_id", *(f"{b[c[3:]]} AS {c}" for c in CHUNK_COLS[1:]))
     if separable:
         return out
 
@@ -137,37 +112,17 @@ def chunks_df(spark: SparkSession, grid: ChunkGrid) -> DataFrame:
     return out.mapInPandas(to4326, schema=out.schema)
 
 
-def _time_at(it, v):
-    """Timestamp column for slice index ``it`` on a regular axis. Years are
-    12-month steps: timestamp_add clamps the day-of-month as
-    view.add_duration does (2020-02-29 + P1Y -> 2021-02-28)."""
-    t0 = F.lit(v.t0)
-    if v.dt.unit in ("Y", "M"):
-        months = v.dt.n * (12 if v.dt.unit == "Y" else 1)
-        return F.timestamp_add("MONTH", (it * months).cast("int"), t0)
-    return F.timestamp_add("SECOND", (it * v.dt.seconds).cast("long"), t0)
-
-
-def _residual_predicate(img, ch):
-    """Exact find_range_st predicate (see module docstring)."""
-    spatial = ~(
-        (img["right"] < ch["ch_left"])
-        | (img["left"] > ch["ch_right"])
-        | (img["bottom"] > ch["ch_top"])
-        | (img["top"] < ch["ch_bottom"])
-    )
-    temporal = (img["ts"] >= ch["ch_t_start"]) & (img["ts"] <= ch["ch_t_end"])
-    return spatial & temporal
-
-
 def st_join(
     images: DataFrame,
     grid: ChunkGrid,
     method: str = "auto",
 ) -> DataFrame:
-    """images ⋈ chunks; returns image columns + CHUNK_COLS."""
+    """images ⋈ chunks; returns image columns + CHUNK_COLS. Images whose
+    footprint has a NaN, infinite or NULL edge join no chunk, under every
+    method."""
     spark = images.sparkSession
     chunks = chunks_df(spark, grid)
+    images = images.where(FINITE)
     if method == "auto":
         method = "broadcast" if grid.count <= BROADCAST_MAX_CHUNKS else "cells"
 
@@ -176,7 +131,7 @@ def st_join(
         # codegen'd JVM predicate: on a narrow scan it costs less than the
         # round-robin exchange a spread would put in front of it (16-chunk
         # grid, 3-partition scan, 4 cores: 0.69 -> 0.48 s without it)
-        return images.join(F.broadcast(chunks), _residual_predicate(images, chunks))
+        return images.join(F.broadcast(chunks), F.expr(RESIDUAL))
 
     # The three cell-keyed strategies share ONE shape — conservative cover
     # explode on both sides, cell equi-join, exact bbox+time residual,
@@ -191,7 +146,7 @@ def st_join(
     #           (functions/hexgrid.py; numpy batch UDFs; uniform-area
     #           join-key populations)
     #   'cells' the flat lon/lat grid (functions/cells.py, native exprs)
-    deg = max(grid.view.dx * grid.view.chunk_nx, grid.view.dy * grid.view.chunk_ny)
+    deg = grid.chunk_extent
     if method == "s2":
         from ..functions import s2 as s2m
 
@@ -230,7 +185,7 @@ def st_join(
     joined = img_c.join(ch_c, "cell")
     owner = cell_of(F.greatest(F.col("left"), F.col("ch_left")),
                     F.greatest(F.col("bottom"), F.col("ch_bottom")))
-    return joined.filter(_residual_predicate(joined, joined) & (F.col("cell") == owner)).drop("cell")
+    return joined.filter(F.expr(RESIDUAL) & (F.col("cell") == owner)).drop("cell")
 
 
 def assignment(images: DataFrame, grid: ChunkGrid, **kw) -> DataFrame:

@@ -41,11 +41,10 @@ import os
 import struct
 import subprocess
 import tempfile
-from dataclasses import replace as dc_replace
 
 import numpy as np
 
-from ..view import CubeView, Duration
+from ..view import CubeView
 
 # datetime_unit ordering (src/datetime.h:33-41): finer units first.
 _UNIT_FIELDS = {
@@ -203,25 +202,20 @@ def probe_shape(view: CubeView, bands, cmd) -> tuple:
     """Driver-side dummy probe (src/stream.h:71-77): stream an all-NaN
     full-size chunk through ``cmd`` and derive (nb_out, keep_t, keep_y,
     keep_x) from the result via the keep-or-collapse rule."""
-    ct = min(view.chunk_nt, view.nt)
-    cy = min(view.chunk_ny, view.ny)
-    cx = min(view.chunk_nx, view.nx)
-    dummy = np.full((len(bands), ct, cy, cx), np.nan)
+    # imported here: each child process imports this module for its wire
+    # helpers, and grid.py (with srs.py) adds ~80 ms to every child start
+    from ..grid import ChunkGrid
+
+    shape = ChunkGrid(view).chunk_shape(0)
+    dummy = np.full((len(bands), *shape), np.nan)
     out = run_child(cmd, _chunk_payload(view, bands, dummy, 0, 0, 0), 0)
-    nb_o, nt_o, ny_o, nx_o = out.shape
-    keeps = []
-    for name, got, want in (("nt", nt_o, ct), ("ny", ny_o, cy),
-                            ("nx", nx_o, cx)):
-        if got == want:
-            keeps.append(True)
-        elif got == 1:
-            keeps.append(False)
-        else:
+    for name, got, want in zip(("nt", "ny", "nx"), out.shape[1:], shape):
+        if got not in (want, 1):
             raise ValueError(
                 f"stream_exec: could not derive result size — output {name}="
                 f"{got} is neither 1 nor the input {name}={want} "
                 "(src/stream.h:100-130 rule)")
-    return (nb_o, *keeps)
+    return (out.shape[0], *(got == want for got, want in zip(out.shape[1:], shape)))
 
 
 def stream_exec(cube, cmd):
@@ -233,55 +227,42 @@ def stream_exec(cube, cmd):
     reference's optimistic-axis reconstruction (src/stream.h:89-130).
     """
     import pandas as pd
-    from pyspark.sql import functions as F
 
     from ..partition import by_group
 
     view, bands = cube.view, cube.bands
-    nb_o, keep_t, keep_y, keep_x = probe_shape(view, bands, cmd)
+    nb_o, *keeps = probe_shape(view, bands, cmd)
     out_bands = tuple(f"band{i + 1}" for i in range(nb_o))
 
-    grid = cube.grid
-    nct, ncy, ncx = grid.nct, grid.ncy, grid.ncx
     # scalars only in the closure (grouped-map closures must not capture
     # the Cube/DataFrame)
-    vw = view
+    grid = cube.grid
     bands_t = tuple(bands)
-    c_nt, c_ny, c_nx = view.chunk_nt, view.chunk_ny, view.chunk_nx
-    n_t, n_y, n_x = view.nt, view.ny, view.nx
 
     def runner(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        tc, yc, xc = int(key[0]), int(key[1]), int(key[2])
-        t_lo, y_lo, x_lo = tc * c_nt, yc * c_ny, xc * c_nx
-        wt = min(c_nt, n_t - t_lo)
-        wy = min(c_ny, n_y - y_lo)
-        wx = min(c_nx, n_x - x_lo)
-        arr = np.full((len(bands_t), wt, wy, wx), np.nan)
-        it = pdf["it"].to_numpy() - t_lo
-        iy = pdf["iy"].to_numpy() - y_lo
-        ix = pdf["ix"].to_numpy() - x_lo
+        cid = grid.chunk_id(*(int(k) for k in key))
+        lo = [a for a, _ in grid.chunk_limits(cid)]
+        shape = grid.chunk_shape(cid)
+        arr = np.full((len(bands_t), *shape), np.nan)
+        cells = tuple(pdf[c].to_numpy() - o for c, o in zip(("it", "iy", "ix"), lo))
         for k, b in enumerate(bands_t):
-            arr[k, it, iy, ix] = pdf[b].to_numpy(dtype=np.float64,
-                                                 na_value=np.nan)
-        cid = tc * ncy * ncx + yc * ncx + xc
-        out = run_child(cmd, _chunk_payload(vw, bands_t, arr,
-                                            t_lo, y_lo, x_lo), cid)
-        if out.shape[0] != nb_o or \
-                out.shape[1] != (wt if keep_t else 1) or \
-                out.shape[2] != (wy if keep_y else 1) or \
-                out.shape[3] != (wx if keep_x else 1):
+            arr[(k, *cells)] = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
+        out = run_child(cmd, _chunk_payload(grid.view, bands_t, arr, *lo), cid)
+        want = (nb_o, *(n if keep else 1 for n, keep in zip(shape, keeps)))
+        if out.shape != want:
             raise ValueError(
                 f"stream_exec: chunk {cid} output shape {out.shape} does not "
-                f"match the probed rule (nb={nb_o}, keep={keep_t},{keep_y},"
-                f"{keep_x}, window=({wt},{wy},{wx}))")
+                f"match the probed rule {want} (keep={keeps})")
         flat = out.reshape(nb_o, -1)
-        keep = ~np.isnan(flat).all(axis=0)  # sparse: all-NaN cells drop
-        tt, yy, xx = np.unravel_index(np.nonzero(keep)[0], out.shape[1:])
+        hit = ~np.isnan(flat).all(axis=0)  # sparse: all-NaN cells drop
+        pos = np.unravel_index(np.nonzero(hit)[0], out.shape[1:])
+        # a kept axis offsets by the chunk's origin; a collapsed one holds
+        # the chunk's coordinate (one slot per chunk)
         return pd.DataFrame({
-            "it": (t_lo + tt if keep_t else np.full(tt.size, tc)).astype("int32"),
-            "iy": (y_lo + yy if keep_y else np.full(yy.size, yc)).astype("int32"),
-            "ix": (x_lo + xx if keep_x else np.full(xx.size, xc)).astype("int32"),
-            **{b: flat[k][keep] for k, b in enumerate(out_bands)},
+            **{c: (o + p if keep else np.full(p.size, cc)).astype("int32")
+               for c, o, p, keep, cc in zip(("it", "iy", "ix"), lo, pos, keeps,
+                                            grid.chunk_coords(cid))},
+            **{b: flat[k][hit] for k, b in enumerate(out_bands)},
         })
 
     schema = "it int, iy int, ix int, " + ", ".join(
@@ -290,28 +271,13 @@ def stream_exec(cube, cmd):
     # two chunks hash-colliding into one partition serialize two children on
     # one core while others idle: partition.by_group sizes the chunk-key
     # exchange so collisions are unlikely.
+    key = ("_ct", "_cy", "_cx")
     src = by_group(
-        cube.df
-        .withColumn("_ct", F.floor(F.col("it") / F.lit(c_nt)).cast("int"))
-        .withColumn("_cy", F.floor(F.col("iy") / F.lit(c_ny)).cast("int"))
-        .withColumn("_cx", F.floor(F.col("ix") / F.lit(c_nx)).cast("int")),
-        grid.count, "_ct", "_cy", "_cx",
+        cube.df.selectExpr("*", *(f"{e} AS {k}" for e, k in
+                                  zip(grid.chunk_key_sql("it", "iy", "ix"), key))),
+        grid.count, *key,
     )
-    df = src.groupBy("_ct", "_cy", "_cx").applyInPandas(runner, schema=schema)
-
+    df = src.groupBy(*key).applyInPandas(runner, schema=schema)
     # optimistic axis reconstruction (src/stream.h:89-130)
-    nv = view
-    if not keep_t:
-        if view.labeled:
-            labels = tuple(view.time_labels[k * c_nt]
-                           for k in range(nct))
-            nv = nv.with_time(labels[0], nct, view.dt, time_labels=labels)
-        else:
-            nv = nv.with_time(view.t0, nct,
-                              Duration(view.dt.n * c_nt, view.dt.unit))
-        nv = dc_replace(nv, chunk_nt=1)
-    if not keep_y:
-        nv = dc_replace(nv, ny=ncy, chunk_ny=1)
-    if not keep_x:
-        nv = dc_replace(nv, nx=ncx, chunk_nx=1)
+    nv = grid.chunk_axis_view(*(not keep for keep in keeps))
     return cube._with(df, view=nv, bands=out_bands)

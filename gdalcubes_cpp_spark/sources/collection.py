@@ -172,18 +172,10 @@ def read_chunks(
     df = spark.read.parquet(path + "/cells")
     if ix_range or iy_range or it_range:
         g = ChunkGrid(view)
-        x0, x1 = ix_range or (0, view.nx)
-        y0, y1 = iy_range or (0, view.ny)
-        t0, t1 = it_range or (0, view.nt)
-        cids = [
-            cid
-            for cid in g.chunk_ids()
-            if not (
-                g.chunk_limits(cid)[2][1] <= x0 or g.chunk_limits(cid)[2][0] >= x1
-                or g.chunk_limits(cid)[1][1] <= y0 or g.chunk_limits(cid)[1][0] >= y1
-                or g.chunk_limits(cid)[0][1] <= t0 or g.chunk_limits(cid)[0][0] >= t1
-            )
-        ]
+        want = (it_range or (0, view.nt), iy_range or (0, view.ny), ix_range or (0, view.nx))
+        cids = [cid for cid in g.chunk_ids()
+                if all(lo < w1 and hi > w0
+                       for (lo, hi), (w0, w1) in zip(g.chunk_limits(cid), want))]
         df = df.filter(F.col("chunk_id").isin(cids))
     cube = Cube(df.select(*KEY, *bands), view, bands)
     if ix_range or iy_range or it_range:

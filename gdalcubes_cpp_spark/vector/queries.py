@@ -31,32 +31,24 @@ def query_points(cube: Cube, points: DataFrame) -> DataFrame:
     containing chunk and reads each chunk once (:101-143); the equi-join on
     cell keys IS that grouping, against the broadcast points. Points outside the cube
     extent produce no row (:127-131)."""
-    g = cube.grid
-    pts = points.withColumns(
-        {
-            "ix": g.ix_expr(F.col("x")),
-            "iy": g.iy_expr(F.col("y")),
-            "it": g.it_expr(F.col("t")),
-        }
-    ).filter(g.in_bounds_expr(F.col("it"), F.col("iy"), F.col("ix")))
-    return F.broadcast(pts).join(cube.df, KEY, "inner").select(
-        "point_id", *KEY, *[F.col(f"`{b}`") for b in cube.bands]
-    )
+    return _point_join(cube, points, KEY)
 
 
 def query_timeseries(cube: Cube, points: DataFrame) -> DataFrame:
     """vector_queries::query_timeseries (src/vector_queries.cpp:204-370):
     full per-point time series — the same join without the time predicate."""
+    return _point_join(cube, points, ["iy", "ix"])
+
+
+def _point_join(cube: Cube, points: DataFrame, keys) -> DataFrame:
+    """The broadcast points inside the cube, with their cell (grid.py's SQL;
+    ``keys`` out of it/iy/ix), joined to the cube's cells on ``keys``."""
     g = cube.grid
-    pts = points.withColumns(
-        {"ix": g.ix_expr(F.col("x")), "iy": g.iy_expr(F.col("y"))}
-    ).filter(
-        (F.col("ix") >= 0) & (F.col("ix") < cube.view.nx)
-        & (F.col("iy") >= 0) & (F.col("iy") < cube.view.ny)
-    )
-    return F.broadcast(pts).join(cube.df, ["iy", "ix"], "inner").select(
-        "point_id", *KEY, *[F.col(f"`{b}`") for b in cube.bands]
-    )
+    cell = {"it": g.slot_sql("t"), "iy": g.iy_sql("y"), "ix": g.ix_sql("x")}
+    pts = points.selectExpr("*", *(f"{cell[k]} AS {k}" for k in keys)).where(
+        g.in_bounds_sql("iy", "ix", "it" if "it" in keys else None))
+    return F.broadcast(pts).join(cube.df, keys, "inner").select(
+        "point_id", *KEY, *[F.col(f"`{b}`") for b in cube.bands])
 
 
 def geom_cells(cube: Cube, geoms: DataFrame, shard_cells: int = 256) -> DataFrame:
@@ -154,7 +146,7 @@ def extract_geom(
     out = F.broadcast(cells).join(cube.df, ["iy", "ix"], "inner")
     if time_column:
         g = cube.grid
-        ft = geoms.select("fid", g.it_expr(F.col("t")).alias("f_it"))
+        ft = geoms.selectExpr("fid", f"{g.slot_sql('t')} AS f_it")
         out = out.join(F.broadcast(ft), "fid").filter(F.col("it") == F.col("f_it")).drop("f_it")
     return out.select("fid", *KEY, *[F.col(f"`{b}`") for b in cube.bands])
 

@@ -14,7 +14,7 @@ duration handling (src/datetime.h):
   (src/view.h:781-927).
 
 This module is deliberately Spark-free: it is broadcast to executors as a
-plain dataclass and also drives generated Spark column expressions (grid.py).
+plain dataclass, and grid.py writes its chunk and slot rules as Spark SQL.
 """
 
 from __future__ import annotations
@@ -347,7 +347,7 @@ class CubeView:
         same as time_index_of. Labeled axis: EXACT label match only, else -1
         (dropped) — the reference errors on non-exact labels
         (src/view.h:825-881 index_at_datetime); we drop instead of raising,
-        as the build's scan (build._vec_time_slots) and grid.it_expr do."""
+        as the build's scan (build._vec_time_slots) and grid.slot_sql do."""
         if self.labeled:
             i = self.time_index_of(t)
             if 0 <= i < self.nt and self.time_labels[i] == t:

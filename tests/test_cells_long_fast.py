@@ -71,7 +71,7 @@ def test_vec_time_slots_labeled_matches_scalar():
     ("P1D", "2020-06-01", True),
 ])
 def test_it_expr_matches_vec_time_slots(spark, dt_str, t0, labeled):
-    """grid.it_expr (the JVM slot of the touched-slice set) equals the
+    """grid.slot_sql (the JVM slot of the touched-slice set) equals the
     scan's _vec_time_slots on sub-second-jittered timestamps; on a labeled
     axis both match labels exactly, else -1."""
     from pyspark.sql import functions as F
@@ -95,7 +95,7 @@ def test_it_expr_matches_vec_time_slots(spark, dt_str, t0, labeled):
         v = CubeView.create(left=0, right=10, bottom=0, top=10, nx=10, ny=10,
                             time_labels=[t.item() for t in labels])
     df = spark.createDataFrame(pd.DataFrame({"k": np.arange(len(ts)), "ts": ts}))
-    got = [r[1] for r in df.select("k", ChunkGrid(v).it_expr(F.col("ts"))).orderBy("k").collect()]
+    got = [r[1] for r in df.select("k", F.expr(ChunkGrid(v).slot_sql("ts"))).orderBy("k").collect()]
     want = _vec_time_slots(ts, v)
     np.testing.assert_array_equal(got, want)
     assert len(set(want[want >= 0].tolist())) >= 4

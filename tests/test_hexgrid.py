@@ -68,6 +68,10 @@ def test_parent_equals_center_encode_at_coarser_res():
     clon, clat = hg.hex_center_np(cells)
     np.testing.assert_array_equal(
         hg.hex_parent_np(cells), hg.hex_encode_np(clon, clat, RES - 1))
+    # an empty id batch gives empty parents and centres
+    empty = np.array([], dtype=np.int64)
+    assert hg.hex_parent_np(empty).shape == (0,)
+    assert [a.shape for a in hg.hex_center_np(empty)] == [(0,), (0,)]
 
 
 def test_aperture_seven_children():

@@ -394,7 +394,7 @@ def test_apply_time_udf_chunk_grain(spark, dense):
     c, _ = cube_from_dense(spark, dense)
     g = c.grid
     n_groups = (
-        c._spatial_chunk_groupby().agg(F.count("*")).count()
+        c._spatial_chunk_groups().agg(F.count("*")).count()
     )
     n_pixels = c.df.select("iy", "ix").distinct().count()
     assert n_groups == g.ncx * g.ncy

@@ -37,8 +37,10 @@ def pdf():
 
 def test_stjoin_exact_both_methods(spark, images, pdf):
     """Every join method equals the oracle. The input adds footprints with
-    a NULL edge, a NaN left edge or only NaN edges: they join no chunk under
-    any method (the s2/hex covers of such a rect are empty)."""
+    a NULL edge, a NaN on each edge or only NaN edges: they join no chunk
+    under any method (st_join keeps finite footprints only; Spark orders
+    NaN above every double, so a NaN right or top edge would otherwise pass
+    the bbox test)."""
     import pyspark.sql.functions as F
 
     v = make_view(left=-55, right=55, bottom=-45, top=45, nx=440, ny=360,
@@ -50,6 +52,9 @@ def test_stjoin_exact_both_methods(spark, images, pdf):
         "null_left": {"left": F.lit(None).cast("double")},
         "null_top": {"top": F.lit(None).cast("double")},
         "nan_left": {"left": nan},
+        "nan_right": {"right": nan},
+        "nan_bottom": {"bottom": nan},
+        "nan_top": {"top": nan},
         "all_nan": {"left": nan, "right": nan, "bottom": nan, "top": nan},
     }
     imgs = images
@@ -84,6 +89,52 @@ def test_chunks_df_separable_rects(spark, srs):
             want = (S.x_to_lon(bd["left"]), S.x_to_lon(bd["right"]),
                     S.y_to_lat(bd["bottom"]), S.y_to_lat(bd["top"]))
         assert (row.ch_left, row.ch_right, row.ch_bottom, row.ch_top) == want
+
+
+def test_non_utc_driver_zone_keeps_chunk_times(spark, images, pdf):
+    """Chunk and slot times are session-zone SQL, not datetimes converted
+    in the driver process's own zone: under TZ=America/New_York (session
+    zone UTC) chunks_df's bounds still equal grid.chunk_bounds, an image at
+    02:00 on a chunk's first day still joins it, and which_min reports the
+    slot start the oracle gives."""
+    import os
+    import time
+
+    from pyspark.sql import functions as F
+
+    v = make_view(t0="2020-05-01", t1="2020-07-31", chunk_size=(1, 32, 32))
+    g = ChunkGrid(v)
+    sub = pdf.assign(ts=pdf["ts"].dt.normalize() + np.timedelta64(2, "h"))
+    imgs = images.withColumn("ts", F.date_trunc("day", "ts") + F.expr("INTERVAL 2 HOURS"))
+    vf = lambda i: (float(int(i[3:]) % 7),)
+    old = os.environ.get("TZ")
+    os.environ["TZ"] = "America/New_York"
+    time.tzset()
+    try:
+        got = stjoin.chunks_df(spark, g).selectExpr(
+            "chunk_id", "CAST(ch_t_start AS STRING) AS s", "CAST(ch_t_end AS STRING) AS e"
+        ).orderBy("chunk_id").collect()
+        pairs = sorted((r["image_id"], r["chunk_id"])
+                       for r in stjoin.assignment(imgs, g).collect())
+        red = build_cube(imgs, v, bands=("B1",), value_fn=vf).reduce_time(
+            [("which_min", "B1")]).collect_dense()
+    finally:
+        if old is None:
+            del os.environ["TZ"]
+        else:
+            os.environ["TZ"] = old
+        time.tzset()
+    for r in got:
+        bd = g.chunk_bounds(r["chunk_id"])
+        assert (r["s"], r["e"]) == (str(bd["t_start"]), str(bd["t_end"]))
+    assert pairs == oracle_np.st_assignment(sub, g)
+    dense = oracle_np.dense_cube(sub, v, nb=1, value_fn=vf)[0]
+    has = np.isfinite(dense).any(axis=0)
+    first = np.nanargmin(np.where(np.isfinite(dense), dense, np.inf), axis=0)
+    num = np.vectorize(lambda k: float(v.datetime_at(int(k)).strftime("%Y%m%d%H%M%S")))
+    assert has.any()
+    np.testing.assert_array_equal(red[0, 0][has], num(first[has]))
+    assert np.isnan(red[0, 0][~has]).all()
 
 
 def test_stjoin_leap_day_yearly_axis(spark):
@@ -128,6 +179,16 @@ def test_build_aggregations_exact(spark, images, pdf, agg, layout):
     want = oracle_np.dense_cube(pdf, v, resampling="near", aggregation=agg)
     oracle_np.assert_dense_equal(got, want)
     assert np.isfinite(got).any()
+    # a value_fn that gives every third image a NaN B1: those values leave
+    # the scan as NULL, so no aggregation sees or returns a NaN
+    vf = lambda i: (np.nan if int(i[3:]) % 3 == 0 else float(int(i[3:]) % 17),
+                    1.0 + int(i[3:]) % 5)
+    cube = build_cube(images, v, value_fn=vf)
+    assert cube.df.where("isnan(B1) OR isnan(B2)").count() == 0
+    got = cube.collect_dense()
+    oracle_np.assert_dense_equal(got, oracle_np.dense_cube(pdf, v, aggregation=agg, value_fn=vf))
+    if not agg.startswith("count_"):
+        assert np.isnan(got[0]).sum() > np.isnan(got[1]).sum()
 
 
 def test_build_bilinear_psnr(spark, images, pdf):
