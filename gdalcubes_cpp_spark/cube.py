@@ -27,42 +27,49 @@ from .view import CubeView, Duration
 
 KEY = ["it", "iy", "ix"]
 
-# reducer -> (Spark agg fn over a column, needs_time_col)
+# reducer -> Spark SQL aggregate over one column ({} is the quoted column)
 _REDUCERS = {
-    "min": lambda c: F.min(c),
-    "max": lambda c: F.max(c),
-    "mean": lambda c: F.avg(c),
-    "sum": lambda c: F.sum(c),
-    "count": lambda c: F.count(c),
-    "prod": lambda c: F.expr(f"aggregate(collect_list({c}), cast(1.0 as double), (a, x) -> a * x)"),
-    "median": lambda c: F.expr(f"percentile({c}, 0.5)"),
-    "Q1": lambda c: F.expr(f"percentile({c}, 0.25)"),
-    "Q3": lambda c: F.expr(f"percentile({c}, 0.75)"),
-    "var": lambda c: F.var_samp(c),   # Welford ddof=1 (src/reduce_time.cpp:467-514)
-    "sd": lambda c: F.stddev_samp(c),
+    "min": "min({})",
+    "max": "max({})",
+    "mean": "avg({})",
+    "sum": "sum({})",
+    "count": "count({})",
+    "prod": "aggregate(collect_list({}), cast(1.0 as double), (a, x) -> a * x)",
+    "median": "percentile({}, 0.5)",
+    "Q1": "percentile({}, 0.25)",
+    "Q3": "percentile({}, 0.75)",
+    "var": "var_samp({})",   # Welford ddof=1 (src/reduce_time.cpp:467-514)
+    "sd": "stddev_samp({})",
     # per-pixel least-squares trend over slice index (the NDVI-trend
     # workflow; an extension — the reference's TODO at reduce_time.cpp:355
     # stops at exact kernels). NULL slices drop out pairwise; constant x
     # (e.g. under reduce_space) yields NULL.
-    "slope": lambda c: F.expr(f"regr_slope({c}, it)"),
-    "intercept": lambda c: F.expr(f"regr_intercept({c}, it)"),
+    "slope": "regr_slope({}, it)",
+    "intercept": "regr_intercept({}, it)",
     # approximate quantiles — the reference's OWN future-work note
     # (src/reduce_time.cpp:355 'approx medians') realized with Spark's
     # Greenwald-Khanna sketch: mergeable partial state, so the 100 TB
     # reduction never buffers per-cell value lists the way the exact
     # percentile kernel does. Error bound 1/accuracy (pytest-gated).
-    "approx_median": lambda c: F.percentile_approx(c, 0.5, 10000),
-    "approx_Q1": lambda c: F.percentile_approx(c, 0.25, 10000),
-    "approx_Q3": lambda c: F.percentile_approx(c, 0.75, 10000),
+    "approx_median": "percentile_approx({}, 0.5, 10000)",
+    "approx_Q1": "percentile_approx({}, 0.25, 10000)",
+    "approx_Q3": "percentile_approx({}, 0.75, 10000)",
 }
+
+
+def _reduce(r: str, col: str, name: str) -> F.Column:
+    """Reducer ``r`` over column ``col`` as a double named ``name``: one
+    SQL expression, one py4j call."""
+    return F.expr(f"CAST({_REDUCERS[r].format(f'`{col}`')} AS DOUBLE) AS `{name}`")
+
 
 # moving-window reducers supported by window_time (src/window_time.cpp:29-95)
 _WINDOW_REDUCERS = {"mean", "sum", "count", "prod", "min", "max", "median"}
 
 
-def _dtnum(col):
-    """datetime -> numeric yyyyMMddHHmmss double (src/datetime.h:140-148)."""
-    return F.date_format(col, "yyyyMMddHHmmss").cast("double")
+def _dtnum_sql(t: str) -> str:
+    """datetime SQL -> numeric yyyyMMddHHmmss double (src/datetime.h:140-148)."""
+    return f"CAST(date_format({t}, 'yyyyMMddHHmmss') AS DOUBLE)"
 
 
 @dataclass(frozen=True)
@@ -254,26 +261,22 @@ class Cube:
         extremum's datetime as numeric yyyyMMddHHmmss (src/reduce_time.cpp:
         188-240, datetime::to_double src/datetime.h:140-148); ties break to
         the earliest time (sequential scan with strict <)."""
-        aggs = []
-        names = []
-        need_t = any(r in ("which_min", "which_max") for r, _ in reducers)
-        df = self.df
-        if need_t:
-            df = df.withColumn("_tnum", _dtnum(self.time_col()))
+        aggs, names = [], []
         for r, b in reducers:
             name = f"{b}_{r}" if self.view.nt > 1 else b  # src/reduce_time.h:96-99
             names.append(name)
-            if r == "which_min":
-                aggs.append(F.min_by(F.struct("it", "_tnum"), F.when(F.col(b).isNotNull(), F.struct(F.col(b), F.col("it"))))["_tnum"].alias(name))
-            elif r == "which_max":
-                aggs.append(F.min_by(F.struct("it", "_tnum"), F.when(F.col(b).isNotNull(), F.struct(-F.col(b), F.col("it"))))["_tnum"].alias(name))
+            if r in ("which_min", "which_max"):
+                tnum = _dtnum_sql(self.grid.time_at_sql("it"))
+                v = f"`{b}`" if r == "which_min" else f"-`{b}`"
+                aggs.append(F.expr(
+                    f"min_by(named_struct('it', it, '_tnum', {tnum}), CASE WHEN `{b}` IS NOT "
+                    f"NULL THEN struct({v}, it) END)._tnum AS `{name}`"))
             elif r in _REDUCERS:
-                aggs.append(_REDUCERS[r](b).cast("double").alias(name))
+                aggs.append(_reduce(r, b, name))
             else:
                 raise ValueError(f"unknown reducer {r!r}")
-        out = df.groupBy("iy", "ix").agg(*aggs).withColumns(
-            {"it": F.lit(0).cast("int")}
-        ).select(*KEY, *names)
+        out = self.df.groupBy("iy", "ix").agg(*aggs).selectExpr(
+            "CAST(0 AS INT) AS it", "iy", "ix", *[f"`{n}`" for n in names])
         nv = self.view.with_time(self.view.t0, 1, Duration(1, "D"), time_labels=())
         return self._with(out, view=nv, bands=tuple(names))
 
@@ -286,7 +289,7 @@ class Cube:
                 raise ValueError("which_* not supported for reduce_space (matches reference)")
             name = f"{b}_{r}"
             names.append(name)
-            aggs.append(_REDUCERS[r](b).cast("double").alias(name))
+            aggs.append(_reduce(r, b, name))
         out = (
             self.df.groupBy("it")
             .agg(*aggs)
@@ -314,7 +317,7 @@ class Cube:
         if func not in _REDUCERS:
             raise ValueError(f"unknown func {func!r}")
         gb = (F.col("it") / fact).cast("int").alias("it")
-        aggs = [_REDUCERS[func](b).cast("double").alias(b) for b in self.bands]
+        aggs = [_reduce(func, b, b) for b in self.bands]
         out = self.df.groupBy(gb, "iy", "ix").agg(*aggs).select(*KEY, *self.bands)
         import math
 
@@ -331,7 +334,7 @@ class Cube:
         v = self.view
         gy = (F.col("iy") / fact).cast("int").alias("iy")
         gx = (F.col("ix") / fact).cast("int").alias("ix")
-        aggs = [_REDUCERS[func](b).cast("double").alias(b) for b in self.bands]
+        aggs = [_reduce(func, b, b) for b in self.bands]
         out = self.df.groupBy("it", gy, gx).agg(*aggs).select(*KEY, *self.bands)
         import math
 
@@ -384,9 +387,12 @@ class Cube:
                 raise ValueError(f"reducer {red!r} not supported by window_time")
             name = f"{b}_{red}"
             names.append(name)
-            cols[name] = _REDUCERS[red](b).over(w).cast("double") if red != "prod" else F.expr(
-                f"aggregate(collect_list({b}) over (partition by iy, ix order by it rows between {l} preceding and {r} following), cast(1.0 as double), (a, x) -> a * x)"
-            )
+            if red != "prod":
+                cols[name] = F.expr(_REDUCERS[red].format(f"`{b}`")).over(w).cast("double")
+            else:
+                cols[name] = F.expr(
+                    f"aggregate(collect_list({b}) over (partition by iy, ix order by it rows between {l} preceding and {r} following), cast(1.0 as double), (a, x) -> a * x)"
+                )
         out = dense.withColumns(cols).select(*KEY, *names)
         return self._with(out, bands=tuple(names))
 
@@ -458,7 +464,7 @@ class Cube:
                 raise ValueError(f"reducer {red!r} not supported by window_space")
             name = f"{bn}_{red}"
             names.append(name)
-            aggs.append(_REDUCERS[red](bn).cast("double").alias(name))
+            aggs.append(_reduce(red, bn, name))
         out = adv.groupBy("it", "ty", "tx").agg(*aggs).withColumnsRenamed(
             {"ty": "iy", "tx": "ix"}
         ).select(*KEY, *names)

@@ -387,7 +387,7 @@ def push_down_overviews(
     from .. import srs as _srs
 
     try:
-        if _srs.normalize(getattr(view, "srs", "EPSG:4326")) != "EPSG:4326":
+        if _srs.resolve(getattr(view, "srs", "EPSG:4326"))[0] is not _srs.WGS84:
             return images
     except ValueError:
         return images

@@ -18,7 +18,7 @@ view cells they contribute:
 It runs over flat (image, cell) arrays, so only decode, value_fn and
 non-'near' warps cost a Python call per image.
 
-The step runs at the scan (scan_cells, one mapInPandas over the image
+The step runs at the scan (scan_cells, one mapInArrow over the image
 rows), so image bytes never cross an exchange. build_cells_long then
 aggregates the long (cell, value) rows with native groupBys, one plan per
 aggregation: per-cell aggregates for mean/min/max/first/last/median, and
@@ -34,6 +34,8 @@ from typing import Callable
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
@@ -47,7 +49,9 @@ DEFAULT_BANDS = ("B1", "B2")
 
 
 def default_decode(data: bytes, fmt: str) -> np.ndarray:
-    """bytes -> (h, w, c) uint8; swap for GDAL/libjpeg on a real cluster."""
+    """payload -> (h, w, c) array; swap for GDAL/libjpeg on a real cluster.
+    The scan hands every decode_fn a read-only memoryview of the payload
+    in the Arrow batch (bytes-like: slice it, or copy it with bytes())."""
     return codecs.decode(data, fmt)
 
 
@@ -492,56 +496,76 @@ def _vec_time_slots(ts: np.ndarray, view: CubeView) -> np.ndarray:
     return np.floor(secs / dt.seconds).astype(np.int64)
 
 
-def _decode_planes(decode, a_bytes, a_fmt, rows, chans):
-    """Decode images ``rows`` and concatenate channels ``chans`` into one
-    flat float64 buffer per channel; returns (bufs, Hs, Ws, offs), each
-    image's plane being buf[off:off + H*W].reshape(H, W)."""
-    bufs: list = [[] for _ in chans]
-    Hs = np.empty(len(rows), np.int64)
-    Ws = np.empty(len(rows), np.int64)
-    offs = np.empty(len(rows), np.int64)
+class _Planes:
+    """A batch's decoded images in one flat buffer, each image's (H, W, C)
+    pixels in its codec's own dtype (numpy's common type when a batch mixes
+    codecs; a value read from it converts to the same float64 as from the
+    codec's array): image j's pixel (y, x) channel c sits at
+    ``offs[j] + (y * Ws[j] + x) * Cs[j] + c``. Nothing is converted to
+    float64 here; the gathers convert only the values they read, and
+    _warp_cells one plane when it warps it."""
+
+    def __init__(self, buf, Hs, Ws, Cs, offs):
+        self.buf, self.Hs, self.Ws, self.Cs, self.offs = buf, Hs, Ws, Cs, offs
+
+    def plane(self, j: int, ch: int) -> np.ndarray:
+        """Image j's channel ``ch`` as an (H, W) view of the buffer."""
+        h, w, c = self.Hs[j], self.Ws[j], self.Cs[j]
+        return self.buf[self.offs[j]:self.offs[j] + h * w * c].reshape(h, w, c)[:, :, ch]
+
+
+def _decode_planes(decode, a_bytes, a_fmt, rows, chans) -> _Planes:
+    """Decode images ``rows`` (``decode(a_bytes[k], a_fmt[k])`` -> (h, w, c))
+    into one _Planes buffer. Every channel in ``chans`` must exist."""
+    raws = []
+    n, top = len(rows), max(chans)
+    Hs, Ws, Cs, offs = (np.empty(n, np.int64) for _ in range(4))
     off = 0
     for j, k in enumerate(rows):
-        raw = decode(a_bytes[k], a_fmt[k])
-        Hs[j], Ws[j], offs[j] = raw.shape[0], raw.shape[1], off
-        off += raw.shape[0] * raw.shape[1]
-        for c, ch in enumerate(chans):
-            bufs[c].append(np.asarray(raw[:, :, ch], dtype=np.float64).ravel())
-    return [np.concatenate(bl) if bl else np.empty(0) for bl in bufs], Hs, Ws, offs
+        raw = np.asarray(decode(a_bytes[k], a_fmt[k]))
+        if raw.ndim != 3 or raw.shape[2] <= top:
+            raise IndexError(f"decoded image of shape {raw.shape} has no channel {top}")
+        Hs[j], Ws[j], Cs[j] = raw.shape
+        offs[j] = off
+        off += raw.size
+        raws.append(raw.reshape(-1))
+    return _Planes(np.concatenate(raws) if raws else np.empty(0), Hs, Ws, Cs, offs)
 
 
-def _near_index(bl, br, bb, bt, Hs, Ws, offs, img, lon, lat, al, at_):
-    """warp_plane 'near' for flat cells: each cell's index into a
-    concatenated plane buffer, and whether its continuous coord falls inside
+def _near_index(bl, br, bb, bt, P: _Planes, img, lon, lat, al, at_):
+    """warp_plane 'near' for flat cells: each cell's buffer index of its
+    image's pixel (channel 0), and whether its continuous coord falls inside
     [0, w)x[0, h) (1-ulp edges: warp's own inside test; outside -> NaN)."""
-    pdxs = (br - bl) / Ws
-    pdys = (bt - bb) / Hs
+    pdxs = (br - bl) / P.Ws
+    pdys = (bt - bb) / P.Hs
     fx = (lon - al) / pdxs[img]
     fy = (at_ - lat) / pdys[img]
-    w_i, h_i = Ws[img], Hs[img]
+    w_i, h_i = P.Ws[img], P.Hs[img]
     m_in = (fx >= 0) & (fx < w_i) & (fy >= 0) & (fy < h_i)
     cxp = np.clip(np.floor(fx).astype(np.int64), 0, w_i - 1)
     cyp = np.clip(np.floor(fy).astype(np.int64), 0, h_i - 1)
-    return offs[img] + cyp * w_i + cxp, m_in
+    return P.offs[img] + (cyp * w_i + cxp) * P.Cs[img], m_in
 
 
-def _gather(buf, lin, m_in):
-    v = buf[lin]
+def _gather(P: _Planes, lin, ch, m_in):
+    """Channel ``ch`` at the 'near' indices ``lin``, as float64; NaN where
+    ``m_in`` is False."""
+    v = np.asarray(P.buf[lin + ch], dtype=np.float64)
     return v if m_in.all() else np.where(m_in, v, np.nan)
 
 
-def _warp_cells(view, bufs, Hs, Ws, offs, bounds, win, img, iy, ix, lon, lat):
+def _warp_cells(view, P: _Planes, chans, bounds, win, img, iy, ix, lon, lat):
     """Non-'near' resampling of flat cells, one warp_plane call per image
-    and band. Point kernels are element-wise, so the image's cells go in
-    as one (1, n) row. Aggregating kernels (separable views only) pool
-    every cell independently: warp the image's untrimmed window with its
-    view-cell edges, then gather the covered cells."""
+    and band (warp_plane converts the plane to float64). Point kernels are
+    element-wise, so the image's cells go in as one (1, n) row. Aggregating
+    kernels (separable views only) pool every cell independently: warp the
+    image's untrimmed window with its view-cell edges, then gather the
+    covered cells."""
     from .. import srs as _srs
 
     resampling = view.resampling
-    nb = len(bufs)
-    V = [np.empty(len(img)) for _ in range(nb)]
-    seg = np.searchsorted(img, np.arange(len(Hs) + 1))
+    V = [np.empty(len(img)) for _ in chans]
+    seg = np.searchsorted(img, np.arange(len(P.Hs) + 1))
     for j in np.nonzero(seg[1:] > seg[:-1])[0]:
         s, e = seg[j], seg[j + 1]
         if resampling in AGG_RESAMPLERS:
@@ -555,10 +579,8 @@ def _warp_cells(view, bufs, Hs, Ws, offs, bounds, win, img, iy, ix, lon, lat):
             cell = (iy[s:e] - y0, ix[s:e] - x0)
         else:
             xs, ys, kw, cell = lon[None, s:e], lat[None, s:e], {}, 0
-        n = Hs[j] * Ws[j]
-        for b in range(nb):
-            plane = bufs[b][offs[j]:offs[j] + n].reshape(Hs[j], Ws[j])
-            V[b][s:e] = warp_plane(plane, tuple(a[j] for a in bounds),
+        for b, ch in enumerate(chans):
+            V[b][s:e] = warp_plane(P.plane(j, ch), tuple(a[j] for a in bounds),
                                    xs, ys, resampling, **kw)[cell]
     return V
 
@@ -583,17 +605,20 @@ def _view_bbox(view: CubeView, srs_n: str, a_l, a_r, a_b, a_t):
             py.min(axis=0) - pad_y, py.max(axis=0) + pad_y)
 
 
-def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
+def _cell_step(view: CubeView, cols: dict, srs_n: str, separable: bool,
                decode_fn, value_fn, mask, nb: int, slot_bounds: tuple):
     """One batch of image rows -> the view cells they contribute.
 
-    Returns (slot, row, iy, ix, V). ``slot`` has one entry per pdf row: the
+    ``cols`` maps the batch's column names to numpy arrays (_arrow_columns),
+    the binary ones to _Payloads.
+
+    Returns (slot, row, iy, ix, V). ``slot`` has one entry per batch row: the
     row's time slot, or -1 where the image lands in no slot or a FileMask
     mask_value masks it. An image lands in slot ``it`` when its time maps
     to ``it`` and also lies in the [t_start, t_end] of its chunk
     (``slot_bounds``, from grid.slot_bounds): the reference only reads the
     images find_range_st returns for the chunk. The rest is flat per cell,
-    image by image in pdf order and row-major within an image: the pdf
+    image by image in batch order and row-major within an image: the batch
     row, iy/ix and V (nb, n) float64. Cells NaN in every band are dropped.
 
     A per-image loop spends ~30 small numpy calls per image — at 200k
@@ -605,9 +630,7 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     """
     from .. import srs as _srs
 
-    def col(c):
-        return pdf[c].to_numpy() if c in pdf.columns else None
-
+    col = cols.get
     if not separable and view.resampling in AGG_RESAMPLERS:
         raise ValueError(
             f"aggregating resampler {view.resampling!r} needs a separable view "
@@ -617,7 +640,7 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     a_id, a_mb, a_mv = col("image_id"), col("m_bytes"), col("m_val")
     file_mask = isinstance(mask, FileMask)
     band_mask = isinstance(mask, BandMask) and not file_mask
-    ts = np.asarray(col("ts")).astype("datetime64[us]")
+    ts = col("ts")
     slot = _vec_time_slots(ts, view)
     valid = (slot >= 0) & (slot < view.nt)  # src/image_collection_cube.cpp:412-414
     lo, hi = slot_bounds
@@ -625,10 +648,9 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
     valid &= (ts >= lo[k]) & (ts <= hi[k])
     if file_mask and a_mv is not None:
         # a constant mask plane masks the whole footprint
-        mv = pd.to_numeric(pd.Series(a_mv), errors="coerce").to_numpy(np.float64)
         with np.errstate(invalid="ignore"):
-            mk = mask.test(mv)
-        valid &= ~(mk & ~np.isnan(mv))  # None/NaN never masks (test_scalar)
+            mk = mask.test(a_mv)
+        valid &= ~(mk & ~np.isnan(a_mv))  # None/NaN never masks (test_scalar)
     slot = np.where(valid, slot, -1)
     none = np.empty(0, np.int64)
     no_cells = (slot, none, none, none, np.empty((nb, 0)))
@@ -696,36 +718,36 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
         vals = np.asarray([value_fn(i)[:nb] for i in a_id[sel]], dtype=np.float64)
         V = [vals[img, b] for b in range(nb)]
     else:
-        chans = list(range(nb)) + ([mask.channel] if band_mask else [])
-        bufs, Hs, Ws, offs = _decode_planes(
-            decode_fn, col("bytes"), col("fmt"), sel, chans)
+        chans = list(range(nb))
+        P = _decode_planes(decode_fn, col("bytes"), col("fmt"), sel,
+                           chans + ([mask.channel] if band_mask else []))
         bounds = (a_l[sel], a_r[sel], a_b[sel], a_t[sel])
         if view.resampling == "near" or band_mask:
-            lin, m_in = _near_index(*bounds, Hs, Ws, offs, img, lon, lat, al, at_)
+            lin, m_in = _near_index(*bounds, P, img, lon, lat, al, at_)
         if view.resampling == "near":
-            V = [_gather(bufs[b], lin, m_in) for b in range(nb)]
+            V = [_gather(P, lin, ch, m_in) for ch in chans]
         else:
             win = (ix0[sel], ix1[sel], iy0[sel], iy1[sel])
-            V = _warp_cells(view, bufs[:nb], Hs, Ws, offs, bounds, win,
-                            img, iy, ix, lon, lat)
+            V = _warp_cells(view, P, chans, bounds, win, img, iy, ix, lon, lat)
         # separate mask band: warped 'near' always, whatever the data
         # resampling; a match makes the cell nodata in every band
         mp = None
         if band_mask:
-            mp = _gather(bufs[nb], lin, m_in)
+            mp = _gather(P, lin, mask.channel, m_in)
         elif file_mask and a_mb is not None:
             # the mask file: its own bytes, its own (H, W); images without a
             # mask row pass unmasked
-            has_m = np.asarray([a_mb[k] is not None for k in sel], dtype=bool)
+            has_m = a_mb.valid[sel]
             if has_m.any():
-                mbufs, mH, mW, moff = _decode_planes(
-                    mask.decode_fn or default_decode, a_mb, col("m_fmt"),
-                    sel[has_m], [mask.channel])
-                mHs, mWs = np.ones(len(sel), np.int64), np.ones(len(sel), np.int64)
-                moffs = np.zeros(len(sel), np.int64)
-                mHs[has_m], mWs[has_m], moffs[has_m] = mH, mW, moff
-                mlin, mm_in = _near_index(*bounds, mHs, mWs, moffs, img, lon, lat, al, at_)
-                mp = _gather(mbufs[0], mlin, mm_in & has_m[img])
+                M = _decode_planes(mask.decode_fn or default_decode, a_mb,
+                                   col("m_fmt"), sel[has_m], [mask.channel])
+                # a 1x1x1 placeholder at offset 0 for images without a mask
+                Hs, Ws, Cs = (np.ones(len(sel), np.int64) for _ in range(3))
+                offs = np.zeros(len(sel), np.int64)
+                Hs[has_m], Ws[has_m], Cs[has_m], offs[has_m] = M.Hs, M.Ws, M.Cs, M.offs
+                M = _Planes(M.buf, Hs, Ws, Cs, offs)
+                mlin, mm_in = _near_index(*bounds, M, img, lon, lat, al, at_)
+                mp = _gather(M, mlin, mask.channel, mm_in & has_m[img])
         if mp is not None:
             mk = mask.test(mp)
             if mk.any():
@@ -743,27 +765,67 @@ def _cell_step(view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
 # the build: scan rows, the touched slices, native aggregates
 # ---------------------------------------------------------------------------
 
+class _Payloads:
+    """A binary Arrow column's values as read-only views of its data buffer
+    (no per-row bytes objects): ``p[k]`` is row k's memoryview, None where
+    the row is NULL; ``valid`` is the row validity."""
+
+    def __init__(self, arr: pa.Array):
+        _, offsets, data = arr.buffers()
+        width = np.int64 if pa.types.is_large_binary(arr.type) else np.int32
+        self.off = np.frombuffer(offsets, width)[arr.offset:arr.offset + len(arr) + 1]
+        # Arrow exposes signed bytes ('b'); as 'B' a view compares with bytes
+        # literals at C speed (a 'b' view unpacks element by element)
+        self.data = memoryview(data if data is not None else b"").cast("B").toreadonly()
+        self.valid = np.asarray(arr.is_valid())
+
+    def __getitem__(self, k):
+        return self.data[self.off[k]:self.off[k + 1]] if self.valid[k] else None
+
+
+def _arrow_columns(batch: pa.RecordBatch) -> dict:
+    """A scan batch's columns for _cell_step. ``ts`` arrives as instants
+    tagged with the session time zone and becomes datetime64[us] wall time
+    in that zone, the value a mapInPandas batch carries; floating columns
+    become float64 (NULL -> NaN), binary columns _Payloads and strings
+    object arrays."""
+    cols = {}
+    for name, arr in zip(batch.schema.names, batch.columns):
+        t = arr.type
+        if pa.types.is_binary(t) or pa.types.is_large_binary(t):
+            cols[name] = _Payloads(arr)
+        elif pa.types.is_timestamp(t):
+            if t.tz is not None:
+                arr = pc.local_timestamp(arr)
+            cols[name] = arr.to_numpy(zero_copy_only=False).astype("datetime64[us]")
+        elif pa.types.is_floating(t):
+            cols[name] = arr.to_numpy(zero_copy_only=False).astype(np.float64, copy=False)
+        else:
+            cols[name] = arr.to_numpy(zero_copy_only=False)
+    return cols
+
+
 def _scan_batch(
-    view: CubeView, pdf: pd.DataFrame, srs_n: str, separable: bool,
+    view: CubeView, batch: pa.RecordBatch, srs_n: str, separable: bool,
     decode_fn, value_fn, mask, need_id: bool, band_names, slot_bounds,
-):
+) -> pa.RecordBatch:
     """One scan batch -> long (it, iy, ix[, image_id], v_<band>...) rows:
     _cell_step over the whole view. Rows come out image by image in input
     order, row-major within each image — the order Spark's partial avg
-    sums in."""
+    sums in. NaN values leave as NULL (the Cube's nodata)."""
     slot, row, iy, ix, V = _cell_step(
-        view, pdf, srs_n, separable, decode_fn, value_fn, mask,
-        len(band_names), slot_bounds)
+        view, _arrow_columns(batch), srs_n, separable, decode_fn, value_fn,
+        mask, len(band_names), slot_bounds)
     out = {
-        "it": slot[row].astype(np.int32),
-        "iy": iy.astype(np.int32),
-        "ix": ix.astype(np.int32),
+        "it": pa.array(slot[row].astype(np.int32)),
+        "iy": pa.array(iy.astype(np.int32)),
+        "ix": pa.array(ix.astype(np.int32)),
     }
     if need_id:
-        out["image_id"] = pdf["image_id"].to_numpy()[row]
+        out["image_id"] = batch.column("image_id").take(pa.array(row))
     for b, name in enumerate(band_names):
-        out[f"v_{name}"] = V[b]
-    return pd.DataFrame(out)
+        out[f"v_{name}"] = pa.array(V[b], mask=np.isnan(V[b]))
+    return pa.RecordBatch.from_pydict(out)
 
 
 def _view_window(view: CubeView) -> str | None:
@@ -806,12 +868,15 @@ def scan_cells(
     value_fn: Callable | None = None,
     need_id: bool = False,
 ) -> DataFrame:
-    """The scan: a mapInPandas over the image rows runs _cell_step (decode
+    """The scan: a mapInArrow over the image rows runs _cell_step (decode
     → warp → mask) where each image is read and emits long
     (it, iy, ix[, image_id], v_<band>...) rows, one per covered cell. Image
-    bytes never cross an exchange. The scan is Python work, so an input
+    bytes never cross an exchange, and the codecs read them straight from
+    the Arrow batch's buffers. The scan is Python work, so a collection
     planned with fewer partitions than the session has task slots is first
-    widened by partition.spread."""
+    widened by partition.spread, which decides on ``images`` itself (the
+    column selection and view window are narrow) and so probes a collection
+    once however many cubes are built from it."""
     # w/h are NOT selected: the decoded array's own shape drives the warp,
     # so the columns would only widen the scan and the Arrow transfer
     cols = ["ts", "left", "right", "bottom", "top"]
@@ -828,8 +893,8 @@ def scan_cells(
 
         srs_n = _srs.normalize(view.srs)
         separable = _srs.is_separable(srs_n)
-        for pdf in batches:
-            yield _scan_batch(view, pdf, srs_n, separable, decode_fn, value_fn,
+        for batch in batches:
+            yield _scan_batch(view, batch, srs_n, separable, decode_fn, value_fn,
                               mask, need_id, bands, slot_bounds)
 
     schema = (
@@ -845,7 +910,7 @@ def scan_cells(
     # tasks) would serialize the whole decode/warp stage: partition.spread
     # widens it; large inputs keep scan locality and the no-bytes-shuffle
     # property (they arrive with many partitions)
-    return spread(src).mapInPandas(scan, schema=schema)
+    return spread(src, images).mapInArrow(scan, schema=schema)
 
 
 def _mask_hits(mask: BandMask, v: str) -> str:
@@ -888,11 +953,21 @@ def _slice_cells(slices: DataFrame, view: CubeView, *exprs: str) -> DataFrame:
     )
 
 
-def _id_order():
-    """The reference's (image_id, descriptor) order
-    (src/image_collection_cube.cpp:327) as a sortable struct: (len, id) is
-    numeric order for decimal ids of any length."""
-    return F.struct(F.length("image_id").alias("l"), F.col("image_id").alias("s"))
+# the reference's (image_id, descriptor) order
+# (src/image_collection_cube.cpp:327) as a sortable struct: (len, id) is
+# numeric order for decimal ids of any length
+_ID_ORDER = "named_struct('l', length(image_id), 's', image_id)"
+
+# aggregation -> the per-cell SQL aggregate of one scan column ({v})
+_CELL_AGGS = {
+    "mean": "avg({v})",
+    "min": "min({v})",
+    "max": "max({v})",
+    # first/last non-NaN in (image_id, descriptor) order
+    "first": f"min_by({{v}}, CASE WHEN {{v}} IS NOT NULL THEN {_ID_ORDER} END)",
+    "last": f"max_by({{v}}, CASE WHEN {{v}} IS NOT NULL THEN {_ID_ORDER} END)",
+    "median": "percentile({v}, 0.5)",
+}
 
 
 def build_cells_long(
@@ -944,28 +1019,13 @@ def build_cells_long(
             "it", "iy", "ix", *[f"CAST(coalesce(`n_{b}`, 0) AS DOUBLE) AS `{b}`" for b in bands])
     if agg == "none":
         owners = _touched(images, view, mask, True).groupBy("chunk_id", "it").agg(
-            F.max(_id_order()).getField("s").alias("image_id"))
+            F.expr(f"max({_ID_ORDER}).s AS image_id"))
         rows = contrib.selectExpr(
             "*", f"{ChunkGrid(view).chunk_of_sql('it', 'iy', 'ix')} AS chunk_id")
-        return rows.join(owners, ["chunk_id", "it", "image_id"]).select(
-            "it", "iy", "ix", *[F.col(f"`v_{b}`").alias(b) for b in bands])
-    aggs = []
-    for b in bands:
-        v = F.col(f"`v_{b}`")
-        if agg == "mean":
-            aggs.append(F.avg(v).alias(b))
-        elif agg == "min":
-            aggs.append(F.min(v).alias(b))
-        elif agg == "max":
-            aggs.append(F.max(v).alias(b))
-        elif agg == "first":
-            # first non-NaN in (image_id, descriptor) order
-            aggs.append(F.min_by(v, F.when(v.isNotNull(), _id_order())).alias(b))
-        elif agg == "last":
-            aggs.append(F.max_by(v, F.when(v.isNotNull(), _id_order())).alias(b))
-        elif agg == "median":
-            aggs.append(F.expr(f"percentile(`v_{b}`, 0.5)").alias(b))
-    return contrib.groupBy("it", "iy", "ix").agg(*aggs)
+        return rows.join(owners, ["chunk_id", "it", "image_id"]).selectExpr(
+            "it", "iy", "ix", *[f"`v_{b}` AS `{b}`" for b in bands])
+    return contrib.groupBy("it", "iy", "ix").agg(
+        *[F.expr(f"{_CELL_AGGS[agg].format(v=f'`v_{b}`')} AS `{b}`") for b in bands])
 
 
 def build_cube(

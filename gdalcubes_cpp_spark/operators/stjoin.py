@@ -122,7 +122,7 @@ def st_join(
     method."""
     spark = images.sparkSession
     chunks = chunks_df(spark, grid)
-    images = images.where(FINITE)
+    source, images = images, images.where(FINITE)
     if method == "auto":
         method = "broadcast" if grid.count <= BROADCAST_MAX_CHUNKS else "cells"
 
@@ -173,8 +173,9 @@ def st_join(
     if method in ("s2", "hex"):
         # narrow metadata rows: make sure the Arrow cover stage sees every
         # core (a small parquet scan may yield fewer splits than cores; the
-        # repartition is a cheap exchange of footprint tuples, never bytes)
-        images = spread(images)
+        # repartition is a cheap exchange of footprint tuples, never bytes);
+        # the caller's frame decides, so one collection is probed once
+        images = spread(images, source)
     img_c = images.withColumn(
         "cell", F.explode(cov(F.col("left"), F.col("right"), F.col("bottom"), F.col("top")))
     )

@@ -95,7 +95,7 @@ def default_view(images, chunk_size=(16, 256, 256)) -> CubeView:
     ).collect()[0]
     srs = row["srs"] if row["nsrs"] == 1 else "EPSG:3857"
     l, r, b, t = row["l"], row["r"], row["b"], row["t"]
-    if _srs.normalize(srs) == "EPSG:3857":
+    if _srs.resolve(srs)[0] is _srs.WEBMERC:
         l, r = float(_srs.lon_to_x(l)), float(_srs.lon_to_x(r))
         b, t = float(_srs.lat_to_y(b)), float(_srs.lat_to_y(t))
     import math

@@ -42,6 +42,8 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
+from ..partition import for_files
+
 
 def _stats_value(v):
     """JSON-safe, order-preserving encoding of a parquet stat value."""
@@ -156,7 +158,6 @@ class IceTable:
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
-        from pyspark.sql import functions as F
 
         if commit_key is not None:
             try:
@@ -166,11 +167,7 @@ class IceTable:
             except FileNotFoundError:
                 pass
 
-        if order_by:
-            par = n_files or df.sparkSession.sparkContext.defaultParallelism
-            df = df.repartitionByRange(par, F.col(order_by))
-        elif n_files:
-            df = df.repartition(n_files)
+        df = for_files(df, n_files, order_by)
 
         # stage the data files
         stage = os.path.join(self.path, f"_stage-{uuid.uuid4().hex}")

@@ -192,9 +192,9 @@ def images_df(spark, n: int, with_bytes: bool = True, partitions: int | None = N
     in production this is an Iceberg table scan; here the generator plays
     the table's role).
     """
-    parts = partitions or max(
-        spark.sparkContext.defaultParallelism * 3, min(1024, n // 2000 + 1)
-    )
+    from .partition import generator_width
+
+    parts = partitions or generator_width(spark, n)
     base = spark.range(0, n, 1, parts)
 
     def gen(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:

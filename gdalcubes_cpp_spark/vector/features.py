@@ -486,7 +486,8 @@ def read_features(spark, paths, srs: str | None = None, view=None,
     reference transforms layer SRS -> cube SRS, src/extract_geom.cpp:
     68-113)."""
     import pandas as pd
-    from pyspark.sql import functions as F
+
+    from ..partition import by_path
 
     if isinstance(paths, str):
         rows, detected = _parse_one(paths, layer=layer)
@@ -519,9 +520,8 @@ def read_features(spark, paths, srs: str | None = None, view=None,
                             [(base + fid, w, pr) for fid, w, pr in rows],
                             columns=["fid", "wkt", "props"])
 
-        df = (spark.createDataFrame(pd.DataFrame({"path": list(paths)}))
-              .repartition(min(len(paths), 64))
-              .mapInPandas(run, _FEATURES_SCHEMA))
+        df = by_path(spark.createDataFrame(pd.DataFrame({"path": list(paths)})),
+                     len(paths)).mapInPandas(run, _FEATURES_SCHEMA)
     f_srs = srs or detected or "EPSG:4326"
     if view is not None and f_srs is not None:
         from .. import srs as _srs_mod

@@ -162,7 +162,7 @@ def zonal_statistics(
 
     Output columns: fid, it, then ``{band}_{stat}`` (matches the reference's
     band-stat naming in the GeoPackage writer, :1090-1125)."""
-    from ..cube import _REDUCERS
+    from ..cube import _reduce
 
     for s in stats:
         if s not in _ZONAL_STATS:
@@ -171,7 +171,7 @@ def zonal_statistics(
     aggs = []
     for b in cube.bands:
         for s in stats:
-            aggs.append(_REDUCERS[s](f"`{b}`").cast("double").alias(f"{b}_{s}"))
+            aggs.append(_reduce(s, b, f"{b}_{s}"))
     return joined.groupBy("fid", "it").agg(*aggs)
 
 

@@ -13,9 +13,10 @@ held a copy before they moved there). Outside grid.py this rejects:
 benchqueries.py's DuckDB oracle SQL is the independent reference and is
 exempt.
 
-A second check holds the point of writing the grid as SQL text: building
-the lazy plan of an assignment and of a count_values cube stays under a
-py4j round-trip budget."""
+A second check holds the point of writing the grid and the aggregates as
+SQL text: building the lazy plan of an assignment, a count_values cube and a
+second mean cube from one collection stays under a py4j round-trip budget,
+and the second cube does not plan the collection's scan again."""
 
 from __future__ import annotations
 
@@ -132,24 +133,32 @@ def test_grid_builds_no_column():
 
 @pytest.fixture
 def py4j_calls(monkeypatch):
+    """The py4j commands the driver sends, minus py4j's own memory
+    commands (the deletes of garbage-collected Java references, which come
+    and go with the Python GC)."""
     from py4j.java_gateway import GatewayClient
 
-    calls = [0]
+    calls: list = []
     send = GatewayClient.send_command
 
-    def counted(self, *a, **kw):
-        calls[0] += 1
-        return send(self, *a, **kw)
+    def counted(self, command, *a, **kw):
+        if not command.startswith("m\n"):
+            calls.append(command)
+        return send(self, command, *a, **kw)
 
     monkeypatch.setattr(GatewayClient, "send_command", counted)
     return calls
 
 
 def test_plan_build_py4j_budget(spark, py4j_calls):
-    """Building (lazily, no job) an assignment and a count_values cube on a
-    small 4326 view, 2 degrees and 1 month in 1x32x32 chunks, takes fewer
-    than 100 and 400 py4j round trips (631 and 977 when every chunk bound
-    was a chain of Column operators)."""
+    """Building (lazily, no job) an assignment, a count_values cube and a
+    mean cube on a small 4326 view, 2 degrees and 1 month in 1x32x32
+    chunks, takes fewer than 45, 200 and 125 py4j round trips (631 and 977
+    for the first two when every chunk bound was a chain of Column
+    operators; 38, 182 and 114 with the grid and the aggregates as SQL
+    text). The mean cube is the second from the same ``images`` object:
+    partition.spread's probe of the collection is cached on it, so it
+    plans no scan (no javaToPython)."""
     from gdalcubes_cpp_spark import synth
     from gdalcubes_cpp_spark.grid import ChunkGrid
     from gdalcubes_cpp_spark.operators.build import build_cube
@@ -163,9 +172,11 @@ def test_plan_build_py4j_budget(spark, py4j_calls):
                                ny=40, t0="2020-02-01", t1="2020-02-29", dt="P1M",
                                aggregation=agg, chunk_size=(1, 32, 32))
 
-    for build, budget in ((lambda: assignment(images, ChunkGrid(view("mean"))), 100),
-                          (lambda: build_cube(images, view("count_values")).df, 400)):
+    for build, budget in ((lambda: assignment(images, ChunkGrid(view("mean"))), 45),
+                          (lambda: build_cube(images, view("count_values")).df, 200),
+                          (lambda: build_cube(images, view("mean")).df, 125)):
         build()  # first build: one-off lookups
-        py4j_calls[0] = 0
+        py4j_calls.clear()
         build()
-        assert py4j_calls[0] < budget
+        assert len(py4j_calls) < budget
+        assert not [c for c in py4j_calls if "\njavaToPython\n" in c]

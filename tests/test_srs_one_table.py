@@ -4,8 +4,10 @@ Every SRS resolves through srs.py's one family table (srs.resolve). A
 module that parses or builds a dynamic key itself, calls a per-family
 resolver or indexes a family table would fork the decision "which family,
 with which parameters": a new family or key format would then have to be
-taught to two places. This parses every module of the package except
-srs.py and checks for those three patterns."""
+taught to two places. Comparing ``normalize(...)`` with an EPSG literal
+is the same fork by code: it tests one spelling of a family instead of the
+family (``srs.resolve(x)[0] is srs.WGS84``). This parses every module of
+the package except srs.py and checks for those four patterns."""
 
 from __future__ import annotations
 
@@ -46,11 +48,31 @@ def _srs_private(expr, mods, imported, pattern):
     return None
 
 
+def _is_normalize(node) -> bool:
+    f = node.func if isinstance(node, ast.Call) else None
+    return (isinstance(f, ast.Attribute) and f.attr == "normalize"
+            or isinstance(f, ast.Name) and f.id == "normalize")
+
+
+def _is_epsg(node) -> bool:
+    return (isinstance(node, ast.Constant) and isinstance(node.value, str)
+            and node.value.startswith("EPSG:"))
+
+
 def _violations(path: pathlib.Path) -> list:
-    tree = ast.parse(path.read_text(encoding="utf-8"))
+    return _source_violations(path.read_text(encoding="utf-8"))
+
+
+def _source_violations(src: str) -> list:
+    tree = ast.parse(src)
     mods, imported = _srs_names(tree)
     out = []
     for node in ast.walk(tree):
+        if isinstance(node, ast.Compare) and any(
+                isinstance(op, (ast.Eq, ast.NotEq)) for op in node.ops):
+            sides = [node.left, *node.comparators]
+            if any(map(_is_normalize, sides)) and any(map(_is_epsg, sides)):
+                out.append(f"line {node.lineno}: normalize(...) compared with an EPSG literal")
         if isinstance(node, ast.Call):
             name = _srs_private(node.func, mods, imported, _RESOLVER)
             if name:
@@ -69,6 +91,17 @@ def test_guard_sees_srs_use():
     tree = ast.parse((PKG / "benchqueries.py").read_text(encoding="utf-8"))
     mods, _ = _srs_names(tree)
     assert "_srs" in mods  # the guard parses what it should
+
+
+def test_guard_flags_epsg_comparisons():
+    for src in ('if _srs.normalize(s) == "EPSG:3857": pass',
+                'ok = "EPSG:4326" != srs.normalize(v.srs)',
+                'ok = normalize(a) == "EPSG:32632"'):
+        assert _source_violations(src), src
+    for src in ("if _srs.resolve(s)[0] is _srs.WEBMERC: pass",
+                "same = normalize(a) == normalize(b)",
+                'ok = s == "EPSG:4326"'):
+        assert not _source_violations(src), src
 
 
 def test_family_decision_only_in_srs():
