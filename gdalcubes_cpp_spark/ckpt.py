@@ -1,14 +1,25 @@
-"""Per-partition lineage + metrics checkpointing for resumable cube runs
-(BASELINE.json north_rule).
+"""Resumable cube runs with per-part lineage + metrics (BASELINE.json
+north_rule).
 
-A materialization run is split into ``n_parts`` contiguous chunk-id ranges.
-Each part is processed as an independent Spark job whose output lands in a
-parquet sink partitioned by ``part_id``; on success one lineage row
-(part_id, chunk range, row count, order-insensitive value digest, wall
-seconds, attempt) is appended to ``<sink>/_lineage``. Restarting the run
-skips every part already present in the lineage table — idempotent resume
-with no duplicate output (each part overwrites its own partition directory
-via dynamic partition overwrite).
+A run splits the cube's chunk ids into ``n_parts`` contiguous blocks and
+commits each block's cells to an IceTable (sources/icetable.py) as one
+snapshot. The snapshot's summary is the part's lineage row: part, chunk
+range, rows, order-insensitive value digest, wall seconds and attempt (one
+more than the part's earlier snapshots in the chain). A part is done when
+the head snapshot holds its manifest, so a run killed anywhere before a
+commit leaves nothing for a resume to undo.
+
+Resume re-reads each committed part and checks its rows and digest against
+its lineage row. A part whose files are missing or do not match runs again,
+and its snapshot replaces the old manifest. A resume whose blocks differ
+from the committed ones (another ``n_parts``) raises: its parts would
+overlap the committed cells.
+
+Each part pre-filters the images in the JVM with build._view_window
+narrowed to its block (grid.block_bounds), builds over the whole view and
+keeps the block's chunk ids. An image is decoded by the parts whose blocks
+its footprint and time meet, so blocks of whole time slabs decode each
+image once over the run.
 
 The reference's swarm mode has no resume at all — a dead worker loses its
 chunks (src/swarm.cpp:265-297 assigns round-robin and only gathers);
@@ -17,88 +28,79 @@ this module is the distributed-native replacement.
 
 from __future__ import annotations
 
+import os
 import time
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, functions as F
 
-LINEAGE_SCHEMA = (
-    "part_id int, chunk_lo long, chunk_hi long, n_rows long, digest long, "
-    "wall_s double, attempt int"
-)
-
-
-def value_digest(df: DataFrame, cols=None) -> F.Column:
-    """Order-insensitive content digest: sum of crc32 over the row images.
-    Cheap, associative (partial-aggregatable), good enough for lineage
-    integrity checks (not cryptographic)."""
-    cols = cols or df.columns
-    row = F.concat_ws("\x1f", *[F.col(f"`{c}`").cast("string") for c in cols])
-    return F.sum(F.crc32(row))
+from .grid import ChunkGrid
+from .operators.build import _view_window, build_cube
+from .sources.icetable import IceTable
+from .view import CubeView
 
 
-def _lineage_path(sink: str) -> str:
-    return sink + "/_lineage"
+def value_digest(df: DataFrame) -> F.Column:
+    """Order-insensitive content digest: sum of crc32 over each row's JSON
+    text. Cheap, associative (partial-aggregatable); JSON names every field,
+    so where a NULL sits changes the digest. An integrity check, not a
+    cryptographic one."""
+    return F.sum(F.crc32(F.to_json(F.struct(*[F.col(f"`{c}`") for c in df.columns]))))
 
 
-def completed_parts(spark: SparkSession, sink: str) -> set:
-    try:
-        rows = spark.read.parquet(_lineage_path(sink)).select("part_id").collect()
-        return {r["part_id"] for r in rows}
-    except Exception:
-        return set()
+def _stats(df: DataFrame) -> tuple:
+    r = df.agg(F.count("*").alias("n"), value_digest(df).alias("d")).first()
+    return r["n"], r["d"] or 0
 
 
-def read_lineage(spark: SparkSession, sink: str) -> DataFrame:
-    return spark.read.parquet(_lineage_path(sink))
+def _intact(spark, table: IceTable, snap: dict) -> bool:
+    """The part's committed files exist and hold its lineage row's rows and
+    digest."""
+    paths = [os.path.join(table.path, e["path"]) for e in table.entries(snap["manifests"][-1])]
+    if not all(map(os.path.exists, paths)):
+        return False
+    got = _stats(spark.read.parquet(*paths)) if paths else (0, 0)
+    return got == (snap["summary"]["rows"], snap["summary"]["digest"])
 
 
-def run_partitioned(
-    cells: DataFrame,
-    sink: str,
-    n_chunks: int,
-    n_parts: int = 8,
-    chunk_col: str = "chunk_id",
-    attempt: int = 1,
-) -> dict:
-    """Materialize ``cells`` (must carry ``chunk_col``) into ``sink`` in
-    resumable parts. Returns run metrics {parts_run, parts_skipped, rows}.
-
-    Each part filters on a chunk-id range. For a cube, pass
-    ``build_cube(...).with_chunk_id()``: chunk_id derives from the grouping
-    keys (it, iy, ix), so Catalyst pushes the range filter below the
-    aggregate, but not into the scan — every part re-reads and decodes the
-    image rows its view window keeps."""
-    spark = cells.sparkSession
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    done = completed_parts(spark, sink)
-    per = max(1, (n_chunks + n_parts - 1) // n_parts)
-    ran, skipped, total_rows = 0, 0, 0
-    for p in range(n_parts):
-        if p in done:
+def run_partitioned(images: DataFrame, view: CubeView, sink: str, n_parts: int = 8,
+                    **build_kw) -> dict:
+    """Build the cube of ``images`` over ``view`` (``build_kw`` as
+    build_cube's) into the IceTable at ``sink`` in resumable parts; returns
+    {parts_run, parts_skipped, rows}. The table holds the cube's cells and
+    their chunk_id."""
+    table = IceTable(sink)
+    grid = ChunkGrid(view)
+    per = -(-grid.count // n_parts)
+    blocks = {p: (p * per, min((p + 1) * per, grid.count))
+              for p in range(n_parts) if p * per < grid.count}
+    table.head()  # adopt a part a killed run published without its pointer
+    snaps = table.snapshots()
+    live = set(snaps[-1]["manifests"]) if snaps else set()
+    done = {s["summary"]["part"]: s for s in snaps if s["manifests"][-1] in live}
+    for p, s in done.items():
+        if blocks.get(p) != (s["summary"]["chunk_lo"], s["summary"]["chunk_hi"]):
+            raise ValueError(f"{sink} holds part {p} over chunks [{s['summary']['chunk_lo']}, "
+                             f"{s['summary']['chunk_hi']}); this run's parts are {blocks}")
+    ran, skipped, rows = 0, 0, 0
+    for p, (lo, hi) in blocks.items():
+        old = done.get(p)
+        if old is not None and _intact(images.sparkSession, table, old):
             skipped += 1
             continue
-        lo, hi = p * per, min((p + 1) * per, n_chunks)
-        if lo >= hi:
-            continue
         t0 = time.time()
-        part = cells.filter((F.col(chunk_col) >= lo) & (F.col(chunk_col) < hi)).withColumn(
-            "part_id", F.lit(p)
-        )
-        part.write.mode("overwrite").partitionBy("part_id").parquet(sink)
-        stats = (
-            spark.read.parquet(sink)
-            .filter(F.col("part_id") == p)
-            .agg(
-                F.count("*").alias("n"),
-                value_digest(cells.drop(chunk_col)).alias("d"),
-            )
-            .collect()[0]
-        )
-        wall = time.time() - t0
-        spark.createDataFrame(
-            [(p, lo, hi, stats["n"], stats["d"] or 0, wall, attempt)],
-            schema=LINEAGE_SCHEMA,
-        ).write.mode("append").parquet(_lineage_path(sink))
+        window = _view_window(view, grid.block_bounds(lo, hi))
+        part = (build_cube(images if window is None else images.where(window), view, **build_kw)
+                .with_chunk_id().where(f"chunk_id >= {lo} AND chunk_id < {hi}").persist())
+        try:
+            n, digest = _stats(part)
+            attempt = 1 + sum(s["summary"]["part"] == p for s in snaps)
+            table.append(
+                part, commit_key=f"part-{p}.{attempt}",
+                replace=[old["manifests"][-1]] if old is not None else [],
+                summary={"part": p, "chunk_lo": lo, "chunk_hi": hi, "rows": n,
+                         "digest": digest, "wall_s": time.time() - t0, "attempt": attempt})
+        finally:
+            part.unpersist()
         ran += 1
-        total_rows += stats["n"]
-    return {"parts_run": ran, "parts_skipped": skipped, "rows": total_rows}
+        rows += n
+    return {"parts_run": ran, "parts_skipped": skipped, "rows": rows}

@@ -110,6 +110,28 @@ class ChunkGrid:
             "it0": t0, "it1": t1, "iy0": y0, "iy1": y1, "ix0": x0, "ix1": x1,
         }
 
+    def block_bounds(self, lo: int, hi: int) -> dict:
+        """Map + time bounds of the chunk ids [lo, hi): the box around their
+        chunk_bounds, t_end None (open) past year 9999. Ids run x-fastest,
+        so a block inside one chunk row spans its own columns, one inside a
+        time slab whole rows, and one that crosses slabs the whole map
+        extent."""
+        v = self.view
+        (ct0, cy0, cx0), (ct1, cy1, cx1) = self.chunk_coords(lo), self.chunk_coords(hi - 1)
+        if ct0 != ct1:
+            cy0, cy1 = 0, self.ncy - 1
+        if (ct0, cy0) != (ct1, cy1):
+            cx0, cx1 = 0, self.ncx - 1
+        (it0, _), (iy0, _), (ix0, _) = self.chunk_limits(self.chunk_id(ct0, cy0, cx0))
+        (_, it1), (_, iy1), (_, ix1) = self.chunk_limits(self.chunk_id(ct1, cy1, cx1))
+        try:
+            t_end = self._t_end(it1)
+        except (OverflowError, ValueError):
+            t_end = None
+        return {"left": v.left + ix0 * v.dx, "right": v.left + ix1 * v.dx,
+                "bottom": v.top - iy1 * v.dy, "top": v.top - iy0 * v.dy,
+                "t_start": v.datetime_at(it0), "t_end": t_end}
+
     def chunk_ids(self):
         return range(self.count)
 

@@ -828,7 +828,7 @@ def _scan_batch(
     return pa.RecordBatch.from_pydict(out)
 
 
-def _view_window(view: CubeView) -> str | None:
+def _view_window(view: CubeView, bounds: dict | None = None) -> str | None:
     """JVM-side pre-filter for the scan: a SUPERSET of the image rows that
     can emit a cell or land in a slice, so the Python workers receive only
     those. One SQL predicate: the driver builds it in one py4j call rather
@@ -838,23 +838,31 @@ def _view_window(view: CubeView) -> str | None:
     half a cell inside the extent, so the non-strict bounds keep every image
     the scan's strict center test accepts). Time: [t0, t0 + nt steps) —
     an image lands in a slot only at or after its chunk's t_start, and
-    slot nt-1 ends at the latest at t0 + nt steps. Literals are cast in the
-    session time zone, the zone the Arrow hand-off renders ``ts`` in. None
-    where no exact cheap bound exists: labeled time axes, and
-    non-separable view SRS (a separable SRS maps corners to corners, so
+    slot nt-1 ends at the latest at t0 + nt steps. ``bounds``
+    (grid.block_bounds) narrows both to a block of chunks: its map box and
+    [t_start, t_end), the rows that can reach the block's cells. Literals
+    are cast in the session time zone, the zone the Arrow hand-off renders
+    ``ts`` in. None where no exact cheap bound exists: labeled time axes,
+    and non-separable view SRS (a separable SRS maps corners to corners, so
     srs.bbox_to_wgs84 is exact there).
     """
     from .. import srs as _srs
 
     if view.labeled or not _srs.is_separable(view.srs):
         return None
-    x0, x1, y0, y1 = (repr(float(c)) for c in _srs.bbox_to_wgs84(
-        view.left, view.right, view.bottom, view.top, view.srs))
+    if bounds is None:
+        box, lo = (view.left, view.right, view.bottom, view.top), view.t0
+        try:
+            hi = add_duration(view.t0, view.dt, view.nt)
+        except (OverflowError, ValueError):  # past year 9999: no upper bound
+            hi = None
+    else:
+        box = (bounds["left"], bounds["right"], bounds["bottom"], bounds["top"])
+        lo, hi = bounds["t_start"], bounds["t_end"]
+    x0, x1, y0, y1 = (repr(float(c)) for c in _srs.bbox_to_wgs84(*box, view.srs))
     cond = (f"`left` <= {x1}D AND `right` >= {x0}D AND `bottom` <= {y1}D AND `top` >= {y0}D"
-            f" AND ts >= CAST('{view.t0.isoformat(sep=' ')}' AS TIMESTAMP)")
-    try:
-        hi = add_duration(view.t0, view.dt, view.nt)
-    except (OverflowError, ValueError):  # past year 9999: no upper bound
+            f" AND ts >= CAST('{lo.isoformat(sep=' ')}' AS TIMESTAMP)")
+    if hi is None:
         return cond
     return cond + f" AND ts < CAST('{hi.isoformat(sep=' ')}' AS TIMESTAMP)"
 

@@ -17,9 +17,17 @@ column min/max, and hands Spark ONLY the surviving file list. Appends are
 O(new files) metadata writes + one atomic pointer create; concurrent
 committers race on the ``v<N>.json`` create and the loser retries against
 the new state (optimistic concurrency, same protocol as the spec).
-Snapshots are immutable so readers are isolated and time travel is free;
-``commit_key`` dedup makes appends idempotent for exactly-once streaming
-sinks (streaming/ingest.py's manifest, generalized).
+Snapshots are immutable so readers are isolated and time travel is free.
+
+``append`` is the package's one durable commit. ``commit_key`` dedup makes
+it idempotent (exactly-once streaming sinks); ``summary`` stores the
+caller's record of the commit in the snapshot; ``replace`` drops parent
+manifests (Iceberg's overwrite). A writer reads the head it builds on
+through ``head()``, which first adopts a snapshot whose committer crashed
+before creating its pointer. ckpt.py commits each part of a resumable
+run as a snapshot whose summary is the part's lineage row; streaming/
+ingest.py commits each aggregation-state version as a snapshot that
+replaces its parent's manifests and records the source files folded so far.
 
 Write clustering: ``order_by`` repartitionByRange-clusters rows before
 the write so file min/max ranges are DISJOINT — that is what turns stats
@@ -105,38 +113,41 @@ class IceTable:
     # ------------------------------------------------------------- state
 
     def current_version(self) -> int:
-        vs = [
-            int(f[1:-5])
-            for f in os.listdir(self.meta)
-            if f.startswith("v") and f.endswith(".json")
-        ]
-        if not vs:
-            raise FileNotFoundError(f"no committed version under {self.meta}")
-        return max(vs)
+        """The head snapshot id; 0 before the first commit."""
+        if not os.path.isdir(self.meta):
+            return 0
+        return max((int(f[1:-5]) for f in os.listdir(self.meta)
+                    if f.startswith("v") and f.endswith(".json")), default=0)
+
+    def head(self) -> int:
+        """The head snapshot id, after publishing the pointer of a snapshot
+        a crashed committer linked but did not point to (what a retrying
+        committer does). Writers read the state they build on through it."""
+        n = self.current_version()
+        while os.path.exists(os.path.join(self.meta, f"snap-{n + 1}.json")):
+            n += 1
+            self._publish_pointer(n)
+        return n
 
     def snapshot(self, snapshot: int | None = None) -> dict:
         n = self.current_version() if snapshot is None else snapshot
+        if n == 0:
+            raise FileNotFoundError(f"no committed version under {self.meta}")
         with open(os.path.join(self.meta, f"snap-{n}.json")) as fh:
             return json.load(fh)
 
     def snapshots(self) -> list[dict]:
-        out = []
-        for n in range(1, self.current_version() + 1):
-            p = os.path.join(self.meta, f"snap-{n}.json")
-            if os.path.exists(p):
-                with open(p) as fh:
-                    out.append(json.load(fh))
-        return out
+        """The committed snapshots, oldest first."""
+        return [self.snapshot(n) for n in range(1, self.current_version() + 1)]
 
-    def files(self, snapshot: int | None = None) -> list[dict]:
+    def entries(self, manifest: str) -> list[dict]:
+        """The data-file entries of one manifest."""
         import pyarrow.parquet as pq
 
-        snap = self.snapshot(snapshot)
-        entries = []
-        for m in snap["manifests"]:
-            t = pq.read_table(os.path.join(self.meta, m))
-            entries.extend(t.to_pylist())
-        return entries
+        return pq.read_table(os.path.join(self.meta, manifest)).to_pylist()
+
+    def files(self, snapshot: int | None = None) -> list[dict]:
+        return [e for m in self.snapshot(snapshot)["manifests"] for e in self.entries(m)]
 
     # ------------------------------------------------------------ commit
 
@@ -144,29 +155,37 @@ class IceTable:
     def create(spark: SparkSession, path: str, df: DataFrame,
                order_by: str | None = None, n_files: int | None = None) -> "IceTable":
         t = IceTable(path)
-        os.makedirs(t.meta, exist_ok=True)
-        os.makedirs(t.data, exist_ok=True)
         t.append(df, order_by=order_by, n_files=n_files)
         return t
 
+    def _keyed(self, commit_key: str | None) -> int | None:
+        """The id of the snapshot committed under ``commit_key``, if any; a
+        crashed commit's snapshot counts (it is adopted first)."""
+        if commit_key is not None:
+            for n in range(1, self.head() + 1):
+                if self.snapshot(n)["summary"].get("commit_key") == commit_key:
+                    return n
+        return None
+
     def append(self, df: DataFrame, commit_key: str | None = None,
-               order_by: str | None = None, n_files: int | None = None) -> int:
+               order_by: str | None = None, n_files: int | None = None,
+               summary: dict | None = None, replace=()) -> int:
         """Commit ``df`` as a new snapshot; returns its id. ``commit_key``
         makes retries idempotent (a snapshot carrying the same key wins and
         the duplicate append is skipped). ``order_by`` range-clusters the
-        write so file stats are disjoint along that column."""
+        write so file stats are disjoint along that column. ``summary`` is
+        stored in the snapshot's summary. ``replace`` names parent
+        manifests the new snapshot drops; a head that no longer holds them
+        is a commit conflict and raises."""
         import pandas as pd
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        if commit_key is not None:
-            try:
-                for s in self.snapshots():
-                    if s["summary"].get("commit_key") == commit_key:
-                        return s["snapshot_id"]
-            except FileNotFoundError:
-                pass
-
+        done = self._keyed(commit_key)
+        if done is not None:
+            return done
+        os.makedirs(self.meta, exist_ok=True)
+        os.makedirs(self.data, exist_ok=True)
         df = for_files(df, n_files, order_by)
 
         # stage the data files
@@ -203,27 +222,31 @@ class IceTable:
         # winner's snapshot). The v<n>.json pointer is created after the
         # snapshot is visible, so a reader that sees v<n> always finds a
         # complete snap-<n>. If a committer crashes between the two steps,
-        # the next committer "adopts" the orphan by creating v<n> itself
-        # (idempotent: the content is just {"snapshot_id": n}).
+        # head() "adopts" the orphan by creating v<n> itself (idempotent:
+        # the content is just {"snapshot_id": n}) and the commit_key is
+        # checked against the adopted chain before each attempt.
         schema_json = df.schema.json()
         while True:
-            try:
-                head = self.current_version()
-                parent = self.snapshot(head)
-                prev_manifests = parent["manifests"]
-                prev_id = parent["snapshot_id"]
-            except FileNotFoundError:
-                head, prev_manifests, prev_id = 0, [], None
+            head = self.head()
+            done = self._keyed(commit_key)
+            if done is not None:
+                return done
+            parent = self.snapshot(head) if head else {"snapshot_id": None, "manifests": []}
+            gone = set(replace) - set(parent["manifests"])
+            if gone:
+                raise ValueError(f"commit conflict: snapshot {head} of {self.path} "
+                                 f"no longer holds {sorted(gone)}")
             n = head + 1
             snap = {
                 "snapshot_id": n,
-                "parent_id": prev_id,
-                "manifests": prev_manifests + [manifest],
+                "parent_id": parent["snapshot_id"],
+                "manifests": [m for m in parent["manifests"] if m not in replace] + [manifest],
                 "schema": schema_json,
                 "summary": {
                     "added_files": len(entries),
                     "added_rows": int(sum(e["n_rows"] for e in entries)),
                     "commit_key": commit_key,
+                    **(summary or {}),
                 },
             }
             tmp = os.path.join(self.meta, f".snap-{n}.{uuid.uuid4().hex}.tmp")
@@ -234,7 +257,6 @@ class IceTable:
                 os.link(tmp, snap_path)
             except FileExistsError:
                 os.unlink(tmp)
-                self._publish_pointer(n)  # finish a crashed commit, if any
                 continue  # another committer owns n; retry on the new head
             os.unlink(tmp)
             self._publish_pointer(n)

@@ -14,63 +14,39 @@ running extreme; count_* → running count, zero-filled slices included).
 Every method but mean folds the batch's own build_cube cells.
 
 Exactly-once: foreachBatch is at-least-once (a microbatch can replay after a
-failure that committed the sink write but not the checkpoint), so the sink's
-``manifest.json`` records the PROCESSED SOURCE FILES and the fold drops
+failure that committed the sink write but not the checkpoint), so each
+state version records the PROCESSED SOURCE FILES and the fold drops
 already-merged files from a replayed batch. Keying on files instead of the
 raw batch_id (r2 ADVICE) makes the dedup sound across checkpoint loss:
 after a wiped checkpoint Structured Streaming restarts batch ids at 0 and
 re-bundles old+new files into one batch — a batch_id skip would silently
-discard the NEW files, a file filter merges exactly them. State writes are
-versioned (``state_v{N}`` directories) with an atomically-replaced
-``manifest.json`` pointer — a crash mid-write leaves the previous version
-intact and readable. At production scale, compact the manifest's file list
-periodically (e.g. roll files older than the source's maxFileAge into a
-watermark entry); the list is one path string per ingested FILE, not row.
+discard the NEW files, a file filter merges exactly them. The sink is an
+IceTable (sources/icetable.py): each state version is one snapshot that
+replaces every parent manifest, and its summary holds the processed-file
+set, so the state and its file set commit together. A crash before the
+commit leaves the previous version the head; one between the snapshot and
+its pointer leaves a complete snapshot that the next fold adopts
+(IceTable.head) and folds onto. A snapshot the fold cannot read fails the
+batch instead of restarting the state. At
+production scale, compact the file list periodically (e.g. roll files older
+than the source's maxFileAge into a watermark entry); it is one path string
+per ingested FILE, not row.
 """
 
 from __future__ import annotations
 
-import json
-import os
-
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from ..operators.build import build_cube, scan_cells
+from ..sources.icetable import IceTable
 from ..view import CubeView
 
 STATE_AGGS = ("mean", "min", "max", "count_values", "count_images")
-
-_MANIFEST = "manifest.json"
 
 
 def stream_images(spark: SparkSession, input_dir: str, schema_ddl: str) -> DataFrame:
     """File-source stream of image rows (parquet dropped into input_dir)."""
     return spark.readStream.schema(schema_ddl).parquet(input_dir)
-
-
-def _read_manifest(sink: str) -> dict | None:
-    path = os.path.join(sink, _MANIFEST)
-    try:
-        with open(path) as f:
-            return json.load(f)
-    except (FileNotFoundError, json.JSONDecodeError):
-        return None
-
-
-def _write_manifest(sink: str, version: int, batch_id: int, files) -> None:
-    """Atomic pointer update: tmp file + os.replace (POSIX atomic rename)."""
-    os.makedirs(sink, exist_ok=True)
-    path = os.path.join(sink, _MANIFEST)
-    tmp = path + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(
-            {"version": version, "last_batch_id": batch_id, "files": sorted(files)}, f
-        )
-    os.replace(tmp, path)
-
-
-def _state_dir(sink: str, version: int) -> str:
-    return os.path.join(sink, f"state_v{version}")
 
 
 def _merge_states(acc: DataFrame, delta: DataFrame, keys, agg: str) -> DataFrame:
@@ -102,10 +78,10 @@ def incremental_build(
     bands=("B1", "B2"),
     value_fn=None,
 ):
-    """Start the stream; returns the StreamingQuery. Sink layout:
-    ``sink/manifest.json`` (current version + last merged batch_id) +
-    ``sink/state_v{N}/`` parquet of per-cell aggregation STATE (sum/cnt or
-    min/max/count) — finalize with ``finalize_state``."""
+    """Start the stream; returns the StreamingQuery. ``sink`` is an IceTable
+    whose head snapshot holds the per-cell aggregation STATE (sum/cnt or
+    min/max/count) and, in its summary, the processed source files —
+    finalize with ``finalize_state``."""
     from ..synth import SCHEMA_DDL
 
     agg = view.aggregation
@@ -120,12 +96,14 @@ def incremental_build(
     def fold(batch_df: DataFrame, batch_id: int):
         if batch_df.isEmpty():
             return
-        man = _read_manifest(sink)
+        table = IceTable(sink)
+        head = table.head()
+        state = table.snapshot(head) if head else None
         # exactly-once by SOURCE FILE (r2 ADVICE): drop already-merged files
         # from this batch; merge whatever is genuinely new. Sound across
         # both microbatch replay AND checkpoint loss (where batch ids reset
         # to 0 and old+new files can arrive bundled in one batch).
-        done = set(man.get("files", ())) if man is not None else set()
+        done = set(state["summary"]["files"]) if state is not None else set()
         batch_files = {
             r[0] for r in batch_df.select(F.input_file_name()).distinct().collect()
         }
@@ -147,14 +125,12 @@ def incremental_build(
         else:
             cells = build_cube(batch_df, view, bands, value_fn=value_fn).df
             delta = cells.select(*keys, *[F.col(b).alias(f"{b}_state") for b in bands])
-        next_version = 0 if man is None else man["version"] + 1
-        if man is None:
+        if state is None:
             merged = delta
         else:
-            acc = spark.read.parquet(_state_dir(sink, man["version"]))
-            merged = _merge_states(acc, delta, keys, agg)
-        merged.write.mode("overwrite").parquet(_state_dir(sink, next_version))
-        _write_manifest(sink, next_version, batch_id, done | new_files)  # atomic commit
+            merged = _merge_states(table.read(spark, snapshot=head), delta, keys, agg)
+        table.append(merged, replace=state["manifests"] if state is not None else (),
+                     summary={"files": sorted(done | new_files)})
 
     return (
         stream.writeStream.foreachBatch(fold)
@@ -168,10 +144,7 @@ def finalize_state(spark: SparkSession, sink: str, view: CubeView, bands=("B1", 
     """State table -> Cube (mean = sum/cnt; others are the state itself)."""
     from ..cube import Cube
 
-    man = _read_manifest(sink)
-    if man is None:
-        raise FileNotFoundError(f"no committed state under {sink}")
-    df = spark.read.parquet(_state_dir(sink, man["version"]))
+    df = IceTable(sink).read(spark)
     if view.aggregation == "mean":
         out = df.select(
             "it", "iy", "ix",
@@ -198,14 +171,7 @@ def stream_to_icetable(stream: DataFrame, table_path: str,
     manifest of our own (the snapshot chain IS the manifest).
 
     Returns the StreamingQuery; the caller awaits/stops it."""
-    from ..sources.icetable import IceTable
-
     def commit(batch_df: DataFrame, batch_id: int):
-        import os
-
-        if not os.path.isdir(os.path.join(table_path, "metadata")):
-            os.makedirs(os.path.join(table_path, "metadata"), exist_ok=True)
-            os.makedirs(os.path.join(table_path, "data"), exist_ok=True)
         IceTable(table_path).append(
             batch_df, commit_key=f"batch-{batch_id}", order_by=order_by
         )

@@ -1,14 +1,19 @@
 """Resumable checkpointed runs, JSON plans, streaming ingestion."""
 
 import json
+import os
 
 import numpy as np
+import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
 from gdalcubes_cpp_spark import ckpt, synth
 from gdalcubes_cpp_spark.grid import ChunkGrid
-from gdalcubes_cpp_spark.operators.build import build_cube
+from gdalcubes_cpp_spark.operators.build import build_cube, default_decode
+from gdalcubes_cpp_spark.sources.icetable import IceTable
 from gdalcubes_cpp_spark.plans.jsonplan import plan_from_json
 from gdalcubes_cpp_spark.view import CubeView
 
@@ -21,38 +26,205 @@ def view_small(**kw):
     return CubeView.create(**args)
 
 
-def test_checkpointed_run_and_resume(spark, tmp_path):
-    v = view_small()
-    g = ChunkGrid(v)
-    imgs = synth.images_df(spark, 150)
-    cells = build_cube(imgs, v).with_chunk_id()
-    sink = str(tmp_path / "sink")
+def _rows(df):
+    """The cells of ``df`` as a pandas frame in (it, iy, ix) order."""
+    return df.toPandas().sort_values(["it", "iy", "ix"]).reset_index(drop=True)
 
-    m1 = ckpt.run_partitioned(cells, sink, g.count, n_parts=4)
+
+@pytest.fixture(scope="module")
+def run_inputs(spark):
+    """view_small, its 150 images and the rows of the uninterrupted build."""
+    v = view_small()
+    imgs = synth.images_df(spark, 150)
+    return v, imgs, _rows(build_cube(imgs, v).with_chunk_id())
+
+
+def _part_files(table, part):
+    """The data files of ``part``'s live snapshot."""
+    live = table.snapshot()["manifests"]
+    snap = next(s for s in table.snapshots()
+                if s["summary"]["part"] == part and s["manifests"][-1] in live)
+    return [os.path.join(table.path, e["path"]) for e in table.entries(snap["manifests"][-1])]
+
+
+def test_checkpointed_run_and_resume(spark, tmp_path, run_inputs):
+    v, imgs, want = run_inputs
+    sink = str(tmp_path / "sink")
+    t = IceTable(sink)
+
+    m1 = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
     assert m1["parts_run"] == 4 and m1["parts_skipped"] == 0
-    rows1 = spark.read.parquet(sink).count()
-    lin = ckpt.read_lineage(spark, sink).toPandas()
-    assert len(lin) == 4
-    assert lin["n_rows"].sum() == rows1
+    lin = [s["summary"] for s in t.snapshots()]
+    assert [r["part"] for r in lin] == [0, 1, 2, 3]
+    assert sum(r["rows"] for r in lin) == m1["rows"] == len(want)
+    pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
 
     # resume: everything skips, output unchanged
-    m2 = ckpt.run_partitioned(cells, sink, g.count, n_parts=4)
+    m2 = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
     assert m2["parts_run"] == 0 and m2["parts_skipped"] == 4
-    assert spark.read.parquet(sink).count() == rows1
+    assert len(t.snapshots()) == 4
+    pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
 
-    # simulate a dead part: drop one lineage row -> only that part re-runs
-    lin2 = lin[lin["part_id"] != 2]
-    import shutil
-
-    shutil.rmtree(sink + "/_lineage")
-    spark.createDataFrame(lin2, schema=ckpt.LINEAGE_SCHEMA).write.parquet(sink + "/_lineage")
-    m3 = ckpt.run_partitioned(cells, sink, g.count, n_parts=4, attempt=2)
+    # simulate a dead part: delete its data -> only that part re-runs
+    for f in _part_files(t, 2):
+        os.remove(f)
+    m3 = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
     assert m3["parts_run"] == 1 and m3["parts_skipped"] == 3
-    assert spark.read.parquet(sink).count() == rows1  # idempotent overwrite
+    pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
 
     # digests stable across attempts
-    lin3 = ckpt.read_lineage(spark, sink).toPandas().set_index("part_id")
-    assert lin3.loc[2, "digest"] == lin.set_index("part_id").loc[2, "digest"]
+    p2 = [s["summary"] for s in t.snapshots() if s["summary"]["part"] == 2]
+    assert [r["attempt"] for r in p2] == [1, 2]
+    assert p2[0]["digest"] == p2[1]["digest"]
+
+
+def _corrupt(path):
+    """Rewrite a data file with one band value changed: a valid parquet
+    file whose rows differ from what was committed."""
+    tbl = pq.read_table(path)
+    b1 = tbl.column("B1").to_pylist()
+    b1[0] = (b1[0] or 0.0) + 1.0
+    pq.write_table(tbl.set_column(tbl.schema.get_field_index("B1"), "B1",
+                                  pa.array(b1, pa.float64())), path)
+
+
+@pytest.mark.parametrize("fault", ["deleted", "corrupted"])
+def test_resume_reruns_damaged_part(spark, tmp_path, run_inputs, fault):
+    """A committed part whose data file is gone or no longer matches its
+    lineage digest runs again; the resumed table equals an uninterrupted
+    run row for row."""
+    v, imgs, want = run_inputs
+    sink = str(tmp_path / "sink")
+    t = IceTable(sink)
+    ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    f = _part_files(t, 1)[0]
+    os.remove(f) if fault == "deleted" else _corrupt(f)
+    m = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    assert m["parts_run"] == 1 and m["parts_skipped"] == 3
+    pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
+
+
+@pytest.mark.parametrize("crash", ["before_commit", "mid_commit"])
+def test_resume_after_killed_commit(spark, tmp_path, monkeypatch, run_inputs, crash):
+    """A run killed in part 2's append — after its data files are staged
+    (before_commit), or after its snapshot is published but before the
+    version pointer (mid_commit), which the resume adopts — resumes to the
+    uninterrupted table, with part 2 committed once."""
+    from gdalcubes_cpp_spark.sources import icetable
+
+    v, imgs, want = run_inputs
+    sink = str(tmp_path / "sink")
+    t = IceTable(sink)
+
+    class Killed(Exception):
+        pass
+
+    if crash == "before_commit":
+        stats = icetable._file_stats
+
+        def killed(path):
+            if t.current_version() == 2:
+                raise Killed
+            return stats(path)
+
+        monkeypatch.setattr(icetable, "_file_stats", killed)
+    else:
+        publish = IceTable._publish_pointer
+
+        def killed(self, n):
+            if n == 3:
+                raise Killed
+            publish(self, n)
+
+        monkeypatch.setattr(IceTable, "_publish_pointer", killed)
+    with pytest.raises(Killed):
+        ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    monkeypatch.undo()
+    assert t.current_version() == 2
+    m = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    assert m["parts_run"] == (2 if crash == "before_commit" else 1)
+    assert sorted(s["summary"]["part"] for s in t.snapshots()) == [0, 1, 2, 3]
+    pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
+
+
+def test_resume_with_other_parts_raises(spark, tmp_path, run_inputs):
+    """Parts of another n_parts would overlap the committed chunk ranges."""
+    v, imgs, want = run_inputs
+    sink = str(tmp_path / "sink")
+    ckpt.run_partitioned(imgs, v, sink, n_parts=2)
+    with pytest.raises(ValueError, match="part"):
+        ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    pd.testing.assert_frame_equal(_rows(IceTable(sink).read(spark)), want)
+
+
+def test_run_keeps_session_conf(spark, tmp_path, run_inputs):
+    v, imgs, _ = run_inputs
+    key = "spark.sql.sources.partitionOverwriteMode"
+    before = spark.conf.get(key)
+    ckpt.run_partitioned(imgs, v, str(tmp_path / "sink"), n_parts=2)
+    assert spark.conf.get(key) == before
+
+
+def test_parts_decode_each_image_once(spark, tmp_path, run_inputs):
+    """Parts of whole time slabs (n_parts = nct) decode, summed, exactly the
+    images one whole build decodes: each part's images are pre-filtered to
+    its block before the scan."""
+    v, imgs, want = run_inputs
+
+    def counted(acc):
+        def decode(data, fmt):
+            acc.add(1)
+            return default_decode(data, fmt)
+        return decode
+
+    whole = spark.sparkContext.accumulator(0)
+    build_cube(imgs, v, decode_fn=counted(whole)).df.collect()
+    parts = spark.sparkContext.accumulator(0)
+    sink = str(tmp_path / "sink")
+    ckpt.run_partitioned(imgs, v, sink, n_parts=ChunkGrid(v).nct, decode_fn=counted(parts))
+    assert whole.value > 0
+    assert parts.value == whole.value
+    pd.testing.assert_frame_equal(_rows(IceTable(sink).read(spark)), want)
+
+
+def test_block_bounds_month_end_axis():
+    """On a t0 = Jan 31 P1M axis a block's time bounds are its chunks'
+    [t_start, t_end]: chunk 1 ends Mar 31, not at Feb 29 + 1 month."""
+    from datetime import datetime
+
+    v = view_small(t0="2020-01-31", t1="2020-12-31", chunk_size=(1, 20, 20))
+    g = ChunkGrid(v)
+    per = g.ncy * g.ncx
+    b = g.block_bounds(per, 2 * per)
+    assert (b["t_start"], b["t_end"]) == (datetime(2020, 2, 29), datetime(2020, 3, 31))
+    assert (b["left"], b["right"], b["bottom"], b["top"]) == (v.left, v.right, v.bottom, v.top)
+    # one chunk row, then one chunk
+    assert g.block_bounds(per, per + g.ncx)["bottom"] == g.chunk_bounds(per)["bottom"]
+    assert g.block_bounds(per + 1, per + 2) == {
+        k: g.chunk_bounds(per + 1)[k]
+        for k in ("left", "right", "bottom", "top", "t_start", "t_end")}
+
+
+def test_run_on_view_ending_past_9999(spark, tmp_path):
+    """A view whose last chunk ends past year 9999: that block's time bound
+    is open, and the parts equal one whole build."""
+    v = view_small(t0="9999-01-01", t1="9999-12-30")
+    g = ChunkGrid(v)
+    assert g.block_bounds(g.count - 1, g.count)["t_end"] is None
+    imgs = synth.images_df(spark, 150).withColumn("ts", F.expr("ts + make_interval(7979)"))
+    want = _rows(build_cube(imgs, v).with_chunk_id())
+    assert len(want) > 0
+    sink = str(tmp_path / "sink")
+    ckpt.run_partitioned(imgs, v, sink, n_parts=g.nct)
+    pd.testing.assert_frame_equal(_rows(IceTable(sink).read(spark)), want)
+
+
+def test_value_digest_tells_null_positions_apart(spark):
+    schema = "it int, iy int, ix int, B1 double, B2 double"
+    a = spark.createDataFrame([(0, 1, 2, None, 5.0)], schema)
+    b = spark.createDataFrame([(0, 1, 2, 5.0, None)], schema)
+    assert (a.agg(ckpt.value_digest(a)).first()[0]
+            != b.agg(ckpt.value_digest(b)).first()[0])
 
 
 def test_json_plan_roundtrip(spark):
@@ -115,17 +287,18 @@ def test_streaming_incremental_build(spark, tmp_path):
 
     # -- exactly-once under replay: lose the checkpoint entirely and rerun.
     # The stream reprocesses every file as batch 0; the fold must SKIP it
-    # (manifest.last_batch_id >= 0) and leave the state bit-identical.
-    import json as _json
+    # (every file is in the head snapshot's processed-file summary) and
+    # leave the snapshot chain and the state bit-identical.
     import shutil
 
-    man_before = _json.load(open(f"{sink}/manifest.json"))
-    assert man_before["last_batch_id"] >= 1  # two batches merged
+    t = IceTable(sink)
+    chain_before = t.snapshots()
+    assert len(chain_before) == 2  # two batches merged
+    assert chain_before[-1]["summary"]["files"]
     shutil.rmtree(cp)
     q3 = incremental_build(spark, in_dir, v, sink, cp)
     q3.awaitTermination(120)
-    man_after = _json.load(open(f"{sink}/manifest.json"))
-    assert man_after == man_before  # no double-merge, no version bump
+    assert t.snapshots() == chain_before  # no double-merge, no new snapshot
     got2 = finalize_state(spark, sink, v).collect_dense()
     assert (np.isnan(got2) == np.isnan(got)).all()
     m2 = np.isfinite(got)
@@ -134,7 +307,7 @@ def test_streaming_incremental_build(spark, tmp_path):
     # -- checkpoint loss with NEW files bundled into the replayed batch
     # (r2 ADVICE): after rm -rf checkpoint, batch 0 re-lists ALL files —
     # the 2 already-merged parquet writes plus a fresh one. The file-keyed
-    # manifest must merge exactly the new file (a batch_id skip would
+    # fold must merge exactly the new file (a batch_id skip would
     # silently drop it; a full merge would double-count the old ones).
     pdf_all = synth.images_pdf(150)
     spark.createDataFrame(pdf_all.iloc[120:]).write.mode("append").parquet(in_dir)
@@ -146,6 +319,63 @@ def test_streaming_incremental_build(spark, tmp_path):
     assert (np.isnan(got3) == np.isnan(want3)).all()
     m3 = np.isfinite(want3)
     assert np.allclose(got3[m3], want3[m3], atol=1e-9)
+
+
+def test_streaming_fold_fails_on_unreadable_snapshot(spark, tmp_path):
+    """A fold that cannot read its state snapshot fails the batch; it does
+    not restart the state from the batch's own delta."""
+    from pyspark.errors import StreamingQueryException
+
+    from gdalcubes_cpp_spark.streaming.ingest import incremental_build
+
+    v = view_small(aggregation="mean")
+    _, (sink, cp, in_dir) = _stream_twice(spark, tmp_path, v, synth.images_pdf(120))
+    t = IceTable(sink)
+    head = t.current_version()
+    with open(os.path.join(t.meta, f"snap-{head}.json"), "w") as fh:
+        fh.write('{"snapshot_id": ')
+    spark.createDataFrame(synth.images_pdf(150).iloc[120:]).write.mode("append").parquet(in_dir)
+    with pytest.raises(StreamingQueryException):
+        incremental_build(spark, in_dir, v, sink, cp).awaitTermination(120)
+    assert t.current_version() == head
+
+
+@pytest.mark.parametrize("killed_at", [1, 2])
+def test_streaming_fold_after_crashed_commit(spark, tmp_path, monkeypatch, killed_at):
+    """A fold killed between publishing its state snapshot and the version
+    pointer, of the first state version or a later one: the next fold adopts
+    that snapshot and folds onto it, so one restart recovers, each state
+    version is committed once, and the state equals a batch build."""
+    from pyspark.errors import StreamingQueryException
+
+    from gdalcubes_cpp_spark.streaming.ingest import finalize_state, incremental_build
+
+    v = view_small(aggregation="mean")
+    pdf = synth.images_pdf(150)
+    in_dir, sink, cp = str(tmp_path / "in"), str(tmp_path / "state"), str(tmp_path / "cp")
+    publish = IceTable._publish_pointer
+
+    def killed(self, n):
+        if n == killed_at:
+            raise RuntimeError("killed")
+        publish(self, n)
+
+    for n, rows in enumerate([pdf.iloc[:60], pdf.iloc[60:120], pdf.iloc[120:]], 1):
+        spark.createDataFrame(rows).write.mode("append").parquet(in_dir)
+        if n != killed_at:
+            incremental_build(spark, in_dir, v, sink, cp).awaitTermination(120)
+            continue
+        monkeypatch.setattr(IceTable, "_publish_pointer", killed)
+        with pytest.raises(StreamingQueryException):
+            incremental_build(spark, in_dir, v, sink, cp).awaitTermination(120)
+        monkeypatch.undo()
+    files = [len(s["summary"]["files"]) for s in IceTable(sink).snapshots()]
+    assert len(files) == 3 and files == sorted(set(files))
+    got = finalize_state(spark, sink, v).collect_dense()
+    want = build_cube(spark.createDataFrame(pdf), v).collect_dense()
+    assert (np.isnan(got) == np.isnan(want)).all()
+    m = np.isfinite(want)
+    assert np.allclose(got[m], want[m], atol=1e-9)
 
 
 def test_read_chunks_partition_pruning(spark, tmp_path):

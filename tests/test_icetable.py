@@ -170,6 +170,42 @@ def test_crashed_commit_adopted(spark, tdir):
     assert not [f for f in os.listdir(t.meta) if f.endswith(".tmp")]
 
 
+def test_replayed_key_lands_on_adopted_orphan(spark, tdir):
+    """A commit that crashed after publishing snap-<n>.json but before
+    v<n>.json, replayed under the same commit_key, lands on the orphan once
+    it is adopted instead of committing its rows a second time."""
+    t = IceTable.create(spark, tdir, _mkdf(spark, 0, 10), n_files=1)
+    first = t.append(_mkdf(spark, 10, 20), commit_key="batch-3", n_files=1)
+    os.remove(os.path.join(t.meta, f"v{first}.json"))  # crash point
+    assert t.current_version() == first - 1
+    assert t.append(_mkdf(spark, 10, 20), commit_key="batch-3", n_files=1) == first
+    assert t.current_version() == first
+    assert t.read(spark).count() == 20
+
+
+def test_summary_and_replace(spark, tdir):
+    """``summary`` lands in the snapshot; ``replace`` drops parent manifests
+    (an overwrite) and raises when the head no longer holds them."""
+    t = IceTable.create(spark, tdir, _mkdf(spark, 0, 10), n_files=1)
+    old = t.snapshot()["manifests"]
+    s = t.append(_mkdf(spark, 100, 105), n_files=1, summary={"part": 3}, replace=old)
+    assert t.snapshot(s)["summary"]["part"] == 3
+    assert sorted(r.k for r in t.read(spark).collect()) == list(range(100, 105))
+    assert t.read(spark, snapshot=1).count() == 10  # time travel keeps the old data
+    with pytest.raises(ValueError, match="conflict"):
+        t.append(_mkdf(spark, 0, 1), n_files=1, replace=old)
+    assert t.current_version() == s
+
+
+def test_missing_head_snapshot_raises(spark, tdir):
+    """A pointer whose snapshot file is gone fails the commit; it is not
+    read as an empty table."""
+    t = IceTable.create(spark, tdir, _mkdf(spark, 0, 10), n_files=1)
+    os.remove(os.path.join(t.meta, "snap-1.json"))
+    with pytest.raises(FileNotFoundError):
+        t.append(_mkdf(spark, 10, 20), n_files=1)
+
+
 def test_commit_never_clobbers_winner_snapshot(spark, tdir):
     """The loser of the snapshot-number race must leave the winner's
     snap-<n>.json byte-identical (the pre-fix code overwrote then
