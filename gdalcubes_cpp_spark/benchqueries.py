@@ -1099,7 +1099,7 @@ def cube_swiss_mean(spark, sf_dir):
     translation — the oblique-Mercator family of r3 VERDICT next #5.
     Validated against the swisstopo Rigi worked example to 0.2 mm
     (tests/test_srs_datum); the oracle replays the closed inverse
-    (srs.swiss_inverse_datum_sql + srs._datum_sql)."""
+    (srs.swiss_inverse_sql + srs._datum_sql)."""
     from .operators.build import build_cube
 
     return build_cube(
@@ -1142,7 +1142,7 @@ def cube_hom_mean(spark, sf_dir):
     self-describing HOM key is what the driver actually verifies.
     Validated against the EPSG GN7-2 worked example to sub-cm
     (tests/test_srs_hom.py); the closed inverse (conformal-latitude
-    series) replays in SQL (srs.hom_inverse_datum_sql)."""
+    series) replays in SQL (srs.hom_inverse_sql)."""
     from .operators.build import build_cube
 
     return build_cube(
@@ -1227,7 +1227,7 @@ def cube_aeqd_mean(spark, sf_dir):
     arc integration for the defining true-distance property,
     tests/test_srs_datum). Enters via a novel +proj=aeqd string so the
     dynamic key is what the driver verifies; the closed inverse series
-    replays in SQL (srs.aeqd_inverse_datum_sql)."""
+    replays in SQL (srs.aeqd_inverse_sql)."""
     from .operators.build import build_cube
 
     return build_cube(

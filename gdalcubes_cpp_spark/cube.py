@@ -94,6 +94,17 @@ class Cube:
     def with_chunk_id(self) -> DataFrame:
         return self.df.selectExpr("*", f"{self.grid.chunk_of_sql('it', 'iy', 'ix')} AS chunk_id")
 
+    def seeded_cells(self) -> DataFrame:
+        """(it, iy, ix, *bands) plus one seed row per slice index with NULL
+        iy, ix and bands, so grouping by ``it`` forms a group for every
+        slice, an empty one included (the per-slice writers)."""
+        seed = self.df.sparkSession.range(self.view.nt).select(
+            F.col("id").cast("int").alias("it"),
+            *[F.lit(None).cast("int").alias(c) for c in ("iy", "ix")],
+            *[F.lit(None).cast("double").alias(b) for b in self.bands],
+        )
+        return self.df.select(*KEY, *self.bands).unionByName(seed)
+
     def to_long(self) -> DataFrame:
         """(it, iy, ix, band, value) melt — the relational cells view."""
         pairs = F.array(

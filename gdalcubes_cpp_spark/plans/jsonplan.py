@@ -29,10 +29,12 @@ from ..view import CubeView
 
 
 def _mask_from_spec(a: dict):
-    """{"kind": value|range|band|file, ...} -> mask object
+    """{"kind": value|range|band, ...} -> mask object
     (operators/build.py classes; the reference's image_mask hierarchy,
-    src/image_collection_cube.h:34-146)."""
-    from ..operators.build import BandMask, FileMask, RangeMask, ValueMask
+    src/image_collection_cube.h:34-146). A FileMask needs a mask table
+    joined at the collection level, which no plan source supplies, so
+    plans have no file kind."""
+    from ..operators.build import BandMask, RangeMask, ValueMask
 
     kind = a["kind"]
     if kind == "value":
@@ -42,10 +44,6 @@ def _mask_from_spec(a: dict):
                          a.get("invert", False))
     if kind == "band":
         return BandMask(a["channel"], values=a.get("values"),
-                        vmin=a.get("vmin"), vmax=a.get("vmax"),
-                        invert=a.get("invert", False))
-    if kind == "file":
-        return FileMask(a["channel"], values=a.get("values"),
                         vmin=a.get("vmin"), vmax=a.get("vmax"),
                         invert=a.get("invert", False))
     raise ValueError(f"unknown mask kind {kind!r}")

@@ -736,12 +736,12 @@ def _encode_slice_group(pdf, view, bands, out_dir, flavor, tile, levels):
     import pandas as pd
 
     it = int(pdf["it"].iloc[0])
+    real = pdf[pdf["iy"].notna()]  # drop the slice's seed row
     planes = np.full((len(bands), view.ny, view.nx), np.nan)
-    iy = pdf["iy"].to_numpy()
-    ix = pdf["ix"].to_numpy()
+    iy = real["iy"].to_numpy(dtype=np.int64)
+    ix = real["ix"].to_numpy(dtype=np.int64)
     for bi, b in enumerate(bands):
-        vals = pdf[b].to_numpy(dtype=np.float64, na_value=np.nan)
-        planes[bi, iy, ix] = vals
+        planes[bi, iy, ix] = real[b].to_numpy(dtype=np.float64, na_value=np.nan)
     stamp = view.datetime_at(it).isoformat().replace(":", "")
     path = os.path.join(out_dir, f"cube_{it:04d}_{stamp}.tif")
     big = flavor.endswith("8")   # "gtiff8"/"cog8" = BigTIFF variants
@@ -764,7 +764,8 @@ def write_gtiff_distributed(
     independently to ``out_dir`` (shared FS / object store on a real
     cluster; encode-to-bytes + your blob writer is the same hook).
     Output is byte-identical to the driver-side writer (pytest-asserted).
-    Returns [(it, path, nbytes)] sorted by slice."""
+    Returns [(it, path, nbytes)] sorted by slice; a slice without cells
+    still writes its all-nodata file, as write_gtiff does."""
     import functools
 
     os.makedirs(out_dir, exist_ok=True)
@@ -772,7 +773,7 @@ def write_gtiff_distributed(
         _encode_slice_group, view=cube.view, bands=tuple(cube.bands),
         out_dir=out_dir, flavor=flavor, tile=tile, levels=tuple(levels),
     )
-    out = cube.df.groupBy("it").applyInPandas(
+    out = cube.seeded_cells().groupBy("it").applyInPandas(
         lambda pdf: fn(pdf), "it int, path string, nbytes long"
     )
     return sorted((r["it"], r["path"], r["nbytes"]) for r in out.collect())

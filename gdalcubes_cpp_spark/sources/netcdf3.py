@@ -247,7 +247,6 @@ def write_netcdf_distributed(cube, path: str, packing: dict | None = None,
     multipart-upload part at the same offsets. Byte-identical to
     write_netcdf (pytest-asserted)."""
     import pandas as pd
-    from pyspark.sql import functions as F
 
     v = cube.view
     bands = tuple(cube.bands)
@@ -265,14 +264,9 @@ def write_netcdf_distributed(cube, path: str, packing: dict | None = None,
             f.write(raw + b"\x00" * _pad4(len(raw)))
         f.truncate(plan["total"])
 
-    spark = cube.df.sparkSession
-    # seed every slice index so all-empty slices still write their fill run
-    seed = spark.range(v.nt).select(
-        F.col("id").cast("int").alias("it"),
-        *[F.lit(None).cast("int").alias(c) for c in ("iy", "ix")],
-        *[F.lit(None).cast("double").alias(b) for b in bands],
-    )
-    cells = cube.df.select("it", "iy", "ix", *bands).unionByName(seed)
+    # every slice index forms a group, so all-empty slices still write
+    # their fill run
+    cells = cube.seeded_cells()
 
     def write_slice(pdf: pd.DataFrame) -> pd.DataFrame:
         it = int(pdf["it"].iloc[0])

@@ -11,15 +11,19 @@ entry point (from_wgs84, points_to_wgs84, axis_to_wgs84, grid_to_wgs84,
 bbox_to_wgs84) dispatch on the row. The rows:
 
 - EPSG:4326 identity; EPSG:3857 spherical web Mercator
-- EPSG:326xx/327xx UTM (Snyder 1987 transverse-Mercator series)
+- ETM transverse Mercator on any ellipsoid (Snyder 1987 series): the
+  EPSG:326xx/327xx UTM zones and EPSG:27700 are ETM instances
 - PS polar stereographic (EPSG:3031/3413), LAEA (EPSG:3035), SINU spherical
   sinusoidal (the MODIS grid), LCC (EPSG:2154), AEA (EPSG:5070)
-- ETM transverse Mercator on any ellipsoid (EPSG:27700), SOMERC Swiss
-  oblique Mercator (EPSG:2056/21781), HOM Hotine oblique Mercator
-  (EPSG:29873), AEQD modified azimuthal equidistant (EPSG:3295) — each with
-  an optional datum stage (+towgs84 Helmert or an NTv2 grid)
+- SOMERC Swiss oblique Mercator (EPSG:2056/21781), HOM Hotine oblique
+  Mercator (EPSG:29873), AEQD modified azimuthal equidistant (EPSG:3295)
 - CEA cylindrical equal area (EPSG:6933), EQC equidistant cylindrical
   (EPSG:4087)
+
+Kernels are DATUM-LOCAL: each maps the projection's own geodetic
+coordinates to grid coordinates and back. ETM, SOMERC, HOM and AEQD params
+carry an optional ``helm`` (a +towgs84 Helmert or an NTv2 grid), and the
+entry points apply that datum stage once, around the kernel.
 
 Known EPSG codes map to their registry parameters (``_KNOWN``); proj4 and
 WKT strings canonicalize to those codes when the parameters match, and any
@@ -27,7 +31,10 @@ other parameter set becomes a SELF-DESCRIBING dynamic key ("PS:...",
 "LAEA:...", ...) that any process parses back (``_PARSED`` caches it).
 Keys are persisted (netCDF/HDF5 attributes, view JSON), so each row's key
 field spec fixes its text format. Adding a family is one row plus its
-kernels: forward, inverse and the inverse's SQL mirror.
+kernels: forward, inverse and the inverse's SQL mirror. The latitude
+series the kernels share are written once each: the meridian arc and its
+footpoint inverse (``_tm_consts``), the inverse conformal latitude
+(``_chi_series``) and the inverse authalic latitude (``_authalic_series``).
 
 4326, 3857, CEA and EQC are separable (x depends only on lon, y only on
 lat): 1-D axis vectors transform alone and corners map to corners. The
@@ -41,7 +48,8 @@ SAME operation order, so a SQL engine (DuckDB oracle / Spark SQL)
 reproduces the numpy cell-center coordinates to within libm ulps; driver
 queries built on them keep footprint edges on a coarse decimal grid so
 ulp-level disagreement can never flip a coverage decision (margins
-asserted in tests).
+asserted in tests). They are datum-local like the kernels: chain
+``_datum_sql`` on top when the params carry a Helmert ``helm``.
 """
 
 from __future__ import annotations
@@ -55,7 +63,7 @@ import numpy as np
 
 R = 6378137.0  # WGS84 spherical radius used by EPSG:3857
 
-# WGS84 ellipsoid (UTM)
+# WGS84 ellipsoid; UTM zone scale and false origins
 A_WGS84 = 6378137.0
 F_WGS84 = 1.0 / 298.257223563
 E2 = F_WGS84 * (2.0 - F_WGS84)
@@ -63,13 +71,6 @@ EP2 = E2 / (1.0 - E2)
 K0 = 0.9996
 FE = 500000.0
 FN_SOUTH = 10000000.0
-
-# meridian-arc series coefficients (Snyder eq. 3-21)
-_C0 = 1.0 - E2 / 4.0 - 3.0 * E2 ** 2 / 64.0 - 5.0 * E2 ** 3 / 256.0
-_C2 = 3.0 * E2 / 8.0 + 3.0 * E2 ** 2 / 32.0 + 45.0 * E2 ** 3 / 1024.0
-_C4 = 15.0 * E2 ** 2 / 256.0 + 45.0 * E2 ** 3 / 1024.0
-_C6 = 35.0 * E2 ** 3 / 3072.0
-_E1 = (1.0 - math.sqrt(1.0 - E2)) / (1.0 + math.sqrt(1.0 - E2))
 
 
 @dataclass(frozen=True)
@@ -177,122 +178,73 @@ def y_to_lat(y):
     return np.degrees(2.0 * np.arctan(np.exp(np.asarray(y, dtype=np.float64) / R)) - np.pi / 2.0)
 
 
-# -- transverse Mercator / UTM (numpy; Snyder 1987 eq. 8-9..8-25) -------------
-
-def tm_forward(lon, lat, lon0: float, fn: float = 0.0):
-    """(lon, lat) degrees -> UTM (x, y) meters. Vectorized; broadcastable."""
-    phi = np.radians(np.asarray(lat, dtype=np.float64))
-    lam = np.radians(np.asarray(lon, dtype=np.float64) - lon0)
-    sinp = np.sin(phi)
-    cosp = np.cos(phi)
-    tanp = np.tan(phi)
-    N = A_WGS84 / np.sqrt(1.0 - E2 * sinp * sinp)
-    T = tanp * tanp
-    C = EP2 * cosp * cosp
-    Aa = cosp * lam
-    M = A_WGS84 * (
-        _C0 * phi - _C2 * np.sin(2.0 * phi) + _C4 * np.sin(4.0 * phi) - _C6 * np.sin(6.0 * phi)
-    )
-    x = FE + K0 * N * (
-        Aa
-        + (1.0 - T + C) * Aa ** 3 / 6.0
-        + (5.0 - 18.0 * T + T * T + 72.0 * C - 58.0 * EP2) * Aa ** 5 / 120.0
-    )
-    y = fn + K0 * (
-        M
-        + N * tanp * (
-            Aa * Aa / 2.0
-            + (5.0 - T + 9.0 * C + 4.0 * C * C) * Aa ** 4 / 24.0
-            + (61.0 - 58.0 * T + T * T + 600.0 * C - 330.0 * EP2) * Aa ** 6 / 720.0
-        )
-    )
-    return x, y
-
-
-def tm_inverse(x, y, lon0: float, fn: float = 0.0):
-    """UTM (x, y) meters -> (lon, lat) degrees. Vectorized; broadcastable.
-
-    Operation order mirrors tm_inverse_sql EXACTLY — keep the two in sync
-    (cross-engine cell-center equality is how the driver oracle works)."""
-    x = np.asarray(x, dtype=np.float64)
-    y = np.asarray(y, dtype=np.float64)
-    M = (y - fn) / K0
-    mu = M / (A_WGS84 * _C0)
-    phi1 = (
-        mu
-        + (3.0 * _E1 / 2.0 - 27.0 * _E1 ** 3 / 32.0) * np.sin(2.0 * mu)
-        + (21.0 * _E1 ** 2 / 16.0 - 55.0 * _E1 ** 4 / 32.0) * np.sin(4.0 * mu)
-        + (151.0 * _E1 ** 3 / 96.0) * np.sin(6.0 * mu)
-        + (1097.0 * _E1 ** 4 / 512.0) * np.sin(8.0 * mu)
-    )
-    sin1 = np.sin(phi1)
-    cos1 = np.cos(phi1)
-    tan1 = np.tan(phi1)
-    C1 = EP2 * cos1 * cos1
-    T1 = tan1 * tan1
-    N1 = A_WGS84 / np.sqrt(1.0 - E2 * sin1 * sin1)
-    R1 = A_WGS84 * (1.0 - E2) / (1.0 - E2 * sin1 * sin1) ** 1.5
-    D = (x - FE) / (N1 * K0)
-    lat = np.degrees(
-        phi1
-        - (N1 * tan1 / R1) * (
-            D * D / 2.0
-            - (5.0 + 3.0 * T1 + 10.0 * C1 - 4.0 * C1 * C1 - 9.0 * EP2) * D ** 4 / 24.0
-            + (61.0 + 90.0 * T1 + 298.0 * C1 + 45.0 * T1 * T1 - 252.0 * EP2 - 3.0 * C1 * C1)
-            * D ** 6 / 720.0
-        )
-    )
-    lon = lon0 + np.degrees(
-        (
-            D
-            - (1.0 + 2.0 * T1 + C1) * D ** 3 / 6.0
-            + (5.0 - 2.0 * C1 + 28.0 * T1 - 3.0 * C1 * C1 + 8.0 * EP2 + 24.0 * T1 * T1)
-            * D ** 5 / 120.0
-        )
-        / cos1
-    )
-    return lon, lat
-
-
 def _flit(v: float) -> str:
     """Float literal in E-notation — parsed as DOUBLE (not DECIMAL) by both
     DuckDB and Spark SQL; 17 significant digits round-trip float64."""
     return f"{float(v):.17e}"
 
 
-def tm_inverse_sql(x_expr: str, y_expr: str, lon0: float, fn: float = 0.0):
-    """(lon_sql, lat_sql) ANSI-SQL strings computing tm_inverse(x, y) with
-    the SAME operation order — runnable in DuckDB and Spark SQL. The
-    expressions reference ``x_expr``/``y_expr`` verbatim (pass column names
-    or sub-expressions)."""
-    L = _flit
-    a = L(A_WGS84)
-    deg = L(180.0 / math.pi)
-    mu = f"((({y_expr}) - {L(fn)}) / {L(K0)} / ({a} * {L(_C0)}))"
-    phi1 = (
-        f"({mu} + {L(3.0 * _E1 / 2.0 - 27.0 * _E1 ** 3 / 32.0)} * sin(2.0 * {mu})"
-        f" + {L(21.0 * _E1 ** 2 / 16.0 - 55.0 * _E1 ** 4 / 32.0)} * sin(4.0 * {mu})"
-        f" + {L(151.0 * _E1 ** 3 / 96.0)} * sin(6.0 * {mu})"
-        f" + {L(1097.0 * _E1 ** 4 / 512.0)} * sin(8.0 * {mu}))"
+# -- latitude series (Snyder 1987), one definition each ----------------------
+#
+# Each returns, for a given e2, the coefficients of an inverse series
+# phi = v + c1 sin 2v + c2 sin 4v + ... (_tm_consts also the meridian-arc
+# coefficients _meridian_arc sums); _series and _series_sql evaluate one
+# with the same operation order in numpy and SQL.
+
+def _tm_consts(e2: float):
+    """Meridional-arc series (Snyder eq. 3-21) plus the footpoint-latitude
+    series coefficients of its inverse (eq. 3-26)."""
+    c0 = 1.0 - e2 / 4.0 - 3.0 * e2 ** 2 / 64.0 - 5.0 * e2 ** 3 / 256.0
+    c2 = 3.0 * e2 / 8.0 + 3.0 * e2 ** 2 / 32.0 + 45.0 * e2 ** 3 / 1024.0
+    c4 = 15.0 * e2 ** 2 / 256.0 + 45.0 * e2 ** 3 / 1024.0
+    c6 = 35.0 * e2 ** 3 / 3072.0
+    e1 = (1.0 - math.sqrt(1.0 - e2)) / (1.0 + math.sqrt(1.0 - e2))
+    foot = (3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0,
+            21.0 * e1 ** 2 / 16.0 - 55.0 * e1 ** 4 / 32.0,
+            151.0 * e1 ** 3 / 96.0,
+            1097.0 * e1 ** 4 / 512.0)
+    return c0, c2, c4, c6, foot
+
+
+def _chi_series(e2: float):
+    """Inverse conformal-latitude series coefficients (Snyder eq. 3-5)."""
+    return (
+        e2 / 2.0 + 5.0 * e2 ** 2 / 24.0 + e2 ** 3 / 12.0 + 13.0 * e2 ** 4 / 360.0,
+        7.0 * e2 ** 2 / 48.0 + 29.0 * e2 ** 3 / 240.0 + 811.0 * e2 ** 4 / 11520.0,
+        7.0 * e2 ** 3 / 120.0 + 81.0 * e2 ** 4 / 1120.0,
+        4279.0 * e2 ** 4 / 161280.0,
     )
-    c1 = f"({L(EP2)} * cos({phi1}) * cos({phi1}))"
-    t1 = f"(tan({phi1}) * tan({phi1}))"
-    n1 = f"({a} / sqrt(1.0 - {L(E2)} * sin({phi1}) * sin({phi1})))"
-    r1 = f"({a} * {L(1.0 - E2)} / pow(1.0 - {L(E2)} * sin({phi1}) * sin({phi1}), 1.5))"
-    d = f"((({x_expr}) - {L(FE)}) / ({n1} * {L(K0)}))"
-    lat = (
-        f"(({phi1} - ({n1} * tan({phi1}) / {r1}) * ({d} * {d} / 2.0"
-        f" - (5.0 + 3.0 * {t1} + 10.0 * {c1} - 4.0 * {c1} * {c1} - 9.0 * {L(EP2)})"
-        f" * pow({d}, 4) / 24.0"
-        f" + (61.0 + 90.0 * {t1} + 298.0 * {c1} + 45.0 * {t1} * {t1}"
-        f" - {L(252.0 * EP2)} - 3.0 * {c1} * {c1}) * pow({d}, 6) / 720.0)) * {deg})"
+
+
+def _authalic_series(e2: float):
+    """Inverse authalic-latitude series coefficients (Snyder eq. 3-18)."""
+    return (
+        e2 / 3.0 + 31.0 * e2 ** 2 / 180.0 + 517.0 * e2 ** 3 / 5040.0,
+        23.0 * e2 ** 2 / 360.0 + 251.0 * e2 ** 3 / 3780.0,
+        761.0 * e2 ** 3 / 45360.0,
     )
-    lon = (
-        f"({L(lon0)} + (({d} - (1.0 + 2.0 * {t1} + {c1}) * pow({d}, 3) / 6.0"
-        f" + (5.0 - 2.0 * {c1} + 28.0 * {t1} - 3.0 * {c1} * {c1} + {L(8.0 * EP2)}"
-        f" + 24.0 * {t1} * {t1}) * pow({d}, 5) / 120.0) / cos({phi1})) * {deg})"
-    )
-    return lon, lat
+
+
+def _meridian_arc(a: float, e2: float, phi, sin):
+    """Meridional arc from the equator to latitude phi (radians): the
+    _tm_consts series over arrays (sin=np.sin) or scalars (math.sin)."""
+    c0, c2, c4, c6, _ = _tm_consts(e2)
+    return a * (c0 * phi - c2 * sin(2.0 * phi) + c4 * sin(4.0 * phi) - c6 * sin(6.0 * phi))
+
+
+def _series(v, coeffs):
+    """v + c1 sin(2v) + c2 sin(4v) + ... (numpy)."""
+    out = v
+    for k, c in enumerate(coeffs, 1):
+        out = out + c * np.sin((2.0 * k) * v)
+    return out
+
+
+def _series_sql(v: str, coeffs) -> str:
+    """SQL mirror of _series, same operation order."""
+    terms = "".join(f" + {_flit(c)} * sin({2.0 * k} * {v})"
+                    for k, c in enumerate(coeffs, 1))
+    return f"({v}{terms})"
 
 
 # -- polar stereographic variant B (numpy; Snyder 1987 §21, EPSG 9829) --------
@@ -301,12 +253,6 @@ _E = math.sqrt(E2)
 # sqrt((1+e)^(1+e) (1-e)^(1-e)) — the ellipsoidal stereographic constant
 _CPOL = math.sqrt((1.0 + _E) ** (1.0 + _E) * (1.0 - _E) ** (1.0 - _E))
 _HALF_PI = math.pi / 2.0
-
-# inverse conformal-latitude series (Snyder eq. 3-5)
-_X2 = E2 / 2.0 + 5.0 * E2 ** 2 / 24.0 + E2 ** 3 / 12.0 + 13.0 * E2 ** 4 / 360.0
-_X4 = 7.0 * E2 ** 2 / 48.0 + 29.0 * E2 ** 3 / 240.0 + 811.0 * E2 ** 4 / 11520.0
-_X6 = 7.0 * E2 ** 3 / 120.0 + 81.0 * E2 ** 4 / 1120.0
-_X8 = 4279.0 * E2 ** 4 / 161280.0
 
 
 def _ps_t(phi: np.ndarray, south: bool) -> np.ndarray:
@@ -356,10 +302,7 @@ def ps_inverse(x, y, p: PolarPS):
     else:
         chi = _HALF_PI - 2.0 * np.arctan(tp)
         lam = np.arctan2(dx, -dy)
-    phi = (
-        chi + _X2 * np.sin(2.0 * chi) + _X4 * np.sin(4.0 * chi)
-        + _X6 * np.sin(6.0 * chi) + _X8 * np.sin(8.0 * chi)
-    )
+    phi = _series(chi, _chi_series(E2))
     return p.lon0 + np.degrees(lam), np.degrees(phi)
 
 
@@ -379,10 +322,7 @@ def ps_inverse_sql(x_expr: str, y_expr: str, p: PolarPS):
         chi = f"({L(_HALF_PI)} - 2.0 * atan({tp}))"
         lam = f"atan2({dx}, -{dy})"
     deg = L(180.0 / math.pi)
-    lat = (
-        f"(({chi} + {L(_X2)} * sin(2.0 * {chi}) + {L(_X4)} * sin(4.0 * {chi})"
-        f" + {L(_X6)} * sin(6.0 * {chi}) + {L(_X8)} * sin(8.0 * {chi})) * {deg})"
-    )
+    lat = f"({_series_sql(chi, _chi_series(E2))} * {deg})"
     lon = f"({L(p.lon0)} + {lam} * {deg})"
     return lon, lat
 
@@ -430,7 +370,6 @@ def laea_inverse(x, y, p: LaeaParams):
     """LAEA (x, y) meters -> (lon, lat) degrees (vectorized); authalic-
     latitude series inverse (Snyder eq. 3-18)."""
     e, qp, beta1, rq, d = _laea_consts(p)
-    e2 = p.e2
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     xp = (x - p.fe) / d
@@ -447,13 +386,7 @@ def laea_inverse(x, y, p: LaeaParams):
         xp * np.sin(ce),
         rho * math.cos(beta1) * np.cos(ce) - yp * math.sin(beta1) * np.sin(ce),
     )
-    phi = (
-        betap
-        + (e2 / 3.0 + 31.0 * e2 ** 2 / 180.0 + 517.0 * e2 ** 3 / 5040.0) * np.sin(2.0 * betap)
-        + (23.0 * e2 ** 2 / 360.0 + 251.0 * e2 ** 3 / 3780.0) * np.sin(4.0 * betap)
-        + (761.0 * e2 ** 3 / 45360.0) * np.sin(6.0 * betap)
-    )
-    lat = np.degrees(phi)
+    lat = np.degrees(_series(betap, _authalic_series(p.e2)))
     lon = p.lon0 + np.degrees(lam)
     # exactly at the projection origin the direction is undefined: (lat0, lon0)
     at0 = rho == 0.0
@@ -468,7 +401,6 @@ def laea_inverse_sql(x_expr: str, y_expr: str, p: LaeaParams):
     order, E-notation DOUBLE literals. Assumes rho > 0 and interior points
     (the np.clip guards are identity there; driver views are margin-
     audited to stay clear of the origin and the horizon)."""
-    e2 = p.e2
     _e, qp, beta1, rq, d = _laea_consts(p)
     L = _flit
     deg = L(180.0 / math.pi)
@@ -485,13 +417,7 @@ def laea_inverse_sql(x_expr: str, y_expr: str, p: LaeaParams):
         f" {rho} * {L(math.cos(beta1))} * cos({ce})"
         f" - {yp} * {L(math.sin(beta1))} * sin({ce}))"
     )
-    c2 = e2 / 3.0 + 31.0 * e2 ** 2 / 180.0 + 517.0 * e2 ** 3 / 5040.0
-    c4 = 23.0 * e2 ** 2 / 360.0 + 251.0 * e2 ** 3 / 3780.0
-    c6 = 761.0 * e2 ** 3 / 45360.0
-    lat = (
-        f"(({betap} + {L(c2)} * sin(2.0 * {betap}) + {L(c4)} * sin(4.0 * {betap})"
-        f" + {L(c6)} * sin(6.0 * {betap})) * {deg})"
-    )
+    lat = f"({_series_sql(betap, _authalic_series(p.e2))} * {deg})"
     lon = f"({L(p.lon0)} + {lam} * {deg})"
     return lon, lat
 
@@ -588,12 +514,7 @@ def _lcc_consts(p: LccParams):
         n = (math.log(m1) - math.log(m2)) / (math.log(t1) - math.log(t2))
     aF = p.a * (m1 / (n * t1 ** n))
     rho0 = aF * t0 ** n
-    e2 = p.e2
-    x2 = e2 / 2.0 + 5.0 * e2 ** 2 / 24.0 + e2 ** 3 / 12.0 + 13.0 * e2 ** 4 / 360.0
-    x4 = 7.0 * e2 ** 2 / 48.0 + 29.0 * e2 ** 3 / 240.0 + 811.0 * e2 ** 4 / 11520.0
-    x6 = 7.0 * e2 ** 3 / 120.0 + 81.0 * e2 ** 4 / 1120.0
-    x8 = 4279.0 * e2 ** 4 / 161280.0
-    return n, aF, rho0, e, (x2, x4, x6, x8)
+    return n, aF, rho0, e, _chi_series(p.e2)
 
 
 def lcc_forward(lon, lat, p: LccParams):
@@ -612,7 +533,7 @@ def lcc_forward(lon, lat, p: LccParams):
 def lcc_inverse(x, y, p: LccParams):
     """LCC (x, y) meters -> (lon, lat) degrees. Operation order mirrors
     lcc_inverse_sql EXACTLY (driver-oracle discipline)."""
-    n, aF, rho0, _e, (x2, x4, x6, x8) = _lcc_consts(p)
+    n, aF, rho0, _e, chis = _lcc_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     dx = x - p.fe
@@ -621,11 +542,7 @@ def lcc_inverse(x, y, p: LccParams):
     if n < 0:
         rho = -rho
     tp = (rho / aF) ** (1.0 / n)
-    chi = _HALF_PI - 2.0 * np.arctan(tp)
-    phi = (
-        chi + x2 * np.sin(2.0 * chi) + x4 * np.sin(4.0 * chi)
-        + x6 * np.sin(6.0 * chi) + x8 * np.sin(8.0 * chi)
-    )
+    phi = _series(_HALF_PI - 2.0 * np.arctan(tp), chis)
     lam = np.arctan2(dx, dy) / n
     return p.lon0 + np.degrees(lam), np.degrees(phi)
 
@@ -635,7 +552,7 @@ def lcc_inverse_sql(x_expr: str, y_expr: str, p: LccParams):
     order, E-notation DOUBLE literals (runnable in DuckDB and Spark SQL).
     Northern-hemisphere parameter sets only (n > 0 folds the sign of rho
     into a constant)."""
-    n, aF, rho0, _e, (x2, x4, x6, x8) = _lcc_consts(p)
+    n, aF, rho0, _e, chis = _lcc_consts(p)
     if n <= 0:
         raise ValueError("SQL mirror assumes n > 0 (northern standard parallels)")
     L = _flit
@@ -645,10 +562,7 @@ def lcc_inverse_sql(x_expr: str, y_expr: str, p: LccParams):
     rho = f"sqrt({dx} * {dx} + {dy} * {dy})"
     tp = f"pow({rho} / {L(aF)}, {L(1.0 / n)})"
     chi = f"({L(_HALF_PI)} - 2.0 * atan({tp}))"
-    lat = (
-        f"(({chi} + {L(x2)} * sin(2.0 * {chi}) + {L(x4)} * sin(4.0 * {chi})"
-        f" + {L(x6)} * sin(6.0 * {chi}) + {L(x8)} * sin(8.0 * {chi})) * {deg})"
-    )
+    lat = f"({_series_sql(chi, chis)} * {deg})"
     lon = f"({L(p.lon0)} + (atan2({dx}, {dy}) / {L(n)}) * {deg})"
     return lon, lat
 
@@ -685,11 +599,7 @@ def _aea_consts(p: AeaParams):
     C = m1 * m1 + n * q1
     rho0 = p.a * math.sqrt(C - n * q0) / n
     qp = float(_laea_q(np.asarray(_HALF_PI), e, p.e2))
-    e2 = p.e2
-    a2 = e2 / 3.0 + 31.0 * e2 ** 2 / 180.0 + 517.0 * e2 ** 3 / 5040.0
-    a4 = 23.0 * e2 ** 2 / 360.0 + 251.0 * e2 ** 3 / 3780.0
-    a6 = 761.0 * e2 ** 3 / 45360.0
-    return n, C, rho0, e, qp, (a2, a4, a6)
+    return n, C, rho0, e, qp, _authalic_series(p.e2)
 
 
 def aea_forward(lon, lat, p: AeaParams):
@@ -707,7 +617,7 @@ def aea_forward(lon, lat, p: AeaParams):
 def aea_inverse(x, y, p: AeaParams):
     """Albers (x, y) meters -> (lon, lat) degrees: authalic-latitude
     series inverse (Snyder eq. 3-18 — the same series as laea_inverse)."""
-    n, C, rho0, _e, qp, (a2, a4, a6) = _aea_consts(p)
+    n, C, rho0, _e, qp, auth = _aea_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     dx = x - p.fe
@@ -716,8 +626,7 @@ def aea_inverse(x, y, p: AeaParams):
     if n < 0:
         rho = -rho
     q = (C - (rho * n / p.a) ** 2) / n
-    beta = np.arcsin(np.clip(q / qp, -1.0, 1.0))
-    phi = beta + a2 * np.sin(2.0 * beta) + a4 * np.sin(4.0 * beta) + a6 * np.sin(6.0 * beta)
+    phi = _series(np.arcsin(np.clip(q / qp, -1.0, 1.0)), auth)
     lam = np.arctan2(dx, dy) / n
     return p.lon0 + np.degrees(lam), np.degrees(phi)
 
@@ -726,7 +635,7 @@ def aea_inverse_sql(x_expr: str, y_expr: str, p: AeaParams):
     """(lon_sql, lat_sql) ANSI-SQL mirror of aea_inverse — same operation
     order, E-notation DOUBLE literals. Assumes n > 0, rho > 0 and interior
     points (np.clip is identity there; driver views are margin-audited)."""
-    n, C, rho0, _e, qp, (a2, a4, a6) = _aea_consts(p)
+    n, C, rho0, _e, qp, auth = _aea_consts(p)
     if n <= 0:
         raise ValueError("SQL mirror assumes n > 0 (northern standard parallels)")
     L = _flit
@@ -738,11 +647,7 @@ def aea_inverse_sql(x_expr: str, y_expr: str, p: AeaParams):
     # SQL pow(x, 2) may round through exp/log — multiply explicitly
     rhon = f"({rho} * {L(n)} / {L(p.a)})"
     q = f"(({L(C)} - {rhon} * {rhon}) / {L(n)})"
-    beta = f"asin({q} / {L(qp)})"
-    lat = (
-        f"(({beta} + {L(a2)} * sin(2.0 * {beta}) + {L(a4)} * sin(4.0 * {beta})"
-        f" + {L(a6)} * sin(6.0 * {beta})) * {deg})"
-    )
+    lat = f"({_series_sql(f'asin({q} / {L(qp)})', auth)} * {deg})"
     lon = f"({L(p.lon0)} + (atan2({dx}, {dy}) / {L(n)}) * {deg})"
     return lon, lat
 
@@ -920,12 +825,13 @@ def _datum_sql(lon_expr: str, lat_expr: str, a: float, e2: float, helm):
     return (f"(atan2({wy}, {wx}) * {L(_DEG)})", f"({phi} * {L(_DEG)})")
 
 
-# -- generalized transverse Mercator on any ellipsoid + datum -----------------
+# -- transverse Mercator on any ellipsoid ------------------------------------
 #
-# EPSG:27700 (British National Grid: TM on Airy 1830, OSGB36 datum via the
-# published towgs84 7-param Helmert) is the registered instance; any
-# +proj=tmerc string resolves here. Snyder 1987 eq. 8-9..8-25 with
-# per-ellipsoid series constants and the lat_0 meridional-arc offset M0.
+# The UTM zones (EPSG:326xx/327xx, WGS84) and EPSG:27700 (British National
+# Grid: TM on Airy 1830, OSGB36 datum via the published towgs84 7-param
+# Helmert) are the registered instances; any +proj=tmerc string resolves
+# here. Snyder 1987 eq. 8-9..8-25 with per-ellipsoid series constants and
+# the lat_0 meridional-arc offset M0.
 
 @dataclass(frozen=True)
 class EtmParams:
@@ -939,21 +845,11 @@ class EtmParams:
     helm: tuple | None  # (tx,ty,tz,rx",ry",rz",ds_ppm) source -> WGS84
 
 
-def _tm_consts(e2: float):
-    """Meridional-arc + footpoint series constants for any e2."""
-    c0 = 1.0 - e2 / 4.0 - 3.0 * e2 ** 2 / 64.0 - 5.0 * e2 ** 3 / 256.0
-    c2 = 3.0 * e2 / 8.0 + 3.0 * e2 ** 2 / 32.0 + 45.0 * e2 ** 3 / 1024.0
-    c4 = 15.0 * e2 ** 2 / 256.0 + 45.0 * e2 ** 3 / 1024.0
-    c6 = 35.0 * e2 ** 3 / 3072.0
-    e1 = (1.0 - math.sqrt(1.0 - e2)) / (1.0 + math.sqrt(1.0 - e2))
-    return c0, c2, c4, c6, e1
-
-
-def _etm_m0(p: EtmParams) -> float:
-    c0, c2, c4, c6, _ = _tm_consts(p.e2)
-    phi0 = p.lat0 * _RAD
-    return p.a * (c0 * phi0 - c2 * math.sin(2.0 * phi0)
-                  + c4 * math.sin(4.0 * phi0) - c6 * math.sin(6.0 * phi0))
+def _etm_consts(p: EtmParams):
+    """(c0, footpoint series, ep2, M0) of a TM parameter set."""
+    c0, _c2, _c4, _c6, foot = _tm_consts(p.e2)
+    m0 = _meridian_arc(p.a, p.e2, p.lat0 * _RAD, math.sin)
+    return c0, foot, p.e2 / (1.0 - p.e2), m0
 
 
 # OSGB36 -> WGS84 (the published national 7-param set)
@@ -962,9 +858,7 @@ _OSGB_HELM = (446.448, -125.157, 542.060, 0.1502, 0.2470, 0.8421, -20.4894)
 
 def etm_forward(lon, lat, p: EtmParams):
     """(lon, lat) degrees IN THE PROJECTION'S DATUM -> grid (x, y)."""
-    c0, c2, c4, c6, _ = _tm_consts(p.e2)
-    ep2 = p.e2 / (1.0 - p.e2)
-    m0 = _etm_m0(p)
+    _c0, _foot, ep2, m0 = _etm_consts(p)
     phi = np.asarray(lat, dtype=np.float64) * _RAD
     lam = (np.asarray(lon, dtype=np.float64) - p.lon0) * _RAD
     sinp = np.sin(phi)
@@ -974,8 +868,7 @@ def etm_forward(lon, lat, p: EtmParams):
     T = tanp * tanp
     C = ep2 * cosp * cosp
     Aa = cosp * lam
-    M = p.a * (c0 * phi - c2 * np.sin(2.0 * phi)
-               + c4 * np.sin(4.0 * phi) - c6 * np.sin(6.0 * phi))
+    M = _meridian_arc(p.a, p.e2, phi, np.sin)
     x = p.fe + p.k0 * N * (
         Aa
         + (1.0 - T + C) * Aa ** 3 / 6.0
@@ -995,20 +888,11 @@ def etm_forward(lon, lat, p: EtmParams):
 def etm_inverse(x, y, p: EtmParams):
     """Grid (x, y) -> (lon, lat) degrees in the projection's datum.
     Operation order mirrors etm_inverse_sql EXACTLY."""
-    c0, _c2, _c4, _c6, e1 = _tm_consts(p.e2)
-    ep2 = p.e2 / (1.0 - p.e2)
-    m0 = _etm_m0(p)
+    c0, foot, ep2, m0 = _etm_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     M = m0 + (y - p.fn) / p.k0
-    mu = M / (p.a * c0)
-    phi1 = (
-        mu
-        + (3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0) * np.sin(2.0 * mu)
-        + (21.0 * e1 ** 2 / 16.0 - 55.0 * e1 ** 4 / 32.0) * np.sin(4.0 * mu)
-        + (151.0 * e1 ** 3 / 96.0) * np.sin(6.0 * mu)
-        + (1097.0 * e1 ** 4 / 512.0) * np.sin(8.0 * mu)
-    )
+    phi1 = _series(M / (p.a * c0), foot)
     sin1 = np.sin(phi1)
     cos1 = np.cos(phi1)
     tan1 = np.tan(phi1)
@@ -1038,40 +922,15 @@ def etm_inverse(x, y, p: EtmParams):
     return lon, lat
 
 
-def etm_inverse_wgs84(x, y, p: EtmParams):
-    """Grid (x, y) -> WGS84 (lon, lat): projection inverse then the datum
-    Helmert (identity when helm is None)."""
-    lon, lat = etm_inverse(x, y, p)
-    if p.helm is None:
-        return lon, lat
-    return datum_to_wgs84(lon, lat, p.a, p.e2, p.helm)
-
-
-def etm_forward_wgs84(lon, lat, p: EtmParams):
-    if p.helm is not None:
-        lon, lat = wgs84_to_datum(
-            np.asarray(lon, dtype=np.float64),
-            np.asarray(lat, dtype=np.float64), p.a, p.e2, p.helm,
-        )
-    return etm_forward(lon, lat, p)
-
-
 def etm_inverse_sql(x_expr: str, y_expr: str, p: EtmParams):
-    """(lon_sql, lat_sql) in the projection's DATUM — the parameterized
-    form of tm_inverse_sql (same series, per-ellipsoid constants + M0)."""
-    c0, _c2, _c4, _c6, e1 = _tm_consts(p.e2)
-    ep2 = p.e2 / (1.0 - p.e2)
-    m0 = _etm_m0(p)
+    """(lon_sql, lat_sql) in the projection's DATUM — the SQL mirror of
+    etm_inverse."""
+    c0, foot, ep2, m0 = _etm_consts(p)
     L = _flit
     a = L(p.a)
     deg = L(_DEG)
     mu = f"(({L(m0)} + (({y_expr}) - {L(p.fn)}) / {L(p.k0)}) / ({a} * {L(c0)}))"
-    phi1 = (
-        f"({mu} + {L(3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0)} * sin(2.0 * {mu})"
-        f" + {L(21.0 * e1 ** 2 / 16.0 - 55.0 * e1 ** 4 / 32.0)} * sin(4.0 * {mu})"
-        f" + {L(151.0 * e1 ** 3 / 96.0)} * sin(6.0 * {mu})"
-        f" + {L(1097.0 * e1 ** 4 / 512.0)} * sin(8.0 * {mu}))"
-    )
+    phi1 = _series_sql(mu, foot)
     c1 = f"({L(ep2)} * cos({phi1}) * cos({phi1}))"
     t1 = f"(tan({phi1}) * tan({phi1}))"
     n1 = f"({a} / sqrt(1.0 - {L(p.e2)} * sin({phi1}) * sin({phi1})))"
@@ -1117,17 +976,6 @@ _SWISS_LON0 = 7.0 + 26.0 / 60.0 + 22.5 / 3600.0    # Bern: 7°26'22.50"E
 _SWISS_HELM = (674.374, 15.056, 405.346, 0.0, 0.0, 0.0, 0.0)
 
 
-def _chi_series(e2: float):
-    """Inverse conformal-latitude series coefficients (Snyder eq. 3-5) for
-    any e2 — the per-ellipsoid form of the module's _X2.._X8."""
-    return (
-        e2 / 2.0 + 5.0 * e2 ** 2 / 24.0 + e2 ** 3 / 12.0 + 13.0 * e2 ** 4 / 360.0,
-        7.0 * e2 ** 2 / 48.0 + 29.0 * e2 ** 3 / 240.0 + 811.0 * e2 ** 4 / 11520.0,
-        7.0 * e2 ** 3 / 120.0 + 81.0 * e2 ** 4 / 1120.0,
-        4279.0 * e2 ** 4 / 161280.0,
-    )
-
-
 def _swiss_consts(p: SwissParams):
     """(alpha, rsph, b0, K, e) — the conformal-sphere constants."""
     e = math.sqrt(p.e2)
@@ -1141,11 +989,9 @@ def _swiss_consts(p: SwissParams):
 
 
 def swiss_forward(lon, lat, p: SwissParams):
-    """WGS84 (lon, lat) degrees -> Swiss grid (E, N) meters."""
+    """Datum geodetic (lon, lat) degrees -> Swiss grid (E, N) meters."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    if p.helm is not None:
-        lon, lat = wgs84_to_datum(lon, lat, p.a, p.e2, p.helm)
     alpha, rsph, b0, K, e = _swiss_consts(p)
     phi = lat * _RAD
     sinp = np.sin(phi)
@@ -1170,8 +1016,8 @@ def swiss_forward(lon, lat, p: SwissParams):
 
 
 def swiss_inverse(x, y, p: SwissParams):
-    """Swiss grid (E, N) -> WGS84 (lon, lat) degrees. Operation order
-    mirrors swiss_inverse_sql EXACTLY."""
+    """Swiss grid (E, N) -> datum geodetic (lon, lat) degrees. Operation
+    order mirrors swiss_inverse_sql EXACTLY."""
     alpha, rsph, b0, K, e = _swiss_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -1189,20 +1035,14 @@ def swiss_inverse(x, y, p: SwissParams):
     psi = (0.5 * np.log((1.0 + sinb) / (1.0 - sinb)) - K) / alpha
     ep = np.exp(2.0 * psi)
     sinchi = (ep - 1.0) / (ep + 1.0)
-    chi = np.arcsin(sinchi)
-    x2, x4, x6, x8 = _chi_series(p.e2)
-    phi = chi + x2 * np.sin(2.0 * chi) + x4 * np.sin(4.0 * chi) \
-        + x6 * np.sin(6.0 * chi) + x8 * np.sin(8.0 * chi)
-    lat_s = phi * _DEG
-    if p.helm is None:
-        return lon_s, lat_s
-    return datum_to_wgs84(lon_s, lat_s, p.a, p.e2, p.helm)
+    phi = _series(np.arcsin(sinchi), _chi_series(p.e2))
+    return lon_s, phi * _DEG
 
 
-def swiss_inverse_datum_sql(x_expr: str, y_expr: str, p: SwissParams):
+def swiss_inverse_sql(x_expr: str, y_expr: str, p: SwissParams):
     """(lon_sql, lat_sql) in the projection's DATUM (CH1903) — mirror of
-    swiss_inverse before the Helmert stage. Chain _datum_sql on top for
-    WGS84 (do it from a CTE so the big strings bind once per stage)."""
+    swiss_inverse. Chain _datum_sql on top for WGS84 (do it from a CTE so
+    the big strings bind once per stage)."""
     alpha, rsph, b0, K, e = _swiss_consts(p)
     L = _flit
     sb0, cb0 = L(math.sin(b0)), L(math.cos(b0))
@@ -1217,12 +1057,7 @@ def swiss_inverse_datum_sql(x_expr: str, y_expr: str, p: SwissParams):
     psi = f"((0.5 * ln((1.0 + {sinb}) / (1.0 - {sinb})) - {L(K)}) / {L(alpha)})"
     ep = f"exp(2.0 * {psi})"
     chi = f"asin(({ep} - 1.0) / ({ep} + 1.0))"
-    x2, x4, x6, x8 = _chi_series(p.e2)
-    lat = (
-        f"(({chi} + {L(x2)} * sin(2.0 * {chi}) + {L(x4)} * sin(4.0 * {chi})"
-        f" + {L(x6)} * sin(6.0 * {chi}) + {L(x8)} * sin(8.0 * {chi})) * {L(_DEG)})"
-    )
-    return lon, lat
+    return lon, f"({_series_sql(chi, _chi_series(p.e2))} * {L(_DEG)})"
 
 
 # -- Lambert cylindrical equal area (EPSG method 9835; Snyder §10) ------------
@@ -1247,11 +1082,7 @@ def _cea_consts(p: CeaParams):
     ts = p.lat_ts * _RAD
     k0 = math.cos(ts) / math.sqrt(1.0 - p.e2 * math.sin(ts) ** 2)
     qp = float(_laea_q(np.asarray(_HALF_PI), e, p.e2))
-    # authalic-latitude inverse series (Snyder eq. 3-18 — same as AEA/LAEA)
-    a2 = p.e2 / 3.0 + 31.0 * p.e2 ** 2 / 180.0 + 517.0 * p.e2 ** 3 / 5040.0
-    a4 = 23.0 * p.e2 ** 2 / 360.0 + 251.0 * p.e2 ** 3 / 3780.0
-    a6 = 761.0 * p.e2 ** 3 / 45360.0
-    return e, k0, qp, (a2, a4, a6)
+    return e, k0, qp, _authalic_series(p.e2)
 
 
 def cea_forward(lon, lat, p: CeaParams):
@@ -1265,28 +1096,21 @@ def cea_forward(lon, lat, p: CeaParams):
 
 def cea_inverse(x, y, p: CeaParams):
     """Operation order mirrors cea_inverse_sql EXACTLY."""
-    _e, k0, qp, (a2, a4, a6) = _cea_consts(p)
+    _e, k0, qp, auth = _cea_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     lon = p.lon0 + (x - p.fe) / (p.a * k0) * _DEG
     q = (y - p.fn) * (2.0 * k0) / p.a
-    beta = np.arcsin(np.clip(q / qp, -1.0, 1.0))
-    phi = beta + a2 * np.sin(2.0 * beta) + a4 * np.sin(4.0 * beta) \
-        + a6 * np.sin(6.0 * beta)
+    phi = _series(np.arcsin(np.clip(q / qp, -1.0, 1.0)), auth)
     return lon, phi * _DEG
 
 
 def cea_inverse_sql(x_expr: str, y_expr: str, p: CeaParams):
-    _e, k0, qp, (a2, a4, a6) = _cea_consts(p)
+    _e, k0, qp, auth = _cea_consts(p)
     L = _flit
     lon = f"({L(p.lon0)} + (({x_expr}) - {L(p.fe)}) / {L(p.a * k0)} * {L(_DEG)})"
     q = f"((({y_expr}) - {L(p.fn)}) * {L(2.0 * k0)} / {L(p.a)})"
-    beta = f"asin({q} / {L(qp)})"
-    lat = (
-        f"(({beta} + {L(a2)} * sin(2.0 * {beta}) + {L(a4)} * sin(4.0 * {beta})"
-        f" + {L(a6)} * sin(6.0 * {beta})) * {L(_DEG)})"
-    )
-    return lon, lat
+    return lon, f"({_series_sql(f'asin({q} / {L(qp)})', auth)} * {L(_DEG)})"
 
 
 # -- Equidistant cylindrical (EPSG method 1028; Plate Carrée) -----------------
@@ -1310,54 +1134,37 @@ class EqcParams:
 
 
 def _eqc_consts(p: EqcParams):
-    c0, c2, c4, c6, e1 = _tm_consts(p.e2)
+    c0, _c2, _c4, _c6, foot = _tm_consts(p.e2)
     ts = p.lat_ts * _RAD
     nu_cos = p.a / math.sqrt(1.0 - p.e2 * math.sin(ts) ** 2) * math.cos(ts)
-    phi0 = p.lat0 * _RAD
-    m0 = p.a * (c0 * phi0 - c2 * math.sin(2.0 * phi0)
-                + c4 * math.sin(4.0 * phi0) - c6 * math.sin(6.0 * phi0))
-    return nu_cos, m0, (c0, c2, c4, c6, e1)
+    m0 = _meridian_arc(p.a, p.e2, p.lat0 * _RAD, math.sin)
+    return nu_cos, m0, c0, foot
 
 
 def eqc_forward(lon, lat, p: EqcParams):
-    nu_cos, m0, (c0, c2, c4, c6, _e1) = _eqc_consts(p)
+    nu_cos, m0, _c0, _foot = _eqc_consts(p)
     lam = (np.asarray(lon, dtype=np.float64) - p.lon0) * _RAD
     phi = np.asarray(lat, dtype=np.float64) * _RAD
     x = p.fe + nu_cos * lam
-    m = p.a * (c0 * phi - c2 * np.sin(2.0 * phi)
-               + c4 * np.sin(4.0 * phi) - c6 * np.sin(6.0 * phi))
-    return x, p.fn + m - m0
+    return x, p.fn + _meridian_arc(p.a, p.e2, phi, np.sin) - m0
 
 
 def eqc_inverse(x, y, p: EqcParams):
     """Operation order mirrors eqc_inverse_sql EXACTLY."""
-    nu_cos, m0, (c0, _c2, _c4, _c6, e1) = _eqc_consts(p)
+    nu_cos, m0, c0, foot = _eqc_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
     lon = p.lon0 + (x - p.fe) / nu_cos * _DEG
-    mu = (m0 + (y - p.fn)) / (p.a * c0)
-    phi = (
-        mu
-        + (3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0) * np.sin(2.0 * mu)
-        + (21.0 * e1 ** 2 / 16.0 - 55.0 * e1 ** 4 / 32.0) * np.sin(4.0 * mu)
-        + (151.0 * e1 ** 3 / 96.0) * np.sin(6.0 * mu)
-        + (1097.0 * e1 ** 4 / 512.0) * np.sin(8.0 * mu)
-    )
+    phi = _series((m0 + (y - p.fn)) / (p.a * c0), foot)
     return lon, phi * _DEG
 
 
 def eqc_inverse_sql(x_expr: str, y_expr: str, p: EqcParams):
-    nu_cos, m0, (c0, _c2, _c4, _c6, e1) = _eqc_consts(p)
+    nu_cos, m0, c0, foot = _eqc_consts(p)
     L = _flit
     lon = f"({L(p.lon0)} + (({x_expr}) - {L(p.fe)}) / {L(nu_cos)} * {L(_DEG)})"
     mu = f"(({L(m0)} + (({y_expr}) - {L(p.fn)})) / {L(p.a * c0)})"
-    lat = (
-        f"(({mu} + {L(3.0 * e1 / 2.0 - 27.0 * e1 ** 3 / 32.0)} * sin(2.0 * {mu})"
-        f" + {L(21.0 * e1 ** 2 / 16.0 - 55.0 * e1 ** 4 / 32.0)} * sin(4.0 * {mu})"
-        f" + {L(151.0 * e1 ** 3 / 96.0)} * sin(6.0 * {mu})"
-        f" + {L(1097.0 * e1 ** 4 / 512.0)} * sin(8.0 * {mu})) * {L(_DEG)})"
-    )
-    return lon, lat
+    return lon, f"({_series_sql(mu, foot)} * {L(_DEG)})"
 
 
 # -- Modified azimuthal equidistant (EPSG method 9832) ------------------------
@@ -1382,8 +1189,6 @@ def aeqd_forward(lon, lat, p: AeqdParams):
     """Datum geodetic degrees -> grid (E, N) (EPSG 9832 forward series)."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    if p.helm is not None:
-        lon, lat = wgs84_to_datum(lon, lat, p.a, p.e2, p.helm)
     e2 = p.e2
     phi0 = p.lat0 * _RAD
     s0, c0 = math.sin(phi0), math.cos(phi0)
@@ -1414,8 +1219,8 @@ def aeqd_forward(lon, lat, p: AeqdParams):
 
 
 def aeqd_inverse(x, y, p: AeqdParams):
-    """Grid -> WGS84 degrees (datum chain when helm set). Operation order
-    mirrors aeqd_inverse_datum_sql EXACTLY."""
+    """Grid -> datum geodetic degrees. Operation order mirrors
+    aeqd_inverse_sql EXACTLY."""
     e2 = p.e2
     phi0 = p.lat0 * _RAD
     s0, c0 = math.sin(phi0), math.cos(phi0)
@@ -1439,14 +1244,12 @@ def aeqd_inverse(x, y, p: AeqdParams):
     phi = np.arctan(
         (1.0 - e2 * K * s0 / np.sin(PSI)) * np.tan(PSI) / (1.0 - e2)
     ) * _DEG
-    if p.helm is None:
-        return lam, phi
-    return datum_to_wgs84(lam, phi, p.a, p.e2, p.helm)
+    return lam, phi
 
 
-def aeqd_inverse_datum_sql(x_expr: str, y_expr: str, p: AeqdParams):
+def aeqd_inverse_sql(x_expr: str, y_expr: str, p: AeqdParams):
     """(lon_sql, lat_sql) in the projection's datum — mirror of
-    aeqd_inverse before any Helmert stage."""
+    aeqd_inverse."""
     e2 = p.e2
     phi0 = p.lat0 * _RAD
     s0, c0 = math.sin(phi0), math.cos(phi0)
@@ -1516,11 +1319,9 @@ def _hom_consts(p: HomParams):
 
 
 def hom_forward(lon, lat, p: HomParams):
-    """Datum geodetic degrees -> grid (E, N); WGS84 in when helm set."""
+    """Datum geodetic degrees -> grid (E, N)."""
     lon = np.asarray(lon, dtype=np.float64)
     lat = np.asarray(lat, dtype=np.float64)
-    if p.helm is not None:
-        lon, lat = wgs84_to_datum(lon, lat, p.a, p.e2, p.helm)
     e, B, A, H, gamma0, lam0, uc = _hom_consts(p)
     phi = lat * _RAD
     sinp = np.sin(phi)
@@ -1545,8 +1346,8 @@ def hom_forward(lon, lat, p: HomParams):
 
 
 def hom_inverse(x, y, p: HomParams):
-    """Grid (E, N) -> WGS84 degrees (datum chain when helm set).
-    Operation order mirrors hom_inverse_datum_sql EXACTLY."""
+    """Grid (E, N) -> datum geodetic degrees. Operation order mirrors
+    hom_inverse_sql EXACTLY."""
     e, B, A, H, gamma0, lam0, uc = _hom_consts(p)
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
@@ -1562,21 +1363,14 @@ def hom_inverse(x, y, p: HomParams):
     sg0, cg0 = math.sin(gamma0), math.cos(gamma0)
     U = (V * cg0 + S * sg0) / T
     t = (H / np.sqrt((1.0 + U) / (1.0 - U))) ** (1.0 / B)
-    chi = np.pi / 2.0 - 2.0 * np.arctan(t)
-    x2, x4, x6, x8 = _chi_series(p.e2)
-    phi = chi + x2 * np.sin(2.0 * chi) + x4 * np.sin(4.0 * chi) \
-        + x6 * np.sin(6.0 * chi) + x8 * np.sin(8.0 * chi)
+    phi = _series(np.pi / 2.0 - 2.0 * np.arctan(t), _chi_series(p.e2))
     lam = lam0 - np.arctan2(S * cg0 - V * sg0, np.cos(B * u / A)) / B
-    lon_s = lam * _DEG
-    lat_s = phi * _DEG
-    if p.helm is None:
-        return lon_s, lat_s
-    return datum_to_wgs84(lon_s, lat_s, p.a, p.e2, p.helm)
+    return lam * _DEG, phi * _DEG
 
 
-def hom_inverse_datum_sql(x_expr: str, y_expr: str, p: HomParams):
+def hom_inverse_sql(x_expr: str, y_expr: str, p: HomParams):
     """(lon_sql, lat_sql) in the projection's DATUM — mirror of
-    hom_inverse before the Helmert stage (chain _datum_sql on top)."""
+    hom_inverse (chain _datum_sql on top)."""
     e, B, A, H, gamma0, lam0, uc = _hom_consts(p)
     L = _flit
     gc = p.gammac * _RAD
@@ -1592,11 +1386,7 @@ def hom_inverse_datum_sql(x_expr: str, y_expr: str, p: HomParams):
     U = f"(({V} * {cg0} + {S} * {sg0}) / {T})"
     t = f"pow({L(H)} / sqrt((1.0 + {U}) / (1.0 - {U})), {L(1.0 / B)})"
     chi = f"({L(math.pi / 2.0)} - 2.0 * atan({t}))"
-    x2, x4, x6, x8 = _chi_series(p.e2)
-    lat = (
-        f"(({chi} + {L(x2)} * sin(2.0 * {chi}) + {L(x4)} * sin(4.0 * {chi})"
-        f" + {L(x6)} * sin(6.0 * {chi}) + {L(x8)} * sin(8.0 * {chi})) * {L(_DEG)})"
-    )
+    lat = f"({_series_sql(chi, _chi_series(p.e2))} * {L(_DEG)})"
     lon = (
         f"(({L(lam0)} - atan2({S} * {cg0} - {V} * {sg0}, "
         f"cos({L(B)} * {u} / {L(A)})) / {L(B)}) * {L(_DEG)})"
@@ -1607,7 +1397,7 @@ def hom_inverse_datum_sql(x_expr: str, y_expr: str, p: HomParams):
 # -- the family table -----------------------------------------------------------
 #
 # Every SRS resolves to (family, params) here and nowhere else. A family row
-# carries its dynamic-key codec and its WGS84-in/out kernels, so normalize,
+# carries its dynamic-key codec and its datum-local kernels, so normalize,
 # is_separable and every transform entry point below dispatch on the row,
 # never on a family name.
 
@@ -1616,19 +1406,23 @@ class Family:
     """One projection family.
 
     prefix       dynamic-key prefix ("PS" -> "PS:..."); None for the
-                 families reached only through EPSG codes (4326, 3857, UTM)
+                 families reached only through EPSG codes (4326, 3857)
     params       the parameter dataclass a dynamic key parses into
-    forward      (lon, lat, p) -> (x, y): WGS84 in, datum stage included
-    inverse      (x, y, p) -> (lon, lat): WGS84 out, datum stage included
+    forward      (lon, lat, p) -> (x, y), geodetic in the projection's datum
+    inverse      (x, y, p) -> (lon, lat), geodetic in the projection's datum
     inverse_sql  (x_sql, y_sql, p) -> (lon_sql, lat_sql): the SQL mirror of
-                 the projection inverse the DuckDB oracle replays, in the
-                 projection's datum (chain _datum_sql when p.helm is set)
+                 inverse the DuckDB oracle replays (chain _datum_sql when
+                 p.helm is set)
     separable    x depends only on lon and y only on lat
     key          dynamic-key field spec: ((params field, (encode, decode)),
                  ...) in key order; ``const`` fills params fields the key
                  omits, and a params ``helm`` rides as an optional suffix
     pole         p -> (x, y, lat) of the pole the projection maps to a
                  point, for bbox_to_wgs84's full-longitude case
+
+    A params ``helm`` is the datum stage: the entry points (_to_grid and
+    _to_wgs84) apply it around the kernels, which never read it. The UTM
+    zones are ETM rows of ``_KNOWN``, not a family of their own.
     """
 
     prefix: str | None
@@ -1663,12 +1457,6 @@ WEBMERC = Family(
     lambda x, y, p: (x_to_lon(x), y_to_lat(y)),
     separable=True,
 )
-UTM = Family(  # params: (lon0, false northing), see utm_params
-    None, None,
-    lambda lon, lat, p: tm_forward(lon, lat, *p),
-    lambda x, y, p: tm_inverse(x, y, *p),
-    lambda x, y, p: tm_inverse_sql(x, y, *p),
-)
 PS = Family("PS", PolarPS, ps_forward, ps_inverse, ps_inverse_sql,
             key=_spec("lat_ts lon0 fe fn south", south=_HEMI),
             pole=lambda p: (p.fe, p.fn, -90.0 if p.south else 90.0))
@@ -1680,15 +1468,15 @@ LCC = Family("LCC", LccParams, lcc_forward, lcc_inverse, lcc_inverse_sql,
              key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
 AEA = Family("AEA", AeaParams, aea_forward, aea_inverse, aea_inverse_sql,
              key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
-ETM = Family("ETM", EtmParams, etm_forward_wgs84, etm_inverse_wgs84, etm_inverse_sql,
+ETM = Family("ETM", EtmParams, etm_forward, etm_inverse, etm_inverse_sql,
              key=_spec("a e2 k0 lat0 lon0 fe fn"))
-SOMERC = Family("SOMERC", SwissParams, swiss_forward, swiss_inverse,
-                swiss_inverse_datum_sql, key=_spec("a e2 lat0 lon0 fe fn"))
-HOM = Family("HOM", HomParams, hom_forward, hom_inverse, hom_inverse_datum_sql,
+SOMERC = Family("SOMERC", SwissParams, swiss_forward, swiss_inverse, swiss_inverse_sql,
+                key=_spec("a e2 lat0 lon0 fe fn"))
+HOM = Family("HOM", HomParams, hom_forward, hom_inverse, hom_inverse_sql,
              key=_spec("a e2 latc lonc alphac gammac k0 ec nc"))
 CEA = Family("CEA", CeaParams, cea_forward, cea_inverse, cea_inverse_sql,
              separable=True, key=_spec("lat_ts lon0 fe fn a e2"))
-AEQD = Family("AEQD", AeqdParams, aeqd_forward, aeqd_inverse, aeqd_inverse_datum_sql,
+AEQD = Family("AEQD", AeqdParams, aeqd_forward, aeqd_inverse, aeqd_inverse_sql,
               key=_spec("lat0 lon0 fe fn a e2"))
 EQC = Family("EQC", EqcParams, eqc_forward, eqc_inverse, eqc_inverse_sql,
              separable=True, key=_spec("lat_ts lat0 lon0 fe fn a e2"))
@@ -1700,8 +1488,11 @@ _BY_PREFIX = {f.prefix: f for f in (PS, LAEA, SINU, LCC, AEA, ETM, SOMERC, HOM,
 _KNOWN: dict = {
     "EPSG:4326": (WGS84, None),
     "EPSG:3857": (WEBMERC, None),
-    **{f"EPSG:32{6 + s}{z:02d}": (UTM, (-183.0 + 6.0 * z, FN_SOUTH if s else 0.0))
-       for s in (0, 1) for z in range(1, 61)},
+    # WGS 84 / UTM zones 1..60 N (326xx) and S (327xx)
+    **{f"EPSG:32{6 + s}{z:02d}": (ETM, EtmParams(
+        a=A_WGS84, e2=E2, k0=K0, lat0=0.0, lon0=-183.0 + 6.0 * z,
+        fe=FE, fn=FN_SOUTH if s else 0.0, helm=None,
+    )) for s in (0, 1) for z in range(1, 61)},
     # WGS84 Antarctic Polar Stereographic
     "EPSG:3031": (PS, PolarPS(lat_ts=-71.0, lon0=0.0, fe=0.0, fn=0.0, south=True)),
     # NSIDC Sea Ice Polar Stereographic North
@@ -1925,7 +1716,7 @@ def normalize(srs: str) -> str:
 
 def resolve(srs: str):
     """(family, params) of any supported SRS string — the one lookup
-    is_separable, utm_params and every transform entry point go through."""
+    is_separable and every transform entry point go through."""
     key = normalize(srs)
     return _KNOWN.get(key) or _PARSED[key]
 
@@ -1937,21 +1728,35 @@ def is_separable(srs: str) -> bool:
     return resolve(srs)[0].separable
 
 
-def utm_params(srs: str):
-    """(lon0_degrees, false_northing) of a UTM code, or None."""
-    fam, p = resolve(srs)
-    return p if fam is UTM else None
-
-
 # -- generic transform surface -------------------------------------------------
 
 _BBOX_SAMPLES = 9  # points per rectangle edge in bbox_to_wgs84
 
 
+def _to_grid(fam: Family, p, lon, lat):
+    """WGS84 (lon, lat) -> grid (x, y): the datum stage, when the params
+    carry a helm, then the family's forward kernel."""
+    helm = getattr(p, "helm", None)
+    if helm is not None:
+        lon, lat = wgs84_to_datum(np.asarray(lon, dtype=np.float64),
+                                  np.asarray(lat, dtype=np.float64), p.a, p.e2, helm)
+    return fam.forward(lon, lat, p)
+
+
+def _to_wgs84(fam: Family, p, x, y):
+    """Grid (x, y) -> WGS84 (lon, lat): the family's inverse kernel, then
+    the datum stage when the params carry a helm."""
+    lon, lat = fam.inverse(x, y, p)
+    helm = getattr(p, "helm", None)
+    if helm is None:
+        return lon, lat
+    return datum_to_wgs84(lon, lat, p.a, p.e2, helm)
+
+
 def _axis_lonlat(fam: Family, p, xs, ys):
     # separable: lon depends on x alone and lat on y alone, so the other
     # coordinate can be a scalar zero
-    return fam.inverse(xs, 0.0, p)[0], fam.inverse(0.0, ys, p)[1]
+    return _to_wgs84(fam, p, xs, 0.0)[0], _to_wgs84(fam, p, 0.0, ys)[1]
 
 
 def axis_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
@@ -1973,21 +1778,19 @@ def grid_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
         )
     X = np.broadcast_to(np.asarray(xs, dtype=np.float64)[None, :], (len(ys), len(xs)))
     Y = np.broadcast_to(np.asarray(ys, dtype=np.float64)[:, None], (len(ys), len(xs)))
-    return fam.inverse(X, Y, p)
+    return _to_wgs84(fam, p, X, Y)
 
 
 def from_wgs84(lon, lat, srs: str):
     """(lon, lat) -> coords in ``srs`` (vectorized)."""
-    fam, p = resolve(srs)
-    return fam.forward(lon, lat, p)
+    return _to_grid(*resolve(srs), lon, lat)
 
 
 def points_to_wgs84(x, y, srs: str):
     """Point-wise (x, y in srs) -> (lon, lat) (vectorized; the inverse of
     from_wgs84 for arbitrary point sets, not axis grids)."""
-    fam, p = resolve(srs)
-    return fam.inverse(np.asarray(x, dtype=np.float64),
-                       np.asarray(y, dtype=np.float64), p)
+    return _to_wgs84(*resolve(srs), np.asarray(x, dtype=np.float64),
+                     np.asarray(y, dtype=np.float64))
 
 
 def bbox_to_wgs84(left, right, bottom, top, srs: str):
@@ -2000,15 +1803,15 @@ def bbox_to_wgs84(left, right, bottom, top, srs: str):
     src/image_collection.cpp:1326)."""
     fam, p = resolve(srs)
     if fam.separable:
-        lon0, lat0 = fam.inverse(left, bottom, p)
-        lon1, lat1 = fam.inverse(right, top, p)
+        lon0, lat0 = _to_wgs84(fam, p, left, bottom)
+        lon1, lat1 = _to_wgs84(fam, p, right, top)
         return float(lon0), float(lon1), float(lat0), float(lat1)
     t = np.linspace(0.0, 1.0, _BBOX_SAMPLES)
     xs = left + (right - left) * t
     ys = bottom + (top - bottom) * t
     ex = np.concatenate([xs, xs, np.full_like(ys, left), np.full_like(ys, right)])
     ey = np.concatenate([np.full_like(xs, bottom), np.full_like(xs, top), ys, ys])
-    lon, lat = fam.inverse(ex, ey, p)
+    lon, lat = _to_wgs84(fam, p, ex, ey)
     pole = fam.pole(p) if fam.pole is not None else None
     if pole is not None and left <= pole[0] <= right and bottom <= pole[1] <= top:
         # rectangle contains the pole: every longitude occurs; latitudes

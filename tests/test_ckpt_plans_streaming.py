@@ -227,6 +227,21 @@ def test_value_digest_tells_null_positions_apart(spark):
             != b.agg(ckpt.value_digest(b)).first()[0])
 
 
+def test_plan_mask_file_kind_raises():
+    """Plans build masks from value, range and band specs; a file mask
+    needs a collection-level mask table no plan source supplies, so its
+    kind is unknown."""
+    from gdalcubes_cpp_spark.operators.build import BandMask
+    from gdalcubes_cpp_spark.plans.jsonplan import _mask_from_spec
+
+    assert isinstance(_mask_from_spec({"kind": "band", "channel": 1, "values": [3]}),
+                      BandMask)
+    with pytest.raises(ValueError, match="unknown mask kind 'file'"):
+        _mask_from_spec({"kind": "file"})
+    with pytest.raises(ValueError, match="unknown mask kind 'file'"):
+        _mask_from_spec({"kind": "file", "channel": 0, "values": [3]})
+
+
 def test_json_plan_roundtrip(spark):
     v = view_small(nx=20, ny=20, chunk_size=(4, 10, 10))
     plan = {

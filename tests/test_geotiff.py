@@ -210,7 +210,8 @@ def test_translate_to_cog(spark):
 
 def test_write_gtiff_distributed_byte_identical(spark, tmp_path):
     """The executor-side per-slice export produces byte-identical files to
-    the driver-side gather writer, for both flavors."""
+    the driver-side gather writer, for both flavors, including a slice
+    whose every cell was filtered out."""
     from gdalcubes_cpp_spark.sources.collection import formula_cube
     from gdalcubes_cpp_spark.sources.geotiff import (
         write_cog,
@@ -226,6 +227,7 @@ def test_write_gtiff_distributed_byte_identical(spark, tmp_path):
     )
     c = formula_cube(spark, v, {"B1": "CAST(it*100 + iy*10 + ix AS DOUBLE)",
                                 "B2": "CASE WHEN ix = 2 THEN NULL ELSE CAST(ix AS DOUBLE) END"})
+    c = c.filter_pixel("it != 1")  # slice 1 is empty
     drv = write_gtiff(c, str(tmp_path / "drv"))
     dist = write_gtiff_distributed(c, str(tmp_path / "dist"))
     assert len(dist) == v.nt == len(drv)
@@ -235,6 +237,7 @@ def test_write_gtiff_distributed_byte_identical(spark, tmp_path):
     # COG flavor
     drv_c = write_cog(c, str(tmp_path / "drvc"))
     dist_c = write_gtiff_distributed(c, str(tmp_path / "distc"), flavor="cog")
+    assert [it for it, _, _ in dist_c] == list(range(v.nt)) and len(drv_c) == v.nt
     for (it, dpath, _), spath in zip(dist_c, drv_c):
         assert open(dpath, "rb").read() == open(spath, "rb").read(), it
 

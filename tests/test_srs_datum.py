@@ -79,9 +79,9 @@ def test_osgb_datum_shift_magnitude():
     lon = np.linspace(-6.0, 1.8, 10)
     lat = np.linspace(50.0, 58.5, 9)
     LON, LAT = np.meshgrid(lon, lat)
-    x, y = srs.etm_forward_wgs84(LON, LAT, OSGB)
-    lo36, la36 = srs.etm_inverse(x, y, OSGB)
-    lo84, la84 = srs.etm_inverse_wgs84(x, y, OSGB)
+    x, y = srs.from_wgs84(LON, LAT, "EPSG:27700")
+    lo36, la36 = srs.etm_inverse(x, y, OSGB)  # the kernel alone: OSGB36
+    lo84, la84 = srs.points_to_wgs84(x, y, "EPSG:27700")
     m = np.hypot(
         (lo84 - lo36) * 111320.0 * np.cos(np.radians(la84)),
         (la84 - la36) * 110574.0,
@@ -93,16 +93,16 @@ def test_roundtrips_wgs84():
     lon = np.linspace(-6.0, 1.8, 10)
     lat = np.linspace(50.0, 58.5, 9)
     LON, LAT = np.meshgrid(lon, lat)
-    x, y = srs.etm_forward_wgs84(LON, LAT, OSGB)
-    lo, la = srs.etm_inverse_wgs84(x, y, OSGB)
+    x, y = srs.from_wgs84(LON, LAT, "EPSG:27700")
+    lo, la = srs.points_to_wgs84(x, y, "EPSG:27700")
     assert np.abs(lo - LON).max() < 1e-6  # TM series truncation, ~cm
     assert np.abs(la - LAT).max() < 1e-6
     lon = np.linspace(6.0, 10.5, 12)
     lat = np.linspace(45.8, 47.8, 9)
     LON, LAT = np.meshgrid(lon, lat)
-    for p in (LV95, LV03):
-        x, y = srs.swiss_forward(LON, LAT, p)
-        lo, la = srs.swiss_inverse(x, y, p)
+    for key in ("EPSG:2056", "EPSG:21781"):
+        x, y = srs.from_wgs84(LON, LAT, key)
+        lo, la = srs.points_to_wgs84(x, y, key)
         assert np.abs(lo - LON).max() < 1e-7
         assert np.abs(la - LAT).max() < 1e-7
 
@@ -128,25 +128,18 @@ def test_swiss_conformality():
 
 
 def test_sql_mirror_duckdb():
-    """etm_inverse_sql + _datum_sql and swiss_inverse_datum_sql + _datum_sql
-    replay the numpy kernels in DuckDB to libm ulps."""
+    """etm_inverse_sql + _datum_sql and swiss_inverse_sql + _datum_sql
+    replay the numpy transforms in DuckDB to libm ulps."""
     import duckdb
 
     con = duckdb.connect()
 
     def parity(key, xs, ys):
         fam, p = srs.resolve(key)
-        p_etm = p if fam is srs.ETM else None
         X, Y = np.meshgrid(xs, ys)
         lon_np, lat_np = srs.points_to_wgs84(X.ravel(), Y.ravel(), key)
-        if p_etm is not None:
-            lon_s, lat_s = srs.etm_inverse_sql("x", "y", p_etm)
-            a, e2, helm = p_etm.a, p_etm.e2, p_etm.helm
-        else:
-            pw = p
-            lon_s, lat_s = srs.swiss_inverse_datum_sql("x", "y", pw)
-            a, e2, helm = pw.a, pw.e2, pw.helm
-        dlon, dlat = srs._datum_sql("lon0d", "lat0d", a, e2, helm)
+        lon_s, lat_s = fam.inverse_sql("x", "y", p)
+        dlon, dlat = srs._datum_sql("lon0d", "lat0d", p.a, p.e2, p.helm)
         con.execute("CREATE OR REPLACE TABLE t AS SELECT * FROM (VALUES "
                     + ",".join(f"({x!r}, {y!r})" for x, y in zip(X.ravel(), Y.ravel()))
                     + ") v(x, y)")
@@ -304,7 +297,7 @@ def test_aeqd_yap():
     M = p.a * (1 - p.e2) / (1 - p.e2 * np.sin(phis) ** 2) ** 1.5
     assert abs(d - float(np.trapz(M, phis))) < 1e-3
     # SQL mirror parity
-    lon_s, lat_s = srs.aeqd_inverse_datum_sql("x", "y", p)
+    lon_s, lat_s = srs.aeqd_inverse_sql("x", "y", p)
     con = duckdb.connect()
     pts = list(zip(np.asarray(x).ravel()[::5], np.asarray(y).ravel()[::5]))
     con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "

@@ -75,8 +75,8 @@ def test_sql_mirror_duckdb():
     xs = np.linspace(200000.0, 900000.0, 15)
     ys = np.linspace(150000.0, 900000.0, 12)
     X, Y = np.meshgrid(xs, ys)
-    lon_np, lat_np = srs.hom_inverse(X.ravel(), Y.ravel(), RSO)
-    lon_s, lat_s = srs.hom_inverse_datum_sql("x", "y", RSO)
+    lon_np, lat_np = srs.points_to_wgs84(X.ravel(), Y.ravel(), "EPSG:29873")
+    lon_s, lat_s = srs.hom_inverse_sql("x", "y", RSO)
     dlon, dlat = srs._datum_sql("lon0d", "lat0d", RSO.a, RSO.e2, RSO.helm)
     con = duckdb.connect()
     con.execute("CREATE TABLE t AS SELECT * FROM (VALUES "

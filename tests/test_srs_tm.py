@@ -1,9 +1,10 @@
 """Transverse-Mercator / UTM SRS support (srs.py) — validated against an
 INDEPENDENT Krueger-series implementation (different algorithm, implemented
 here), numerical meridian-arc integration, round-trips, and the SQL mirror
-(the DuckDB oracle path). Reference parity: the reference accepts any GDAL
-SRS (src/warp.cpp:33-55, src/view.h:703-711); its flagship collection
-formats are UTM-zone products (formats/Sentinel2_L2A.json)."""
+(the DuckDB oracle path), all through the public transform surface: a UTM
+zone is an ETM row of the family table. Reference parity: the reference
+accepts any GDAL SRS (src/warp.cpp:33-55, src/view.h:703-711); its flagship
+collection formats are UTM-zone products (formats/Sentinel2_L2A.json)."""
 
 import math
 
@@ -49,7 +50,7 @@ def krueger_forward(lon, lat, lon0):
 def test_tm_forward_vs_krueger():
     lons = np.array([12.0, 13.5, 15.0, 16.7, 17.99, 12.01])
     lats = np.array([0.5, 46.0, 60.0, 75.0, 46.0, -35.0])
-    xs, ys = srs.tm_forward(lons, lats, 15.0)
+    xs, ys = srs.from_wgs84(lons, lats, "EPSG:32633")
     xk, yk = krueger_forward(lons, lats, 15.0)
     assert np.abs(xs - xk).max() < 0.002  # < 2 mm in-zone
     assert np.abs(ys - yk).max() < 0.002
@@ -58,13 +59,13 @@ def test_tm_forward_vs_krueger():
 def test_tm_central_meridian_anchors():
     # on the CM: easting exactly FE, northing = k0 * meridian arc, where the
     # arc comes from numerically integrating a(1-e2)/(1-e2 sin^2)^{3/2}
-    x, y = srs.tm_forward(15.0, 60.0, 15.0)
+    x, y = srs.from_wgs84(15.0, 60.0, "EPSG:32633")
     assert x == 500000.0
     g = np.linspace(0, math.radians(60.0), 2_000_001)
     arc = np.trapz(srs.A_WGS84 * (1 - srs.E2) / (1 - srs.E2 * np.sin(g) ** 2) ** 1.5, g)
     assert abs(y - 0.9996 * arc) < 0.002
     # equator origin
-    x0, y0 = srs.tm_forward(15.0, 0.0, 15.0)
+    x0, y0 = srs.from_wgs84(15.0, 0.0, "EPSG:32633")
     assert x0 == 500000.0 and abs(y0) < 1e-9
 
 
@@ -72,27 +73,48 @@ def test_tm_roundtrip_and_south():
     rng = np.random.RandomState(0)
     lon = rng.uniform(11.5, 18.5, 500)
     lat = rng.uniform(-79, 84, 500)
-    x, y = srs.tm_forward(lon, lat, 15.0)
-    lo, la = srs.tm_inverse(x, y, 15.0)
+    x, y = srs.from_wgs84(lon, lat, "EPSG:32633")
+    lo, la = srs.points_to_wgs84(x, y, "EPSG:32633")
     assert np.abs(lo - lon).max() < 1e-7
     assert np.abs(la - lat).max() < 1e-7
     # south zone false northing (EPSG:327xx)
     x, y = srs.from_wgs84(173.0, -41.3, "EPSG:32760")
     assert y > 0  # false northing applied
-    lo, la = srs.tm_inverse(np.array([x]), np.array([y]), -183 + 6 * 60, 10000000.0)
+    assert srs.resolve("EPSG:32760")[1].lon0 == -183 + 6 * 60
+    lo, la = srs.points_to_wgs84(np.array([x]), np.array([y]), "EPSG:32760")
     assert abs(lo[0] - 173.0) < 1e-7 and abs(la[0] - (-41.3)) < 1e-7
 
 
 def test_normalize_and_params():
     assert srs.normalize("epsg:32633") == "EPSG:32633"
-    assert srs.utm_params("EPSG:32633") == (15.0, 0.0)
-    assert srs.utm_params("EPSG:32701") == (-177.0, 10000000.0)
+    fam, p = srs.resolve("EPSG:32633")
+    assert fam is srs.ETM and (p.lon0, p.fn) == (15.0, 0.0)
+    assert (p.a, p.e2, p.k0, p.lat0, p.fe, p.helm) == (
+        srs.A_WGS84, srs.E2, 0.9996, 0.0, 500000.0, None)
+    p = srs.resolve("EPSG:32701")[1]
+    assert (p.lon0, p.fn) == (-177.0, 10000000.0)
     assert not srs.is_separable("EPSG:32633")
     assert srs.is_separable("EPSG:3857")
     with pytest.raises(ValueError):
         srs.normalize("EPSG:32661")  # UPS, unsupported
     with pytest.raises(ValueError):
         srs.normalize("EPSG:25832")
+
+
+def test_normalize_utm_tmerc():
+    """A WGS84 +proj=tmerc string with a UTM zone's parameters resolves to
+    that zone's EPSG code, as +proj=utm does; other tmerc parameter sets
+    stay dynamic ETM keys."""
+    assert srs.normalize("+proj=tmerc +lat_0=0 +lon_0=15 +k=0.9996 "
+                         "+x_0=500000 +y_0=0 +datum=WGS84 +units=m") == "EPSG:32633"
+    assert srs.normalize("+proj=tmerc +lat_0=0 +lon_0=-177 +k=0.9996 "
+                         "+x_0=500000 +y_0=10000000 +ellps=WGS84") == "EPSG:32701"
+    assert srs.normalize("+proj=utm +zone=33") == "EPSG:32633"
+    for other in ("+proj=tmerc +lat_0=0 +lon_0=16 +k=0.9996 +x_0=500000",
+                  "+proj=tmerc +lat_0=0 +lon_0=15 +k=0.9996 +x_0=500000 +ellps=grs80",
+                  "+proj=tmerc +lat_0=0 +lon_0=15 +k=0.9996 +x_0=500000 "
+                  "+towgs84=1,2,3"):
+        assert srs.normalize(other).startswith("ETM:"), other
 
 
 def test_tm_inverse_sql_mirrors_numpy():
@@ -104,8 +126,9 @@ def test_tm_inverse_sql_mirrors_numpy():
     rng = np.random.RandomState(1)
     lon = rng.uniform(12, 18, 300)
     lat = rng.uniform(40, 70, 300)
-    X, Y = srs.tm_forward(lon, lat, 15.0)
-    lon_sql, lat_sql = srs.tm_inverse_sql("x", "y", 15.0, 0.0)
+    X, Y = srs.from_wgs84(lon, lat, "EPSG:32633")
+    fam, p = srs.resolve("EPSG:32633")
+    lon_sql, lat_sql = fam.inverse_sql("x", "y", p)
     con = duckdb.connect()
     con.execute(
         "CREATE TABLE pts AS SELECT * FROM (VALUES "
@@ -113,7 +136,7 @@ def test_tm_inverse_sql_mirrors_numpy():
         + ") t(x, y)"
     )
     df = con.execute(f"SELECT {lon_sql} AS lon, {lat_sql} AS lat FROM pts").df()
-    lo, la = srs.tm_inverse(X, Y, 15.0)
+    lo, la = srs.points_to_wgs84(X, Y, "EPSG:32633")
     assert np.abs(df["lon"].values - lo).max() < 1e-12
     assert np.abs(df["lat"].values - la).max() < 1e-12
 
@@ -129,7 +152,7 @@ def test_bbox_transforms_conservative():
         t = b + rng.uniform(1e4, 2e5)
         g = np.linspace(0, 1, 25)
         GX, GY = np.meshgrid(l + (r - l) * g, b + (t - b) * g)
-        lon, lat = srs.tm_inverse(GX, GY, 15.0)
+        lon, lat = srs.points_to_wgs84(GX, GY, "EPSG:32633")
         lo0, lo1, la0, la1 = srs.bbox_to_wgs84(l, r, b, t, "EPSG:32633")
         assert lo0 <= lon.min() and lo1 >= lon.max()
         assert la0 <= lat.min() and la1 >= lat.max()
