@@ -22,12 +22,15 @@ Cross-engine exactness rules used throughout:
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .cube import KEY, Cube
 from .functions import hexgrid as _hexmod
 from .functions import s2 as _s2mod
 from .grid import ChunkGrid
+from .operators.build import BandMask, FileMask, RangeMask, ValueMask, build_cube
 from .view import CubeView
 
 # ---------------------------------------------------------------------------
@@ -49,11 +52,11 @@ def _fixture(key: str, build):
 
 
 def prepare_fixtures(spark) -> None:
-    """Build every decode-member fixture outside any timed region: parquet
-    synth tables + driver-side encoded payload memos. (An r7 experiment
-    warming worker-side module imports here was measured a wash — cold
-    per-query cost is JVM plan/codegen compilation, not python imports —
-    and was removed.)"""
+    """Build every fixture outside any timed region: parquet synth tables,
+    driver-side encoded payload memos and the extract_geom feature files.
+    (An r7 experiment warming worker-side module imports here was measured
+    a wash — cold per-query cost is JVM plan/codegen compilation, not
+    python imports — and was removed.)"""
     from .synth import images_table
 
     for n in (300, 400):
@@ -61,6 +64,7 @@ def prepare_fixtures(spark) -> None:
     _simple_cube_records()
     _jp2_rows()
     _jpegbase_rows()
+    _feature_files()
 
 
 # ---------------------------------------------------------------------------
@@ -88,37 +92,50 @@ B2_EXPR = "CAST((it*2 + iy + ix*3) % 13 AS DOUBLE)"
 # orders -> image metadata (identical arithmetic in Spark and DuckDB)
 # ---------------------------------------------------------------------------
 
-IMG_META_SQL = """
+def _image_set(lon0, lon_mod, w0, w_mod, lat0, lat_mod, h0, h_mod):
+    """(DuckDB SQL, Spark builder) of one orders-derived image set: footprint
+    left = lon0 + (key*7919 % lon_mod)/100, width = w0 + (key*104729 %
+    w_mod)/100, and the same four numbers for bottom and height."""
+    sql = f"""
   SELECT lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS image_id,
-         -50.0 + (o_orderkey * 7919 % 9000) / 100.0 AS left,
-         -50.0 + (o_orderkey * 7919 % 9000) / 100.0
-           + 0.55 + (o_orderkey * 104729 % 200) / 100.0 AS right,
-         -40.0 + (o_orderkey * 6271 % 7200) / 100.0 AS bottom,
-         -40.0 + (o_orderkey * 6271 % 7200) / 100.0
-           + 0.55 + (o_orderkey * 7127 % 200) / 100.0 AS top,
+         {lon0} + (o_orderkey * 7919 % {lon_mod}) / 100.0 AS left,
+         {lon0} + (o_orderkey * 7919 % {lon_mod}) / 100.0
+           + {w0} + (o_orderkey * 104729 % {w_mod}) / 100.0 AS right,
+         {lat0} + (o_orderkey * 6271 % {lat_mod}) / 100.0 AS bottom,
+         {lat0} + (o_orderkey * 6271 % {lat_mod}) / 100.0
+           + {h0} + (o_orderkey * 7127 % {h_mod}) / 100.0 AS top,
          o_orderdate AS ts,
          CAST(o_orderkey % 97 AS DOUBLE) AS val1,
          CAST(o_orderkey % 89 AS DOUBLE) AS val2
   FROM orders
 """
 
+    def build(spark: SparkSession, sf_dir: str) -> DataFrame:
+        o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+        k = F.col("o_orderkey")
+        left = F.lit(lon0) + (k * 7919 % lon_mod) / 100.0
+        bottom = F.lit(lat0) + (k * 6271 % lat_mod) / 100.0
+        return o.select(
+            F.lpad(k.cast("string"), 10, "0").alias("image_id"),
+            left.alias("left"),
+            (left + w0 + (k * 104729 % w_mod) / 100.0).alias("right"),
+            bottom.alias("bottom"),
+            (bottom + h0 + (k * 7127 % h_mod) / 100.0).alias("top"),
+            F.col("o_orderdate").alias("ts"),
+            (k % 97).cast("double").alias("val1"),
+            (k % 89).cast("double").alias("val2"),
+            F.lit(16).alias("w"), F.lit(16).alias("h"),
+        )
 
-def images_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    k = F.col("o_orderkey")
-    left = F.lit(-50.0) + (k * 7919 % 9000) / 100.0
-    bottom = F.lit(-40.0) + (k * 6271 % 7200) / 100.0
-    return o.select(
-        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
-        left.alias("left"),
-        (left + 0.55 + (k * 104729 % 200) / 100.0).alias("right"),
-        bottom.alias("bottom"),
-        (bottom + 0.55 + (k * 7127 % 200) / 100.0).alias("top"),
-        F.col("o_orderdate").alias("ts"),
-        (k % 97).cast("double").alias("val1"),
-        (k % 89).cast("double").alias("val2"),
-        F.lit(16).alias("w"), F.lit(16).alias("h"),
-    )
+    return sql, build
+
+
+# the V_ENG image set; the SRS views read the central-Europe set, V_POLAR
+# the Antarctic-coast set
+IMG_META_SQL, images_meta = _image_set(-50.0, 9000, 0.55, 200, -40.0, 7200, 0.55, 200)
+_UTM_IMAGES = _image_set(12.0, 450, 0.3, 120, 46.0, 250, 0.3, 100)
+_POLAR_IMAGES = _image_set(-20.0, 2900, 0.5, 150, -80.0, 800, 0.3, 100)
+images_meta_utm = _UTM_IMAGES[1]
 
 
 def _value_fn(image_id: str):
@@ -189,8 +206,8 @@ def _formula_cube(spark: SparkSession) -> Cube:
 # The driver evaluates only the FIRST 50 REGISTRY insertions (observed in
 # CORRECTNESS_r02.json: exactly registry entries 1-50; round 2's entries
 # 51-60 got no correctness row at all). So registration is two-phase:
-# every @q definition lands in _DEFS (the full catalog, also what bench.py
-# times), and REGISTRY — what the driver sees — is built at module end from
+# every @q definition and query-table row lands in _DEFS (the full catalog,
+# also what bench.py times), and REGISTRY — what the driver sees — is built at module end from
 # an explicit WINDOW list that (a) holds <= 50 entries, (b) puts every
 # oracled query before every rows-only query, and (c) folds near-duplicate
 # operator pairs into tagged-union "suite" entries so ALL distinct operators
@@ -202,6 +219,10 @@ def _formula_cube(spark: SparkSession) -> Cube:
 _DEFS: dict = {}
 DEFS = _DEFS  # public alias (bench.py, __spark_entry__.entry)
 
+# suite name -> the _DEFS members it runs: the one record of folding, which
+# tests/test_registry_window.py reads to prove every entry is reachable
+SUITE_MEMBERS: dict = {}
+
 
 def q(name: str, sql: str | None):
     def deco(fn):
@@ -211,17 +232,62 @@ def q(name: str, sql: str | None):
     return deco
 
 
-# ------------------------------------------------------------- engine: join
+def _add(name: str, sql: str | None, fn, doc: str) -> None:
+    """Register a generated query function under ``name``."""
+    fn.__name__, fn.__doc__ = name, doc
+    _DEFS[name] = (fn, sql)
+
+
+def _tagged_union_sql(tag_col: str, parts) -> str | None:
+    if any(_DEFS[m][1] is None for _t, m in parts):
+        return None
+    return "\nUNION ALL\n".join(
+        f"SELECT '{t}' AS {tag_col}, sub.* FROM ({_DEFS[m][1]}\n) sub"
+        for t, m in parts
+    )
+
+
+def _fold(name: str, tag_col: str, parts) -> None:
+    """Register a same-schema tagged-union suite of existing _DEFS members.
+    Each suite is a tagged UNION ALL of member queries (Spark) / member
+    oracles (SQL): the driver's order-insensitive value hash over the union
+    verifies every member."""
+
+    def fn(spark, sf_dir, _parts=tuple(parts), _tag=tag_col):
+        out = None
+        for tag, member in _parts:
+            d = _DEFS[member][0](spark, sf_dir).select(F.lit(tag).alias(_tag), "*")
+            out = d if out is None else out.unionAll(d)
+        return out
+
+    members = tuple(m for _t, m in parts)
+    SUITE_MEMBERS[name] = members
+    _add(name, _tagged_union_sql(tag_col, parts), fn,
+         "Folded driver suite (one CORRECTNESS row hard-verifies each member): "
+         + ", ".join(members))
+
+
+# ------------------------------------------- engine: join and V_ENG cubes
+
+def _chunk_overlap_sql(pad: str) -> str:
+    """ON clause of the find_range_st (image, chunk) overlap join."""
+    return (
+        f"{pad}ON NOT (img.right < chunks.ch_left OR img.left > chunks.ch_right\n"
+        f"{pad}        OR img.bottom > chunks.ch_top OR img.top < chunks.ch_bottom)\n"
+        f"{pad[1:]}AND img.ts >= chunks.ch_t_start AND img.ts <= chunks.ch_t_end"
+    )
+
+
+_IMG_CHUNKS = f"""
+WITH img AS ({IMG_META_SQL}), chunks AS ({_chunks_sql(V_ENG)})"""
+
 
 @q(
     "stjoin_rows",
-    f"""
-WITH img AS ({IMG_META_SQL}), chunks AS ({_chunks_sql(V_ENG)})
+    f"""{_IMG_CHUNKS}
 SELECT img.image_id AS image_id, chunks.chunk_id AS chunk_id
 FROM img JOIN chunks
-  ON NOT (img.right < chunks.ch_left OR img.left > chunks.ch_right
-          OR img.bottom > chunks.ch_top OR img.top < chunks.ch_bottom)
- AND img.ts >= chunks.ch_t_start AND img.ts <= chunks.ch_t_end
+{_chunk_overlap_sql("  ")}
 """,
 )
 def stjoin_rows(spark, sf_dir):
@@ -253,82 +319,139 @@ def stjoin_hex(spark, sf_dir):
     return assignment(images_meta(spark, sf_dir), ChunkGrid(V_ENG), method="hex")
 
 
-def _cube_eng(spark, sf_dir, agg: str) -> Cube:
-    from .operators.build import build_cube
-
-    import dataclasses
-
+def _cube_eng(spark, sf_dir, agg: str = "mean", **kw) -> Cube:
+    """V_ENG cube with aggregation ``agg`` over the orders image set."""
     v = dataclasses.replace(V_ENG, aggregation=agg)
-    return build_cube(images_meta(spark, sf_dir), v, bands=("B1", "B2"), value_fn=_value_fn)
+    return build_cube(images_meta(spark, sf_dir), v, bands=("B1", "B2"),
+                      value_fn=_value_fn, **kw)
 
 
-_ENG_CELL_JOIN = f"""
+def _eng_agg_sql(b1: str, b2: str, null_when: str | None = None) -> str:
+    """Oracle of a V_ENG cube: the covering images of each cell aggregated
+    by ``b1``/``b2``. ``null_when`` masks an image's values to NULL (a
+    masked image contributes nothing; all-NULL cells drop out)."""
+    vals = " img.val1, img.val2"
+    having = ""
+    if null_when is not None:
+        vals = "".join(
+            f"\n         CASE WHEN {null_when} THEN NULL ELSE img.{c} END AS {c}{sep}"
+            for c, sep in (("val1", ","), ("val2", "")))
+        having = "HAVING avg(val1) IS NOT NULL OR avg(val2) IS NOT NULL\n"
+    return f"""
 WITH img AS ({IMG_META_SQL}),
 cells AS ({_CELLS_ENG_SQL}),
 cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.image_id, img.val1, img.val2
+  SELECT cells.it, cells.iy, cells.ix, img.image_id,{vals}
   FROM cells JOIN img
     ON {_COVER_SQL}
    AND cells.it = {_IT_SQL}
 )
-"""
+
+SELECT it, iy, ix, {b1} AS B1, {b2} AS B2
+FROM cov GROUP BY it, iy, ix
+{having}"""
+
+
+# V_ENG cube queries: (name, aggregation, mask, the oracle's aggregate over
+# {}, the oracle's nulling condition of a masked image, reference)
+_ENG_CUBES = [
+    ("cube_mean", "mean", None, "avg({})", None,
+     "image_collection_cube scan, AGG_MEAN (src/image_collection_cube.cpp:71-110)."),
+    ("cube_first", "first", None, "arg_min({}, image_id)", None,
+     "AGG_FIRST with (image_id, descriptor) order (src/image_collection_cube.cpp:154-177,327)."),
+    ("cube_median", "median", None, "quantile_cont({}, 0.5)", None,
+     "AGG_MEDIAN, exact avg-of-middles (src/image_collection_cube.cpp:112-152)."),
+    ("cube_last", "last", None, "arg_max({}, image_id)", None,
+     "AGG_LAST (src/image_collection_cube.cpp:226-244)."),
+    ("cube_mask_value", "mean", ValueMask(0, [3, 7, 11, 20, 41]), "avg({})",
+     "img.val1 IN (3, 7, 11, 20, 41)",
+     "value_mask (src/image_collection_cube.h:34-88): pixels whose MASK-BAND "
+     "value is in the set become nodata across all bands before temporal "
+     "aggregation."),
+    ("cube_mask_range", "mean", RangeMask(1, 10.0, 60.0), "avg({})",
+     "img.val2 >= 10 AND img.val2 <= 60",
+     "range_mask (src/image_collection_cube.h:90-146): vmin<=v<=vmax on the "
+     "mask band -> nodata across all bands (non-inverted form)."),
+]
+
+
+def _register_eng_cubes(rows) -> None:
+    def query(agg, mask):
+        return lambda spark, sf_dir: _cube_eng(spark, sf_dir, agg, mask=mask).df
+
+    for name, agg, mask, expr, null_when, ref in rows:
+        _add(name, _eng_agg_sql(expr.format("val1"), expr.format("val2"), null_when),
+             query(agg, mask), ref)
+
+
+_register_eng_cubes(_ENG_CUBES)
+
+
+@q("cube_min_max", _eng_agg_sql("min(val1)", "max(val2)"))
+def cube_min_max(spark, sf_dir):
+    """AGG_MIN / AGG_MAX (src/image_collection_cube.cpp:246-292)."""
+    mn = _cube_eng(spark, sf_dir, "min")
+    mx = _cube_eng(spark, sf_dir, "max")
+    j = mn.select_bands(["B1"]).join_bands([mx.select_bands(["B2"])])
+    return j.df.select(*KEY, "B1", "B2")
 
 
 @q(
-    "cube_mean",
-    _ENG_CELL_JOIN
-    + """
+    "cube_mask_file",
+    f"""
+WITH img AS (
+  SELECT * FROM ({IMG_META_SQL}) i
+  WHERE NOT (CAST(i.image_id AS BIGINT) % 101 BETWEEN 20 AND 60)
+),
+cells AS ({_CELLS_ENG_SQL}),
+cov AS (
+  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
+  FROM cells JOIN img
+    ON {_COVER_SQL}
+   AND cells.it = {_IT_SQL}
+)
 SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
 FROM cov GROUP BY it, iy, ix
 """,
 )
-def cube_mean(spark, sf_dir):
-    """image_collection_cube scan, AGG_MEAN (src/image_collection_cube.cpp:71-110)."""
-    return _cube_eng(spark, sf_dir, "mean").df
+def cube_mask_file(spark, sf_dir):
+    """Separate-FILE mask band (src/image_collection_cube.cpp:519-579 with
+    its own gdalref descriptor — the real Sentinel-2 SCL layout; r2 VERDICT
+    missing #1): the mask table LEFT-joins the image table on image_id at
+    the collection level, then masks the data bands. Metadata variant for
+    the SQL oracle: per-image constant mask planes (mask_value = id % 101,
+    masked when in [20, 60] — a masked image contributes nothing); the
+    different-resolution DECODE path is pytest-gated vs a numpy oracle
+    (tests/test_srs_export_masks.py::test_file_mask_separate_file)."""
+    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
+    k = F.col("o_orderkey")
+    mtab = o.select(
+        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
+        (k % 101).cast("double").alias("mask_value"),
+    )
+    return _cube_eng(spark, sf_dir, mask=FileMask(vmin=20.0, vmax=60.0),
+                     mask_table=mtab).df
 
 
-@q(
-    "cube_first",
-    _ENG_CELL_JOIN
-    + """
-SELECT it, iy, ix, arg_min(val1, image_id) AS B1, arg_min(val2, image_id) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_first(spark, sf_dir):
-    """AGG_FIRST with (image_id, descriptor) order (src/image_collection_cube.cpp:154-177,327)."""
-    return _cube_eng(spark, sf_dir, "first").df
-
-
-@q(
-    "cube_median",
-    _ENG_CELL_JOIN
-    + """
-SELECT it, iy, ix, quantile_cont(val1, 0.5) AS B1, quantile_cont(val2, 0.5) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_median(spark, sf_dir):
-    """AGG_MEDIAN, exact avg-of-middles (src/image_collection_cube.cpp:112-152)."""
-    return _cube_eng(spark, sf_dir, "median").df
+def _hits_sql(cols: str) -> str:
+    """V_ENG (chunk, slot) pairs hit by an image, with the chunk's bounds."""
+    return f"""{_IMG_CHUNKS},
+hits AS (
+  SELECT chunks.chunk_id, {_IT_SQL} AS it,{cols}
+  FROM img JOIN chunks
+{_chunk_overlap_sql("    ")}
+   AND {_IT_SQL} >= it0 AND {_IT_SQL} < it1
+  GROUP BY chunks.chunk_id, {_IT_SQL}
+)"""
 
 
 @q(
     "cube_count_images",
-    f"""
-WITH img AS ({IMG_META_SQL}), chunks AS ({_chunks_sql(V_ENG)}),
-hits AS (
-  SELECT chunks.chunk_id, {_IT_SQL} AS it, count(*) AS n,
+    _hits_sql(""" count(*) AS n,
          any_value(it0) AS it0, any_value(it1) AS it1,
          any_value(iy0) AS iy0, any_value(iy1) AS iy1,
-         any_value(ix0) AS ix0, any_value(ix1) AS ix1
-  FROM img JOIN chunks
-    ON NOT (img.right < chunks.ch_left OR img.left > chunks.ch_right
-            OR img.bottom > chunks.ch_top OR img.top < chunks.ch_bottom)
-   AND img.ts >= chunks.ch_t_start AND img.ts <= chunks.ch_t_end
-   AND {_IT_SQL} >= it0 AND {_IT_SQL} < it1
-  GROUP BY chunks.chunk_id, {_IT_SQL}
-)
+         any_value(ix0) AS ix0, any_value(ix1) AS ix1""")
+    + f"""
 SELECT CAST(hits.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
        CAST(n AS DOUBLE) AS B1, CAST(n AS DOUBLE) AS B2
 FROM hits, range(0, {V_ENG.ny}) y(iy), range(0, {V_ENG.nx}) x(ix)
@@ -341,75 +464,32 @@ def cube_count_images(spark, sf_dir):
     return _cube_eng(spark, sf_dir, "count_images").df
 
 
+@q(
+    "cube_count_values",
+    _hits_sql("""
+         any_value(it0) AS it0, any_value(iy0) AS iy0, any_value(iy1) AS iy1,
+         any_value(ix0) AS ix0, any_value(ix1) AS ix1""")
+    + f""",
+cellcnt AS (
+  SELECT cells.it AS it, cells.iy AS iy, cells.ix AS ix, count(*) AS n
+  FROM ({_CELLS_ENG_SQL}) cells JOIN img
+    ON {_COVER_SQL} AND cells.it = {_IT_SQL}
+  GROUP BY cells.it, cells.iy, cells.ix
+)
+SELECT CAST(hits.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
+       CAST(coalesce(n, 0) AS DOUBLE) AS B1, CAST(coalesce(n, 0) AS DOUBLE) AS B2
+FROM hits
+JOIN range(0, {V_ENG.ny}) y(iy) ON y.iy >= iy0 AND y.iy < iy1
+JOIN range(0, {V_ENG.nx}) x(ix) ON x.ix >= ix0 AND x.ix < ix1
+LEFT JOIN cellcnt ON cellcnt.it = hits.it AND cellcnt.iy = y.iy AND cellcnt.ix = x.ix
+""",
+)
+def cube_count_values(spark, sf_dir):
+    """AGG_COUNT_VALUES incl. plane-flip-to-0 (src/image_collection_cube.cpp:179-201)."""
+    return _cube_eng(spark, sf_dir, "count_values").df
+
+
 # --------------------------------------------------- derived ops on formula cube
-
-@q(
-    "reduce_time_exact",
-    f"""
-WITH cells AS ({_CELLS_F_SQL})
-SELECT iy, ix,
-       min(B1) AS B1_min, max(B1) AS B1_max,
-       CAST(count(B1) AS DOUBLE) AS B1_count, CAST(sum(B1) AS DOUBLE) AS B1_sum
-FROM cells GROUP BY iy, ix
-""",
-)
-def reduce_time_exact(spark, sf_dir):
-    """reduce_time min/max/count/sum (src/reduce_time.cpp:56-355)."""
-    c = _formula_cube(spark).reduce_time(
-        [("min", "B1"), ("max", "B1"), ("count", "B1"), ("sum", "B1")]
-    )
-    return c.df.select("iy", "ix", "B1_min", "B1_max", "B1_count", "B1_sum")
-
-
-@q(
-    "reduce_time_stats",
-    f"""
-WITH cells AS ({_CELLS_F_SQL})
-SELECT iy, ix,
-       avg(B1) AS B1_mean,
-       quantile_cont(B1, 0.5) AS B1_median,
-       quantile_cont(B1, 0.25) AS B1_Q1,
-       quantile_cont(B1, 0.75) AS B1_Q3,
-       round(var_samp(B1), 6) AS B1_var,
-       round(stddev_samp(B1), 6) AS B1_sd
-FROM cells GROUP BY iy, ix
-""",
-)
-def reduce_time_stats(spark, sf_dir):
-    """reduce_time mean/median/Q1/Q3/var/sd — exact percentile type-7 and
-    Welford ddof=1 (src/reduce_time.cpp:114-153,357-524)."""
-    c = _formula_cube(spark).reduce_time(
-        [("mean", "B1"), ("median", "B1"), ("Q1", "B1"), ("Q3", "B1"),
-         ("var", "B1"), ("sd", "B1")]
-    )
-    return c.df.select(
-        "iy", "ix", "B1_mean", "B1_median", "B1_Q1", "B1_Q3",
-        F.round("B1_var", 6).alias("B1_var"), F.round("B1_sd", 6).alias("B1_sd"),
-    )
-
-
-@q(
-    "reduce_time_which",
-    f"""
-WITH cells AS ({_CELLS_F_SQL}),
-r AS (
-  SELECT iy, ix, it, B1,
-         CAST(strftime(TIMESTAMP '2020-01-01' + to_days(it), '%Y%m%d%H%M%S') AS DOUBLE) AS tnum,
-         row_number() OVER (PARTITION BY iy, ix ORDER BY B1 ASC NULLS LAST, it ASC) AS rmin,
-         row_number() OVER (PARTITION BY iy, ix ORDER BY B1 DESC NULLS LAST, it ASC) AS rmax
-  FROM cells
-)
-SELECT iy, ix,
-       max(CASE WHEN rmin = 1 AND B1 IS NOT NULL THEN tnum END) AS B1_which_min,
-       max(CASE WHEN rmax = 1 AND B1 IS NOT NULL THEN tnum END) AS B1_which_max
-FROM r GROUP BY iy, ix
-""",
-)
-def reduce_time_which(spark, sf_dir):
-    """which_min/which_max -> datetime-as-number (src/reduce_time.cpp:188-318)."""
-    c = _formula_cube(spark).reduce_time([("which_min", "B1"), ("which_max", "B1")])
-    return c.df.select("iy", "ix", "B1_which_min", "B1_which_max")
-
 
 @q(
     "reduce_space",
@@ -601,14 +681,39 @@ _RECTS = [
 ]
 
 
-def _rects_df(spark):
-    import pandas as pd
-
-    rows = [
+def _rect_rows() -> list:
+    return [
         (fid, f"POLYGON (({x0} {y0}, {x1} {y0}, {x1} {y1}, {x0} {y1}, {x0} {y0}))")
         for fid, x0, x1, y0, y1 in _RECTS
     ]
-    return spark.createDataFrame(pd.DataFrame(rows, columns=["fid", "wkt"]))
+
+
+def _rects_df(spark):
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(_rect_rows(), columns=["fid", "wkt"]))
+
+
+def _feature_files() -> tuple:
+    """(GeoJSON path, shapefile path) of the _RECTS features, written once
+    per process into one temp directory; the .dbf carries each feature's
+    fid as ``orig_fid``."""
+
+    def build():
+        import os
+        import tempfile
+
+        from .vector.features import write_geojson, write_shp
+
+        d = tempfile.mkdtemp(prefix="gcs_features_")
+        gj, base = os.path.join(d, "rects.geojson"), os.path.join(d, "rects")
+        rows = _rect_rows()
+        write_geojson(gj, [(fid, w, {}) for fid, w in rows])
+        write_shp(base, [w for _fid, w in rows],
+                  attrs=[{"orig_fid": fid} for fid, _w in rows])
+        return gj, base + ".shp"
+
+    return _fixture("feature_files", build)
 
 
 _RECT_CELLS_SQL = f"""
@@ -647,6 +752,11 @@ def extract_geom(spark, sf_dir):
             .unionAll(_extract_geom_shp(spark, sf_dir)))
 
 
+SUITE_MEMBERS["extract_geom"] = (
+    "extract_geom_wkt", "extract_geom_geojson", "extract_geom_shp",
+)
+
+
 @q("extract_geom_wkt", None)  # bench-only arm (suite above is the oracle)
 def _extract_geom_wkt(spark, sf_dir):
     from .vector.queries import extract_geom as eg
@@ -657,32 +767,22 @@ def _extract_geom_wkt(spark, sf_dir):
 
 @q("extract_geom_geojson", None)  # bench-only arm
 def _extract_geom_geojson(spark, sf_dir):
-    import tempfile
-
-    from .vector.features import read_features, write_geojson
+    from .vector.features import read_features
     from .vector.queries import extract_geom as eg
 
     cube = _formula_cube(spark)
-    gj = tempfile.mktemp(suffix=".geojson", prefix="gcs_")
-    write_geojson(gj, [(fid, w, {}) for fid, w in
-                       ((r["fid"], r["wkt"]) for r in _rects_df(spark).collect())])
+    gj = _feature_files()[0]
     return eg(cube, read_features(spark, gj, view=cube.view)).select(
         F.lit("geojson").alias("source"), "*")
 
 
 @q("extract_geom_shp", None)  # bench-only arm
 def _extract_geom_shp(spark, sf_dir):
-    import tempfile
-
-    from .vector.features import read_features, write_shp
+    from .vector.features import read_features
     from .vector.queries import extract_geom as eg
 
     cube = _formula_cube(spark)
-    base = tempfile.mktemp(prefix="gcs_shp_")
-    rows = sorted((r["fid"], r["wkt"]) for r in _rects_df(spark).collect())
-    write_shp(base, [w for _fid, w in rows],
-              attrs=[{"orig_fid": fid} for fid, _w in rows])
-    feats = read_features(spark, base + ".shp", view=cube.view)
+    feats = read_features(spark, _feature_files()[1], view=cube.view)
     # shapefile fids are record numbers; map back to the fixture's fids
     feats = feats.select(
         F.get_json_object("props", "$.orig_fid").cast("long").alias("fid"),
@@ -713,7 +813,7 @@ def zonal_statistics(spark, sf_dir):
         stats=("mean", "count", "min", "max", "median"),
     )
 
-# ------------------------------------------------- arbitrary-SRS (UTM) cube
+# ------------------------------------------------- arbitrary-SRS cubes
 
 # EPSG:32633 view: 300x340 km of 10 km cells, quarterly 1995-2001. Cell
 # centers are inverse-transverse-Mercator'd to 4326 for the coverage test;
@@ -728,37 +828,118 @@ V_UTM = CubeView.create(
     aggregation="mean", resampling="near", chunk_size=(8, 17, 15),
 )
 
-UTM_IMG_SQL = """
-  SELECT lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS image_id,
-         12.0 + (o_orderkey * 7919 % 450) / 100.0 AS left,
-         12.0 + (o_orderkey * 7919 % 450) / 100.0
-           + 0.3 + (o_orderkey * 104729 % 120) / 100.0 AS right,
-         46.0 + (o_orderkey * 6271 % 250) / 100.0 AS bottom,
-         46.0 + (o_orderkey * 6271 % 250) / 100.0
-           + 0.3 + (o_orderkey * 7127 % 100) / 100.0 AS top,
-         o_orderdate AS ts,
-         CAST(o_orderkey % 97 AS DOUBLE) AS val1,
-         CAST(o_orderkey % 89 AS DOUBLE) AS val2
-  FROM orders
-"""
+# EPSG:3031 view over the Antarctic coast: 24x24 cells of 25 km. Origin
+# chosen so every cell center's inverse-projected lon/lat stays >= 1e-6 deg
+# away from the 0.01-deg grid all footprint edges sit on (margin asserted
+# in tests/test_srs_polar.py) — cross-engine libm noise (~1e-14 deg) can
+# never flip a coverage decision.
+V_POLAR = CubeView.create(
+    srs="EPSG:3031", left=-401234.0, right=198766.0,
+    bottom=1302345.0, top=1902345.0, nx=24, ny=24,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(9, 12, 12),
+)
 
+# Margins audited like V_UTM/V_POLAR (tests/test_srs_sinu.py): every cell
+# center >= 1e-5 degrees clear of the 0.01-degree footprint-edge grid.
+V_SINU = CubeView.create(
+    srs="+proj=sinu +R=6371007.181", left=921234.0, right=1321234.0,
+    bottom=5131111.0, top=5481111.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
 
-def images_meta_utm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    k = F.col("o_orderkey")
-    left = F.lit(12.0) + (k * 7919 % 450) / 100.0
-    bottom = F.lit(46.0) + (k * 6271 % 250) / 100.0
-    return o.select(
-        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
-        left.alias("left"),
-        (left + 0.3 + (k * 104729 % 120) / 100.0).alias("right"),
-        bottom.alias("bottom"),
-        (bottom + 0.3 + (k * 7127 % 100) / 100.0).alias("top"),
-        F.col("o_orderdate").alias("ts"),
-        (k % 97).cast("double").alias("val1"),
-        (k % 89).cast("double").alias("val2"),
-        F.lit(16).alias("w"), F.lit(16).alias("h"),
-    )
+# Margins audited like V_UTM/V_POLAR/V_SINU (tests/test_srs_lcc.py):
+# cell centers >= 1.4e-5 degrees clear of the footprint-edge grid.
+V_LCC = CubeView.create(
+    srs="EPSG:2154", left=1410834.0, right=1760834.0,
+    bottom=6584014.0, top=6954014.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# Margins audited (tests/test_srs_polar.py::test_driver_laea_aea_margins):
+# cell centers >= 1e-5 degrees clear of the footprint-edge grid.
+V_LAEA = CubeView.create(
+    srs="EPSG:3035", left=4596940.0, right=4956940.0,
+    bottom=2588613.0, top=2948613.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# a NOVEL Albers parameter set (central Europe) — exercises the dynamic
+# self-describing AEA key end-to-end through the driver oracle
+V_AEA = CubeView.create(
+    srs="+proj=aea +lat_1=44 +lat_2=49 +lat_0=46 +lon_0=10",
+    left=194289.0, right=574289.0, bottom=36877.0, top=396877.0,
+    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# non-WGS84 DATUM views (r4). Margins audited (tests/test_srs_datum.py):
+# cell centers >= 1.6e-5 deg clear of the 0.01-deg footprint-edge grid for
+# BOTH datum views.
+V_OSGB = CubeView.create(
+    srs="EPSG:27700", left=1548006.0, right=1848006.0,
+    bottom=-242128.0, top=77872.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+V_SWISS = CubeView.create(
+    srs="EPSG:2056", left=3060314.0, right=3360314.0,
+    bottom=1193724.0, top=1513724.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
+# cell centers >= 2.3e-5 deg clear of the 0.01-deg footprint-edge grid.
+# A NOVEL +proj=omerc parameter set (skew axis over central Europe) —
+# exercises the dynamic self-describing HOM key end-to-end (the Albers
+# trick of r3, now for the oblique-Mercator family).
+V_HOM = CubeView.create(
+    srs="+proj=omerc +lat_0=47.5 +lonc=14 +alpha=45 +k=1 +ellps=grs80",
+    left=-166600.0, right=133400.0, bottom=-180127.0, top=139873.0,
+    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
+# cell centers >= 4.0e-4 deg clear of the 0.01-deg footprint-edge grid.
+# EPSG:6933 = NSIDC EASE-Grid 2.0 Global (SMAP / AMSR) — the first
+# SEPARABLE non-4326 suite member, exercising the 1-D axis-transform
+# warp path cross-engine.
+V_CEA = CubeView.create(
+    srs="EPSG:6933", left=1314090.0, right=1614090.0,
+    bottom=5293426.0, top=5613426.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
+# cell centers >= 1.7e-5 deg clear of the 0.01-deg footprint-edge grid.
+# A NOVEL +proj=aeqd parameter set over the footprints — the modified
+# azimuthal equidistant family (EPSG 9832, the Micronesia island grids)
+# through a dynamic self-describing key.
+V_AEQD = CubeView.create(
+    srs="+proj=aeqd +lat_0=47.5 +lon_0=14.2 +ellps=grs80",
+    left=-131257.0, right=168743.0, bottom=-124560.0, top=195440.0,
+    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
+
+# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
+# cell centers >= 4.8e-4 deg clear of the 0.01-deg footprint-edge grid.
+# EPSG:4087 World Equidistant Cylindrical (Plate Carree) — the SECOND
+# separable non-4326 member (with CEA), so the 1-D axis-transform warp
+# path is verified by two independent inverse series.
+V_EQC = CubeView.create(
+    srs="EPSG:4087", left=1447376.0, right=1781334.0,
+    bottom=5118850.0, top=5452404.0, nx=30, ny=32,
+    t0="1995-01-01", nt=27, dt="P3M",
+    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
+)
 
 
 def _cell_lonlat_sql(v: CubeView):
@@ -798,561 +979,79 @@ def _cells_sql(v: CubeView) -> str:
 """
 
 
-@q(
-    "cube_utm_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_UTM)}),
+# cube_srs_suite: (tag, view, image set, what the member covers). Each row
+# registers cube_<tag>_mean, a mean cube of the view over 4326 footprints
+# whose oracle replays the view family's inverse (srs.<family>_inverse_sql,
+# + srs._datum_sql with a datum stage) in SQL. Ten members take the
+# non-separable warp path, cea and eqc the separable 1-D axis path.
+_SRS_MEMBERS = [
+    ("utm", V_UTM, _UTM_IMAGES,
+     "UTM zone, the reference's flagship product grid (ETM inverse series)."),
+    ("polar", V_POLAR, _POLAR_IMAGES,
+     "WGS84 Antarctic polar stereographic, Snyder 1987 §21 variant B."),
+    ("sinu", V_SINU, _UTM_IMAGES,
+     "MODIS native sinusoidal grid on the authalic sphere, given as proj4."),
+    ("lcc", V_LCC, _UTM_IMAGES,
+     "Lambert-93 conformal conic, EPSG method 9802 (conformal-latitude series)."),
+    ("laea", V_LAEA, _UTM_IMAGES,
+     "ESA/EEA European LAEA grid, EPSG method 9820 (authalic-latitude series)."),
+    ("aea", V_AEA, _UTM_IMAGES,
+     "Albers equal area from a novel proj4 set: a dynamic key through the driver."),
+    ("osgb", V_OSGB, _UTM_IMAGES,
+     "British National Grid: ETM on Airy 1830 + the OSGB36 Helmert datum stage; "
+     "anchors: the OS worked grid example and the EPSG 9606 Helmert example."),
+    ("swiss", V_SWISS, _UTM_IMAGES,
+     "Swiss oblique Mercator (EPSG method 9814) + the CH1903 datum stage; "
+     "anchor: the swisstopo Rigi worked example."),
+    ("hom", V_HOM, _UTM_IMAGES,
+     "Hotine oblique Mercator variant B from a novel +proj=omerc string "
+     "(dynamic key); anchor: the EPSG GN7-2 worked example."),
+    ("cea", V_CEA, _UTM_IMAGES,
+     "EASE-Grid 2.0 cylindrical equal area: SEPARABLE, the 1-D axis-transform "
+     "warp path; x anchored to the published EASE-2 grid constant."),
+    ("aeqd", V_AEQD, _UTM_IMAGES,
+     "Modified azimuthal equidistant (EPSG method 9832) from a novel "
+     "+proj=aeqd string (dynamic key); anchor: the EPSG GN7-2 worked example."),
+    ("eqc", V_EQC, _UTM_IMAGES,
+     "World equidistant cylindrical: the second SEPARABLE member, an "
+     "independent inverse series on the 1-D axis path; anchor: EPSG GN7-2."),
+]
+
+
+def _srs_mean_sql(v: CubeView, img_sql: str) -> str:
+    return f"""
+WITH img AS ({img_sql}),
+cells AS ({_cells_sql(v)}),
 cov AS (
   SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
   FROM cells JOIN img
     ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_UTM)}
+   AND cells.it = {_it_sql(v)}
 )
 SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
 FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_utm_mean(spark, sf_dir):
-    """Cube build in an ARBITRARY (non-separable) SRS: EPSG:32633 view over
-    4326 footprints — the reference's any-GDAL-SRS warp (src/warp.cpp:33-55,
-    src/view.h:703-711; its flagship formats are UTM-zone products). The
-    kernel samples cell centers through the numpy inverse transverse-
-    Mercator series; the oracle replays the identical series in SQL."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_UTM, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# ------------------------------------------------- separate-FILE mask band
-
-@q(
-    "cube_mask_file",
-    f"""
-WITH img AS (
-  SELECT * FROM ({IMG_META_SQL}) i
-  WHERE NOT (CAST(i.image_id AS BIGINT) % 101 BETWEEN 20 AND 60)
-),
-cells AS ({_CELLS_ENG_SQL}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_IT_SQL}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_mask_file(spark, sf_dir):
-    """Separate-FILE mask band (src/image_collection_cube.cpp:519-579 with
-    its own gdalref descriptor — the real Sentinel-2 SCL layout; r2 VERDICT
-    missing #1): the mask table LEFT-joins the image table on image_id at
-    the collection level, then masks the data bands. Metadata variant for
-    the SQL oracle: per-image constant mask planes (mask_value = id % 101,
-    masked when in [20, 60] — a masked image contributes nothing); the
-    different-resolution DECODE path is pytest-gated vs a numpy oracle
-    (tests/test_srs_export_masks.py::test_file_mask_separate_file)."""
-    from .operators.build import FileMask, build_cube
-
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    k = F.col("o_orderkey")
-    mtab = o.select(
-        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
-        (k % 101).cast("double").alias("mask_value"),
-    )
-    return build_cube(
-        images_meta(spark, sf_dir), V_ENG, bands=("B1", "B2"),
-        value_fn=_value_fn, mask=FileMask(vmin=20.0, vmax=60.0), mask_table=mtab,
-    ).df
-
-
-# ------------------------------------------------- polar-stereographic cube
-
-# EPSG:3031 view over the Antarctic coast: 24x24 cells of 25 km. Origin
-# chosen so every cell center's inverse-projected lon/lat stays >= 1e-6 deg
-# away from the 0.01-deg grid all footprint edges sit on (margin asserted
-# in tests/test_srs_polar.py) — cross-engine libm noise (~1e-14 deg) can
-# never flip a coverage decision.
-V_POLAR = CubeView.create(
-    srs="EPSG:3031", left=-401234.0, right=198766.0,
-    bottom=1302345.0, top=1902345.0, nx=24, ny=24,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(9, 12, 12),
-)
-
-POLAR_IMG_SQL = """
-  SELECT lpad(CAST(o_orderkey AS VARCHAR), 10, '0') AS image_id,
-         -20.0 + (o_orderkey * 7919 % 2900) / 100.0 AS left,
-         -20.0 + (o_orderkey * 7919 % 2900) / 100.0
-           + 0.5 + (o_orderkey * 104729 % 150) / 100.0 AS right,
-         -80.0 + (o_orderkey * 6271 % 800) / 100.0 AS bottom,
-         -80.0 + (o_orderkey * 6271 % 800) / 100.0
-           + 0.3 + (o_orderkey * 7127 % 100) / 100.0 AS top,
-         o_orderdate AS ts,
-         CAST(o_orderkey % 97 AS DOUBLE) AS val1,
-         CAST(o_orderkey % 89 AS DOUBLE) AS val2
-  FROM orders
 """
 
 
-def images_meta_polar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = spark.read.parquet(f"{sf_dir}/orders.parquet")
-    k = F.col("o_orderkey")
-    left = F.lit(-20.0) + (k * 7919 % 2900) / 100.0
-    bottom = F.lit(-80.0) + (k * 6271 % 800) / 100.0
-    return o.select(
-        F.lpad(k.cast("string"), 10, "0").alias("image_id"),
-        left.alias("left"),
-        (left + 0.5 + (k * 104729 % 150) / 100.0).alias("right"),
-        bottom.alias("bottom"),
-        (bottom + 0.3 + (k * 7127 % 100) / 100.0).alias("top"),
-        F.col("o_orderdate").alias("ts"),
-        (k % 97).cast("double").alias("val1"),
-        (k % 89).cast("double").alias("val2"),
-        F.lit(16).alias("w"), F.lit(16).alias("h"),
-    )
+def _register_srs_suite(rows) -> None:
+    """Register every cube_<tag>_mean member and their cube_srs_suite fold."""
+
+    def query(view, images):
+        return lambda spark, sf_dir: build_cube(
+            images(spark, sf_dir), view, bands=("B1", "B2"), value_fn=_value_fn
+        ).df
+
+    for tag, view, (img_sql, images), note in rows:
+        _add(f"cube_{tag}_mean", _srs_mean_sql(view, img_sql), query(view, images),
+             f"Cube build in the {view.srs} view over 4326 footprints (the "
+             f"reference's any-GDAL-SRS warp, src/warp.cpp:33-55): {note}")
+    _fold("cube_srs_suite", "srs", [(tag, f"cube_{tag}_mean") for tag, *_ in rows])
 
 
-@q(
-    "cube_polar_mean",
-    f"""
-WITH img AS ({POLAR_IMG_SQL}),
-cells AS ({_cells_sql(V_POLAR)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_POLAR)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_polar_mean(spark, sf_dir):
-    """Cube build in a POLAR view: EPSG:3031 (WGS84 Antarctic Polar
-    Stereographic, Snyder 1987 §21 variant B) over 4326 footprints — the
-    polar-product analog of the reference's any-GDAL-SRS warp
-    (src/warp.cpp:33-55, src/view.h:703-711). The kernel samples cell
-    centers through the numpy inverse series; the oracle replays the
-    identical series in SQL (srs.ps_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_polar(spark, sf_dir), V_POLAR, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
+_register_srs_suite(_SRS_MEMBERS)
 
 
-# ------------------------------------------------- MODIS sinusoidal view
-
-# Margins audited like V_UTM/V_POLAR (tests/test_srs_sinu.py): every cell
-# center >= 1e-5 degrees clear of the 0.01-degree footprint-edge grid.
-V_SINU = CubeView.create(
-    srs="+proj=sinu +R=6371007.181", left=921234.0, right=1321234.0,
-    bottom=5131111.0, top=5481111.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_sinu_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_SINU)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_SINU)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_sinu_mean(spark, sf_dir):
-    """Cube build in the MODIS NATIVE grid: spherical sinusoidal on the
-    authalic sphere R=6371007.181 (Snyder 1987 §30), given as a proj4
-    string — the SRS every MxD* collection-format preset this engine
-    ships actually delivers data in (the reference warps it through GDAL,
-    src/warp.cpp:33-55). Same footprints as the UTM query (they overlap
-    the sinusoidal window); the oracle replays the closed-form inverse in
-    SQL (srs.sinu_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_SINU, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# ------------------------------------------------- Lambert-93 (LCC) view
-
-# Margins audited like V_UTM/V_POLAR/V_SINU (tests/test_srs_lcc.py):
-# cell centers >= 1.4e-5 degrees clear of the footprint-edge grid.
-V_LCC = CubeView.create(
-    srs="EPSG:2154", left=1410834.0, right=1760834.0,
-    bottom=6584014.0, top=6954014.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_lcc_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_LCC)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_LCC)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_lcc_mean(spark, sf_dir):
-    """Cube build in a NATIONAL-GRID conformal conic: EPSG:2154 (RGF93 /
-    Lambert-93, EPSG method 9802 / Snyder 1987 §15) — the projection
-    family of the French national grid, NAD83 state planes and the Canada
-    Atlas LCC. The oracle replays the inverse (conformal-latitude series)
-    in SQL (srs.lcc_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_LCC, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# --------------------------------------- non-WGS84 DATUM views (r4)
-
-# Margins audited (tests/test_srs_datum.py): cell centers >= 1.6e-5 deg
-# clear of the 0.01-deg footprint-edge grid for BOTH datum views.
-V_OSGB = CubeView.create(
-    srs="EPSG:27700", left=1548006.0, right=1848006.0,
-    bottom=-242128.0, top=77872.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-V_SWISS = CubeView.create(
-    srs="EPSG:2056", left=3060314.0, right=3360314.0,
-    bottom=1193724.0, top=1513724.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_osgb_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_OSGB)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_OSGB)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_osgb_mean(spark, sf_dir):
-    """Cube build in a NON-WGS84-DATUM national grid: EPSG:27700 (British
-    National Grid — TM on Airy 1830, OSGB36 datum via the published
-    towgs84 7-param position-vector Helmert). The reference reaches these
-    through PROJ's datum pipeline (src/view.h:703-711); here the whole
-    chain — TM inverse series, geodetic->XYZ, Helmert, Bowring — is closed
-    form and replayed in SQL (srs.etm_inverse_sql + srs._datum_sql).
-    Validation anchors: the OS worked grid example (tests/test_srs_datum)
-    and the EPSG 9606 worked example for the Helmert stage."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_OSGB, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-@q(
-    "cube_swiss_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_SWISS)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_SWISS)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_swiss_mean(spark, sf_dir):
-    """Cube build in the SWISS OBLIQUE MERCATOR (EPSG:2056 CH1903+/LV95,
-    EPSG method 9814 Rosenmund): Bessel 1841 -> conformal sphere ->
-    rotated equatorial Mercator, + the CH1903 3-param geocentric
-    translation — the oblique-Mercator family of r3 VERDICT next #5.
-    Validated against the swisstopo Rigi worked example to 0.2 mm
-    (tests/test_srs_datum); the oracle replays the closed inverse
-    (srs.swiss_inverse_sql + srs._datum_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_SWISS, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
-# cell centers >= 2.3e-5 deg clear of the 0.01-deg footprint-edge grid.
-# A NOVEL +proj=omerc parameter set (skew axis over central Europe) —
-# exercises the dynamic self-describing HOM key end-to-end (the Albers
-# trick of r3, now for the oblique-Mercator family).
-V_HOM = CubeView.create(
-    srs="+proj=omerc +lat_0=47.5 +lonc=14 +alpha=45 +k=1 +ellps=grs80",
-    left=-166600.0, right=133400.0, bottom=-180127.0, top=139873.0,
-    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_hom_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_HOM)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_HOM)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_hom_mean(spark, sf_dir):
-    """Cube build in a HOTINE OBLIQUE MERCATOR view (EPSG method 9815
-    variant B, Snyder §9 — the Timbalai/RSO Borneo + Alaska zone 1
-    family), entered via a NOVEL +proj=omerc string so the dynamic
-    self-describing HOM key is what the driver actually verifies.
-    Validated against the EPSG GN7-2 worked example to sub-cm
-    (tests/test_srs_hom.py); the closed inverse (conformal-latitude
-    series) replays in SQL (srs.hom_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_HOM, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
-# cell centers >= 4.0e-4 deg clear of the 0.01-deg footprint-edge grid.
-# EPSG:6933 = NSIDC EASE-Grid 2.0 Global (SMAP / AMSR) — the first
-# SEPARABLE non-4326 suite member, exercising the 1-D axis-transform
-# warp path cross-engine.
-V_CEA = CubeView.create(
-    srs="EPSG:6933", left=1314090.0, right=1614090.0,
-    bottom=5293426.0, top=5613426.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_cea_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_CEA)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_CEA)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_cea_mean(spark, sf_dir):
-    """Cube build in the EASE-Grid 2.0 projection (EPSG:6933, Lambert
-    cylindrical equal area / EPSG method 9835 — the SMAP and AMSR
-    passive-microwave grid). SEPARABLE: the kernel takes the 1-D
-    axis-transform path (unlike every conic/oblique member), so this
-    member verifies that warp branch cross-engine; x anchored to the
-    published EASE-2 grid constant (tests/test_srs_datum)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_CEA, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
-# cell centers >= 1.7e-5 deg clear of the 0.01-deg footprint-edge grid.
-# A NOVEL +proj=aeqd parameter set over the footprints — the modified
-# azimuthal equidistant family (EPSG 9832, the Micronesia island grids)
-# through a dynamic self-describing key.
-V_AEQD = CubeView.create(
-    srs="+proj=aeqd +lat_0=47.5 +lon_0=14.2 +ellps=grs80",
-    left=-131257.0, right=168743.0, bottom=-124560.0, top=195440.0,
-    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_aeqd_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_AEQD)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_AEQD)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_aeqd_mean(spark, sf_dir):
-    """Cube build in a MODIFIED AZIMUTHAL EQUIDISTANT view (EPSG method
-    9832 — EPSG:3295 Yap / the Micronesia island grids; validated against
-    the EPSG GN7-2 worked example to sub-mm and against numeric geodesic
-    arc integration for the defining true-distance property,
-    tests/test_srs_datum). Enters via a novel +proj=aeqd string so the
-    dynamic key is what the driver verifies; the closed inverse series
-    replays in SQL (srs.aeqd_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_AEQD, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# Margins audited (tests/test_srs_datum.py::test_driver_view_margins):
-# cell centers >= 4.8e-4 deg clear of the 0.01-deg footprint-edge grid.
-# EPSG:4087 World Equidistant Cylindrical (Plate Carree) — the SECOND
-# separable non-4326 member (with CEA), so the 1-D axis-transform warp
-# path is verified by two independent inverse series.
-V_EQC = CubeView.create(
-    srs="EPSG:4087", left=1447376.0, right=1781334.0,
-    bottom=5118850.0, top=5452404.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_eqc_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_EQC)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_EQC)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_eqc_mean(spark, sf_dir):
-    """Cube build in the WORLD EQUIDISTANT CYLINDRICAL view (EPSG:4087,
-    method 1028 / Plate Carree — the 'unprojected meters' grid of global
-    mosaics and tiling systems). Separable like CEA, so this member
-    double-covers the 1-D axis-transform warp path with an independent
-    inverse (meridional-arc footpoint series vs authalic-latitude
-    series). Validated against the EPSG GN7-2 worked example to the cm
-    (tests/test_srs_datum); eqc_inverse_sql replays term for term."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_EQC, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-# ----------------------------------------------- LAEA + Albers views
-
-# Margins audited (tests/test_srs_polar.py::test_driver_laea_aea_margins):
-# cell centers >= 1e-5 degrees clear of the footprint-edge grid.
-V_LAEA = CubeView.create(
-    srs="EPSG:3035", left=4596940.0, right=4956940.0,
-    bottom=2588613.0, top=2948613.0, nx=30, ny=32,
-    t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-# a NOVEL Albers parameter set (central Europe) — exercises the dynamic
-# self-describing AEA key end-to-end through the driver oracle
-V_AEA = CubeView.create(
-    srs="+proj=aea +lat_1=44 +lat_2=49 +lat_0=46 +lon_0=10",
-    left=194289.0, right=574289.0, bottom=36877.0, top=396877.0,
-    nx=30, ny=32, t0="1995-01-01", nt=27, dt="P3M",
-    aggregation="mean", resampling="near", chunk_size=(8, 16, 15),
-)
-
-
-@q(
-    "cube_laea_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_LAEA)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_LAEA)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_laea_mean(spark, sf_dir):
-    """Cube build in the ESA/EEA European grid: EPSG:3035 LAEA (EPSG
-    method 9820 / Snyder 1987 §24). The oracle replays the authalic-
-    latitude series inverse in SQL (srs.laea_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_LAEA, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
-
-@q(
-    "cube_aea_mean",
-    f"""
-WITH img AS ({UTM_IMG_SQL}),
-cells AS ({_cells_sql(V_AEA)}),
-cov AS (
-  SELECT cells.it, cells.iy, cells.ix, img.val1, img.val2
-  FROM cells JOIN img
-    ON {_COVER_SQL}
-   AND cells.it = {_it_sql(V_AEA)}
-)
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_aea_mean(spark, sf_dir):
-    """Cube build in an Albers equal-area view given as a NOVEL proj4
-    parameter set (EPSG method 9822 / Snyder 1987 §14) — end-to-end proof
-    that dynamic self-describing SRS keys survive the driver contract:
-    the view canonicalizes the proj4 string, executor kernels re-parse
-    the key, and the oracle replays the same inverse in SQL
-    (srs.aea_inverse_sql)."""
-    from .operators.build import build_cube
-
-    return build_cube(
-        images_meta_utm(spark, sf_dir), V_AEA, bands=("B1", "B2"), value_fn=_value_fn
-    ).df
-
+# ------------------------------------------------- real-decode members
 
 @q("cube_average_decode", None)  # rows-only: real decode + aggregating resampler
 def cube_average_decode(spark, sf_dir):
@@ -1360,7 +1059,6 @@ def cube_average_decode(spark, sf_dir):
     downsampling workhorse, src/warp.cpp:167): coarse view over synth
     images; per-method exactness is pytest-gated vs the numpy oracle
     (tests/test_resampling.py) — no SQL engine can replay a PNG codec."""
-    from .operators.build import build_cube
     from .synth import images_table
 
     v = CubeView.create(
@@ -1379,7 +1077,6 @@ def cube_real_decode(spark, sf_dir):
     actual encoded bytes -> st_join -> decode+warp+mean -> reduce_time.
     Pixel exactness vs the numpy oracle is pytest-gated
     (tests/test_stjoin_build.py); no SQL engine can replay a PNG codec."""
-    from .operators.build import build_cube
     from .synth import images_table
 
     v = CubeView.create(
@@ -1393,69 +1090,6 @@ def cube_real_decode(spark, sf_dir):
 
 
 # ------------------------------------------------- additional operator oracles
-
-@q(
-    "cube_last",
-    _ENG_CELL_JOIN
-    + """
-SELECT it, iy, ix, arg_max(val1, image_id) AS B1, arg_max(val2, image_id) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_last(spark, sf_dir):
-    """AGG_LAST (src/image_collection_cube.cpp:226-244)."""
-    return _cube_eng(spark, sf_dir, "last").df
-
-
-@q(
-    "cube_min_max",
-    _ENG_CELL_JOIN
-    + """
-SELECT it, iy, ix, min(val1) AS B1, max(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-""",
-)
-def cube_min_max(spark, sf_dir):
-    """AGG_MIN / AGG_MAX (src/image_collection_cube.cpp:246-292)."""
-    mn = _cube_eng(spark, sf_dir, "min")
-    mx = _cube_eng(spark, sf_dir, "max")
-    j = mn.select_bands(["B1"]).join_bands([mx.select_bands(["B2"])])
-    return j.df.select(*KEY, "B1", "B2")
-
-
-@q(
-    "cube_count_values",
-    f"""
-WITH img AS ({IMG_META_SQL}), chunks AS ({_chunks_sql(V_ENG)}),
-hits AS (
-  SELECT chunks.chunk_id, {_IT_SQL} AS it,
-         any_value(it0) AS it0, any_value(iy0) AS iy0, any_value(iy1) AS iy1,
-         any_value(ix0) AS ix0, any_value(ix1) AS ix1
-  FROM img JOIN chunks
-    ON NOT (img.right < chunks.ch_left OR img.left > chunks.ch_right
-            OR img.bottom > chunks.ch_top OR img.top < chunks.ch_bottom)
-   AND img.ts >= chunks.ch_t_start AND img.ts <= chunks.ch_t_end
-   AND {_IT_SQL} >= it0 AND {_IT_SQL} < it1
-  GROUP BY chunks.chunk_id, {_IT_SQL}
-),
-cellcnt AS (
-  SELECT cells.it AS it, cells.iy AS iy, cells.ix AS ix, count(*) AS n
-  FROM ({_CELLS_ENG_SQL}) cells JOIN img
-    ON {_COVER_SQL} AND cells.it = {_IT_SQL}
-  GROUP BY cells.it, cells.iy, cells.ix
-)
-SELECT CAST(hits.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
-       CAST(coalesce(n, 0) AS DOUBLE) AS B1, CAST(coalesce(n, 0) AS DOUBLE) AS B2
-FROM hits
-JOIN range(0, {V_ENG.ny}) y(iy) ON y.iy >= iy0 AND y.iy < iy1
-JOIN range(0, {V_ENG.nx}) x(ix) ON x.ix >= ix0 AND x.ix < ix1
-LEFT JOIN cellcnt ON cellcnt.it = hits.it AND cellcnt.iy = y.iy AND cellcnt.ix = x.ix
-""",
-)
-def cube_count_values(spark, sf_dir):
-    """AGG_COUNT_VALUES incl. plane-flip-to-0 (src/image_collection_cube.cpp:179-201)."""
-    return _cube_eng(spark, sf_dir, "count_values").df
-
 
 @q(
     "select_time_labeled",
@@ -1671,57 +1305,7 @@ def zonal_suite(spark, sf_dir):
     return a.unionAll(b).unionAll(c)
 
 
-# ------------------------------------------------- masks (value/range)
-
-@q(
-    "cube_mask_value",
-    _ENG_CELL_JOIN.replace(
-        "SELECT cells.it, cells.iy, cells.ix, img.image_id, img.val1, img.val2",
-        "SELECT cells.it, cells.iy, cells.ix, img.image_id,\n"
-        "         CASE WHEN img.val1 IN (3, 7, 11, 20, 41) THEN NULL ELSE img.val1 END AS val1,\n"
-        "         CASE WHEN img.val1 IN (3, 7, 11, 20, 41) THEN NULL ELSE img.val2 END AS val2",
-    )
-    + """
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-HAVING avg(val1) IS NOT NULL OR avg(val2) IS NOT NULL
-""",
-)
-def cube_mask_value(spark, sf_dir):
-    """value_mask (src/image_collection_cube.h:34-88): pixels whose MASK-BAND
-    value is in the set become nodata across all bands before temporal
-    aggregation."""
-    from .operators.build import ValueMask, build_cube
-
-    return build_cube(
-        images_meta(spark, sf_dir), V_ENG, bands=("B1", "B2"),
-        value_fn=_value_fn, mask=ValueMask(0, [3, 7, 11, 20, 41]),
-    ).df
-
-
-@q(
-    "cube_mask_range",
-    _ENG_CELL_JOIN.replace(
-        "SELECT cells.it, cells.iy, cells.ix, img.image_id, img.val1, img.val2",
-        "SELECT cells.it, cells.iy, cells.ix, img.image_id,\n"
-        "         CASE WHEN img.val2 >= 10 AND img.val2 <= 60 THEN NULL ELSE img.val1 END AS val1,\n"
-        "         CASE WHEN img.val2 >= 10 AND img.val2 <= 60 THEN NULL ELSE img.val2 END AS val2",
-    )
-    + """
-SELECT it, iy, ix, avg(val1) AS B1, avg(val2) AS B2
-FROM cov GROUP BY it, iy, ix
-HAVING avg(val1) IS NOT NULL OR avg(val2) IS NOT NULL
-""",
-)
-def cube_mask_range(spark, sf_dir):
-    """range_mask (src/image_collection_cube.h:90-146): vmin<=v<=vmax on the
-    mask band -> nodata across all bands (non-inverted form)."""
-    from .operators.build import RangeMask, build_cube
-
-    return build_cube(
-        images_meta(spark, sf_dir), V_ENG, bands=("B1", "B2"),
-        value_fn=_value_fn, mask=RangeMask(1, 10.0, 60.0),
-    ).df
+SUITE_MEMBERS["zonal_suite"] = ("zonal_statistics", "zonal_topk")
 
 
 # ------------------------------------------------- export / re-read paths
@@ -1855,8 +1439,6 @@ def cube_jp2_decode(spark, sf_dir):
     codecs.decode's magic dispatch like every other codec. Pixel
     exactness is pytest-gated (tests/test_jpeg2000.py); no SQL engine
     can replay an EBCOT decoder."""
-    from .operators.build import build_cube
-
     images = spark.createDataFrame(
         _jp2_rows(),
         "image_id string, bytes binary, w int, h int, fmt string, "
@@ -1880,8 +1462,6 @@ def cube_jpegbase_decode(spark, sf_dir):
     pytest-gated against the numpy oracle decoding the same bytes
     (tests/test_jpegbase.py); lossy values are codec-defined, so no SQL
     engine can replay them."""
-    from .operators.build import build_cube
-
     images = spark.createDataFrame(
         _jpegbase_rows(),
         "image_id string, bytes binary, w int, h int, fmt string, "
@@ -2175,7 +1755,7 @@ def hdf4_modis_pixels(spark, sf_dir):
     reconstructs every decoded pixel from the granule formula."""
     import numpy as np
 
-    from .operators.build import build_cube, srcdata_decode
+    from .operators.build import srcdata_decode
     from .sources.formats import ingest_listing
     from .sources.hdf4 import hdf4_sds_bytes
 
@@ -2222,7 +1802,6 @@ def cube_mask_band_decode(spark, sf_dir):
     NEAREST regardless of the data resampling, then masks B1/B2. Synth
     2-channel images: channel 1 doubles as the mask (values 0-9 masked) —
     pixel exactness pytest-gated (test_band_mask_scl_pattern)."""
-    from .operators.build import BandMask, build_cube
     from .synth import images_table
 
     v = CubeView.create(
@@ -2337,38 +1916,8 @@ def image_stats_phash(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# folded suite entries — see the registry note above. Each suite is a tagged
-# UNION ALL of member queries (Spark) / member oracles (SQL): the driver's
-# order-insensitive value hash over the union verifies every member.
+# folded suite entries — see the registry note above
 # ---------------------------------------------------------------------------
-
-
-def _tagged_union_sql(tag_col: str, parts) -> str | None:
-    if any(_DEFS[m][1] is None for _t, m in parts):
-        return None
-    return "\nUNION ALL\n".join(
-        f"SELECT '{t}' AS {tag_col}, sub.* FROM ({_DEFS[m][1]}\n) sub"
-        for t, m in parts
-    )
-
-
-def _fold(name: str, tag_col: str, parts) -> None:
-    """Register a same-schema tagged-union suite of existing _DEFS members."""
-
-    def fn(spark, sf_dir, _parts=tuple(parts), _tag=tag_col):
-        out = None
-        for tag, member in _parts:
-            d = _DEFS[member][0](spark, sf_dir).select(F.lit(tag).alias(_tag), "*")
-            out = d if out is None else out.unionAll(d)
-        return out
-
-    fn.__name__ = name
-    fn.__doc__ = (
-        "Folded driver suite (one CORRECTNESS row hard-verifies each member): "
-        + ", ".join(m for _t, m in parts)
-    )
-    _DEFS[name] = (fn, _tagged_union_sql(tag_col, parts))
-
 
 _fold("stjoin_suite", "strategy",
       [("grid", "stjoin_rows"), ("s2", "stjoin_s2"), ("hex", "stjoin_hex")])
@@ -2600,13 +2149,9 @@ def s2_suite(spark, sf_dir):
     return cells.unionAll(knn).unionAll(hexm)
 
 
-_fold("cube_srs_suite", "srs",  # every non-separable-SRS warp family
-      [("utm", "cube_utm_mean"), ("polar", "cube_polar_mean"),
-       ("sinu", "cube_sinu_mean"), ("lcc", "cube_lcc_mean"),
-       ("laea", "cube_laea_mean"), ("aea", "cube_aea_mean"),
-       ("osgb", "cube_osgb_mean"), ("swiss", "cube_swiss_mean"),
-       ("hom", "cube_hom_mean"), ("cea", "cube_cea_mean"),
-       ("aeqd", "cube_aeqd_mean"), ("eqc", "cube_eqc_mean")])
+SUITE_MEMBERS["s2_suite"] = ("s2_cells", "s2_knn", "hex_cells_img")
+
+
 @q("cube_decode_suite", None)  # rows-only: every real-byte decode path
 def cube_decode_suite(spark, sf_dir):
     """Folded rows-only suite: all real-decode paths — aggregating
@@ -2648,6 +2193,12 @@ def cube_decode_suite(spark, sf_dir):
     return out.unionAll(jp2)
 
 
+SUITE_MEMBERS["cube_decode_suite"] = (
+    "cube_average_decode", "cube_real_decode", "simple_cube_decode",
+    "cube_mask_band_decode", "cube_jpegbase_decode", "cube_jp2_decode",
+)
+
+
 @q(
     "window_time_suite",
     f"""
@@ -2678,6 +2229,9 @@ def window_time_suite(spark, sf_dir):
         F.lit("space").alias("kind"), *KEY, F.col("B1_mean").alias("val")
     )
     return a.unionAll(b).unionAll(c)
+
+
+SUITE_MEMBERS["window_time_suite"] = ("window_time_mean", "window_time_kernel")
 
 
 @q(
@@ -2714,9 +2268,9 @@ FROM agg JOIN w ON agg.iy = w.iy AND agg.ix = w.ix
 )
 def reduce_time_full(spark, sf_dir):
     """ALL 12 reduce_time kernels in ONE call (src/reduce_time.cpp:56-524):
-    min/max/count/sum/mean/median/Q1/Q3/var/sd/which_min/which_max — folds
-    the former reduce_time_exact/stats/which driver entries — plus the
-    slope/intercept per-pixel trend extension (regr_* in both engines)."""
+    min/max/count/sum/mean/median/Q1/Q3/var/sd/which_min/which_max — the
+    registry's one reduce_time oracle — plus the slope/intercept per-pixel
+    trend extension (regr_* in both engines)."""
     c = _formula_cube(spark).reduce_time(
         [(r, "B1") for r in (
             "min", "max", "count", "sum", "mean", "median", "Q1", "Q3",
@@ -2739,14 +2293,14 @@ def reduce_time_full(spark, sf_dir):
 
 _WINDOW_ORACLED = [
     # scan / join / cube build
-    "stjoin_suite",  # folds stjoin_rows (broadcast) + stjoin_s2 (S2-keyed)
+    "stjoin_suite",  # folds stjoin_rows (grid) + stjoin_s2 + stjoin_hex
     "cube_mean_median",
     "cube_first_last",
     "cube_min_max",
     "cube_counts",
     "cube_mask_value_range",
     "cube_mask_file",
-    "cube_srs_suite",  # folds cube_utm_mean + cube_polar_mean + cube_sinu_mean
+    "cube_srs_suite",  # folds the twelve cube_<tag>_mean rows of _SRS_MEMBERS
     # derived operators
     "reduce_time_full",
     "reduce_space",
@@ -2776,11 +2330,11 @@ _WINDOW_ORACLED = [
     "packed_roundtrip",
     "cube_write_reread",
     # cell indexes
-    "s2_suite",  # r4: real S2 index + exact bucketed kNN (functions/s2.py)
+    "s2_suite",  # r4: real S2 index + exact bucketed kNN + hex index
 ]
 
 _WINDOW_ROWS_ONLY = [
-    "cube_decode_suite",  # folds simple_cube_decode + cube_mask_band_decode too
+    "cube_decode_suite",  # folds all six real-byte decode members
     "image_stats_phash",
 ]
 

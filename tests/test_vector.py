@@ -385,3 +385,28 @@ def test_wkt_transform_roundtrip_property():
         assert np.array_equal(got, want)
 
     check()
+
+
+def test_extract_geom_feature_files_written_once(spark, tmp_path, monkeypatch):
+    """The GeoJSON and shapefile arms of the extract_geom suite write their
+    feature files once per process and read the same files on every later
+    call; both arms return the WKT arm's rows."""
+    import collections
+    import tempfile
+
+    from gdalcubes_cpp_spark import benchqueries as bq
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    monkeypatch.setattr(bq, "_FIXTURE_MEMO", {})
+    arms = [bq._extract_geom_geojson(spark, None), bq._extract_geom_shp(spark, None)]
+    arms += [bq._extract_geom_geojson(spark, None), bq._extract_geom_shp(spark, None)]
+    suffixes = collections.Counter(p.suffix for p in tmp_path.rglob("*") if p.is_file())
+    assert suffixes == {".geojson": 1, ".shp": 1, ".shx": 1, ".dbf": 1}, suffixes
+
+    def rows(df):
+        return sorted(df.drop("source").collect())
+
+    want = rows(bq._extract_geom_wkt(spark, None))
+    assert want
+    for df in arms:
+        assert rows(df) == want
