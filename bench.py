@@ -4,7 +4,8 @@
 Runs the headline pipeline (deterministic image table with REAL encoded
 bytes -> st_join -> decode+warp+temporal-agg cube -> reduce) plus the
 representative operator queries at $SPARK_GRAFT_SF_DIR (default sf0.1) on
-local[$SPARK_GRAFT_CPUS], and prints ONE JSON line:
+local[$SPARK_GRAFT_CPUS] (default: the CPUs this process may run on), and
+prints ONE JSON line:
   {"metric": ..., "value": <suite sec>, "unit": "sec",
    "queries": {name: sec}, "sf": ..., "images_per_sec": ...}
 """
@@ -18,8 +19,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gdalcubes_cpp_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 N_IMAGES = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "200000"))
 
 BENCH_QUERIES = [

@@ -10,7 +10,8 @@ Usage:
   python bench_extra.py q1 q2 ...            # time the named queries
   python bench_extra.py --all                # every DEFS entry
   python bench_extra.py q1 --explain before  # also write plans/r07/q1_before.txt
-  env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS, BENCH_EXTRA_TRIALS (default 3)
+  env: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (default: the CPUs this process
+  may run on), BENCH_EXTRA_TRIALS (default 3)
 """
 
 from __future__ import annotations
@@ -22,8 +23,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from gdalcubes_cpp_spark.session import default_cores  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+CPUS = default_cores()
 TRIALS = int(os.environ.get("BENCH_EXTRA_TRIALS", "3"))
 PLAN_TAG = os.environ.get("BENCH_EXTRA_PLAN_TAG", "r07")
 

@@ -51,6 +51,15 @@ def _fixture(key: str, build):
     return _FIXTURE_MEMO[key]
 
 
+def _scratch_dir(name: str) -> str:
+    """The one temp directory per process that query ``name`` writes into;
+    each call overwrites the files of the last. They are not deleted on
+    return: the returned DataFrame reads them lazily."""
+    import tempfile
+
+    return _fixture(f"dir:{name}", lambda: tempfile.mkdtemp(prefix=f"gcs_{name}_"))
+
+
 def prepare_fixtures(spark) -> None:
     """Build every fixture outside any timed region: parquet synth tables,
     driver-side encoded payload memos and the extract_geom feature files.
@@ -701,11 +710,10 @@ def _feature_files() -> tuple:
 
     def build():
         import os
-        import tempfile
 
         from .vector.features import write_geojson, write_shp
 
-        d = tempfile.mkdtemp(prefix="gcs_features_")
+        d = _scratch_dir("features")
         gj, base = os.path.join(d, "rects.geojson"), os.path.join(d, "rects")
         rows = _rect_rows()
         write_geojson(gj, [(fid, w, {}) for fid, w in rows])
@@ -963,7 +971,7 @@ def _cells_sql(v: CubeView) -> str:
 
     lon_sql, lat_sql = _cell_lonlat_sql(v)
     p = _srs.resolve(v.srs)[1]
-    if getattr(p, "helm", None) is None:
+    if p.helm is None:
         return f"""
   SELECT CAST(t.it AS INT) AS it, CAST(y.iy AS INT) AS iy, CAST(x.ix AS INT) AS ix,
          {lon_sql} AS cx, {lat_sql} AS cy
@@ -1327,11 +1335,9 @@ def packed_roundtrip(spark, sf_dir):
     """packed_export (src/cube.h:51-151): scale/offset int packing on write,
     unpack on read — round((v-offset)/scale) clipped to the uint8 range,
     then packed*scale+offset back."""
-    import tempfile
-
     from .operators.export import Packing, read_packed, write_packed
 
-    path = tempfile.mkdtemp(prefix="gcs_packed_")
+    path = _scratch_dir("packed_roundtrip")
     write_packed(
         _formula_cube(spark), path,
         Packing(type="uint8", scale=(0.5,), offset=(1.0,), nodata=(255.0,)),
@@ -1351,11 +1357,9 @@ def cube_write_reread(spark, sf_dir):
     """netCDF-export analog roundtrip (src/cube.cpp:736 + src/ncdf_cube.h:
     48-50): persist the cube as chunk-partitioned parquet, re-read it —
     values byte-identical to the in-memory cube."""
-    import tempfile
-
     from .sources.collection import read_chunks, write_cube
 
-    path = tempfile.mkdtemp(prefix="gcs_reread_")
+    path = _scratch_dir("cube_write_reread")
     write_cube(_formula_cube(spark), path)
     return read_chunks(spark, path).df
 
@@ -1841,21 +1845,20 @@ def netcdf_roundtrip(spark, sf_dir):
     third arm re-reads an HDF5 container using DENSE storage (fractal
     heap + v2 B-tree link/attribute indexes, the libver-latest layout
     h5py/netcdf-c grow into) — r5 VERDICT #2."""
-    import tempfile
+    import os
 
     from .sources.hdf5 import write_netcdf4
     from .sources.netcdf3 import read_netcdf_cube, write_netcdf
 
     cube = _formula_cube(spark)
-    p1 = tempfile.mktemp(suffix=".nc", prefix="gcs_")
+    p1, p4, pd_ = (os.path.join(_scratch_dir("netcdf_roundtrip"), f)
+                   for f in ("cdf1.nc", "nc4.nc", "dense.nc"))
     write_netcdf(cube, p1)
     a = read_netcdf_cube(spark, p1).df.select(
         F.lit("cdf1").alias("container"), "*")
-    p4 = tempfile.mktemp(suffix=".nc", prefix="gcs_nc4_")
     write_netcdf4(cube, p4, deflate=2, shuffle=True)
     b = read_netcdf_cube(spark, p4).df.select(
         F.lit("nc4").alias("container"), "*")
-    pd_ = tempfile.mktemp(suffix=".nc", prefix="gcs_dense_")
     write_netcdf4(cube, pd_, deflate=2, shuffle=True, dense=True)
     c = read_netcdf_cube(spark, pd_).df.select(
         F.lit("dense").alias("container"), "*")
@@ -1884,15 +1887,14 @@ def geotiff_roundtrip(spark, sf_dir):
     IFDs before data). Written and re-read by the pure-python spec
     implementation (sources/geotiff.py) — values byte-exact through either
     container."""
-    import tempfile
+    import os
 
     from .sources.geotiff import read_gtiff_cube, write_cog, write_gtiff
 
     cube = _formula_cube(spark)
-    p1 = tempfile.mkdtemp(prefix="gcs_gtiff_")
+    p1, p2 = (os.path.join(_scratch_dir("geotiff_roundtrip"), d) for d in ("striped", "cog"))
     write_gtiff(cube, p1)
     a = read_gtiff_cube(spark, p1).df.select(F.lit("striped").alias("layout"), "*")
-    p2 = tempfile.mkdtemp(prefix="gcs_cog_")
     write_cog(cube, p2, tile=16, levels=(2,))
     b = read_gtiff_cube(spark, p2).df.select(F.lit("cog").alias("layout"), "*")
     return a.unionAll(b)

@@ -10,10 +10,10 @@ the head snapshot holds its manifest, so a run killed anywhere before a
 commit leaves nothing for a resume to undo.
 
 Resume re-reads each committed part and checks its rows and digest against
-its lineage row. A part whose files are missing or do not match runs again,
-and its snapshot replaces the old manifest. A resume whose blocks differ
-from the committed ones (another ``n_parts``) raises: its parts would
-overlap the committed cells.
+its lineage row. A part whose files are missing, unreadable or do not match
+runs again, and its snapshot replaces the old manifest. A resume whose
+blocks differ from the committed ones (another ``n_parts``) raises: its
+parts would overlap the committed cells.
 
 Each part pre-filters the images in the JVM with build._view_window
 narrowed to its block (grid.block_bounds), builds over the whole view and
@@ -30,7 +30,10 @@ from __future__ import annotations
 
 import os
 import time
+import warnings
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import PySparkException
 from pyspark.sql import DataFrame, functions as F
 
 from .grid import ChunkGrid
@@ -52,13 +55,27 @@ def _stats(df: DataFrame) -> tuple:
     return r["n"], r["d"] or 0
 
 
+# the error conditions Spark gives a data file it cannot read: a garbled
+# page fails the scan task, a garbled footer fails the planning
+_READ_FAILED = ("FAILED_READ_FILE", "CANNOT_READ_FILE_FOOTER")
+
+
 def _intact(spark, table: IceTable, snap: dict) -> bool:
-    """The part's committed files exist and hold its lineage row's rows and
-    digest."""
+    """The part's committed files exist, can be read and hold its lineage
+    row's rows and digest."""
     paths = [os.path.join(table.path, e["path"]) for e in table.entries(snap["manifests"][-1])]
     if not all(map(os.path.exists, paths)):
         return False
-    got = _stats(spark.read.parquet(*paths)) if paths else (0, 0)
+    try:
+        got = _stats(spark.read.parquet(*paths)) if paths else (0, 0)
+    except (Py4JJavaError, PySparkException) as e:
+        msg = str(e)
+        if not any(c in msg for c in _READ_FAILED):
+            raise
+        line = next((ln for ln in msg.splitlines() if any(c in ln for c in _READ_FAILED)), "")
+        warnings.warn(f"part {snap['summary']['part']} of {table.path} is unreadable, "
+                      f"running it again: {line.strip(': ')}", RuntimeWarning, stacklevel=2)
+        return False
     return got == (snap["summary"]["rows"], snap["summary"]["digest"])
 
 

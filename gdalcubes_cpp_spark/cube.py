@@ -184,12 +184,10 @@ class Cube:
             *self.bands,
         )
         nv = dc_replace(
-            v,
+            v.time_slice(t0, t1),
             left=v.left + x0 * v.dx, right=v.left + x1 * v.dx,
             top=v.top - y0 * v.dy, bottom=v.top - y1 * v.dy,
             nx=x1 - x0, ny=y1 - y0,
-            t0=v.datetime_at(t0), nt=t1 - t0,
-            time_labels=v.time_labels[t0:t1] if v.labeled else (),
         )
         return self._with(df, view=nv)
 

@@ -94,7 +94,7 @@ class ChunkGrid:
         """t_end of a chunk whose slots end at ``it1``: the last label on a
         labeled axis, else the start of the slot after the last."""
         v = self.view
-        return v.time_labels[it1 - 1] if v.labeled else add_duration(v.t0, v.dt, it1)
+        return v.time_labels[it1 - 1] if v.labeled else v.datetime_at(it1)
 
     def chunk_bounds(self, cid: int) -> dict:
         """Map-space + time bounds of a chunk (src/cube.h:676-694; y flipped)."""
@@ -225,15 +225,20 @@ class ChunkGrid:
     def time_at_sql(self, it: str) -> str:
         """TIMESTAMP start of slot ``it`` (CubeView.datetime_at). Years are
         12-month steps: timestampadd clamps the day-of-month as
-        view.add_duration does (2020-02-29 + P1Y -> 2021-02-28)."""
+        view.add_duration does (2020-02-29 + P1Y -> 2021-02-28). A view
+        whose slots clamp from another day than t0's (CubeView.t_day) counts
+        from that day in the month before t0: the month before a short one
+        has 31 days."""
         v = self.view
         if v.labeled:
             return f"element_at({self._labels_sql()}, CAST({it} + 1 AS INT))"
-        t0 = _ts(v.t0)
         if v.dt.unit in ("Y", "M"):
             months = v.dt.n * (12 if v.dt.unit == "Y" else 1)
-            return f"timestampadd(MONTH, CAST(({it}) * {months} AS INT), {t0})"
-        return f"timestampadd(SECOND, CAST(({it}) * {v.dt.seconds} AS BIGINT), {t0})"
+            if v.t_day and v.t_day != v.t0.day:
+                base = add_duration(v.t0, Duration(1, "M"), -1, day=v.t_day)
+                return f"timestampadd(MONTH, CAST(({it}) * {months} + 1 AS INT), {_ts(base)})"
+            return f"timestampadd(MONTH, CAST(({it}) * {months} AS INT), {_ts(v.t0)})"
+        return f"timestampadd(SECOND, CAST(({it}) * {v.dt.seconds} AS BIGINT), {_ts(v.t0)})"
 
     def slot_sql(self, ts: str) -> str:
         """INT slot of the timestamp column ``ts``: on a labeled axis the

@@ -42,7 +42,7 @@ from .. import codecs
 from ..grid import ChunkGrid
 from ..partition import spread
 from ..srs import _flit
-from ..view import CubeView, add_duration
+from ..view import CubeView
 from .stjoin import st_join
 
 DEFAULT_BANDS = ("B1", "B2")
@@ -853,7 +853,7 @@ def _view_window(view: CubeView, bounds: dict | None = None) -> str | None:
     if bounds is None:
         box, lo = (view.left, view.right, view.bottom, view.top), view.t0
         try:
-            hi = add_duration(view.t0, view.dt, view.nt)
+            hi = view.t_end
         except (OverflowError, ValueError):  # past year 9999: no upper bound
             hi = None
     else:

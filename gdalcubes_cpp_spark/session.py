@@ -25,13 +25,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_cores() -> int:
+    """Local cores when a caller names none: $SPARK_GRAFT_CPUS, else the
+    CPUs this process may run on."""
+    return int(os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0)))
+
+
 def get_spark(
     app: str = "gdalcubes_cpp_spark",
     cores: int | None = None,
     shuffle_partitions: int | None = None,
     extra: dict | None = None,
 ) -> SparkSession:
-    cores = cores or int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cores = cores or default_cores()
     shuffle_partitions = shuffle_partitions or max(cores, 8)
     # one BLAS thread per python worker: N workers x M-thread OpenBLAS
     # spin-waits destroy scaling (each tiny numpy op wakes M spinning

@@ -21,13 +21,17 @@ bbox_to_wgs84) dispatch on the row. The rows:
   (EPSG:4087)
 
 Kernels are DATUM-LOCAL: each maps the projection's own geodetic
-coordinates to grid coordinates and back. ETM, SOMERC, HOM and AEQD params
-carry an optional ``helm`` (a +towgs84 Helmert or an NTv2 grid), and the
-entry points apply that datum stage once, around the kernel.
+coordinates to grid coordinates and back. Every ellipsoidal family's params
+share one set of datum fields (``_Datum``: ``a``, ``e2`` and an optional
+``helm``, a +towgs84 Helmert or an NTv2 grid), and the entry points apply
+that datum stage once, around the kernel.
 
-Known EPSG codes map to their registry parameters (``_KNOWN``); proj4 and
-WKT strings canonicalize to those codes when the parameters match, and any
-other parameter set becomes a SELF-DESCRIBING dynamic key ("PS:...",
+Known EPSG codes map to their registry parameters (``_KNOWN``). One parser,
+``_proj4_datum``, reads the ellipsoid and datum of every proj4 string
+(WGS84 when it names none; +datum=WGS84, NAD83 or OSGB36), and a string
+resolves exactly or raises: it canonicalizes to an EPSG code only when all
+its parameters, ellipsoid and datum included, are that code's; any other
+parameter set becomes a SELF-DESCRIBING dynamic key ("PS:...",
 "LAEA:...", ...) that any process parses back (``_PARSED`` caches it).
 Keys are persisted (netCDF/HDF5 attributes, view JSON), so each row's key
 field spec fixes its text format. Adding a family is one row plus its
@@ -72,11 +76,54 @@ K0 = 0.9996
 FE = 500000.0
 FN_SOUTH = 10000000.0
 
+# ellipsoids: +ellps name -> (a, 1/f)
+_ELLPS = {
+    "wgs84": (6378137.0, 298.257223563),
+    "grs80": (6378137.0, 298.257222101),
+    "airy": (6377563.396, 299.3249646),
+    "bessel": (6377397.155, 299.1528128),
+    "intl": (6378388.0, 297.0),
+    "clrk66": (6378206.4, 294.978698214),  # 1/f from a/(a-b), Clarke 1866
+}
+
+
+def _e2_of(a: float, inv_f: float) -> float:
+    f = 1.0 / inv_f
+    return f * (2.0 - f)
+
+
+# GRS80 (EPSG:3035's datum ETRS89) differs from WGS84 only in the 12th
+# significant digit of the flattening
+_E2_GRS80 = _e2_of(*_ELLPS["grs80"])
+
+# OSGB36 -> WGS84 (the published national 7-param set; PROJ's own towgs84
+# for +datum=OSGB36)
+_OSGB_HELM = (446.448, -125.157, 542.060, 0.1502, 0.2470, 0.8421, -20.4894)
+
+# +datum name -> (+ellps name, datum stage to WGS84). NAD27 and the other
+# grid-based datums need NADCON grids the package does not ship, so any
+# other name raises.
+_DATUMS = {"wgs84": ("wgs84", None), "nad83": ("grs80", None),
+           "osgb36": ("airy", _OSGB_HELM)}
+
+
+@dataclass(frozen=True, kw_only=True)
+class _Datum:
+    """The ellipsoid and datum every ellipsoidal family's params share:
+    semi-major axis ``a``, squared eccentricity ``e2`` and ``helm``, the
+    datum stage to WGS84 (a +towgs84 7-tuple (tx,ty,tz,rx",ry",rz",ds_ppm),
+    an ("ntv2", path) grid tag, or None). Kernels read ``a`` and ``e2``
+    only; the entry points apply ``helm`` around them."""
+
+    a: float
+    e2: float
+    helm: tuple | None = None
+
 
 @dataclass(frozen=True)
-class PolarPS:
+class PolarPS(_Datum):
     """Polar stereographic variant B (EPSG method 9829; Snyder 1987 §21):
-    standard-parallel form on the WGS84 ellipsoid."""
+    standard-parallel form."""
 
     lat_ts: float  # latitude of standard parallel (deg, signed)
     lon0: float    # longitude of origin (deg)
@@ -86,7 +133,7 @@ class PolarPS:
 
 
 @dataclass(frozen=True)
-class LaeaParams:
+class LaeaParams(_Datum):
     """Lambert azimuthal equal-area, ellipsoidal (EPSG method 9820;
     Snyder 1987 §24) — EPSG:3035 is the ESA/EEA European grid."""
 
@@ -94,69 +141,78 @@ class LaeaParams:
     lon0: float
     fe: float
     fn: float
-    a: float
-    e2: float
-
-
-# GRS80 ellipsoid (EPSG:3035 datum ETRS89); differs from WGS84 only in the
-# 12th significant digit of the flattening
-_F_GRS80 = 1.0 / 298.257222101
-_E2_GRS80 = _F_GRS80 * (2.0 - _F_GRS80)
 
 
 def _proj4_kv(s: str) -> dict:
     """'+proj=utm +zone=33 +south' -> {'proj': 'utm', 'zone': '33',
-    'south': True} (flags map to True)."""
+    'south': True} (flags map to True). Values are lower-cased except a
+    +nadgrids file path."""
     out = {}
     for tok in s.split():
         tok = tok.lstrip("+")
         if not tok:
             continue
         k, _, v = tok.partition("=")
-        out[k.lower()] = v.lower() if v else True
+        k = k.lower()
+        out[k] = (v if k == "nadgrids" else v.lower()) if v else True
     return out
 
 
-def _proj4_ellps(kv: dict, s: str):
-    """(a, e2) from +ellps= / +a=+b= / +a=+rf= (defaults to WGS84)."""
-    if "ellps" in kv and kv["ellps"] is not True:
-        known = _ELLPS.get(kv["ellps"])
-        if known is None:
-            raise ValueError(f"unknown +ellps={kv['ellps']} in {s!r}")
-        return known[0], _e2_of(*known)
-    if "a" in kv:
+def _ellps(name: str, s: str = "") -> tuple:
+    """(a, e2) of an +ellps name."""
+    if name not in _ELLPS:
+        raise ValueError(f"unknown +ellps={name} in {s!r}")
+    return _ELLPS[name][0], _e2_of(*_ELLPS[name])
+
+
+_ELLPS_KEYS = (set(), {"ellps"}, {"r"}, {"a"}, {"a", "b"}, {"a", "rf"}, {"a", "f"})
+
+
+def _proj4_datum(kv: dict, s: str):
+    """(a, e2, helm) of a proj4 string, for every +proj.
+
+    The ellipsoid is +ellps, +R or +a (a sphere), or +a with one of
+    +b/+rf/+f; WGS84 when none is given. The datum stage is one NTv2 .gsb
+    +nadgrids grid (@null is none), else +towgs84 (3 or 7 values; all
+    zero is none). A +datum names a _DATUMS row and must agree with any
+    ellipsoid or shift given next to it. Anything else raises ValueError:
+    no string silently becomes WGS84."""
+    given = {k for k in ("ellps", "r", "a", "b", "rf", "f") if kv.get(k) not in (None, True)}
+    if given not in _ELLPS_KEYS:
+        raise ValueError(f"give the ellipsoid as +ellps, +R, or +a with +b/+rf/+f: {s!r}")
+    ell = _ellps(kv["ellps"], s) if "ellps" in given else None
+    if "r" in given:
+        ell = float(kv["r"]), 0.0
+    if "a" in given:
         a = float(kv["a"])
-        if "rf" in kv:
-            return a, _e2_of(a, float(kv["rf"]))
-        b = float(kv.get("b", a))
-        f = (a - b) / a
-        return a, f * (2.0 - f)
-    return A_WGS84, E2
-
-
-def _proj4_towgs84(kv: dict, s: str):
-    """7-tuple (tx,ty,tz,rx",ry",rz",ds_ppm) from +towgs84=, or None.
-    3-param form pads zero rotations/scale (the EPSG geocentric
-    translation special case)."""
-    ng = kv.get("nadgrids")
-    if ng not in (None, True) and str(ng) not in ("@null", "null"):
-        # NTv2 grid-shift file(s): PROJ semantics give +nadgrids=
-        # precedence over +towgs84=. The tag rides the helm slot; the
-        # datum stage dispatches on it (sources/ntv2.py). Only the first
-        # grid of a comma list is used ('@' optional-prefixes stripped).
-        path = str(ng).split(",")[0].lstrip("@")
-        return ("ntv2", path)
-    tw = kv.get("towgs84")
-    if tw in (None, True):
-        return None
-    vals = [float(v) for v in str(tw).split(",")]
-    if len(vals) == 3:
-        vals += [0.0, 0.0, 0.0, 0.0]
-    if len(vals) != 7:
-        raise ValueError(f"+towgs84 needs 3 or 7 values in {s!r}")
-    if all(v == 0.0 for v in vals):
-        return None
-    return tuple(vals)
+        f = (1.0 / float(kv["rf"]) if "rf" in given else float(kv["f"]) if "f" in given
+             else (a - float(kv.get("b", a))) / a)
+        ell = a, f * (2.0 - f)
+    if ell is not None and not (ell[0] > 0.0 and 0.0 <= ell[1] < 1.0):
+        raise ValueError(f"not an ellipsoid: a={ell[0]}, e2={ell[1]} in {s!r}")
+    helm, shifted = None, "towgs84" in kv
+    ng = str(kv.get("nadgrids", "@null"))
+    if ng.lower() not in ("@null", "null"):
+        # the grid's tag rides the helm slot and the datum stage dispatches
+        # on it (sources/ntv2.py); PROJ gives +nadgrids precedence
+        if "," in ng or not ng.lower().endswith(".gsb"):
+            raise ValueError(f"+nadgrids must name one NTv2 .gsb grid: {s!r}")
+        helm, shifted = ("ntv2", ng.lstrip("@")), True
+    elif shifted:
+        vals = [float(v) for v in str(kv["towgs84"]).split(",")]
+        if len(vals) == 3:  # the EPSG geocentric translation special case
+            vals += [0.0, 0.0, 0.0, 0.0]
+        if len(vals) != 7:
+            raise ValueError(f"+towgs84 needs 3 or 7 values in {s!r}")
+        helm = tuple(vals) if any(vals) else None
+    if "datum" not in kv:
+        return (*(ell or (A_WGS84, E2)), helm)
+    if kv["datum"] not in _DATUMS:
+        raise ValueError(f"unsupported +datum={kv['datum']} (WGS84, NAD83, OSGB36): {s!r}")
+    name, dhelm = _DATUMS[kv["datum"]]
+    if ell not in (None, _ellps(name)) or shifted and helm != dhelm:
+        raise ValueError(f"+datum={kv['datum']} contradicts the ellipsoid or shift: {s!r}")
+    return (*_ellps(name), dhelm)
 
 
 # -- web mercator (numpy, kernel-side) ----------------------------------------
@@ -249,35 +305,36 @@ def _series_sql(v: str, coeffs) -> str:
 
 # -- polar stereographic variant B (numpy; Snyder 1987 §21, EPSG 9829) --------
 
-_E = math.sqrt(E2)
-# sqrt((1+e)^(1+e) (1-e)^(1-e)) — the ellipsoidal stereographic constant
-_CPOL = math.sqrt((1.0 + _E) ** (1.0 + _E) * (1.0 - _E) ** (1.0 - _E))
 _HALF_PI = math.pi / 2.0
 
 
-def _ps_t(phi: np.ndarray, south: bool) -> np.ndarray:
+def _ps_t(phi: np.ndarray, e: float, south: bool) -> np.ndarray:
     """Isometric-latitude factor t (Snyder eq. 15-9 / 21-27)."""
-    es = _E * np.sin(phi)
+    es = e * np.sin(phi)
     if south:
-        return np.tan(np.pi / 4.0 + phi / 2.0) / ((1.0 + es) / (1.0 - es)) ** (_E / 2.0)
-    return np.tan(np.pi / 4.0 - phi / 2.0) * ((1.0 + es) / (1.0 - es)) ** (_E / 2.0)
+        return np.tan(np.pi / 4.0 + phi / 2.0) / ((1.0 + es) / (1.0 - es)) ** (e / 2.0)
+    return np.tan(np.pi / 4.0 - phi / 2.0) * ((1.0 + es) / (1.0 - es)) ** (e / 2.0)
 
 
-def _ps_k0(p: PolarPS) -> float:
-    """Implied scale at the pole from the standard parallel (variant B)."""
+def _ps_consts(p: PolarPS):
+    """(e, c, k0): the eccentricity, the ellipsoidal stereographic constant
+    c = sqrt((1+e)^(1+e) (1-e)^(1-e)) and the scale at the pole implied by
+    the standard parallel (variant B)."""
+    e = math.sqrt(p.e2)
+    c = math.sqrt((1.0 + e) ** (1.0 + e) * (1.0 - e) ** (1.0 - e))
     phi_f = math.radians(p.lat_ts)
-    es = _E * math.sin(phi_f)
+    es = e * math.sin(phi_f)
     m_f = math.cos(phi_f) / math.sqrt(1.0 - es * es)
-    t_f = float(_ps_t(np.asarray(phi_f), p.south))
-    return m_f * _CPOL / (2.0 * t_f)
+    t_f = float(_ps_t(np.asarray(phi_f), e, p.south))
+    return e, c, m_f * c / (2.0 * t_f)
 
 
 def ps_forward(lon, lat, p: PolarPS):
     """(lon, lat) degrees -> polar-stereographic (x, y) meters (vectorized)."""
+    e, c, k0 = _ps_consts(p)
     phi = np.radians(np.asarray(lat, dtype=np.float64))
     lam = np.radians(np.asarray(lon, dtype=np.float64) - p.lon0)
-    k0 = _ps_k0(p)
-    rho = 2.0 * A_WGS84 * k0 * _ps_t(phi, p.south) / _CPOL
+    rho = 2.0 * p.a * k0 * _ps_t(phi, e, p.south) / c
     x = p.fe + rho * np.sin(lam)
     y = p.fn + (rho * np.cos(lam) if p.south else -rho * np.cos(lam))
     return x, y
@@ -291,7 +348,8 @@ def ps_inverse(x, y, p: PolarPS):
     driver oracle replays the kernel in SQL."""
     x = np.asarray(x, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    s = _CPOL / (2.0 * A_WGS84 * _ps_k0(p))  # one scalar, shared with SQL
+    _e, c, k0 = _ps_consts(p)
+    s = c / (2.0 * p.a * k0)  # one scalar, shared with SQL
     dx = x - p.fe
     dy = y - p.fn
     rho = np.sqrt(dx * dx + dy * dy)
@@ -302,7 +360,7 @@ def ps_inverse(x, y, p: PolarPS):
     else:
         chi = _HALF_PI - 2.0 * np.arctan(tp)
         lam = np.arctan2(dx, -dy)
-    phi = _series(chi, _chi_series(E2))
+    phi = _series(chi, _chi_series(p.e2))
     return p.lon0 + np.degrees(lam), np.degrees(phi)
 
 
@@ -310,7 +368,8 @@ def ps_inverse_sql(x_expr: str, y_expr: str, p: PolarPS):
     """(lon_sql, lat_sql) ANSI-SQL mirror of ps_inverse — same operation
     order, E-notation DOUBLE literals (runnable in DuckDB and Spark SQL)."""
     L = _flit
-    s = _CPOL / (2.0 * A_WGS84 * _ps_k0(p))
+    _e, c, k0 = _ps_consts(p)
+    s = c / (2.0 * p.a * k0)
     dx = f"(({x_expr}) - {L(p.fe)})"
     dy = f"(({y_expr}) - {L(p.fn)})"
     rho = f"sqrt({dx} * {dx} + {dy} * {dy})"
@@ -322,7 +381,7 @@ def ps_inverse_sql(x_expr: str, y_expr: str, p: PolarPS):
         chi = f"({L(_HALF_PI)} - 2.0 * atan({tp}))"
         lam = f"atan2({dx}, -{dy})"
     deg = L(180.0 / math.pi)
-    lat = f"({_series_sql(chi, _chi_series(E2))} * {deg})"
+    lat = f"({_series_sql(chi, _chi_series(p.e2))} * {deg})"
     lon = f"({L(p.lon0)} + {lam} * {deg})"
     return lon, lat
 
@@ -330,6 +389,9 @@ def ps_inverse_sql(x_expr: str, y_expr: str, p: PolarPS):
 # -- Lambert azimuthal equal-area (numpy; Snyder 1987 §24, EPSG 9820) ---------
 
 def _laea_q(phi, e: float, e2: float):
+    """Snyder's q (eq. 3-12); 2 sin(phi), its limit, on a sphere."""
+    if e == 0.0:
+        return 2.0 * np.sin(phi)
     es = e * np.sin(phi)
     return (1.0 - e2) * (
         np.sin(phi) / (1.0 - e2 * np.sin(phi) ** 2)
@@ -436,6 +498,7 @@ class SinuParams:
     lon0: float
     fe: float
     fn: float
+    helm = None  # not a field: a sphere has no datum stage
 
 
 MODIS_SINU_R = 6371007.181  # authalic sphere radius of the MODIS grid (m)
@@ -475,7 +538,7 @@ def sinu_inverse_sql(x_expr: str, y_expr: str, p: SinuParams):
 # -- Lambert conformal conic, 2SP (numpy; Snyder 1987 §15, EPSG 9802) ---------
 
 @dataclass(frozen=True)
-class LccParams:
+class LccParams(_Datum):
     """Lambert conformal conic with two standard parallels (EPSG method
     9802; Snyder 1987 §15, ellipsoidal). EPSG:2154 (RGF93 / Lambert-93,
     the French national grid) is the registered instance; NAD83 state
@@ -487,8 +550,6 @@ class LccParams:
     lon0: float  # longitude of false origin (deg)
     fe: float
     fn: float
-    a: float
-    e2: float
 
 
 def _lcc_m(phi: float, e2: float) -> float:
@@ -570,7 +631,7 @@ def lcc_inverse_sql(x_expr: str, y_expr: str, p: LccParams):
 # -- Albers equal-area conic, 2SP (numpy; Snyder 1987 §14, EPSG 9822) ---------
 
 @dataclass(frozen=True)
-class AeaParams:
+class AeaParams(_Datum):
     """Albers equal-area conic with two standard parallels (EPSG method
     9822; Snyder 1987 §14, ellipsoidal). EPSG:5070 (NAD83 / Conus Albers
     — the NLCD / NASS CDL national grid) is the registered instance."""
@@ -581,8 +642,6 @@ class AeaParams:
     lon0: float
     fe: float
     fn: float
-    a: float
-    e2: float
 
 
 def _aea_consts(p: AeaParams):
@@ -590,8 +649,7 @@ def _aea_consts(p: AeaParams):
     e = math.sqrt(p.e2)
     phi0, phi1, phi2 = (math.radians(v) for v in (p.lat0, p.lat1, p.lat2))
     q0, q1, q2 = (float(_laea_q(np.asarray(v), e, p.e2)) for v in (phi0, phi1, phi2))
-    m1 = math.cos(phi1) / math.sqrt(1.0 - p.e2 * math.sin(phi1) ** 2)
-    m2 = math.cos(phi2) / math.sqrt(1.0 - p.e2 * math.sin(phi2) ** 2)
+    m1, m2 = _lcc_m(phi1, p.e2), _lcc_m(phi2, p.e2)
     if abs(phi1 - phi2) < 1e-12:
         n = math.sin(phi1)
     else:
@@ -667,21 +725,6 @@ _AS2RAD = math.pi / 648000.0  # arc-seconds -> radians
 
 _B_WGS84 = A_WGS84 * math.sqrt(1.0 - E2)  # WGS84 semi-minor axis
 
-# ellipsoids: name -> (a, 1/f)
-_ELLPS = {
-    "wgs84": (6378137.0, 298.257223563),
-    "grs80": (6378137.0, 298.257222101),
-    "airy": (6377563.396, 299.3249646),
-    "bessel": (6377397.155, 299.1528128),
-    "intl": (6378388.0, 297.0),
-    "clrk66": (6378206.4, 294.978698214),  # 1/f from a/(a-b), Clarke 1866
-}
-
-
-def _e2_of(a: float, inv_f: float) -> float:
-    f = 1.0 / inv_f
-    return f * (2.0 - f)
-
 
 def _helm_key(helm) -> str:
     """Dynamic-key suffix for a datum spec — parseable back by
@@ -699,7 +742,9 @@ def _helm_from_parts(parts: list, k: int):
     rest = ":".join(parts[k:])
     if rest.startswith("ntv2@"):
         return ("ntv2", rest[5:])
-    return tuple(float(v) for v in parts[k:k + 7])
+    if len(parts) != k + 7:
+        raise ValueError("a Helmert key suffix has 7 fields")
+    return tuple(float(v) for v in parts[k:])
 
 
 def _is_ntv2(helm) -> bool:
@@ -754,15 +799,18 @@ def helmert_inverse(X, Y, Z, helm):
     return X2, Y2, Z2
 
 
-def xyz_to_wgs84_geodetic(X, Y, Z):
-    """Geocentric WGS84 XYZ -> (lon, lat) degrees, Bowring's single-pass
-    closed formula (sub-mm for earth-surface points)."""
+def _xyz_to_geodetic(X, Y, Z, a: float, e2: float):
+    """Geocentric XYZ -> (lon, lat) degrees on the ellipsoid (a, e2),
+    Bowring's single-pass closed formula (sub-mm for earth-surface
+    points)."""
+    b = a * math.sqrt(1.0 - e2)
+    ep2 = e2 / (1.0 - e2)
     pr = np.sqrt(X * X + Y * Y)
-    th = np.arctan2(Z * A_WGS84, pr * _B_WGS84)
+    th = np.arctan2(Z * a, pr * b)
     sth = np.sin(th)
     cth = np.cos(th)
-    phi = np.arctan2(Z + EP2 * _B_WGS84 * sth * sth * sth,
-                     pr - E2 * A_WGS84 * cth * cth * cth)
+    phi = np.arctan2(Z + ep2 * b * sth * sth * sth,
+                     pr - e2 * a * cth * cth * cth)
     return np.arctan2(Y, X) * _DEG, phi * _DEG
 
 
@@ -776,7 +824,7 @@ def datum_to_wgs84(lon_deg, lat_deg, a: float, e2: float, helm):
 
         return grid_shift(helm[1]).forward(lon_deg, lat_deg)
     X, Y, Z = geodetic_to_xyz(lon_deg, lat_deg, a, e2)
-    return xyz_to_wgs84_geodetic(*helmert_forward(X, Y, Z, helm))
+    return _xyz_to_geodetic(*helmert_forward(X, Y, Z, helm), A_WGS84, E2)
 
 
 def wgs84_to_datum(lon_deg, lat_deg, a: float, e2: float, helm):
@@ -788,16 +836,7 @@ def wgs84_to_datum(lon_deg, lat_deg, a: float, e2: float, helm):
 
         return grid_shift(helm[1]).inverse(lon_deg, lat_deg)
     X, Y, Z = geodetic_to_xyz(lon_deg, lat_deg, A_WGS84, E2)
-    u, v, w = helmert_inverse(X, Y, Z, helm)
-    b = a * math.sqrt(1.0 - e2)
-    ep2 = e2 / (1.0 - e2)
-    pr = np.sqrt(u * u + v * v)
-    th = np.arctan2(w * a, pr * b)
-    sth = np.sin(th)
-    cth = np.cos(th)
-    phi = np.arctan2(w + ep2 * b * sth * sth * sth,
-                     pr - e2 * a * cth * cth * cth)
-    return np.arctan2(v, u) * _DEG, phi * _DEG
+    return _xyz_to_geodetic(*helmert_inverse(X, Y, Z, helm), a, e2)
 
 
 def _datum_sql(lon_expr: str, lat_expr: str, a: float, e2: float, helm):
@@ -834,15 +873,12 @@ def _datum_sql(lon_expr: str, lat_expr: str, a: float, e2: float, helm):
 # the lat_0 meridional-arc offset M0.
 
 @dataclass(frozen=True)
-class EtmParams:
-    a: float
-    e2: float
+class EtmParams(_Datum):
     k0: float
     lat0: float
     lon0: float
     fe: float
     fn: float
-    helm: tuple | None  # (tx,ty,tz,rx",ry",rz",ds_ppm) source -> WGS84
 
 
 def _etm_consts(p: EtmParams):
@@ -850,10 +886,6 @@ def _etm_consts(p: EtmParams):
     c0, _c2, _c4, _c6, foot = _tm_consts(p.e2)
     m0 = _meridian_arc(p.a, p.e2, p.lat0 * _RAD, math.sin)
     return c0, foot, p.e2 / (1.0 - p.e2), m0
-
-
-# OSGB36 -> WGS84 (the published national 7-param set)
-_OSGB_HELM = (446.448, -125.157, 542.060, 0.1502, 0.2470, 0.8421, -20.4894)
 
 
 def etm_forward(lon, lat, p: EtmParams):
@@ -960,14 +992,11 @@ def etm_inverse_sql(x_expr: str, y_expr: str, p: EtmParams):
 # series family ps_inverse uses), so the SQL mirror needs no iteration.
 
 @dataclass(frozen=True)
-class SwissParams:
-    a: float
-    e2: float
+class SwissParams(_Datum):
     lat0: float
     lon0: float
     fe: float
     fn: float
-    helm: tuple | None
 
 
 _SWISS_LAT0 = 46.0 + 57.0 / 60.0 + 8.66 / 3600.0   # Bern: 46°57'08.66"N
@@ -1068,13 +1097,11 @@ def swiss_inverse_sql(x_expr: str, y_expr: str, p: SwissParams):
 # resamplers stay available, unlike the conic/oblique families).
 
 @dataclass(frozen=True)
-class CeaParams:
+class CeaParams(_Datum):
     lat_ts: float
     lon0: float
     fe: float
     fn: float
-    a: float
-    e2: float
 
 
 def _cea_consts(p: CeaParams):
@@ -1123,14 +1150,12 @@ def cea_inverse_sql(x_expr: str, y_expr: str, p: CeaParams):
 # that the SQL mirror replays term for term.
 
 @dataclass(frozen=True)
-class EqcParams:
+class EqcParams(_Datum):
     lat_ts: float
     lat0: float
     lon0: float
     fe: float
     fn: float
-    a: float
-    e2: float
 
 
 def _eqc_consts(p: EqcParams):
@@ -1175,14 +1200,11 @@ def eqc_inverse_sql(x_expr: str, y_expr: str, p: EqcParams):
 # along any azimuth — the defining property the tests pin.
 
 @dataclass(frozen=True)
-class AeqdParams:
+class AeqdParams(_Datum):
     lat0: float
     lon0: float
     fe: float
     fn: float
-    a: float
-    e2: float
-    helm: tuple | None
 
 
 def aeqd_forward(lon, lat, p: AeqdParams):
@@ -1282,9 +1304,7 @@ def aeqd_inverse_sql(x_expr: str, y_expr: str, p: AeqdParams):
 # series, so the SQL mirror needs no iteration.
 
 @dataclass(frozen=True)
-class HomParams:
-    a: float
-    e2: float
+class HomParams(_Datum):
     latc: float   # latitude of projection center (deg)
     lonc: float   # longitude of projection center (deg)
     alphac: float  # azimuth of the initial line at the center (deg)
@@ -1292,7 +1312,6 @@ class HomParams:
     k0: float
     ec: float     # false easting at the center
     nc: float     # false northing at the center
-    helm: tuple | None
 
 
 def _hom_consts(p: HomParams):
@@ -1413,16 +1432,19 @@ class Family:
     inverse_sql  (x_sql, y_sql, p) -> (lon_sql, lat_sql): the SQL mirror of
                  inverse the DuckDB oracle replays (chain _datum_sql when
                  p.helm is set)
-    separable    x depends only on lon and y only on lat
+    separable    x depends only on lon and y only on lat (without a
+                 datum stage, which mixes the two)
     key          dynamic-key field spec: ((params field, (encode, decode)),
-                 ...) in key order; ``const`` fills params fields the key
-                 omits, and a params ``helm`` rides as an optional suffix
+                 ...) in key order; a params ``helm`` rides as an optional
+                 suffix
     pole         p -> (x, y, lat) of the pole the projection maps to a
                  point, for bbox_to_wgs84's full-longitude case
 
     A params ``helm`` is the datum stage: the entry points (_to_grid and
     _to_wgs84) apply it around the kernels, which never read it. The UTM
-    zones are ETM rows of ``_KNOWN``, not a family of their own.
+    zones are ETM rows of ``_KNOWN``, not a family of their own. A key's
+    fields keep their position and encoding forever (keys are persisted);
+    fields a family gains are appended.
     """
 
     prefix: str | None
@@ -1432,14 +1454,12 @@ class Family:
     inverse_sql: Callable | None = None
     separable: bool = False
     key: tuple = ()
-    const: tuple = ()
     pole: Callable | None = None
 
 
 _F = (repr, float)  # repr round-trips every float64
 _E17 = ("{:.17e}".format, float)  # so does 17-digit E-notation
 _HEMI = (lambda south: "S" if south else "N", lambda v: v == "S")
-_A_FIXED = (("a", 6378137.0),)  # LAEA/AEA/LCC keys omit a
 
 
 def _spec(names: str, **codecs) -> tuple:
@@ -1458,16 +1478,16 @@ WEBMERC = Family(
     separable=True,
 )
 PS = Family("PS", PolarPS, ps_forward, ps_inverse, ps_inverse_sql,
-            key=_spec("lat_ts lon0 fe fn south", south=_HEMI),
+            key=_spec("lat_ts lon0 fe fn south a e2", south=_HEMI),
             pole=lambda p: (p.fe, p.fn, -90.0 if p.south else 90.0))
 LAEA = Family("LAEA", LaeaParams, laea_forward, laea_inverse, laea_inverse_sql,
-              key=_spec("lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+              key=_spec("lat0 lon0 fe fn e2 a", e2=_E17))
 SINU = Family("SINU", SinuParams, sinu_forward, sinu_inverse, sinu_inverse_sql,
               key=_spec("r lon0 fe fn"))
 LCC = Family("LCC", LccParams, lcc_forward, lcc_inverse, lcc_inverse_sql,
-             key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+             key=_spec("lat1 lat2 lat0 lon0 fe fn e2 a", e2=_E17))
 AEA = Family("AEA", AeaParams, aea_forward, aea_inverse, aea_inverse_sql,
-             key=_spec("lat1 lat2 lat0 lon0 fe fn e2", e2=_E17), const=_A_FIXED)
+             key=_spec("lat1 lat2 lat0 lon0 fe fn e2 a", e2=_E17))
 ETM = Family("ETM", EtmParams, etm_forward, etm_inverse, etm_inverse_sql,
              key=_spec("a e2 k0 lat0 lon0 fe fn"))
 SOMERC = Family("SOMERC", SwissParams, swiss_forward, swiss_inverse, swiss_inverse_sql,
@@ -1484,64 +1504,49 @@ EQC = Family("EQC", EqcParams, eqc_forward, eqc_inverse, eqc_inverse_sql,
 _BY_PREFIX = {f.prefix: f for f in (PS, LAEA, SINU, LCC, AEA, ETM, SOMERC, HOM,
                                     CEA, AEQD, EQC)}
 
+# the datum fields of each +ellps, for the registry entries below
+_AE = {name: dict(zip(("a", "e2"), _ellps(name))) for name in _ELLPS}
+
 # the known EPSG entries: code -> (family, params), the EPSG registry values
 _KNOWN: dict = {
     "EPSG:4326": (WGS84, None),
     "EPSG:3857": (WEBMERC, None),
     # WGS 84 / UTM zones 1..60 N (326xx) and S (327xx)
     **{f"EPSG:32{6 + s}{z:02d}": (ETM, EtmParams(
-        a=A_WGS84, e2=E2, k0=K0, lat0=0.0, lon0=-183.0 + 6.0 * z,
-        fe=FE, fn=FN_SOUTH if s else 0.0, helm=None,
-    )) for s in (0, 1) for z in range(1, 61)},
+        k0=K0, lat0=0.0, lon0=-183.0 + 6.0 * z, fe=FE, fn=FN_SOUTH if s else 0.0,
+        **_AE["wgs84"])) for s in (0, 1) for z in range(1, 61)},
     # WGS84 Antarctic Polar Stereographic
-    "EPSG:3031": (PS, PolarPS(lat_ts=-71.0, lon0=0.0, fe=0.0, fn=0.0, south=True)),
+    "EPSG:3031": (PS, PolarPS(lat_ts=-71.0, lon0=0.0, fe=0.0, fn=0.0, south=True,
+                              **_AE["wgs84"])),
     # NSIDC Sea Ice Polar Stereographic North
-    "EPSG:3413": (PS, PolarPS(lat_ts=70.0, lon0=-45.0, fe=0.0, fn=0.0, south=False)),
+    "EPSG:3413": (PS, PolarPS(lat_ts=70.0, lon0=-45.0, fe=0.0, fn=0.0, south=False,
+                              **_AE["wgs84"])),
     # ETRS89-extended / LAEA Europe (the ESA CCI / EEA reference grid)
-    "EPSG:3035": (LAEA, LaeaParams(
-        lat0=52.0, lon0=10.0, fe=4321000.0, fn=3210000.0,
-        a=6378137.0, e2=_E2_GRS80,
-    )),
+    "EPSG:3035": (LAEA, LaeaParams(lat0=52.0, lon0=10.0, fe=4321000.0, fn=3210000.0,
+                                   **_AE["grs80"])),
     # RGF93 / Lambert-93 (GRS80 ellipsoid)
-    "EPSG:2154": (LCC, LccParams(
-        lat1=49.0, lat2=44.0, lat0=46.5, lon0=3.0,
-        fe=700000.0, fn=6600000.0, a=6378137.0, e2=_E2_GRS80,
-    )),
+    "EPSG:2154": (LCC, LccParams(lat1=49.0, lat2=44.0, lat0=46.5, lon0=3.0, fe=700000.0,
+                                 fn=6600000.0, **_AE["grs80"])),
     # NAD83 / Conus Albers (GRS80)
-    "EPSG:5070": (AEA, AeaParams(
-        lat1=29.5, lat2=45.5, lat0=23.0, lon0=-96.0,
-        fe=0.0, fn=0.0, a=6378137.0, e2=_E2_GRS80,
-    )),
+    "EPSG:5070": (AEA, AeaParams(lat1=29.5, lat2=45.5, lat0=23.0, lon0=-96.0, fe=0.0,
+                                 fn=0.0, **_AE["grs80"])),
     # OSGB36 / British National Grid
-    "EPSG:27700": (ETM, EtmParams(
-        a=_ELLPS["airy"][0], e2=_e2_of(*_ELLPS["airy"]), k0=0.9996012717,
-        lat0=49.0, lon0=-2.0, fe=400000.0, fn=-100000.0, helm=_OSGB_HELM,
-    )),
+    "EPSG:27700": (ETM, EtmParams(k0=0.9996012717, lat0=49.0, lon0=-2.0, fe=400000.0,
+                                  fn=-100000.0, helm=_OSGB_HELM, **_AE["airy"])),
     # CH1903+ / LV95 and CH1903 / LV03
-    "EPSG:2056": (SOMERC, SwissParams(
-        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
-        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
-        fe=2600000.0, fn=1200000.0, helm=_SWISS_HELM,
-    )),
-    "EPSG:21781": (SOMERC, SwissParams(
-        a=_ELLPS["bessel"][0], e2=_e2_of(*_ELLPS["bessel"]),
-        lat0=_SWISS_LAT0, lon0=_SWISS_LON0,
-        fe=600000.0, fn=200000.0, helm=_SWISS_HELM,
-    )),
+    "EPSG:2056": (SOMERC, SwissParams(lat0=_SWISS_LAT0, lon0=_SWISS_LON0, fe=2600000.0,
+                                      fn=1200000.0, helm=_SWISS_HELM, **_AE["bessel"])),
+    "EPSG:21781": (SOMERC, SwissParams(lat0=_SWISS_LAT0, lon0=_SWISS_LON0, fe=600000.0,
+                                       fn=200000.0, helm=_SWISS_HELM, **_AE["bessel"])),
     # NSIDC EASE-Grid 2.0 Global
-    "EPSG:6933": (CEA, CeaParams(lat_ts=30.0, lon0=0.0, fe=0.0, fn=0.0,
-                                 a=A_WGS84, e2=E2)),
+    "EPSG:6933": (CEA, CeaParams(lat_ts=30.0, lon0=0.0, fe=0.0, fn=0.0, **_AE["wgs84"])),
     # WGS 84 / World Equidistant Cylindrical
     "EPSG:4087": (EQC, EqcParams(lat_ts=0.0, lat0=0.0, lon0=0.0, fe=0.0, fn=0.0,
-                                 a=A_WGS84, e2=E2)),
+                                 **_AE["wgs84"])),
     # Guam 1963 / Yap Islands (Clarke 1866)
     "EPSG:3295": (AEQD, AeqdParams(
-        lat0=9.0 + 32.0 / 60.0 + 48.15 / 3600.0,
-        lon0=138.0 + 10.0 / 60.0 + 7.48 / 3600.0,
-        fe=40000.0, fn=60000.0,
-        a=_ELLPS["clrk66"][0], e2=_e2_of(*_ELLPS["clrk66"]),
-        helm=None,
-    )),
+        lat0=9.0 + 32.0 / 60.0 + 48.15 / 3600.0, lon0=138.0 + 10.0 / 60.0 + 7.48 / 3600.0,
+        fe=40000.0, fn=60000.0, **_AE["clrk66"])),
     # Timbalai 1948 / RSO Borneo (m), the EPSG worked-example instance:
     # Everest 1830 (1967 definition), Timbalai->WGS84 3-param shift
     "EPSG:29873": (HOM, HomParams(
@@ -1566,9 +1571,8 @@ _PARSED: dict = {}
 
 def _dynamic_key(fam: Family, p) -> str:
     parts = [fam.prefix] + [enc(getattr(p, name)) for name, (enc, _) in fam.key]
-    helm = getattr(p, "helm", None)
-    if helm is not None:
-        parts.append(_helm_key(helm))
+    if p.helm is not None:
+        parts.append(_helm_key(p.helm))
     return ":".join(parts)
 
 
@@ -1576,99 +1580,79 @@ def _parse_key(fam: Family, key: str):
     """Params of a dynamic key; ValueError when it is malformed."""
     parts = key.split(":")
     n = 1 + len(fam.key)
-    has_helm = "helm" in fam.params.__dataclass_fields__
-    if len(parts) < n or (len(parts) > n and not has_helm):
+    if len(parts) < n or len(parts) > n and "helm" not in fam.params.__dataclass_fields__:
         raise ValueError(f"malformed dynamic SRS key {key!r}")
-    kw = dict(fam.const)
-    kw.update((name, dec(v)) for (name, (_, dec)), v in zip(fam.key, parts[1:n]))
-    if has_helm:
+    kw = {name: dec(v) for (name, (_, dec)), v in zip(fam.key, parts[1:n])}
+    if len(parts) > n:
         kw["helm"] = _helm_from_parts(parts, n)
     return fam.params(**kw)
 
 
 def _proj4_params(s: str):
-    """(family, params) of a proj4 string: each proj's kv -> params."""
+    """(family, params) of a proj4 string: each +proj's kv -> params, with
+    the ellipsoid and datum of _proj4_datum. The reference feeds any user
+    SRS string to GDAL (src/view.h:703-711); this resolves the families
+    the kernels implement and raises for the rest."""
     kv = _proj4_kv(s)
     proj = kv.get("proj")
+    a, e2, helm = _proj4_datum(kv, s)
 
     def num(name, default=0.0):
         return float(kv.get(name, default))
 
+    if (kv.get("units", "m") != "m" or num("to_meter", 1.0) != 1.0
+            or kv.get("pm", "greenwich") not in ("greenwich", "0")):
+        raise ValueError(f"only metres on the Greenwich meridian are supported: {s!r}")
+    if proj in ("longlat", "merc", "sinu") and helm is not None:
+        raise ValueError(f"+proj={proj} takes no datum shift: {s!r}")
     if proj == "longlat":
-        return WGS84, None
-    if proj == "merc" and kv.get("a") == "6378137" and kv.get("b") == "6378137":
+        return WGS84, None  # no projection math reads its ellipsoid
+    if proj == "merc":
+        if (a, e2) != (R, 0.0) or any(num(k) for k in ("lat_ts", "lon_0", "x_0", "y_0")) \
+                or num("k", kv.get("k_0", 1.0)) != 1.0:
+            raise ValueError(f"only the spherical web Mercator (EPSG:3857) is supported: {s!r}")
         return WEBMERC, None
-    if proj == "utm" and "zone" in kv:
-        zone = int(kv["zone"])
+    if proj == "sinu":
+        # spherical form (the MODIS grid); the ellipsoidal series is not
+        # implemented
+        if e2 != 0.0:
+            raise ValueError(f"+proj=sinu needs a sphere (+R=, or +a= alone): {s!r}")
+        return SINU, SinuParams(r=a, lon0=num("lon_0"), fe=num("x_0"), fn=num("y_0"))
+    if proj == "utm":
+        # a zone is the tmerc parameter set PROJ derives from it
+        zone = int(str(kv.get("zone", 0)))
         if not 1 <= zone <= 60:
             raise ValueError(f"UTM zone {zone} out of range in {s!r}")
-        return _KNOWN[f"EPSG:32{7 if kv.get('south') else 6}{zone:02d}"]
-    if proj == "stere" and num("lat_0") in (90.0, -90.0):
-        return PS, PolarPS(lat_ts=num("lat_ts", kv["lat_0"]), lon0=num("lon_0"),
-                           fe=num("x_0"), fn=num("y_0"), south=num("lat_0") < 0)
-    if proj in ("laea", "aea", "lcc"):
-        e2 = _E2_GRS80 if kv.get("ellps") == "grs80" else E2
-        if proj == "laea":
-            return LAEA, LaeaParams(lat0=num("lat_0"), lon0=num("lon_0"),
-                                    fe=num("x_0"), fn=num("y_0"),
-                                    a=6378137.0, e2=e2)
+        proj = "tmerc"
+        kv.update(k=K0, lat_0=0.0, lon_0=-183.0 + 6.0 * zone, x_0=FE,
+                  y_0=FN_SOUTH if kv.get("south") else 0.0)
+    k0 = num("k", kv.get("k_0", 1.0))
+    base = dict(lon0=num("lon_0"), fe=num("x_0"), fn=num("y_0"), a=a, e2=e2, helm=helm)
+    if proj == "stere" and num("lat_0") in (90.0, -90.0) and k0 == 1.0:
+        return PS, PolarPS(lat_ts=num("lat_ts", kv["lat_0"]), south=num("lat_0") < 0, **base)
+    if proj == "laea":
+        return LAEA, LaeaParams(lat0=num("lat_0"), **base)
+    if proj in ("aea", "lcc"):
         fam, cls = (AEA, AeaParams) if proj == "aea" else (LCC, LccParams)
         return fam, cls(lat1=num("lat_1"), lat2=num("lat_2", kv.get("lat_1", 0.0)),
-                        lat0=num("lat_0"), lon0=num("lon_0"),
-                        fe=num("x_0"), fn=num("y_0"), a=6378137.0, e2=e2)
-    if proj == "sinu":
-        # spherical form (the MODIS grid): radius from +R= (or a sphere
-        # given as +a=); the ellipsoidal series is not implemented
-        r = kv.get("r") or kv.get("a")
-        if r is None:
-            raise ValueError(f"+proj=sinu needs an explicit +R= sphere in {s!r}")
-        if kv.get("b") not in (None, True) and float(kv["b"]) != float(r):
-            raise ValueError(f"ellipsoidal sinusoidal is unsupported: {s!r}")
-        return SINU, SinuParams(r=float(r), lon0=num("lon_0"),
-                                fe=num("x_0"), fn=num("y_0"))
-    if proj not in ("tmerc", "somerc", "omerc", "aeqd", "eqc", "cea"):
-        raise ValueError(f"unsupported proj4 SRS {s!r}")
-    if proj == "omerc" and kv.get("no_uoff"):
-        raise ValueError("omerc variant A (+no_uoff) is unsupported; "
-                         "variant B (EPSG 9815) only")
-    a, e2 = _proj4_ellps(kv, s)
+                        lat0=num("lat_0"), **base)
     if proj == "eqc":
-        return EQC, EqcParams(lat_ts=num("lat_ts"), lat0=num("lat_0"),
-                              lon0=num("lon_0"), fe=num("x_0"), fn=num("y_0"),
-                              a=a, e2=e2)
+        return EQC, EqcParams(lat_ts=num("lat_ts"), lat0=num("lat_0"), **base)
     if proj == "cea":
-        return CEA, CeaParams(lat_ts=num("lat_ts"), lon0=num("lon_0"),
-                              fe=num("x_0"), fn=num("y_0"), a=a, e2=e2)
-    helm = _proj4_towgs84(kv, s)
+        return CEA, CeaParams(lat_ts=num("lat_ts"), **base)
     if proj == "aeqd":
-        return AEQD, AeqdParams(lat0=num("lat_0"), lon0=num("lon_0"),
-                                fe=num("x_0"), fn=num("y_0"), a=a, e2=e2, helm=helm)
-    k0 = num("k", kv.get("k_0", 1.0))
+        return AEQD, AeqdParams(lat0=num("lat_0"), **base)
     if proj == "tmerc":
-        return ETM, EtmParams(a=a, e2=e2, k0=k0, lat0=num("lat_0"), lon0=num("lon_0"),
-                              fe=num("x_0"), fn=num("y_0"), helm=helm)
-    if proj == "somerc":
-        if k0 != 1.0:
-            raise ValueError(f"+proj=somerc supports k_0=1 only (Swiss): {s!r}")
-        return SOMERC, SwissParams(a=a, e2=e2, lat0=num("lat_0"), lon0=num("lon_0"),
-                                   fe=num("x_0"), fn=num("y_0"), helm=helm)
-    alpha = num("alpha")
-    return HOM, HomParams(a=a, e2=e2, latc=num("lat_0"), lonc=num("lonc"),
-                          alphac=alpha, gammac=num("gamma", alpha), k0=k0,
-                          ec=num("x_0"), nc=num("y_0"), helm=helm)
-
-
-def _from_proj4(s: str) -> str:
-    """Resolve a proj4 string to a supported SRS (the reference feeds any
-    user SRS string to GDAL, src/view.h:703-711; we resolve the families
-    our kernels implement). A known EPSG parameter set canonicalizes to
-    its code; any other parameter set becomes a dynamic key."""
-    hit = _proj4_params(s)
-    code = _CODE_OF.get(hit)
-    if code is None:
-        code = _dynamic_key(*hit)
-        _PARSED[code] = hit
-    return code
+        return ETM, EtmParams(k0=k0, lat0=num("lat_0"), **base)
+    if proj == "somerc" and k0 == 1.0:
+        return SOMERC, SwissParams(lat0=num("lat_0"), **base)
+    if proj == "omerc" and not kv.get("no_uoff"):
+        alpha = num("alpha")
+        return HOM, HomParams(latc=num("lat_0"), lonc=num("lonc"), alphac=alpha,
+                              gammac=num("gamma", alpha), k0=k0, ec=base["fe"],
+                              nc=base["fn"], a=a, e2=e2, helm=helm)
+    raise ValueError(f"unsupported proj4 SRS {s!r} (non-polar or variant A (+k) stere, "
+                     f"somerc with k_0 != 1 and omerc variant A (+no_uoff) included)")
 
 
 _WKT_EPSG_RE = re.compile(
@@ -1682,7 +1666,14 @@ def normalize(srs: str) -> str:
     if raw in _KNOWN or raw in _PARSED:
         return raw
     if raw.startswith("+"):
-        return _from_proj4(raw)
+        # a known EPSG parameter set canonicalizes to its code, any other
+        # becomes a dynamic key
+        hit = _proj4_params(raw)
+        code = _CODE_OF.get(hit)
+        if code is None:
+            code = _dynamic_key(*hit)
+            _PARSED[code] = hit
+        return code
     if "[" in raw:
         # WKT1/WKT2: the LAST EPSG authority entry is the CRS's own code
         hits = _WKT_EPSG_RE.findall(raw)
@@ -1703,15 +1694,14 @@ def normalize(srs: str) -> str:
     if s in _KNOWN:
         return s
     raise ValueError(
-        f"unsupported SRS {srs!r} (supported: EPSG:4326, EPSG:3857, "
-        f"EPSG:326xx/327xx UTM zones, EPSG:3031/3413 polar stereographic, "
-        f"EPSG:3035 LAEA Europe, spherical sinusoidal (the MODIS grid), "
-        f"EPSG:2154 Lambert-93 conformal conic, EPSG:5070 Conus Albers, "
-        f"EPSG:27700 British National Grid (OSGB36 datum), EPSG:2056/21781 "
-        f"Swiss oblique Mercator (CH1903 datum), equivalent proj4/WKT "
-        f"strings, and any polar-stereographic/LAEA/sinusoidal/LCC/Albers/"
-        f"tmerc/somerc/cea/eqc proj4 parameter set incl. +towgs84 datum shifts)"
-    )
+        f"unsupported SRS {srs!r}: give one of the EPSG codes 4326, 3857, "
+        f"326xx/327xx (UTM), 3031, 3413, 3035, 2154, 5070, 27700, 2056, 21781, 6933, 4087, "
+        f"3295 or 29873, its WKT, or a longlat/merc/utm/tmerc/stere/laea/aea/lcc/sinu/"
+        f"somerc/omerc/aeqd/eqc/cea proj4 string. A proj4 string resolves exactly or "
+        f"raises: its ellipsoid is +ellps, +R or +a with +b/+rf/+f (WGS84 if none), its "
+        f"datum +towgs84, one NTv2 .gsb +nadgrids or +datum=WGS84, NAD83 (GRS80, no "
+        f"shift) or OSGB36 (Airy + the OSGB36 Helmert), and it is an EPSG code only when "
+        f"its ellipsoid and datum are that code's")
 
 
 def resolve(srs: str):
@@ -1721,11 +1711,21 @@ def resolve(srs: str):
     return _KNOWN.get(key) or _PARSED[key]
 
 
+def _helm(p):
+    """The datum stage of params ``p`` (None for 4326 and 3857)."""
+    return None if p is None else p.helm
+
+
+def _separable(fam: Family, p) -> bool:
+    return fam.separable and _helm(p) is None
+
+
 def is_separable(srs: str) -> bool:
     """True iff x depends only on lon and y only on lat (1-D axis transforms
     suffice): 4326, 3857, cylindrical equal area (EPSG:6933 EASE-Grid 2.0)
-    and equidistant cylindrical (EPSG:4087 Plate Carrée)."""
-    return resolve(srs)[0].separable
+    and equidistant cylindrical (EPSG:4087 Plate Carrée), each without a
+    datum stage."""
+    return _separable(*resolve(srs))
 
 
 # -- generic transform surface -------------------------------------------------
@@ -1736,10 +1736,9 @@ _BBOX_SAMPLES = 9  # points per rectangle edge in bbox_to_wgs84
 def _to_grid(fam: Family, p, lon, lat):
     """WGS84 (lon, lat) -> grid (x, y): the datum stage, when the params
     carry a helm, then the family's forward kernel."""
-    helm = getattr(p, "helm", None)
-    if helm is not None:
+    if _helm(p) is not None:
         lon, lat = wgs84_to_datum(np.asarray(lon, dtype=np.float64),
-                                  np.asarray(lat, dtype=np.float64), p.a, p.e2, helm)
+                                  np.asarray(lat, dtype=np.float64), p.a, p.e2, p.helm)
     return fam.forward(lon, lat, p)
 
 
@@ -1747,10 +1746,9 @@ def _to_wgs84(fam: Family, p, x, y):
     """Grid (x, y) -> WGS84 (lon, lat): the family's inverse kernel, then
     the datum stage when the params carry a helm."""
     lon, lat = fam.inverse(x, y, p)
-    helm = getattr(p, "helm", None)
-    if helm is None:
+    if _helm(p) is None:
         return lon, lat
-    return datum_to_wgs84(lon, lat, p.a, p.e2, helm)
+    return datum_to_wgs84(lon, lat, p.a, p.e2, p.helm)
 
 
 def _axis_lonlat(fam: Family, p, xs, ys):
@@ -1762,7 +1760,7 @@ def _axis_lonlat(fam: Family, p, xs, ys):
 def axis_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
     """1-D axis vectors in a SEPARABLE ``srs`` -> (lon, lat) vectors."""
     fam, p = resolve(srs)
-    if not fam.separable:
+    if not _separable(fam, p):
         raise ValueError(f"{srs} is not separable; use grid_to_wgs84")
     return _axis_lonlat(fam, p, xs, ys)
 
@@ -1771,7 +1769,7 @@ def grid_to_wgs84(xs: np.ndarray, ys: np.ndarray, srs: str):
     """1-D axis vectors -> 2-D (LON, LAT) grids of shape (len(ys), len(xs)),
     valid for any supported SRS (the non-separable warp path)."""
     fam, p = resolve(srs)
-    if fam.separable:
+    if _separable(fam, p):
         lon, lat = _axis_lonlat(fam, p, xs, ys)
         return np.broadcast_to(lon[None, :], (len(ys), len(xs))), np.broadcast_to(
             lat[:, None], (len(ys), len(xs))
@@ -1802,7 +1800,7 @@ def bbox_to_wgs84(left, right, bottom, top, srs: str):
     exact; the reference transforms the query rect the same way,
     src/image_collection.cpp:1326)."""
     fam, p = resolve(srs)
-    if fam.separable:
+    if _separable(fam, p):
         lon0, lat0 = _to_wgs84(fam, p, left, bottom)
         lon1, lat1 = _to_wgs84(fam, p, right, top)
         return float(lon0), float(lon1), float(lat0), float(lat1)

@@ -154,19 +154,21 @@ def _days_in_month(year: int, month: int) -> int:
     return calendar.monthrange(year, month)[1]
 
 
-def add_duration(t: datetime, dur: Duration, k: int = 1) -> datetime:
+def add_duration(t: datetime, dur: Duration, k: int = 1, day: int = 0) -> datetime:
     """Calendar addition; month/year arithmetic clamps the day-of-month to
     the last valid day of the target month (2020-01-31 + P1M -> 2020-02-29),
     matching the reference's date::year_month_day handling (src/datetime.h
-    operator+) and Spark's timestamp_add(MONTH, ...) used by the JVM path."""
+    operator+) and Spark's timestamp_add(MONTH, ...) used by the JVM path.
+    ``day`` (0: ``t.day``) is the day of month that is clamped."""
     n = dur.n * k
+    day = day or t.day
     if dur.unit == "Y":
         y = t.year + n
-        return t.replace(year=y, day=min(t.day, _days_in_month(y, t.month)))
+        return t.replace(year=y, day=min(day, _days_in_month(y, t.month)))
     if dur.unit == "M":
         m = _months(t) + n
         y, mo = m // 12, m % 12 + 1
-        return t.replace(year=y, month=mo, day=min(t.day, _days_in_month(y, mo)))
+        return t.replace(year=y, month=mo, day=min(day, _days_in_month(y, mo)))
     return t + timedelta(seconds=dur.seconds * k)
 
 
@@ -238,6 +240,10 @@ class CubeView:
     chunk_ny: int = 256
     chunk_nx: int = 256  # default chunk {16,256,256} (src/cube.h:453)
     time_labels: tuple = ()  # non-empty => labeled (irregular) time axis
+    # day of month the Y/M slots clamp from when it is not t0's own: a
+    # crop of a month-end axis starts on a clamped day (2020-01-31 P1M from
+    # slot 1 starts 2020-02-29) and keeps 31 here. 0: t0.day.
+    t_day: int = 0
 
     # -- construction with snapping ------------------------------------------------
 
@@ -329,7 +335,7 @@ class CubeView:
         """Start datetime of time slice ``it``."""
         if self.labeled:
             return self.time_labels[it]
-        return add_duration(self.t0, self.dt, it)
+        return add_duration(self.t0, self.dt, it, day=self.t_day)
 
     def time_index_of(self, t: datetime) -> int:
         """Cube time coordinate of datetime ``t`` (may be out of [0, nt)).
@@ -359,7 +365,7 @@ class CubeView:
     def t_end(self) -> datetime:
         if self.labeled:
             return self.time_labels[-1]
-        return add_duration(self.t0, self.dt, self.nt)
+        return self.datetime_at(self.nt)
 
     # map coords -> cube coords (src/view.h:632-655); y flips: iy counts down
     def ix_of(self, x: float) -> int:
@@ -383,7 +389,21 @@ class CubeView:
 
     def with_time(self, t0: datetime, nt: int, dt: Duration | None = None,
                   time_labels: tuple = ()) -> "CubeView":
-        return replace(self, t0=t0, nt=nt, dt=dt or self.dt, time_labels=time_labels)
+        dt = dt or self.dt
+        day = self.t_day if dt.unit in ("Y", "M") and not time_labels else 0
+        return replace(self, t0=t0, nt=nt, dt=dt, time_labels=time_labels, t_day=day)
+
+    def time_slice(self, it0: int, it1: int) -> "CubeView":
+        """The axis of slots [it0, it1): each slot keeps its time. A labeled
+        axis keeps its labels; a regular one restarts at slot it0 with the
+        slot rule unchanged (Y/M slots clamp from the same day of month,
+        so slot times and calendar buckets both stay)."""
+        t0 = self.datetime_at(it0)
+        if self.labeled:
+            return replace(self, t0=t0, nt=it1 - it0, time_labels=self.time_labels[it0:it1])
+        day = self.t_day or self.t0.day
+        keep = self.dt.unit in ("Y", "M") and day != t0.day
+        return replace(self, t0=t0, nt=it1 - it0, t_day=day if keep else 0)
 
     # -- (de)serialization (analog of src/view.h:741-760) --------------------------
 
@@ -399,6 +419,8 @@ class CubeView:
         }
         if self.labeled:
             d["time"]["labels"] = [t.isoformat() for t in self.time_labels]
+        if self.t_day:
+            d["time"]["day"] = self.t_day
         return json.dumps(d)
 
     @staticmethod
@@ -413,5 +435,5 @@ class CubeView:
             dt=Duration.parse(tm["dt"]), aggregation=d["aggregation"],
             resampling=d["resampling"], chunk_nt=d["chunk_size"][0],
             chunk_ny=d["chunk_size"][1], chunk_nx=d["chunk_size"][2],
-            time_labels=labels,
+            time_labels=labels, t_day=tm.get("day", 0),
         )

@@ -88,20 +88,50 @@ def _corrupt(path):
                                   pa.array(b1, pa.float64())), path)
 
 
-@pytest.mark.parametrize("fault", ["deleted", "corrupted"])
+def _garble(path):
+    """Overwrite the start of the first data page with junk: the footer
+    still parses, the page does not."""
+    with open(path, "r+b") as f:
+        f.seek(4)  # past the PAR1 magic
+        f.write(b"\xff" * 64)
+
+
+@pytest.mark.parametrize("fault", ["deleted", "corrupted", "garbled"])
 def test_resume_reruns_damaged_part(spark, tmp_path, run_inputs, fault):
-    """A committed part whose data file is gone or no longer matches its
-    lineage digest runs again; the resumed table equals an uninterrupted
-    run row for row."""
+    """A committed part whose data file is gone, no longer matches its
+    lineage digest or cannot be read runs again; the resumed table equals
+    an uninterrupted run row for row."""
     v, imgs, want = run_inputs
     sink = str(tmp_path / "sink")
     t = IceTable(sink)
     ckpt.run_partitioned(imgs, v, sink, n_parts=4)
     f = _part_files(t, 1)[0]
-    os.remove(f) if fault == "deleted" else _corrupt(f)
-    m = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    {"deleted": os.remove, "corrupted": _corrupt, "garbled": _garble}[fault](f)
+    if fault == "garbled":  # the rerun says why
+        with pytest.warns(RuntimeWarning, match="part 1 .* unreadable.*FAILED_READ_FILE"):
+            m = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+    else:
+        m = ckpt.run_partitioned(imgs, v, sink, n_parts=4)
     assert m["parts_run"] == 1 and m["parts_skipped"] == 3
     pd.testing.assert_frame_equal(_rows(t.read(spark)), want)
+
+
+def test_resume_raises_other_read_errors(spark, tmp_path, monkeypatch, run_inputs):
+    """An error reading a committed part that is not a file-read failure (a
+    cancelled job, a lost executor) stops the resume; it does not re-run
+    the part."""
+    from pyspark.errors import PySparkException
+
+    v, imgs, _ = run_inputs
+    sink = str(tmp_path / "sink")
+    ckpt.run_partitioned(imgs, v, sink, n_parts=4)
+
+    def cancelled(df):
+        raise PySparkException("Job 7 cancelled because SparkContext was shut down")
+
+    monkeypatch.setattr(ckpt, "_stats", cancelled)
+    with pytest.raises(PySparkException, match="cancelled"):
+        ckpt.run_partitioned(imgs, v, sink, n_parts=4)
 
 
 @pytest.mark.parametrize("crash", ["before_commit", "mid_commit"])

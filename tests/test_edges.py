@@ -30,6 +30,55 @@ def test_crop_out_of_range_is_empty(spark):
     assert c.crop(ix_range=(v.nx, v.nx + 2)).df.count() == 0
 
 
+def test_crop_keeps_month_end_slot_times(spark):
+    """Cropping a t0 = Jan 31 P1M axis at slot 1 keeps the uncropped slot
+    rule: every slot time (Python and SQL), every chunk's t_end and every
+    calendar bucket. A restart at Feb 29 that clamps from day 29 would put
+    slot 1 on Mar 29 instead of Mar 31."""
+    from datetime import datetime
+
+    from gdalcubes_cpp_spark import synth
+    from gdalcubes_cpp_spark.grid import ChunkGrid
+    from gdalcubes_cpp_spark.operators.build import build_cube
+
+    v = CubeView.create(left=-12, right=-8, bottom=18, top=22, nx=20, ny=20,
+                        t0="2020-01-31", nt=11, dt="P1M", aggregation="mean",
+                        chunk_size=(2, 10, 10))
+    c = empty_cube(spark, v, bands=("B1",))
+    cr = c.crop(it_range=(1, 11)).view
+    slots = [v.datetime_at(k) for k in range(1, 11)]
+    assert not cr.labeled and cr.datetime_at(1) == datetime(2020, 3, 31)
+    assert [cr.datetime_at(k) for k in range(cr.nt)] == slots
+    assert cr.t_end == v.t_end and CubeView.from_json(cr.to_json()) == cr
+    g = ChunkGrid(cr)
+    sql = spark.range(cr.nt).selectExpr(f"{g.time_at_sql('id')} AS t").toPandas()
+    assert [t.to_pydatetime() for t in sql["t"]] == slots
+    assert [g.chunk_bounds(g.chunk_id(ct, 0, 0))["t_end"] for ct in range(g.nct)] == \
+        [v.datetime_at(k) for k in range(3, 12, 2)]
+    # calendar buckets: mid-March is cropped slot 1, as it is uncropped slot 2
+    assert cr.time_index_of(datetime(2020, 3, 15)) == 1
+    assert c.crop(it_range=(1, 11)).slice_time("2020-03-15").view.t0 == datetime(2020, 3, 31)
+    # a build on the cropped view keeps the images that are not at slot
+    # times (here 6 h after one), as the crop of the uncropped build does
+    at = ", ".join(f"TIMESTAMP '{t.isoformat(' ')}' + INTERVAL 6 HOURS" for t in slots)
+    imgs = synth.images_df(spark, 150).withColumn(
+        "ts", F.expr(f"element_at(array({at}), CAST(pmod(hash(image_id), 10) + 1 AS INT))"))
+    cols = ["it", "iy", "ix", "B1", "B2"]
+
+    def rows(df):
+        return df.select(*cols).toPandas().sort_values(cols[:3]).reset_index(drop=True)
+
+    want = rows(build_cube(imgs, v).crop(it_range=(1, 11)).df)
+    assert len(want) > 0
+    pd.testing.assert_frame_equal(rows(build_cube(imgs, cr).df), want)
+    # a crop whose restart clamps from its own day stays as it was
+    assert c.crop(it_range=(0, 11)).view == v
+    v1 = CubeView.create(left=0, right=8, bottom=0, top=8, nx=8, ny=8,
+                         t0="2020-01-01", nt=6, dt="P1M")
+    cr1 = empty_cube(spark, v1, bands=("B1",)).crop(it_range=(1, 6)).view
+    assert (cr1.t0, cr1.t_day) == (datetime(2020, 2, 1), 0)
+
+
 def test_labeled_axis_reduce_which(spark):
     """which_min on a labeled (irregular) time axis must use the label
     datetimes for the numeric output."""

@@ -15,13 +15,14 @@ from gdalcubes_cpp_spark import srs
 # one proj4 string per dynamic family -> its exact key
 GOLDEN = [
     ("+proj=stere +lat_0=90 +lat_ts=75 +lon_0=-30 +x_0=1000 +y_0=-2000",
-     "PS:75.0:-30.0:1000.0:-2000.0:N"),
+     "PS:75.0:-30.0:1000.0:-2000.0:N:6378137.0:0.0066943799901413165"),
     ("+proj=laea +lat_0=45 +lon_0=-100 +x_0=10 +y_0=20",
-     "LAEA:45.0:-100.0:10.0:20.0:6.69437999014131646e-03"),
+     "LAEA:45.0:-100.0:10.0:20.0:6.69437999014131646e-03:6378137.0"),
     ("+proj=aea +lat_1=20 +lat_2=60 +lat_0=40 +lon_0=-96 +ellps=grs80",
-     "AEA:20.0:60.0:40.0:-96.0:0.0:0.0:6.69438002290078694e-03"),
+     "AEA:20.0:60.0:40.0:-96.0:0.0:0.0:6.69438002290078694e-03:6378137.0"),
     ("+proj=lcc +lat_1=33 +lat_2=45 +lat_0=39 +lon_0=-96 +x_0=100 +y_0=50",
-     "LCC:33.0:45.0:39.0:-96.0:100.0:50.0:6.69437999014131646e-03"),
+     "LCC:33.0:45.0:39.0:-96.0:100.0:50.0:6.69437999014131646e-03"
+     ":6378137.0"),
     ("+proj=sinu +lon_0=20 +R=6371000 +x_0=5 +y_0=7",
      "SINU:6371000.0:20.0:5.0:7.0"),
     ("+proj=tmerc +lat_0=0 +lon_0=9 +k=0.9996 +x_0=500000 +ellps=intl "
@@ -45,7 +46,7 @@ GOLDEN = [
 ]
 
 # parameter fields each family writes before the optional datum suffix
-N_FIELDS = {"PS": 5, "LAEA": 5, "AEA": 7, "LCC": 7, "SINU": 4, "ETM": 7,
+N_FIELDS = {"PS": 7, "LAEA": 6, "AEA": 8, "LCC": 8, "SINU": 4, "ETM": 7,
             "SOMERC": 6, "HOM": 9, "CEA": 6, "AEQD": 6, "EQC": 7}
 
 
@@ -80,6 +81,29 @@ def _probe(fam, p):
     y0 = getattr(p, "fn", getattr(p, "nc", 0.0))
     g = np.linspace(-5000.0, 5000.0, 5)
     return x0 + 1000.0 + g, y0 + 2000.0 + g[::-1]
+
+
+# the key of each family whose key gained fields, in its earlier form:
+# too short now, so it raises instead of parsing into other parameters
+PARENT_FORM = ["PS:75.0:-30.0:1000.0:-2000.0:N",
+               "LAEA:45.0:-100.0:10.0:20.0:6.69437999014131646e-03",
+               "AEA:20.0:60.0:40.0:-96.0:0.0:0.0:6.69438002290078694e-03",
+               "LCC:33.0:45.0:39.0:-96.0:100.0:50.0:6.69437999014131646e-03"]
+
+
+@pytest.mark.parametrize("key", PARENT_FORM, ids=[k.split(":")[0] for k in PARENT_FORM])
+def test_parent_form_key_raises(key):
+    with pytest.raises(ValueError, match="malformed"):
+        srs.normalize(key)
+
+
+def test_helm_suffix_only_where_params_have_a_datum():
+    """A sphere (SINU) takes no datum suffix, and a Helmert suffix has
+    exactly 7 fields."""
+    for bad in ("SINU:6371000.0:20.0:5.0:7.0:1.0:2.0:3.0:0.0:0.0:0.0:0.0",
+                "CEA:20.0:5.0:0.0:0.0:6378388.0:0.006722670022333321:1.0:2.0:3.0"):
+        with pytest.raises(ValueError, match="malformed"):
+            srs.normalize(bad)
 
 
 @pytest.mark.parametrize("proj4,key", GOLDEN, ids=_ids(GOLDEN))

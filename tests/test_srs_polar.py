@@ -19,8 +19,9 @@ def ps_inverse_iter(x, y, p):
     """Independent inverse: fixed-point iteration on the isometric latitude
     (Snyder eq. 7-9 / 3-1), 30 rounds — a different algorithm than the
     conformal-latitude series in srs.ps_inverse."""
-    e = math.sqrt(srs.E2)
-    s = srs._CPOL / (2.0 * srs.A_WGS84 * srs._ps_k0(p))
+    e = math.sqrt(p.e2)
+    c = math.sqrt((1.0 + e) ** (1.0 + e) * (1.0 - e) ** (1.0 - e))
+    s = c / (2.0 * p.a * srs._ps_consts(p)[2])
     dx, dy = np.asarray(x, float) - p.fe, np.asarray(y, float) - p.fn
     rho = np.sqrt(dx * dx + dy * dy)
     tp = rho * s
@@ -87,7 +88,7 @@ def test_ps_pole_and_axes_anchors():
     assert abs(float(x)) < 1e-6 and float(y) > 0
     x, y = srs.ps_forward(90.0, -71.0, p)  # due grid-east
     assert float(x) > 0 and abs(float(y)) < 1e-6
-    assert abs(srs._ps_k0(p) - 0.972769) < 1e-6  # published implied k0
+    assert abs(srs._ps_consts(p)[2] - 0.972769) < 1e-6  # published implied k0
 
 
 def test_ps_sql_mirror_duckdb():
