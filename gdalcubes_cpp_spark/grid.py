@@ -90,11 +90,39 @@ class ChunkGrid:
         (t0, t1), (y0, y1), (x0, x1) = self.chunk_limits(cid)
         return (t1 - t0, y1 - y0, x1 - x0)
 
+    def _bucket_base(self):
+        """00:00 on the 1st of slot 0's first month (of January on a Y axis)
+        on a Y/M axis, else None. Y/M slots bucket images by calendar year
+        and month (slot_sql), so a chunk's image window runs over the whole
+        months of its slots, not from its first slot's time, which keeps
+        t0's day (clamped) and time of day."""
+        v = self.view
+        if v.labeled or v.dt.unit not in ("Y", "M"):
+            return None
+        return v.t0.replace(month=1 if v.dt.unit == "Y" else v.t0.month, day=1,
+                            hour=0, minute=0, second=0, microsecond=0)
+
+    def _t_start(self, it0: int):
+        """t_start of a chunk whose slots start at ``it0``: the start of slot
+        it0's calendar bucket on a Y/M axis, else the slot time."""
+        base = self._bucket_base()
+        return self.view.datetime_at(it0) if base is None else add_duration(base, self.view.dt, it0)
+
     def _t_end(self, it1: int):
         """t_end of a chunk whose slots end at ``it1``: the last label on a
-        labeled axis, else the start of the slot after the last."""
+        labeled axis, else the start of the slot after the last (its
+        calendar bucket's on a Y/M axis)."""
         v = self.view
-        return v.time_labels[it1 - 1] if v.labeled else v.datetime_at(it1)
+        return v.time_labels[it1 - 1] if v.labeled else self._t_start(it1)
+
+    def time_window(self, it0: int, it1: int) -> tuple:
+        """[t_start, t_end] of the slots [it0, it1); t_end None (open) past
+        year 9999."""
+        try:
+            t_end = self._t_end(it1)
+        except (OverflowError, ValueError):
+            t_end = None
+        return self._t_start(it0), t_end
 
     def chunk_bounds(self, cid: int) -> dict:
         """Map-space + time bounds of a chunk (src/cube.h:676-694; y flipped)."""
@@ -105,7 +133,7 @@ class ChunkGrid:
             "right": v.left + x1 * v.dx,
             "top": v.top - y0 * v.dy,       # row 0 is the TOP of the cube
             "bottom": v.top - y1 * v.dy,
-            "t_start": v.datetime_at(t0),
+            "t_start": self._t_start(t0),
             "t_end": self._t_end(t1),
             "it0": t0, "it1": t1, "iy0": y0, "iy1": y1, "ix0": x0, "ix1": x1,
         }
@@ -124,13 +152,10 @@ class ChunkGrid:
             cx0, cx1 = 0, self.ncx - 1
         (it0, _), (iy0, _), (ix0, _) = self.chunk_limits(self.chunk_id(ct0, cy0, cx0))
         (_, it1), (_, iy1), (_, ix1) = self.chunk_limits(self.chunk_id(ct1, cy1, cx1))
-        try:
-            t_end = self._t_end(it1)
-        except (OverflowError, ValueError):
-            t_end = None
+        t_start, t_end = self.time_window(it0, it1)
         return {"left": v.left + ix0 * v.dx, "right": v.left + ix1 * v.dx,
                 "bottom": v.top - iy1 * v.dy, "top": v.top - iy0 * v.dy,
-                "t_start": v.datetime_at(it0), "t_end": t_end}
+                "t_start": t_start, "t_end": t_end}
 
     def chunk_ids(self):
         return range(self.count)
@@ -152,11 +177,9 @@ class ChunkGrid:
         hi = np.empty(v.nt, "datetime64[us]")
         for ct in range(self.nct):
             (it0, it1), _, _ = self.chunk_limits(self.chunk_id(ct, 0, 0))
-            lo[it0:it1] = v.datetime_at(it0)
-            try:
-                hi[it0:it1] = self._t_end(it1)
-            except (OverflowError, ValueError):
-                hi[it0:it1] = np.datetime64("9999-12-31T23:59:59.999999")
+            t_start, t_end = self.time_window(it0, it1)
+            lo[it0:it1] = t_start
+            hi[it0:it1] = np.datetime64("9999-12-31T23:59:59.999999") if t_end is None else t_end
         return lo, hi
 
     def chunk_axis_view(self, time: bool, y: bool, x: bool) -> CubeView:
@@ -205,8 +228,9 @@ class ChunkGrid:
             "right": f"{left} + {lim['ix1']} * {dx}",
             "top": f"{top} - {lim['iy0']} * {dy}",
             "bottom": f"{top} - {lim['iy1']} * {dy}",
-            "t_start": self.time_at_sql(lim["it0"]),
-            "t_end": self.time_at_sql(lim["it1"] + (" - 1" if v.labeled else "")),
+            "t_start": self.bucket_at_sql(lim["it0"]),
+            "t_end": (self.time_at_sql(f"{lim['it1']} - 1") if v.labeled
+                      else self.bucket_at_sql(lim["it1"])),
             **lim,
         }
 
@@ -239,6 +263,16 @@ class ChunkGrid:
                 return f"timestampadd(MONTH, CAST(({it}) * {months} + 1 AS INT), {_ts(base)})"
             return f"timestampadd(MONTH, CAST(({it}) * {months} AS INT), {_ts(v.t0)})"
         return f"timestampadd(SECOND, CAST(({it}) * {v.dt.seconds} AS BIGINT), {_ts(v.t0)})"
+
+    def bucket_at_sql(self, it: str) -> str:
+        """TIMESTAMP start of slot ``it``'s calendar bucket on a Y/M axis
+        (_t_start), else time_at_sql. A Y/M axis whose t0 is 00:00 on the
+        1st (of January on a Y axis) gets time_at_sql's text."""
+        v, base = self.view, self._bucket_base()
+        if base is None:
+            return self.time_at_sql(it)
+        months = v.dt.n * (12 if v.dt.unit == "Y" else 1)
+        return f"timestampadd(MONTH, CAST(({it}) * {months} AS INT), {_ts(base)})"
 
     def slot_sql(self, ts: str) -> str:
         """INT slot of the timestamp column ``ts``: on a labeled axis the

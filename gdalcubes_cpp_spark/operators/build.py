@@ -40,7 +40,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .. import codecs
 from ..grid import ChunkGrid
-from ..partition import spread
+from ..partition import for_scan
 from ..srs import _flit
 from ..view import CubeView
 from .stjoin import st_join
@@ -836,9 +836,10 @@ def _view_window(view: CubeView, bounds: dict | None = None) -> str | None:
 
     Space: the footprint meets the view extent in lon/lat (cell centers sit
     half a cell inside the extent, so the non-strict bounds keep every image
-    the scan's strict center test accepts). Time: [t0, t0 + nt steps) —
-    an image lands in a slot only at or after its chunk's t_start, and
-    slot nt-1 ends at the latest at t0 + nt steps. ``bounds``
+    the scan's strict center test accepts). Time: [t_start, t_end) of all
+    the view's slots (grid.time_window: t0 to t0 + nt steps, widened to
+    whole calendar months on a Y/M axis) — an image lands in a slot only
+    inside its chunk's window, and no chunk's reaches past slot nt-1. ``bounds``
     (grid.block_bounds) narrows both to a block of chunks: its map box and
     [t_start, t_end), the rows that can reach the block's cells. Literals
     are cast in the session time zone, the zone the Arrow hand-off renders
@@ -851,11 +852,8 @@ def _view_window(view: CubeView, bounds: dict | None = None) -> str | None:
     if view.labeled or not _srs.is_separable(view.srs):
         return None
     if bounds is None:
-        box, lo = (view.left, view.right, view.bottom, view.top), view.t0
-        try:
-            hi = view.t_end
-        except (OverflowError, ValueError):  # past year 9999: no upper bound
-            hi = None
+        box = (view.left, view.right, view.bottom, view.top)
+        lo, hi = ChunkGrid(view).time_window(0, view.nt)
     else:
         box = (bounds["left"], bounds["right"], bounds["bottom"], bounds["top"])
         lo, hi = bounds["t_start"], bounds["t_end"]
@@ -880,11 +878,13 @@ def scan_cells(
     → warp → mask) where each image is read and emits long
     (it, iy, ix[, image_id], v_<band>...) rows, one per covered cell. Image
     bytes never cross an exchange, and the codecs read them straight from
-    the Arrow batch's buffers. The scan is Python work, so a collection
-    planned with fewer partitions than the session has task slots is first
-    widened by partition.spread, which decides on ``images`` itself (the
-    column selection and view window are narrow) and so probes a collection
-    once however many cubes are built from it."""
+    the Arrow batch's buffers. partition.for_scan sets the scan's width
+    from ``images`` itself (the column selection and view window are
+    narrow), so it probes a collection once however many cubes are built
+    from it: a collection planned with fewer partitions than the session
+    has task slots is widened (the scan is Python work), and one whose rows
+    all sit in one planned partition is coalesced to it (one Python task,
+    and the cell aggregate joins the scan's stage)."""
     # w/h are NOT selected: the decoded array's own shape drives the warp,
     # so the columns would only widen the scan and the Arrow transfer
     cols = ["ts", "left", "right", "bottom", "top"]
@@ -914,11 +914,7 @@ def scan_cells(
     window = _view_window(view)
     if window is not None:
         src = src.where(window)
-    # a small metadata-derived input (one tiny parquet file -> 1-3 scan
-    # tasks) would serialize the whole decode/warp stage: partition.spread
-    # widens it; large inputs keep scan locality and the no-bytes-shuffle
-    # property (they arrive with many partitions)
-    return spread(src, images).mapInArrow(scan, schema=schema)
+    return for_scan(src, images).mapInArrow(scan, schema=schema)
 
 
 def _mask_hits(mask: BandMask, v: str) -> str:

@@ -7,9 +7,7 @@ magnitude more kernel work than bytes (a 7 MB single-row-group parquet of
 encoded images expands to thousands of decode-and-warp calls). Parquet
 scans cannot split inside a row group: session.py's 16m/1m split settings
 plan a one-row-group file as several byte-range partitions, but one of them
-reads every row — the small-file / row-group-granularity trap. ``spread``
-counts planned partitions, not the ones holding rows, so it widens such a
-file only when it plans fewer partitions than the session has task slots.
+reads every row — the small-file / row-group-granularity trap.
 
 The widen decision is made once per image collection: callers pass the
 collection DataFrame as ``source`` and spread probes it instead of the
@@ -18,6 +16,27 @@ count is the same, and PySpark keeps a DataFrame's ``.rdd``, so the second
 cube built from one collection costs no re-plan. The decision differs from
 probing the filtered frame only where the window prunes partition
 directories: a table partitioned on ``ts`` or on a footprint column.
+
+``for_scan`` is the width of the cube scan (operators/build.py:scan_cells):
+``spread``, except that a collection planned with no more partitions than
+the session has task slots whose rows all sit in ONE of them is coalesced
+to that one partition. One task holds every scan row either way, so no
+parallelism is lost and the partial aggregate sees the rows in the same
+order; but the scan runs as one Python task instead of one per planned
+partition (the others empty), and the cell aggregate's ClusteredDistribution
+is met by the single partition, so Catalyst plans it in the scan's stage
+with no Exchange. On a 4-core box an exchange costs ~50-60 ms whatever it
+carries: a 130-row two-stage query took 93 ms against 30 ms for one stage.
+The probe, ``row_partitions``, reads scan metadata (the parquet row groups
+each planned file split reads) once per collection object.
+
+``spread`` counts planned partitions, not the ones holding rows, so it
+widens a one-row-group file only when it plans fewer partitions than the
+session has task slots. That is on purpose: widening a one-partition scan
+(a round-robin ``repartition(4)`` of the ``small_cubes`` table, one 7 MB
+row group) puts an exchange of image bytes in front of at most 74 decodes,
+and took a mean cube from 0.161 to 0.196 s (0 wins in 12 interleaved
+pairs at 4 cores).
 
 ``by_group`` sizes the hash exchange in front of a grouped-map kernel whose
 every group (a chunk) is a unit of Python work (operators/streamexec.py).
@@ -29,7 +48,13 @@ file count of a table write, and the width of the synthetic generator.
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import DataFrame
+
+# collection DataFrame -> whether its rows sit in at most one planned
+# partition: for_scan's probe result, once per collection object
+_ONE_PARTITION: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def spread(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
@@ -52,10 +77,97 @@ def spread(df: DataFrame, source: DataFrame | None = None) -> DataFrame:
         # no .rdd on a streaming frame; micro-batch sources size their own
         # partitions (maxFilesPerTrigger etc.) — the guard is batch-only
         return df
-    target = max(1, df.sparkSession.sparkContext.defaultParallelism)
+    target = _slots(df)
     if (df if source is None else source).rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)
+
+
+def _slots(df: DataFrame) -> int:
+    """The session's task slots (its default parallelism)."""
+    return max(1, df.sparkSession.sparkContext.defaultParallelism)
+
+
+def for_scan(df: DataFrame, source: DataFrame) -> DataFrame:
+    """The cube scan's width: ``spread(df, source)``, except that ``df`` is
+    coalesced to one partition when spread leaves it as it is, ``source``
+    plans no more partitions than the session has task slots, and
+    row_partitions finds all of ``source``'s rows in at most one of them
+    (``df`` is narrow from ``source``, so its rows sit there too). The
+    probe runs once per ``source`` object."""
+    out = spread(df, source)
+    if out is not df or df.isStreaming:
+        return out
+    if source.rdd.getNumPartitions() > _slots(df):
+        return df
+    one = _ONE_PARTITION.get(source)
+    if one is None:
+        n = row_partitions(source)
+        one = _ONE_PARTITION[source] = n is not None and n <= 1
+    return df.coalesce(1) if one else df
+
+
+def row_partitions(df: DataFrame) -> int | None:
+    """How many of ``df``'s planned partitions hold rows, from scan
+    metadata and without a job: ``df`` must be narrow steps (no Exchange, no
+    Coalesce) over one parquet file scan on the local file system, whose
+    planned partitions are byte ranges of its files. A range reads the row
+    groups whose midpoint it holds — parquet-mr's split rule: midpoint =
+    the first column chunk's first page offset + half the row group's
+    compressed size. Row groups with no rows count for nothing. None for
+    any other plan. Filters pushed into the scan may skip row groups, so
+    the count is an upper bound of the partitions a run fills."""
+    node = df._jdf.queryExecution().executedPlan()
+    while node.children().size() == 1:
+        if "Exchange" in node.nodeName() or node.nodeName() == "Coalesce":
+            return None
+        node = node.children().head()
+    if (node.getClass().getSimpleName() != "FileSourceScanExec"
+            or node.relation().fileFormat().toString() != "Parquet"):
+        return None
+    mids: dict = {}
+    held = 0
+    for part in node.inputRDD().partitions():
+        for f in part.files():
+            path = f.filePath().toString()
+            if path not in mids:
+                mids[path] = _row_group_midpoints(path)
+            if mids[path] is None:
+                return None
+            lo = f.start()
+            if any(lo <= m < lo + f.length() for m in mids[path]):
+                held += 1
+                break
+    return held
+
+
+def _row_group_midpoints(uri: str) -> list | None:
+    """The split-rule midpoints of the row groups with rows in the parquet
+    file ``uri`` (a ``file:`` URI), or None where its footer cannot be read
+    on the driver."""
+    from urllib.parse import unquote, urlparse
+
+    import pyarrow.parquet as pq
+
+    u = urlparse(uri)
+    if u.scheme not in ("", "file"):
+        return None
+    try:
+        md = pq.ParquetFile(unquote(u.path)).metadata
+    except (OSError, ValueError):
+        return None
+    out = []
+    for i in range(md.num_row_groups):
+        rg = md.row_group(i)
+        if rg.num_rows == 0:
+            continue
+        c = rg.column(0)
+        start = c.data_page_offset
+        if c.has_dictionary_page and c.dictionary_page_offset < start:
+            start = c.dictionary_page_offset
+        size = sum(rg.column(j).total_compressed_size for j in range(rg.num_columns))
+        out.append(start + size // 2)
+    return out
 
 
 def by_group(df: DataFrame, n_groups: int, *keys) -> DataFrame:

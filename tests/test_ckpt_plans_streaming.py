@@ -219,14 +219,15 @@ def test_parts_decode_each_image_once(spark, tmp_path, run_inputs):
 
 def test_block_bounds_month_end_axis():
     """On a t0 = Jan 31 P1M axis a block's time bounds are its chunks'
-    [t_start, t_end]: chunk 1 ends Mar 31, not at Feb 29 + 1 month."""
+    [t_start, t_end], the calendar months of their slots: chunk 1 (slot 1,
+    February) runs from Feb 1 to Mar 1, not from Feb 29 to Mar 31."""
     from datetime import datetime
 
     v = view_small(t0="2020-01-31", t1="2020-12-31", chunk_size=(1, 20, 20))
     g = ChunkGrid(v)
     per = g.ncy * g.ncx
     b = g.block_bounds(per, 2 * per)
-    assert (b["t_start"], b["t_end"]) == (datetime(2020, 2, 29), datetime(2020, 3, 31))
+    assert (b["t_start"], b["t_end"]) == (datetime(2020, 2, 1), datetime(2020, 3, 1))
     assert (b["left"], b["right"], b["bottom"], b["top"]) == (v.left, v.right, v.bottom, v.top)
     # one chunk row, then one chunk
     assert g.block_bounds(per, per + g.ncx)["bottom"] == g.chunk_bounds(per)["bottom"]

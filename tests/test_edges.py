@@ -53,8 +53,9 @@ def test_crop_keeps_month_end_slot_times(spark):
     g = ChunkGrid(cr)
     sql = spark.range(cr.nt).selectExpr(f"{g.time_at_sql('id')} AS t").toPandas()
     assert [t.to_pydatetime() for t in sql["t"]] == slots
+    # a chunk's window ends where the calendar month of uncropped slot k starts
     assert [g.chunk_bounds(g.chunk_id(ct, 0, 0))["t_end"] for ct in range(g.nct)] == \
-        [v.datetime_at(k) for k in range(3, 12, 2)]
+        [datetime(2020, k + 1, 1) for k in range(3, 12, 2)]
     # calendar buckets: mid-March is cropped slot 1, as it is uncropped slot 2
     assert cr.time_index_of(datetime(2020, 3, 15)) == 1
     assert c.crop(it_range=(1, 11)).slice_time("2020-03-15").view.t0 == datetime(2020, 3, 31)
@@ -77,6 +78,47 @@ def test_crop_keeps_month_end_slot_times(spark):
                          t0="2020-01-01", nt=6, dt="P1M")
     cr1 = empty_cube(spark, v1, bands=("B1",)).crop(it_range=(1, 6)).view
     assert (cr1.t0, cr1.t_day) == (datetime(2020, 2, 1), 0)
+
+
+def test_month_end_axis_chunk_windows(spark):
+    """A t0 = Jan 31 P1M axis buckets images by calendar month, so its
+    cells, count slices and st_join pairs are those of the t0 = Jan 1 axis
+    over the same months, whatever chunk_nt is: a chunk's (and a part
+    block's) image window is the calendar months of its slots, not [the
+    clamped day of its first slot, ...), which dropped the images dated
+    before that day (cells came out only in the odd slots at chunk_nt=2)."""
+    from datetime import datetime
+
+    from gdalcubes_cpp_spark import synth
+    from gdalcubes_cpp_spark.grid import ChunkGrid
+    from gdalcubes_cpp_spark.operators.build import build_cube
+    from gdalcubes_cpp_spark.operators.stjoin import assignment
+
+    imgs = synth.images_df(spark, 150).cache()
+
+    def view(t0, chunk_nt, agg):
+        return CubeView.create(left=-12, right=-8, bottom=18, top=22, nx=80, ny=80,
+                               t0=t0, nt=11, dt="P1M", aggregation=agg,
+                               chunk_size=(chunk_nt, 40, 40))
+
+    def pairs(v):
+        return sorted((r["image_id"], r["chunk_id"])
+                      for r in assignment(imgs, ChunkGrid(v)).collect())
+
+    want = {agg: build_cube(imgs, view("2020-01-01", 2, agg)).collect_dense()
+            for agg in ("mean", "count_images")}
+    assert all(np.isfinite(want["mean"][0, it]).any() for it in range(11))
+    for chunk_nt in (1, 2, 3):
+        for agg, w in want.items():
+            got = build_cube(imgs, view("2020-01-31", chunk_nt, agg)).collect_dense()
+            np.testing.assert_array_equal(got, w)
+        assert pairs(view("2020-01-31", chunk_nt, "mean")) == \
+            pairs(view("2020-01-01", chunk_nt, "mean"))
+    g = ChunkGrid(view("2020-01-31", 2, "mean"))
+    per = g.ncy * g.ncx
+    assert (g.block_bounds(per, 2 * per)["t_start"], g.chunk_bounds(per)["t_end"]) == \
+        (datetime(2020, 3, 1), datetime(2020, 5, 1))
+    imgs.unpersist()
 
 
 def test_labeled_axis_reduce_which(spark):

@@ -304,12 +304,13 @@ def test_first_last_numeric_id_order(spark, layout):
         assert vals.size and (vals == want).all(), agg
 
 
-@pytest.mark.parametrize("chunk_nt,want", [(1, [20.0, np.nan]), (2, [20.0, 30.0])])
+@pytest.mark.parametrize("chunk_nt,want", [(1, [15.0, 30.0]), (2, [15.0, 30.0])])
 def test_mid_month_t0_keeps_images_in_their_chunk(spark, chunk_nt, want):
     """On a P1M axis starting mid-month, an image lands in its calendar
-    slot only if it also lies in that slot's chunk, [t_start, t_end]
-    (find_range_st, both ends inclusive): 03-05 precedes chunk 0, and
-    04-10 falls in chunk 1 only when one chunk holds both slots."""
+    slot, and a chunk's [t_start, t_end] (find_range_st, both ends
+    inclusive) runs over its slots' calendar months: 03-05 and 03-20 land
+    in slot 0, 04-10 in slot 1, whatever chunk_nt is. (A window from the
+    slot day, 03-15, dropped 03-05, and 04-10 with it at chunk_nt=1.)"""
     import pandas as pd
 
     rows = [
